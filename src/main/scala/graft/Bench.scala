@@ -91,14 +91,11 @@ object Bench {
     // metric/value fields come AFTER "queries" so they survive a front
     // truncation regardless, and (c) the complete ms-resolution JSON is
     // also written to a file (SPARK_GRAFT_BENCH_OUT, default
-    // BENCH_LOCAL.json in the cwd) for cross-round per-query tracking.
-    // When no explicit out path is given, ALSO write a per-core-count
-    // file: the driver's follow-up scaling run (same cwd, different
-    // $SPARK_GRAFT_CPUS) used to clobber BENCH_LOCAL.json, leaving no
-    // committed 32-core full map for the round-over-round per-query diff
-    // (r15 verdict item 2) — now each core count keeps its own map.
-    val outs = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .map(Seq(_)).getOrElse(Seq("BENCH_LOCAL.json", s"BENCH_LOCAL_c$cpus.json"))
+    // BENCH_LOCAL.json in the cwd) for cross-round per-query tracking,
+    // plus a per-core-count file, so runs at different $SPARK_GRAFT_CPUS
+    // in the same cwd each keep their own full map.
+    val outs = Seq(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"),
+      s"BENCH_LOCAL_c$cpus.json")
     outs.foreach { out =>
       try java.nio.file.Files.write(java.nio.file.Paths.get(out),
         line(v => "%.3f".format(v)).getBytes(java.nio.charset.StandardCharsets.UTF_8))

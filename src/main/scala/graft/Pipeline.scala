@@ -5,9 +5,6 @@ import graft.sources.EventsAdapter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
-
-import scala.collection.mutable
-
 /** The canonical mobility pipeline over the driver's derived positionfix
   * view, with per-(session, sfDir) memoization so downstream queries
   * (triplegs needs staypoints, trips needs both, …) don't recompute their
@@ -34,7 +31,27 @@ import scala.collection.mutable
   */
 object Pipeline {
 
-  private val cache = mutable.Map.empty[(SparkSession, String, String), DataFrame]
+  /** A once-only memo slot: `value` runs `build` on first use under the
+    * cell's own monitor, so a second caller of the same key waits for the
+    * first build and callers of other keys don't wait at all. A build that
+    * throws leaves the cell unset and the next caller retries.
+    */
+  private final class Cell[T](build: => T) {
+    lazy val value: T = build
+  }
+
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Cell[_]]()
+
+  /** The memo for `key` on this (session, snapshot), built at most once.
+    * `value` is forced outside `computeIfAbsent`, so a build may call
+    * `once` for the keys it depends on. Builds only read strictly-upstream
+    * keys (the memo graph is a DAG), so a build holding its cell's
+    * monitor never waits on a cell that waits on it.
+    */
+  private def once[T](spark: SparkSession, sfDir: String, key: String)(build: => T): T =
+    memos.computeIfAbsent((spark, sfDir, key), _ => new Cell(build))
+      .asInstanceOf[Cell[T]].value
 
   private def persist(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
@@ -56,34 +73,12 @@ object Pipeline {
     }
   }
 
-  /** Drop all memoized stage frames (bench repetitions: each suite run
-    * re-materializes the shared chains from scratch so per-run timings
-    * keep the same cold-stage attribution as a single run; the dropped
-    * localCheckpoint blocks are unpinned for the ContextCleaner).
+  /** Drop all memoized stage frames and models (bench repetitions: each
+    * suite run re-materializes the shared chains from scratch so per-run
+    * timings keep the same cold-stage attribution as a single run; the
+    * dropped localCheckpoint blocks are unpinned for the ContextCleaner).
     */
-  def reset(): Unit = {
-    cache.synchronized(cache.clear())
-    modelCache.synchronized(modelCache.clear())
-  }
-
-  // driver-side trained models (weight arrays, codebooks — bounded state
-  // by each trainer's contract), memoized like the stage frames
-  private val modelCache = mutable.Map.empty[(SparkSession, String, String), Any]
-
-  private def model[T](spark: SparkSession, sfDir: String, key: String)(build: => T): T =
-    modelCache.synchronized {
-      modelCache.getOrElseUpdate((spark, sfDir, key), build).asInstanceOf[T]
-    }
-
-  private def memo(spark: SparkSession, sfDir: String, key: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.getOrElseUpdate((spark, sfDir, key), build)
-    }
-
-  // All cache reads happen under the lock: mutable.Map is not safe for a
-  // read racing another thread's insert (resize).
-  private def cached(spark: SparkSession, sfDir: String, key: String): DataFrame =
-    cache.synchronized(cache((spark, sfDir, key)))
+  def reset(): Unit = memos.clear()
 
   /** Sliding staypoints over the derived positionfixes. Parameters are
     * calibrated to the synthetic trajectory (per-user fix cadence ~11h,
@@ -99,94 +94,72 @@ object Pipeline {
       // drops nothing — skip it; `pf_dedup` gates the operator separately
       excludeDuplicatePfs = false)
 
-  /** One generate() call feeds both memo slots — the staypoint scan is
+  /** One generate() call feeds both outputs — the staypoint scan is
     * the most expensive stage; the share hook persists it so neither
     * output (nor the id sort's sampling pass) recomputes it.
     */
-  private def spGen(spark: SparkSession, sfDir: String): Unit = cache.synchronized {
-    if (!cache.contains((spark, sfDir, "pfs_sp"))) {
+  private def spGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    once(spark, sfDir, "sp_gen") {
       val pfs = EventsAdapter.positionfixes(spark, sfDir).drop("value", "t_us", "k")
       val (pfsSp, sp) = StaypointGenerator.generate(pfs, staypointParams, persist)
-      cache((spark, sfDir, "sp")) = sp
-      cache((spark, sfDir, "pfs_sp")) = persist(pfsSp)
+      (persist(pfsSp), sp)
     }
-  }
 
-  def pfsWithStaypoints(spark: SparkSession, sfDir: String): DataFrame = {
-    spGen(spark, sfDir); cached(spark, sfDir, "pfs_sp")
-  }
+  def pfsWithStaypoints(spark: SparkSession, sfDir: String): DataFrame = spGen(spark, sfDir)._1
 
-  def staypoints(spark: SparkSession, sfDir: String): DataFrame = {
-    spGen(spark, sfDir); cached(spark, sfDir, "sp")
-  }
+  def staypoints(spark: SparkSession, sfDir: String): DataFrame = spGen(spark, sfDir)._2
 
-  /** One generate() call feeds both memo slots (segmentation runs once). */
-  private def tplGen(spark: SparkSession, sfDir: String): Unit = {
-    val pfsSp = pfsWithStaypoints(spark, sfDir) // materialize outside the lock
-    cache.synchronized {
-      if (!cache.contains((spark, sfDir, "tpls"))) {
-        val (pfsTpl, tpls) = TriplegGenerator.generate(pfsSp, gapThresholdMinutes = 1e7, persist)
-        cache((spark, sfDir, "tpls")) = tpls
-        cache((spark, sfDir, "pfs_tpl")) = persist(pfsTpl)
-      }
+  /** One generate() call feeds both outputs (segmentation runs once). */
+  private def tplGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    once(spark, sfDir, "tpl_gen") {
+      val (pfsTpl, tpls) = TriplegGenerator.generate(
+        pfsWithStaypoints(spark, sfDir), gapThresholdMinutes = 1e7, persist)
+      (persist(pfsTpl), tpls)
     }
-  }
 
-  def triplegs(spark: SparkSession, sfDir: String): DataFrame = {
-    tplGen(spark, sfDir); cached(spark, sfDir, "tpls")
-  }
+  def triplegs(spark: SparkSession, sfDir: String): DataFrame = tplGen(spark, sfDir)._2
 
-  def pfsWithTriplegs(spark: SparkSession, sfDir: String): DataFrame = {
-    tplGen(spark, sfDir); cached(spark, sfDir, "pfs_tpl")
-  }
+  def pfsWithTriplegs(spark: SparkSession, sfDir: String): DataFrame = tplGen(spark, sfDir)._1
 
   /** overlap_staypoints triplegs, built from the cached between output. */
   def triplegsOverlap(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "tpls_ovl") {
+    once(spark, sfDir, "tpls_ovl") {
       persist(TriplegGenerator.overlapFromBetween(
         pfsWithTriplegs(spark, sfDir), staypoints(spark, sfDir),
         gapThresholdMinutes = 1e7, persist)._2)
     }
 
   def staypointsWithActivity(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "sp_act") {
+    once(spark, sfDir, "sp_act") {
       persist(Labelling.createActivityFlag(staypoints(spark, sfDir), timeThresholdMinutes = 120.0))
     }
 
   def trips(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "trips") {
+    once(spark, sfDir, "trips") {
       persist(TripGenerator.generate(staypointsWithActivity(spark, sfDir), triplegs(spark, sfDir),
         gapThresholdMinutes = 1e7, persist)._3)
     }
 
-  /** One generate() call feeds both memo slots (same pattern as spGen —
+  /** One generate() call feeds both outputs (same pattern as spGen —
     * the per-user DBSCAN scan must not run twice).
     */
-  private def locGen(spark: SparkSession, sfDir: String): Unit = {
-    val sp = staypoints(spark, sfDir) // materialize outside the lock
-    cache.synchronized {
-      if (!cache.contains((spark, sfDir, "locs"))) {
-        val (spLoc, locs) = LocationGenerator.generate(sp, LocationGenerator.Params(), persist)
-        cache((spark, sfDir, "locs")) = persist(locs)
-        cache((spark, sfDir, "sp_loc")) = persist(spLoc)
-      }
+  private def locGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    once(spark, sfDir, "loc_gen") {
+      val (spLoc, locs) = LocationGenerator.generate(
+        staypoints(spark, sfDir), LocationGenerator.Params(), persist)
+      (persist(locs), persist(spLoc))
     }
-  }
 
-  def locations(spark: SparkSession, sfDir: String): DataFrame = {
-    locGen(spark, sfDir); cached(spark, sfDir, "locs")
-  }
+  def locations(spark: SparkSession, sfDir: String): DataFrame = locGen(spark, sfDir)._1
 
-  def staypointsWithLocation(spark: SparkSession, sfDir: String): DataFrame = {
-    locGen(spark, sfDir); cached(spark, sfDir, "sp_loc")
-  }
+  def staypointsWithLocation(spark: SparkSession, sfDir: String): DataFrame = locGen(spark, sfDir)._2
 
   /** MinHash near-dup pair table over the documents corpus — shared by
     * the pair query and duplicate clustering, so the signature/banding
     * lineage (the expensive part) is computed and persisted once.
     */
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "minhash_pairs") {
+    once(spark, sfDir, "minhash_pairs") {
       persist(Dedup.minHashLsh(spark.read.parquet(s"$sfDir/documents.parquet"),
         numHashes = 64, bands = 16, verifyThreshold = 0.5))
     }
@@ -198,7 +171,7 @@ object Pipeline {
     * is computed once per day and every analysis reads it.
     */
   def colocationMeetings(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "colocation_meetings") {
+    once(spark, sfDir, "colocation_meetings") {
       // NOT pre-partitioned by the pair key: under AQE the checkpoint's
       // LogicalRDD captures UnknownPartitioning (AdaptiveSparkPlanExec
       // has no stable outputPartitioning before execution), so a
@@ -213,7 +186,7 @@ object Pipeline {
 
   /** The aggregated pair table over [[colocationMeetings]]. */
   def colocationPairs(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "colocation_pairs") {
+    once(spark, sfDir, "colocation_pairs") {
       persist(SpatialOps.colocationPairsFromMeetings(colocationMeetings(spark, sfDir)))
     }
 
@@ -224,12 +197,10 @@ object Pipeline {
     * assortativity, rich club, LPA, Louvain stats, BFS balls), which
     * previously each re-checkpointed the same three frames.
     */
-  def contactGraph(spark: SparkSession, sfDir: String): SpatialOps.ContactGraph = {
-    val pairs = colocationPairs(spark, sfDir) // outside the lock — see bpeLearned
-    model(spark, sfDir, "contact_graph") {
-      SpatialOps.contactGraph(pairs, persist)
+  def contactGraph(spark: SparkSession, sfDir: String): SpatialOps.ContactGraph =
+    once(spark, sfDir, "contact_graph") {
+      SpatialOps.contactGraph(colocationPairs(spark, sfDir), persist)
     }
-  }
 
   /** The level-1 Louvain label table over [[colocationPairs]] — the
     * expensive 4-round gain pass, shared by the stats gate, the
@@ -237,18 +208,14 @@ object Pipeline {
     * rationale as the meeting table: one partition per snapshot, many
     * diagnostics reading it).
     */
-  def louvainLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    // both dependencies outside the cache lock — see bpeLearned (the
-    // contactGraph call takes the modelCache lock)
-    val pairs = colocationPairs(spark, sfDir)
-    val graph = contactGraph(spark, sfDir)
-    memo(spark, sfDir, "louvain_l1") {
-      persist(SpatialOps.louvainLabels(pairs, rounds = 4, graph = Some(graph)))
+  def louvainLabels(spark: SparkSession, sfDir: String): DataFrame =
+    once(spark, sfDir, "louvain_l1") {
+      persist(SpatialOps.louvainLabels(colocationPairs(spark, sfDir), rounds = 4,
+        graph = Some(contactGraph(spark, sfDir))))
     }
-  }
 
   def tours(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "tours") {
+    once(spark, sfDir, "tours") {
       TourGenerator.generate(trips(spark, sfDir), None,
         TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0), persist)._2
     }
@@ -267,7 +234,7 @@ object Pipeline {
     * the identical full-batch training for bit-identical weights.
     */
   def classifierWeights4(spark: SparkSession, sfDir: String): Array[Long] =
-    model(spark, sfDir, "classifier_w_i4") {
+    once(spark, sfDir, "classifier_w_i4") {
       Classifier.fit(labeledDocs(spark, sfDir),
         dim = 64, iters = 4, stepDiv = 131072L, share = persist)
     }
@@ -279,7 +246,7 @@ object Pipeline {
     * whole family's bench cost while producing bit-identical tables).
     */
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "bpe_merges") {
+    once(spark, sfDir, "bpe_merges") {
       // no persist wrapper: the trainer runs eagerly (per-round argmax
       // collects) and returns a driver-local trajectory frame — acting
       // on it again is free
@@ -290,40 +257,28 @@ object Pipeline {
   /** The merge table as the driver-side (lhs, rhs) sequence in merge
     * order — the broadcastable form every encode/export kernel takes.
     */
-  def bpeLearned(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
-    // materialize the dependency OUTSIDE the memo lock (the spGen/tplGen
-    // pattern): a build body that takes the OTHER cache's lock is a lock-
-    // order inversion — bpeTokenCounts (cache→modelCache) racing bpeLearned
-    // /contactGraph (modelCache→cache) could deadlock Verify's parallel
-    // gate phase whenever the warm pass was skipped (r15 ADVICE.md)
-    val merges = bpeMerges(spark, sfDir)
-    model(spark, sfDir, "bpe_learned") {
-      merges.select(col("step"), col("lhs"), col("rhs")).collect()
+  def bpeLearned(spark: SparkSession, sfDir: String): Seq[(String, String)] =
+    once(spark, sfDir, "bpe_learned") {
+      bpeMerges(spark, sfDir).select(col("step"), col("lhs"), col("rhs")).collect()
         .sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2))).toSeq
     }
-  }
 
   /** Per-document token counts under the learned table ([[bpeLearned]]),
     * tokenized once per snapshot: read by bpe_encode, the fairness card
     * and the BPE-budgeted packer.
     */
-  def bpeTokenCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    // outside the cache lock — see bpeLearned (lock-order inversion fix);
-    // also keeps the eager ~26-job BPE training from serializing every
-    // other memo access behind the cache lock
-    val learned = bpeLearned(spark, sfDir)
-    memo(spark, sfDir, "bpe_token_counts") {
+  def bpeTokenCounts(spark: SparkSession, sfDir: String): DataFrame =
+    once(spark, sfDir, "bpe_token_counts") {
       persist(TextAnalysis.bpeEncode(
-        spark.read.parquet(s"$sfDir/documents.parquet"), learned))
+        spark.read.parquet(s"$sfDir/documents.parquet"), bpeLearned(spark, sfDir)))
     }
-  }
 
   /** DSIR hashed-bigram log-ratio weights vs the English slice (dim 256)
     * — the join-form and scan-form importance gates score with the SAME
     * weight table (bit-identical by construction), so it derives once.
     */
   def dsirWeights(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "dsir_weights") {
+    once(spark, sfDir, "dsir_weights") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       persist(TextAnalysis.importanceWeights(
         docs.filter(col("lang") === "en"), docs, dim = 256))
@@ -335,7 +290,7 @@ object Pipeline {
     * pass is the family's dominant cost and runs once per snapshot.
     */
   def imagePhash(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "image_phash") {
+    once(spark, sfDir, "image_phash") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .withColumn("cid", pmod(col("doc_id"), lit(250L)))
       persist(Multimodal.perceptualHash(Multimodal.pngFixtures(docs, contentCol = "cid")))
@@ -350,7 +305,7 @@ object Pipeline {
     * weights.
     */
   def scoredDocs(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "scored_docs") {
+    once(spark, sfDir, "scored_docs") {
       persist(Classifier.trainAndScore(labeledDocs(spark, sfDir),
         dim = 64, iters = 8, stepDiv = 16384L, share = persist))
     }
@@ -361,7 +316,7 @@ object Pipeline {
     * which previously each re-ran the full corpus scan.
     */
   def annBruteTop5(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "ann_brute_top5") {
+    once(spark, sfDir, "ann_brute_top5") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       persist(Ann.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5))
     }
@@ -370,7 +325,7 @@ object Pipeline {
     * nprobe 4) — shared by ann_ivf and the recall/nDCG evals.
     */
   def annIvfTop5(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "ann_ivf_top5") {
+    once(spark, sfDir, "ann_ivf_top5") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       persist(Ann.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5, nlist = 32, nprobe = 4))
     }
@@ -380,7 +335,7 @@ object Pipeline {
     * distortion card and the recall eval all read the same index.
     */
   def pqModel(spark: SparkSession, sfDir: String): Ann.PqModel =
-    model(spark, sfDir, "pq_model") {
+    once(spark, sfDir, "pq_model") {
       Ann.pqTrain(spark.read.parquet(s"$sfDir/embeddings.parquet"),
         dim = 64, m = 4, ksub = 8, iters = 2, share = persist)
     }
@@ -390,7 +345,7 @@ object Pipeline {
     * drift monitor and the outlier report all read the same model.
     */
   def kmeansModel(spark: SparkSession, sfDir: String): KMeans.Model =
-    model(spark, sfDir, "kmeans_model") {
+    once(spark, sfDir, "kmeans_model") {
       KMeans.fit(spark.read.parquet(s"$sfDir/embeddings.parquet"),
         k = 8, iters = 2, share = persist)
     }

@@ -42,12 +42,6 @@ object PortableHash {
     pmod(base * a + b, lit(M))
   }
 
-  /** SQL twin of [[affineHash]] over an expression in [0, M). */
-  def affineHashSql(baseExpr: String, i: Int): String = {
-    val (a, b) = affine(i)
-    s"(($baseExpr) * $a + $b) % $M"
-  }
-
   /** Order-sensitive fold of hash values (each in [0, M)) into one
     * bucket key: acc = (acc * 31 + x) mod M. Intermediates < 2^36.
     */

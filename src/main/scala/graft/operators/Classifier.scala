@@ -77,6 +77,10 @@ object Classifier {
 
   /** Train `iters` full-batch rounds from w = 0.
     *
+    * Scale caveat: each round's weights enter the plan as one `typedLit`
+    * array, which lives in the generated code, so the intended range is
+    * dim ≲ 10³; far larger feature spaces want a broadcast weight table.
+    *
     * @param docs    (idCol, textCol, labelCol) — labels must be 0/1 longs
     * @param dim     hashed feature buckets (weights = dim+1 with bias)
     * @param stepDiv integer inverse learning rate: the weight step is
@@ -131,23 +135,12 @@ object Classifier {
     w
   }
 
-  /** [[fit]] as a (bucket, weight) frame — the gate/oracle surface. */
-  def weightsDf(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
-                idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label",
-                share: DataFrame => DataFrame = Share.materialize): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    fit(docs, dim, iters, stepDiv, idCol, textCol, labelCol, share)
-      .toIndexedSeq.zipWithIndex
-      .map { case (v, b) => (b.toLong, v) }
-      .toDF("bucket", "weight")
-  }
-
   /** Score documents with trained weights: the 1/S margin `z`, the
     * hard-sigmoid probability `p_q` (1/(4S) units), and the 0/1
-    * decision at p ≥ 1/2. One scan + one groupBy(doc): the weight table
-    * broadcasts, so corpus-scale scoring is embarrassingly parallel —
+    * decision at p ≥ 1/2. One scan + one groupBy(doc): the weights ride
+    * in the plan, so corpus-scale scoring is embarrassingly parallel —
     * this is the "apply the quality filter to all of CommonCrawl" step.
+    * Same `typedLit` caveat as [[fit]]: intended for dim ≲ 10³.
     */
   def score(docs: DataFrame, weights: Array[Long], dim: Int = 64,
             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

@@ -649,11 +649,16 @@ object Dedup {
     * ORDERING CONTRACT: run exact dedup first. Verbatim copies multiply
     * EVERY gram's df by the clone count and each shared gram emits
     * C(clones·df, 2) pair rows — measured 53 s for 10 identical copies
-    * of the sf0.1 corpus (ScaleProbe, SURVEY §6) where the cap cannot
+    * of the sf0.1 corpus (SURVEY §6) where the cap cannot
     * bite (within-clone groups sit at df = clones, under any sane cap).
     * Exact hash-dedup collapses clones in one cheap groupBy; this
     * operator's cap guards cross-document boilerplate, not the verbatim
     * duplication upstream dedup exists to remove.
+    *
+    * Skew caveat: the scan is repartitioned by `doc_id` so the gram
+    * expansion runs at full width, but a document never splits across
+    * tasks — a single very long document (one gram row per character)
+    * makes its task one hot task.
     *
     * @return (doc_id_1, doc_id_2, n_shared_grams) for pairs sharing at
     *         least one ≥ minLen exact substring (gram df ≤ maxDf)

@@ -752,12 +752,4 @@ object Multimodal {
       floor(h * scale).cast("int").as("height"),
       col("meta.n_bytes").as("n_bytes")))
   }
-
-  /** Frame sampling stub for video-shaped payloads: emit every k-th
-    * "frame index" row per media item (sequence+explode — a generator,
-    * no UDF).
-    */
-  def sampleFrames(media: DataFrame, everyK: Int = 10, totalFramesCol: String = "n_frames"): DataFrame =
-    media.withColumn("frame_idx",
-      explode(sequence(lit(0), greatest(col(totalFramesCol) - 1, lit(0)), lit(everyK))))
 }

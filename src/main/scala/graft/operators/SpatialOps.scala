@@ -296,7 +296,7 @@ object SpatialOps {
     * [[colocationMeetings]] — cell ids are exact floors of micro-degree
     * longs, engine-identical.
     *
-    * Geometry contract (TrajProbe, SURVEY §6): banding separates what
+    * Geometry contract (SURVEY §6): banding separates what
     * geography separates. On a region-scale corpus it admits ~1/500 of
     * the pair space; when the WHOLE corpus shares one neighborhood the
     * candidate volume is inherently quadratic and squeezed through a
@@ -385,14 +385,11 @@ object SpatialOps {
   /** The band-admitted candidate pair table of [[trajectoryNearPairs]]:
     * one row per (a_id < b_id) pair whose `pad`-padded integer bboxes
     * share a grid cell, plus both raw micro-degree bboxes for the
-    * caller's pruning arithmetic. Package-visible so TrajProbe can
-    * price candidate volume directly (the diagnostic the old
-    * radiusM=1e9 trick bought before pads were derived from the
-    * radius).
+    * caller's pruning arithmetic.
     */
-  private[graft] def trajectoryBandCandidates(tpls: DataFrame, cellMicroDeg: Long,
-                                              pad: Long, spreadFactor: Int,
-                                              latCapMicroDeg: Long = Long.MaxValue): DataFrame = {
+  private def trajectoryBandCandidates(tpls: DataFrame, cellMicroDeg: Long,
+                                       pad: Long, spreadFactor: Int,
+                                       latCapMicroDeg: Long = Long.MaxValue): DataFrame = {
     require(cellMicroDeg > 0 && pad >= 0 && spreadFactor >= 1, "cell/pad/spread must be sensible")
     val g = spreadFactor.toLong
     val qLon = transform(col("points"), p => floor(p.getField("lon") * 1e6 + lit(0.5)).cast("long"))
@@ -1586,7 +1583,7 @@ object SpatialOps {
     // pair costs ~100 B boxed (Tuple3 of boxed Longs) and the local
     // pass builds a 2×-pairs adjacency on top, so 2M pairs ≈ ~400 MB
     // peak driver objects — the documented ceiling. Beyond it the
-    // distributed pass runs unchanged (GraphProbe: engages and
+    // distributed pass runs unchanged (SURVEY §6: engages and
     // completes at 11M pairs).
     val nPairs = p.count()
     if (nPairs <= localThreshold) {

@@ -101,8 +101,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
   * HOT BANDS (the packed-geometry failure mode): banding bounds the
   * candidate volume by band OCCUPANCY, so on geometry packed into a
   * handful of cells the band join silently degenerates toward
-  * all-pairs through the hot cells (TrajProbe's packed run measured
-  * exactly that — a 15-minute hang). Two guards:
+  * all-pairs through the hot cells (the packed trajectory probe in
+  * SURVEY §6 measured exactly that — a 15-minute hang). Two guards:
   *
   *  - a per-TASK candidate-pair budget ([[PairBudgetGuard]]): the join
   *    condition gains a codegen'd counter conjunct evaluated FIRST,
@@ -168,7 +168,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
   * cities, the per-task budget refuses quadratic cells loudly, and
   * `spreadFactor` tiles them across the cluster on request.
   *
-  * Probed ([[graft.DistanceJoinProbe]], local[32], r = 100 m):
+  * Measured (SURVEY §6, the distance-join probe, local[32], r = 100 m):
   * fixed-density clouds 50k→100k→200k→400k points/side run
   * 0.6 → 0.8 → 1.4 → 2.6 s — near-linear, tracking the pair volume
   * (1.9M → 14.9M) — while the un-rewritten BroadcastNestedLoopJoin
@@ -176,7 +176,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
   * from there. Packed regime (all 50k×50k points in one cell): the
   * per-task budget raises loudly instead of hanging; with
   * `spreadFactor=32` the same shape completes tiled — 1e8 output
-  * pairs in ~9 s at 10k/side (see the probe's packed entries).
+  * pairs in ~9 s at 10k/side (SURVEY §6, the packed entries).
   */
 object BandedDistanceJoin extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -1,0 +1,72 @@
+package graft
+
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+/** Pipeline's memos under concurrency: many threads racing every memo in
+  * different orders must neither deadlock nor build a memo twice. Only
+  * the memo calls run — no action on the returned frames — so the test
+  * exercises the memo layer, plus the trainers that run eagerly.
+  */
+class PipelineConcurrencySpec extends SparkSpec {
+
+  private val dir = "/root/testdata/sf0.001"
+
+  private def memos: Seq[(String, () => AnyRef)] = Seq(
+    "pfsWithStaypoints" -> (() => Pipeline.pfsWithStaypoints(spark, dir)),
+    "staypoints" -> (() => Pipeline.staypoints(spark, dir)),
+    "triplegs" -> (() => Pipeline.triplegs(spark, dir)),
+    "pfsWithTriplegs" -> (() => Pipeline.pfsWithTriplegs(spark, dir)),
+    "triplegsOverlap" -> (() => Pipeline.triplegsOverlap(spark, dir)),
+    "staypointsWithActivity" -> (() => Pipeline.staypointsWithActivity(spark, dir)),
+    "trips" -> (() => Pipeline.trips(spark, dir)),
+    "locations" -> (() => Pipeline.locations(spark, dir)),
+    "staypointsWithLocation" -> (() => Pipeline.staypointsWithLocation(spark, dir)),
+    "minhashPairs" -> (() => Pipeline.minhashPairs(spark, dir)),
+    "colocationMeetings" -> (() => Pipeline.colocationMeetings(spark, dir)),
+    "colocationPairs" -> (() => Pipeline.colocationPairs(spark, dir)),
+    "contactGraph" -> (() => Pipeline.contactGraph(spark, dir)),
+    "louvainLabels" -> (() => Pipeline.louvainLabels(spark, dir)),
+    "tours" -> (() => Pipeline.tours(spark, dir)),
+    "classifierWeights4" -> (() => Pipeline.classifierWeights4(spark, dir)),
+    "bpeMerges" -> (() => Pipeline.bpeMerges(spark, dir)),
+    "bpeLearned" -> (() => Pipeline.bpeLearned(spark, dir)),
+    "bpeTokenCounts" -> (() => Pipeline.bpeTokenCounts(spark, dir)),
+    "dsirWeights" -> (() => Pipeline.dsirWeights(spark, dir)),
+    "imagePhash" -> (() => Pipeline.imagePhash(spark, dir)),
+    "scoredDocs" -> (() => Pipeline.scoredDocs(spark, dir)),
+    "annBruteTop5" -> (() => Pipeline.annBruteTop5(spark, dir)),
+    "annIvfTop5" -> (() => Pipeline.annIvfTop5(spark, dir)),
+    "pqModel" -> (() => Pipeline.pqModel(spark, dir)),
+    "kmeansModel" -> (() => Pipeline.kmeansModel(spark, dir)),
+  )
+
+  test("8 threads racing every memo in shuffled orders: no deadlock, each memo built once") {
+    Pipeline.reset()
+    val threads = 8
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, "memo-race"); t.setDaemon(true); t
+    })
+    val go = new CountDownLatch(1)
+    try {
+      val runs = (0 until threads).map { i =>
+        val order = new scala.util.Random(i).shuffle(memos)
+        pool.submit(new Callable[Map[String, AnyRef]] {
+          def call(): Map[String, AnyRef] = {
+            go.await()
+            order.map { case (name, memo) => name -> memo() }.toMap
+          }
+        })
+      }
+      go.countDown()
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(180)
+      // a hang surfaces as a TimeoutException, a failed build as an
+      // ExecutionException carrying the build's error
+      val seen = runs.map(_.get(math.max(0L, deadline - System.nanoTime()), TimeUnit.NANOSECONDS))
+      memos.foreach { case (name, _) =>
+        val first = seen.head(name)
+        assert(first != null, name)
+        assert(seen.forall(_(name) eq first), s"$name was built more than once")
+      }
+    } finally pool.shutdownNow()
+  }
+}
