@@ -1,0 +1,716 @@
+package graft.gates
+
+import graft.operators._
+import graft.sources.EventsAdapter
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import Shared.{hav, withMaterializedCtes}
+
+/** Spatial, distance and temporal joins, spatial filters, and grid-cell
+  * aggregations (privacy cells, flows, hotspots).
+  */
+private[graft] object SpatialGates {
+
+  /** Non-convex (U-shaped) test polygon for the LineString spatial
+    * filter: covers the P0/P1 dwell+transit band of the synthetic
+    * trajectory with a notch cut from the top that slices the P3→P0
+    * return path — so `within`, `intersects` and `crosses` each select a
+    * different, non-empty block set, and the notch makes plain bbox logic
+    * give wrong answers (the predicate kernel is genuinely exercised).
+    */
+  private val uShapeArea: Seq[(Double, Double)] = Seq(
+    (-122.4005005, 47.5989995), (-122.3809505, 47.5989995),
+    (-122.3809505, 47.6200005), (-122.3812505, 47.6200005),
+    (-122.3812505, 47.6010005), (-122.3815505, 47.6010005),
+    (-122.3815505, 47.6200005), (-122.4005005, 47.6200005))
+
+  /** LineString spatial filter as SQL — the exact integer-grid twins of
+    * GeoFunctions.{pointInPolygonQ, segmentsIntersectQ}: identical
+    * quantization (floor(x·10^6 + 0.5)), identical edge orientation
+    * (edge = (previous vertex, current vertex)), identical sign-aware
+    * long comparisons, so every boundary decision is bit-identical by
+    * construction.
+    */
+  private def spatialFilterTriplegsOracle: String = {
+    def q6(v: String) = s"CAST(floor(($v) * 1000000.0 + 0.5) AS BIGINT)"
+    val n = uShapeArea.length
+    val pv = uShapeArea.zipWithIndex
+      .map { case ((x, y), i) => s"($i, ${q6(x.toString)}, ${q6(y.toString)})" }.mkString(", ")
+    def o(ax: String, ay: String, bx: String, by: String, cx: String, cy: String) =
+      s"sign(($bx - $ax) * ($cy - $ay) - ($by - $ay) * ($cx - $ax))"
+    def onseg(px: String, py: String, qx: String, qy: String, rx: String, ry: String) =
+      s"(least($px, $qx) <= $rx AND $rx <= greatest($px, $qx) AND " +
+        s"least($py, $qy) <= $ry AND $ry <= greatest($py, $qy))"
+    // a, b = line segment; c = previous ring vertex (xj), d = current (xi)
+    val (ax, ay, bx, by) = ("s.ax", "s.ay", "s.bx", "s.by")
+    val (cx, cy, dx, dy) = ("e.xj", "e.yj", "e.xi", "e.yi")
+    val ix =
+      s"""((${o(ax, ay, bx, by, cx, cy)} != ${o(ax, ay, bx, by, dx, dy)}
+         |   AND ${o(cx, cy, dx, dy, ax, ay)} != ${o(cx, cy, dx, dy, bx, by)})
+         |  OR (${o(ax, ay, bx, by, cx, cy)} = 0 AND ${onseg(ax, ay, bx, by, cx, cy)})
+         |  OR (${o(ax, ay, bx, by, dx, dy)} = 0 AND ${onseg(ax, ay, bx, by, dx, dy)})
+         |  OR (${o(cx, cy, dx, dy, ax, ay)} = 0 AND ${onseg(cx, cy, dx, dy, ax, ay)})
+         |  OR (${o(cx, cy, dx, dy, bx, by)} = 0 AND ${onseg(cx, cy, dx, dy, bx, by)}))""".stripMargin
+    s"""${EventsAdapter.pfsSql},
+       |qpt AS (
+       |  SELECT user_id, k // 12 AS block, k,
+       |         CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS x,
+       |         CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS y
+       |  FROM pfs),
+       |pv(ord, vx, vy) AS (VALUES $pv),
+       |pe AS (
+       |  SELECT cur.vx AS xi, cur.vy AS yi, prv.vx AS xj, prv.vy AS yj
+       |  FROM pv cur JOIN pv prv ON prv.ord = (cur.ord + ${n - 1}) % $n),
+       |pip AS (
+       |  SELECT q.user_id, q.block, q.k,
+       |         (count(*) FILTER (WHERE (e.yi > q.y) != (e.yj > q.y) AND
+       |            CASE WHEN e.yj - e.yi > 0
+       |                 THEN (q.x - e.xi) * (e.yj - e.yi) < (e.xj - e.xi) * (q.y - e.yi)
+       |                 ELSE (q.x - e.xi) * (e.yj - e.yi) > (e.xj - e.xi) * (q.y - e.yi) END) % 2) = 1 AS inside
+       |  FROM qpt q, pe e GROUP BY q.user_id, q.block, q.k),
+       |segsx AS (
+       |  SELECT user_id, block, x AS ax, y AS ay,
+       |         lead(x) OVER w AS bx, lead(y) OVER w AS by
+       |  FROM qpt WINDOW w AS (PARTITION BY user_id, block ORDER BY k)),
+       |segs2 AS (SELECT * FROM segsx WHERE bx IS NOT NULL),
+       |vxq AS (
+       |  SELECT s.user_id, s.block, bool_or($ix) AS anyx
+       |  FROM segs2 s, pe e GROUP BY s.user_id, s.block),
+       |pin AS (
+       |  SELECT user_id, block, bool_and(inside) AS allin, bool_or(inside) AS anyin
+       |  FROM pip GROUP BY user_id, block),
+       |flags AS (
+       |  SELECT p.user_id, p.block, p.allin, p.anyin, coalesce(v.anyx, false) AS anyx
+       |  FROM pin p LEFT JOIN vxq v ON v.user_id = p.user_id AND v.block = p.block)
+       |SELECT user_id, block, 'within' AS method FROM flags WHERE allin AND NOT anyx
+       |UNION ALL
+       |SELECT user_id, block, 'intersects' FROM flags WHERE anyin OR anyx
+       |UNION ALL
+       |SELECT user_id, block, 'crosses' FROM flags WHERE anyx""".stripMargin
+  }
+
+  val gates: Seq[Gate] = Seq(
+    Gate("kanon_cells") { (s, dir) =>
+      SpatialOps.kAnonymousCells(EventsAdapter.positionfixes(s, dir), cellMicroDeg = 10000L, k = 5)
+    } {
+      s"""${EventsAdapter.pfsSql}
+         |SELECT cx AS cell_x, cy AS cell_y,
+         |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+         |       CAST(count(*) AS BIGINT) AS n_points
+         |FROM (SELECT user_id,
+         |        CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+         |        CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy
+         |      FROM pfs)
+         |GROUP BY cx, cy HAVING count(DISTINCT user_id) >= 5""".stripMargin
+    },
+    // ℓ-diversity audit of the same publication grid: distinct
+    // sensitive values (visit hour) per k-anonymous cell
+    Gate("ldiversity_cells") { (s, dir) =>
+      SpatialOps.lDiversityCells(EventsAdapter.positionfixes(s, dir), cellMicroDeg = 10000L, k = 5)
+    } {
+      // ℓ-diversity over the same grid: distinct visit-hour values per
+      // published cell (floor-mod hour, the engine-exact bucket idiom)
+      s"""${EventsAdapter.pfsSql}
+         |SELECT cx AS cell_x, cy AS cell_y,
+         |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+         |       CAST(count(*) AS BIGINT) AS n_points,
+         |       CAST(count(DISTINCT h) AS BIGINT) AS l_hours
+         |FROM (SELECT user_id,
+         |        CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+         |        CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+         |        (t_us % 86400000000) // 3600000000 AS h
+         |      FROM pfs)
+         |GROUP BY cx, cy HAVING count(DISTINCT user_id) >= 5""".stripMargin
+    },
+    // t-closeness audit of the same grid: ordered-EMD between each
+    // published cell's visit-hour distribution and the global one
+    // (Li et al. 2007 — the rung above l-diversity), exact ppm
+    Gate("tcloseness_cells") { (s, dir) =>
+      SpatialOps.tClosenessCells(EventsAdapter.positionfixes(s, dir),
+        cellMicroDeg = 10000L, k = 5, tPpm = 250000L)
+    } {
+      // t-closeness: ordered-EMD per published cell vs the global hour
+      // distribution, exact integer cumulative cross-multiplies, ppm floor
+      s"""${EventsAdapter.pfsSql},
+         |pts AS (
+         |  SELECT user_id,
+         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+         |    (t_us % 86400000000) // 3600000000 AS h
+         |  FROM pfs),
+         |ch AS (SELECT cx, cy, h, count(*) AS c FROM pts GROUP BY 1, 2, 3),
+         |cells AS (SELECT cx, cy, count(DISTINCT user_id) AS n_users, count(*) AS n_points
+         |          FROM pts GROUP BY 1, 2 HAVING count(DISTINCT user_id) >= 5),
+         |tot AS (SELECT count(*) AS N FROM pts),
+         |dom AS (SELECT range AS h FROM range(24)),
+         |g AS (SELECT h, count(*) AS gn FROM pts GROUP BY 1),
+         |gcum AS (SELECT d.h, coalesce(sum(g.gn), 0) AS Gc
+         |         FROM dom d LEFT JOIN g ON g.h <= d.h GROUP BY 1),
+         |cum AS (
+         |  SELECT c.cx, c.cy, c.n_users, c.n_points, d.h,
+         |         sum(coalesce(ch.c, 0)) OVER (PARTITION BY c.cx, c.cy ORDER BY d.h) AS Pc
+         |  FROM cells c CROSS JOIN dom d
+         |  LEFT JOIN ch ON ch.cx = c.cx AND ch.cy = c.cy AND ch.h = d.h),
+         |terms AS (
+         |  SELECT cx, cy, n_users, n_points,
+         |         abs(CAST(Pc AS HUGEINT) * (SELECT N FROM tot)
+         |             - CAST(Gc AS HUGEINT) * n_points) AS term
+         |  FROM cum JOIN gcum USING (h) WHERE h < 23)
+         |SELECT cx AS cell_x, cy AS cell_y,
+         |       CAST(n_users AS BIGINT) AS n_users, CAST(n_points AS BIGINT) AS n_points,
+         |       CAST((1000000 * sum(term))
+         |            // (CAST(n_points AS HUGEINT) * (SELECT N FROM tot) * 23) AS BIGINT) AS emd_ppm,
+         |       CAST((1000000 * sum(term))
+         |            // (CAST(n_points AS HUGEINT) * (SELECT N FROM tot) * 23) AS BIGINT) <= 250000 AS t_ok
+         |FROM terms GROUP BY cx, cy, n_users, n_points""".stripMargin
+    },
+    Gate("place_segregation") { (s, dir) =>
+      SpatialOps.placeSegregation(EventsAdapter.positionfixes(s, dir),
+        cellMicroDeg = 10000L, nGroups = 4)
+    } {
+      // Moro-style place segregation: all-integer deviation numerator,
+      // one final double division (see SpatialOps.placeSegregation)
+      s"""${EventsAdapter.pfsSql},
+         |vg AS (
+         |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+         |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+         |         user_id % 4 AS grp, CAST(count(*) AS BIGINT) AS c
+         |  FROM pfs GROUP BY 1, 2, 3),
+         |w AS (SELECT cx, cy, c, sum(c) OVER (PARTITION BY cx, cy) AS n FROM vg),
+         |sg AS (SELECT cx, cy, n, sum(abs(4 * c - n)) AS sp, count(*) AS present
+         |       FROM w GROUP BY cx, cy, n)
+         |SELECT cx, cy, CAST(n AS BIGINT) AS n_visits,
+         |       CAST(sp + (4 - present) * n AS BIGINT) AS seg_num,
+         |       CAST(sp + (4 - present) * n AS DOUBLE) / (6.0 * CAST(n AS DOUBLE)) AS segregation
+         |FROM sg""".stripMargin
+    },
+    Gate("zorder_cells") { (s, dir) =>
+      SpatialOps.zorderCells(EventsAdapter.positionfixes(s, dir), cellMicroDeg = 10000L)
+    } {
+      s"""${EventsAdapter.pfsSql}
+         |, cells AS (
+         |  SELECT greatest(least(CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) + 1048576, 2097151), 0) AS gx,
+         |         greatest(least(CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) + 1048576, 2097151), 0) AS gy
+         |  FROM pfs)
+         |SELECT ${graft.functions.ZOrder.interleaveSql("gx", "gy")} AS zkey,
+         |       CAST(count(*) AS BIGINT) AS n_points
+         |FROM cells GROUP BY 1""".stripMargin
+    },
+    // parameter-free radiation-model OD flows (Simini et al. 2012) on
+    // the integer cell grid — the gravity fit's published companion
+    Gate("radiation_flows") { (s, dir) =>
+      SpatialOps.radiationFlows(EventsAdapter.positionfixes(s, dir),
+        cellMicroDeg = 10000L, refLatDeg = 47.6)
+    } {
+      // radiation model: integer cell populations, HUGEINT squared planar
+      // distance with the injected cosLatQ literal (no libm ordering),
+      // strictly-before prefix sum, one double division
+      {
+        val cosLatQ = math.floor(math.cos(math.toRadians(47.6)) * 1e6 + 0.5).toLong
+        s"""${EventsAdapter.pfsSql},
+           |cl AS (
+           |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+           |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+           |         CAST(count(*) AS BIGINT) AS m
+           |  FROM pfs GROUP BY 1, 2),
+           |pr AS (
+           |  SELECT o.cx AS o_x, o.cy AS o_y, d.cx AS d_x, d.cy AS d_y,
+           |         o.m AS m_o, d.m AS m_d,
+           |         CAST((d.cx - o.cx) * $cosLatQ AS HUGEINT) * ((d.cx - o.cx) * $cosLatQ)
+           |           + CAST((d.cy - o.cy) * 1000000 AS HUGEINT) * ((d.cy - o.cy) * 1000000) AS d2
+           |  FROM cl o JOIN cl d ON NOT (o.cx = d.cx AND o.cy = d.cy)),
+           |w AS (
+           |  SELECT *, CAST(coalesce(sum(m_d) OVER (
+           |      PARTITION BY o_x, o_y ORDER BY d2, d_x, d_y
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s_ij
+           |  FROM pr)
+           |SELECT o_x, o_y, d_x, d_y, m_o, m_d, s_ij,
+           |       CAST(CAST(m_o AS HUGEINT) * m_o * m_d AS DOUBLE)
+           |         / CAST((CAST(m_o AS HUGEINT) + s_ij)
+           |                * (CAST(m_o AS HUGEINT) + m_d + s_ij) AS DOUBLE) AS flow
+           |FROM w""".stripMargin
+      }
+    },
+    // the bounded twin: block-equi-join candidates under an exact
+    // integer distance cap, ring-decomposed prefix sums — s_ij
+    // bit-identical to the full window on every emitted pair
+    Gate("radiation_flows_ringed") { (s, dir) =>
+      SpatialOps.radiationFlowsRinged(EventsAdapter.positionfixes(s, dir),
+        cellMicroDeg = 10000L, refLatDeg = 47.6, ringWidthCells = 1L, maxRings = 1)
+    } {
+      // ringed radiation: the oracle is the plain windowed form plus the
+      // exact integer cap filter — the Spark side's ring decomposition is
+      // an internal exactness-preserving rewrite (monotone ring index), so
+      // both engines agree bit-for-bit on the capped pair set. cap =
+      // ((maxRings+1)·ringWidthCells·10⁶)² with ringWidthCells=1,
+      // maxRings=1 → 4e12
+      {
+        val cosLatQ = math.floor(math.cos(math.toRadians(47.6)) * 1e6 + 0.5).toLong
+        s"""${EventsAdapter.pfsSql},
+           |cl AS (
+           |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+           |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+           |         CAST(count(*) AS BIGINT) AS m
+           |  FROM pfs GROUP BY 1, 2),
+           |pr AS (
+           |  SELECT o.cx AS o_x, o.cy AS o_y, d.cx AS d_x, d.cy AS d_y,
+           |         o.m AS m_o, d.m AS m_d,
+           |         CAST((d.cx - o.cx) * $cosLatQ AS HUGEINT) * ((d.cx - o.cx) * $cosLatQ)
+           |           + CAST((d.cy - o.cy) * 1000000 AS HUGEINT) * ((d.cy - o.cy) * 1000000) AS d2
+           |  FROM cl o JOIN cl d ON NOT (o.cx = d.cx AND o.cy = d.cy)),
+           |w AS (
+           |  SELECT *, CAST(coalesce(sum(m_d) OVER (
+           |      PARTITION BY o_x, o_y ORDER BY d2, d_x, d_y
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s_ij
+           |  FROM pr WHERE d2 < CAST(4000000000000 AS HUGEINT))
+           |SELECT o_x, o_y, d_x, d_y, m_o, m_d, s_ij,
+           |       CAST(CAST(m_o AS HUGEINT) * m_o * m_d AS DOUBLE)
+           |         / CAST((CAST(m_o AS HUGEINT) + s_ij)
+           |                * (CAST(m_o AS HUGEINT) + m_d + s_ij) AS DOUBLE) AS flow
+           |FROM w""".stripMargin
+      }
+    },
+    Gate("geohash_cells") { (s, dir) =>
+      EventsAdapter.positionfixes(s, dir)
+        .groupBy(graft.functions.Geohash.encode(col("lon"), col("lat"), 6).as("geohash"))
+        .agg(count(lit(1)).as("n_points"))
+    } {
+      {
+        import graft.functions.{Geohash, ZOrder}
+        s"""${EventsAdapter.pfsSql}
+           |, gq AS (
+           |  SELECT ${Geohash.quantSql("lon", 6, isLat = false)} AS lonq,
+           |         ${Geohash.quantSql("lat", 6, isLat = true)} AS latq
+           |  FROM pfs)
+           |, gc AS (
+           |  SELECT (${ZOrder.spreadSql("latq")}
+           |          | (${ZOrder.spreadSql("lonq")} << 1)) AS code
+           |  FROM gq)
+           |SELECT ${Geohash.charsSql("code", 6)} AS geohash, CAST(count(*) AS BIGINT) AS n_points
+           |FROM gc GROUP BY 1""".stripMargin
+      }
+    },
+    Gate("hotspot_cells") { (s, dir) =>
+      SpatialOps.hotspotCells(EventsAdapter.positionfixes(s, dir))
+    } {
+      // 3x3 focal hotspot surface: per-cell counts, 9-offset re-group,
+      // total via scalar subquery
+      s"""${EventsAdapter.pfsSql}, cells AS (
+         |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cell_x,
+         |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cell_y,
+         |         CAST(count(*) AS BIGINT) AS n_points
+         |  FROM pfs GROUP BY 1, 2),
+         |focal AS (
+         |  SELECT cell_x + dx AS cell_x, cell_y + dy AS cell_y,
+         |         CAST(sum(n_points) AS BIGINT) AS focal_points
+         |  FROM cells,
+         |       LATERAL (SELECT unnest(range(-1, 2)) AS dx),
+         |       LATERAL (SELECT unnest(range(-1, 2)) AS dy)
+         |  GROUP BY 1, 2)
+         |SELECT c.cell_x, c.cell_y, c.n_points, f.focal_points,
+         |       CAST(f.focal_points AS DOUBLE)
+         |         / CAST((SELECT sum(n_points) FROM cells) AS DOUBLE) AS focal_share
+         |FROM cells c JOIN focal f ON c.cell_x = f.cell_x AND c.cell_y = f.cell_y""".stripMargin
+    },
+    Gate("distance_matrix_points") { (s, dir) =>
+      val pts = EventsAdapter.intervals(s, dir).filter(col("id") < 40)
+        .select(col("id"), col("lon"), col("lat"))
+      SpatialOps.distanceMatrixPoints(pts)
+        .select(col("id_1"), col("id_2"), floor(col("distance_m")).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql}
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |  CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+         |FROM (SELECT * FROM intervals WHERE id < 40) a
+         |JOIN (SELECT * FROM intervals WHERE id < 40) b ON a.id < b.id""".stripMargin
+    },
+    Gate("distance_matrix_xy") { (s, dir) =>
+      val iv = EventsAdapter.intervals(s, dir)
+      val x = iv.filter(col("id") < 40).select(col("id"), col("lon"), col("lat"))
+      val y = iv.filter(col("id") >= 40 && col("id") < 60)
+        .select(col("id"), col("lon"), col("lat"))
+      SpatialOps.distanceMatrixPoints(x, Some(y), symmetric = false)
+        .select(col("id_1"), col("id_2"), floor(col("distance_m")).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql}
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |  CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+         |FROM (SELECT * FROM intervals WHERE id < 40) a
+         |CROSS JOIN (SELECT * FROM intervals WHERE id >= 40 AND id < 60) b""".stripMargin
+    },
+    Gate("spatial_filter") { (s, dir) =>
+      val rect = Seq(Seq((-122.3945005, 47.6025005), (-122.3705005, 47.6025005),
+        (-122.3705005, 47.6125005), (-122.3945005, 47.6125005)))
+      SpatialOps.spatialFilterPoints(EventsAdapter.positionfixes(s, dir), rect)
+        .select(col("id"), col("user_id"))
+    } {
+      s"""${EventsAdapter.pfsSql}
+         |SELECT id, user_id FROM pfs
+         |WHERE lon > -122.3945005 AND lon < -122.3705005
+         |  AND lat > 47.6025005 AND lat < 47.6125005""".stripMargin
+    },
+    Gate("spatial_filter_triplegs") { (s, dir) =>
+      val lines = EventsAdapter.positionfixes(s, dir)
+        .groupBy(col("user_id"), expr("k div 12").as("block"))
+        .agg(transform(array_sort(collect_list(struct(col("k"), col("lon"), col("lat")))),
+          p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
+      Seq("within", "intersects", "crosses").map { m =>
+        SpatialOps.spatialFilterLinestrings(lines, Seq(uShapeArea), m)
+          .select(col("user_id"), col("block"), lit(m).as("method"))
+      }.reduce(_.unionByName(_))
+    } { withMaterializedCtes(spatialFilterTriplegsOracle) },
+    Gate("spatial_join_auto") { (s, dir) =>
+      // the NAIVE distance join, deliberately: no cells, no banding in
+      // the query text — plans.BandedDistanceJoin rewrites it into a
+      // lossless banded HASH join at optimization time (PlanLintSpec
+      // lints this very plan: no cartesian / BNLJ survives)
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 1)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 2)
+        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val d = call_function("haversine_m", col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(100.0))
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 1),
+         | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 2)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+         |FROM a, b
+         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+    },
+    Gate("spatial_join_scala_api") { (s, dir) =>
+      // the SAME naive radius join written through the library's own
+      // Scala API (GeoFunctions.haversineMeters — the composed acos/cos
+      // column, NOT the registered haversine_m node): r13's verdict
+      // found this exact formulation silently planned BNLJ; since r14
+      // BandedDistanceJoin structurally matches the composed kernel, so
+      // this plans as the identical banded hash join (PlanLint-pinned)
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 7)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 8)
+        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val d = graft.functions.GeoFunctions.haversineMeters(
+        col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(100.0))
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 7),
+         | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 8)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+         |FROM a, b
+         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+    },
+    Gate("io_wkt_parse") { (s, dir) =>
+      // the CSV WKT READ path under continuous oracle coverage (r14
+      // verdict #7): WKT text is BUILT from integer microdegrees by
+      // exact string concatenation — no float FORMATTING, which the
+      // documented oracle-exactness convention excludes — and then
+      // parsed by the library's own POINT and LINESTRING codecs (the
+      // read_staypoints_csv / read_triplegs_csv route). Decimal-text →
+      // double parsing is correctly rounded in both engines (Java
+      // parseDouble, DuckDB CAST), so the parsed coordinates compare
+      // bit-exactly.
+      import graft.sources.Csv
+      val pfs = EventsAdapter.positionfixes(s, dir).filter(col("user_id") % 16 === 3)
+      val m = pfs.select(col("id"),
+        expr("cast(floor(lon * 1000000.0 + 0.5) as bigint)").as("mx"),
+        expr("cast(floor(lat * 1000000.0 + 0.5) as bigint)").as("my"))
+        .withColumn("mx2", col("mx") + 1000L)
+        .withColumn("my2", col("my") - 500L)
+      def dec(c: String): Column = concat(
+        when(col(c) < 0, lit("-")).otherwise(lit("")),
+        expr(s"cast(abs($c) div 1000000 as string)"),
+        lit("."),
+        lpad(expr(s"cast(abs($c) % 1000000 as string)"), 6, "0"))
+      val wkt = m.select(col("id"),
+        concat(lit("POINT ("), dec("mx"), lit(" "), dec("my"), lit(")")).as("pw"),
+        concat(lit("LINESTRING ("), dec("mx"), lit(" "), dec("my"), lit(", "),
+          dec("mx2"), lit(" "), dec("my2"), lit(")")).as("lw"))
+      val (plon, plat) = Csv.parsePointWkt(col("pw"))
+      val ls = Csv.parseLinestringWkt(col("lw"))
+      wkt.select(col("id"), plon.as("p_lon"), plat.as("p_lat"),
+        element_at(ls, 2).getField("lon").as("l2_lon"),
+        element_at(ls, 2).getField("lat").as("l2_lat"))
+    } {
+      // WKT strings built from exact integers in both engines, then
+      // parsed: Spark via the library's regex codecs, DuckDB via
+      // string_split — decimal-text -> double is correctly rounded in
+      // both, so values compare bit-exactly (parse-only; formatting from
+      // floats stays spec-gated per the oracle-exactness convention)
+      {
+        def dec(c: String) =
+          s"(CASE WHEN $c < 0 THEN '-' ELSE '' END || CAST(abs($c) // 1000000 AS VARCHAR)" +
+            s" || '.' || lpad(CAST(abs($c) % 1000000 AS VARCHAR), 6, '0'))"
+        s"""${EventsAdapter.pfsSql},
+           | m AS (SELECT id,
+           |   CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS mx,
+           |   CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS my
+           |   FROM pfs WHERE user_id % 16 = 3),
+           | m2 AS (SELECT id, mx, my, mx + 1000 AS mx2, my - 500 AS my2 FROM m),
+           | w AS (SELECT id,
+           |   'POINT (' || ${dec("mx")} || ' ' || ${dec("my")} || ')' AS pw,
+           |   'LINESTRING (' || ${dec("mx")} || ' ' || ${dec("my")} || ', '
+           |     || ${dec("mx2")} || ' ' || ${dec("my2")} || ')' AS lw
+           |   FROM m2),
+           | p AS (SELECT id,
+           |   string_split(regexp_extract(pw, 'POINT \\(([^)]*)\\)', 1), ' ') AS pn,
+           |   string_split(regexp_extract(lw, 'LINESTRING \\(([^)]*)\\)', 1), ', ') AS lpts
+           |   FROM w)
+           |SELECT id, CAST(pn[1] AS DOUBLE) AS p_lon, CAST(pn[2] AS DOUBLE) AS p_lat,
+           |       CAST(string_split(lpts[2], ' ')[1] AS DOUBLE) AS l2_lon,
+           |       CAST(string_split(lpts[2], ' ')[2] AS DOUBLE) AS l2_lat
+           |FROM p""".stripMargin
+      }
+    },
+    Gate("spatial_join_semi") { (s, dir) =>
+      // keep every point within 25 m of ANY blocklist point — the
+      // LeftSemi shape BandedDistanceJoin bands since r14 (left side
+      // row-for-row, right side exploded both axes). The blocklist is a
+      // sparse id-slice and the radius sits at jitter scale (~20 m), so
+      // the gate produces a genuine keep/drop partition (131/489 at
+      // sf0.01) — with the full slice at 100 m every left row matched
+      // (r14 advice: degenerate fixture could not distinguish correct
+      // banding from a keep-everything bug)
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 9)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
+        .select(col("lon").as("lon2"), col("lat").as("lat2"))
+      a.join(b, graft.functions.GeoFunctions.haversineMeters(
+          col("lon1"), col("lat1"), col("lon2"), col("lat2")) <= lit(25.0), "left_semi")
+        .select(col("id_1"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 9),
+         | b AS (SELECT lon, lat FROM pfs WHERE user_id % 16 = 10 AND id % 97 = 0)
+         |SELECT a.id AS id_1 FROM a
+         |WHERE EXISTS (SELECT 1 FROM b
+         |              WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 25.0)""".stripMargin
+    },
+    Gate("spatial_join_outer") { (s, dir) =>
+      // the nearest-enrichment shape that must KEEP unmatched rows: a
+      // LEFT OUTER radius join, banded since r15 (left row-for-row so
+      // unmatched rows null-extend exactly once, right side exploded
+      // both axes so each qualifying pair meets exactly once); same
+      // sparse-blocklist fixture as the semi/anti gates so matched and
+      // unmatched left rows both occur
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 9)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
+        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val d = graft.functions.GeoFunctions.haversineMeters(
+        col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(25.0), "left_outer")
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      // CASE WHEN on the null-extended side: DuckDB's least/greatest SKIP
+      // nulls, so the raw kernel collapses to acos(-1)·R on unmatched
+      // rows instead of NULL like the engine's null-guarded column
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 9),
+         | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 10 AND id % 97 = 0)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CASE WHEN b.id IS NULL THEN NULL
+         |            ELSE CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT)
+         |       END AS dist_m
+         |FROM a LEFT JOIN b
+         |  ON ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 25.0""".stripMargin
+    },
+    Gate("spatial_join_right") { (s, dir) =>
+      // the mirrored row-preserving shape: the sparse blocklist on the
+      // LEFT, the dense point cloud preserved on the RIGHT — bands
+      // through the same rule with the explode sides swapped (the
+      // preserved side never explodes), so both outer orientations are
+      // oracle-covered, not just the one the spec exercises
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 9)
+        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val d = graft.functions.GeoFunctions.haversineMeters(
+        col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(25.0), "right_outer")
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 10 AND id % 97 = 0),
+         | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 9)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CASE WHEN a.id IS NULL THEN NULL
+         |            ELSE CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT)
+         |       END AS dist_m
+         |FROM a RIGHT JOIN b
+         |  ON ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 25.0""".stripMargin
+    },
+    Gate("spatial_join_full") { (s, dir) =>
+      // the one documented-unbandable shape: FULL OUTER stays a BNLJ
+      // with the keyless per-task PairBudgetGuard attached (r15 rule
+      // work; DistanceJoinRuleSpec pins the guard's presence and its
+      // loud raise) — this gate pins the RESULT on two sparse slices
+      // whose pair volume is far under the budget, so every join shape
+      // the rule touches is oracle-gated, the guarded path included
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 9 && col("id") % 193 === 0)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
+        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val d = graft.functions.GeoFunctions.haversineMeters(
+        col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(50.0), "full_outer")
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 9 AND id % 193 = 0),
+         | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 10 AND id % 97 = 0)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CASE WHEN a.id IS NULL OR b.id IS NULL THEN NULL
+         |            ELSE CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT)
+         |       END AS dist_m
+         |FROM a FULL JOIN b
+         |  ON ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 50.0""".stripMargin
+    },
+    Gate("spatial_join_anti") { (s, dir) =>
+      // the blocklist-distance filter: drop everything within 25 m of
+      // any blocklist point (the LeftAnti twin; same sparse-blocklist
+      // fixture as spatial_join_semi so both sides of the partition are
+      // non-empty)
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 9)
+        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
+        .select(col("lon").as("lon2"), col("lat").as("lat2"))
+      a.join(b, graft.functions.GeoFunctions.haversineMeters(
+          col("lon1"), col("lat1"), col("lon2"), col("lat2")) <= lit(25.0), "left_anti")
+        .select(col("id_1"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 9),
+         | b AS (SELECT lon, lat FROM pfs WHERE user_id % 16 = 10 AND id % 97 = 0)
+         |SELECT a.id AS id_1 FROM a
+         |WHERE NOT EXISTS (SELECT 1 FROM b
+         |                  WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 25.0)""".stripMargin
+    },
+    Gate("spatial_join_seam") { (s, dir) =>
+      // the ANTIMERIDIAN path of the banded rewrite under continuous
+      // oracle coverage: shift the pfs cloud onto the +-180 seam (the
+      // same shift-and-wrap arithmetic in the DuckDB oracle — haversine
+      // is periodic in lon, so the wrapped pairs are the physical ones)
+      // and let the rule band them mod N; pairs whose raw lon difference
+      // is ~360 deg must join exactly once
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      def wrapLon(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+        val shifted = c + lit(171.5)
+        when(shifted > 180.0, shifted - 360.0).otherwise(shifted)
+      }
+      val a = pfs.filter(col("user_id") % 16 === 5)
+        .select(col("id").as("id_1"), wrapLon(col("lon")).as("lon1"), col("lat").as("lat1"))
+      val b = pfs.filter(col("user_id") % 16 === 6)
+        .select(col("id").as("id_2"), wrapLon(col("lon")).as("lon2"), col("lat").as("lat2"))
+      val d = call_function("haversine_m", col("lon1"), col("lat1"), col("lon2"), col("lat2"))
+      a.join(b, d <= lit(100.0))
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, CASE WHEN lon + 171.5 > 180.0 THEN lon + 171.5 - 360.0
+         |                       ELSE lon + 171.5 END AS lon, lat
+         |       FROM pfs WHERE user_id % 16 = 5),
+         | b AS (SELECT id, CASE WHEN lon + 171.5 > 180.0 THEN lon + 171.5 - 360.0
+         |                       ELSE lon + 171.5 END AS lon, lat
+         |       FROM pfs WHERE user_id % 16 = 6)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+         |FROM a, b
+         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+    },
+    Gate("spatial_join_planar") { (s, dir) =>
+      // the projected-CRS twin of spatial_join_auto: a naive euclidean
+      // join over pseudo-projected meter coordinates — the composed
+      // sqrt kernel is BandedDistanceJoin's structural match, so this
+      // plans as a plain-floor-banded hash join (no envelope, no seam;
+      // PlanLintSpec lints it). sqrt/mul/add are IEEE on both engines,
+      // so floor(dist) hashes exactly against DuckDB.
+      val pfs = EventsAdapter.positionfixes(s, dir)
+      val a = pfs.filter(col("user_id") % 16 === 3)
+        .select(col("id").as("id_1"),
+          (col("lon") * lit(111320.0)).as("x1"), (col("lat") * lit(110540.0)).as("y1"))
+      val b = pfs.filter(col("user_id") % 16 === 4)
+        .select(col("id").as("id_2"),
+          (col("lon") * lit(111320.0)).as("x2"), (col("lat") * lit(110540.0)).as("y2"))
+      val d = graft.functions.GeoFunctions.euclideanMeters(
+        col("x1"), col("y1"), col("x2"), col("y2"))
+      a.join(b, d <= lit(100.0))
+        .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
+    } {
+      s"""${EventsAdapter.pfsSql},
+         | a AS (SELECT id, lon * 111320.0 AS x, lat * 110540.0 AS y
+         |       FROM pfs WHERE user_id % 16 = 3),
+         | b AS (SELECT id, lon * 111320.0 AS x, lat * 110540.0 AS y
+         |       FROM pfs WHERE user_id % 16 = 4)
+         |SELECT a.id AS id_1, b.id AS id_2,
+         |       CAST(floor(sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))) AS BIGINT) AS dist_m
+         |FROM a, b
+         |WHERE sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)) <= 100.0""".stripMargin
+    },
+    Gate("linestring_length") { (s, dir) =>
+      import graft.functions.GeoFunctions
+      EventsAdapter.positionfixes(s, dir)
+        .groupBy(col("user_id"), expr("k div 12").as("block"))
+        .agg(transform(array_sort(collect_list(struct(col("k"), col("lon"), col("lat")))),
+          p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
+        .select(col("user_id"), col("block"),
+          floor(GeoFunctions.linestringLengthMeters(col("points"))).cast("long").as("length_m"))
+    } {
+      s"""${EventsAdapter.pfsSql}, segs AS (
+         |  SELECT user_id, k // 12 AS block,
+         |         CASE WHEN lag(lon) OVER w IS NULL THEN NULL
+         |              ELSE ${hav("lag(lon) OVER w", "lag(lat) OVER w", "lon", "lat")} END AS seg
+         |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)
+         |)
+         |SELECT user_id, block,
+         |       CAST(floor(coalesce(sum(seg), 0.0)) AS BIGINT) AS length_m
+         |FROM segs GROUP BY user_id, block""".stripMargin
+    },
+    Gate("interval_overlap_join") { (s, dir) =>
+      // banded execution (the skew-safe scale path); results are
+      // identical to the per-user range join, so the oracle is unchanged
+      val iv = EventsAdapter.intervals(s, dir)
+      IntervalJoin.bestOverlapMatch(iv.filter(col("id") % 2 === 0), iv.filter(col("id") % 2 === 1),
+        bandMinutes = Some(10080.0))
+    } {
+      s"""${EventsAdapter.pfsSql}, pairs AS (
+         |  SELECT a.id AS left_id, a.user_id, b.id AS right_id,
+         |         CASE WHEN a.f_us - a.s_us <= 0 THEN 0.0
+         |              ELSE CAST(greatest(0, least(a.f_us, b.f_us) - greatest(a.s_us, b.s_us)) AS DOUBLE)
+         |                   / CAST(a.f_us - a.s_us AS DOUBLE) END AS overlap_ratio
+         |  FROM (SELECT * FROM intervals WHERE id % 2 = 0) a
+         |  JOIN (SELECT * FROM intervals WHERE id % 2 = 1) b
+         |    ON a.user_id = b.user_id AND b.s_us < a.f_us AND a.s_us < b.f_us)
+         |SELECT left_id, user_id, right_id, overlap_ratio FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY left_id ORDER BY overlap_ratio DESC, right_id) AS rn
+         |  FROM pairs) WHERE rn = 1""".stripMargin
+    },
+    Gate("asof_join") { (s, dir) =>
+      val ev = EventsAdapter.events(s, dir).select(col("event_id"), col("user_id"), col("t_us"))
+      val left = ev.filter(col("event_id") % 2 === 0)
+      val right = ev.filter(col("event_id") % 2 === 1)
+        .groupBy(col("user_id"), col("t_us")).agg(max("event_id").as("event_id"))
+      AsOfJoin.asOf(left, right)
+        .select(col("event_id"), col("user_id"), col("right_event_id"),
+          (col("t_us") - col("right_t_us")).as("age_us"))
+    } {
+      """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us FROM events),
+        |l AS (SELECT * FROM ev WHERE event_id % 2 = 0),
+        |r AS (SELECT user_id, t_us, max(event_id) AS event_id
+        |      FROM ev WHERE event_id % 2 = 1 GROUP BY user_id, t_us)
+        |SELECT l.event_id, l.user_id, r.event_id AS right_event_id, l.t_us - r.t_us AS age_us
+        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.t_us >= r.t_us""".stripMargin
+    }
+  )
+}

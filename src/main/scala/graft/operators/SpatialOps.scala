@@ -389,7 +389,7 @@ object SpatialOps {
     */
   private def trajectoryBandCandidates(tpls: DataFrame, cellMicroDeg: Long,
                                        pad: Long, spreadFactor: Int,
-                                       latCapMicroDeg: Long = Long.MaxValue): DataFrame = {
+                                       latCapMicroDeg: Long): DataFrame = {
     require(cellMicroDeg > 0 && pad >= 0 && spreadFactor >= 1, "cell/pad/spread must be sensible")
     val g = spreadFactor.toLong
     val qLon = transform(col("points"), p => floor(p.getField("lon") * 1e6 + lit(0.5)).cast("long"))
@@ -1482,7 +1482,6 @@ object SpatialOps {
                             share: DataFrame => DataFrame = Share.materialize,
                             graph: Option[ContactGraph] = None): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val p = graph.map(_.pairs)
       .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
     val edges = graph
@@ -2045,18 +2044,9 @@ object SpatialOps {
   }
 
   /** Exact integer modularity numerator Σ_c (4W·e_c − d_c²) of a
-    * partition, as a driver-side scalar (one value — the bounded-state
-    * contract) for the level-2 monotone guard.
-    */
-  private def partitionQNum(p: DataFrame, edges: DataFrame,
-                            labels: DataFrame): java.math.BigDecimal = {
-    val row = partitionQNumDf(p, edges, labels).collect()(0)
-    Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-  }
-
-  /** The 1-row `_qn` frame behind [[partitionQNum]], exposed unfired so
-    * callers comparing two partitions can cross-join the frames and pay
-    * one action instead of two.
+    * partition as a 1-row `_qn` frame for the level-2 monotone guard,
+    * left unfired so callers comparing two partitions can cross-join the
+    * frames and pay one action instead of two.
     */
   private def partitionQNumDf(p: DataFrame, edges: DataFrame,
                               labels: DataFrame): DataFrame = {
@@ -2084,7 +2074,7 @@ object SpatialOps {
     * in DECIMAL(38,0) and ONE double division at the end.
     */
   private def communityStats(p: DataFrame, edges: DataFrame, labels: DataFrame,
-                             degW: Option[DataFrame] = None): DataFrame = {
+                             degW: Option[DataFrame]): DataFrame = {
     def dq(c: Column): Column = c.cast("decimal(38,0)")
     val withA = p.join(labels.select(col("n"), col("lbl").as("_ca")), p("user_a") === col("n")).drop("n")
     val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")

@@ -55,7 +55,6 @@ object StaypointGenerator {
   def generate(pfs: DataFrame, params: Params = Params(),
                share: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     Tables.positionfixes.validate(pfs)
-    val spark = pfs.sparkSession
     val hasElev = pfs.columns.contains("elevation")
 
     // Duplicate exclusion before detection (positionfixes.py:105-114).
@@ -143,10 +142,6 @@ object StaypointGenerator {
     private val bElev = ArrayBuffer.empty[Any]
     private var anchorTs = 0L
     private var lastTs = 0L
-    private var lastId = 0L
-    private var lastLon = 0.0
-    private var lastLat = 0.0
-    private var lastElev: Any = null
 
     private def resetBuffer(id: Long, ts: Long, lon: Double, lat: Double, elev: Any): Unit = {
       bIds.clear(); bLon.clear(); bLat.clear(); bElev.clear()
@@ -244,7 +239,7 @@ object StaypointGenerator {
         }
       }
       prevTs = ts
-      lastTs = ts; lastId = id; lastLon = lon; lastLat = lat; lastElev = elev
+      lastTs = ts
     }
 
     override def hasNext: Boolean = {

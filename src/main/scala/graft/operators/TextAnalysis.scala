@@ -80,7 +80,6 @@ object TextAnalysis {
     */
   def readability(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    val lw = lower(t)
     val words = filter(split(t, " "), w => length(w) > 0)
     val nWords = size(words).cast("long")
     val nSent = greatest(lit(1L),

@@ -46,7 +46,7 @@ private[plans] object PortableHashKernel {
   * `array_distinct(transform(sequence(...), i -> concat_ws(" ",
   * slice(words, i+1, n))))`, which is a CodegenFallback higher-order
   * chain interpreted per row and dominated shingle-bearing scans.
-  * Oracle twin: the `sh` CTE in SparkEntry (list comprehension over
+  * Oracle twin: the `sh` CTE in graft.gates.Shared (list comprehension over
   * `string_split`), unchanged.
   */
 case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
@@ -113,7 +113,7 @@ object WordShingles {
   * a text with fewer than `n` words has no n-grams (empty array), since
   * a repetition fraction over zero gram positions is zero by definition.
   * Oracle twin: a DuckDB `list_transform(range(...))` comprehension over
-  * `string_split` (see the `text_repetition` oracle in SparkEntry).
+  * `string_split` (see the `text_repetition` oracle in graft.gates.TextGates).
   */
 case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
 

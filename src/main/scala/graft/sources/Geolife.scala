@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.operators.IntervalJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,7 +38,6 @@ object Geolife {
       .filter(col("lat").isNotNull && col("lon").isNotNull && col("tracked_at").isNotNull)
 
     // dense ids in (user, time) order like the reference's concat order
-    val w = Window.partitionBy("user_id").orderBy("tracked_at", "lon", "lat")
     graft.util.Ids.withSequentialId(parsed, "id",
       col("user_id"), col("tracked_at"), col("lon"), col("lat"))
       .select("id", "user_id", "tracked_at", "lon", "lat", "elevation")

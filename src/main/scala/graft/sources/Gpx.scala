@@ -3,7 +3,6 @@ package graft.sources
 import graft.util.Ids
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** GPX track reader (reference: trackintel/io/dataset_reader.py:689-736):
   * all `*.gpx` files under a directory become positionfixes for a single

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * compare reliably under the repo's `unix_micros` BIGINT convention.
   * Exact int128 math is welcome INTERNALLY; it must be cast to a
   * canonical digit string (or split into BIGINTs) before the final
-  * select — see SparkEntry.decimalsToDigits. This spec instantiates
+  * select — see graft.gates.Shared.decimalsToDigits. This spec instantiates
   * every registry query at sf0.001 and fails if any output schema
   * carries a DecimalType or TimestampType anywhere (nested included),
   * so the failure mode that cost 8 green rows in round 8 cannot recur
