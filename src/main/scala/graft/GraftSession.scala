@@ -51,9 +51,8 @@ object GraftSession {
       // fragment live at bounded metaspace cost (generated classes
       // unload with their loaders). Scale-neutral: the entry count is an
       // upper bound, not a reservation, and production jobs with few
-      // distinct plans are unaffected. Env knob for A/B measurement.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // distinct plans are unaffected.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = 4): SparkSession = {

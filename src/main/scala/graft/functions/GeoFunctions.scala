@@ -161,6 +161,20 @@ object GeoFunctions {
 
   def quantizeE6(x: Double): Long = math.floor(x * 1000000.0 + 0.5).toLong
 
+  /** Grid cell of a coordinate column: [[quantizeE6]] as a column, then
+    * floor-divided into `cellMicroDeg`-wide cells. The division runs on
+    * the quantized integer, so an external SQL engine reproduces every
+    * cell exactly.
+    */
+  def quantizedCell(c: Column, cellMicroDeg: Long): Column =
+    floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
+
+  /** An integer column as decimal(38,0): products and sums of counts and
+    * quantized values stay exact past the long range, as in the oracle's
+    * decimal arithmetic.
+    */
+  def dq(c: Column): Column = c.cast("decimal(38,0)")
+
   /** Sign of cross(b−a, c−a): 1 counter-clockwise, −1 clockwise, 0 collinear. */
   def orientQ(ax: Long, ay: Long, bx: Long, by: Long, cx: Long, cy: Long): Int =
     java.lang.Long.signum((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))

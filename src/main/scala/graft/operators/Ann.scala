@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -470,7 +471,6 @@ object Ann {
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    quantScale: Double = 1e6): DataFrame = {
     def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
-    def d(c: Column): Column = c.cast("decimal(38,0)")
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("_pq"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cq"))
     // native codegen kernel (plans/L2Expression) — same integer metric
@@ -495,8 +495,8 @@ object Ann {
       .select(col("_n"), col("_x"), (lnq(col("_n")) - lnq(col("_n") - col("_i"))).as("_y"))
       .groupBy(col("_n").as("n_probes"))
       .agg(count(lit(1)).cast("long").as("n_points"),
-        sum(d(col("_x")) * d(col("_y"))).as("_sxy"),
-        sum(d(col("_x")) * d(col("_x"))).as("_sxx"))
+        sum(dq(col("_x")) * dq(col("_y"))).as("_sxy"),
+        sum(dq(col("_x")) * dq(col("_x"))).as("_sxx"))
       .withColumn("d_hat",
         (lit(2.0) * col("_sxy").cast("double")) / col("_sxx").cast("double"))
       .select(col("n_probes"), col("n_points"), col("d_hat"))

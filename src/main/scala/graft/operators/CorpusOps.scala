@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -712,7 +713,6 @@ object CorpusOps {
   def scoreCorrelation(docs: DataFrame, aCol: String, bCol: String,
                        idCol: String = "doc_id",
                        partitions: Int = 32): DataFrame = {
-    def d(c: Column): Column = c.cast("decimal(38,0)")
     val base = docs.select(col(idCol).as("_id"),
       col(aCol).cast("long").as("_a"), col(bCol).cast("long").as("_b"))
     val ra = globalRank(base.select(col("_id"), col("_a")), "_a", "_id", "_ra", partitions)
@@ -723,17 +723,17 @@ object CorpusOps {
       .agg(
         count(lit(1)).cast("long").as("n_docs"),
         sum(col("_a")).as("_sa"), sum(col("_b")).as("_sb"),
-        sum(d(col("_a")) * d(col("_b"))).as("_sab"),
-        sum(d(col("_a")) * d(col("_a"))).as("_saa"),
-        sum(d(col("_b")) * d(col("_b"))).as("_sbb"),
-        sum(d(col("_ra") - col("_rb")) * d(col("_ra") - col("_rb"))).as("_sdd"))
+        sum(dq(col("_a")) * dq(col("_b"))).as("_sab"),
+        sum(dq(col("_a")) * dq(col("_a"))).as("_saa"),
+        sum(dq(col("_b")) * dq(col("_b"))).as("_sbb"),
+        sum(dq(col("_ra") - col("_rb")) * dq(col("_ra") - col("_rb"))).as("_sdd"))
       .withColumn("pearson",
-        (d(col("n_docs")) * col("_sab") - d(col("_sa")) * d(col("_sb"))).cast("double")
-          / (sqrt((d(col("n_docs")) * col("_saa") - d(col("_sa")) * d(col("_sa"))).cast("double"))
-            * sqrt((d(col("n_docs")) * col("_sbb") - d(col("_sb")) * d(col("_sb"))).cast("double"))))
+        (dq(col("n_docs")) * col("_sab") - dq(col("_sa")) * dq(col("_sb"))).cast("double")
+          / (sqrt((dq(col("n_docs")) * col("_saa") - dq(col("_sa")) * dq(col("_sa"))).cast("double"))
+            * sqrt((dq(col("n_docs")) * col("_sbb") - dq(col("_sb")) * dq(col("_sb"))).cast("double"))))
       .withColumn("spearman",
         lit(1.0) - (lit(6.0) * col("_sdd").cast("double"))
-          / (d(col("n_docs")) * d(col("n_docs")) * d(col("n_docs")) - d(col("n_docs"))).cast("double"))
+          / (dq(col("n_docs")) * dq(col("n_docs")) * dq(col("n_docs")) - dq(col("n_docs"))).cast("double"))
       .select(col("n_docs"), col("pearson"), col("spearman"))
   }
 
@@ -1046,7 +1046,6 @@ object CorpusOps {
   def sourceJsDivergence(docs: DataFrame, topK: Int = 200,
                          groupCol: String = "source", textCol: String = "text"): DataFrame = {
     def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val words = docs.select(col(groupCol).as("_g"),
       explode(filter(split(col(textCol), " "), w => length(w) > 0)).as("_w"))
     val vocab = words.groupBy(col("_w")).agg(count(lit(1)).as("_cnt"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -162,8 +163,6 @@ object EmbeddingStats {
     * after runs on the dim²-row matrix table. No per-vector joins.
     */
   def spectralAxis(embs: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    def dq(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      c.cast("decimal(38,0)")
     val half = covarianceGate(embs, vecCol)
     val m = half.unionAll(half.filter(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("sum_prod")))

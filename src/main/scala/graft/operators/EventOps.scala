@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +43,6 @@ object EventOps {
   def hourlyAutocorr(events: DataFrame, lags: Seq[Int] = Seq(1, 24, 168),
                      tsCol: String = "t_us"): DataFrame = {
     require(lags.nonEmpty && lags.forall(_ >= 1), "lags must be positive")
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val counts = events.groupBy(expr(s"$tsCol div 3600000000L").as("h"))
       .agg(count(lit(1)).as("c"))
     val spine = counts.agg(min(col("h")).as("_h0"), max(col("h")).as("_h1"))
@@ -56,13 +56,13 @@ object EventOps {
       a.join(b, Seq("h"))
         .agg(count(lit(1)).cast("long").as("n_pairs"),
           sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
-          sum(d(col("_x")) * d(col("_y"))).as("_sxy"),
-          sum(d(col("_x")) * d(col("_x"))).as("_sxx"),
-          sum(d(col("_y")) * d(col("_y"))).as("_syy"))
+          sum(dq(col("_x")) * dq(col("_y"))).as("_sxy"),
+          sum(dq(col("_x")) * dq(col("_x"))).as("_sxx"),
+          sum(dq(col("_y")) * dq(col("_y"))).as("_syy"))
         .select(lit(lag.toLong).as("lag"), col("n_pairs"),
-          ((d(col("n_pairs")) * col("_sxy") - d(col("_sx")) * d(col("_sy"))).cast("double")
-            / (sqrt((d(col("n_pairs")) * col("_sxx") - d(col("_sx")) * d(col("_sx"))).cast("double"))
-              * sqrt((d(col("n_pairs")) * col("_syy") - d(col("_sy")) * d(col("_sy"))).cast("double"))))
+          ((dq(col("n_pairs")) * col("_sxy") - dq(col("_sx")) * dq(col("_sy"))).cast("double")
+            / (sqrt((dq(col("n_pairs")) * col("_sxx") - dq(col("_sx")) * dq(col("_sx"))).cast("double"))
+              * sqrt((dq(col("n_pairs")) * col("_syy") - dq(col("_sy")) * dq(col("_sy"))).cast("double"))))
             .as("r"))
     }.reduce(_.unionByName(_))
   }
@@ -819,7 +819,6 @@ object EventOps {
     */
   def seasonalDecompose(events: DataFrame, typeCol: String = "event_type",
                         tsCol: String = "t_us"): DataFrame = {
-    def dq(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val counts = events.groupBy(col(typeCol).as("k"), expr(s"$tsCol div 3600000000L").as("h"))
       .agg(count(lit(1)).as("c"))
     val spine = counts.groupBy(col("k")).agg(min(col("h")).as("_h0"), max(col("h")).as("_h1"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GeoFunctions, TimeFunctions}
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -426,17 +427,16 @@ object Metrics {
         col("_flon"), col("_flat"), col("_tlon"), col("_tlat"))).cast("long"))
       .filter(col("_d") >= 1L)
       .select(lnq(col("_d")).as("_x"), lnq(col("_flow")).as("_y"))
-    def d(c: Column): Column = c.cast("decimal(38,0)")
     // cross terms summed in DECIMAL(38,0): x·y ≈ 3·10¹⁴ per pair, so the
     // running Σ itself outgrows a long past ~30k location pairs
     pts.agg(
         count(lit(1)).as("n_pairs"),
         sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
-        sum(d(col("_x")) * d(col("_y"))).as("_sxy"),
-        sum(d(col("_x")) * d(col("_x"))).as("_sxx"))
+        sum(dq(col("_x")) * dq(col("_y"))).as("_sxy"),
+        sum(dq(col("_x")) * dq(col("_x"))).as("_sxx"))
       .withColumn("slope",
-        (d(col("n_pairs")) * col("_sxy") - d(col("_sx")) * d(col("_sy"))).cast("double") /
-          (d(col("n_pairs")) * col("_sxx") - d(col("_sx")) * d(col("_sx"))).cast("double"))
+        (dq(col("n_pairs")) * col("_sxy") - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
+          (dq(col("n_pairs")) * col("_sxx") - dq(col("_sx")) * dq(col("_sx"))).cast("double"))
       .withColumn("intercept",
         ((col("_sy").cast("double") - col("slope") * col("_sx").cast("double"))
           / col("n_pairs").cast("double")) / lit(1e6))
@@ -503,7 +503,6 @@ object Metrics {
       .filter(col("_dk") < col("dist_m"))
       .groupBy(col("_f"), col("_t"))
       .agg(sum(col("_mk")).cast("long").as("s_between"))
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     pairs.join(s, Seq("_f", "_t"), "left")
       .withColumn("s_between", coalesce(col("s_between"), lit(0L)))
       .withColumn("p_pred",
@@ -543,7 +542,6 @@ object Metrics {
   def flowModelCpc(spLoc: DataFrame, locCol: String = "location_id",
                    share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     val pairs = radiationModel(spLoc, locCol)
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     def fdiv(n: Column, d: Column): Column =
       ((n - pmod(n, d)) / d).cast("decimal(38,0)")
     val dClamped = dq(greatest(col("dist_m"), lit(1L)))
@@ -991,9 +989,8 @@ object Metrics {
         sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
         sum(col("_x") * col("_y")).as("_sxy"), sum(col("_x") * col("_x")).as("_sxx"))
       .withColumn("beta", {
-        def d(c: Column): Column = c.cast("decimal(38,0)")
-        (d(col("n_points")) * d(col("_sxy")) - d(col("_sx")) * d(col("_sy"))).cast("double") /
-          (d(col("n_points")) * d(col("_sxx")) - d(col("_sx")) * d(col("_sx"))).cast("double")
+        (dq(col("n_points")) * dq(col("_sxy")) - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
+          (dq(col("n_points")) * dq(col("_sxx")) - dq(col("_sx")) * dq(col("_sx"))).cast("double")
       })
       .withColumn("log_k",
         ((col("_sy").cast("double") - col("beta") * col("_sx").cast("double"))

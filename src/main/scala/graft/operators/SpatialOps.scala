@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.GeoFunctions
+import graft.functions.GeoFunctions.{dq, quantizedCell}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -483,10 +484,9 @@ object SpatialOps {
   def kAnonymousCells(points: DataFrame, cellMicroDeg: Long = 10000L, k: Int = 5,
                       userCol: String = "user_id"): DataFrame = {
     require(cellMicroDeg > 0 && k >= 1, "cell width and k must be positive")
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     points
-      .groupBy(cell(col("lon")).as("cell_x"), cell(col("lat")).as("cell_y"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cell_x"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cell_y"))
       .agg(countDistinct(col(userCol)).as("n_users"), count(lit(1)).as("n_points"))
       .filter(col("n_users") >= k)
   }
@@ -529,11 +529,9 @@ object SpatialOps {
                      refLatDeg: Double = 47.6): DataFrame = {
     require(cellMicroDeg > 0, "cell width must be positive")
     val cosLatQ = math.floor(math.cos(math.toRadians(refLatDeg)) * 1e6 + 0.5).toLong
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val cells = points
-      .groupBy(cell(col("lon")).as("cx"), cell(col("lat")).as("cy"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cx"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cy"))
       .agg(count(lit(1)).cast("long").as("m"))
     val o = cells.select(col("cx").as("o_x"), col("cy").as("o_y"), col("m").as("m_o"))
     val d = cells.select(col("cx").as("d_x"), col("cy").as("d_y"), col("m").as("m_d"))
@@ -601,9 +599,6 @@ object SpatialOps {
     // gracefully there, so the bounded twin must fail loudly instead
     require(cosLatQ > 0,
       s"refLatDeg=$refLatDeg quantizes cos to $cosLatQ; need |refLatDeg| < 90 with cos(refLatDeg)*1e6 >= 1")
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     // cap in sqrt-units (cell·10⁶); block widths cover the cap radius
     val capU = (maxRings.toLong + 1L) * ringWidthCells * 1000000L
     val capSq = new java.math.BigDecimal(java.math.BigInteger.valueOf(capU).pow(2))
@@ -612,7 +607,8 @@ object SpatialOps {
     def blk(c: Column, w: Long): Column =
       floor(c.cast("double") / w.toDouble).cast("long")
     val cells = points
-      .groupBy(cell(col("lon")).as("cx"), cell(col("lat")).as("cy"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cx"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cy"))
       .agg(count(lit(1)).cast("long").as("m"))
     val o = cells
       .select(col("cx").as("o_x"), col("cy").as("o_y"), col("m").as("m_o"))
@@ -679,10 +675,9 @@ object SpatialOps {
     // the default stand-in bucket follows nGroups — a hard-pinned mod-4
     // with nGroups != 4 would silently score phantom absent groups
     val grp = groupCol.getOrElse(pmod(col("user_id"), lit(nGroups)).cast("long"))
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     val vg = points
-      .groupBy(cell(col("lon")).as("cx"), cell(col("lat")).as("cy"), grp.as("_grp"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cx"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cy"), grp.as("_grp"))
       .agg(count(lit(1)).cast("long").as("_c"))
     val byCell = Window.partitionBy(col("cx"), col("cy"))
     vg.withColumn("_n", sum(col("_c")).over(byCell))
@@ -749,13 +744,12 @@ object SpatialOps {
     require(spreadFactor >= 1, s"spreadFactor must be >= 1, got $spreadFactor")
     val bandUs = (bandMinutes * 60e6).toLong
     val g = spreadFactor.toLong
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     def side(pfx: String): DataFrame = {
       val base = intervals.select(
         col("user_id").as(s"${pfx}_user"),
         col("s_us").as(s"${pfx}_s"), col("f_us").as(s"${pfx}_f"),
-        cell(col("lon")).as("cx"), cell(col("lat")).as("cy"),
+        quantizedCell(col("lon"), cellMicroDeg).as("cx"),
+        quantizedCell(col("lat"), cellMicroDeg).as("cy"),
         floor(col("s_us") / lit(bandUs.toDouble)).cast("long").as(s"${pfx}_b0"),
         explode(sequence(
           floor(col("s_us") / lit(bandUs.toDouble)).cast("long"),
@@ -866,10 +860,9 @@ object SpatialOps {
     */
   def hotspotCells(points: DataFrame, cellMicroDeg: Long = 10000L): DataFrame = {
     require(cellMicroDeg > 0, "cell width must be positive")
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     val cells = points
-      .groupBy(cell(col("lon")).as("cell_x"), cell(col("lat")).as("cell_y"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cell_x"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cell_y"))
       .agg(count(lit(1)).cast("long").as("n_points"))
     val offsets = for { dx <- -1L to 1L; dy <- -1L to 1L }
       yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
@@ -989,8 +982,6 @@ object SpatialOps {
   def lDiversityCells(points: DataFrame, cellMicroDeg: Long = 10000L, k: Int = 5,
                       userCol: String = "user_id", tCol: String = "t_us"): DataFrame = {
     require(cellMicroDeg > 0 && k >= 1, "cell width and k must be positive")
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     // NONNEGATIVE-EVENT-TIME ASSUMPTION (shared with the DuckDB oracle):
     // pmod here is floor-mod while the oracle's % truncates toward zero —
     // identical for t_us >= 0 (all testdata and any epoch-micros tracking
@@ -998,7 +989,8 @@ object SpatialOps {
     // EventOps.seasonalDecompose's pmod(h, 24) hour bucket.
     points
       .withColumn("_hour", expr(s"(pmod($tCol, 86400000000L) div 3600000000L)"))
-      .groupBy(cell(col("lon")).as("cell_x"), cell(col("lat")).as("cell_y"))
+      .groupBy(quantizedCell(col("lon"), cellMicroDeg).as("cell_x"),
+               quantizedCell(col("lat"), cellMicroDeg).as("cell_y"))
       .agg(countDistinct(col(userCol)).as("n_users"),
         count(lit(1)).as("n_points"),
         countDistinct(col("_hour")).as("l_hours"))
@@ -1040,11 +1032,9 @@ object SpatialOps {
                       tCol: String = "t_us"): DataFrame = {
     require(cellMicroDeg > 0 && k >= 1 && tPpm >= 0, "cell width, k, tPpm must be sensible")
     val spark = points.sparkSession
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val pts = points
-      .select(cell(col("lon")).as("cell_x"), cell(col("lat")).as("cell_y"),
+      .select(quantizedCell(col("lon"), cellMicroDeg).as("cell_x"),
+              quantizedCell(col("lat"), cellMicroDeg).as("cell_y"),
         col(userCol).as("_u"),
         expr(s"(pmod($tCol, 86400000000L) div 3600000000L)").as("_h"))
     val cellHour = pts.groupBy(col("cell_x"), col("cell_y"), col("_h"))
@@ -1106,7 +1096,6 @@ object SpatialOps {
     val directed = graph.map(_.edgesW.select(col("src"), col("dst")))
       .getOrElse(pairs.select(col("user_a").as("src"), col("user_b").as("dst"))
         .unionByName(pairs.select(col("user_b").as("src"), col("user_a").as("dst"))))
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     directed
       .join(deg.select(col("u").as("src"), col("d").as("d_src")), Seq("src"))
       .join(deg.select(col("u").as("dst"), col("d").as("d_dst")), Seq("dst"))
@@ -1189,7 +1178,6 @@ object SpatialOps {
       .getOrElse(pairs
         .select(explode(array(col("user_a"), col("user_b"))).as("_u"))
         .groupBy(col("_u")).agg(count(lit(1)).cast("long").as("_d")))
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     pairs
       .join(deg.select(col("_u").as("user_a"), col("_d").as("_ja")), Seq("user_a"))
       .join(deg.select(col("_u").as("user_b"), col("_d").as("_kb")), Seq("user_b"))
@@ -1333,7 +1321,6 @@ object SpatialOps {
                      share: DataFrame => DataFrame = Share.materialize,
                      graph: Option[ContactGraph] = None): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val scale = 1000000L
     val edges = graph.map(_.edgesW).getOrElse {
       val p = share(pairs.select(col("user_a"), col("user_b"), col("n_meetings")))
@@ -1627,7 +1614,6 @@ object SpatialOps {
   private def louvainPass(edges: DataFrame, deg: DataFrame, totalW: DataFrame,
                           rounds: Int, share: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     // The two-coloring class is the parity of the node's DENSE RANK in id
     // order, not of the raw id: an id population with biased parity (all
     // even after an upstream ×2 relabel, say — or level-1 winner labels,
@@ -2050,7 +2036,6 @@ object SpatialOps {
     */
   private def partitionQNumDf(p: DataFrame, edges: DataFrame,
                               labels: DataFrame): DataFrame = {
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val withA = p.join(labels.select(col("n"), col("lbl").as("_ca")), p("user_a") === col("n")).drop("n")
     val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")
     val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
@@ -2075,7 +2060,6 @@ object SpatialOps {
     */
   private def communityStats(p: DataFrame, edges: DataFrame, labels: DataFrame,
                              degW: Option[DataFrame]): DataFrame = {
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val withA = p.join(labels.select(col("n"), col("lbl").as("_ca")), p("user_a") === col("n")).drop("n")
     val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")
     val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
@@ -2232,12 +2216,12 @@ object SpatialOps {
     * the exchange carries one row per occupied cell.
     */
   def zorderCells(points: DataFrame, cellMicroDeg: Long = 10000L): DataFrame = {
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     // clamp both ends: out-of-range coordinates pin to the boundary cell
     // instead of wrapping through the interleave's bit mask
-    val gx = greatest(least(cell(col("lon")) + lit(1L << 20), lit(graft.functions.ZOrder.Max)), lit(0L))
-    val gy = greatest(least(cell(col("lat")) + lit(1L << 20), lit(graft.functions.ZOrder.Max)), lit(0L))
+    val gx = greatest(least(quantizedCell(col("lon"), cellMicroDeg) + lit(1L << 20),
+      lit(graft.functions.ZOrder.Max)), lit(0L))
+    val gy = greatest(least(quantizedCell(col("lat"), cellMicroDeg) + lit(1L << 20),
+      lit(graft.functions.ZOrder.Max)), lit(0L))
     points
       .groupBy(graft.functions.ZOrder.interleave(gx, gy).as("zkey"))
       .agg(count(lit(1)).as("n_points"))
@@ -2249,13 +2233,11 @@ object SpatialOps {
     */
   def suppressRareCells(points: DataFrame, cellMicroDeg: Long = 10000L, k: Int = 5,
                         userCol: String = "user_id"): DataFrame = {
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     val ok = kAnonymousCells(points, cellMicroDeg, k, userCol)
       .select(col("cell_x"), col("cell_y"))
     points
-      .withColumn("cell_x", cell(col("lon")))
-      .withColumn("cell_y", cell(col("lat")))
+      .withColumn("cell_x", quantizedCell(col("lon"), cellMicroDeg))
+      .withColumn("cell_y", quantizedCell(col("lat"), cellMicroDeg))
       .join(broadcast(ok), Seq("cell_x", "cell_y"), "left_semi")
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
+import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1536,9 +1537,8 @@ object TextAnalysis {
         // a few hundred points (n·Σxy with x ~ ln(1e6)·1e6) — do the
         // cross terms in DECIMAL(38,0) (HUGEINT in the oracle), one
         // final cast to double each
-        def d(c: Column): Column = c.cast("decimal(38,0)")
-        (d(col("n_points")) * d(col("_sxy")) - d(col("_sx")) * d(col("_sy"))).cast("double") /
-          (d(col("n_points")) * d(col("_sxx")) - d(col("_sx")) * d(col("_sx"))).cast("double")
+        (dq(col("n_points")) * dq(col("_sxy")) - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
+          (dq(col("n_points")) * dq(col("_sxx")) - dq(col("_sx")) * dq(col("_sx"))).cast("double")
       })
       .withColumn("log_k",
         ((col("_sy").cast("double") - col("beta") * col("_sx").cast("double"))
@@ -1997,7 +1997,6 @@ object TextAnalysis {
               share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(holdoutMod >= 2, "knScore: holdoutMod must leave both slices nonempty")
     def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
-    def dq(c: Column): Column = c.cast("decimal(38,0)")
     val toks = docs.select(col(idCol), col(groupCol),
       filter(split(col(textCol), " "), w => length(w) > 0).as("_ws"))
     val n1 = greatest(size(col("_ws")) - 1, lit(0))

@@ -3,26 +3,41 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, Dataset, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Deterministic micro-batch replay of the streaming operators over a
   * bounded table — the bridge that makes the streaming package visible
   * to the batch correctness gate (reference has no streaming surface; this
   * is the engine's stream-native extension, SURVEY.md §1.4).
   *
-  * The harness feeds the table through a [[MemoryStream]] in K
-  * time-ordered micro-batches (global sort by (t, id), then equal row
-  * chunks — so each user's rows arrive in-order across batches, the
-  * operators' documented device-stream assumption), drains each batch
-  * with `processAllAvailable`, and collects every batch's append output
-  * into a bounded driver buffer via `foreachBatch` (see [[Collector]] —
-  * the earlier per-batch parquet append cost ~0.4-1.0 s of committer
-  * round-trip per micro-batch, the largest single cost of every replay
-  * gate). The result is bit-deterministic: same input → same chunking →
-  * same state transitions → same rows, regardless of chunk count.
+  * Every replay runs through one driver ([[drive]]): it starts the
+  * operator as an append query on a cloned runner session, feeds the
+  * batches one at a time — draining each with `processAllAvailable`
+  * before the next, which is what makes the keyed-state transitions
+  * deterministic — and collects every batch's output into a bounded
+  * driver buffer via `foreachBatch` (see [[Collector]] — the earlier
+  * per-batch parquet append cost ~0.4-1.0 s of committer round-trip per
+  * micro-batch, the largest single cost of every replay gate). The
+  * checkpoint directory lives exactly as long as the call, whether the
+  * replay returns or throws. An empty feed yields an empty frame with
+  * the stream's own schema, so a replay's result has the same columns
+  * whatever its input.
+  *
+  * The feed comes in two layouts:
+  *  - '''equal chunks''' ([[chunked]]): the rows in global time order,
+  *    cut into K equal micro-batches, so each user's rows arrive
+  *    in-order across batches (the operators' documented device-stream
+  *    assumption). The result is bit-deterministic: same input → same
+  *    chunking → same state transitions → same rows, regardless of K.
+  *  - '''residue classes''' ([[residues]]): micro-batch p carries the
+  *    rows whose id ≡ p (mod K), a deterministic OUT-OF-ORDER feed whose
+  *    divergence from the batch twin each `…OutOfOrder` replay documents
+  *    in closed form.
+  * Each public replay keeps only what is its own: the column selection,
+  * the feed order, any sentinel rows, and the operator call.
   *
   * The driver-side feed is the test-harness half only (MemoryStream data
   * lives on the driver by construction — production replaces it with a
@@ -35,7 +50,7 @@ object Replay {
 
   private def tmp(prefix: String): String = {
     // replay checkpoints are harness-temp state (created per call,
-    // deleted by Collector.result) — put them on the RAM-backed tmpfs
+    // deleted when the call ends) — put them on the RAM-backed tmpfs
     // when one exists: every micro-batch pays offset-log + commit-log +
     // per-partition state-store file round-trips, and on a disk-backed
     // java.io.tmpdir that file churn is the largest fixed cost of every
@@ -57,26 +72,27 @@ object Replay {
     else Files.createTempDirectory(prefix).toString
   }
 
-  /** A cloned session the replay's streaming query runs on, pinned to 4
-    * shuffle partitions. Replay volumes are bounded (residue-class slices
-    * of test tables), but every micro-batch commits one state store PER
-    * shuffle partition (×2 sides for stream-stream joins) — at the
-    * session's 32 partitions that's pure file-IO overhead, ~2/3 of the
-    * colocation gate's wall clock before the pinning. Key-hash state
+  /** A cloned session the replay's streaming query runs on, with its own
+    * shuffle partition count. Replay volumes are bounded (residue-class
+    * slices of test tables), but every micro-batch commits one state
+    * store PER shuffle partition (×2 sides for stream-stream joins) — at
+    * the session's 32 partitions that's pure file-IO overhead, ~2/3 of
+    * the colocation gate's wall clock before the pinning. Key-hash state
     * partitioning is semantics-free: same transitions, same rows
     * (ReplaySpec pins chunking/partitioning invariance).
     *
     * A CLONE (not a conf mutate-and-restore on the caller's session,
     * the previous approach) because the streaming plan reads the conf at
     * query start, and any batch query planned concurrently on the shared
-    * session during that window would silently inherit 4 shuffle
-    * partitions — Verify now runs gates in parallel, making that race
+    * session during that window would silently inherit the replay's
+    * partition count — Verify runs gates in parallel, making that race
     * real. The clone shares the SparkContext (same executors, same block
     * store) but owns its SQLConf, so the pinning is invisible outside
     * the replay. Only the streaming query runs on the clone; the replay
     * result is read back on the caller's session.
     */
-  private def runnerSession(spark: SparkSession, partitions: Int = 2): SparkSession = {
+  private def runnerSession(spark: SparkSession, partitions: Int,
+                            noDataBatches: Boolean): SparkSession = {
     val s = spark.newSession()
     GraftSession.prepare(s)
     // 2 partitions for the keyed-state replays (every micro-batch
@@ -84,32 +100,14 @@ object Replay {
     // bounded slices, measured −0.3..−0.6 s per gate vs 4); the
     // pair-emitting stream-stream joins pass a higher count because
     // their per-batch COMPUTE (same-cell pair matching) dominates and
-    // parallelizes. Key-hash state partitioning is semantics-free: same
-    // transitions, same rows (ReplaySpec pins chunking/partitioning
-    // invariance).
+    // parallelizes.
     s.conf.set("spark.sql.shuffle.partitions", partitions)
     // replay queries run a handful of micro-batches and the checkpoint
     // dir is deleted right after — retaining the default 100 batches of
     // state/metadata files only adds file churn per commit
     s.conf.set("spark.sql.streaming.minBatchesToRetain", 2)
+    if (!noDataBatches) s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     s
-  }
-
-  /** Feed `rows` in `chunks` equal micro-batches (then any `tail`
-    * batches), draining each with processAllAvailable before the next —
-    * sequential batches are what makes the keyed-state transitions
-    * deterministic.
-    */
-  private def drain[T](input: MemoryStream[T], rows: Seq[T], chunks: Int,
-                       tail: Seq[Seq[T]] = Nil)(start: => StreamingQuery): Unit = {
-    val q = start
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)
-      (rows.grouped(per) ++ tail.iterator.filter(_.nonEmpty)).foreach { chunk =>
-        input.addData(chunk)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
   }
 
   private def deleteRecursively(path: String): Unit = {
@@ -133,30 +131,81 @@ object Replay {
     * construction (MemoryStream); the sink half now matches —
     * production replaces both ends with Kafka/file sources and sinks.
     *
+    * @param schema the streaming frame's schema, taken before the query
+    *               starts — every batch has it, and so does the result of
+    *               a replay that emitted nothing
     * @note local-mode-only by design, like the feed: the buffer must
     *       fit on the driver, which the bounded replay slices do.
     */
-  private final class Collector {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    private var schema: org.apache.spark.sql.types.StructType = _
-    def add(df: Dataset[_]): Unit = {
-      val d = df.toDF()
-      val rows = d.collect()
-      synchronized { if (schema == null) schema = d.schema; buf ++= rows }
+  private final class Collector(schema: StructType) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    def add(df: DataFrame): Unit = {
+      val rows = df.collect()
+      synchronized { buf ++= rows }
     }
     /** The accumulated rows as a frame on the CALLER's session, pinned
       * via eager local checkpoint (same lifetime contract the parquet
-      * read-back had); also deletes the replay's checkpoint dir.
+      * read-back had).
       */
-    def result(spark: SparkSession, ckpt: String, empty: => DataFrame): DataFrame =
-      synchronized {
-        val out =
-          if (schema == null || buf.isEmpty) empty
-          else spark.createDataFrame(
-            spark.sparkContext.parallelize(buf.toSeq, 4), schema).localCheckpoint(true)
-        deleteRecursively(ckpt)
-        out
-      }
+    def result(spark: SparkSession): DataFrame = synchronized {
+      spark.createDataFrame(spark.sparkContext.parallelize(buf.toSeq, 4), schema)
+        .localCheckpoint(true)
+    }
+  }
+
+  /** The one replay driver. `plan` builds the streaming frame on the
+    * runner session and returns it with its feed: one step per
+    * micro-batch, each followed by `processAllAvailable`. Every batch the
+    * query emits goes through `perBatch` into the [[Collector]]; the
+    * collected rows come back on the caller's session. The checkpoint
+    * directory is deleted however the call ends.
+    *
+    * @param partitions    the runner's shuffle partition count
+    * @param noDataBatches whether the runner runs Spark's no-data
+    *                      micro-batches (the watermark-only eviction passes)
+    */
+  private def drive(spark: SparkSession, partitions: Int, noDataBatches: Boolean,
+                    perBatch: DataFrame => DataFrame)
+                   (plan: SparkSession => (DataFrame, Seq[() => Unit])): DataFrame = {
+    val ckpt = tmp("graft-replay-")
+    try {
+      val (out, feed) = plan(runnerSession(spark, partitions, noDataBatches))
+      val sink = new Collector(perBatch(out).schema)
+      val q = out.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: DataFrame, _: Long) => sink.add(perBatch(df)) }
+        .start()
+      try feed.foreach { addBatch => addBatch(); q.processAllAvailable() }
+      finally q.stop()
+      sink.result(spark)
+    } finally deleteRecursively(ckpt)
+  }
+
+  /** [[drive]] over one [[MemoryStream]]: `op` gets the stream as a frame
+    * of `T`'s tuple columns and returns the operator's output; the
+    * non-empty `batches` are the feed.
+    */
+  private def replay[T: Encoder](spark: SparkSession, batches: Seq[Seq[T]],
+                                 partitions: Int = 2, noDataBatches: Boolean = true,
+                                 perBatch: DataFrame => DataFrame = identity)
+                                (op: DataFrame => Dataset[_]): DataFrame =
+    drive(spark, partitions, noDataBatches, perBatch) { runner =>
+      val input = MemoryStream[T](runner)
+      (op(input.toDF()).toDF(), batches.filter(_.nonEmpty).map(b => () => { input.addData(b); () }))
+    }
+
+  /** The in-order layout: `rows` (already in feed order) in `chunks`
+    * equal micro-batches.
+    */
+  private def chunked[T](rows: Seq[T], chunks: Int): Seq[Seq[T]] =
+    rows.grouped(math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)).toSeq
+
+  /** The out-of-order layout: micro-batch p (p = 0..chunks−1) carries the
+    * rows whose id ≡ p (mod chunks), each batch in `rows`' order.
+    */
+  private def residues[T](rows: Seq[T], chunks: Int)(id: T => Long): Seq[Seq[T]] = {
+    require(chunks >= 2, "out-of-order replay needs at least 2 chunks")
+    (0 until chunks).map(p => rows.filter(r => java.lang.Math.floorMod(id(r), chunks.toLong) == p))
   }
 
   /** Replay [[StreamingSessionize.assign]] over a bounded event table.
@@ -168,32 +217,23 @@ object Replay {
   def sessionize(events: DataFrame, gapMinutes: Double = 30.0, chunks: Int = 8): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
     val rows = events
       .select(col("event_id").cast("long"), col("user_id").cast("long"), col("t_us").cast("long"))
       .as[(Long, Long, Long)].collect()
       .sortBy { case (e, _, t) => (t, e) }.toSeq
+    replay(spark, chunked(rows, chunks)) { in =>
+      StreamingSessionize.assign(in.toDF("event_id", "user_id", "t_us")
+          .select(col("event_id"), col("user_id"), timestamp_micros(col("t_us")).as("ts")),
+        gapMinutes)
+    }.select(col("event_id"), col("user_id"), col("session_id"))
+  }
 
-    val input = MemoryStream[(Long, Long, Long)]
-    val stream = input.toDF().toDF("event_id", "user_id", "t_us")
-      .select(col("event_id"), col("user_id"), timestamp_micros(col("t_us")).as("ts"))
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-sess-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingSessionize.assign(stream, gapMinutes)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingSessionize.SessionizedEvent], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt,
-        spark.emptyDataset[StreamingSessionize.SessionizedEvent].toDF())
-      .select(col("event_id"), col("user_id"), col("session_id"))
+  /** (doc_id, text) rows of a document table, in doc-id order. */
+  private def docRows(docs: DataFrame): Seq[(Long, String)] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), col("text").cast("string"))
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
   }
 
   /** Replay [[StreamingDedup.dedup]] over a bounded document table in
@@ -204,33 +244,8 @@ object Replay {
     * @param docs (doc_id, text) — extra columns ignored
     * @return (doc_id, text_hash, is_first, first_doc_id)
     */
-  def dedup(docs: DataFrame, chunks: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
-    val rows = docs.select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-dedup-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingDedup.dedup(stream, idleHorizonMinutes = 0L, emitDuplicates = true)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingDedup.Emitted], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt,
-        spark.emptyDataset[StreamingDedup.Emitted].toDF())
-      .select(col("doc_id"), col("text_hash"), col("is_first"), col("first_doc_id"))
-  }
+  def dedup(docs: DataFrame, chunks: Int = 8): DataFrame =
+    dedupFeed(docs.sparkSession, chunked(docRows(docs), chunks))
 
   /** Replay [[StreamingDedup.dedup]] with a deterministic OUT-OF-ORDER
     * feed (micro-batch p carries the docs with doc_id ≡ p mod chunks):
@@ -240,6 +255,17 @@ object Replay {
     * divergence contract is that closed form (the oracle); audit mode so
     * every duplicate row points at its keeper.
     */
+  def dedupOutOfOrder(docs: DataFrame, chunks: Int = 4): DataFrame =
+    dedupFeed(docs.sparkSession, residues(docRows(docs), chunks)(_._1))
+
+  private def dedupFeed(spark: SparkSession, batches: Seq[Seq[(Long, String)]]): DataFrame = {
+    import spark.implicits._
+    replay(spark, batches) { in =>
+      StreamingDedup.dedup(in.toDF("doc_id", "text"), idleHorizonMinutes = 0L,
+        emitDuplicates = true)
+    }.select(col("doc_id"), col("text_hash"), col("is_first"), col("first_doc_id"))
+  }
+
   /** Replay [[StreamingNearDup.candidates]] over a bounded document
     * table: rows arrive in doc-id order (chunk-invariant by the
     * operator's smallest-id-first in-batch rule), expiry off and the
@@ -254,30 +280,10 @@ object Replay {
               shingleN: Int = 3, chunks: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
-    val rows = docs.select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-neardup-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingNearDup.candidates(stream, numHashes, bands, shingleN,
-          idleHorizonMinutes = 0L, maxBucketSize = Int.MaxValue)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingNearDup.Candidate], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt,
-        spark.emptyDataset[StreamingNearDup.Candidate].toDF())
-      .select(col("id_a"), col("id_b"), col("band"))
+    replay(spark, chunked(docRows(docs), chunks)) { in =>
+      StreamingNearDup.candidates(in.toDF("doc_id", "text"), numHashes, bands, shingleN,
+        idleHorizonMinutes = 0L, maxBucketSize = Int.MaxValue)
+    }.select(col("id_a"), col("id_b"), col("band"))
   }
 
   /** Replay [[StreamingNearDup.candidates]] PLUS the verification stage
@@ -307,83 +313,35 @@ object Replay {
                       chunks: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val runner = runnerSession(spark)
-    implicit val sqlCtx: SQLContext = runner.sqlContext
-
-    val rows = docs.select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-
-    // the shingle store lives on the runner session (foreachBatch frames
-    // are bound to it — joining across sessions is undefined behavior)
-    val store = {
-      import runner.implicits._
-      rows.toDF("doc_id", "text")
-        .select(col("doc_id").as("_id"),
-          graft.operators.Dedup.shingles(col("text"), shingleN).as("_sh"))
-        .localCheckpoint(true)
-    }
-
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-ndv-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingNearDup.candidates(stream, numHashes, bands, shingleN,
-          idleHorizonMinutes = 0L, maxBucketSize = Int.MaxValue)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingNearDup.Candidate], _: Long) =>
-          val _ver = df.select(col("id_a"), col("id_b")).distinct()
-            .join(broadcast(store.select(col("_id").as("id_a"), col("_sh").as("_sh_a"))), "id_a")
-            .join(broadcast(store.select(col("_id").as("id_b"), col("_sh").as("_sh_b"))), "id_b")
-            .withColumn("jaccard",
-              size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double") /
-                size(array_union(col("_sh_a"), col("_sh_b"))).cast("double"))
-            .filter(col("jaccard") >= verifyThreshold)
-            .select(col("id_a"), col("id_b"), col("jaccard"))
-          sink.add(_ver)
-          ()
-        }
-        .start()
-    }
-
-    val empty = spark.emptyDataset[(Long, Long, Double)].toDF("id_a", "id_b", "jaccard")
-    sink.result(spark, ckpt, empty)
+    val rows = docRows(docs)
+    // a pinned local checkpoint: session-independent, so it joins into
+    // the batches of the query's own session clone
+    val store = rows.toDF("doc_id", "text")
+      .select(col("doc_id").as("_id"),
+        graft.operators.Dedup.shingles(col("text"), shingleN).as("_sh"))
+      .localCheckpoint(true)
+    def verify(candidates: DataFrame): DataFrame = candidates
+      .select(col("id_a"), col("id_b")).distinct()
+      .join(broadcast(store.select(col("_id").as("id_a"), col("_sh").as("_sh_a"))), "id_a")
+      .join(broadcast(store.select(col("_id").as("id_b"), col("_sh").as("_sh_b"))), "id_b")
+      .withColumn("jaccard",
+        size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double") /
+          size(array_union(col("_sh_a"), col("_sh_b"))).cast("double"))
+      .filter(col("jaccard") >= verifyThreshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+    replay(spark, chunked(rows, chunks), perBatch = verify) { in =>
+      StreamingNearDup.candidates(in.toDF("doc_id", "text"), numHashes, bands, shingleN,
+        idleHorizonMinutes = 0L, maxBucketSize = Int.MaxValue)
+    }
   }
 
-  def dedupOutOfOrder(docs: DataFrame, chunks: Int = 4): DataFrame = {
-    require(chunks >= 2, "out-of-order replay needs at least 2 chunks")
-    val spark = docs.sparkSession
+  /** (group, id, t) rows under the given column names, in (t, id) order. */
+  private def timedRows(df: DataFrame, groupCol: String, idCol: String,
+                        timeCol: String): Seq[(String, Long, Long)] = {
+    val spark = df.sparkSession
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
-    val rows = docs.select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[(Long, String)].collect()
-    val batches: Seq[Seq[(Long, String)]] = (0 until chunks).map { p =>
-      rows.filter { case (i, _) => java.lang.Math.floorMod(i, chunks.toLong) == p }
-        .sortBy(_._1).toSeq
-    }
-
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-dooo-ckpt")
-
-    drain(input, Seq.empty, 1, tail = batches) {
-      StreamingDedup.dedup(stream, idleHorizonMinutes = 0L, emitDuplicates = true)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingDedup.Emitted], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt,
-        spark.emptyDataset[StreamingDedup.Emitted].toDF())
-      .select(col("doc_id"), col("text_hash"), col("is_first"), col("first_doc_id"))
+    df.select(col(groupCol).cast("string"), col(idCol).cast("long"), col(timeCol).cast("long"))
+      .as[(String, Long, Long)].collect().sortBy { case (_, i, t) => (t, i) }.toSeq
   }
 
   /** Replay [[StreamingQuota.quota]] over a bounded table in drop mode.
@@ -396,34 +354,41 @@ object Replay {
     */
   def quota(docs: DataFrame, quotaN: Long, windowMinutes: Long,
             groupCol: String = "lang", idCol: String = "doc_id", timeCol: String = "t_us",
-            chunks: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
+            chunks: Int = 8): DataFrame =
+    quotaFeed(docs.sparkSession, quotaN, windowMinutes,
+      chunked(timedRows(docs, groupCol, idCol, timeCol), chunks))
+
+  /** Replay [[StreamingQuota.quota]] with a deterministic OUT-OF-ORDER
+    * feed: micro-batch p (p = 0..chunks−1) carries exactly the rows with
+    * doc_id ≡ p (mod chunks), so every batch after the first delivers
+    * rows that are LATE relative to the event-time horizon earlier
+    * batches already advanced — the regime where streaming admission
+    * diverges from the batch twin by design.
+    *
+    * The divergence has a closed form (the oracle's contract, pinned by
+    * StreamingQuotaSpec): the operator counts a late row against the
+    * NEWEST window its group has opened, and within one micro-batch it
+    * processes rows in (t, id) order with window starts monotone in t —
+    * so a row's effective window is
+    *   E = max(own window start, max window start over earlier batches)
+    * and admission is `row_number() over (group, E ordered by
+    * (batch, t, id)) <= quota`, stamped with E.
+    */
+  def quotaOutOfOrder(docs: DataFrame, quotaN: Long, windowMinutes: Long,
+                      groupCol: String = "lang", idCol: String = "doc_id",
+                      timeCol: String = "t_us", chunks: Int = 4): DataFrame =
+    quotaFeed(docs.sparkSession, quotaN, windowMinutes,
+      residues(timedRows(docs, groupCol, idCol, timeCol), chunks)(_._2))
+
+  private def quotaFeed(spark: SparkSession, quotaN: Long, windowMinutes: Long,
+                        batches: Seq[Seq[(String, Long, Long)]]): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
-    val rows = docs.select(col(groupCol).cast("string"), col(idCol).cast("long"),
-        col(timeCol).cast("long"))
-      .as[(String, Long, Long)].collect().sortBy { case (_, i, t) => (t, i) }.toSeq
-
-    val input = MemoryStream[(String, Long, Long)]
-    val stream = input.toDF().toDF("group", "doc_id", "t_us")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-quota-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingQuota.quota(stream, quotaN, windowMinutes, groupCol = "group",
-          idCol = "doc_id", timeCol = "t_us", emitRejected = false, idleHorizonMinutes = 0L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingQuota.Admitted], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt, spark.emptyDataset[StreamingQuota.Admitted].toDF())
-      .select(col("group").as("grp"), col("doc_id"), col("window_start_us"),
-        col("seq_in_window"), col("admitted"))
+    replay(spark, batches) { in =>
+      StreamingQuota.quota(in.toDF("group", "doc_id", "t_us"), quotaN, windowMinutes,
+        groupCol = "group", idCol = "doc_id", timeCol = "t_us", emitRejected = false,
+        idleHorizonMinutes = 0L)
+    }.select(col("group").as("grp"), col("doc_id"), col("window_start_us"),
+      col("seq_in_window"), col("admitted"))
   }
 
   /** Replay [[StreamingHeavyHitters.windowCounts]] and rank the
@@ -440,57 +405,9 @@ object Replay {
     */
   def heavyHitters(events: DataFrame, k: Int, windowMinutes: Long, delayMinutes: Long,
                    keyCol: String = "event_type", idCol: String = "event_id",
-                   timeCol: String = "t_us", chunks: Int = 3): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-    // (A/B note: disabling no-data micro-batches on the runner clone
-    // halves the commits but CHANGES the late-drop set — the no-data
-    // batch is where the advanced watermark lands before the next data
-    // batch's stateful filter reads it — so the default stays.)
-
-    val rows = events.select(col(keyCol).cast("string"), col(idCol).cast("long"),
-        col(timeCol).cast("long"))
-      .as[(String, Long, Long)].collect().sortBy { case (_, i, t) => (t, i) }.toSeq
-    val sentinelKey = " flush"
-    val tMax = rows.iterator.map(_._3).foldLeft(0L)(math.max)
-    val flushT = tMax + (delayMinutes + 2 * windowMinutes) * 60L * 1000000L
-    // two sentinel ROWS but only ONE extra micro-batch: the first flush
-    // row rides at the tail of the last data batch (it is the max event
-    // time, so in-batch order is preserved), advancing the watermark
-    // past every real window; the second, later batch then triggers
-    // their finalization. Every state-store commit is ~0.7 s of the
-    // gate, so batches are the cost unit here — same finalized set as
-    // the two-sentinel-batch layout, one commit fewer.
-    val flush1 = (sentinelKey, -1L, flushT)
-    val flush2 = (sentinelKey, -2L, flushT + windowMinutes * 60L * 1000000L)
-    val per = math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)
-    val dataBatches = rows.grouped(per).toSeq
-    val tail =
-      (if (dataBatches.isEmpty) Seq(Seq(flush1))
-       else dataBatches.init :+ (dataBatches.last :+ flush1)) :+ Seq(flush2)
-
-    val input = MemoryStream[(String, Long, Long)]
-    val stream = input.toDF().toDF("event_type", "event_id", "t_us")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-hh-ckpt")
-
-    drain(input, Seq.empty, 1, tail) {
-      StreamingHeavyHitters.windowCounts(stream, windowMinutes, delayMinutes)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    val empty = spark.range(0)
-      .select(col("id").as("window_start_us"), lit("").as("key"), col("id").as("n"))
-      .limit(0)
-    StreamingHeavyHitters.topK(
-      sink.result(spark, ckpt, empty).filter(col("key") =!= sentinelKey), k)
-  }
+                   timeCol: String = "t_us", chunks: Int = 3): DataFrame =
+    heavyHittersFeed(events.sparkSession, k, windowMinutes, delayMinutes,
+      chunked(timedRows(events, keyCol, idCol, timeCol), chunks))
 
   /** Replay [[StreamingHeavyHitters.windowCounts]] with a deterministic
     * OUT-OF-ORDER feed (micro-batch p carries the rows with id ≡ p mod
@@ -511,107 +428,40 @@ object Replay {
   def heavyHittersOutOfOrder(events: DataFrame, k: Int, windowMinutes: Long,
                              delayMinutes: Long, keyCol: String = "event_type",
                              idCol: String = "event_id", timeCol: String = "t_us",
-                             chunks: Int = 4): DataFrame = {
-    require(chunks >= 2, "out-of-order replay needs at least 2 chunks")
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-    // no-data micro-batches stay ON — see the heavyHitters A/B note
+                             chunks: Int = 4): DataFrame =
+    heavyHittersFeed(events.sparkSession, k, windowMinutes, delayMinutes,
+      residues(timedRows(events, keyCol, idCol, timeCol), chunks)(_._2))
 
-    val rows = events.select(col(keyCol).cast("string"), col(idCol).cast("long"),
-        col(timeCol).cast("long"))
-      .as[(String, Long, Long)].collect()
-    val batches: Seq[Seq[(String, Long, Long)]] = (0 until chunks).map { p =>
-      rows.filter { case (_, i, _) => java.lang.Math.floorMod(i, chunks.toLong) == p }
-        .sortBy { case (_, i, t) => (t, i) }.toSeq
-    }
+  private def heavyHittersFeed(spark: SparkSession, k: Int, windowMinutes: Long,
+                               delayMinutes: Long,
+                               batches: Seq[Seq[(String, Long, Long)]]): DataFrame = {
+    import spark.implicits._
+    // (A/B note: disabling no-data micro-batches on the runner clone
+    // halves the commits but CHANGES the late-drop set — the no-data
+    // batch is where the advanced watermark lands before the next data
+    // batch's stateful filter reads it — so the default stays.)
     val sentinelKey = " flush"
-    val tMax = rows.iterator.map(_._3).foldLeft(0L)(math.max)
+    val tMax = batches.iterator.flatten.map(_._3).foldLeft(0L)(math.max)
     val flushT = tMax + (delayMinutes + 2 * windowMinutes) * 60L * 1000000L
-    // flush1 rides the last data batch (max event time, so it cannot
-    // affect that batch's own drop decisions — the watermark a row is
-    // judged against comes from EARLIER batches only) and flush2 is the
-    // single extra commit that finalizes everything; see heavyHitters
+    // two sentinel ROWS but only ONE extra micro-batch: the first flush
+    // row rides at the tail of the last data batch (it is the max event
+    // time, so in-batch order is preserved, and it cannot affect that
+    // batch's own drop decisions — the watermark a row is judged against
+    // comes from EARLIER batches only), advancing the watermark past
+    // every real window; the second, later batch then triggers their
+    // finalization. Every state-store commit is ~0.7 s of the gate, so
+    // batches are the cost unit here — same finalized set as the
+    // two-sentinel-batch layout, one commit fewer.
     val flush1 = (sentinelKey, -1L, flushT)
     val flush2 = (sentinelKey, -2L, flushT + windowMinutes * 60L * 1000000L)
-    val nonEmpty = batches.filter(_.nonEmpty)
-    val tail =
-      (if (nonEmpty.isEmpty) Seq(Seq(flush1))
-       else nonEmpty.init :+ (nonEmpty.last :+ flush1)) :+ Seq(flush2)
-
-    val input = MemoryStream[(String, Long, Long)]
-    val stream = input.toDF().toDF("event_type", "event_id", "t_us")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-hhooo-ckpt")
-
-    drain(input, Seq.empty, 1, tail) {
-      StreamingHeavyHitters.windowCounts(stream, windowMinutes, delayMinutes)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
+    val data = batches.filter(_.nonEmpty)
+    val feed =
+      (if (data.isEmpty) Seq(Seq(flush1)) else data.init :+ (data.last :+ flush1)) :+ Seq(flush2)
+    val counts = replay(spark, feed) { in =>
+      StreamingHeavyHitters.windowCounts(in.toDF("event_type", "event_id", "t_us"),
+        windowMinutes, delayMinutes)
     }
-
-    val empty = spark.range(0)
-      .select(col("id").as("window_start_us"), lit("").as("key"), col("id").as("n"))
-      .limit(0)
-    StreamingHeavyHitters.topK(
-      sink.result(spark, ckpt, empty).filter(col("key") =!= sentinelKey), k)
-  }
-
-  /** Replay [[StreamingQuota.quota]] with a deterministic OUT-OF-ORDER
-    * feed: micro-batch p (p = 0..chunks−1) carries exactly the rows with
-    * doc_id ≡ p (mod chunks), so every batch after the first delivers
-    * rows that are LATE relative to the event-time horizon earlier
-    * batches already advanced — the regime where streaming admission
-    * diverges from the batch twin by design.
-    *
-    * The divergence has a closed form (the oracle's contract, pinned by
-    * StreamingQuotaSpec): the operator counts a late row against the
-    * NEWEST window its group has opened, and within one micro-batch it
-    * processes rows in (t, id) order with window starts monotone in t —
-    * so a row's effective window is
-    *   E = max(own window start, max window start over earlier batches)
-    * and admission is `row_number() over (group, E ordered by
-    * (batch, t, id)) <= quota`, stamped with E.
-    */
-  def quotaOutOfOrder(docs: DataFrame, quotaN: Long, windowMinutes: Long,
-                      groupCol: String = "lang", idCol: String = "doc_id",
-                      timeCol: String = "t_us", chunks: Int = 4): DataFrame = {
-    require(chunks >= 2, "out-of-order replay needs at least 2 chunks")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
-    val rows = docs.select(col(groupCol).cast("string"), col(idCol).cast("long"),
-        col(timeCol).cast("long"))
-      .as[(String, Long, Long)].collect()
-    val batches: Seq[Seq[(String, Long, Long)]] = (0 until chunks).map { p =>
-      rows.filter { case (_, i, _) => java.lang.Math.floorMod(i, chunks.toLong) == p }
-        .sortBy { case (_, i, t) => (t, i) }.toSeq
-    }
-
-    val input = MemoryStream[(String, Long, Long)]
-    val stream = input.toDF().toDF("group", "doc_id", "t_us")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-qooo-ckpt")
-
-    drain(input, Seq.empty, 1, tail = batches) {
-      StreamingQuota.quota(stream, quotaN, windowMinutes, groupCol = "group",
-          idCol = "doc_id", timeCol = "t_us", emitRejected = false, idleHorizonMinutes = 0L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingQuota.Admitted], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt, spark.emptyDataset[StreamingQuota.Admitted].toDF())
-      .select(col("group").as("grp"), col("doc_id"), col("window_start_us"),
-        col("seq_in_window"), col("admitted"))
+    StreamingHeavyHitters.topK(counts.filter(col("key") =!= sentinelKey), k)
   }
 
   /** Replay [[StreamingAsOf.enrich]] over bounded event/label tables:
@@ -630,8 +480,6 @@ object Replay {
   def asOf(events: DataFrame, labels: DataFrame, chunks: Int = 4): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
     val evRows = events
       .select(col("event_id").cast("long"), col("user_id").cast("long"), col("t_us").cast("long"))
       .as[(Long, Long, Long)].collect().map { case (i, u, t) => (u, false, i, t) }
@@ -640,24 +488,9 @@ object Replay {
       .as[(Long, Long, Long)].collect().map { case (i, u, t) => (u, true, i, t) }
     val rows = (evRows ++ labRows)
       .sortBy { case (_, isLabel, id, t) => (t, !isLabel, id) }.toSeq
-
-    val input = MemoryStream[(Long, Boolean, Long, Long)]
-    val stream = input.toDF().toDF("user_id", "is_label", "id", "t_us")
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-asof-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingAsOf.enrich(stream)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingAsOf.Enriched], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt, spark.emptyDataset[StreamingAsOf.Enriched].toDF())
-      .select(col("event_id"), col("user_id"), col("t_us"), col("label_id"), col("label_t_us"))
+    replay(spark, chunked(rows, chunks)) { in =>
+      StreamingAsOf.enrich(in.toDF("user_id", "is_label", "id", "t_us"))
+    }.select(col("event_id"), col("user_id"), col("t_us"), col("label_id"), col("label_t_us"))
   }
 
   /** Replay [[StreamingIntervalJoin.enrich]] over bounded event/label
@@ -697,16 +530,6 @@ object Replay {
                    leftOuter: Boolean = false): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val runner = runnerSession(spark)
-    // same reasoning as the colocation replay: an INNER stream-stream
-    // join emits on match and the lockstep in-order feeds are never
-    // late, so the no-data micro-batch after each drained chunk only
-    // evicts state — output-neutral, and skipping it removes one full
-    // micro-batch's planning+commit round per chunk (the replay's cost
-    // unit; oracle-checked identical)
-    runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = runner.sqlContext
-
     val evRows = events
       .select(col("event_id").cast("long"), col("user_id").cast("long"), col("t_us").cast("long"))
       .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._1)).toSeq
@@ -718,67 +541,61 @@ object Replay {
     // common boundaries over the union of both watermark-column time
     // sets: both feeds cross each boundary in the same micro-batch
     val times = (evRows.map(_._3) ++ labRows.map(_._4)).sorted
-    // empty-feed guard: with no rows there are no boundaries (every other
-    // replay tolerates an empty feed; indexing times(0) here would throw)
+    // empty-feed guard: with no rows there are no boundaries (indexing
+    // times(0) here would throw)
     val bounds =
       if (times.isEmpty) Seq.empty[Long]
       else (1 until chunks).map(i => times(((times.length.toLong * i) / chunks).toInt))
     def bucket(t: Long): Int = bounds.count(_ <= t)
 
-    val evIn = MemoryStream[(Long, Long, Long)]
-    val labIn = MemoryStream[(Long, Long, Long, Long, Long)]
-    val evStream = evIn.toDF().toDF("event_id", "user_id", "t_us")
-      .select(col("event_id"), col("user_id"), timestamp_micros(col("t_us")).as("ts"))
-    val labStream = labIn.toDF().toDF("label_id", "user_id", "s_us", "f_us", "label")
-      .select(col("label_id"), col("user_id"), col("label"),
-        timestamp_micros(col("s_us")).as("started_at"),
-        timestamp_micros(col("f_us")).as("finished_at"))
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-ivj-ckpt")
-
-    val joined =
-      if (leftOuter)
-        StreamingIntervalJoin.enrichLeftOuter(evStream, labStream,
-          maxDurationMinutes, watermarkMinutes)
-      else
-        StreamingIntervalJoin.enrich(evStream, labStream, maxDurationMinutes, watermarkMinutes)
-    val q = joined
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink.add(df); ()
-      }
-      .start()
-    try {
-      (0 until chunks).foreach { b =>
+    // same reasoning as the colocation replay: an INNER stream-stream
+    // join emits on match and the lockstep in-order feeds are never
+    // late, so the no-data micro-batch after each drained chunk only
+    // evicts state — output-neutral, and skipping it removes one full
+    // micro-batch's planning+commit round per chunk (the replay's cost
+    // unit; oracle-checked identical)
+    val raw = drive(spark, partitions = 2, noDataBatches = false, perBatch = identity) { runner =>
+      val evIn = MemoryStream[(Long, Long, Long)](runner)
+      val labIn = MemoryStream[(Long, Long, Long, Long, Long)](runner)
+      val evStream = evIn.toDF().toDF("event_id", "user_id", "t_us")
+        .select(col("event_id"), col("user_id"), timestamp_micros(col("t_us")).as("ts"))
+      val labStream = labIn.toDF().toDF("label_id", "user_id", "s_us", "f_us", "label")
+        .select(col("label_id"), col("user_id"), col("label"),
+          timestamp_micros(col("s_us")).as("started_at"),
+          timestamp_micros(col("f_us")).as("finished_at"))
+      val joined =
+        if (leftOuter)
+          StreamingIntervalJoin.enrichLeftOuter(evStream, labStream,
+            maxDurationMinutes, watermarkMinutes)
+        else
+          StreamingIntervalJoin.enrich(evStream, labStream, maxDurationMinutes, watermarkMinutes)
+      val lockstep = (0 until chunks).map { b => () =>
         val ev = evRows.filter(r => bucket(r._3) == b)
         val lb = labRows.filter(r => bucket(r._4) == b)
         if (ev.nonEmpty) evIn.addData(ev)
         if (lb.nonEmpty) labIn.addData(lb)
-        q.processAllAvailable()
+        ()
       }
-      if (leftOuter && times.nonEmpty) {
-        // sentinel flush (see scaladoc): both watermark columns must
-        // advance past every real row's eviction point, then one more
-        // batch runs the eviction that emits the trailing null rows
-        val flushT = times.last +
-          (watermarkMinutes.toLong + maxDurationMinutes.toLong + 10L) * 60000000L
-        evIn.addData(Seq((-1L, -1L, flushT)))
-        labIn.addData(Seq((-1L, -1L, flushT, flushT + 1L, 0L)))
-        q.processAllAvailable()
-        evIn.addData(Seq((-2L, -1L, flushT + 60000000L)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val empty = spark.emptyDataset[(Long, Long, Long, Long, Long)]
-      .toDF("event_id", "user_id", "t_us", "label_id", "label")
-    val raw = sink.result(spark, ckpt, empty)
-    val got = if (leftOuter) raw.filter(col("user_id") >= 0) else raw
-    if (got.columns.contains("ts"))
-      got.select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"),
+      // sentinel flush (see scaladoc): both watermark columns must
+      // advance past every real row's eviction point, then one more
+      // batch runs the eviction that emits the trailing null rows
+      val flush =
+        if (!leftOuter || times.isEmpty) Nil
+        else {
+          val flushT = times.last +
+            (watermarkMinutes.toLong + maxDurationMinutes.toLong + 10L) * 60000000L
+          Seq(
+            () => {
+              evIn.addData(Seq((-1L, -1L, flushT)))
+              labIn.addData(Seq((-1L, -1L, flushT, flushT + 1L, 0L))); ()
+            },
+            () => { evIn.addData(Seq((-2L, -1L, flushT + 60000000L))); () })
+        }
+      (joined, lockstep ++ flush)
+    }
+    (if (leftOuter) raw.filter(col("user_id") >= 0) else raw)
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"),
         col("label_id"), col("label"))
-    else got
   }
 
   /** Replay [[StreamingColocation.meetings]] over a bounded interval
@@ -796,52 +613,30 @@ object Replay {
                  chunks: Int = 8): DataFrame = {
     val spark = intervals.sparkSession
     import spark.implicits._
-    // stays at 4 partitions: A/B at 2/4/8 measured within noise of each
-    // other — this gate is bounded by per-batch pair compute and the
-    // per-batch output collect, not by state-store commit fan-out, so
-    // the keyed-state gates' 2-partition trim buys nothing here
-    val runner = runnerSession(spark, partitions = 4)
-    // unlike the windowed-agg replays (whose late-DROP set moves with
-    // this conf — see heavyHitters), the symmetric-hash INNER join
-    // emits eagerly on match and an in-order feed is never late, so the
-    // no-data micro-batch after each drained chunk only evicts state:
-    // output-neutral here, and skipping it halves the per-chunk commits
-    // of the priciest replay gate (isolated: the runner is a per-call
-    // clone; oracle-checked identical)
-    runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = runner.sqlContext
-
     val rows = intervals
       .select(col("user_id").cast("long"), col("s_us").cast("long"), col("f_us").cast("long"),
         col("lon").cast("double"), col("lat").cast("double"))
       .as[(Long, Long, Long, Double, Double)].collect()
       .sortBy { case (u, s, _, _, _) => (s, u) }.toSeq
-
-    val input = MemoryStream[(Long, Long, Long, Double, Double)]
-    val stream = input.toDF().toDF("user_id", "s_us", "f_us", "lon", "lat")
-      .select(col("user_id"), timestamp_micros(col("s_us")).as("started_at"),
-        timestamp_micros(col("f_us")).as("finished_at"), col("lon"), col("lat"))
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-colo-ckpt")
-
-    drain(input, rows, chunks) {
-      StreamingColocation.meetings(stream, cellMicroDeg, maxDurationMinutes, watermarkMinutes)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    val empty = spark.emptyDataset[(Long, Long, Long, Long)]
-      .toDF("user_a", "user_b", "m_s_us", "m_f_us")
-    val got = sink.result(spark, ckpt, empty)
-    if (got.columns.contains("m_started_at"))
-      got.select(col("user_a"), col("user_b"),
-        unix_micros(col("m_started_at")).as("m_s_us"),
-        unix_micros(col("m_finished_at")).as("m_f_us"))
-    else got
+    // stays at 4 partitions: A/B at 2/4/8 measured within noise of each
+    // other — this gate is bounded by per-batch pair compute and the
+    // per-batch output collect, not by state-store commit fan-out, so
+    // the keyed-state gates' 2-partition trim buys nothing here.
+    // Unlike the windowed-agg replays (whose late-DROP set moves with
+    // the no-data conf — see heavyHitters), the symmetric-hash INNER
+    // join emits eagerly on match and an in-order feed is never late,
+    // so the no-data micro-batch after each drained chunk only evicts
+    // state: output-neutral here, and skipping it halves the per-chunk
+    // commits of the priciest replay gate (isolated: the runner is a
+    // per-call clone; oracle-checked identical)
+    replay(spark, chunked(rows, chunks), partitions = 4, noDataBatches = false) { in =>
+      StreamingColocation.meetings(in.toDF("user_id", "s_us", "f_us", "lon", "lat")
+        .select(col("user_id"), timestamp_micros(col("s_us")).as("started_at"),
+          timestamp_micros(col("f_us")).as("finished_at"), col("lon"), col("lat")),
+        cellMicroDeg, maxDurationMinutes, watermarkMinutes)
+    }.select(col("user_a"), col("user_b"),
+      unix_micros(col("m_started_at")).as("m_s_us"),
+      unix_micros(col("m_finished_at")).as("m_f_us"))
   }
 
   /** Replay [[StreamingStaypoints.detect]] over a bounded positionfix
@@ -861,39 +656,20 @@ object Replay {
                  chunks: Int = 8): DataFrame = {
     val spark = pfs.sparkSession
     import spark.implicits._
-    implicit val sqlCtx: SQLContext = runnerSession(spark).sqlContext
-
     val rows = pfs
       .select(col("id").cast("long"), col("user_id").cast("long"), col("t_us").cast("long"),
         col("lon").cast("double"), col("lat").cast("double"))
       .as[(Long, Long, Long, Double, Double)].collect()
       .sortBy { case (i, _, t, _, _) => (t, i) }.toSeq
-
     val sentinels = rows.groupBy(_._2).map { case (u, rs) =>
       val last = rs.maxBy(r => (r._3, r._1))
       (Long.MaxValue, u, last._3, last._4 + 1.0, last._5)
     }.toSeq.sortBy(_._2)
-
-    val input = MemoryStream[(Long, Long, Long, Double, Double)]
-    val stream = input.toDF().toDF("id", "user_id", "t_us", "lon", "lat")
-      .select(col("id"), col("user_id"), timestamp_micros(col("t_us")).as("tracked_at"),
-        col("lon"), col("lat"))
-    val sink = new Collector
-    val ckpt = tmp("graft-replay-sp-ckpt")
-
-    drain(input, rows, chunks, tail = Seq(sentinels)) {
-      StreamingStaypoints.detect(stream, params)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: Dataset[StreamingStaypoints.Staypoint], _: Long) =>
-          sink.add(df); ()
-        }
-        .start()
-    }
-
-    sink.result(spark, ckpt,
-        spark.emptyDataset[StreamingStaypoints.Staypoint].toDF())
-      .select(col("user_id"), col("started_us").as("s_us"), col("finished_us").as("f_us"),
-        col("n_pfs").cast("long").as("n_pfs"))
+    replay(spark, chunked(rows, chunks) :+ sentinels) { in =>
+      StreamingStaypoints.detect(in.toDF("id", "user_id", "t_us", "lon", "lat")
+        .select(col("id"), col("user_id"), timestamp_micros(col("t_us")).as("tracked_at"),
+          col("lon"), col("lat")), params)
+    }.select(col("user_id"), col("started_us").as("s_us"), col("finished_us").as("f_us"),
+      col("n_pfs").cast("long").as("n_pfs"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.GeoFunctions.quantizedCell
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming co-location (meeting) detection: the live form of
@@ -39,12 +40,11 @@ object StreamingColocation {
   def meetings(intervals: DataFrame, cellMicroDeg: Long = 10000L,
                maxDurationMinutes: Int = 480, watermarkMinutes: Int = 60): DataFrame = {
     require(cellMicroDeg > 0 && maxDurationMinutes > 0, "cell and duration must be positive")
-    def cell(c: Column): Column =
-      floor(floor(c * 1e6 + lit(0.5)).cast("long").cast("double") / cellMicroDeg.toDouble).cast("long")
     def side(p: String): DataFrame = intervals
       .select(col("user_id").as(s"${p}_user"),
         col("started_at").as(s"${p}_s"), col("finished_at").as(s"${p}_f"),
-        cell(col("lon")).as(s"${p}_cx"), cell(col("lat")).as(s"${p}_cy"))
+        quantizedCell(col("lon"), cellMicroDeg).as(s"${p}_cx"),
+        quantizedCell(col("lat"), cellMicroDeg).as(s"${p}_cy"))
       .withWatermark(s"${p}_s", s"$watermarkMinutes minutes")
     // the join condition carries ONLY equi-keys and event-time ranges.
     // The pair-ordering rule (a_user < b_user) must genuinely stay OUT

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.EventOps
+import graft.operators.{EventOps, SpatialOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The replay harness (the driver-gate bridge for the streaming
@@ -159,5 +160,95 @@ class ReplaySpec extends SparkSpec {
         s"chunks=$chunks")
       assert(out.count() == 0L, s"chunks=$chunks")
     }
+  }
+
+  test("replayed colocation equals the batch meeting operator for every chunking") {
+    // realistic era base: near epoch 0 the join's derived state
+    // watermarks go negative and evict everything
+    val t0 = 1700000000000000L
+    // users 1/2 meet twice in one cell, user 3 overlaps in time in a far
+    // cell, user 4 shares the cell but not the time
+    val intervals = Seq(
+      (1L, t0, t0 + 30 * MIN, -122.4, 47.6),
+      (2L, t0 + 10 * MIN, t0 + 40 * MIN, -122.3999, 47.6001),
+      (3L, t0 + 5 * MIN, t0 + 35 * MIN, -100.0, 40.0),
+      (4L, t0 + 120 * MIN, t0 + 150 * MIN, -122.4, 47.6),
+      (2L, t0 + 200 * MIN, t0 + 230 * MIN, -122.4, 47.6),
+      (1L, t0 + 205 * MIN, t0 + 226 * MIN, -122.4, 47.6))
+      .toDF("user_id", "s_us", "f_us", "lon", "lat")
+    val expected = SpatialOps.colocationMeetings(intervals, cellMicroDeg = 10000L)
+      .select(col("user_a"), col("user_b"), col("m_s_us"), col("m_f_us"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(expected.size == 2, s"fixture must hold both meetings: $expected")
+    for (chunks <- Seq(1, 3, 8)) {
+      val got = Replay.colocation(intervals, cellMicroDeg = 10000L, chunks = chunks)
+        .as[(Long, Long, Long, Long)].collect()
+      assert(got.length == got.toSet.size, s"chunks=$chunks: duplicate rows")
+      assert(got.toSet == expected, s"chunks=$chunks")
+    }
+  }
+
+  test("every replay's empty result has the schema of a non-empty one") {
+    val t0 = 1700000000000000L
+    val events = Seq((0L, 1L, 5 * MIN), (1L, 1L, 50 * MIN)).toDF("event_id", "user_id", "t_us")
+    val docs = Seq(
+      (20L, "the quick brown fox jumps over the lazy dog"),
+      (21L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val langs = Seq(("en", 1L, 0L), ("en", 2L, MIN)).toDF("lang", "doc_id", "t_us")
+    val typed = Seq(("view", 1L, 0L), ("view", 2L, MIN)).toDF("event_type", "event_id", "t_us")
+    val points = Seq((10L, 1L, 0L)).toDF("label_id", "user_id", "t_us")
+    val spans = Seq((10L, 1L, 0L, 60 * MIN, 7L)).toDF("label_id", "user_id", "s_us", "f_us", "label")
+    val intervals = Seq(
+      (1L, t0, t0 + 30 * MIN, -122.4, 47.6), (2L, t0 + 10 * MIN, t0 + 40 * MIN, -122.4, 47.6))
+      .toDF("user_id", "s_us", "f_us", "lon", "lat")
+    val pfs = Seq((0L, 1L, 0L, -122.4, 47.6), (1L, 1L, 5 * MIN, -122.4, 47.6),
+        (2L, 1L, 10 * MIN, -122.4, 47.6))
+      .toDF("id", "user_id", "t_us", "lon", "lat")
+    // each replay over its fixture, or over the fixture's empty slice
+    val replays: Seq[(String, Boolean => DataFrame)] = {
+      def in(df: DataFrame, empty: Boolean) = if (empty) df.limit(0) else df
+      Seq(
+        "sessionize" -> (e => Replay.sessionize(in(events, e))),
+        "dedup" -> (e => Replay.dedup(in(docs, e))),
+        "dedupOutOfOrder" -> (e => Replay.dedupOutOfOrder(in(docs, e))),
+        "nearDup" -> (e => Replay.nearDup(in(docs, e))),
+        "nearDupVerified" -> (e => Replay.nearDupVerified(in(docs, e))),
+        "quota" -> (e => Replay.quota(in(langs, e), quotaN = 1L, windowMinutes = 60L)),
+        "quotaOutOfOrder" ->
+          (e => Replay.quotaOutOfOrder(in(langs, e), quotaN = 1L, windowMinutes = 60L)),
+        "heavyHitters" ->
+          (e => Replay.heavyHitters(in(typed, e), k = 1, windowMinutes = 60L, delayMinutes = 0L)),
+        "heavyHittersOutOfOrder" -> (e => Replay.heavyHittersOutOfOrder(in(typed, e), k = 1,
+          windowMinutes = 60L, delayMinutes = 0L)),
+        "asOf" -> (e => Replay.asOf(in(events, e), in(points, e))),
+        "intervalJoin" ->
+          (e => Replay.intervalJoin(in(events, e), in(spans, e), maxDurationMinutes = 120)),
+        "intervalJoin leftOuter" -> (e => Replay.intervalJoin(in(events, e), in(spans, e),
+          maxDurationMinutes = 120, leftOuter = true)),
+        "colocation" -> (e => Replay.colocation(in(intervals, e))),
+        "staypoints" -> (e => Replay.staypoints(in(pfs, e))))
+    }
+    for ((name, replay) <- replays) {
+      val full = replay(false)
+      val empty = replay(true)
+      assert(full.count() > 0L, s"$name: the fixture must emit rows")
+      assert(empty.count() == 0L, name)
+      // names, types and nullability
+      assert(empty.schema == full.schema, name)
+    }
+  }
+
+  test("a replay that throws leaves no checkpoint directory behind") {
+    def checkpoints(): Set[String] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir")).flatMap { dir =>
+        Option(new java.io.File(dir).listFiles()).toSeq.flatten
+          .filter(_.getName.startsWith("graft-replay-")).map(_.getPath)
+      }.toSet
+    val before = checkpoints()
+    val docs = Seq(("en", 1L, 0L)).toDF("lang", "doc_id", "t_us")
+    // the operator's quota > 0 check fires while the replay is running
+    intercept[IllegalArgumentException](Replay.quota(docs, quotaN = 0L, windowMinutes = 60L))
+    assert((checkpoints() -- before).isEmpty)
   }
 }
