@@ -136,8 +136,8 @@ object Pipeline {
 
   def trips(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "trips") {
-      persist(TripGenerator.generate(staypointsWithActivity(spark, sfDir), triplegs(spark, sfDir),
-        gapThresholdMinutes = 1e7, persist)._3)
+      TripGenerator.generate(staypointsWithActivity(spark, sfDir), triplegs(spark, sfDir),
+        gapThresholdMinutes = 1e7, persist)._3
     }
 
   /** One generate() call feeds both outputs (same pattern as spGen —

@@ -175,6 +175,12 @@ object GeoFunctions {
     */
   def dq(c: Column): Column = c.cast("decimal(38,0)")
 
+  /** Natural log quantized to a 1e-6 integer grid, floor-rounded: sums
+    * and differences of quantized logs are exact longs, so an external
+    * SQL engine computing `floor(ln(x) * 1e6)` reproduces them bit for bit.
+    */
+  def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
+
   /** Sign of cross(b−a, c−a): 1 counter-clockwise, −1 clockwise, 0 collinear. */
   def orientQ(ax: Long, ay: Long, bx: Long, by: Long, cx: Long, cy: Long): Int =
     java.lang.Long.signum((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))

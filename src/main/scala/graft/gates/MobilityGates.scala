@@ -51,10 +51,10 @@ private[graft] object MobilityGates {
        |       lon_sum_e6, lat_sum_e6, CAST(n_uniq AS BIGINT) AS n_uniq
        |FROM cent""".stripMargin
 
-  /** Tripleg generation as SQL: the window logic of TriplegGenerator
-    * (new-tripleg flags, cumulative segment ids, >= 2-fix filter) over
-    * fixes annotated with their containing kept staypoint. Extends the
-    * staypoint chain with `szok(user_id, seg, n, s_us, f_us)`.
+  /** Tripleg generation as SQL: TriplegGenerator's segmentation in
+    * window form (new-tripleg flags, cumulative segment ids, >= 2-fix
+    * filter) over fixes annotated with their containing kept staypoint.
+    * Extends the staypoint chain with `szok(user_id, seg, n, s_us, f_us)`.
     */
   private def triplegSegmentsCte(distM: Double, timeUs: Long): String =
     s"""${staypointSegmentsCte(distM, timeUs)},

@@ -2,6 +2,7 @@ package graft.gates
 
 import graft.Pipeline
 import graft.sources.EventsAdapter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Shared.{minhashPairsCte, minhashOracle, staypointSegmentsCte, withMaterializedCtes}
 
@@ -9,6 +10,26 @@ import Shared.{minhashPairsCte, minhashOracle, staypointSegmentsCte, withMateria
   * reproduce the batch semantics exactly, so its oracle is the batch oracle.
   */
 private[graft] object StreamingGates {
+
+  /** The sessionize replay over a user slice (user_id % 8 = 0). */
+  private def sessionizeSlice(s: SparkSession, dir: String, chunks: Int): DataFrame =
+    graft.streaming.Replay.sessionize(
+      EventsAdapter.events(s, dir).filter(pmod(col("user_id"), lit(8)) === 0),
+      gapMinutes = 30.0, chunks = chunks)
+
+  /** Batch sessionize over the same slice: the replay must reproduce the
+    * batch semantics exactly, at any chunk count, so this is the oracle of
+    * both sessionize gates.
+    */
+  private val sessionizeOracle =
+    """WITH t AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS t_us,
+      |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS pt
+      |  FROM events WHERE user_id % 8 = 0)
+      |SELECT event_id, user_id,
+      |  CAST(sum(CASE WHEN pt IS NULL OR t_us - pt > 1800000000 THEN 1 ELSE 0 END)
+      |    OVER (PARTITION BY user_id ORDER BY t_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
+      |FROM t""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     // deterministic micro-batch replay (graft.streaming.Replay) — the
@@ -26,25 +47,17 @@ private[graft] object StreamingGates {
       // chunk-count-invariant (ReplaySpec pins it; oracle re-checked) and
       // each extra micro-batch is a full planning+commit round — the
       // replay gates' cost unit (r15 verdict item 4). Cross-batch state
-      // transitions stay exercised by ReplaySpec's multi-chunk runs and
-      // by the out-of-order twins, whose chunk counts are oracle-coupled
-      // and untouched.
-      graft.streaming.Replay.sessionize(
-        EventsAdapter.events(s, dir).filter(pmod(col("user_id"), lit(8)) === 0),
-        gapMinutes = 30.0, chunks = 1)
-    } {
-      // streaming replay twins: the state-transition replay must reproduce
-      // the batch semantics exactly, so the oracles ARE the batch oracles
-      // (sessionize verbatim; staypoints = the segment CTE minus centroid)
-      """WITH t AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS t_us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS pt
-        |  FROM events WHERE user_id % 8 = 0)
-        |SELECT event_id, user_id,
-        |  CAST(sum(CASE WHEN pt IS NULL OR t_us - pt > 1800000000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY t_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        |FROM t""".stripMargin
-    },
+      // transitions stay exercised by streaming_sessionize_c3, by
+      // ReplaySpec's multi-chunk runs and by the out-of-order twins,
+      // whose chunk counts are oracle-coupled and untouched.
+      sessionizeSlice(s, dir, chunks = 1)
+    }(sessionizeOracle),
+    Gate("streaming_sessionize_c3") { (s, dir) =>
+      // the cross-batch canary: the same slice and oracle, fed in three
+      // micro-batches, so session state carries across batch boundaries
+      // on the corpus, not only in ReplaySpec's small frames
+      sessionizeSlice(s, dir, chunks = 3)
+    }(sessionizeOracle),
     Gate("streaming_dedup") { (s, dir) =>
       // keyed by text_hash → slice on the HASH residue so duplicate
       // groups survive intact (a doc_id slice would scatter them); mod 2

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.GeoFunctions.dq
+import graft.functions.GeoFunctions.{dq, lnq}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -470,7 +470,6 @@ object Ann {
   def intrinsicDim(probes: DataFrame, corpus: DataFrame,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    quantScale: Double = 1e6): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("_pq"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cq"))
     // native codegen kernel (plans/L2Expression) — same integer metric

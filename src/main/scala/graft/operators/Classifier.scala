@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.GeoFunctions.lnq
 import graft.functions.PortableHash
 
 /** Linear quality/topic classifier over hashed bag-of-words features —
@@ -283,7 +284,6 @@ object Classifier {
       .groupBy(col("_bucket"))
       .agg(sum(when(col("_side") === 0L, 1L).otherwise(0L)).cast("long").as("c_a"),
         sum(when(col("_side") === 1L, 1L).otherwise(0L)).cast("long").as("c_b")))
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val withTotals = byBucket
       .crossJoin(broadcast(byBucket.agg(
         sum(col("c_a")).cast("long").as("n_a"), sum(col("c_b")).cast("long").as("n_b"))))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
-import graft.functions.GeoFunctions.dq
+import graft.functions.GeoFunctions.{dq, lnq}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1045,7 +1045,6 @@ object CorpusOps {
     */
   def sourceJsDivergence(docs: DataFrame, topK: Int = 200,
                          groupCol: String = "source", textCol: String = "text"): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val words = docs.select(col(groupCol).as("_g"),
       explode(filter(split(col(textCol), " "), w => length(w) > 0)).as("_w"))
     val vocab = words.groupBy(col("_w")).agg(count(lit(1)).as("_cnt"))
@@ -1169,7 +1168,6 @@ object CorpusOps {
                      keepCols: Seq[String] = Seq("lang"),
                      salt: String = "graft", idCol: String = "doc_id"): DataFrame = {
     require(k > 0, "k must be positive")
-    def lnq(c: org.apache.spark.sql.Column) = floor(log(c.cast("double")) * 1e6).cast("long")
     val h = pmod(PortableHash.h60(concat(lit(salt), lit(":"), col(idCol).cast("string"))),
       lit(PortableHash.M))
     docs
@@ -1194,7 +1192,6 @@ object CorpusOps {
                             groupCol: String = "lang", salt: String = "graft",
                             idCol: String = "doc_id"): DataFrame = {
     require(kPerGroup > 0, "kPerGroup must be positive")
-    def lnq(c: Column) = floor(log(c.cast("double")) * 1e6).cast("long")
     val h = pmod(PortableHash.h60(concat(lit(salt), lit(":"), col(idCol).cast("string"))),
       lit(PortableHash.M))
     import org.apache.spark.sql.expressions.Window

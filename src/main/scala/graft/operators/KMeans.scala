@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GeoFunctions.lnq
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -241,7 +242,7 @@ object KMeans {
     * clusters (a pure projection — no shuffle beyond the per-cluster
     * count), and per cluster report the difference of smoothed
     * log-occupancies
-    *   drift_q = [flq(n_a+α) − flq(N_a+α·k)] − [flq(n_b+α) − flq(N_b+α·k)]
+    *   drift_q = [lnq(n_a+α) − lnq(N_a+α·k)] − [lnq(n_b+α) − lnq(N_b+α·k)]
     * under the [[TextAnalysis.lmScore]] quantized-ln contract (ln on
     * integers only, floored to 1e-6 units — every output is a long, so
     * an external engine reproduces it bit-for-bit). The table is dense
@@ -272,7 +273,6 @@ object KMeans {
                    alpha: Long, quantScale: Double): DataFrame = {
     require(alpha > 0, "clusterDrift: alpha must be positive")
     val k = model.centroids.length
-    def flq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     def counts(d: DataFrame, out: String) = assign(d, model, idCol, vecCol, quantScale)
       .groupBy(col("cluster_id")).agg(count(lit(1)).as(out))
 
@@ -286,8 +286,8 @@ object KMeans {
     val totals = joined.agg(sum(col("n_a")).as("_ta"), sum(col("n_b")).as("_tb"))
     joined.crossJoin(broadcast(totals))
       .withColumn("drift_q",
-        (flq(col("n_a") + lit(alpha)) - flq(col("_ta") + lit(alpha * k))) -
-          (flq(col("n_b") + lit(alpha)) - flq(col("_tb") + lit(alpha * k))))
+        (lnq(col("n_a") + lit(alpha)) - lnq(col("_ta") + lit(alpha * k))) -
+          (lnq(col("n_b") + lit(alpha)) - lnq(col("_tb") + lit(alpha * k))))
       .select(col("cluster_id"), col("n_a"), col("n_b"), col("drift_q"))
   }
 }

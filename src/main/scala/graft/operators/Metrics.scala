@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{GeoFunctions, TimeFunctions}
-import graft.functions.GeoFunctions.dq
+import graft.functions.GeoFunctions.{dq, lnq}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -404,7 +404,6 @@ object Metrics {
     */
   def odGravityFit(spLoc: DataFrame, locCol: String = "location_id"): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("started_at"), col("id"))
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val vis = spLoc.filter(col(locCol).isNotNull)
     val flows = vis
       .withColumn("_to", lead(col(locCol), 1).over(byUser))
@@ -880,7 +879,6 @@ object Metrics {
     * is ≤ 64 rows, so the final aggregation is trivially bounded.
     */
   private def bitBucketPowerFit(values: DataFrame): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     values
       .withColumn("_bucket", (length(bin(col("_m"))) - 1).cast("long"))
       .groupBy(col("_bucket")).agg(count(lit(1)).cast("long").as("_c"))
@@ -970,7 +968,6 @@ object Metrics {
                         locCol: String = "location_id",
                         seqCol: String = "k"): DataFrame = {
     require(sampleEvery >= 1, "sampleEvery must be positive")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val discoveries = sp.groupBy(col("user_id"), col(locCol))
       .agg(min(col(seqCol)).as("_fk"))
       .groupBy(expr(s"_fk div $sampleEvery").as("bucket"))
@@ -1117,7 +1114,6 @@ object Metrics {
   def locationEntropyQ(sp: DataFrame, maxSeqLen: Int = 120,
                        locCol: String = "location_id"): DataFrame = {
     require(maxSeqLen >= 1 && maxSeqLen <= 4096, "maxSeqLen must be in [1, 4096]")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val alphabet = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
     val win = sp.select(col("user_id"), col("k").cast("long").as("_k"),
         col(locCol).cast("long").as("_loc"))
@@ -1179,7 +1175,6 @@ object Metrics {
   def markovEntropyQ(sp: DataFrame, maxSeqLen: Int = 120,
                      locCol: String = "location_id"): DataFrame = {
     require(maxSeqLen >= 1 && maxSeqLen <= 4096, "maxSeqLen must be in [1, 4096]")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val win = sp.select(col("user_id"), col("k").cast("long").as("_k"),
         col(locCol).cast("long").as("_loc"))
       .filter(col("_k") < maxSeqLen)
@@ -1319,7 +1314,6 @@ object Metrics {
     require(grid >= 2 && grid <= 65536, "grid must be in [2, 65536]")
     val spark = sp.sparkSession
     import spark.implicits._
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val g = grid.toLong
     val card = locationEntropyQ(sp, maxSeqLen, locCol)
       .select(col("user_id"), col("n_visits"), col("n_locs"),

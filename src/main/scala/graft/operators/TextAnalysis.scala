@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
-import graft.functions.GeoFunctions.dq
+import graft.functions.GeoFunctions.{dq, lnq}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -993,8 +993,6 @@ object TextAnalysis {
   def lmScore(docs: DataFrame, train: DataFrame, textCol: String = "text",
               idCol: String = "doc_id", alpha: Long = 1L): DataFrame = {
     require(alpha > 0, "lmScore: alpha must be positive")
-    // floor(ln(n)·1e6) of a positive integer column, in longs.
-    def flq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
 
     val bgCounts = train
       .select(explode(ngrams(col(textCol), 2)).as("bg"))
@@ -1011,8 +1009,8 @@ object TextAnalysis {
       .join(ctxCounts, Seq("w1"), "left")
       .crossJoin(broadcast(vocab))
       .withColumn("contrib_q",
-        flq(coalesce(col("c12"), lit(0L)) + lit(alpha)) -
-          flq(coalesce(col("c1"), lit(0L)) + lit(alpha) * col("v")))
+        lnq(coalesce(col("c12"), lit(0L)) + lit(alpha)) -
+          lnq(coalesce(col("c1"), lit(0L)) + lit(alpha) * col("v")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("contrib_q")).as("logprob_q"))
 
@@ -1130,7 +1128,6 @@ object TextAnalysis {
     require(kPercent >= 1 && kPercent <= 100, s"kPercent must be in [1,100], got $kPercent")
     require(alpha > 0, "minKProb: alpha must be positive")
     import org.apache.spark.sql.expressions.Window
-    def flq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val bgCounts = train
       .select(explode(ngrams(col(textCol), 2)).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("c12"))
@@ -1145,8 +1142,8 @@ object TextAnalysis {
       .join(ctxCounts, Seq("w1"), "left")
       .crossJoin(broadcast(vocab))
       .withColumn("contrib_q",
-        flq(coalesce(col("c12"), lit(0L)) + lit(alpha)) -
-          flq(coalesce(col("c1"), lit(0L)) + lit(alpha) * col("v")))
+        lnq(coalesce(col("c12"), lit(0L)) + lit(alpha)) -
+          lnq(coalesce(col("c1"), lit(0L)) + lit(alpha) * col("v")))
     val lowk = contribs
       .withColumn("_n", count(lit(1)).over(Window.partitionBy("doc_id")))
       .withColumn("_rk", row_number().over(
@@ -1218,7 +1215,6 @@ object TextAnalysis {
   def vocabDrift(corpusA: DataFrame, corpusB: DataFrame, topK: Int = 50,
                  textCol: String = "text", alpha: Long = 1L): DataFrame = {
     require(alpha > 0, "vocabDrift: alpha must be positive")
-    def flq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     def counts(d: DataFrame, out: String) = d
       .select(explode(split(col(textCol), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as(out))
@@ -1232,8 +1228,8 @@ object TextAnalysis {
       count(lit(1)).as("v"))
     joined.crossJoin(broadcast(totals))
       .withColumn("logratio_q",
-        (flq(col("n_a") + lit(alpha)) - flq(col("tot_a") + lit(alpha) * col("v"))) -
-          (flq(col("n_b") + lit(alpha)) - flq(col("tot_b") + lit(alpha) * col("v"))))
+        (lnq(col("n_a") + lit(alpha)) - lnq(col("tot_a") + lit(alpha) * col("v"))) -
+          (lnq(col("n_b") + lit(alpha)) - lnq(col("tot_b") + lit(alpha) * col("v"))))
       .orderBy(abs(col("logratio_q")).desc, col("word"))
       .limit(topK)
       .select(col("word"), col("n_a"), col("n_b"), col("logratio_q"))
@@ -1250,7 +1246,7 @@ object TextAnalysis {
     *
     * Same engine-stability contract as [[lmScore]]/[[vocabDrift]]: ln
     * runs on INTEGER counts only and is floored to 1e-6 units, so
-    *   w_q(b) = [flq(c_t+α) − flq(N_t+α·dim)] − [flq(c_r+α) − flq(N_r+α·dim)]
+    *   w_q(b) = [lnq(c_t+α) − lnq(N_t+α·dim)] − [lnq(c_r+α) − lnq(N_r+α·dim)]
     * is a pure long per bucket and every downstream sum is bit-stable
     * across engines and aggregation orders.
     *
@@ -1268,7 +1264,6 @@ object TextAnalysis {
                         textCol: String = "text", alpha: Long = 1L): DataFrame = {
     require(dim > 0, "importanceWeights: dim must be positive")
     require(alpha > 0, "importanceWeights: alpha must be positive")
-    def flq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     def bucketCounts(d: DataFrame, out: String) = d
       .select(explode(ngrams(col(textCol), 2)).as("bg"))
       .select(pmod(graft.functions.PortableHash.h60(col("bg")), lit(dim.toLong)).as("bucket"))
@@ -1285,8 +1280,8 @@ object TextAnalysis {
       sum(col("n_target")).as("_nt"), sum(col("n_raw")).as("_nr"))
     joined.crossJoin(broadcast(totals))
       .withColumn("w_q",
-        (flq(col("n_target") + lit(alpha)) - flq(col("_nt") + lit(alpha * dim))) -
-          (flq(col("n_raw") + lit(alpha)) - flq(col("_nr") + lit(alpha * dim))))
+        (lnq(col("n_target") + lit(alpha)) - lnq(col("_nt") + lit(alpha * dim))) -
+          (lnq(col("n_raw") + lit(alpha)) - lnq(col("_nr") + lit(alpha * dim))))
       .select(col("bucket"), col("n_target"), col("n_raw"), col("w_q"))
   }
 
@@ -1445,7 +1440,6 @@ object TextAnalysis {
     */
   def charEntropy(docs: DataFrame, maxChars: Int = 200,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val chars = split(substring(col(textCol), 1, maxChars), "")
     val counts = transform(array_distinct(chars),
       c => size(filter(chars, x => x === c)).cast("long"))
@@ -1479,7 +1473,6 @@ object TextAnalysis {
     * rows — driver-sized regardless of corpus scale.
     */
   def zipfFit(docs: DataFrame, topK: Int = 50, textCol: String = "text"): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     buildVocab(docs, topK, textCol)
       .select(lnq(col("rank")).as("_x"), lnq(col("n")).as("_y"))
       .agg(
@@ -1512,7 +1505,6 @@ object TextAnalysis {
                idCol: String = "doc_id"): DataFrame = {
     require(sampleEvery >= 1, "sampleEvery must be positive")
     import org.apache.spark.sql.expressions.Window
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val newVocab = docs
       .select(col(idCol).as("doc_id"), explode(split(col(textCol), " ")).as("_w"))
       .groupBy(col("_w")).agg(min("doc_id").as("_fd"))
@@ -1797,7 +1789,6 @@ object TextAnalysis {
     */
   def wordEntropy(docs: DataFrame, groupCol: String = "source",
                   textCol: String = "text"): DataFrame = {
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     docs
       .select(col(groupCol), explode(split(col(textCol), " ")).as("_w"))
       .filter(length(col("_w")) > 0)
@@ -1897,7 +1888,6 @@ object TextAnalysis {
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topK > 0, "tfidfTopTerms: topK must be positive")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val tf = docs
       .select(col(idCol).as("doc_id"), explode(split(col(textCol), " ")).as("_w"))
       .filter(length(col("_w")) > 0)
@@ -1938,7 +1928,6 @@ object TextAnalysis {
                       topK: Int = 50, textCol: String = "text",
                       share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(topK > 0, "pmiCollocations: topK must be positive")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val toks = docs.select(
       filter(split(col(textCol), " "), w => length(w) > 0).as("_ws"))
     val uni = share(toks
@@ -1996,7 +1985,6 @@ object TextAnalysis {
               idCol: String = "doc_id", textCol: String = "text",
               share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(holdoutMod >= 2, "knScore: holdoutMod must leave both slices nonempty")
-    def lnq(c: Column): Column = floor(log(c.cast("double")) * 1e6).cast("long")
     val toks = docs.select(col(idCol), col(groupCol),
       filter(split(col(textCol), " "), w => length(w) > 0).as("_ws"))
     val n1 = greatest(size(col("_ws")) - 1, lit(0))

@@ -2,10 +2,14 @@ package graft.operators
 
 import graft.model.Tables
 import graft.util.Ids
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
+
+import scala.collection.mutable
 
 /** Trip generation: aggregate staypoints + triplegs into trips — movement
   * between two activity staypoints, split at temporal gaps.
@@ -14,8 +18,11 @@ import org.apache.spark.sql.types._
   * The reference interleaves both tables, flags trip starts with shift(),
   * assigns ids with arange+ffill, then re-sorts a union with synthetic
   * "gap"/"user_change" filler rows to pick origin/destination via shift.
-  * All of that maps onto per-user window functions here; the only
-  * shuffles are on `user_id` and on the dense id joins.
+  * Here all of that is one per-user scan over the interleaved stream,
+  * the same shape as [[StaypointGenerator]]: hash-partition by `user_id`,
+  * sort each partition by (user_id, started_at, staypoint before tripleg,
+  * id), and stream a `mapPartitions` pass. Only each tripleg's first and
+  * last point travel through the shuffle.
   *
   * Semantics:
   *  - a new trip starts at a user change, after the last staypoint of an
@@ -28,11 +35,18 @@ import org.apache.spark.sql.types._
   *  - trip geometry is (origin point, destination point), falling back to
   *    the first/last coordinate of the first/last member tripleg when the
   *    corresponding activity staypoint is unknown.
+  * `is_activity` follows SQL three-valued logic: a null flag is neither a
+  * member nor an activity, and an activity followed by one does not end
+  * its run. Staypoint ids are unique, as the joins back to the inputs
+  * require.
   */
 object TripGenerator {
 
   /** @param sp staypoints with `is_activity` (see Labelling.createActivityFlag)
     * @param tpls triplegs
+    * @param share applied to the scan output (which the id sort samples
+    *        and then sorts) and to the id-assigned trip table (which all
+    *        three outputs read) — pass a persist so the scan runs once.
     * @return (sp + [trip_id, prev_trip_id, next_trip_id], tpls + [trip_id], trips)
     */
   def generate(sp: DataFrame, tpls: DataFrame, gapThresholdMinutes: Double = 15.0,
@@ -43,131 +57,28 @@ object TripGenerator {
     require(sp.columns.contains("is_activity"),
       "staypoints need the column 'is_activity' to be able to generate trips")
 
-    val gapUs = (gapThresholdMinutes * 60e6).toLong
+    val tripsNumbered = Ids.withSequentialId(share(scan(sp, tpls, gapThresholdMinutes)),
+      "trip_id", col("user_id"), col("trip_key"))
+    val trips = share(tripsNumbered.select(
+      // the trips schema declares a nullable id
+      ColumnShim.column(KnownNullable(ColumnShim.expression(col("trip_id")))).as("id"),
+      col("user_id"),
+      timestamp_micros(col("started_us")).as("started_at"),
+      timestamp_micros(col("finished_us")).as("finished_at"),
+      col("origin_staypoint_id"), col("destination_staypoint_id"), col("geom"),
+      col("sp_ids").as("_sp_ids"), col("tpl_ids").as("_tpl_ids")))
 
-    // --- interleaved staypoint/tripleg stream (reference _concat_staypoints_triplegs)
-    val spPart = sp.select(
-      col("id").as("sp_tpls_id"), col("user_id"), col("started_at"), col("finished_at"),
-      col("is_activity"), lit("staypoint").as("type"),
-      struct(col("lon"), col("lat")).as("pt"),
-      lit(null).cast(ArrayType(Tables.point)).as("points"))
-    val tplPart = tpls.select(
-      col("id").as("sp_tpls_id"), col("user_id"), col("started_at"), col("finished_at"),
-      lit(false).as("is_activity"), lit("tripleg").as("type"),
-      lit(null).cast(Tables.point).as("pt"),
-      col("points"))
-    val spTpls = spPart.unionByName(tplPart)
-
-    // staypoints sort before triplegs on timestamp ties (concat order +
-    // stable sort in the reference)
-    val ord = when(col("type") === "staypoint", 0).otherwise(1)
-    val w = Window.partitionBy("user_id").orderBy(col("started_at"), ord, col("sp_tpls_id"))
-
-    val nextIsActivity = lead(col("is_activity"), 1, false).over(w)
-    val prevFin = lag(unix_micros(col("finished_at")), 1).over(w)
-
-    // flagged is read four ways (trip members, activity rows, gap rows,
-    // user-change rows) — share it so the interleave + window chain runs
-    // once across the union instead of once per branch.
-    val flagged = share(spTpls
-      .withColumn("_new_user", lag(col("sp_tpls_id"), 1).over(w).isNull)
-      .withColumn("_last_activity", col("is_activity") && !nextIsActivity)
-      // gap on this row: next record starts > threshold after this one finishes
-      .withColumn("_gap_after",
-        coalesce(lead(unix_micros(col("started_at")), 1).over(w) - unix_micros(col("finished_at")) > gapUs, lit(false)))
-      .withColumn("_gap_before",
-        coalesce(unix_micros(col("started_at")) - prevFin > gapUs, lit(false)))
-      .withColumn("_new_trip", col("_new_user") || col("_last_activity") || col("_gap_before"))
-      .withColumn("_temp_trip", sum(col("_new_trip").cast(LongType)).over(w)))
-
-    // --- trip assembly over non-activity members
-    val members = flagged.filter(!col("is_activity"))
-    val grouped = members
-      .groupBy(col("user_id"), col("_temp_trip"))
-      .agg(
-        min(col("started_at")).as("started_at"),
-        max(col("finished_at")).as("finished_at"),
-        array_sort(collect_list(struct(
-          col("started_at").as("s"), col("type").as("t"), col("sp_tpls_id").as("i")))).as("_members"))
-      .withColumn("_sp_ids", expr("transform(filter(_members, m -> m.t = 'staypoint'), m -> m.i)"))
-      .withColumn("_tpl_ids", expr("transform(filter(_members, m -> m.t = 'tripleg'), m -> m.i)"))
-      .filter(size(col("_tpl_ids")) > 0) // trips need >= 1 tripleg
-      .drop("_members")
-
-    val tripsNumbered = Ids.withSequentialId(share(grouped), "trip_id", col("user_id"), col("_temp_trip"))
-
-    // --- union with activity staypoints + synthetic gap / user-change rows
-    // (the reference's buffer rows that stop origin/destination ids from
-    // leaking across gaps and users, triplegs.py:178-198)
-    val tripRows = tripsNumbered.select(
-      col("user_id"), col("started_at"), col("finished_at"),
-      col("trip_id"), col("_sp_ids"), col("_tpl_ids"),
-      lit(null).cast(LongType).as("sp_tpls_id"), lit(null).cast(Tables.point).as("pt"),
-      lit("trip").as("type"))
-    val actRows = flagged.filter(col("is_activity")).select(
-      col("user_id"), col("started_at"), col("finished_at"),
-      lit(null).cast(LongType).as("trip_id"),
-      lit(null).cast(ArrayType(LongType)).as("_sp_ids"), lit(null).cast(ArrayType(LongType)).as("_tpl_ids"),
-      col("sp_tpls_id"), col("pt"), lit("staypoint").as("type"))
-    val gapRows = flagged.filter(col("_gap_after")).select(
-      col("user_id"), timestamp_micros(unix_micros(col("finished_at")) + gapUs / 2).as("started_at"),
-      lit(null).cast(TimestampType).as("finished_at"),
-      lit(null).cast(LongType).as("trip_id"),
-      lit(null).cast(ArrayType(LongType)).as("_sp_ids"), lit(null).cast(ArrayType(LongType)).as("_tpl_ids"),
-      lit(null).cast(LongType).as("sp_tpls_id"), lit(null).cast(Tables.point).as("pt"),
-      lit("gap").as("type"))
-    val userChangeRows = flagged.filter(col("_new_user")).select(
-      col("user_id"), timestamp_micros(unix_micros(col("started_at")) - gapUs / 2).as("started_at"),
-      lit(null).cast(TimestampType).as("finished_at"),
-      lit(null).cast(LongType).as("trip_id"),
-      lit(null).cast(ArrayType(LongType)).as("_sp_ids"), lit(null).cast(ArrayType(LongType)).as("_tpl_ids"),
-      lit(null).cast(LongType).as("sp_tpls_id"), lit(null).cast(Tables.point).as("pt"),
-      lit("user_change").as("type"))
-
-    val withAct = tripRows.unionByName(actRows).unionByName(gapRows).unionByName(userChangeRows)
-
-    val ord2 = when(col("type") === "trip", 0).when(col("type") === "staypoint", 1)
-      .when(col("type") === "gap", 2).otherwise(3)
-    val w2 = Window.partitionBy("user_id").orderBy(col("started_at"), ord2, col("sp_tpls_id"))
-
-    val shifted = share(withAct
-      .withColumn("origin_staypoint_id", lag(col("sp_tpls_id"), 1).over(w2))
-      .withColumn("destination_staypoint_id", lead(col("sp_tpls_id"), 1).over(w2))
-      .withColumn("_origin_pt", lag(col("pt"), 1).over(w2))
-      .withColumn("_dest_pt", lead(col("pt"), 1).over(w2))
-      .withColumn("prev_trip_id", lag(col("trip_id"), 1).over(w2))
-      .withColumn("next_trip_id", lead(col("trip_id"), 1).over(w2)))
-
-    // --- trip geometry, with tripleg-endpoint fallback
-    val tplEnds = tpls.select(
-      col("id").as("_e_id"),
-      element_at(col("points"), 1).as("_first_pt"),
-      element_at(col("points"), -1).as("_last_pt"))
-
-    val tripsShifted = shifted.filter(col("type") === "trip")
-    // trips feeds the output and both membership explodes
-    val trips = share(tripsShifted
-      .join(tplEnds.as("fe"), element_at(col("_tpl_ids"), 1) === col("fe._e_id"), "left")
-      .join(tplEnds.as("le"), element_at(col("_tpl_ids"), -1) === col("le._e_id"), "left")
-      .select(
-        col("trip_id").as("id"), col("user_id"), col("started_at"), col("finished_at"),
-        col("origin_staypoint_id"), col("destination_staypoint_id"),
-        struct(
-          when(col("origin_staypoint_id").isNull, col("fe._first_pt")).otherwise(col("_origin_pt")).as("origin"),
-          when(col("destination_staypoint_id").isNull, col("le._last_pt")).otherwise(col("_dest_pt")).as("destination")
-        ).as("geom"),
-        col("_sp_ids"), col("_tpl_ids")))
-
-    // --- propagate ids back to the inputs
-    val spMembership = trips.select(col("id").as("_trip_id"), explode(col("_sp_ids")).as("_m_id"))
-    val actInfo = shifted.filter(col("type") === "staypoint")
-      .select(col("sp_tpls_id").as("_a_id"), col("prev_trip_id"), col("next_trip_id"))
+    // --- propagate ids back to the inputs. An activity staypoint's
+    // previous trip is the trip it is the destination of; its next trip
+    // the one it is the origin of.
+    val spMembership = trips.select(col("id").as("trip_id"), explode(col("_sp_ids")).as("_m_id"))
+    val prevTrip = trips.select(col("destination_staypoint_id").as("_p_id"), col("id").as("prev_trip_id"))
+    val nextTrip = trips.select(col("origin_staypoint_id").as("_n_id"), col("id").as("next_trip_id"))
     val spOut = sp
       .join(spMembership, sp("id") === spMembership("_m_id"), "left")
-      .withColumnRenamed("_trip_id", "trip_id")
-      .drop("_m_id")
-      .join(actInfo, sp("id") === actInfo("_a_id"), "left")
-      .drop("_a_id")
+      .join(prevTrip, sp("id") === prevTrip("_p_id"), "left")
+      .join(nextTrip, sp("id") === nextTrip("_n_id"), "left")
+      .drop("_m_id", "_p_id", "_n_id")
 
     val tplMembership = trips.select(col("id").as("trip_id"), explode(col("_tpl_ids")).as("_m_id"))
     val tplsOut = tpls
@@ -175,5 +86,195 @@ object TripGenerator {
       .drop("_m_id")
 
     (spOut, tplsOut, trips.drop("_sp_ids", "_tpl_ids"))
+  }
+
+  /** The scan kernel: one row per trip with (user_id, trip_key,
+    * started_us, finished_us, origin/destination_staypoint_id, geom,
+    * sp_ids, tpl_ids), before ids. `trip_key` rises with time per user.
+    */
+  private[graft] def scan(sp: DataFrame, tpls: DataFrame, gapThresholdMinutes: Double): DataFrame = {
+    val gapUs = (gapThresholdMinutes * 60e6).toLong
+    val noPoint = lit(null).cast(Tables.point)
+    val spPart = sp.select(
+      col("user_id"), unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
+      lit(0).as("kind"), col("id").cast(LongType).as("rid"), col("is_activity").as("act"),
+      struct(col("lon").cast(DoubleType).as("lon"), col("lat").cast(DoubleType).as("lat")).as("pt"),
+      noPoint.as("first_pt"), noPoint.as("last_pt"))
+    val tplPart = tpls.select(
+      col("user_id"), unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
+      lit(1).as("kind"), col("id").cast(LongType).as("rid"), lit(false).as("act"), noPoint.as("pt"),
+      element_at(col("points"), 1).cast(Tables.point).as("first_pt"),
+      element_at(col("points"), -1).cast(Tables.point).as("last_pt"))
+    val stream = spPart.unionByName(tplPart)
+
+    // the trips schema declares nullable started_at/finished_at
+    val ids = ArrayType(LongType, containsNull = false)
+    val schema = StructType(Seq(
+      stream.schema("user_id"),
+      StructField("trip_key", LongType, nullable = false),
+      StructField("started_us", LongType),
+      StructField("finished_us", LongType),
+      StructField("origin_staypoint_id", LongType),
+      StructField("destination_staypoint_id", LongType),
+      StructField("geom", StructType(Seq(
+        StructField("origin", Tables.point), StructField("destination", Tables.point))), nullable = false),
+      StructField("sp_ids", ids, nullable = false),
+      StructField("tpl_ids", ids, nullable = false)))
+
+    stream
+      .repartition(col("user_id"))
+      .sortWithinPartitions(col("user_id"), col("s_us"), col("kind"), col("rid"))
+      .mapPartitions(rows => new TripScan(rows, gapUs))(RowEncoder.encoderFor(schema))
+      .toDF()
+  }
+
+  /** A trip being built: members in stream order, the latest finish, and
+    * the endpoints of its first and last tripleg.
+    */
+  private final class OpenTrip(val key: Long, val startUs: Long) {
+    var finishUs = Long.MinValue
+    val spIds = mutable.ArrayBuffer.empty[Long]
+    val tplIds = mutable.ArrayBuffer.empty[Long]
+    var firstPt: Row = null
+    var lastPt: Row = null
+    var closed = false
+    var before: Mark = null
+  }
+
+  /** One row of the origin/destination order: a trip (ord 0, at its
+    * first member's start), an activity staypoint (1), a gap marker (2,
+    * halfway into the gap) or the user-change marker (3, half a gap
+    * before the user's first record). Ordered by (at, ord, id).
+    */
+  private final class Mark(val at: Long, val ord: Int, val id: Long, val pt: Row, val trip: OpenTrip)
+
+  private def compare(a: Mark, b: Mark): Int = {
+    val c = java.lang.Long.compare(a.at, b.at)
+    if (c != 0) c
+    else if (a.ord != b.ord) Integer.compare(a.ord, b.ord)
+    else java.lang.Long.compare(a.id, b.id)
+  }
+
+  /** Streaming scan over a (user_id, s_us, kind, rid)-sorted partition of
+    * (user_id, s_us, f_us, kind, rid, act, pt, first_pt, last_pt).
+    *
+    * Trip membership follows the record order directly. Origin and
+    * destination are the neighbours of a trip in the mark order, which
+    * differs from the record order at ties (a trip sorts before an
+    * activity that starts at the same instant) and wherever a gap marker
+    * falls. Marks wait in a small sorted buffer until no later record can
+    * sort before them — every later mark is at or after the current
+    * record's start, since records start in order and finish after they
+    * start — and until the open trip, which may still be dropped, has
+    * closed. A mark that would sort before one already passed (a record
+    * finishing before it starts, or a negative gap threshold) is an
+    * error, not a silent reorder.
+    */
+  private final class TripScan(rows: Iterator[Row], gapUs: Long) extends Iterator[Row] {
+    private val out = mutable.Queue.empty[Row]
+    private var hasUser = false
+    private var user: Any = null
+    private var prevFinish = 0L
+    private var prevAct = 0 // is_activity of the previous record: 1 true, 0 false, -1 null
+    private var key = 0L
+    private var open: OpenTrip = null
+    private val pending = mutable.ArrayDeque.empty[Mark]
+    private var passed: Mark = null   // the last mark released for this user
+    private var waiting: OpenTrip = null // a released trip waiting for the mark after it
+
+    private def insert(m: Mark): Unit = {
+      if (passed != null && compare(m, passed) < 0)
+        throw new IllegalStateException(
+          s"trip stream out of order for user $user: a record finishes before it starts, " +
+            "or the gap threshold is negative")
+      var i = pending.length
+      while (i > 0 && compare(pending(i - 1), m) > 0) i -= 1
+      pending.insert(i, m)
+    }
+
+    private def closeTrip(): Unit = if (open != null) {
+      open.closed = true
+      if (open.tplIds.isEmpty) pending.remove(pending.indexWhere(_.trip eq open))
+      open = null
+    }
+
+    private def newTrip(): Unit = { closeTrip(); key += 1 }
+
+    /** Pass marks before `bound` (all when `bound` is None), stopping at
+      * the open trip's mark.
+      */
+    private def release(bound: Option[Long]): Unit =
+      while (pending.nonEmpty && bound.forall(pending.head.at < _) &&
+             (pending.head.trip == null || pending.head.trip.closed)) {
+        val m = pending.removeHead()
+        if (waiting != null) { emit(waiting, m); waiting = null }
+        if (m.trip != null) { m.trip.before = passed; waiting = m.trip }
+        passed = m
+      }
+
+    private def emit(t: OpenTrip, after: Mark): Unit = {
+      val origin: Any = if (t.before != null && t.before.ord == 1) t.before.id else null
+      val dest: Any = if (after != null && after.ord == 1) after.id else null
+      val originPt = if (origin == null) t.firstPt else t.before.pt
+      val destPt = if (dest == null) t.lastPt else after.pt
+      out += Row(user, t.key, t.startUs, t.finishUs, origin, dest, Row(originPt, destPt),
+        t.spIds.toArray, t.tplIds.toArray)
+    }
+
+    private def finishUser(): Unit = {
+      closeTrip()
+      release(None)
+      if (waiting != null) { emit(waiting, null); waiting = null }
+      passed = null; key = 0L
+    }
+
+    private def process(r: Row): Unit = {
+      if (r.isNullAt(1) || r.isNullAt(2) || r.isNullAt(4))
+        throw new IllegalArgumentException("staypoints and triplegs need non-null id, started_at and finished_at")
+      val u = r.get(0)
+      val s = r.getLong(1)
+      val f = r.getLong(2)
+      val id = r.getLong(4)
+      val act = if (r.isNullAt(5)) -1 else if (r.getBoolean(5)) 1 else 0
+      if (!hasUser || u != user) {
+        if (hasUser) finishUser()
+        hasUser = true; user = u
+        newTrip()
+        insert(new Mark(s - gapUs / 2, 3, 0L, null, null))
+      } else {
+        if (prevAct == 1 && act == 0) newTrip() // the previous record ended an activity run
+        if (s - prevFinish > gapUs) {
+          insert(new Mark(prevFinish + gapUs / 2, 2, 0L, null, null))
+          newTrip()
+        }
+      }
+      release(Some(s))
+      if (act == 1) insert(new Mark(s, 1, id, r.getStruct(6), null))
+      else if (act == 0) {
+        if (open == null) {
+          open = new OpenTrip(key, s)
+          insert(new Mark(s, 0, 0L, null, open))
+        }
+        open.finishUs = math.max(open.finishUs, f)
+        if (r.getInt(3) == 0) open.spIds += id
+        else {
+          if (open.tplIds.isEmpty) open.firstPt = r.getStruct(7)
+          open.tplIds += id
+          open.lastPt = r.getStruct(8)
+        }
+      }
+      prevFinish = f; prevAct = act
+    }
+
+    override def hasNext: Boolean = {
+      while (out.isEmpty && rows.hasNext) process(rows.next())
+      if (out.isEmpty && hasUser) { finishUser(); hasUser = false }
+      out.nonEmpty
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      out.dequeue()
+    }
   }
 }

@@ -2,41 +2,45 @@ package graft.operators
 
 import graft.model.Tables
 import graft.util.Ids
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Tripleg generation ("between_staypoints"): all positionfixes between two
   * staypoints form one tripleg, split further at temporal gaps.
   *
   * Reference: trackintel/preprocessing/positionfixes.py:200-458. The
   * reference builds boolean "new tripleg" flags with shift() and then does
-  * an imperative arange/ffill id pass; here the whole operator is four
-  * window expressions over `Window.partitionBy(user_id)` plus one
-  * aggregation — no sequential scan, no driver loop, fully
-  * whole-stage-codegen'd, and every shuffle is on `user_id` (or the
-  * tripleg key), so it composes with the staypoint shuffle.
+  * an imperative arange/ffill id pass. Here that chain is one per-user
+  * scan, the same shape as [[StaypointGenerator]]: hash-partition by
+  * `user_id`, sort each partition by (user_id, tracked_at, id), and
+  * stream a `mapPartitions` pass whose only state is the open segment.
+  * One shuffle by user, one linear pass, no window and no aggregate.
   *
   * Semantics reproduced exactly:
   *  - new tripleg starts at: first non-staypoint fix of a user; a fix
   *    following a temporal gap > gapThreshold; the first fix after a
-  *    staypoint (staypoint-id transition);
+  *    staypoint (a change of `staypoint_id + 1 fillna 0`, the reference's
+  *    +1 trick, positionfixes.py:319-321);
   *  - fixes inside staypoints never belong to triplegs;
   *  - candidate triplegs with < 2 fixes are dropped (their fixes keep a
   *    null tripleg_id);
   *  - tripleg geometry is the time-ordered LineString of its fixes,
   *    started_at/finished_at are min/max tracked_at;
   *  - ids are dense int64 in (user, time) order.
+  * Fix ids are unique, as the join back to the fixes requires.
   */
 object TriplegGenerator {
 
   /** @param pfs positionfixes carrying a nullable `staypoint_id` column
     * @param share applied to the intermediates both outputs read (the
-    *        flagged fix stream, the grouped candidates, the id-assigned
-    *        tripleg table) — pass a persist so the window chain runs once
-    *        across both outputs instead of once per output plus once for
-    *        the id sort's range sampling.
+    *        scan output, which the id sort samples and then sorts, and the
+    *        id-assigned tripleg table) — pass a persist so the scan runs
+    *        once across both outputs.
     * @return (pfs with nullable `tripleg_id`, triplegs table)
     */
   def generate(pfs: DataFrame, gapThresholdMinutes: Double = 15.0,
@@ -44,56 +48,99 @@ object TriplegGenerator {
     Tables.positionfixes.validate(pfs)
     require(pfs.columns.contains("staypoint_id"), "positionfixes need a staypoint_id column; run generateStaypoints first")
 
+    val segs = share(segments(pfs, gapThresholdMinutes))
+    val tpls = share(Ids.withSequentialId(segs, "id", col("user_id"), col("started_us"))
+      .select(col("id"), col("user_id"),
+        timestamp_micros(col("started_us")).as("started_at"),
+        timestamp_micros(col("finished_us")).as("finished_at"),
+        col("points"), col("pfs_ids")))
+
+    // Join tripleg ids back to the member fixes via the exploded id list.
+    val membership = tpls.select(col("id").as("tripleg_id"), explode(col("pfs_ids")).as("_pf_id"))
+    val pfsOut = pfs
+      .join(membership, pfs("id") === membership("_pf_id"), "left")
+      .drop("_pf_id")
+
+    (pfsOut, tpls.drop("pfs_ids"))
+  }
+
+  /** The scan kernel: one row per tripleg (>= 2 fixes) with
+    * (user_id, started_us, finished_us, points, pfs_ids), before ids.
+    */
+  private[graft] def segments(pfs: DataFrame, gapThresholdMinutes: Double): DataFrame = {
     val gapUs = (gapThresholdMinutes * 60e6).toLong
-    val w = Window.partitionBy("user_id").orderBy("tracked_at", "id")
+    val f = pfs.schema
+    // the triplegs schema declares nullable started_at/finished_at
+    val schema = StructType(Seq(
+      f("user_id"),
+      StructField("started_us", LongType),
+      StructField("finished_us", LongType),
+      StructField("points", ArrayType(StructType(Seq(
+        StructField("lon", f("lon").dataType, f("lon").nullable),
+        StructField("lat", f("lat").dataType, f("lat").nullable))), containsNull = false), nullable = false),
+      StructField("pfs_ids", ArrayType(f("id").dataType, containsNull = false), nullable = false)))
 
-    val tUs = unix_micros(col("tracked_at"))
-    // _stp_id = staypoint_id + 1 fillna 0, transition detected null-safely
-    // (the reference's +1 trick, positionfixes.py:319-321).
-    val stpKey = coalesce(col("staypoint_id") + 1, lit(0L))
+    pfs.select(col("user_id"), unix_micros(col("tracked_at")).as("t_us"), col("id"),
+        col("staypoint_id"), col("lon"), col("lat"))
+      .repartition(col("user_id"))
+      .sortWithinPartitions(col("user_id"), col("t_us"), col("id"))
+      .mapPartitions(rows => new SegmentScan(rows, gapUs))(RowEncoder.encoderFor(schema))
+      .toDF()
+  }
 
-    val flagged = share(pfs
-      .withColumn("_t_us", tUs)
-      .withColumn("_prev_t", lag("_t_us", 1).over(w))
-      .withColumn("_prev_stp", lag(stpKey, 1).over(w))
-      .withColumn("_cond_new_user", col("_prev_t").isNull)
-      .withColumn("_cond_gap", col("_t_us") - col("_prev_t") > gapUs)
-      .withColumn("_cond_stp", !(stpKey <=> col("_prev_stp")))
-      .withColumn("_starts",
-        (col("_cond_new_user") || col("_cond_gap") || col("_cond_stp")) && col("staypoint_id").isNull)
-      .withColumn("_seg", sum(col("_starts").cast(LongType)).over(w)))
+  /** Streaming scan over a (user_id, t_us, id)-sorted partition of
+    * (user_id, t_us, id, staypoint_id, lon, lat). A segment opens at a
+    * non-staypoint fix that starts a user, follows a gap, or follows a
+    * staypoint-key change; it closes at the next staypoint fix, start or
+    * user, and is emitted when it holds >= 2 fixes. At most one segment
+    * closes per input fix.
+    */
+  private final class SegmentScan(rows: Iterator[Row], gapUs: Long) extends Iterator[Row] {
+    private var ready: Row = null
+    private var seen = false
+    private var prevUser: Any = null
+    private var prevT = 0L
+    private var prevKey = 0L
 
-    // Candidate tripleg fixes; (user_id, _seg) is the tripleg key.
-    val tplPfs = flagged.filter(col("staypoint_id").isNull && col("_seg") >= 1)
+    private var segUser: Any = null
+    private var segStart = 0L
+    private var segEnd = 0L
+    private val points = ArrayBuffer.empty[Row]
+    private val ids = ArrayBuffer.empty[Any]
 
-    // LineString needs >= 2 points (positionfixes.py:366-372).
-    val segSize = Window.partitionBy("user_id", "_seg")
-    val valid = tplPfs
-      .withColumn("_n", count(lit(1)).over(segSize))
-      .filter(col("_n") >= 2)
+    private def close(): Unit = {
+      if (points.length >= 2) ready = Row(segUser, segStart, segEnd, points.toArray, ids.toArray)
+      points.clear(); ids.clear()
+    }
 
-    val grouped = share(valid
-      .groupBy(col("user_id"), col("_seg"))
-      .agg(
-        min(col("tracked_at")).as("started_at"),
-        max(col("tracked_at")).as("finished_at"),
-        transform(
-          array_sort(collect_list(struct(col("_t_us"), col("id"), col("lon"), col("lat")))),
-          p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))
-        ).as("points")))
+    private def process(r: Row): Unit = {
+      if (r.isNullAt(1)) throw new IllegalArgumentException("positionfixes.tracked_at must not be null")
+      val user = r.get(0)
+      val t = r.getLong(1)
+      val transit = r.isNullAt(3)
+      val key = if (transit) 0L else r.getAs[Number](3).longValue + 1
+      val newUser = !seen || user != prevUser
+      val starts = transit && (newUser || t - prevT > gapUs || key != prevKey)
+      if (newUser || starts || !transit) close()
+      if (starts) { segUser = user; segStart = t }
+      if (transit) {
+        if (r.isNullAt(2)) throw new IllegalArgumentException("positionfixes.id must not be null")
+        points += Row(r.get(4), r.get(5)); ids += r.get(2); segEnd = t
+      }
+      seen = true; prevUser = user; prevT = t; prevKey = key
+    }
 
-    val tpls = share(Ids.withSequentialId(grouped, "id", col("user_id"), col("started_at")))
+    override def hasNext: Boolean = {
+      while (ready == null && rows.hasNext) process(rows.next())
+      if (ready == null && seen) { close(); seen = false }
+      ready != null
+    }
 
-    // Join tripleg ids back to the member fixes via the (user, seg) key.
-    val mapping = tpls.select(col("user_id").as("_m_user"), col("_seg").as("_m_seg"), col("id").as("tripleg_id"))
-    val pfsOut = flagged
-      .join(mapping,
-        col("user_id") === col("_m_user") && col("_seg") === col("_m_seg") && col("staypoint_id").isNull,
-        "left")
-      .drop("_m_user", "_m_seg", "_t_us", "_prev_t", "_prev_stp",
-        "_cond_new_user", "_cond_gap", "_cond_stp", "_starts", "_seg")
-
-    (pfsOut, tpls.select("id", "user_id", "started_at", "finished_at", "points"))
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = ready; ready = null
+      r
+    }
   }
 
   /** Tripleg generation with staypoint overlap ("overlap_staypoints",

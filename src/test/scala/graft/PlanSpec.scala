@@ -559,4 +559,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_sum"), s"counts must map-side combine:\n$p")
     assert(!p.contains("Join"), s"the rung is windows + aggregates only:\n$p")
   }
+
+  test("triplegs and trips: one user_id hash exchange feeds each scan kernel; no window anywhere") {
+    // share = identity, over the memoized (checkpointed) inputs, so the
+    // plans below are the generators' own
+    val gap = 1e7
+    val pfs = Pipeline.pfsWithStaypoints(spark, dir)
+    val sp = Pipeline.staypointsWithActivity(spark, dir)
+    val (pfsTpl, tpls) = operators.TriplegGenerator.generate(pfs, gap)
+    val (spTrip, tplsTrip, trips) = operators.TripGenerator.generate(sp, tpls, gap)
+    val kernels = Seq(
+      "triplegs" -> operators.TriplegGenerator.segments(pfs, gap),
+      "trips" -> operators.TripGenerator.scan(sp, tpls, gap))
+    for ((name, df) <- kernels) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("MapPartitions"), s"$name must run as a partition scan:\n$p")
+      assert("Exchange".r.findAllIn(p).length == 1 &&
+        "Exchange hashpartitioning\\(user_id".r.findAllIn(p).length == 1,
+        s"$name: exactly one shuffle, hashed on user_id:\n$p")
+      assert(!p.contains("Window"), s"$name: no window:\n$p")
+    }
+    for (df <- Seq(pfsTpl, tpls, spTrip, tplsTrip, trips)) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Window"), s"no window in a generator output:\n$p")
+    }
+  }
 }

@@ -12,10 +12,10 @@ class GateRegistrySpec extends AnyFunSuite {
   private def gate(name: String, oracle: => String): Gate =
     Gate(name)((s, _) => s.emptyDataFrame)(oracle)
 
-  test("the registry declares 324 distinct gates, each with builder and oracle") {
+  test("the registry declares 325 distinct gates, each with builder and oracle") {
     val names = SparkEntry.gates.map(_.name)
-    assert(names.size == 324)
-    assert(names.distinct.size == 324)
+    assert(names.size == 325)
+    assert(names.distinct.size == 325)
     assert(SparkEntry.queries.keySet == names.toSet)
     assert(SparkEntry.oracleSql.keySet == names.toSet)
   }

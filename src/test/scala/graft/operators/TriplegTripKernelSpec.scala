@@ -197,6 +197,19 @@ class TriplegTripKernelSpec extends SparkSpec {
     }
   }
 
+  test("an activity followed by a null is_activity flag does not end its run") {
+    // tripleg, activity, null-flag staypoint, tripleg: `true AND NOT null`
+    // is null, so no trip starts and both triplegs share one trip
+    val sps = Seq(
+      Sp(0L, 1L, t0 + 10 * minute, t0 + 20 * minute, Some(true), 1.0, 47.0),
+      Sp(1L, 1L, t0 + 20 * minute, t0 + 25 * minute, None, 2.0, 47.0))
+    val tps = Seq(
+      Tp(0L, 1L, t0, t0 + 10 * minute, Seq((0.0, 47.0), (1.0, 47.0))),
+      Tp(1L, 1L, t0 + 25 * minute, t0 + 30 * minute, Seq((2.0, 47.0), (3.0, 47.0))))
+    assert(tripsOracle(sps, tps, gapUs).trips.size == 1)
+    checkTrips(sps, tps, identity)
+  }
+
   test("triplegs over the staypoint generator's own output") {
     val fixes = randomFixes(new Random(99), users = 30)
     val pfs = pfsFrame(fixes).drop("staypoint_id")
