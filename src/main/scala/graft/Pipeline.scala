@@ -197,9 +197,9 @@ object Pipeline {
     * assortativity, rich club, LPA, Louvain stats, BFS balls), which
     * previously each re-checkpointed the same three frames.
     */
-  def contactGraph(spark: SparkSession, sfDir: String): SpatialOps.ContactGraph =
+  def contactGraph(spark: SparkSession, sfDir: String): ContactGraph =
     once(spark, sfDir, "contact_graph") {
-      SpatialOps.contactGraph(colocationPairs(spark, sfDir), persist)
+      ContactGraph.contactGraph(colocationPairs(spark, sfDir), persist)
     }
 
   /** The level-1 Louvain label table over [[colocationPairs]] — the
@@ -210,7 +210,7 @@ object Pipeline {
     */
   def louvainLabels(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "louvain_l1") {
-      persist(SpatialOps.louvainLabels(colocationPairs(spark, sfDir), rounds = 4,
+      persist(ContactGraph.louvainLabels(colocationPairs(spark, sfDir), rounds = 4,
         graph = Some(contactGraph(spark, sfDir))))
     }
 

@@ -118,7 +118,7 @@ private[graft] object ColocationGates {
          |FROM e""".stripMargin
     },
     Gate("colocation_degrees") { (s, dir) =>
-      SpatialOps.colocationDegrees(Pipeline.colocationPairs(s, dir),
+      ContactGraph.colocationDegrees(Pipeline.colocationPairs(s, dir),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // contact-network degree histogram: the colocation pair chain
@@ -152,7 +152,7 @@ private[graft] object ColocationGates {
          |FROM deg GROUP BY length(bin(degree)) - 1""".stripMargin
     },
     Gate("colocation_pagerank") { (s, dir) =>
-      SpatialOps.colocationPagerank(Pipeline.colocationPairs(s, dir), iters = 3,
+      ContactGraph.colocationPagerank(Pipeline.colocationPairs(s, dir), iters = 3,
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       {
@@ -234,7 +234,7 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_communities") { (s, dir) =>
-      SpatialOps.colocationCommunities(Pipeline.colocationPairs(s, dir), rounds = 3,
+      ContactGraph.colocationCommunities(Pipeline.colocationPairs(s, dir), rounds = 3,
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // fixed-point PageRank over the contact graph: 3 unrolled
@@ -303,7 +303,7 @@ private[graft] object ColocationGates {
     // near-complete synthetic graph fixes after round 1; the spec pins
     // convergence on sparse fixtures)
     Gate("colocation_kcore") { (s, dir) =>
-      SpatialOps.kCoreHistogram(Pipeline.colocationPairs(s, dir), rounds = 3,
+      ContactGraph.kCoreHistogram(Pipeline.colocationPairs(s, dir), rounds = 3,
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // 3 unrolled iterated-h-index rounds from the degree: the fixed
@@ -348,7 +348,7 @@ private[graft] object ColocationGates {
     // component size, so seed density is the cost knob (1/8 measured
     // 24 s at sf0.1, 1/64 ~3 s, identical per-seed exactness)
     Gate("colocation_ball") { (s, dir) =>
-      SpatialOps.neighborhoodFunction(Pipeline.colocationPairs(s, dir), seedsMod = 64L, maxHops = 3,
+      ContactGraph.neighborhoodFunction(Pipeline.colocationPairs(s, dir), seedsMod = 64L, maxHops = 3,
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // neighborhood function from the deterministic 1/64 seed slice:
@@ -393,7 +393,7 @@ private[graft] object ColocationGates {
     // knn(k) average-neighbor-degree curve (the function behind the
     // assortativity scalar)
     Gate("degree_correlation") { (s, dir) =>
-      SpatialOps.degreeCorrelation(Pipeline.colocationPairs(s, dir),
+      ContactGraph.degreeCorrelation(Pipeline.colocationPairs(s, dir),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // knn(k) curve: endpoint-degree join, exact integer sums, ppm by
@@ -430,7 +430,7 @@ private[graft] object ColocationGates {
          |FROM j GROUP BY degree""".stripMargin
     },
     Gate("colocation_richclub") { (s, dir) =>
-      SpatialOps.richClub(Pipeline.colocationPairs(s, dir),
+      ContactGraph.richClub(Pipeline.colocationPairs(s, dir),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // rich-club curve: strict suffix sums of the node-by-degree and
@@ -477,7 +477,7 @@ private[graft] object ColocationGates {
     // epidemic threshold: spectral radius by 4 shifted integer
     // power-iteration rounds on (A + I)
     Gate("colocation_spectral") { (s, dir) =>
-      SpatialOps.spectralRadius(Pipeline.colocationPairs(s, dir), rounds = 4,
+      ContactGraph.spectralRadius(Pipeline.colocationPairs(s, dir), rounds = 4,
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // 4 unrolled shifted power-iteration rounds on (A + I): integer
@@ -526,7 +526,7 @@ private[graft] object ColocationGates {
     // (Pipeline.louvainLabels) — one partition per snapshot, many
     // diagnostics reading it
     Gate("colocation_louvain") { (s, dir) =>
-      SpatialOps.colocationLouvain(Pipeline.colocationPairs(s, dir), rounds = 4,
+      ContactGraph.colocationLouvain(Pipeline.colocationPairs(s, dir), rounds = 4,
         labels = Some(Pipeline.louvainLabels(s, dir)),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
@@ -587,7 +587,7 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_louvain_l2") { (s, dir) =>
-      SpatialOps.colocationLouvainL2(Pipeline.colocationPairs(s, dir),
+      ContactGraph.colocationLouvainL2(Pipeline.colocationPairs(s, dir),
         rounds = 4, rounds2 = 4, labels = Some(Pipeline.louvainLabels(s, dir)),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
@@ -707,7 +707,7 @@ private[graft] object ColocationGates {
     },
     // Leiden-style audit: is each Louvain community internally connected?
     Gate("louvain_connectivity") { (s, dir) =>
-      SpatialOps.louvainConnectivity(Pipeline.colocationPairs(s, dir), rounds = 4,
+      ContactGraph.louvainConnectivity(Pipeline.colocationPairs(s, dir), rounds = 4,
         labels = Some(Pipeline.louvainLabels(s, dir)),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
@@ -767,7 +767,7 @@ private[graft] object ColocationGates {
     // Leiden-style refinement: split disconnected communities into their
     // components (never decreases Q — +2 d_A d_B per split)
     Gate("louvain_refined") { (s, dir) =>
-      SpatialOps.colocationLouvainRefined(Pipeline.colocationPairs(s, dir), rounds = 4,
+      ContactGraph.colocationLouvainRefined(Pipeline.colocationPairs(s, dir), rounds = 4,
         labels = Some(Pipeline.louvainLabels(s, dir)),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
@@ -943,7 +943,7 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_assortativity") { (s, dir) =>
-      SpatialOps.colocationAssortativity(Pipeline.colocationPairs(s, dir),
+      ContactGraph.colocationAssortativity(Pipeline.colocationPairs(s, dir),
         graph = Some(Pipeline.contactGraph(s, dir)))
     } {
       // Newman degree assortativity over the contact pair chain: exact

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The shared-prolog path (a [[SpatialOps.ContactGraph]] passed in, the
+/** The shared-prolog path (a [[ContactGraph]] passed in, the
   * Pipeline memo's shape) must be BIT-IDENTICAL to each operator's
   * standalone derivation for every converted graph diagnostic — the
   * memo is a materialization strategy, never a semantics knob. A seeded
@@ -30,21 +30,21 @@ class ContactGraphParitySpec extends SparkSpec {
 
   test("every graph diagnostic is bit-identical with and without the shared prolog") {
     val p = pairs.localCheckpoint(true)
-    val g = Some(SpatialOps.contactGraph(p))
-    val cases: Seq[(String, Option[SpatialOps.ContactGraph] => DataFrame)] = Seq(
-      "degrees" -> (gr => SpatialOps.colocationDegrees(p, graph = gr)),
-      "degree_correlation" -> (gr => SpatialOps.degreeCorrelation(p, graph = gr)),
-      "assortativity" -> (gr => SpatialOps.colocationAssortativity(p, graph = gr)),
-      "kcore" -> (gr => SpatialOps.kCoreHistogram(p, rounds = 3, graph = gr)),
-      "richclub" -> (gr => SpatialOps.richClub(p, graph = gr)),
-      "spectral" -> (gr => SpatialOps.spectralRadius(p, rounds = 3, graph = gr)),
-      "pagerank" -> (gr => SpatialOps.colocationPagerank(p, iters = 3, graph = gr)),
-      "communities" -> (gr => SpatialOps.colocationCommunities(p, rounds = 3, graph = gr)),
-      "ball" -> (gr => SpatialOps.neighborhoodFunction(p, seedsMod = 2L, maxHops = 2, graph = gr)),
-      "louvain" -> (gr => SpatialOps.colocationLouvain(p, rounds = 3, graph = gr)),
-      "louvain_l2" -> (gr => SpatialOps.colocationLouvainL2(p, rounds = 3, rounds2 = 3, graph = gr)),
-      "connectivity" -> (gr => SpatialOps.louvainConnectivity(p, rounds = 3, graph = gr)),
-      "refined" -> (gr => SpatialOps.colocationLouvainRefined(p, rounds = 3, graph = gr)))
+    val g = Some(ContactGraph.contactGraph(p))
+    val cases: Seq[(String, Option[ContactGraph] => DataFrame)] = Seq(
+      "degrees" -> (gr => ContactGraph.colocationDegrees(p, graph = gr)),
+      "degree_correlation" -> (gr => ContactGraph.degreeCorrelation(p, graph = gr)),
+      "assortativity" -> (gr => ContactGraph.colocationAssortativity(p, graph = gr)),
+      "kcore" -> (gr => ContactGraph.kCoreHistogram(p, rounds = 3, graph = gr)),
+      "richclub" -> (gr => ContactGraph.richClub(p, graph = gr)),
+      "spectral" -> (gr => ContactGraph.spectralRadius(p, rounds = 3, graph = gr)),
+      "pagerank" -> (gr => ContactGraph.colocationPagerank(p, iters = 3, graph = gr)),
+      "communities" -> (gr => ContactGraph.colocationCommunities(p, rounds = 3, graph = gr)),
+      "ball" -> (gr => ContactGraph.neighborhoodFunction(p, seedsMod = 2L, maxHops = 2, graph = gr)),
+      "louvain" -> (gr => ContactGraph.colocationLouvain(p, rounds = 3, graph = gr)),
+      "louvain_l2" -> (gr => ContactGraph.colocationLouvainL2(p, rounds = 3, rounds2 = 3, graph = gr)),
+      "connectivity" -> (gr => ContactGraph.louvainConnectivity(p, rounds = 3, graph = gr)),
+      "refined" -> (gr => ContactGraph.colocationLouvainRefined(p, rounds = 3, graph = gr)))
     cases.foreach { case (name, run) =>
       val withGraph = sortedRows(run(g))
       val standalone = sortedRows(run(None))
@@ -55,14 +55,14 @@ class ContactGraphParitySpec extends SparkSpec {
 
   test("the small-node proof gates the broadcast, never the result") {
     val p = pairs.localCheckpoint(true)
-    val g = SpatialOps.contactGraph(p)
+    val g = ContactGraph.contactGraph(p)
     assert(g.nNodes > 0 && g.broadcastNodeFrames)
     // forcing the at-scale shape (no broadcast) through a graph with a
     // fabricated huge node count must not change a single row
     val big = g.copy(nNodes = Long.MaxValue)
     assert(!big.broadcastNodeFrames)
-    val a = sortedRows(SpatialOps.colocationPagerank(p, iters = 3, graph = Some(g)))
-    val b = sortedRows(SpatialOps.colocationPagerank(p, iters = 3, graph = Some(big)))
+    val a = sortedRows(ContactGraph.colocationPagerank(p, iters = 3, graph = Some(g)))
+    val b = sortedRows(ContactGraph.colocationPagerank(p, iters = 3, graph = Some(big)))
     assert(a === b)
   }
 }
