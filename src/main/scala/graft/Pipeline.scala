@@ -190,19 +190,19 @@ object Pipeline {
       persist(SpatialOps.colocationPairsFromMeetings(colocationMeetings(spark, sfDir)))
     }
 
-  /** The shared contact-graph prolog (symmetric weighted edges +
-    * weighted/unweighted degree tables) over [[colocationPairs]] —
-    * one materialization per corpus snapshot for the whole graph
-    * diagnostic family (degrees, pagerank, k-core, spectral,
-    * assortativity, rich club, LPA, Louvain stats, BFS balls), which
-    * previously each re-checkpointed the same three frames.
+  /** The contact graph over [[colocationPairs]]: the projected pair
+    * table, symmetric weighted edges, weighted/unweighted degree tables
+    * and node/pair counts, materialized once per corpus snapshot. Every
+    * contact-graph diagnostic (degrees, pagerank, k-core, spectral,
+    * assortativity, rich club, LPA, Louvain, BFS balls) is a method on
+    * it, so the family reads one set of tables.
     */
   def contactGraph(spark: SparkSession, sfDir: String): ContactGraph =
     once(spark, sfDir, "contact_graph") {
-      ContactGraph.contactGraph(colocationPairs(spark, sfDir), persist)
+      ContactGraph.from(colocationPairs(spark, sfDir), persist)
     }
 
-  /** The level-1 Louvain label table over [[colocationPairs]] — the
+  /** The level-1 Louvain label table of [[contactGraph]] — the
     * expensive 4-round gain pass, shared by the stats gate, the
     * phase-2 collapse and the Leiden-style connectivity audit (same
     * rationale as the meeting table: one partition per snapshot, many
@@ -210,8 +210,7 @@ object Pipeline {
     */
   def louvainLabels(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "louvain_l1") {
-      persist(ContactGraph.louvainLabels(colocationPairs(spark, sfDir), rounds = 4,
-        graph = Some(contactGraph(spark, sfDir))))
+      persist(contactGraph(spark, sfDir).louvainLabels(rounds = 4))
     }
 
   def tours(spark: SparkSession, sfDir: String): DataFrame =

@@ -511,7 +511,7 @@ private[graft] object AnnGates {
       KMeans.clusterDrift(
         emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1),
         Pipeline.kmeansModel(s, dir),
-        idCol = "vec_id", vecCol = "embedding", alpha = 1L, quantScale = 1e6)
+        vecCol = "embedding", alpha = 1L, quantScale = 1e6)
     } {
       // shared 8-cluster space (2 iterations), final assignment of every
       // vector (fd/fa = the semantic_dedup assignment pattern), even/odd
@@ -886,7 +886,7 @@ private[graft] object AnnGates {
     Gate("cluster_purity") { (s, dir) =>
       KMeans.clusterPurity(s.read.parquet(s"$dir/embeddings.parquet"),
         Pipeline.kmeansModel(s, dir), labelCol = "label",
-        idCol = "vec_id", vecCol = "embedding", quantScale = 1e6)
+        vecCol = "embedding", quantScale = 1e6)
     } {
       // purity of the 2-iteration kmeans assignment against the shipped
       // label column; a3 = assignment under the final cent2 model

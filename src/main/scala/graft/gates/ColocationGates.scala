@@ -14,7 +14,7 @@ private[graft] object ColocationGates {
     * `${pre}m0..${pre}m$rounds` over symmetric `$edges(u, dst, w)` and
     * `$degl(u, k)` (k MAY carry collapsed self-loop weight ×2 — the
     * level-2 supergraph convention; `tw(W)` must be in scope). Mirrors
-    * SpatialOps.louvainPass exactly: candidate communities = neighbor
+    * ContactGraph.louvainPass exactly: candidate communities = neighbor
     * labels + own, exact HUGEINT gain 2W·k_in − k·Σtot(c∖u),
     * (gain desc, cand) argmax, parity-class move schedule.
     */
@@ -118,8 +118,7 @@ private[graft] object ColocationGates {
          |FROM e""".stripMargin
     },
     Gate("colocation_degrees") { (s, dir) =>
-      ContactGraph.colocationDegrees(Pipeline.colocationPairs(s, dir),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationDegrees()
     } {
       // contact-network degree histogram: the colocation pair chain
       // exploded to endpoints, bit-length degree buckets
@@ -152,8 +151,7 @@ private[graft] object ColocationGates {
          |FROM deg GROUP BY length(bin(degree)) - 1""".stripMargin
     },
     Gate("colocation_pagerank") { (s, dir) =>
-      ContactGraph.colocationPagerank(Pipeline.colocationPairs(s, dir), iters = 3,
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationPagerank(iters = 3)
     } {
       {
         val iterCtes = (1 to 3).map { i =>
@@ -234,8 +232,7 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_communities") { (s, dir) =>
-      ContactGraph.colocationCommunities(Pipeline.colocationPairs(s, dir), rounds = 3,
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationCommunities(rounds = 3)
     } {
       // fixed-point PageRank over the contact graph: 3 unrolled
       // iterations of int128 floor-division flow along weighted edges
@@ -303,8 +300,7 @@ private[graft] object ColocationGates {
     // near-complete synthetic graph fixes after round 1; the spec pins
     // convergence on sparse fixtures)
     Gate("colocation_kcore") { (s, dir) =>
-      ContactGraph.kCoreHistogram(Pipeline.colocationPairs(s, dir), rounds = 3,
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).kCoreHistogram(rounds = 3)
     } {
       // 3 unrolled iterated-h-index rounds from the degree: the fixed
       // point is the k-core number (Lü et al. 2016)
@@ -348,8 +344,7 @@ private[graft] object ColocationGates {
     // component size, so seed density is the cost knob (1/8 measured
     // 24 s at sf0.1, 1/64 ~3 s, identical per-seed exactness)
     Gate("colocation_ball") { (s, dir) =>
-      ContactGraph.neighborhoodFunction(Pipeline.colocationPairs(s, dir), seedsMod = 64L, maxHops = 3,
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).neighborhoodFunction(seedsMod = 64L, maxHops = 3)
     } {
       // neighborhood function from the deterministic 1/64 seed slice:
       // three unrolled BFS closures (frontier JOIN edges, DISTINCT, UNION)
@@ -393,8 +388,7 @@ private[graft] object ColocationGates {
     // knn(k) average-neighbor-degree curve (the function behind the
     // assortativity scalar)
     Gate("degree_correlation") { (s, dir) =>
-      ContactGraph.degreeCorrelation(Pipeline.colocationPairs(s, dir),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).degreeCorrelation()
     } {
       // knn(k) curve: endpoint-degree join, exact integer sums, ppm by
       // HUGEINT floor division
@@ -430,8 +424,7 @@ private[graft] object ColocationGates {
          |FROM j GROUP BY degree""".stripMargin
     },
     Gate("colocation_richclub") { (s, dir) =>
-      ContactGraph.richClub(Pipeline.colocationPairs(s, dir),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).richClub()
     } {
       // rich-club curve: strict suffix sums of the node-by-degree and
       // edge-by-min-endpoint-degree histograms over the shared value grid
@@ -477,8 +470,7 @@ private[graft] object ColocationGates {
     // epidemic threshold: spectral radius by 4 shifted integer
     // power-iteration rounds on (A + I)
     Gate("colocation_spectral") { (s, dir) =>
-      ContactGraph.spectralRadius(Pipeline.colocationPairs(s, dir), rounds = 4,
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).spectralRadius(rounds = 4)
     } {
       // 4 unrolled shifted power-iteration rounds on (A + I): integer
       // iterate in millionths, HUGEINT products, floor renormalization
@@ -526,9 +518,8 @@ private[graft] object ColocationGates {
     // (Pipeline.louvainLabels) — one partition per snapshot, many
     // diagnostics reading it
     Gate("colocation_louvain") { (s, dir) =>
-      ContactGraph.colocationLouvain(Pipeline.colocationPairs(s, dir), rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvain(rounds = 4,
+        labels = Some(Pipeline.louvainLabels(s, dir)))
     } {
       // semi-synchronous one-level Louvain (two-coloring schedule: round r
       // moves only nodes whose 0-based dense rank in id order ≡ r mod 2 —
@@ -587,9 +578,8 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_louvain_l2") { (s, dir) =>
-      ContactGraph.colocationLouvainL2(Pipeline.colocationPairs(s, dir),
-        rounds = 4, rounds2 = 4, labels = Some(Pipeline.louvainLabels(s, dir)),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvainL2(rounds = 4, rounds2 = 4,
+        labels = Some(Pipeline.louvainLabels(s, dir)))
     } {
       // two-level Louvain: level-1 pass (m0..m4), supernode collapse to
       // DENSE-RANK ids (level-1 winner labels are parity-biased and would
@@ -707,9 +697,8 @@ private[graft] object ColocationGates {
     },
     // Leiden-style audit: is each Louvain community internally connected?
     Gate("louvain_connectivity") { (s, dir) =>
-      ContactGraph.louvainConnectivity(Pipeline.colocationPairs(s, dir), rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).louvainConnectivity(rounds = 4,
+        labels = Some(Pipeline.louvainLabels(s, dir)))
     } {
       // Leiden-style connectivity audit: the level-1 louvain labels (same
       // unrolled pass), intra-community transitive closure, components
@@ -767,9 +756,8 @@ private[graft] object ColocationGates {
     // Leiden-style refinement: split disconnected communities into their
     // components (never decreases Q — +2 d_A d_B per split)
     Gate("louvain_refined") { (s, dir) =>
-      ContactGraph.colocationLouvainRefined(Pipeline.colocationPairs(s, dir), rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvainRefined(rounds = 4,
+        labels = Some(Pipeline.louvainLabels(s, dir)))
     } {
       // Leiden-style refinement: the audit's component chain, labels →
       // component-min ids, the louvain stats tail over the refined labels
@@ -943,8 +931,7 @@ private[graft] object ColocationGates {
       }
     },
     Gate("colocation_assortativity") { (s, dir) =>
-      ContactGraph.colocationAssortativity(Pipeline.colocationPairs(s, dir),
-        graph = Some(Pipeline.contactGraph(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationAssortativity()
     } {
       // Newman degree assortativity over the contact pair chain: exact
       // HUGEINT moment sums, one double division

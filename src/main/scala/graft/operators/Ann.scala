@@ -216,7 +216,7 @@ object Ann {
     * Returns input plus `_sig` (long bucket key) and `_v` (the vector).
     */
   def hyperplaneSignature(emb: DataFrame, planes: Int,
-                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                          vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
     val sig = ColumnShim.column(
       graft.plans.HyperplaneSignature(ColumnShim.expression(col(vecCol)), planes))
@@ -539,9 +539,9 @@ object Ann {
   def lshTopK(probes: DataFrame, corpus: DataFrame, k: Int = 5, planes: Int = 12,
               multiProbeBits: Int = 1,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = hyperplaneSignature(corpus, planes, idCol, vecCol)
+    val c = hyperplaneSignature(corpus, planes, vecCol = vecCol)
       .select(col("_sig"), col(idCol).as("neighbor_id"), col("_v").as("_cv"))
-    val p0 = hyperplaneSignature(probes, planes, idCol, vecCol)
+    val p0 = hyperplaneSignature(probes, planes, vecCol = vecCol)
       .select(col("_sig"), col(idCol).as("probe_id"), col("_v").as("_pv"))
     // multi-probe: also look in buckets one bit-flip away
     val probeSigs =

@@ -4,21 +4,29 @@ import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** The shared prolog of the contact-graph diagnostic family: the
-  * projected pair table, its symmetric weighted edge table and the
-  * weighted/unweighted degree tables — each checkpointed once. Every
-  * graph diagnostic (degrees, pagerank, k-core, spectral radius,
-  * assortativity, rich club, LPA, Louvain stats, BFS balls) derives
-  * exactly these frames from the pair table; without the shared
-  * instance each gate re-materialized the same ~2·|pairs| rows, a
-  * dozen redundant checkpoint jobs per suite pass (r13 verdict #7).
-  * [[graft.Pipeline.contactGraph]] memoizes one instance per corpus
-  * snapshot; operators called without one still derive their own, so
-  * the standalone API is unchanged.
+/** The contact graph of a co-location pair table and every diagnostic
+  * computed on it (degrees, degree correlation, BFS balls,
+  * assortativity, k-core, rich club, spectral radius, PageRank, LPA and
+  * the Louvain family).
+  *
+  * The fields are the family's shared prolog: the projected pair table
+  * (user_a, user_b, n_meetings), its symmetric weighted edge table
+  * `edgesW` (src, dst, w) with both orientations of every pair, the
+  * weighted degree `degW` (src, wdeg), the contact count `degU` (src, d),
+  * and the node and pair counts. [[ContactGraph.from]] materializes them
+  * once; every operator reads them instead of re-deriving them, so the
+  * family shares ~2·|pairs| rows of checkpointed tables where each gate
+  * used to rebuild its own (r13 verdict #7).
+  * [[graft.Pipeline.contactGraph]] memoizes one graph per corpus
+  * snapshot; standalone callers build one with `ContactGraph.from`.
   */
 final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
-                              degW: DataFrame, degU: DataFrame, nNodes: Long) {
+                              degW: DataFrame, degU: DataFrame, nNodes: Long,
+                              nPairs: Long) {
+  import ContactGraph.{louvainPass, louvainPassLocal}
+
   /** Node-sized per-round frames (ranks/labels/h-values/iterates) are
     * broadcastable when the node set is small — checkpointed lineages
     * carry no size stats, so Catalyst never discovers this on its own
@@ -34,66 +42,35 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * node table must NOT broadcast.
     */
   def broadcastNodeFrames: Boolean = nNodes <= 1500000L
-}
 
-/** The contact-graph operators: the shared prolog's builder and every
-  * diagnostic that reads it (degrees, degree correlation, BFS balls,
-  * assortativity, k-core, rich club, spectral radius, PageRank, LPA and
-  * the Louvain family).
-  */
-object ContactGraph {
-
-  /** Build a [[ContactGraph]] from a co-location pair table
-    * (user_a, user_b, n_meetings). `edgesW` is the symmetric directed
-    * view (src, dst, w) with both orientations of every pair; `degW`
-    * = (src, wdeg) the weighted degree; `degU` = (src, d) the contact
-    * count. All four frames pass through `share` so downstream
-    * iterative readers see materialized tables, not the banded
-    * co-location self-join's lineage.
+  /** A node-sized frame as the build side of a join: broadcast under
+    * [[broadcastNodeFrames]], shuffled otherwise.
     */
-  def contactGraph(pairs: DataFrame,
-                   share: DataFrame => DataFrame = Share.materialize): ContactGraph = {
-    // an already-persisted pair table (the Pipeline memo) is used as-is
-    // — re-checkpointing a projection of it is a wasted job (the same
-    // storageLevel guard the Louvain L2 pass applies to its labels)
-    val projected = pairs.select(col("user_a"), col("user_b"), col("n_meetings"))
-    val p =
-      if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) share(projected)
-      else projected
-    val edgesW = share(p
-      .select(col("user_a").as("src"), col("user_b").as("dst"), col("n_meetings").as("w"))
-      .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"),
-        col("n_meetings").as("w"))))
-    // both degree flavors from ONE groupBy (one shuffle, one checkpoint)
-    val deg = share(edgesW.groupBy(col("src")).agg(
-      sum(col("w")).as("wdeg"), count(lit(1)).cast("long").as("d")))
-    // the node count gates per-round broadcasts downstream; counting the
-    // checkpointed degree table also forces the whole prolog to
-    // materialize here, where the cost is attributed once per snapshot
-    ContactGraph(p, edgesW, deg.select(col("src"), col("wdeg")),
-      deg.select(col("src"), col("d")), deg.count())
-  }
+  private def nodeFrame(df: DataFrame): DataFrame =
+    if (broadcastNodeFrames) broadcast(df) else df
+
+  /** `edgesW` as (u, v, w), the Louvain family's column names. */
+  private def edgesUV: DataFrame =
+    edgesW.select(col("src").as("u"), col("dst").as("v"), col("w"))
+
+  /** The total undirected weight W as a 1-row (_W) frame. */
+  private def totalW: DataFrame =
+    pairs.agg(sum(col("n_meetings")).cast("long").as("_W"))
 
   /** Contact-network degree distribution over the co-location pairs —
     * the first statistic of every epidemiological / social-tie study
     * built on meeting detection (how many distinct contacts does a
-    * person have, and is the network's tail heavy). Degrees come from
-    * exploding each pair to both endpoints (one map-side-combinable
-    * count), the histogram from the lengthHistogram bit-length trick.
+    * person have, and is the network's tail heavy). Degrees are the
+    * graph's contact counts `degU`, the histogram from the
+    * lengthHistogram bit-length trick.
     */
-  def colocationDegrees(pairs: DataFrame, graph: Option[ContactGraph] = None): DataFrame = {
-    val deg = graph.map(_.degU.select(col("src").as("user_id"), col("d").as("degree")))
-      .getOrElse(pairs
-        .select(explode(array(col("user_a"), col("user_b"))).as("user_id"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).cast("long").as("degree")))
-    deg
+  def colocationDegrees(): DataFrame =
+    degU.select(col("src").as("user_id"), col("d").as("degree"))
       .withColumn("bucket", (length(bin(col("degree"))) - 1).cast("long"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n_users"),
         sum(col("degree")).cast("long").as("sum_degree"))
       .withColumn("bucket_lo", expr("shiftleft(cast(1 as bigint), cast(bucket as int))"))
-  }
 
   /** Average-neighbor-degree curve knn(k) (Pastor-Satorras, Vázquez &
     * Vespignani 2001, "Dynamical and correlation properties of the
@@ -105,22 +82,14 @@ object ContactGraph {
     * quantized to ppm via integer cross-multiply, so both engines agree
     * bit-for-bit.
     *
-    * Scale shape: degree table via one exploded-endpoint count; the
-    * directed edge list hash-joins the degree table twice on its key
-    * (≤|users| rows each); one final groupBy(degree). Never anything ×
-    * anything.
+    * Scale shape: the directed edge list hash-joins the degree table
+    * twice on its key (≤|users| rows each); one final groupBy(degree).
+    * Never anything × anything.
     */
-  def degreeCorrelation(pairs: DataFrame, graph: Option[ContactGraph] = None): DataFrame = {
-    val deg = graph.map(_.degU.select(col("src").as("u"), col("d")))
-      .getOrElse(pairs
-        .select(explode(array(col("user_a"), col("user_b"))).as("u"))
-        .groupBy(col("u")).agg(count(lit(1)).cast("long").as("d")))
-    val directed = graph.map(_.edgesW.select(col("src"), col("dst")))
-      .getOrElse(pairs.select(col("user_a").as("src"), col("user_b").as("dst"))
-        .unionByName(pairs.select(col("user_b").as("src"), col("user_a").as("dst"))))
-    directed
-      .join(deg.select(col("u").as("src"), col("d").as("d_src")), Seq("src"))
-      .join(deg.select(col("u").as("dst"), col("d").as("d_dst")), Seq("dst"))
+  def degreeCorrelation(): DataFrame = {
+    edgesW.select(col("src"), col("dst"))
+      .join(degU.select(col("src"), col("d").as("d_src")), Seq("src"))
+      .join(degU.select(col("src").as("dst"), col("d").as("d_dst")), Seq("dst"))
       .groupBy(col("d_src").as("degree"))
       .agg(countDistinct(col("src")).as("n_nodes"),
         sum(col("d_dst")).cast("long").as("sum_neighbor_degree"),
@@ -147,20 +116,11 @@ object ContactGraph {
     * REGARDLESS of graph density — the documented scale knob; seedsMod=1
     * is the full exact closure for small graphs.
     */
-  def neighborhoodFunction(pairs: DataFrame, seedsMod: Long = 8L, maxHops: Int = 3,
-                           share: DataFrame => DataFrame = Share.materialize,
-                           graph: Option[ContactGraph] = None): DataFrame = {
+  def neighborhoodFunction(seedsMod: Long = 8L, maxHops: Int = 3,
+                           share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(seedsMod >= 1 && maxHops >= 1, "seedsMod/maxHops must be positive")
-    // share the symmetric edge list: every hop re-reads it, and the
-    // expensive upstream (the banded co-location self-join) must not
-    // re-run per hop — pagerank's exact treatment
-    val edges = graph.map(_.edgesW.select(col("src"), col("dst"))).getOrElse {
-      val p = pairs.select(col("user_a"), col("user_b"))
-      share(p.select(col("user_a").as("src"), col("user_b").as("dst"))
-        .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"))))
-    }
-    val seeds = graph.map(_.degU.select(col("src").as("seed")))
-      .getOrElse(edges.select(col("src").as("seed")).distinct())
+    val edges = edgesW.select(col("src"), col("dst"))
+    val seeds = degU.select(col("src").as("seed"))
       .filter(pmod(col("seed"), lit(seedsMod)) === 0L)
     // reach includes the seed itself (distance 0) for propagation;
     // counts exclude it. Each hop is shared: the h+1 frontier join and
@@ -190,19 +150,14 @@ object ContactGraph {
     * degree squared times a billion edges overflows a long), with ONE
     * double division at the end.
     *
-    * Scale shape: degrees are one map-side-combinable count over exploded
-    * endpoints; the degree table (≤ |users| rows) joins back to the edge
-    * list twice on its key; the moment aggregate partial-combines. Never
-    * anything × anything.
+    * Scale shape: the degree table (≤ |users| rows) joins back to the
+    * pair table twice on its key; the moment aggregate partial-combines.
+    * Never anything × anything.
     */
-  def colocationAssortativity(pairs: DataFrame, graph: Option[ContactGraph] = None): DataFrame = {
-    val deg = graph.map(_.degU.select(col("src").as("_u"), col("d").as("_d")))
-      .getOrElse(pairs
-        .select(explode(array(col("user_a"), col("user_b"))).as("_u"))
-        .groupBy(col("_u")).agg(count(lit(1)).cast("long").as("_d")))
+  def colocationAssortativity(): DataFrame = {
     pairs
-      .join(deg.select(col("_u").as("user_a"), col("_d").as("_ja")), Seq("user_a"))
-      .join(deg.select(col("_u").as("user_b"), col("_d").as("_kb")), Seq("user_b"))
+      .join(degU.select(col("src").as("user_a"), col("d").as("_ja")), Seq("user_a"))
+      .join(degU.select(col("src").as("user_b"), col("d").as("_kb")), Seq("user_b"))
       .agg(count(lit(1)).cast("long").as("n_edges"),
         sum(col("_ja") + col("_kb")).as("_sjk"),
         sum(dq(col("_ja")) * dq(col("_kb"))).as("_sprod"),
@@ -236,27 +191,18 @@ object ContactGraph {
     *
     * @return (coreness, n_users) — k-core occupancy histogram
     */
-  def kCoreHistogram(pairs: DataFrame, rounds: Int = 3,
-                     share: DataFrame => DataFrame = Share.materialize,
-                     graph: Option[ContactGraph] = None): DataFrame = {
+  def kCoreHistogram(rounds: Int = 3,
+                     share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     // default rounds MUST stay in sync with the colocation_kcore oracle's
     // unrolled CTE count — a default/oracle drift is a silent parity trap
     // on any graph whose h-index chain is longer than the oracle's rounds
     require(rounds >= 1, "need rounds >= 1")
-    val edges = graph.map(_.edgesW.select(col("src"), col("dst"))).getOrElse {
-      val p = share(pairs.select(col("user_a"), col("user_b")))
-      share(p.select(col("user_a").as("src"), col("user_b").as("dst"))
-        .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"))))
-    }
-    var h = graph.map(_.degU.select(col("src").as("n"), col("d").as("val")))
-      .getOrElse(share(edges.groupBy(col("src").as("n"))
-        .agg(count(lit(1)).cast("long").as("val"))))
-    val mB: DataFrame => DataFrame =
-      if (graph.exists(_.broadcastNodeFrames)) broadcast else identity
+    val edges = edgesW.select(col("src"), col("dst"))
+    var h = degU.select(col("src").as("n"), col("d").as("val"))
     val bySrc = Window.partitionBy(col("src")).orderBy(col("v").desc, col("dst"))
     for (_ <- 1 to rounds) {
       h = share(edges
-        .join(mB(h), edges("dst") === h("n"))
+        .join(nodeFrame(h), edges("dst") === h("n"))
         .select(col("src"), col("dst"), col("val").as("v"))
         .withColumn("_rn", row_number().over(bySrc))
         .groupBy(col("src").as("n"))
@@ -274,9 +220,9 @@ object ContactGraph {
     * statistic (the literature's degree-preserving null is a separate
     * randomization study). Exact integer counts, one double division.
     *
-    * Scale shape: degrees are one map-side-combinable count; an edge
-    * contributes to every k below min(deg_a, deg_b), accumulated NOT by
-    * exploding thresholds but as two bounded histograms (node count by
+    * Scale shape: an edge contributes to every k below
+    * min(deg_a, deg_b), accumulated NOT by exploding thresholds but as
+    * two bounded histograms (node count by
     * degree, edge count by min-endpoint-degree) suffix-summed with one
     * window over the degree-value domain — ≤ distinct-degree rows, a
     * power-law-bounded set orders smaller than the edge table. Two hash
@@ -286,11 +232,8 @@ object ContactGraph {
     * @return (k, n_nodes, n_edges, phi) at every observed degree value
     *         k with ≥ 2 qualifying nodes
     */
-  def richClub(pairs: DataFrame, graph: Option[ContactGraph] = None): DataFrame = {
-    val deg = graph.map(_.degU.select(col("src").as("_u"), col("d").as("_d")))
-      .getOrElse(pairs
-        .select(explode(array(col("user_a"), col("user_b"))).as("_u"))
-        .groupBy(col("_u")).agg(count(lit(1)).cast("long").as("_d")))
+  def richClub(): DataFrame = {
+    val deg = degU.select(col("src").as("_u"), col("d").as("_d"))
     val nodeHist = deg.groupBy(col("_d").as("v"))
       .agg(count(lit(1)).cast("long").as("_cn"))
     val edgeHist = pairs
@@ -339,31 +282,19 @@ object ContactGraph {
     *         pre-normalization max as digit string (exact), lambda_max
     *         = m_q/10⁶ − 1 as double
     */
-  def spectralRadius(pairs: DataFrame, rounds: Int = 4,
-                     share: DataFrame => DataFrame = Share.materialize,
-                     graph: Option[ContactGraph] = None): DataFrame = {
+  def spectralRadius(rounds: Int = 4,
+                     share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
     val scale = 1000000L
-    val edges = graph.map(_.edgesW).getOrElse {
-      val p = share(pairs.select(col("user_a"), col("user_b"), col("n_meetings")))
-      share(p
-        .select(col("user_a").as("src"), col("user_b").as("dst"), col("n_meetings").as("w"))
-        .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"),
-          col("n_meetings").as("w"))))
-    }
-    // degW is one row per node with ≥1 edge — the same set the distinct
-    // would compute, already materialized
-    val nodes = graph.map(_.degW.select(col("src").as("n")))
-      .getOrElse(share(edges.select(col("src").as("n")).distinct()))
+    // degW is one row per node with ≥1 edge, already materialized
+    val nodes = degW.select(col("src").as("n"))
     var x = nodes.select(col("n"), lit(scale).as("x"))
     var lastM: DataFrame = null
-    val mB: DataFrame => DataFrame =
-      if (graph.exists(_.broadcastNodeFrames)) broadcast else identity
     for (r <- 1 to rounds) {
       // t feeds the 1-row max AND the renormalized next iterate, so it
       // is shared — node-sized, one materialization per round
-      val t = share(edges
-        .join(mB(x.select(col("n"), col("x").as("_xv"))), edges("dst") === col("n"))
+      val t = share(edgesW
+        .join(nodeFrame(x.select(col("n"), col("x").as("_xv"))), edgesW("dst") === col("n"))
         .groupBy(col("src")).agg(sum(dq(col("w")) * dq(col("_xv"))).as("_s"))
         .join(x.select(col("n"), col("x").as("_own")), col("src") === col("n"))
         .select(col("n"), (col("_s") + dq(col("_own"))).as("_t")))
@@ -401,49 +332,29 @@ object ContactGraph {
     * on src + one map-side-combinable dst sum + one left join back to
     * the node table. Driver state: none.
     */
-  def colocationPagerank(pairs: DataFrame, iters: Int = 3, dampingPct: Long = 85L,
+  def colocationPagerank(iters: Int = 3, dampingPct: Long = 85L,
                          scale: Long = 1000000L,
-                         share: DataFrame => DataFrame = Share.materialize,
-                         graph: Option[ContactGraph] = None): DataFrame = {
+                         share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100 && scale >= 1,
       "need iters >= 1, dampingPct in [0,100], scale >= 1")
-    // Share the PAIR TABLE first: the symmetric union reads it twice,
-    // and deg/edgesDeg/nodes all sit above it — without this one
-    // materialization the expensive upstream (the banded co-location
-    // self-join) re-runs during setup and once more per iteration
-    // through the unshared deg lineage. Probed at 10x users: 37 s
-    // unshared → 29 s shared, and the 29 s is one evaluation of the
-    // pair join itself (linear in users at fixed density — 2.6 s at
-    // 1x) — i.e. the chain now costs its input plus bounded joins.
-    val (edges, deg) = graph
-      .map(g => (g.edgesW, g.degW.select(col("src"), col("wdeg").as("deg"))))
-      .getOrElse {
-        val p = share(pairs.select(col("user_a"), col("user_b"), col("n_meetings")))
-        val e = p
-          .select(col("user_a").as("src"), col("user_b").as("dst"), col("n_meetings").as("w"))
-          .unionByName(p
-            .select(col("user_b").as("src"), col("user_a").as("dst"), col("n_meetings").as("w")))
-        (e, share(e.groupBy(col("src")).agg(sum(col("w")).as("deg"))))
-      }
-    val edgesDeg = share(edges.join(deg, Seq("src")))
+    val deg = degW.select(col("src"), col("wdeg").as("deg"))
+    val edgesDeg = share(edgesW.join(deg, Seq("src")))
     val nodes = deg.select(col("src").as("user_id"))
     val teleport = (100L - dampingPct) * scale / 100L
-    // node-sized frames broadcast when the shared prolog proved the node
-    // set small (ContactGraph.broadcastNodeFrames): each iteration's
-    // rank join then streams the edge table map-side instead of paying a
-    // full shuffle join against a few-thousand-row frame
-    val mB: DataFrame => DataFrame =
-      if (graph.exists(_.broadcastNodeFrames)) broadcast else identity
+    // node-sized frames broadcast when the node set is small
+    // ([[broadcastNodeFrames]]): each iteration's rank join then streams
+    // the edge table map-side instead of paying a full shuffle join
+    // against a few-thousand-row frame
     var ranks = nodes.select(col("user_id"), lit(scale).as("rank_q"))
     for (_ <- 1 to iters) {
       val contribs = edgesDeg
-        .join(mB(ranks), edgesDeg("src") === ranks("user_id"))
+        .join(nodeFrame(ranks), edgesDeg("src") === ranks("user_id"))
         .select(col("dst"),
           expr(s"cast(rank_q as decimal(38,0)) * $dampingPct * w div (100 * cast(deg as decimal(38,0)))")
             .as("_c"))
         .groupBy(col("dst")).agg(sum(col("_c")).as("_in"))
       ranks = nodes
-        .join(mB(contribs), nodes("user_id") === contribs("dst"), "left")
+        .join(nodeFrame(contribs), nodes("user_id") === contribs("dst"), "left")
         .select(col("user_id"),
           (lit(teleport) + coalesce(col("_in"), lit(0L))).cast("long").as("rank_q"))
     }
@@ -473,23 +384,11 @@ object ContactGraph {
     * @return (community, n_nodes, w_in, degree_sum, modularity) — one
     *         row per final community, `modularity` the global Q repeated
     */
-  def colocationCommunities(pairs: DataFrame, rounds: Int = 3,
-                            share: DataFrame => DataFrame = Share.materialize,
-                            graph: Option[ContactGraph] = None): DataFrame = {
+  def colocationCommunities(rounds: Int = 3,
+                            share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
-    val edges = graph
-      .map(_.edgesW.select(col("src").as("u"), col("dst").as("v"), col("w")))
-      .getOrElse(share(p
-        .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-        .unionByName(p.select(col("user_b").as("u"), col("user_a").as("v"),
-          col("n_meetings").as("w")))))
-    val nodes = graph.map(_.degW.select(col("src").as("u")))
-      .getOrElse(edges.select(col("u")).distinct())
-    var labels = nodes.select(col("u").as("n"), col("u").as("lbl"))
-    val mB: DataFrame => DataFrame =
-      if (graph.exists(_.broadcastNodeFrames)) broadcast else identity
+    val edges = edgesUV
+    var labels = degW.select(col("src").as("n"), col("src").as("lbl"))
     for (_ <- 1 to rounds) {
       // per-node argmax (greatest weight, ties to smallest label) as ONE
       // hash aggregate via min(struct(-_s, lbl)) — the row_number window
@@ -497,13 +396,13 @@ object ContactGraph {
       // round for the identical deterministic pick. The node-sized label
       // frame broadcasts under the shared prolog's small-node proof.
       labels = share(edges
-        .join(mB(labels), edges("v") === labels("n"))
+        .join(nodeFrame(labels), edges("v") === labels("n"))
         .groupBy(col("u"), col("lbl")).agg(sum(col("w")).as("_s"))
         .groupBy(col("u"))
         .agg(min(struct((-col("_s")).as("_neg"), col("lbl").as("_l"))).as("_m"))
         .select(col("u").as("n"), col("_m._l").as("lbl")))
     }
-    communityStats(p, edges, labels, degW = graph.map(_.degW))
+    communityStats(labels)
   }
 
   /** One-level Louvain refinement over the contact graph (Blondel et
@@ -538,22 +437,10 @@ object ContactGraph {
     *
     * @return (community, n_nodes, w_in, degree_sum, modularity)
     */
-  def colocationLouvain(pairs: DataFrame, rounds: Int = 4,
+  def colocationLouvain(rounds: Int = 4,
                         share: DataFrame => DataFrame = Share.materialize,
-                        labels: Option[DataFrame] = None,
-                        graph: Option[ContactGraph] = None): DataFrame = {
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
-    val edges = graph
-      .map(_.edgesW.select(col("src").as("u"), col("dst").as("v"), col("w")))
-      .getOrElse(share(p
-        .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-        .unionByName(p.select(col("user_b").as("u"), col("user_a").as("v"),
-          col("n_meetings").as("w")))))
-    val l1 = labels.getOrElse(louvainLabels(pairs, rounds, share, graph = graph))
-    communityStats(p, edges, l1.select(col("n"), col("c").as("lbl")),
-      degW = graph.map(_.degW))
-  }
+                        labels: Option[DataFrame] = None): DataFrame =
+    communityStats(level1Labels(labels, rounds, share).select(col("n"), col("c").as("lbl")))
 
   /** The level-1 Louvain label table (n, c) — exposed so the gate
     * family (stats, level 2, connectivity audit) can compute the
@@ -561,27 +448,23 @@ object ContactGraph {
     * in production the partition is computed per corpus snapshot and
     * every diagnostic reads it.
     */
-  def louvainLabels(pairs: DataFrame, rounds: Int = 4,
+  def louvainLabels(rounds: Int = 4,
                     share: DataFrame => DataFrame = Share.materialize,
-                    localThreshold: Long = 2000000L,
-                    graph: Option[ContactGraph] = None): DataFrame = {
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
+                    localThreshold: Long = 2000000L): DataFrame = {
     // SMALL-GRAPH FALLBACK (the same duplicateClusters pattern the
     // phase-2 pass uses): the 4-round distributed pass costs ~8-10 s of
     // per-round join/checkpoint latency on the sf0.1 contact graph
     // (1500 nodes, 1.1M pairs) — work [[louvainPassLocal]] finishes in
     // milliseconds, bit-identically (same schedule, same BigInt gains,
-    // same tie-breaks; spec-pinned). One cheap count on the
-    // checkpointed pair table gates the collect. Budget: each collected
-    // pair costs ~100 B boxed (Tuple3 of boxed Longs) and the local
+    // same tie-breaks; spec-pinned). The graph's pair count gates the
+    // collect. Budget: each collected pair costs ~100 B boxed (Tuple3
+    // of boxed Longs) and the local
     // pass builds a 2×-pairs adjacency on top, so 2M pairs ≈ ~400 MB
     // peak driver objects — the documented ceiling. Beyond it the
     // distributed pass runs unchanged (SURVEY §6: engages and
     // completes at 11M pairs).
-    val nPairs = p.count()
     if (nPairs <= localThreshold) {
-      val undirected = p.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val undirected = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val universe = undirected.iterator
         .flatMap(t => Iterator(t._1, t._2)).toArray.distinct
       val w = undirected.iterator.map(_._3).sum
@@ -590,18 +473,361 @@ object ContactGraph {
           louvainPassLocal(undirected, universe, Map.empty, w, rounds).toSeq)
         .toDF("n", "c")
     } else {
-      val edges = graph
-        .map(_.edgesW.select(col("src").as("u"), col("dst").as("v"), col("w")))
-        .getOrElse(share(p
-          .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-          .unionByName(p.select(col("user_b").as("u"), col("user_a").as("v"),
-            col("n_meetings").as("w")))))
-      val deg = graph
-        .map(_.degW.select(col("src").as("u"), col("wdeg").cast("long").as("k")))
-        .getOrElse(share(edges.groupBy(col("u")).agg(sum(col("w")).cast("long").as("k"))))
-      val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
-      louvainPass(edges, deg, totalW, rounds, share)
+      val deg = degW.select(col("src").as("u"), col("wdeg").cast("long").as("k"))
+      louvainPass(edgesUV, deg, totalW, rounds, share)
     }
+  }
+
+  /** Two-level Louvain (Blondel et al. 2008 phase 2): collapse the
+    * level-1 communities to supernodes — one groupBy over the
+    * twice-relabeled pair table — rerun the one-level pass on the
+    * supergraph, and report the COMPOSED partition's exact-rational
+    * statistics on the ORIGINAL graph, so `modularity` is directly
+    * comparable with [[colocationLouvain]]'s (same Q formula, same
+    * denominators; on the synthetic fixture Q(level 2) ≥ Q(level 1),
+    * pinned by spec).
+    *
+    * Supergraph bookkeeping: intra-community weight becomes a supernode
+    * self-loop that counts TWICE in the supernode degree and never
+    * feeds k_in (it stays internal wherever the supernode moves — see
+    * [[louvainPass]]); total weight W is invariant across levels. The
+    * level-2 candidate argmax is exact in DECIMAL(38,0) like level 1.
+    *
+    * Scale shape: level 1's per-round joins, plus two hash join
+    * relabels of the pair table, one groupBy collapse (the supergraph
+    * is ≤ #communities wide — orders smaller than the input), the same
+    * pass machinery over the collapsed table, and one final label
+    * composition join.
+    *
+    * @return (community, n_nodes, w_in, degree_sum, modularity) of the
+    *         composed level-2 partition over the original pair graph
+    */
+  def colocationLouvainL2(rounds: Int = 4, rounds2: Int = 4,
+                          share: DataFrame => DataFrame = Share.materialize,
+                          labels: Option[DataFrame] = None,
+                          localThreshold: Long = 100000L): DataFrame = {
+    val l1 = level1Labels(labels, rounds, share)
+
+    // dense-rank relabel BEFORE the level-2 pass: supernode ids inherit
+    // level-1 WINNER labels (a sparse, structurally biased id space);
+    // 0-based ranks keep the supergraph in a compact id space for the
+    // collapse/composition joins below. The two-coloring schedule no
+    // longer depends on this — louvainPass ranks its own id population
+    // internally (the round-12 fix that moved the r11 relabel's parity
+    // argument one level down, into the pass itself).
+    // rank: dense 0-based ids over the distinct level-1 labels in
+    // ascending order. Probed with one limit-collect: when the label
+    // count fits `localThreshold` the rank is a driver-side sort (and
+    // the rank table a broadcastable local relation) instead of the
+    // distributed range-sort + zipWithIndex + checkpoint — the same
+    // (u0 ascending, 0-based) ids either way.
+    val probeCap = math.min(localThreshold + 1L, Int.MaxValue.toLong).toInt
+    val labelProbe = l1.select(col("c").as("u0")).distinct().limit(probeCap)
+      .collect().map(_.getLong(0))
+    val rankRowsOpt =
+      if (labelProbe.length <= localThreshold)
+        Some(labelProbe.sorted.zipWithIndex.map { case (u0, i) => (u0, i.toLong) })
+      else None
+    val rank = rankRowsOpt match {
+      case Some(rows) =>
+        broadcast(pairs.sparkSession.createDataFrame(rows.toSeq).toDF("u0", "r"))
+      case None => share(graft.util.Ids.withSequentialId(
+        l1.select(col("c").as("u0")).distinct(), "r", col("u0")))
+    }
+
+    // collapse: two join-relabels of the pair table, then ONE aggregate
+    // over the (min, max) rank pair — inter-community super-edges and
+    // intra-community self-loop weight come out of the same groupBy
+    // (the a == b rows), so the collapse is a single action whichever
+    // path runs below
+    val relabeled = pairs
+      .join(l1.select(col("n"), col("c").as("_la")), pairs("user_a") === col("n")).drop("n")
+      .join(l1.select(col("n"), col("c").as("_lb")), pairs("user_b") === col("n")).drop("n")
+      .join(rank.select(col("u0"), col("r").as("_ca")), col("_la") === col("u0")).drop("u0")
+      .join(rank.select(col("u0"), col("r").as("_cb")), col("_lb") === col("u0")).drop("u0")
+    val collapsed = relabeled
+      .groupBy(least(col("_ca"), col("_cb")).as("a"),
+        greatest(col("_ca"), col("_cb")).as("b"))
+      .agg(sum(col("n_meetings")).cast("long").as("w"))
+
+    // SMALL-SUPERGRAPH FALLBACK (the duplicateClusters pattern,
+    // Dedup.scala's <=1M-pair driver union-find): the level-2 pass on a
+    // collapsed graph of tens of supernodes costs ~11 s of pure
+    // per-round distributed-job latency (r12 warm audit) for work a
+    // driver loop finishes in microseconds. Probe both sizes with
+    // limit-collects (the probe IS the data when it fits — no separate
+    // counts); under `localThreshold` run an exact driver-side replica
+    // of louvainPass — same two-coloring schedule, same BigInt-exact
+    // gain, same (gain desc, cand asc) tie-break, bit-identical labels
+    // (spec-pinned against the distributed pass) — and compose the
+    // winner labels through ONE broadcast join. Beyond the threshold
+    // the distributed pass runs unchanged.
+    val collapsedRows = rankRowsOpt match {
+      case Some(_) =>
+        Some(collapsed.limit(probeCap).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+          .filter(_.length <= localThreshold)
+      case None => None
+    }
+    collapsedRows match {
+      case Some(rows) =>
+        val rankRows = rankRowsOpt.get
+        val undirected = rows.filter(t => t._1 != t._2)
+        val self = rows.filter(t => t._1 == t._2).map(t => t._1 -> t._3).toMap
+        // every original pair lands in exactly one collapsed cell, so
+        // the collapsed weights sum to the invariant total W
+        val w = rows.iterator.map(_._3).sum
+        val universe = rankRows.map(_._2)
+        val l2local = louvainPassLocal(undirected, universe, self, w, rounds2).toMap
+        val u0ByR = rankRows.map(_.swap).toMap
+
+        // the monotone qn guard AND the per-community (w_in,
+        // degree_sum) statistics are pure functions of the collapsed
+        // table — w_in(C) sums the collapsed cells internal to C,
+        // degree_sum(C) counts every collapsed cell weight once per
+        // endpoint in C (a self cell twice) — so both partitions'
+        // exact numerators come from two driver scans of `rows`
+        // instead of four distributed joins over the original pair
+        // table. Only n_nodes needs the cluster: one broadcast-mapped
+        // count over the l1 label table. (Assumes, like the
+        // distributed path's edge-derived node population, that the
+        // labels cover exactly the pair-graph nodes.)
+        def statsOf(groupOf: Long => Long) = {
+          val wIn = scala.collection.mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+          val degS = scala.collection.mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+          rows.foreach { case (a, b, wgt) =>
+            val ga = groupOf(a); val gb = groupOf(b)
+            if (ga == gb) wIn(ga) += wgt
+            degS(ga) += wgt; degS(gb) += wgt
+          }
+          (wIn, degS)
+        }
+        def qnOf(st: (scala.collection.mutable.Map[Long, Long],
+                      scala.collection.mutable.Map[Long, Long])): BigInt =
+          st._2.keysIterator.map(g =>
+            4 * BigInt(w) * BigInt(st._1(g)) - BigInt(st._2(g)).pow(2)).sum
+        val st1 = statsOf(identity)
+        val st2 = statsOf(l2local)
+        val improved = qnOf(st2) > qnOf(st1)
+        val (wInW, degSW) = if (improved) st2 else st1
+        val qnW = if (improved) qnOf(st2) else qnOf(st1)
+        val groupOfRank: Long => Long = if (improved) l2local else identity
+        // replicate the distributed division exactly: DECIMAL(38,0) →
+        // double via java BigDecimal, then (4.0 · W) · W in IEEE order
+        val wD = w.toDouble
+        val modularity =
+          new java.math.BigDecimal(qnW.bigInteger).doubleValue / (4.0 * wD * wD)
+        val statsRows = degSW.keysIterator
+          .map(g => (u0ByR(g), wInW(g), degSW(g), modularity)).toSeq
+        val statsTable = pairs.sparkSession.createDataFrame(statsRows)
+          .toDF("community", "w_in", "degree_sum", "modularity")
+        val lblByU0 = rankRows.map { case (u0, r) => (u0, u0ByR(groupOfRank(r))) }
+        val mapDf = pairs.sparkSession.createDataFrame(lblByU0.toSeq).toDF("_c", "lbl")
+        l1.join(broadcast(mapDf), l1("c") === col("_c"))
+          .groupBy(col("lbl").as("community")).agg(count(lit(1)).cast("long").as("n_nodes"))
+          .join(broadcast(statsTable), Seq("community"))
+          .select(col("community"), col("n_nodes"), col("w_in"), col("degree_sum"),
+            col("modularity"))
+      case None =>
+        val superPairs = share(collapsed.filter(col("a") =!= col("b"))
+          .select(col("a").as("user_a"), col("b").as("user_b"), col("w").as("n_meetings")))
+        val selfW = collapsed.filter(col("a") === col("b"))
+          .select(col("a").as("u"), col("w").as("_wself"))
+        val edges2 = share(superPairs
+          .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
+          .unionByName(superPairs.select(col("user_b").as("u"), col("user_a").as("v"),
+            col("n_meetings").as("w"))))
+        // every level-1 community is a supernode, including those with no
+        // inter-community edge (they would vanish from an edge-derived
+        // degree table and lose their nodes in the composition join)
+        val deg2 = share(rank.select(col("r").as("u"))
+          .join(edges2.groupBy(col("u")).agg(sum(col("w")).cast("long").as("_ke")), Seq("u"), "left")
+          .join(selfW, Seq("u"), "left")
+          .select(col("u"),
+            (coalesce(col("_ke"), lit(0L)) + lit(2L) * coalesce(col("_wself"), lit(0L)))
+              .cast("long").as("k")))
+        val l2 = louvainPass(edges2, deg2, totalW, rounds2, share)
+        // compose n → c1 → rank → level-2 label (a rank) → back to the
+        // original community-id space of that winning rank
+        val composed = share(l1
+          .join(rank.select(col("u0"), col("r")), l1("c") === col("u0"))
+          .join(l2.select(col("n").as("_rn"), col("c").as("_c2r")), col("r") === col("_rn"))
+          .join(rank.select(col("u0").as("lbl"), col("r").as("_rb")), col("_c2r") === col("_rb"))
+          .select(col("n"), col("lbl")))
+
+        // monotone guard (the "keep the best partition seen" rule every
+        // sequential Louvain applies implicitly): the semi-synchronous
+        // schedule admits simultaneous same-class moves whose joint ΔQ
+        // can be negative even when each individual gain is positive
+        // (the cross-term −k_u·k_v of two movers entering one community
+        // is unpriced). Compare the EXACT integer Q numerators and keep
+        // the level-1 partition unless level 2 strictly improved — one
+        // action for BOTH numerators (two 1-row aggregates cross-joined)
+        val qnRow = partitionQNum(communityTable(l1.select(col("n"), col("c").as("lbl"))))
+          .select(col("_qn").as("_qn1"))
+          .crossJoin(partitionQNum(communityTable(composed)).select(col("_qn").as("_qn2")))
+          .collect()(0)
+        def qn(i: Int) = Option(qnRow.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO)
+        val winner =
+          if (qn(1).compareTo(qn(0)) > 0) composed
+          else l1.select(col("n"), col("c").as("lbl"))
+        communityStats(winner)
+    }
+  }
+
+  /** The Leiden-style connectivity audit of the Louvain partition
+    * (Traag, Waltman & van Eck 2019, "From Louvain to Leiden":
+    * Louvain's node moves can leave a community internally DISCONNECTED
+    * — its defect, and the property Leiden's refinement phase exists to
+    * guarantee). Per community: node count and the number of connected
+    * components of its INDUCED subgraph; `is_connected` false is
+    * exactly the badly-connected-community flag of the paper.
+    *
+    * Scale shape: the level-1 pass, two label joins to keep
+    * intra-community edges only, then the guarded hook+compress
+    * component loop (O(log d) rounds) on that reduced edge set, one
+    * bounded groupBy. Nodes with no intra-community edge are their own
+    * component.
+    *
+    * @return (community, n_nodes, n_components, is_connected)
+    */
+  def louvainConnectivity(rounds: Int = 4,
+                          share: DataFrame => DataFrame = Share.materialize,
+                          labels: Option[DataFrame] = None): DataFrame = {
+    val l1 = level1Labels(labels, rounds, share)
+    l1.join(intraComponents(l1), Seq("n"), "left")
+      .select(col("n"), col("c"), coalesce(col("cluster_id"), col("n")).as("_cid"))
+      .groupBy(col("c").as("community"))
+      .agg(count(lit(1)).cast("long").as("n_nodes"),
+        countDistinct(col("_cid")).cast("long").as("n_components"))
+      .withColumn("is_connected", col("n_components") === 1L)
+  }
+
+  /** Leiden-style refinement of the Louvain partition (the minimal
+    * guarantee of Traag et al. 2019 §A: every community is internally
+    * connected): split each community into the connected components of
+    * its induced subgraph and report the refined partition's stats.
+    * Splitting disconnected parts NEVER decreases modularity — for
+    * c = A ⊎ B with no A–B edge the numerator changes by exactly
+    * +2·d_A·d_B > 0 — so Q(refined) ≥ Q(louvain) unconditionally, with
+    * strictness exactly when [[louvainConnectivity]] flags a community.
+    *
+    * Scale shape: identical to the audit (label joins to
+    * intra-community edges, guarded hook+compress components) plus the
+    * shared exact-rational stats tail. Refined labels are the
+    * component-min node ids (isolated-in-community nodes keep their
+    * own), deterministic in both engines.
+    *
+    * @return (community, n_nodes, w_in, degree_sum, modularity)
+    */
+  def colocationLouvainRefined(rounds: Int = 4,
+                               share: DataFrame => DataFrame = Share.materialize,
+                               labels: Option[DataFrame] = None): DataFrame = {
+    val l1 = level1Labels(labels, rounds, share)
+    communityStats(l1.join(intraComponents(l1), Seq("n"), "left")
+      .select(col("n"), coalesce(col("cluster_id"), col("n")).as("lbl")))
+  }
+
+  /** The level-1 labels (n, c) a Louvain diagnostic reads: `labels` when
+    * given, else this graph's own [[louvainLabels]] pass. A PERSISTED
+    * frame (the pipeline memo) is used as-is — re-checkpointing it is a
+    * wasted job per call — and anything else is share()'d: the callers
+    * read the labels in several actions, so an uncached (worse,
+    * nondeterministic) lineage would recompute per action and could
+    * diverge between them.
+    */
+  private def level1Labels(labels: Option[DataFrame], rounds: Int,
+                           share: DataFrame => DataFrame): DataFrame =
+    labels.map(df => if (df.storageLevel == StorageLevel.NONE) share(df) else df)
+      .getOrElse(share(louvainLabels(rounds, share)))
+
+  /** Per node: the connected component (`cluster_id`) of the subgraph
+    * its level-1 community induces — the intra-community pairs through
+    * the guarded hook+compress component loop. Nodes with no
+    * intra-community pair are absent.
+    */
+  private def intraComponents(l1: DataFrame): DataFrame = {
+    val intra = pairs
+      .join(l1.select(col("n"), col("c").as("_ca")), pairs("user_a") === col("n")).drop("n")
+      .join(l1.select(col("n"), col("c").as("_cb")), pairs("user_b") === col("n")).drop("n")
+      .filter(col("_ca") === col("_cb"))
+      .select(col("user_a").as("id_a"), col("user_b").as("id_b"))
+    Dedup.duplicateClusters(intra)
+      .select(col("doc_id").as("n"), col("cluster_id"))
+  }
+
+  /** Per community of `labels` (n, lbl): the node count, intra-community
+    * weight and weighted-degree sum, with the total weight W as `_W`.
+    */
+  private def communityTable(labels: DataFrame): DataFrame = {
+    val withA = pairs.join(labels.select(col("n"), col("lbl").as("_ca")), pairs("user_a") === col("n")).drop("n")
+    val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")
+    val intra = withB.filter(col("_ca") === col("_cb"))
+      .groupBy(col("_ca").as("community")).agg(sum(col("n_meetings")).cast("long").as("w_in"))
+    val degC = degW.select(col("src").as("u"), col("wdeg").as("_d"))
+      .join(labels, col("u") === labels("n"))
+      .groupBy(col("lbl").as("community"))
+      .agg(count(lit(1)).cast("long").as("n_nodes"), sum(col("_d")).cast("long").as("degree_sum"))
+    degC.join(intra, Seq("community"), "left")
+      .withColumn("w_in", coalesce(col("w_in"), lit(0L)))
+      .crossJoin(broadcast(totalW))
+  }
+
+  /** Exact integer modularity numerator Σ_c (4W·e_c − d_c²) of a
+    * [[communityTable]] as a 1-row `_qn` frame in DECIMAL(38,0), left
+    * unfired so the level-2 monotone guard can cross-join two of them
+    * and pay one action instead of two.
+    */
+  private def partitionQNum(comm: DataFrame): DataFrame =
+    comm.agg(sum(lit(4L) * dq(col("_W")) * dq(col("w_in")) -
+      dq(col("degree_sum")) * dq(col("degree_sum"))).as("_qn"))
+
+  /** Exact-rational partition statistics + Newman modularity shared by
+    * [[colocationCommunities]] and the Louvain family: per community
+    * the node count, intra-community weight and weighted-degree sum,
+    * plus the global Q = Σ_c (4W·e_c − d_c²) / (4W²) with the numerator
+    * in DECIMAL(38,0) and ONE double division at the end.
+    */
+  private def communityStats(labels: DataFrame): DataFrame = {
+    val comm = communityTable(labels)
+    comm.crossJoin(broadcast(partitionQNum(comm)))
+      .select(col("community"), col("n_nodes"), col("w_in"), col("degree_sum"),
+        (col("_qn").cast("double") /
+          (lit(4.0) * col("_W").cast("double") * col("_W").cast("double"))).as("modularity"))
+  }
+}
+
+object ContactGraph {
+
+  /** Build a [[ContactGraph]] from a co-location pair table
+    * (user_a, user_b, n_meetings). All four frames pass through `share`
+    * so downstream iterative readers see materialized tables, not the
+    * banded co-location self-join's lineage.
+    */
+  def from(pairs: DataFrame,
+           share: DataFrame => DataFrame = Share.materialize): ContactGraph = {
+    // an already-persisted pair table (the Pipeline memo) is used as-is
+    // — re-checkpointing a projection of it is a wasted job (the same
+    // storageLevel guard the Louvain diagnostics apply to their labels)
+    val projected = pairs.select(col("user_a"), col("user_b"), col("n_meetings"))
+    val p =
+      if (pairs.storageLevel == StorageLevel.NONE) share(projected)
+      else projected
+    val edgesW = share(p
+      .select(col("user_a").as("src"), col("user_b").as("dst"), col("n_meetings").as("w"))
+      .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"),
+        col("n_meetings").as("w"))))
+    // both degree flavors from ONE groupBy (one shuffle, one checkpoint)
+    val deg = share(edgesW.groupBy(col("src")).agg(
+      sum(col("w")).as("wdeg"), count(lit(1)).cast("long").as("d")))
+    // the node count gates per-round broadcasts downstream and the pair
+    // count (every pair adds 2 to Σd) gates Louvain's driver-side pass;
+    // this one action also forces the whole prolog to materialize here,
+    // where the cost is attributed once per snapshot
+    val counts = deg.agg(count(lit(1)).cast("long"), sum(col("d")).cast("long")).head()
+    val nPairs = if (counts.isNullAt(1)) 0L else counts.getLong(1) / 2
+    ContactGraph(p, edgesW, deg.select(col("src"), col("wdeg")),
+      deg.select(col("src"), col("d")), counts.getLong(0), nPairs)
   }
 
   /** The semi-synchronous modularity-gain label loop shared by
@@ -729,365 +955,5 @@ object ContactGraph {
       nodes.foreach { n => if (parity(n) == r % 2) comm(n) = best(n) }
     }
     nodes.map(n => (n, comm(n)))
-  }
-
-  /** Two-level Louvain (Blondel et al. 2008 phase 2): collapse the
-    * level-1 communities to supernodes — one groupBy over the
-    * twice-relabeled pair table — rerun the one-level pass on the
-    * supergraph, and report the COMPOSED partition's exact-rational
-    * statistics on the ORIGINAL graph, so `modularity` is directly
-    * comparable with [[colocationLouvain]]'s (same Q formula, same
-    * denominators; on the synthetic fixture Q(level 2) ≥ Q(level 1),
-    * pinned by spec).
-    *
-    * Supergraph bookkeeping: intra-community weight becomes a supernode
-    * self-loop that counts TWICE in the supernode degree and never
-    * feeds k_in (it stays internal wherever the supernode moves — see
-    * [[louvainPass]]); total weight W is invariant across levels. The
-    * level-2 candidate argmax is exact in DECIMAL(38,0) like level 1.
-    *
-    * Scale shape: level 1's per-round joins, plus two hash join
-    * relabels of the pair table, one groupBy collapse (the supergraph
-    * is ≤ #communities wide — orders smaller than the input), the same
-    * pass machinery over the collapsed table, and one final label
-    * composition join.
-    *
-    * @return (community, n_nodes, w_in, degree_sum, modularity) of the
-    *         composed level-2 partition over the original pair graph
-    */
-  def colocationLouvainL2(pairs: DataFrame, rounds: Int = 4, rounds2: Int = 4,
-                          share: DataFrame => DataFrame = Share.materialize,
-                          labels: Option[DataFrame] = None,
-                          localThreshold: Long = 100000L,
-                          graph: Option[ContactGraph] = None): DataFrame = {
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
-    // lazy: only the distributed (above-threshold) branch reads these —
-    // the local branch derives every weight statistic from the
-    // collapsed table and must not pay their checkpoint jobs
-    lazy val edges = graph
-      .map(_.edgesW.select(col("src").as("u"), col("dst").as("v"), col("w")))
-      .getOrElse(share(p
-        .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-        .unionByName(p.select(col("user_b").as("u"), col("user_a").as("v"),
-          col("n_meetings").as("w")))))
-    lazy val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
-    // provided PERSISTED labels (the pipeline memo) are used as-is —
-    // re-checkpointing them is a wasted job per call — but an
-    // unpersisted labels frame is share()'d: the local path below reads
-    // l1 in three separate actions, so an uncached (worse,
-    // nondeterministic) lineage would recompute per action and could
-    // diverge between them
-    val l1 = labels
-      .map(df => if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) share(df) else df)
-      .getOrElse(share(louvainLabels(pairs, rounds, share, graph = graph)))
-
-    // dense-rank relabel BEFORE the level-2 pass: supernode ids inherit
-    // level-1 WINNER labels (a sparse, structurally biased id space);
-    // 0-based ranks keep the supergraph in a compact id space for the
-    // collapse/composition joins below. The two-coloring schedule no
-    // longer depends on this — louvainPass ranks its own id population
-    // internally (the round-12 fix that moved the r11 relabel's parity
-    // argument one level down, into the pass itself).
-    // rank: dense 0-based ids over the distinct level-1 labels in
-    // ascending order. Probed with one limit-collect: when the label
-    // count fits `localThreshold` the rank is a driver-side sort (and
-    // the rank table a broadcastable local relation) instead of the
-    // distributed range-sort + zipWithIndex + checkpoint — the same
-    // (u0 ascending, 0-based) ids either way.
-    val probeCap = math.min(localThreshold + 1L, Int.MaxValue.toLong).toInt
-    val labelProbe = l1.select(col("c").as("u0")).distinct().limit(probeCap)
-      .collect().map(_.getLong(0))
-    val rankRowsOpt =
-      if (labelProbe.length <= localThreshold)
-        Some(labelProbe.sorted.zipWithIndex.map { case (u0, i) => (u0, i.toLong) })
-      else None
-    val rank = rankRowsOpt match {
-      case Some(rows) =>
-        broadcast(pairs.sparkSession.createDataFrame(rows.toSeq).toDF("u0", "r"))
-      case None => share(graft.util.Ids.withSequentialId(
-        l1.select(col("c").as("u0")).distinct(), "r", col("u0")))
-    }
-
-    // collapse: two join-relabels of the pair table, then ONE aggregate
-    // over the (min, max) rank pair — inter-community super-edges and
-    // intra-community self-loop weight come out of the same groupBy
-    // (the a == b rows), so the collapse is a single action whichever
-    // path runs below
-    val relabeled = p
-      .join(l1.select(col("n"), col("c").as("_la")), p("user_a") === col("n")).drop("n")
-      .join(l1.select(col("n"), col("c").as("_lb")), p("user_b") === col("n")).drop("n")
-      .join(rank.select(col("u0"), col("r").as("_ca")), col("_la") === col("u0")).drop("u0")
-      .join(rank.select(col("u0"), col("r").as("_cb")), col("_lb") === col("u0")).drop("u0")
-    val collapsed = relabeled
-      .groupBy(least(col("_ca"), col("_cb")).as("a"),
-        greatest(col("_ca"), col("_cb")).as("b"))
-      .agg(sum(col("n_meetings")).cast("long").as("w"))
-
-    // SMALL-SUPERGRAPH FALLBACK (the duplicateClusters pattern,
-    // Dedup.scala's <=1M-pair driver union-find): the level-2 pass on a
-    // collapsed graph of tens of supernodes costs ~11 s of pure
-    // per-round distributed-job latency (r12 warm audit) for work a
-    // driver loop finishes in microseconds. Probe both sizes with
-    // limit-collects (the probe IS the data when it fits — no separate
-    // counts); under `localThreshold` run an exact driver-side replica
-    // of louvainPass — same two-coloring schedule, same BigInt-exact
-    // gain, same (gain desc, cand asc) tie-break, bit-identical labels
-    // (spec-pinned against the distributed pass) — and compose the
-    // winner labels through ONE broadcast join. Beyond the threshold
-    // the distributed pass runs unchanged.
-    val collapsedRows = rankRowsOpt match {
-      case Some(_) =>
-        Some(collapsed.limit(probeCap).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-          .filter(_.length <= localThreshold)
-      case None => None
-    }
-    collapsedRows match {
-      case Some(rows) =>
-        val rankRows = rankRowsOpt.get
-        val undirected = rows.filter(t => t._1 != t._2)
-        val self = rows.filter(t => t._1 == t._2).map(t => t._1 -> t._3).toMap
-        // every original pair lands in exactly one collapsed cell, so
-        // the collapsed weights sum to the invariant total W
-        val w = rows.iterator.map(_._3).sum
-        val universe = rankRows.map(_._2)
-        val l2local = louvainPassLocal(undirected, universe, self, w, rounds2).toMap
-        val u0ByR = rankRows.map(_.swap).toMap
-
-        // the monotone qn guard AND the per-community (w_in,
-        // degree_sum) statistics are pure functions of the collapsed
-        // table — w_in(C) sums the collapsed cells internal to C,
-        // degree_sum(C) counts every collapsed cell weight once per
-        // endpoint in C (a self cell twice) — so both partitions'
-        // exact numerators come from two driver scans of `rows`
-        // instead of four distributed joins over the original pair
-        // table. Only n_nodes needs the cluster: one broadcast-mapped
-        // count over the l1 label table. (Assumes, like the
-        // distributed path's edge-derived node population, that the
-        // labels cover exactly the pair-graph nodes.)
-        def statsOf(groupOf: Long => Long) = {
-          val wIn = scala.collection.mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
-          val degS = scala.collection.mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
-          rows.foreach { case (a, b, wgt) =>
-            val ga = groupOf(a); val gb = groupOf(b)
-            if (ga == gb) wIn(ga) += wgt
-            degS(ga) += wgt; degS(gb) += wgt
-          }
-          (wIn, degS)
-        }
-        def qnOf(st: (scala.collection.mutable.Map[Long, Long],
-                      scala.collection.mutable.Map[Long, Long])): BigInt =
-          st._2.keysIterator.map(g =>
-            4 * BigInt(w) * BigInt(st._1(g)) - BigInt(st._2(g)).pow(2)).sum
-        val st1 = statsOf(identity)
-        val st2 = statsOf(l2local)
-        val improved = qnOf(st2) > qnOf(st1)
-        val (wInW, degSW) = if (improved) st2 else st1
-        val qnW = if (improved) qnOf(st2) else qnOf(st1)
-        val groupOfRank: Long => Long = if (improved) l2local else identity
-        // replicate the distributed division exactly: DECIMAL(38,0) →
-        // double via java BigDecimal, then (4.0 · W) · W in IEEE order
-        val wD = w.toDouble
-        val modularity =
-          new java.math.BigDecimal(qnW.bigInteger).doubleValue / (4.0 * wD * wD)
-        val statsRows = degSW.keysIterator
-          .map(g => (u0ByR(g), wInW(g), degSW(g), modularity)).toSeq
-        val statsTable = pairs.sparkSession.createDataFrame(statsRows)
-          .toDF("community", "w_in", "degree_sum", "modularity")
-        val lblByU0 = rankRows.map { case (u0, r) => (u0, u0ByR(groupOfRank(r))) }
-        val mapDf = pairs.sparkSession.createDataFrame(lblByU0.toSeq).toDF("_c", "lbl")
-        l1.join(broadcast(mapDf), l1("c") === col("_c"))
-          .groupBy(col("lbl").as("community")).agg(count(lit(1)).cast("long").as("n_nodes"))
-          .join(broadcast(statsTable), Seq("community"))
-          .select(col("community"), col("n_nodes"), col("w_in"), col("degree_sum"),
-            col("modularity"))
-      case None =>
-        val superPairs = share(collapsed.filter(col("a") =!= col("b"))
-          .select(col("a").as("user_a"), col("b").as("user_b"), col("w").as("n_meetings")))
-        val selfW = collapsed.filter(col("a") === col("b"))
-          .select(col("a").as("u"), col("w").as("_wself"))
-        val edges2 = share(superPairs
-          .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-          .unionByName(superPairs.select(col("user_b").as("u"), col("user_a").as("v"),
-            col("n_meetings").as("w"))))
-        // every level-1 community is a supernode, including those with no
-        // inter-community edge (they would vanish from an edge-derived
-        // degree table and lose their nodes in the composition join)
-        val deg2 = share(rank.select(col("r").as("u"))
-          .join(edges2.groupBy(col("u")).agg(sum(col("w")).cast("long").as("_ke")), Seq("u"), "left")
-          .join(selfW, Seq("u"), "left")
-          .select(col("u"),
-            (coalesce(col("_ke"), lit(0L)) + lit(2L) * coalesce(col("_wself"), lit(0L)))
-              .cast("long").as("k")))
-        val l2 = louvainPass(edges2, deg2, totalW, rounds2, share)
-        // compose n → c1 → rank → level-2 label (a rank) → back to the
-        // original community-id space of that winning rank
-        val composed = share(l1
-          .join(rank.select(col("u0"), col("r")), l1("c") === col("u0"))
-          .join(l2.select(col("n").as("_rn"), col("c").as("_c2r")), col("r") === col("_rn"))
-          .join(rank.select(col("u0").as("lbl"), col("r").as("_rb")), col("_c2r") === col("_rb"))
-          .select(col("n"), col("lbl")))
-
-        // monotone guard (the "keep the best partition seen" rule every
-        // sequential Louvain applies implicitly): the semi-synchronous
-        // schedule admits simultaneous same-class moves whose joint ΔQ
-        // can be negative even when each individual gain is positive
-        // (the cross-term −k_u·k_v of two movers entering one community
-        // is unpriced). Compare the EXACT integer Q numerators and keep
-        // the level-1 partition unless level 2 strictly improved — one
-        // action for BOTH numerators (two 1-row aggregates cross-joined)
-        val qnRow = partitionQNumDf(p, edges, l1.select(col("n"), col("c").as("lbl")))
-          .select(col("_qn").as("_qn1"))
-          .crossJoin(partitionQNumDf(p, edges, composed).select(col("_qn").as("_qn2")))
-          .collect()(0)
-        def qn(i: Int) = Option(qnRow.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO)
-        val winner =
-          if (qn(1).compareTo(qn(0)) > 0) composed
-          else l1.select(col("n"), col("c").as("lbl"))
-        communityStats(p, edges, winner, degW = graph.map(_.degW))
-    }
-  }
-
-  /** The Leiden-style connectivity audit of the Louvain partition
-    * (Traag, Waltman & van Eck 2019, "From Louvain to Leiden":
-    * Louvain's node moves can leave a community internally DISCONNECTED
-    * — its defect, and the property Leiden's refinement phase exists to
-    * guarantee). Per community: node count and the number of connected
-    * components of its INDUCED subgraph; `is_connected` false is
-    * exactly the badly-connected-community flag of the paper.
-    *
-    * Scale shape: the level-1 pass, two label joins to keep
-    * intra-community edges only, then the guarded hook+compress
-    * component loop (O(log d) rounds) on that reduced edge set, one
-    * bounded groupBy. Nodes with no intra-community edge are their own
-    * component.
-    *
-    * @return (community, n_nodes, n_components, is_connected)
-    */
-  def louvainConnectivity(pairs: DataFrame, rounds: Int = 4,
-                          share: DataFrame => DataFrame = Share.materialize,
-                          labels: Option[DataFrame] = None,
-                          graph: Option[ContactGraph] = None): DataFrame = {
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
-    // provided PERSISTED labels (the pipeline memo) are used as-is —
-    // re-checkpointing them is a wasted job per call (the L2 guard)
-    val l1 = labels
-      .map(df => if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) share(df) else df)
-      .getOrElse(share(louvainLabels(pairs, rounds, share, graph = graph)))
-    val intra = p
-      .join(l1.select(col("n"), col("c").as("_ca")), p("user_a") === col("n")).drop("n")
-      .join(l1.select(col("n"), col("c").as("_cb")), p("user_b") === col("n")).drop("n")
-      .filter(col("_ca") === col("_cb"))
-      .select(col("user_a").as("id_a"), col("user_b").as("id_b"))
-    val comps = Dedup.duplicateClusters(intra)
-      .select(col("doc_id").as("n"), col("cluster_id"))
-    l1.join(comps, Seq("n"), "left")
-      .select(col("n"), col("c"), coalesce(col("cluster_id"), col("n")).as("_cid"))
-      .groupBy(col("c").as("community"))
-      .agg(count(lit(1)).cast("long").as("n_nodes"),
-        countDistinct(col("_cid")).cast("long").as("n_components"))
-      .withColumn("is_connected", col("n_components") === 1L)
-  }
-
-  /** Leiden-style refinement of the Louvain partition (the minimal
-    * guarantee of Traag et al. 2019 §A: every community is internally
-    * connected): split each community into the connected components of
-    * its induced subgraph and report the refined partition's stats.
-    * Splitting disconnected parts NEVER decreases modularity — for
-    * c = A ⊎ B with no A–B edge the numerator changes by exactly
-    * +2·d_A·d_B > 0 — so Q(refined) ≥ Q(louvain) unconditionally, with
-    * strictness exactly when [[louvainConnectivity]] flags a community.
-    *
-    * Scale shape: identical to the audit (label joins to
-    * intra-community edges, guarded hook+compress components) plus the
-    * shared exact-rational stats tail. Refined labels are the
-    * component-min node ids (isolated-in-community nodes keep their
-    * own), deterministic in both engines.
-    *
-    * @return (community, n_nodes, w_in, degree_sum, modularity)
-    */
-  def colocationLouvainRefined(pairs: DataFrame, rounds: Int = 4,
-                               share: DataFrame => DataFrame = Share.materialize,
-                               labels: Option[DataFrame] = None,
-                               graph: Option[ContactGraph] = None): DataFrame = {
-    val p = graph.map(_.pairs)
-      .getOrElse(share(pairs.select(col("user_a"), col("user_b"), col("n_meetings"))))
-    val edges = graph
-      .map(_.edgesW.select(col("src").as("u"), col("dst").as("v"), col("w")))
-      .getOrElse(share(p
-        .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
-        .unionByName(p.select(col("user_b").as("u"), col("user_a").as("v"),
-          col("n_meetings").as("w")))))
-    // provided PERSISTED labels (the pipeline memo) are used as-is —
-    // re-checkpointing them is a wasted job per call (the L2 guard)
-    val l1 = labels
-      .map(df => if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) share(df) else df)
-      .getOrElse(share(louvainLabels(pairs, rounds, share, graph = graph)))
-    val intra = p
-      .join(l1.select(col("n"), col("c").as("_ca")), p("user_a") === col("n")).drop("n")
-      .join(l1.select(col("n"), col("c").as("_cb")), p("user_b") === col("n")).drop("n")
-      .filter(col("_ca") === col("_cb"))
-      .select(col("user_a").as("id_a"), col("user_b").as("id_b"))
-    val comps = Dedup.duplicateClusters(intra)
-      .select(col("doc_id").as("n"), col("cluster_id"))
-    val refined = l1.join(comps, Seq("n"), "left")
-      .select(col("n"), coalesce(col("cluster_id"), col("n")).as("lbl"))
-    communityStats(p, edges, refined, degW = graph.map(_.degW))
-  }
-
-  /** Exact integer modularity numerator Σ_c (4W·e_c − d_c²) of a
-    * partition as a 1-row `_qn` frame for the level-2 monotone guard,
-    * left unfired so callers comparing two partitions can cross-join the
-    * frames and pay one action instead of two.
-    */
-  private def partitionQNumDf(p: DataFrame, edges: DataFrame,
-                              labels: DataFrame): DataFrame = {
-    val withA = p.join(labels.select(col("n"), col("lbl").as("_ca")), p("user_a") === col("n")).drop("n")
-    val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")
-    val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
-    val intra = withB.filter(col("_ca") === col("_cb"))
-      .groupBy(col("_ca").as("community")).agg(sum(col("n_meetings")).cast("long").as("w_in"))
-    val degC = edges.groupBy(col("u")).agg(sum(col("w")).as("_d"))
-      .join(labels, col("u") === labels("n"))
-      .groupBy(col("lbl").as("community"))
-      .agg(sum(col("_d")).cast("long").as("degree_sum"))
-    degC.join(intra, Seq("community"), "left")
-      .withColumn("w_in", coalesce(col("w_in"), lit(0L)))
-      .crossJoin(broadcast(totalW))
-      .agg(sum(lit(4L) * dq(col("_W")) * dq(col("w_in")) -
-        dq(col("degree_sum")) * dq(col("degree_sum"))).as("_qn"))
-  }
-
-  /** Exact-rational partition statistics + Newman modularity shared by
-    * [[colocationCommunities]] and [[colocationLouvain]]: per community
-    * the node count, intra-community weight and weighted-degree sum,
-    * plus the global Q = Σ_c (4W·e_c − d_c²) / (4W²) with the numerator
-    * in DECIMAL(38,0) and ONE double division at the end.
-    */
-  private def communityStats(p: DataFrame, edges: DataFrame, labels: DataFrame,
-                             degW: Option[DataFrame]): DataFrame = {
-    val withA = p.join(labels.select(col("n"), col("lbl").as("_ca")), p("user_a") === col("n")).drop("n")
-    val withB = withA.join(labels.select(col("n"), col("lbl").as("_cb")), withA("user_b") === col("n")).drop("n")
-    val totalW = p.agg(sum(col("n_meetings")).cast("long").as("_W"))
-    val intra = withB.filter(col("_ca") === col("_cb"))
-      .groupBy(col("_ca").as("community")).agg(sum(col("n_meetings")).cast("long").as("w_in"))
-    // the weighted degree is the shared-prolog table when the caller
-    // holds a ContactGraph — re-deriving it is one more 2|pairs| groupBy
-    val degC = degW.map(_.select(col("src").as("u"), col("wdeg").as("_d")))
-      .getOrElse(edges.groupBy(col("u")).agg(sum(col("w")).as("_d")))
-      .join(labels, col("u") === labels("n"))
-      .groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).cast("long").as("n_nodes"), sum(col("_d")).cast("long").as("degree_sum"))
-    val comm = degC.join(intra, Seq("community"), "left")
-      .withColumn("w_in", coalesce(col("w_in"), lit(0L)))
-      .crossJoin(broadcast(totalW))
-    val qNum = comm.agg(sum(lit(4L) * dq(col("_W")) * dq(col("w_in")) -
-      dq(col("degree_sum")) * dq(col("degree_sum"))).as("_qn"))
-    comm.crossJoin(broadcast(qNum))
-      .select(col("community"), col("n_nodes"), col("w_in"), col("degree_sum"),
-        (col("_qn").cast("double") /
-          (lit(4.0) * col("_W").cast("double") * col("_W").cast("double"))).as("modularity"))
   }
 }

@@ -830,7 +830,7 @@ object Dedup {
     */
   def embeddingNearDup(emb: DataFrame, threshold: Double = 0.95, planes: Int = 16,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sig = Ann.hyperplaneSignature(emb, planes, idCol, vecCol)
+    val sig = Ann.hyperplaneSignature(emb, planes, vecCol = vecCol)
     val l = sig.select(col("_sig").as("_s"), col(idCol).as("id_a"), col("_v").as("_v_a"))
     val r = sig.select(col("_sig").as("_s"), col(idCol).as("id_b"), col("_v").as("_v_b"))
     l.join(r, Seq("_s")).filter(col("id_a") < col("id_b"))
@@ -864,7 +864,7 @@ object Dedup {
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     share: DataFrame => DataFrame = Share.materialize): DataFrame = {
     val model = KMeans.fit(emb, k, iters, idCol, vecCol, share = share)
-    val assigned = KMeans.assign(emb, model, idCol, vecCol)
+    val assigned = KMeans.assign(emb, model, vecCol = vecCol)
       .select(col(idCol), col(vecCol), col("cluster_id"))
     val a = assigned.select(col("cluster_id"), col(idCol).as("_id"), col(vecCol).as("_v"))
     val b = assigned.select(col("cluster_id"), col(idCol).as("_id2"), col(vecCol).as("_v2"))

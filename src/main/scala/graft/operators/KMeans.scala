@@ -142,8 +142,7 @@ object KMeans {
   /** Assign each vector to its nearest fitted centroid (same integer
     * metric and tie rule as training). Pure projection — no shuffle.
     */
-  def assign(emb: DataFrame, model: Model,
-             idCol: String = "vec_id", vecCol: String = "embedding",
+  def assign(emb: DataFrame, model: Model, vecCol: String = "embedding",
              quantScale: Double = 1e6): DataFrame =
     emb.withColumn("cluster_id", nearest(model.centroids, quantize(col(vecCol), quantScale)))
 
@@ -166,15 +165,15 @@ object KMeans {
                     quantScale: Double = 1e6,
                     share: DataFrame => DataFrame = Share.materialize): DataFrame =
     clusterPurity(emb, fit(emb, k, iters, idCol, vecCol, quantScale, share),
-      labelCol, idCol, vecCol, quantScale)
+      labelCol, vecCol, quantScale)
 
   /** [[clusterPurity]] against an already-trained model — the
     * production shape: clusters are trained once per corpus snapshot
     * and every eval row (purity, drift, outliers) reads the same model.
     */
   def clusterPurity(emb: DataFrame, model: Model, labelCol: String,
-                    idCol: String, vecCol: String, quantScale: Double): DataFrame = {
-    assign(emb, model, idCol, vecCol, quantScale)
+                    vecCol: String, quantScale: Double): DataFrame = {
+    assign(emb, model, vecCol, quantScale)
       .groupBy(col("cluster_id"), col(labelCol).cast("long").as("_lbl"))
       .agg(count(lit(1)).as("_n"))
       .groupBy(col("cluster_id"))
@@ -262,18 +261,17 @@ object KMeans {
                    alpha: Long = 1L, quantScale: Double = 1e6,
                    share: DataFrame => DataFrame = Share.materialize): DataFrame =
     clusterDrift(a, b, fit(train, k, iters, idCol, vecCol, quantScale, share),
-      idCol, vecCol, alpha, quantScale)
+      vecCol, alpha, quantScale)
 
   /** [[clusterDrift]] against an already-trained shared model (see
     * [[clusterPurity]] for the train-once rationale); k is the model's
     * cluster count.
     */
-  def clusterDrift(a: DataFrame, b: DataFrame, model: Model,
-                   idCol: String, vecCol: String,
+  def clusterDrift(a: DataFrame, b: DataFrame, model: Model, vecCol: String,
                    alpha: Long, quantScale: Double): DataFrame = {
     require(alpha > 0, "clusterDrift: alpha must be positive")
     val k = model.centroids.length
-    def counts(d: DataFrame, out: String) = assign(d, model, idCol, vecCol, quantScale)
+    def counts(d: DataFrame, out: String) = assign(d, model, vecCol, quantScale)
       .groupBy(col("cluster_id")).agg(count(lit(1)).as(out))
 
     val spine = a.sparkSession.range(k).select(col("id").as("cluster_id"))

@@ -41,8 +41,8 @@ class ColocationSpec extends SparkSpec {
       (3L, 4L, 50 * M, 60 * M, -122.4, 47.6),
       (4L, 5L, 0L, 30 * M, -122.2, 47.6),
       (5L, 6L, 10 * M, 40 * M, -122.2, 47.6))
-    val hist = ContactGraph.colocationDegrees(
-      SpatialOps.colocationPairs(intervals, bandMinutes = 120.0))
+    val hist = ContactGraph.from(
+      SpatialOps.colocationPairs(intervals, bandMinutes = 120.0)).colocationDegrees()
       .select("bucket", "n_users", "sum_degree", "bucket_lo")
       .as[(Long, Long, Long, Long)].collect().toSet
     // degrees: user1 -> 3 (bucket 1), users 2,3,4,5,6 -> 1 (bucket 0)
@@ -98,7 +98,7 @@ class ColocationSpec extends SparkSpec {
     val pairs = Seq((1L, 2L, 2L, 0L), (2L, 3L, 1L, 0L), (2L, 4L, 1L, 0L))
       .toDF("user_a", "user_b", "n_meetings", "overlap_us")
     val iters = 3
-    val got = ContactGraph.colocationPagerank(pairs, iters = iters)
+    val got = ContactGraph.from(pairs).colocationPagerank(iters = iters)
       .as[(Long, Long)].collect().toMap
     // replay: symmetric edges, weighted degrees, floor-division flow
     val edges = Seq((1L, 2L, 2L), (2L, 1L, 2L), (2L, 3L, 1L), (3L, 2L, 1L),
@@ -175,7 +175,7 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val got = ContactGraph.colocationCommunities(pairs, rounds = 3)
+    val got = ContactGraph.from(pairs).colocationCommunities(rounds = 3)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     // W = 61; each community: w_in = 30, degree_sum = 61
@@ -198,7 +198,7 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val got = ContactGraph.colocationLouvain(pairs, rounds = 4)
+    val got = ContactGraph.from(pairs).colocationLouvain(rounds = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.keySet == Set(1L, 5L), got.keySet)
@@ -206,7 +206,7 @@ class ColocationSpec extends SparkSpec {
     assert(got(5L) === ((3L, 30L, 61L, 7198.0 / 14884.0)))
     // the gain objective recovers the same partition LPA's plurality
     // rule finds here — equal exact-rational modularity
-    val qLpa = ContactGraph.colocationCommunities(pairs, rounds = 3)
+    val qLpa = ContactGraph.from(pairs).colocationCommunities(rounds = 3)
       .select("modularity").as[Double].head()
     assert(got(1L)._4 == qLpa)
   }
@@ -222,7 +222,7 @@ class ColocationSpec extends SparkSpec {
       (2L, 4L, 10L), (2L, 6L, 10L), (4L, 6L, 10L),
       (8L, 10L, 10L), (8L, 12L, 10L), (10L, 12L, 10L),
       (6L, 8L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val got = ContactGraph.colocationLouvain(even, rounds = 4)
+    val got = ContactGraph.from(even).colocationLouvain(rounds = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.keySet == Set(2L, 10L), got.keySet)
@@ -238,7 +238,7 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val l2a = ContactGraph.colocationLouvainL2(barbell, rounds = 4, rounds2 = 4)
+    val l2a = ContactGraph.from(barbell).colocationLouvainL2(rounds = 4, rounds2 = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(l2a.keySet.size == 2, l2a.keySet)
@@ -252,8 +252,8 @@ class ColocationSpec extends SparkSpec {
       val rows = df.select("modularity", "community").collect()
       (rows.head.getDouble(0), rows.length.toLong)
     }
-    val (q1, n1) = q(ContactGraph.colocationLouvain(path, rounds = 4))
-    val (q2, n2) = q(ContactGraph.colocationLouvainL2(path, rounds = 4, rounds2 = 4))
+    val (q1, n1) = q(ContactGraph.from(path).colocationLouvain(rounds = 4))
+    val (q2, n2) = q(ContactGraph.from(path).colocationLouvainL2(rounds = 4, rounds2 = 4))
     assert(q2 >= q1, s"Q(l2)=$q2 < Q(l1)=$q1")
     assert(n2 <= n1, s"communities grew: $n1 -> $n2")
     assert(q2 > q1, s"expected strict improvement on P12: $q1 -> $q2 ($n1 -> $n2 communities)")
@@ -270,9 +270,9 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 9L), (7L, 8L, 1000L)).toDF("user_a", "user_b", "n_meetings")
-    val (q1c, n1c) = q(ContactGraph.colocationLouvain(cliques, rounds = 4))
+    val (q1c, n1c) = q(ContactGraph.from(cliques).colocationLouvain(rounds = 4))
     assert(n1c == 3, s"level 1 should find the 3 groups, got $n1c")
-    val l2c = ContactGraph.colocationLouvainL2(cliques, rounds = 4, rounds2 = 4)
+    val l2c = ContactGraph.from(cliques).colocationLouvainL2(rounds = 4, rounds2 = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     val qExp = 552000.0 / 4571044.0 // (4W·69 − 138² + 4W·1000 − 2000²) / 4W², W = 1069
@@ -295,8 +295,8 @@ class ColocationSpec extends SparkSpec {
       val pairs = fx.toDF("user_a", "user_b", "n_meetings")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity)
-      val local = rows(ContactGraph.louvainLabels(pairs, rounds = 3))
-      val dist = rows(ContactGraph.louvainLabels(pairs, rounds = 3, localThreshold = 0L))
+      val local = rows(ContactGraph.from(pairs).louvainLabels(rounds = 3))
+      val dist = rows(ContactGraph.from(pairs).louvainLabels(rounds = 3, localThreshold = 0L))
       assert(local.toSeq == dist.toSeq, s"fixture $i: local != distributed")
     }
   }
@@ -319,8 +319,8 @@ class ColocationSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getDouble(4))).sortBy(t => (t._1, t._2))
-      val local = rows(ContactGraph.colocationLouvainL2(pairs, rounds = 3, rounds2 = 3))
-      val dist = rows(ContactGraph.colocationLouvainL2(pairs, rounds = 3, rounds2 = 3,
+      val local = rows(ContactGraph.from(pairs).colocationLouvainL2(rounds = 3, rounds2 = 3))
+      val dist = rows(ContactGraph.from(pairs).colocationLouvainL2(rounds = 3, rounds2 = 3,
         localThreshold = 0L))
       assert(local.toSeq == dist.toSeq, s"fixture $i: local != distributed")
     }
@@ -340,12 +340,12 @@ class ColocationSpec extends SparkSpec {
     val pairs = Seq(
       (0L, 1L, 1L), (0L, 2L, 1L), (0L, 9L, 10L), (8L, 9L, 10L))
       .toDF("user_a", "user_b", "n_meetings")
-    val audit = ContactGraph.louvainConnectivity(pairs, rounds = 2)
+    val audit = ContactGraph.from(pairs).louvainConnectivity(rounds = 2)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(audit(0L) == ((2L, 2L, false)), s"community 0 must audit disconnected: $audit")
     assert(audit(9L) == ((3L, 1L, true)), audit)
 
-    val refined = ContactGraph.colocationLouvainRefined(pairs, rounds = 2)
+    val refined = ContactGraph.from(pairs).colocationLouvainRefined(rounds = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     val qRef = -6.0 / 1936.0
@@ -353,7 +353,7 @@ class ColocationSpec extends SparkSpec {
     assert(refined(1L) == ((1L, 0L, 1L, qRef)), refined)
     assert(refined(2L) == ((1L, 0L, 1L, qRef)), refined)
     assert(refined(0L) == ((3L, 20L, 42L, qRef)), refined)
-    val qL1 = ContactGraph.colocationLouvain(pairs, rounds = 2)
+    val qL1 = ContactGraph.from(pairs).colocationLouvain(rounds = 2)
       .select("modularity").as[Double].head()
     assert(qRef > qL1, s"refinement must strictly improve: $qL1 -> $qRef")
 
@@ -363,7 +363,7 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val rb = ContactGraph.colocationLouvainRefined(barbell, rounds = 4)
+    val rb = ContactGraph.from(barbell).colocationLouvainRefined(rounds = 4)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
     assert(rb == Set((3L, 30L, 61L, 7198.0 / 14884.0)), rb)
   }
@@ -395,12 +395,12 @@ class ColocationSpec extends SparkSpec {
     import spark.implicits._
     val star = Seq((0L, 1L, 1L), (0L, 2L, 1L), (0L, 3L, 1L))
       .toDF("user_a", "user_b", "n_meetings")
-    val rStar = ContactGraph.colocationAssortativity(star)
+    val rStar = ContactGraph.from(star).colocationAssortativity()
       .select("assortativity").as[Double].head()
     assert(rStar == -1.0, s"hub-to-leaf only must be perfectly disassortative, got $rStar")
     val path = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L))
       .toDF("user_a", "user_b", "n_meetings")
-    val rPath = ContactGraph.colocationAssortativity(path)
+    val rPath = ContactGraph.from(path).colocationAssortativity()
       .select("assortativity").as[Double].head()
     assert(rPath == -0.5, s"4-path: (4*3*8-100)/(2*3*18-100) = -0.5, got $rPath")
   }

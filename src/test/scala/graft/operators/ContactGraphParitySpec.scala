@@ -4,12 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The shared-prolog path (a [[ContactGraph]] passed in, the
-  * Pipeline memo's shape) must be BIT-IDENTICAL to each operator's
-  * standalone derivation for every converted graph diagnostic — the
-  * memo is a materialization strategy, never a semantics knob. A seeded
+/** How a [[ContactGraph]] is materialized must never change what its
+  * operators return: the memo is a materialization strategy, never a
+  * semantics knob. Every graph diagnostic is BIT-IDENTICAL over a
+  * checkpointed graph and an unshared one, and over a graph whose
+  * node-sized frames broadcast and one whose frames shuffle. A seeded
   * weighted pair fixture with hubs, leaves, ties and an isolated pair
-  * exercises tie-breaks (LPA min-label, argmax order) on both paths.
+  * exercises tie-breaks (LPA min-label, argmax order) on every path.
   */
 class ContactGraphParitySpec extends SparkSpec {
   import spark.implicits._
@@ -28,41 +29,58 @@ class ContactGraphParitySpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("every graph diagnostic is bit-identical with and without the shared prolog") {
+  test("shared and unshared graphs give bit-identical diagnostics") {
     val p = pairs.localCheckpoint(true)
-    val g = Some(ContactGraph.contactGraph(p))
-    val cases: Seq[(String, Option[ContactGraph] => DataFrame)] = Seq(
-      "degrees" -> (gr => ContactGraph.colocationDegrees(p, graph = gr)),
-      "degree_correlation" -> (gr => ContactGraph.degreeCorrelation(p, graph = gr)),
-      "assortativity" -> (gr => ContactGraph.colocationAssortativity(p, graph = gr)),
-      "kcore" -> (gr => ContactGraph.kCoreHistogram(p, rounds = 3, graph = gr)),
-      "richclub" -> (gr => ContactGraph.richClub(p, graph = gr)),
-      "spectral" -> (gr => ContactGraph.spectralRadius(p, rounds = 3, graph = gr)),
-      "pagerank" -> (gr => ContactGraph.colocationPagerank(p, iters = 3, graph = gr)),
-      "communities" -> (gr => ContactGraph.colocationCommunities(p, rounds = 3, graph = gr)),
-      "ball" -> (gr => ContactGraph.neighborhoodFunction(p, seedsMod = 2L, maxHops = 2, graph = gr)),
-      "louvain" -> (gr => ContactGraph.colocationLouvain(p, rounds = 3, graph = gr)),
-      "louvain_l2" -> (gr => ContactGraph.colocationLouvainL2(p, rounds = 3, rounds2 = 3, graph = gr)),
-      "connectivity" -> (gr => ContactGraph.louvainConnectivity(p, rounds = 3, graph = gr)),
-      "refined" -> (gr => ContactGraph.colocationLouvainRefined(p, rounds = 3, graph = gr)))
+    val cases: Seq[(String, ContactGraph => DataFrame)] = Seq(
+      "degrees" -> (_.colocationDegrees()),
+      "degree_correlation" -> (_.degreeCorrelation()),
+      "assortativity" -> (_.colocationAssortativity()),
+      "kcore" -> (_.kCoreHistogram(rounds = 3)),
+      "richclub" -> (_.richClub()),
+      "spectral" -> (_.spectralRadius(rounds = 3)),
+      "pagerank" -> (_.colocationPagerank(iters = 3)),
+      "communities" -> (_.colocationCommunities(rounds = 3)),
+      "ball" -> (_.neighborhoodFunction(seedsMod = 2L, maxHops = 2)),
+      "louvain" -> (_.colocationLouvain(rounds = 3)),
+      "louvain_l2" -> (_.colocationLouvainL2(rounds = 3, rounds2 = 3)),
+      "connectivity" -> (_.louvainConnectivity(rounds = 3)),
+      "refined" -> (_.colocationLouvainRefined(rounds = 3)))
+    val shared = ContactGraph.from(p, Share.materialize)
+    val unshared = ContactGraph.from(p, Share.none)
     cases.foreach { case (name, run) =>
-      val withGraph = sortedRows(run(g))
-      val standalone = sortedRows(run(None))
-      assert(withGraph.nonEmpty, s"$name: empty result")
-      assert(withGraph === standalone, s"$name: shared-prolog path diverged")
+      val a = sortedRows(run(shared))
+      assert(a.nonEmpty, s"$name: empty result")
+      assert(a === sortedRows(run(unshared)), s"$name: shared graph diverged")
     }
   }
 
   test("the small-node proof gates the broadcast, never the result") {
     val p = pairs.localCheckpoint(true)
-    val g = ContactGraph.contactGraph(p)
+    val g = ContactGraph.from(p)
     assert(g.nNodes > 0 && g.broadcastNodeFrames)
     // forcing the at-scale shape (no broadcast) through a graph with a
-    // fabricated huge node count must not change a single row
+    // fabricated huge node count must not change a single row of any
+    // operator that switches on the proof
     val big = g.copy(nNodes = Long.MaxValue)
     assert(!big.broadcastNodeFrames)
-    val a = sortedRows(ContactGraph.colocationPagerank(p, iters = 3, graph = Some(g)))
-    val b = sortedRows(ContactGraph.colocationPagerank(p, iters = 3, graph = Some(big)))
-    assert(a === b)
+    val cases: Seq[(String, ContactGraph => DataFrame)] = Seq(
+      "kcore" -> (_.kCoreHistogram(rounds = 3)),
+      "spectral" -> (_.spectralRadius(rounds = 3)),
+      "pagerank" -> (_.colocationPagerank(iters = 3)),
+      "communities" -> (_.colocationCommunities(rounds = 3)))
+    cases.foreach { case (name, run) =>
+      assert(sortedRows(run(g)) === sortedRows(run(big)), s"$name: broadcast changed the result")
+    }
+  }
+
+  test("the node and pair counts come from the degree table") {
+    val p = pairs.localCheckpoint(true)
+    val g = ContactGraph.from(p)
+    assert(g.nPairs === p.count())
+    assert(g.nNodes ===
+      p.select(explode(array(col("user_a"), col("user_b")))).distinct().count())
+    val none = p.limit(0)
+    val empty = ContactGraph.from(none)
+    assert(empty.nPairs === none.count() && empty.nNodes === 0L)
   }
 }

@@ -54,12 +54,12 @@ class GraphPropertySpec extends SparkSpec {
         val df = weighted(edges, seed).toDF("user_a", "user_b", "n_meetings")
         val expect = peelCoreness(edges).values.groupBy(identity)
           .map { case (c, xs) => (c.toLong, xs.size.toLong) }.toSeq.sorted
-        val got = ContactGraph.kCoreHistogram(df, rounds = 24).collect()
+        val got = ContactGraph.from(df).kCoreHistogram(rounds = 24).collect()
           .map(r => (r.getAs[Long]("coreness"), r.getAs[Long]("n_users"))).toSeq.sorted
         assert(got == expect, s"seed=$seed edges=${edges.size}")
         // convergence: more rounds change nothing (the pinned-rounds
         // contract is safe for any rounds >= the fixture's chain)
-        val more = ContactGraph.kCoreHistogram(df, rounds = 30).collect()
+        val more = ContactGraph.from(df).kCoreHistogram(rounds = 30).collect()
           .map(r => (r.getAs[Long]("coreness"), r.getAs[Long]("n_users"))).toSeq.sorted
         assert(more == expect, s"seed=$seed not converged by 24 rounds")
       }
@@ -81,7 +81,7 @@ class GraphPropertySpec extends SparkSpec {
           (k, nn, ne, 2.0 * ne / (nn.toDouble * (nn - 1).toDouble))
         }).sorted
         val df = weighted(edges, seed).toDF("user_a", "user_b", "n_meetings")
-        val got = ContactGraph.richClub(df).collect()
+        val got = ContactGraph.from(df).richClub().collect()
           .map(r => (r.getAs[Long]("k"), r.getAs[Long]("n_nodes"),
             r.getAs[Long]("n_edges"), r.getAs[Double]("phi"))).toSeq.sorted
         assert(got == expect, s"seed=$seed edges=${edges.size}")
@@ -107,8 +107,8 @@ class GraphPropertySpec extends SparkSpec {
           m = t.values.max
           x = t.map { case (n, tv) => n -> tv * 1000000 / m }
         }
-        val got = ContactGraph.spectralRadius(
-          w.toDF("user_a", "user_b", "n_meetings"), rounds = 4).collect().head
+        val got = ContactGraph.from(w.toDF("user_a", "user_b", "n_meetings"))
+          .spectralRadius(rounds = 4).collect().head
         assert(got.getAs[String]("m_q") == m.toString, s"seed=$seed")
         assert(got.getAs[Long]("n_nodes") == adj.size.toLong)
       }

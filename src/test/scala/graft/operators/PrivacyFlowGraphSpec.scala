@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 /** Hand-computed fixtures for the round's privacy / flow-model / graph
   * cards: lDiversityCells, flowModelCpc, neighborhoodFunction,
@@ -114,8 +116,13 @@ class PrivacyFlowGraphSpec extends SparkSpec {
   private val path = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
     .toDF("user_a", "user_b")
 
+  // the graph fixtures carry no weights; the BFS and degree diagnostics
+  // never read them
+  private def unweighted(pairs: DataFrame): ContactGraph =
+    ContactGraph.from(pairs.withColumn("n_meetings", lit(1L)))
+
   test("neighborhoodFunction on a 6-path with all seeds matches hand counts") {
-    val got = ContactGraph.neighborhoodFunction(path, seedsMod = 1L, maxHops = 3)
+    val got = unweighted(path).neighborhoodFunction(seedsMod = 1L, maxHops = 3)
       .collect().map(r => r.getAs[Long]("h") -> r.getAs[Long]("n_pairs")).toMap
     // ordered (seed, node) pairs at distance <= h on P6:
     // dist 1: 10, dist 2: +8, dist 3: +6
@@ -123,14 +130,14 @@ class PrivacyFlowGraphSpec extends SparkSpec {
   }
 
   test("neighborhoodFunction seed slice bounds the closure (seed 0 only)") {
-    val got = ContactGraph.neighborhoodFunction(path, seedsMod = 8L, maxHops = 3)
+    val got = unweighted(path).neighborhoodFunction(seedsMod = 8L, maxHops = 3)
       .collect().map(r => r.getAs[Long]("h") -> r.getAs[Long]("n_pairs")).toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
   test("neighborhoodFunction saturates on a star at h=2") {
     val star = Seq((10L, 1L), (10L, 2L), (10L, 3L), (10L, 4L)).toDF("user_a", "user_b")
-    val got = ContactGraph.neighborhoodFunction(star, seedsMod = 1L, maxHops = 3)
+    val got = unweighted(star).neighborhoodFunction(seedsMod = 1L, maxHops = 3)
       .collect().map(r => r.getAs[Long]("h") -> r.getAs[Long]("n_pairs")).toMap
     assert(got == Map(1L -> 8L, 2L -> 20L, 3L -> 20L))
   }
@@ -139,7 +146,7 @@ class PrivacyFlowGraphSpec extends SparkSpec {
 
   test("degreeCorrelation on a star: hub sees degree-1, leaves see degree-4") {
     val star = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("user_a", "user_b")
-    val got = ContactGraph.degreeCorrelation(star).collect()
+    val got = unweighted(star).degreeCorrelation().collect()
       .map(r => r.getAs[Long]("degree") ->
         ((r.getAs[Long]("n_nodes"), r.getAs[Long]("sum_neighbor_degree"), r.getAs[Long]("knn_ppm"))))
       .toMap
@@ -149,7 +156,7 @@ class PrivacyFlowGraphSpec extends SparkSpec {
 
   test("degreeCorrelation on a triangle is flat at its own degree") {
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("user_a", "user_b")
-    val got = ContactGraph.degreeCorrelation(tri).collect()
+    val got = unweighted(tri).degreeCorrelation().collect()
     assert(got.length == 1)
     val r = got.head
     assert(r.getAs[Long]("degree") == 2L && r.getAs[Long]("n_nodes") == 3L &&
