@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * (triplegs needs staypoints, trips needs both, …) don't recompute their
   * inputs on every action.
   *
-  * Every generator call passes `persist` as its `share` hook: each
-  * generator marks the intermediates that appear in more than one output
+  * Every generator call passes [[Share.materialize]] as its `share` hook:
+  * each generator marks the intermediates that appear in more than one output
   * lineage (or get re-read by the dense-id range sort's sampling pass), so
   * the expensive scan/window chains materialize exactly once no matter
   * which output is acted on first. Without the hook, materializing a
@@ -52,8 +52,6 @@ object Pipeline {
   private def once[T](spark: SparkSession, sfDir: String, key: String)(build: => T): T =
     memos.computeIfAbsent((spark, sfDir, key), _ => new Cell(build))
       .asInstanceOf[Cell[T]].value
-
-  private def persist(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** The multi-executor / 100 TB share hook: write the stage boundary to
     * parquet and read it back — durable, columnar, re-readable from
@@ -101,8 +99,8 @@ object Pipeline {
   private def spGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     once(spark, sfDir, "sp_gen") {
       val pfs = EventsAdapter.positionfixes(spark, sfDir).drop("value", "t_us", "k")
-      val (pfsSp, sp) = StaypointGenerator.generate(pfs, staypointParams, persist)
-      (persist(pfsSp), sp)
+      val (pfsSp, sp) = StaypointGenerator.generate(pfs, staypointParams, Share.materialize)
+      (Share.materialize(pfsSp), sp)
     }
 
   def pfsWithStaypoints(spark: SparkSession, sfDir: String): DataFrame = spGen(spark, sfDir)._1
@@ -113,8 +111,8 @@ object Pipeline {
   private def tplGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     once(spark, sfDir, "tpl_gen") {
       val (pfsTpl, tpls) = TriplegGenerator.generate(
-        pfsWithStaypoints(spark, sfDir), gapThresholdMinutes = 1e7, persist)
-      (persist(pfsTpl), tpls)
+        pfsWithStaypoints(spark, sfDir), gapThresholdMinutes = 1e7, Share.materialize)
+      (Share.materialize(pfsTpl), tpls)
     }
 
   def triplegs(spark: SparkSession, sfDir: String): DataFrame = tplGen(spark, sfDir)._2
@@ -124,20 +122,21 @@ object Pipeline {
   /** overlap_staypoints triplegs, built from the cached between output. */
   def triplegsOverlap(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "tpls_ovl") {
-      persist(TriplegGenerator.overlapFromBetween(
+      Share.materialize(TriplegGenerator.overlapFromBetween(
         pfsWithTriplegs(spark, sfDir), staypoints(spark, sfDir),
-        gapThresholdMinutes = 1e7, persist)._2)
+        gapThresholdMinutes = 1e7, Share.materialize)._2)
     }
 
   def staypointsWithActivity(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "sp_act") {
-      persist(Labelling.createActivityFlag(staypoints(spark, sfDir), timeThresholdMinutes = 120.0))
+      Share.materialize(
+        Labelling.createActivityFlag(staypoints(spark, sfDir), timeThresholdMinutes = 120.0))
     }
 
   def trips(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "trips") {
       TripGenerator.generate(staypointsWithActivity(spark, sfDir), triplegs(spark, sfDir),
-        gapThresholdMinutes = 1e7, persist)._3
+        gapThresholdMinutes = 1e7, Share.materialize)._3
     }
 
   /** One generate() call feeds both outputs (same pattern as spGen —
@@ -146,8 +145,8 @@ object Pipeline {
   private def locGen(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     once(spark, sfDir, "loc_gen") {
       val (spLoc, locs) = LocationGenerator.generate(
-        staypoints(spark, sfDir), LocationGenerator.Params(), persist)
-      (persist(locs), persist(spLoc))
+        staypoints(spark, sfDir), LocationGenerator.Params(), Share.materialize)
+      (Share.materialize(locs), Share.materialize(spLoc))
     }
 
   def locations(spark: SparkSession, sfDir: String): DataFrame = locGen(spark, sfDir)._1
@@ -160,7 +159,8 @@ object Pipeline {
     */
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "minhash_pairs") {
-      persist(Dedup.minHashLsh(spark.read.parquet(s"$sfDir/documents.parquet"),
+      Share.materialize(Dedup.minHashLsh(
+        spark.read.parquet(s"$sfDir/documents.parquet"),
         numHashes = 64, bands = 16, verifyThreshold = 0.5))
     }
 
@@ -180,14 +180,14 @@ object Pipeline {
       // build shuffle costs ~0.3 s and a build-side sort ~3 s while the
       // downstream plans keep their Exchange anyway (r15 optimization
       // round, rejected experiment).
-      persist(SpatialOps.colocationMeetings(
+      Share.materialize(SpatialOps.colocationMeetings(
         EventsAdapter.intervals(spark, sfDir), cellMicroDeg = 10000L, bandMinutes = 120.0))
     }
 
   /** The aggregated pair table over [[colocationMeetings]]. */
   def colocationPairs(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "colocation_pairs") {
-      persist(SpatialOps.colocationPairsFromMeetings(colocationMeetings(spark, sfDir)))
+      Share.materialize(SpatialOps.colocationPairsFromMeetings(colocationMeetings(spark, sfDir)))
     }
 
   /** The contact graph over [[colocationPairs]]: the projected pair
@@ -199,7 +199,7 @@ object Pipeline {
     */
   def contactGraph(spark: SparkSession, sfDir: String): ContactGraph =
     once(spark, sfDir, "contact_graph") {
-      ContactGraph.from(colocationPairs(spark, sfDir), persist)
+      ContactGraph.from(colocationPairs(spark, sfDir))
     }
 
   /** The level-1 Louvain label table of [[contactGraph]] — the
@@ -210,13 +210,13 @@ object Pipeline {
     */
   def louvainLabels(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "louvain_l1") {
-      persist(contactGraph(spark, sfDir).louvainLabels(rounds = 4))
+      Share.materialize(contactGraph(spark, sfDir).louvainLabels(rounds = 4))
     }
 
   def tours(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "tours") {
       TourGenerator.generate(trips(spark, sfDir), None,
-        TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0), persist)._2
+        TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0), Share.materialize)._2
     }
 
   /** The documents corpus labeled for the lang=='en' quality target —
@@ -235,7 +235,7 @@ object Pipeline {
   def classifierWeights4(spark: SparkSession, sfDir: String): Array[Long] =
     once(spark, sfDir, "classifier_w_i4") {
       Classifier.fit(labeledDocs(spark, sfDir),
-        dim = 64, iters = 4, stepDiv = 131072L, share = persist)
+        dim = 64, iters = 4, stepDiv = 131072L)
     }
 
   /** The learned 8-merge BPE table, trained once per corpus snapshot —
@@ -246,11 +246,10 @@ object Pipeline {
     */
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "bpe_merges") {
-      // no persist wrapper: the trainer runs eagerly (per-round argmax
-      // collects) and returns a driver-local trajectory frame — acting
-      // on it again is free
-      TextAnalysis.bpeTrain(
-        spark.read.parquet(s"$sfDir/documents.parquet"), merges = 8, share = persist)
+      // no materialize wrapper: the trainer runs eagerly (per-round
+      // argmax collects) and returns a driver-local trajectory frame —
+      // acting on it again is free
+      TextAnalysis.bpeTrain(spark.read.parquet(s"$sfDir/documents.parquet"), merges = 8)
     }
 
   /** The merge table as the driver-side (lhs, rhs) sequence in merge
@@ -268,7 +267,7 @@ object Pipeline {
     */
   def bpeTokenCounts(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "bpe_token_counts") {
-      persist(TextAnalysis.bpeEncode(
+      Share.materialize(TextAnalysis.bpeEncode(
         spark.read.parquet(s"$sfDir/documents.parquet"), bpeLearned(spark, sfDir)))
     }
 
@@ -279,7 +278,7 @@ object Pipeline {
   def dsirWeights(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "dsir_weights") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      persist(TextAnalysis.importanceWeights(
+      Share.materialize(TextAnalysis.importanceWeights(
         docs.filter(col("lang") === "en"), docs, dim = 256))
     }
 
@@ -292,7 +291,7 @@ object Pipeline {
     once(spark, sfDir, "image_phash") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .withColumn("cid", pmod(col("doc_id"), lit(250L)))
-      persist(Multimodal.perceptualHash(Multimodal.pngFixtures(docs, contentCol = "cid")))
+      Share.materialize(Multimodal.perceptualHash(Multimodal.pngFixtures(docs, contentCol = "cid")))
     }
 
   /** Eval-grade trained-and-scored corpus (iters = 8, the stepDiv the
@@ -305,8 +304,8 @@ object Pipeline {
     */
   def scoredDocs(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "scored_docs") {
-      persist(Classifier.trainAndScore(labeledDocs(spark, sfDir),
-        dim = 64, iters = 8, stepDiv = 16384L, share = persist))
+      Share.materialize(Classifier.trainAndScore(labeledDocs(spark, sfDir),
+        dim = 64, iters = 8, stepDiv = 16384L))
     }
 
   /** Brute-force exact top-5 of the standard probe slice (vec_id < 10)
@@ -317,7 +316,7 @@ object Pipeline {
   def annBruteTop5(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "ann_brute_top5") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      persist(Ann.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5))
+      Share.materialize(Ann.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5))
     }
 
   /** The id-seeded IVF top-5 answer for the same probe slice (nlist 32,
@@ -326,7 +325,8 @@ object Pipeline {
   def annIvfTop5(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "ann_ivf_top5") {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      persist(Ann.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5, nlist = 32, nprobe = 4))
+      Share.materialize(
+        Ann.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5, nlist = 32, nprobe = 4))
     }
 
   /** PQ codebooks trained once per corpus snapshot (dim 64, m 4,
@@ -336,7 +336,7 @@ object Pipeline {
   def pqModel(spark: SparkSession, sfDir: String): Ann.PqModel =
     once(spark, sfDir, "pq_model") {
       Ann.pqTrain(spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        dim = 64, m = 4, ksub = 8, iters = 2, share = persist)
+        dim = 64, m = 4, ksub = 8, iters = 2)
     }
 
   /** k-means clusters trained once on the full embeddings table (k 8,
@@ -346,6 +346,6 @@ object Pipeline {
   def kmeansModel(spark: SparkSession, sfDir: String): KMeans.Model =
     once(spark, sfDir, "kmeans_model") {
       KMeans.fit(spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        k = 8, iters = 2, share = persist)
+        k = 8, iters = 2)
     }
 }

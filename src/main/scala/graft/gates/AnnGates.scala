@@ -500,7 +500,7 @@ private[graft] object AnnGates {
     },
     Gate("kmeans_centroids") { (s, dir) =>
       KMeans.centroidsDf(s.read.parquet(s"$dir/embeddings.parquet"),
-        k = 8, iters = 4, share = _.localCheckpoint(false))
+        k = 8, iters = 4)
     } { kmeansOracle(k = 8, iters = 4) },
     // embedding-space drift: shared clusters trained on the full table,
     // even ids as corpus A vs odd ids as corpus B; dense k-row output
@@ -717,9 +717,8 @@ private[graft] object AnnGates {
     Gate("ann_ivfpq") { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val model = Ann.ivfPqTrain(emb, dim = 64, nlist = 8, coarseIters = 2,
-        m = 4, ksub = 8, pqIters = 2, share = _.localCheckpoint(false))
-      Ann.ivfPqTopK(emb.filter(col("vec_id") < 10), emb, model, k = 5, nprobe = 2,
-        share = _.localCheckpoint(false))
+        m = 4, ksub = 8, pqIters = 2)
+      Ann.ivfPqTopK(emb.filter(col("vec_id") < 10), emb, model, k = 5, nprobe = 2)
     } {
       ivfPqOracle(nlist = 8, coarseIters = 2, ksub = 8,
         pqIters = 2, subWidth = 16, nprobe = 2, probeMax = 10, k = 5)

@@ -241,8 +241,7 @@ private[graft] object ClassifierGates {
          |FROM ag""".stripMargin
     },
     Gate("score_drift") { (s, dir) =>
-      decimalsToDigits(Classifier.scoreDriftFromScored(Pipeline.scoredDocs(s, dir), buckets = 8,
-        share = _.localCheckpoint(false)))
+      decimalsToDigits(Classifier.scoreDriftFromScored(Pipeline.scoredDocs(s, dir), buckets = 8))
     } {
       // PSI over the calibration chain's score buckets, even vs odd ids:
       // signed mass diff × quantized log-ratio, int128-exact, one division

@@ -7,8 +7,77 @@ import org.apache.spark.sql.functions._
 
 /** Colocation and the contact graph: meeting pairs, graph metrics,
   * communities (Louvain) and contact timing.
+  *
+  * The oracles state each shared rule once, in the CTE builders below:
+  * the `cells` banding ([[cellsCte]]), the banded pair join over it
+  * ([[bandJoin]]; grouped as [[prsCte]], meeting-level as [[mtsCte]]),
+  * the Louvain prelude and level-1 pass ([[louvainPrelude]]) and the
+  * exact-modularity tail ([[modularityTail]]).
   */
 private[graft] object ColocationGates {
+
+  /** The oracle's opening: the derived positionfix chain (`WITH
+    * RECURSIVE` for an oracle that closes a transitive `reach`), then
+    * `cells` — each interval on its 0.01° cell (cx, cy) with its first
+    * 2-hour band b0, exploded to every band it covers, the
+    * SpatialOps.colocationMeetings banding.
+    */
+  private def cellsCte(materialized: Boolean = true, recursive: Boolean = false): String = {
+    val pfs =
+      if (recursive) EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")
+      else EventsAdapter.pfsSql
+    s"""$pfs,
+       |cells AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT user_id, s_us, f_us,
+       |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+       |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+       |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
+       |    unnest(generate_series(
+       |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
+       |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
+       |  FROM intervals)""".stripMargin
+  }
+
+  /** The banded co-location self-join of `cells` under the select list
+    * `head`: same cell and band, each meeting counted once (at the first
+    * band both intervals cover), each unordered pair once (a < b),
+    * overlapping intervals only. `grouped` folds the meetings to one row
+    * per pair; `under300` keeps both endpoints below user 300 (the
+    * triangle gates' subgraph). Every line is indented by `pad`.
+    */
+  private def bandJoin(head: String, pad: String = "  ", grouped: Boolean = true,
+                       under300: Boolean = false): String = {
+    val subgraph = if (under300) "\n  AND a.user_id < 300 AND b.user_id < 300" else ""
+    val groupBy = if (grouped) "\nGROUP BY a.user_id, b.user_id" else ""
+    s"""$head
+       |FROM cells a JOIN cells b
+       |  ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
+       |WHERE a.band = greatest(a.b0, b.b0)
+       |  AND a.user_id < b.user_id$subgraph
+       |  AND a.s_us < b.f_us AND b.s_us < a.f_us$groupBy""".stripMargin
+      .linesIterator.map(pad + _).mkString("\n")
+  }
+
+  /** [[bandJoin]] grouped as CTE `prs`(ua, ub): one row per pair that
+    * met, with its meeting count `w` when `w`.
+    */
+  private def prsCte(w: Boolean, under300: Boolean = false): String = {
+    val head = "SELECT a.user_id AS ua, b.user_id AS ub" +
+      (if (w) ", CAST(count(*) AS BIGINT) AS w" else "")
+    s"prs AS MATERIALIZED (\n${bandJoin(head, under300 = under300)})"
+  }
+
+  /** [[bandJoin]] at meeting level as CTE `mts`(ua, ub, ms, mf): one row
+    * per meeting with its overlap window.
+    */
+  private def mtsCte: String = {
+    val head = """SELECT a.user_id AS ua, b.user_id AS ub,
+                 |       greatest(a.s_us, b.s_us) AS ms, least(a.f_us, b.f_us) AS mf""".stripMargin
+    s"mts AS (\n${bandJoin(head, grouped = false)})"
+  }
+
+  /** The total undirected weight `tw`(W) of `prs`. */
+  private def twCte: String = "tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs)"
 
   /** One unrolled semi-synchronous Louvain pass as CTEs
     * `${pre}m0..${pre}m$rounds` over symmetric `$edges(u, dst, w)` and
@@ -49,29 +118,104 @@ private[graft] object ColocationGates {
          |      FROM ${pre}sc$i) t WHERE rn = 1) b ON m.n = b.u)""".stripMargin
     }.mkString(",\n")
 
+  /** The Louvain oracles' opening: `cells`, the weighted `prs`, its
+    * symmetric `edges`(u, dst, w), the weighted degrees `degl`(u, k),
+    * `tw`, the singleton start `m0` and the level-1 pass m1..m4 — the
+    * oracle of Pipeline.louvainLabels. `recursive` for the oracles that
+    * close `reach` over the intra-community pairs.
+    */
+  private def louvainPrelude(recursive: Boolean = false): String =
+    s"""${cellsCte(recursive = recursive)},
+       |${prsCte(w = true)},
+       |edges AS MATERIALIZED (
+       |  SELECT ua AS u, ub AS dst, w FROM prs
+       |  UNION ALL SELECT ub AS u, ua AS dst, w FROM prs),
+       |degl AS MATERIALIZED (
+       |  SELECT u, CAST(sum(w) AS BIGINT) AS k FROM edges GROUP BY u),
+       |$twCte,
+       |m0 AS (SELECT u AS n, u AS c FROM degl),
+       |${louvainPassCtes("", "edges", "degl", 4)}""".stripMargin
+
+  /** The intra-community weight `name`(community, w_in) of the partition
+    * `labels`(n, `lbl`) over `prs`.
+    */
+  private def intraWeightCte(name: String, labels: String, lbl: String = "c"): String =
+    s"""$name AS (
+       |  SELECT la.$lbl AS community, CAST(sum(p.w) AS BIGINT) AS w_in
+       |  FROM prs p JOIN $labels la ON la.n = p.ua JOIN $labels lb ON lb.n = p.ub
+       |  WHERE la.$lbl = lb.$lbl GROUP BY 1)""".stripMargin
+
+  /** The exact-rational statistics of the partition `labels`(n, `lbl`),
+    * ending the query (ContactGraph.communityStats): per community the
+    * node count, intra weight and weighted-degree sum (from
+    * `deg`(`u`, `k`)), and the global Q = Σ_c (4W·w_in − d_c²) / (4W²)
+    * with a HUGEINT numerator. The defaults read the Louvain prelude,
+    * which also defines `tw`; `defineTw` emits it here instead.
+    */
+  private def modularityTail(labels: String, lbl: String = "c", deg: String = "degl",
+                             u: String = "u", k: String = "k",
+                             defineTw: Boolean = false): String =
+    s"""${intraWeightCte("wc", labels, lbl)},
+       |dc AS (
+       |  SELECT $labels.$lbl AS community, CAST(count(*) AS BIGINT) AS n_nodes,
+       |         CAST(sum(d.$k) AS BIGINT) AS degree_sum
+       |  FROM $deg d JOIN $labels ON $labels.n = d.$u GROUP BY 1),
+       |${if (defineTw) s"$twCte,\n" else ""}cm AS (
+       |  SELECT dc.community, dc.n_nodes, CAST(coalesce(wc.w_in, 0) AS BIGINT) AS w_in,
+       |         dc.degree_sum
+       |  FROM dc LEFT JOIN wc USING (community)),
+       |qn AS (
+       |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * cm.w_in
+       |             - CAST(cm.degree_sum AS HUGEINT) * cm.degree_sum) AS qn
+       |  FROM cm, tw)
+       |SELECT cm.community, cm.n_nodes, cm.w_in, cm.degree_sum,
+       |       CAST(qn.qn AS DOUBLE)
+       |         / (4.0 * CAST(tw.W AS DOUBLE) * CAST(tw.W AS DOUBLE)) AS modularity
+       |FROM cm, qn, tw""".stripMargin
+
+  /** The exact modularity numerator `qn$i`(qn) of the partition
+    * `labels`(n, c) over the Louvain prelude (ContactGraph.partitionQNum),
+    * for the level-2 guard.
+    */
+  private def partitionQnCtes(i: Int, labels: String): String =
+    s"""${intraWeightCte(s"wc$i", labels)},
+       |dc$i AS (
+       |  SELECT $labels.c AS community, CAST(sum(d.k) AS BIGINT) AS degree_sum
+       |  FROM degl d JOIN $labels ON $labels.n = d.u GROUP BY 1),
+       |qn$i AS (
+       |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * coalesce(wc$i.w_in, 0)
+       |             - CAST(dc$i.degree_sum AS HUGEINT) * dc$i.degree_sum) AS qn
+       |  FROM dc$i LEFT JOIN wc$i USING (community), tw)""".stripMargin
+
+  /** Per node the component `comp`(node, cid) of the subgraph its
+    * level-1 community induces: the intra-community pairs `intra` and
+    * their transitive closure `reach` (ContactGraph.intraComponents).
+    * Nodes with no intra-community pair are absent.
+    */
+  private def intraComponentsCtes: String =
+    """intra AS MATERIALIZED (
+      |  SELECT p.ua AS a, p.ub AS b
+      |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
+      |  WHERE la.c = lb.c),
+      |und AS (SELECT a, b FROM intra UNION SELECT b, a FROM intra),
+      |reach(a, b) AS (
+      |  SELECT a, b FROM und
+      |  UNION
+      |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+      |comp AS (
+      |  SELECT n.node, least(n.node, min(r.b)) AS cid
+      |  FROM (SELECT DISTINCT a AS node FROM und) n
+      |  JOIN reach r ON r.a = n.node GROUP BY n.node)""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     Gate("colocation_pairs") { (s, dir) =>
       Pipeline.colocationPairs(s, dir)
     } {
-      s"""${EventsAdapter.pfsSql},
-         |cells AS (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals)
-         |SELECT a.user_id AS user_a, b.user_id AS user_b,
-         |  CAST(count(*) AS BIGINT) AS n_meetings,
-         |  CAST(sum(least(a.f_us, b.f_us) - greatest(a.s_us, b.s_us)) AS BIGINT) AS overlap_us
-         |FROM cells a JOIN cells b
-         |  ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |WHERE a.band = greatest(a.b0, b.b0)
-         |  AND a.user_id < b.user_id
-         |  AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |GROUP BY a.user_id, b.user_id""".stripMargin
+      val head =
+        """SELECT a.user_id AS user_a, b.user_id AS user_b,
+          |  CAST(count(*) AS BIGINT) AS n_meetings,
+          |  CAST(sum(least(a.f_us, b.f_us) - greatest(a.s_us, b.s_us)) AS BIGINT) AS overlap_us""".stripMargin
+      s"${cellsCte(materialized = false)}\n${bandJoin(head, pad = "")}"
     },
     Gate("colocation__prolog") { (s, dir) =>
       // bills the shared contact-graph prolog (pair/edge/degree
@@ -91,25 +235,9 @@ private[graft] object ColocationGates {
       // edge census of the symmetric weighted contact graph (the shared
       // prolog the whole diagnostic family reads): node count, directed
       // edge count, total weight — all integer-exact
-      s"""${EventsAdapter.pfsSql},
-         |cells AS (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
+      s"""${cellsCte(materialized = false)},
          |prs AS (
-         |  SELECT a.user_id AS user_a, b.user_id AS user_b,
-         |    CAST(count(*) AS BIGINT) AS w
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+         |${bandJoin("SELECT a.user_id AS user_a, b.user_id AS user_b,\n  CAST(count(*) AS BIGINT) AS w")}),
          |e AS (SELECT user_a AS src, w FROM prs
          |      UNION ALL SELECT user_b AS src, w FROM prs)
          |SELECT CAST(count(DISTINCT src) AS BIGINT) AS n_nodes,
@@ -122,24 +250,9 @@ private[graft] object ColocationGates {
     } {
       // contact-network degree histogram: the colocation pair chain
       // exploded to endpoints, bit-length degree buckets
-      s"""${EventsAdapter.pfsSql},
-         |cells AS (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
+      s"""${cellsCte(materialized = false)},
          |prs AS (
-         |  SELECT a.user_id AS user_a, b.user_id AS user_b
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+         |${bandJoin("SELECT a.user_id AS user_a, b.user_id AS user_b")}),
          |deg AS (
          |  SELECT u AS user_id, CAST(count(*) AS BIGINT) AS degree FROM (
          |    SELECT user_a AS u FROM prs UNION ALL SELECT user_b AS u FROM prs)
@@ -153,148 +266,71 @@ private[graft] object ColocationGates {
     Gate("colocation_pagerank") { (s, dir) =>
       Pipeline.contactGraph(s, dir).colocationPagerank(iters = 3)
     } {
-      {
-        val iterCtes = (1 to 3).map { i =>
-          s"""c$i AS (
-             |  SELECT e.dst,
-             |         CAST(sum((CAST(r.r AS HUGEINT) * 85 * e.w) // (100 * CAST(d.deg AS HUGEINT))) AS BIGINT) AS cin
-             |  FROM edges e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON e.src = r.user_id
-             |  GROUP BY e.dst),
-             |r$i AS (
-             |  SELECT d.src AS user_id, CAST(150000 + coalesce(c.cin, 0) AS BIGINT) AS r
-             |  FROM deg d LEFT JOIN c$i c ON d.src = c.dst)""".stripMargin
-        }.mkString(",\n")
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS src, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
-           |deg AS MATERIALIZED (
-           |  SELECT src, CAST(sum(w) AS BIGINT) AS deg FROM edges GROUP BY src),
-           |r0 AS (SELECT src AS user_id, CAST(1000000 AS BIGINT) AS r FROM deg),
-           |$iterCtes
-           |SELECT user_id, r AS rank_q FROM r3""".stripMargin
-      }
+      val iterCtes = (1 to 3).map { i =>
+        s"""c$i AS (
+           |  SELECT e.dst,
+           |         CAST(sum((CAST(r.r AS HUGEINT) * 85 * e.w) // (100 * CAST(d.deg AS HUGEINT))) AS BIGINT) AS cin
+           |  FROM edges e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON e.src = r.user_id
+           |  GROUP BY e.dst),
+           |r$i AS (
+           |  SELECT d.src AS user_id, CAST(150000 + coalesce(c.cin, 0) AS BIGINT) AS r
+           |  FROM deg d LEFT JOIN c$i c ON d.src = c.dst)""".stripMargin
+      }.mkString(",\n")
+      s"""${cellsCte()},
+         |${prsCte(w = true)},
+         |edges AS MATERIALIZED (
+         |  SELECT ua AS src, ub AS dst, w FROM prs
+         |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
+         |deg AS MATERIALIZED (
+         |  SELECT src, CAST(sum(w) AS BIGINT) AS deg FROM edges GROUP BY src),
+         |r0 AS (SELECT src AS user_id, CAST(1000000 AS BIGINT) AS r FROM deg),
+         |$iterCtes
+         |SELECT user_id, r AS rank_q FROM r3""".stripMargin
     },
     Gate("colocation_components") { (s, dir) =>
       SpatialOps.colocationComponents(Pipeline.colocationPairs(s, dir))
     } {
       // contact-graph component sizes: recursive closure over the pair
       // chain, two bounded groupBys
-      {
-        val prefix = EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")
-        s"""$prefix,
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |und AS (SELECT ua AS a, ub AS b FROM prs UNION SELECT ub, ua FROM prs),
-           |reach(a, b) AS (
-           |  SELECT a, b FROM und
-           |  UNION
-           |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |nodes AS (SELECT DISTINCT a AS node FROM und),
-           |comp AS (
-           |  SELECT n.node, least(n.node, min(r.b)) AS cluster_id
-           |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node),
-           |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS s FROM comp GROUP BY cluster_id)
-           |SELECT s AS component_size, CAST(count(*) AS BIGINT) AS n_components
-           |FROM sz GROUP BY s""".stripMargin
-      }
+      s"""${cellsCte(recursive = true)},
+         |${prsCte(w = false)},
+         |und AS (SELECT ua AS a, ub AS b FROM prs UNION SELECT ub, ua FROM prs),
+         |reach(a, b) AS (
+         |  SELECT a, b FROM und
+         |  UNION
+         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |nodes AS (SELECT DISTINCT a AS node FROM und),
+         |comp AS (
+         |  SELECT n.node, least(n.node, min(r.b)) AS cluster_id
+         |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node),
+         |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS s FROM comp GROUP BY cluster_id)
+         |SELECT s AS component_size, CAST(count(*) AS BIGINT) AS n_components
+         |FROM sz GROUP BY s""".stripMargin
     },
     Gate("colocation_communities") { (s, dir) =>
       Pipeline.contactGraph(s, dir).colocationCommunities(rounds = 3)
     } {
-      // fixed-point PageRank over the contact graph: 3 unrolled
-      // iterations of int128 floor-division flow along weighted edges
       // 3 unrolled synchronous LPA rounds (argmax by weight desc, label
       // asc) + exact-rational Newman modularity of the final partition
-      {
-        val lpaCtes = (1 to 3).map { i =>
-          s"""s$i AS (
-             |  SELECT e.src AS u, l.lbl, CAST(sum(e.w) AS BIGINT) AS s
-             |  FROM edges e JOIN l${i - 1} l ON l.n = e.dst GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT u AS n, lbl FROM (
-             |    SELECT u, lbl, row_number() OVER (PARTITION BY u ORDER BY s DESC, lbl) AS rn
-             |    FROM s$i) WHERE rn = 1)""".stripMargin
-        }.mkString(",\n")
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS src, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
-           |deg AS MATERIALIZED (
-           |  SELECT src, CAST(sum(w) AS BIGINT) AS deg FROM edges GROUP BY src),
-           |l0 AS (SELECT src AS n, src AS lbl FROM deg),
-           |$lpaCtes,
-           |wc AS (
-           |  SELECT la.lbl AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN l3 la ON la.n = p.ua JOIN l3 lb ON lb.n = p.ub
-           |  WHERE la.lbl = lb.lbl GROUP BY 1),
-           |dc AS (
-           |  SELECT l3.lbl AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           |         CAST(sum(d.deg) AS BIGINT) AS degree_sum
-           |  FROM deg d JOIN l3 ON l3.n = d.src GROUP BY 1),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs),
-           |cm AS (
-           |  SELECT dc.community, dc.n_nodes, CAST(coalesce(wc.w_in, 0) AS BIGINT) AS w_in,
-           |         dc.degree_sum
-           |  FROM dc LEFT JOIN wc USING (community)),
-           |qn AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * cm.w_in
-           |             - CAST(cm.degree_sum AS HUGEINT) * cm.degree_sum) AS qn
-           |  FROM cm, tw)
-           |SELECT cm.community, cm.n_nodes, cm.w_in, cm.degree_sum,
-           |       CAST(qn.qn AS DOUBLE)
-           |         / (4.0 * CAST(tw.W AS DOUBLE) * CAST(tw.W AS DOUBLE)) AS modularity
-           |FROM cm, qn, tw""".stripMargin
-      }
+      val lpaCtes = (1 to 3).map { i =>
+        s"""s$i AS (
+           |  SELECT e.src AS u, l.lbl, CAST(sum(e.w) AS BIGINT) AS s
+           |  FROM edges e JOIN l${i - 1} l ON l.n = e.dst GROUP BY 1, 2),
+           |l$i AS (
+           |  SELECT u AS n, lbl FROM (
+           |    SELECT u, lbl, row_number() OVER (PARTITION BY u ORDER BY s DESC, lbl) AS rn
+           |    FROM s$i) WHERE rn = 1)""".stripMargin
+      }.mkString(",\n")
+      s"""${cellsCte()},
+         |${prsCte(w = true)},
+         |edges AS MATERIALIZED (
+         |  SELECT ua AS src, ub AS dst, w FROM prs
+         |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
+         |deg AS MATERIALIZED (
+         |  SELECT src, CAST(sum(w) AS BIGINT) AS deg FROM edges GROUP BY src),
+         |l0 AS (SELECT src AS n, src AS lbl FROM deg),
+         |$lpaCtes,
+         |${modularityTail("l3", lbl = "lbl", deg = "deg", u = "src", k = "deg", defineTw = true)}""".stripMargin
     },
     // k-core occupancy via 3 unrolled iterated-h-index rounds (the
     // near-complete synthetic graph fixes after round 1; the spec pins
@@ -304,40 +340,22 @@ private[graft] object ColocationGates {
     } {
       // 3 unrolled iterated-h-index rounds from the degree: the fixed
       // point is the k-core number (Lü et al. 2016)
-      {
-        val hCtes = (1 to 3).map { i =>
-          s"""h$i AS (
-             |  SELECT src AS n, CAST(max(least(v, rn)) AS BIGINT) AS val FROM (
-             |    SELECT e.src, h.val AS v,
-             |      row_number() OVER (PARTITION BY e.src ORDER BY h.val DESC, e.dst) AS rn
-             |    FROM edges e JOIN h${i - 1} h ON h.n = e.dst) GROUP BY src)""".stripMargin
-        }.mkString(",\n")
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS src, ub AS dst FROM prs
-           |  UNION ALL SELECT ub AS src, ua AS dst FROM prs),
-           |h0 AS (SELECT src AS n, CAST(count(*) AS BIGINT) AS val FROM edges GROUP BY src),
-           |$hCtes
-           |SELECT val AS coreness, CAST(count(*) AS BIGINT) AS n_users
-           |FROM h3 GROUP BY val""".stripMargin
-      }
+      val hCtes = (1 to 3).map { i =>
+        s"""h$i AS (
+           |  SELECT src AS n, CAST(max(least(v, rn)) AS BIGINT) AS val FROM (
+           |    SELECT e.src, h.val AS v,
+           |      row_number() OVER (PARTITION BY e.src ORDER BY h.val DESC, e.dst) AS rn
+           |    FROM edges e JOIN h${i - 1} h ON h.n = e.dst) GROUP BY src)""".stripMargin
+      }.mkString(",\n")
+      s"""${cellsCte()},
+         |${prsCte(w = false)},
+         |edges AS MATERIALIZED (
+         |  SELECT ua AS src, ub AS dst FROM prs
+         |  UNION ALL SELECT ub AS src, ua AS dst FROM prs),
+         |h0 AS (SELECT src AS n, CAST(count(*) AS BIGINT) AS val FROM edges GROUP BY src),
+         |$hCtes
+         |SELECT val AS coreness, CAST(count(*) AS BIGINT) AS n_users
+         |FROM h3 GROUP BY val""".stripMargin
     },
     // exact neighborhood function N(h) from a deterministic 1/64 seed
     // slice — BFS as h shared hash joins; the closure is seeds x
@@ -348,24 +366,8 @@ private[graft] object ColocationGates {
     } {
       // neighborhood function from the deterministic 1/64 seed slice:
       // three unrolled BFS closures (frontier JOIN edges, DISTINCT, UNION)
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |prs AS MATERIALIZED (
-         |  SELECT a.user_id AS ua, b.user_id AS ub
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+      s"""${cellsCte()},
+         |${prsCte(w = false)},
          |edges AS MATERIALIZED (
          |  SELECT ua AS src, ub AS dst FROM prs
          |  UNION ALL SELECT ub AS src, ua AS dst FROM prs),
@@ -392,24 +394,8 @@ private[graft] object ColocationGates {
     } {
       // knn(k) curve: endpoint-degree join, exact integer sums, ppm by
       // HUGEINT floor division
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |prs AS MATERIALIZED (
-         |  SELECT a.user_id AS ua, b.user_id AS ub
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+      s"""${cellsCte()},
+         |${prsCte(w = false)},
          |edges AS MATERIALIZED (
          |  SELECT ua AS src, ub AS dst FROM prs
          |  UNION ALL SELECT ub AS src, ua AS dst FROM prs),
@@ -428,24 +414,8 @@ private[graft] object ColocationGates {
     } {
       // rich-club curve: strict suffix sums of the node-by-degree and
       // edge-by-min-endpoint-degree histograms over the shared value grid
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |prs AS MATERIALIZED (
-         |  SELECT a.user_id AS ua, b.user_id AS ub
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+      s"""${cellsCte()},
+         |${prsCte(w = false)},
          |deg AS MATERIALIZED (
          |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM (
          |    SELECT ua AS u FROM prs UNION ALL SELECT ub FROM prs) GROUP BY u),
@@ -474,52 +444,33 @@ private[graft] object ColocationGates {
     } {
       // 4 unrolled shifted power-iteration rounds on (A + I): integer
       // iterate in millionths, HUGEINT products, floor renormalization
-      {
-        val iterCtes = (1 to 4).map { k =>
-          s"""t$k AS (
-             |  SELECT r.n, r.s + CAST(o.x AS HUGEINT) AS t FROM (
-             |    SELECT e.src AS n, sum(CAST(e.w AS HUGEINT) * CAST(h.x AS HUGEINT)) AS s
-             |    FROM edges e JOIN x${k - 1} h ON h.n = e.dst GROUP BY e.src) r
-             |  JOIN x${k - 1} o ON o.n = r.n),
-             |m$k AS (SELECT max(t) AS m FROM t$k),
-             |x$k AS (SELECT n, CAST(t * 1000000 // m AS BIGINT) AS x FROM t$k, m$k)""".stripMargin
-        }.mkString(",\n")
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS src, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
-           |x0 AS (SELECT DISTINCT src AS n, CAST(1000000 AS BIGINT) AS x FROM edges),
-           |$iterCtes
-           |SELECT (SELECT CAST(count(*) AS BIGINT) FROM x0) AS n_nodes,
-           |       CAST(4 AS BIGINT) AS rounds,
-           |       CAST(m AS VARCHAR) AS m_q,
-           |       CAST(m AS DOUBLE) / 1000000.0 - 1.0 AS lambda_max
-           |FROM m4""".stripMargin
-      }
+      val iterCtes = (1 to 4).map { k =>
+        s"""t$k AS (
+           |  SELECT r.n, r.s + CAST(o.x AS HUGEINT) AS t FROM (
+           |    SELECT e.src AS n, sum(CAST(e.w AS HUGEINT) * CAST(h.x AS HUGEINT)) AS s
+           |    FROM edges e JOIN x${k - 1} h ON h.n = e.dst GROUP BY e.src) r
+           |  JOIN x${k - 1} o ON o.n = r.n),
+           |m$k AS (SELECT max(t) AS m FROM t$k),
+           |x$k AS (SELECT n, CAST(t * 1000000 // m AS BIGINT) AS x FROM t$k, m$k)""".stripMargin
+      }.mkString(",\n")
+      s"""${cellsCte()},
+         |${prsCte(w = true)},
+         |edges AS MATERIALIZED (
+         |  SELECT ua AS src, ub AS dst, w FROM prs
+         |  UNION ALL SELECT ub AS src, ua AS dst, w FROM prs),
+         |x0 AS (SELECT DISTINCT src AS n, CAST(1000000 AS BIGINT) AS x FROM edges),
+         |$iterCtes
+         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM x0) AS n_nodes,
+         |       CAST(4 AS BIGINT) AS rounds,
+         |       CAST(m AS VARCHAR) AS m_q,
+         |       CAST(m AS DOUBLE) / 1000000.0 - 1.0 AS lambda_max
+         |FROM m4""".stripMargin
     },
-    // the three Louvain gates share the memoized level-1 pass
+    // the four Louvain gates share the memoized level-1 pass
     // (Pipeline.louvainLabels) — one partition per snapshot, many
     // diagnostics reading it
     Gate("colocation_louvain") { (s, dir) =>
-      Pipeline.contactGraph(s, dir).colocationLouvain(rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvain(Pipeline.louvainLabels(s, dir))
     } {
       // semi-synchronous one-level Louvain (two-coloring schedule: round r
       // moves only nodes whose 0-based dense rank in id order ≡ r mod 2 —
@@ -527,59 +478,12 @@ private[graft] object ColocationGates {
       // alternates classes): a mover joins the candidate
       // community (neighbors' + own) with the greatest exact integer gain
       // 2W·k_in − k_u·Σtot(c∖u), ties to the smallest id
-      {
-        val louvainCtes = louvainPassCtes("", "edges", "degl", 4)
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS u, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS u, ua AS dst, w FROM prs),
-           |degl AS MATERIALIZED (
-           |  SELECT u, CAST(sum(w) AS BIGINT) AS k FROM edges GROUP BY u),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs),
-           |m0 AS (SELECT u AS n, u AS c FROM degl),
-           |$louvainCtes,
-           |wc AS (
-           |  SELECT la.c AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |dc AS (
-           |  SELECT m4.c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           |         CAST(sum(d.k) AS BIGINT) AS degree_sum
-           |  FROM degl d JOIN m4 ON m4.n = d.u GROUP BY 1),
-           |cm AS (
-           |  SELECT dc.community, dc.n_nodes, CAST(coalesce(wc.w_in, 0) AS BIGINT) AS w_in,
-           |         dc.degree_sum
-           |  FROM dc LEFT JOIN wc USING (community)),
-           |qn AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * cm.w_in
-           |             - CAST(cm.degree_sum AS HUGEINT) * cm.degree_sum) AS qn
-           |  FROM cm, tw)
-           |SELECT cm.community, cm.n_nodes, cm.w_in, cm.degree_sum,
-           |       CAST(qn.qn AS DOUBLE)
-           |         / (4.0 * CAST(tw.W AS DOUBLE) * CAST(tw.W AS DOUBLE)) AS modularity
-           |FROM cm, qn, tw""".stripMargin
-      }
+      s"""${louvainPrelude()},
+         |${modularityTail("m4")}""".stripMargin
     },
     Gate("colocation_louvain_l2") { (s, dir) =>
-      Pipeline.contactGraph(s, dir).colocationLouvainL2(rounds = 4, rounds2 = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvainL2(Pipeline.louvainLabels(s, dir),
+        rounds2 = 4)
     } {
       // two-level Louvain: level-1 pass (m0..m4), supernode collapse to
       // DENSE-RANK ids (level-1 winner labels are parity-biased and would
@@ -588,244 +492,75 @@ private[graft] object ColocationGates {
       // level-2 pass (sm0..sm4) on the collapsed graph, exact-integer
       // monotone guard (keep level 1 unless the composed Q numerator
       // strictly improves), stats on the ORIGINAL graph
-      {
-        val l1 = louvainPassCtes("", "edges", "degl", 4)
-        val l2 = louvainPassCtes("s", "sedges", "sdegl", 4)
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS u, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS u, ua AS dst, w FROM prs),
-           |degl AS MATERIALIZED (
-           |  SELECT u, CAST(sum(w) AS BIGINT) AS k FROM edges GROUP BY u),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs),
-           |m0 AS (SELECT u AS n, u AS c FROM degl),
-           |$l1,
-           |rnk AS MATERIALIZED (
-           |  SELECT c AS u0, row_number() OVER (ORDER BY c) - 1 AS r
-           |  FROM (SELECT DISTINCT c FROM m4)),
-           |sprs AS MATERIALIZED (
-           |  SELECT least(ra.r, rb.r) AS ua, greatest(ra.r, rb.r) AS ub,
-           |         CAST(sum(p.w) AS BIGINT) AS w
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  JOIN rnk ra ON ra.u0 = la.c JOIN rnk rb ON rb.u0 = lb.c
-           |  WHERE la.c <> lb.c GROUP BY 1, 2),
-           |sself AS (
-           |  SELECT ra.r AS u, CAST(sum(p.w) AS BIGINT) AS wself
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  JOIN rnk ra ON ra.u0 = la.c
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |sedges AS MATERIALIZED (
-           |  SELECT ua AS u, ub AS dst, w FROM sprs
-           |  UNION ALL SELECT ub AS u, ua AS dst, w FROM sprs),
-           |sdegl AS MATERIALIZED (
-           |  SELECT sn.u,
-           |         CAST(coalesce(se.k, 0) + 2 * coalesce(ss.wself, 0) AS BIGINT) AS k
-           |  FROM (SELECT r AS u FROM rnk) sn
-           |  LEFT JOIN (SELECT u, sum(w) AS k FROM sedges GROUP BY u) se ON se.u = sn.u
-           |  LEFT JOIN sself ss ON ss.u = sn.u),
-           |sm0 AS (SELECT u AS n, u AS c FROM sdegl),
-           |$l2,
-           |comp AS MATERIALIZED (
-           |  SELECT m4.n, rb.u0 AS c
-           |  FROM m4 JOIN rnk ra ON ra.u0 = m4.c
-           |  JOIN sm4 ON sm4.n = ra.r
-           |  JOIN rnk rb ON rb.r = sm4.c),
-           |wc1 AS (
-           |  SELECT la.c AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |dc1 AS (
-           |  SELECT m4.c AS community, CAST(sum(d.k) AS BIGINT) AS degree_sum
-           |  FROM degl d JOIN m4 ON m4.n = d.u GROUP BY 1),
-           |qn1 AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * coalesce(wc1.w_in, 0)
-           |             - CAST(dc1.degree_sum AS HUGEINT) * dc1.degree_sum) AS qn
-           |  FROM dc1 LEFT JOIN wc1 USING (community), tw),
-           |wc2 AS (
-           |  SELECT la.c AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN comp la ON la.n = p.ua JOIN comp lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |dc2 AS (
-           |  SELECT comp.c AS community, CAST(sum(d.k) AS BIGINT) AS degree_sum
-           |  FROM degl d JOIN comp ON comp.n = d.u GROUP BY 1),
-           |qn2 AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * coalesce(wc2.w_in, 0)
-           |             - CAST(dc2.degree_sum AS HUGEINT) * dc2.degree_sum) AS qn
-           |  FROM dc2 LEFT JOIN wc2 USING (community), tw),
-           |flab AS MATERIALIZED (
-           |  SELECT n, c FROM comp WHERE (SELECT qn FROM qn2) > (SELECT qn FROM qn1)
-           |  UNION ALL
-           |  SELECT n, c FROM m4 WHERE NOT ((SELECT qn FROM qn2) > (SELECT qn FROM qn1))),
-           |wc AS (
-           |  SELECT la.c AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN flab la ON la.n = p.ua JOIN flab lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |dc AS (
-           |  SELECT flab.c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           |         CAST(sum(d.k) AS BIGINT) AS degree_sum
-           |  FROM degl d JOIN flab ON flab.n = d.u GROUP BY 1),
-           |cm AS (
-           |  SELECT dc.community, dc.n_nodes, CAST(coalesce(wc.w_in, 0) AS BIGINT) AS w_in,
-           |         dc.degree_sum
-           |  FROM dc LEFT JOIN wc USING (community)),
-           |qn AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * cm.w_in
-           |             - CAST(cm.degree_sum AS HUGEINT) * cm.degree_sum) AS qn
-           |  FROM cm, tw)
-           |SELECT cm.community, cm.n_nodes, cm.w_in, cm.degree_sum,
-           |       CAST(qn.qn AS DOUBLE)
-           |         / (4.0 * CAST(tw.W AS DOUBLE) * CAST(tw.W AS DOUBLE)) AS modularity
-           |FROM cm, qn, tw""".stripMargin
-      }
+      s"""${louvainPrelude()},
+         |rnk AS MATERIALIZED (
+         |  SELECT c AS u0, row_number() OVER (ORDER BY c) - 1 AS r
+         |  FROM (SELECT DISTINCT c FROM m4)),
+         |sprs AS MATERIALIZED (
+         |  SELECT least(ra.r, rb.r) AS ua, greatest(ra.r, rb.r) AS ub,
+         |         CAST(sum(p.w) AS BIGINT) AS w
+         |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
+         |  JOIN rnk ra ON ra.u0 = la.c JOIN rnk rb ON rb.u0 = lb.c
+         |  WHERE la.c <> lb.c GROUP BY 1, 2),
+         |sself AS (
+         |  SELECT ra.r AS u, CAST(sum(p.w) AS BIGINT) AS wself
+         |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
+         |  JOIN rnk ra ON ra.u0 = la.c
+         |  WHERE la.c = lb.c GROUP BY 1),
+         |sedges AS MATERIALIZED (
+         |  SELECT ua AS u, ub AS dst, w FROM sprs
+         |  UNION ALL SELECT ub AS u, ua AS dst, w FROM sprs),
+         |sdegl AS MATERIALIZED (
+         |  SELECT sn.u,
+         |         CAST(coalesce(se.k, 0) + 2 * coalesce(ss.wself, 0) AS BIGINT) AS k
+         |  FROM (SELECT r AS u FROM rnk) sn
+         |  LEFT JOIN (SELECT u, sum(w) AS k FROM sedges GROUP BY u) se ON se.u = sn.u
+         |  LEFT JOIN sself ss ON ss.u = sn.u),
+         |sm0 AS (SELECT u AS n, u AS c FROM sdegl),
+         |${louvainPassCtes("s", "sedges", "sdegl", 4)},
+         |comp AS MATERIALIZED (
+         |  SELECT m4.n, rb.u0 AS c
+         |  FROM m4 JOIN rnk ra ON ra.u0 = m4.c
+         |  JOIN sm4 ON sm4.n = ra.r
+         |  JOIN rnk rb ON rb.r = sm4.c),
+         |${partitionQnCtes(1, "m4")},
+         |${partitionQnCtes(2, "comp")},
+         |flab AS MATERIALIZED (
+         |  SELECT n, c FROM comp WHERE (SELECT qn FROM qn2) > (SELECT qn FROM qn1)
+         |  UNION ALL
+         |  SELECT n, c FROM m4 WHERE NOT ((SELECT qn FROM qn2) > (SELECT qn FROM qn1))),
+         |${modularityTail("flab")}""".stripMargin
     },
     // Leiden-style audit: is each Louvain community internally connected?
     Gate("louvain_connectivity") { (s, dir) =>
-      Pipeline.contactGraph(s, dir).louvainConnectivity(rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)))
+      Pipeline.contactGraph(s, dir).louvainConnectivity(Pipeline.louvainLabels(s, dir))
     } {
       // Leiden-style connectivity audit: the level-1 louvain labels (same
       // unrolled pass), intra-community transitive closure, components
       // per community; isolated-in-community nodes are own components
-      {
-        val l1 = louvainPassCtes("", "edges", "degl", 4)
-        s"""${EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS u, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS u, ua AS dst, w FROM prs),
-           |degl AS MATERIALIZED (
-           |  SELECT u, CAST(sum(w) AS BIGINT) AS k FROM edges GROUP BY u),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs),
-           |m0 AS (SELECT u AS n, u AS c FROM degl),
-           |$l1,
-           |intra AS MATERIALIZED (
-           |  SELECT p.ua AS a, p.ub AS b
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c),
-           |und AS (SELECT a, b FROM intra UNION SELECT b, a FROM intra),
-           |reach(a, b) AS (
-           |  SELECT a, b FROM und
-           |  UNION
-           |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |comp AS (
-           |  SELECT n.node, least(n.node, min(r.b)) AS cid
-           |  FROM (SELECT DISTINCT a AS node FROM und) n
-           |  JOIN reach r ON r.a = n.node GROUP BY n.node),
-           |allc AS (
-           |  SELECT m4.n, m4.c, coalesce(comp.cid, m4.n) AS cid
-           |  FROM m4 LEFT JOIN comp ON comp.node = m4.n)
-           |SELECT c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           |       CAST(count(DISTINCT cid) AS BIGINT) AS n_components,
-           |       count(DISTINCT cid) = 1 AS is_connected
-           |FROM allc GROUP BY c""".stripMargin
-      }
+      s"""${louvainPrelude(recursive = true)},
+         |$intraComponentsCtes,
+         |allc AS (
+         |  SELECT m4.n, m4.c, coalesce(comp.cid, m4.n) AS cid
+         |  FROM m4 LEFT JOIN comp ON comp.node = m4.n)
+         |SELECT c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
+         |       CAST(count(DISTINCT cid) AS BIGINT) AS n_components,
+         |       count(DISTINCT cid) = 1 AS is_connected
+         |FROM allc GROUP BY c""".stripMargin
     },
     // Leiden-style refinement: split disconnected communities into their
     // components (never decreases Q — +2 d_A d_B per split)
     Gate("louvain_refined") { (s, dir) =>
-      Pipeline.contactGraph(s, dir).colocationLouvainRefined(rounds = 4,
-        labels = Some(Pipeline.louvainLabels(s, dir)))
+      Pipeline.contactGraph(s, dir).colocationLouvainRefined(Pipeline.louvainLabels(s, dir))
     } {
       // Leiden-style refinement: the audit's component chain, labels →
       // component-min ids, the louvain stats tail over the refined labels
-      {
-        val l1 = louvainPassCtes("", "edges", "degl", 4)
-        s"""${EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS w
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |edges AS MATERIALIZED (
-           |  SELECT ua AS u, ub AS dst, w FROM prs
-           |  UNION ALL SELECT ub AS u, ua AS dst, w FROM prs),
-           |degl AS MATERIALIZED (
-           |  SELECT u, CAST(sum(w) AS BIGINT) AS k FROM edges GROUP BY u),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM prs),
-           |m0 AS (SELECT u AS n, u AS c FROM degl),
-           |$l1,
-           |intra AS MATERIALIZED (
-           |  SELECT p.ua AS a, p.ub AS b
-           |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c),
-           |und AS (SELECT a, b FROM intra UNION SELECT b, a FROM intra),
-           |reach(a, b) AS (
-           |  SELECT a, b FROM und
-           |  UNION
-           |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |comp AS (
-           |  SELECT n.node, least(n.node, min(r.b)) AS cid
-           |  FROM (SELECT DISTINCT a AS node FROM und) n
-           |  JOIN reach r ON r.a = n.node GROUP BY n.node),
-           |refl AS MATERIALIZED (
-           |  SELECT m4.n, coalesce(comp.cid, m4.n) AS c
-           |  FROM m4 LEFT JOIN comp ON comp.node = m4.n),
-           |wc AS (
-           |  SELECT la.c AS community, CAST(sum(p.w) AS BIGINT) AS w_in
-           |  FROM prs p JOIN refl la ON la.n = p.ua JOIN refl lb ON lb.n = p.ub
-           |  WHERE la.c = lb.c GROUP BY 1),
-           |dc AS (
-           |  SELECT refl.c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           |         CAST(sum(d.k) AS BIGINT) AS degree_sum
-           |  FROM degl d JOIN refl ON refl.n = d.u GROUP BY 1),
-           |cm AS (
-           |  SELECT dc.community, dc.n_nodes, CAST(coalesce(wc.w_in, 0) AS BIGINT) AS w_in,
-           |         dc.degree_sum
-           |  FROM dc LEFT JOIN wc USING (community)),
-           |qn AS (
-           |  SELECT sum(4 * CAST(tw.W AS HUGEINT) * cm.w_in
-           |             - CAST(cm.degree_sum AS HUGEINT) * cm.degree_sum) AS qn
-           |  FROM cm, tw)
-           |SELECT cm.community, cm.n_nodes, cm.w_in, cm.degree_sum,
-           |       CAST(qn.qn AS DOUBLE)
-           |         / (4.0 * CAST(tw.W AS DOUBLE) * CAST(tw.W AS DOUBLE)) AS modularity
-           |FROM cm, qn, tw""".stripMargin
-      }
+      s"""${louvainPrelude(recursive = true)},
+         |$intraComponentsCtes,
+         |refl AS MATERIALIZED (
+         |  SELECT m4.n, coalesce(comp.cid, m4.n) AS c
+         |  FROM m4 LEFT JOIN comp ON comp.node = m4.n),
+         |${modularityTail("refl")}""".stripMargin
     },
     // the synthetic contact graph is ~98% complete at sf0.1 (everyone
     // meets everyone), so unrestricted triangle ENUMERATION is ~C(n,3)
@@ -837,122 +572,68 @@ private[graft] object ColocationGates {
     } {
       // degree-ordered-orientation triangles: each triangle enumerated
       // once from its (degree, id)-smallest vertex; local_cc = 2T/(d(d-1))
-      {
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.user_id < 300 AND b.user_id < 300
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |deg AS MATERIALIZED (
-           |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-           |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
-           |o AS MATERIALIZED (
-           |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
-           |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
-           |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
-           |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
-           |tr AS (
-           |  SELECT w1.s AS x, w1.t AS y, w2.t AS z
-           |  FROM o w1 JOIN o w2 ON w1.s = w2.s
-           |  WHERE (w1.dt < w2.dt OR (w1.dt = w2.dt AND w1.t < w2.t))
-           |    AND EXISTS (SELECT 1 FROM o e WHERE e.s = w1.t AND e.t = w2.t)),
-           |pn AS (
-           |  SELECT n, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-           |    SELECT x AS n FROM tr UNION ALL SELECT y FROM tr UNION ALL SELECT z FROM tr)
-           |  GROUP BY n)
-           |SELECT deg.n AS user_id, deg.d AS degree,
-           |       CAST(coalesce(pn.n_triangles, 0) AS BIGINT) AS n_triangles,
-           |       2.0 * coalesce(pn.n_triangles, 0)
-           |         / (CAST(deg.d AS DOUBLE) * CAST(deg.d - 1 AS DOUBLE)) AS local_cc
-           |FROM deg LEFT JOIN pn ON deg.n = pn.n WHERE deg.d >= 2""".stripMargin
-      }
+      s"""${cellsCte()},
+         |${prsCte(w = false, under300 = true)},
+         |deg AS MATERIALIZED (
+         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
+         |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
+         |o AS MATERIALIZED (
+         |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
+         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
+         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
+         |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
+         |tr AS (
+         |  SELECT w1.s AS x, w1.t AS y, w2.t AS z
+         |  FROM o w1 JOIN o w2 ON w1.s = w2.s
+         |  WHERE (w1.dt < w2.dt OR (w1.dt = w2.dt AND w1.t < w2.t))
+         |    AND EXISTS (SELECT 1 FROM o e WHERE e.s = w1.t AND e.t = w2.t)),
+         |pn AS (
+         |  SELECT n, CAST(count(*) AS BIGINT) AS n_triangles FROM (
+         |    SELECT x AS n FROM tr UNION ALL SELECT y FROM tr UNION ALL SELECT z FROM tr)
+         |  GROUP BY n)
+         |SELECT deg.n AS user_id, deg.d AS degree,
+         |       CAST(coalesce(pn.n_triangles, 0) AS BIGINT) AS n_triangles,
+         |       2.0 * coalesce(pn.n_triangles, 0)
+         |         / (CAST(deg.d AS DOUBLE) * CAST(deg.d - 1 AS DOUBLE)) AS local_cc
+         |FROM deg LEFT JOIN pn ON deg.n = pn.n WHERE deg.d >= 2""".stripMargin
     },
     Gate("colocation_transitivity") { (s, dir) =>
       SpatialOps.colocationTransitivity(Pipeline.colocationPairs(s, dir)
         .filter(col("user_a") < 300 && col("user_b") < 300))
     } {
-      {
-        s"""${EventsAdapter.pfsSql},
-           |cells AS MATERIALIZED (
-           |  SELECT user_id, s_us, f_us,
-           |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-           |    unnest(generate_series(
-           |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-           |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-           |  FROM intervals),
-           |prs AS MATERIALIZED (
-           |  SELECT a.user_id AS ua, b.user_id AS ub
-           |  FROM cells a JOIN cells b
-           |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-           |  WHERE a.band = greatest(a.b0, b.b0)
-           |    AND a.user_id < b.user_id
-           |    AND a.user_id < 300 AND b.user_id < 300
-           |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-           |  GROUP BY a.user_id, b.user_id),
-           |deg AS MATERIALIZED (
-           |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-           |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
-           |o AS MATERIALIZED (
-           |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
-           |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
-           |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
-           |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
-           |tc AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n_triangles
-           |  FROM o w1 JOIN o w2 ON w1.s = w2.s
-           |  WHERE (w1.dt < w2.dt OR (w1.dt = w2.dt AND w1.t < w2.t))
-           |    AND EXISTS (SELECT 1 FROM o e WHERE e.s = w1.t AND e.t = w2.t)),
-           |st AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-           |         CAST(sum(d) // 2 AS BIGINT) AS n_edges,
-           |         CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges
-           |  FROM deg)
-           |SELECT st.n_nodes, st.n_edges, st.n_wedges, tc.n_triangles,
-           |       CASE WHEN st.n_wedges > 0
-           |            THEN 3.0 * tc.n_triangles / CAST(st.n_wedges AS DOUBLE)
-           |            ELSE 0.0 END AS global_cc
-           |FROM st, tc""".stripMargin
-      }
+      s"""${cellsCte()},
+         |${prsCte(w = false, under300 = true)},
+         |deg AS MATERIALIZED (
+         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
+         |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
+         |o AS MATERIALIZED (
+         |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
+         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
+         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
+         |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
+         |tc AS (
+         |  SELECT CAST(count(*) AS BIGINT) AS n_triangles
+         |  FROM o w1 JOIN o w2 ON w1.s = w2.s
+         |  WHERE (w1.dt < w2.dt OR (w1.dt = w2.dt AND w1.t < w2.t))
+         |    AND EXISTS (SELECT 1 FROM o e WHERE e.s = w1.t AND e.t = w2.t)),
+         |st AS (
+         |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
+         |         CAST(sum(d) // 2 AS BIGINT) AS n_edges,
+         |         CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges
+         |  FROM deg)
+         |SELECT st.n_nodes, st.n_edges, st.n_wedges, tc.n_triangles,
+         |       CASE WHEN st.n_wedges > 0
+         |            THEN 3.0 * tc.n_triangles / CAST(st.n_wedges AS DOUBLE)
+         |            ELSE 0.0 END AS global_cc
+         |FROM st, tc""".stripMargin
     },
     Gate("colocation_assortativity") { (s, dir) =>
       Pipeline.contactGraph(s, dir).colocationAssortativity()
     } {
       // Newman degree assortativity over the contact pair chain: exact
       // HUGEINT moment sums, one double division
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |prs AS MATERIALIZED (
-         |  SELECT a.user_id AS ua, b.user_id AS ub
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us
-         |  GROUP BY a.user_id, b.user_id),
+      s"""${cellsCte()},
+         |${prsCte(w = false)},
          |dg AS (
          |  SELECT u, CAST(count(*) AS BIGINT) AS d FROM (
          |    SELECT ua AS u FROM prs UNION ALL SELECT ub FROM prs)
@@ -978,24 +659,8 @@ private[graft] object ColocationGates {
       SpatialOps.interContactTimes(Pipeline.colocationMeetings(s, dir))
     } {
       // inter-contact gaps per user pair over the meeting-level rows
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |mts AS (
-         |  SELECT a.user_id AS ua, b.user_id AS ub,
-         |         greatest(a.s_us, b.s_us) AS ms, least(a.f_us, b.f_us) AS mf
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us),
+      s"""${cellsCte()},
+         |$mtsCte,
          |gaps AS (
          |  SELECT CAST(floor((ms - lag(mf) OVER (PARTITION BY ua, ub ORDER BY ms, mf)) / 1000000.0) AS BIGINT) AS g
          |  FROM mts)
@@ -1009,24 +674,8 @@ private[graft] object ColocationGates {
     } {
       // convoy pairs: the same meeting chain unrolled to covered bands,
       // maximal consecutive runs via the band - row_number key
-      s"""${EventsAdapter.pfsSql},
-         |cells AS MATERIALIZED (
-         |  SELECT user_id, s_us, f_us,
-         |    CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-         |    CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-         |    CAST(floor(s_us / 7200000000.0) AS BIGINT) AS b0,
-         |    unnest(generate_series(
-         |      CAST(floor(s_us / 7200000000.0) AS BIGINT),
-         |      CAST(floor(greatest(f_us - 1, s_us) / 7200000000.0) AS BIGINT))) AS band
-         |  FROM intervals),
-         |mts AS (
-         |  SELECT a.user_id AS ua, b.user_id AS ub,
-         |         greatest(a.s_us, b.s_us) AS ms, least(a.f_us, b.f_us) AS mf
-         |  FROM cells a JOIN cells b
-         |    ON a.cx = b.cx AND a.cy = b.cy AND a.band = b.band
-         |  WHERE a.band = greatest(a.b0, b.b0)
-         |    AND a.user_id < b.user_id
-         |    AND a.s_us < b.f_us AND b.s_us < a.f_us),
+      s"""${cellsCte()},
+         |$mtsCte,
          |bands AS (
          |  SELECT DISTINCT ua, ub, band FROM (
          |    SELECT ua, ub, unnest(generate_series(

@@ -4,7 +4,6 @@ import graft.functions.GeoFunctions.dq
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The contact graph of a co-location pair table and every diagnostic
   * computed on it (degrees, degree correlation, BFS balls,
@@ -21,6 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * used to rebuild its own (r13 verdict #7).
   * [[graft.Pipeline.contactGraph]] memoizes one graph per corpus
   * snapshot; standalone callers build one with `ContactGraph.from`.
+  * The iterative operators materialize each round with
+  * [[Share.materialize]], so a round reads its predecessor's rows, not
+  * its lineage.
   */
 final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
                               degW: DataFrame, degU: DataFrame, nNodes: Long,
@@ -116,8 +118,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * REGARDLESS of graph density — the documented scale knob; seedsMod=1
     * is the full exact closure for small graphs.
     */
-  def neighborhoodFunction(seedsMod: Long = 8L, maxHops: Int = 3,
-                           share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def neighborhoodFunction(seedsMod: Long = 8L, maxHops: Int = 3): DataFrame = {
     require(seedsMod >= 1 && maxHops >= 1, "seedsMod/maxHops must be positive")
     val edges = edgesW.select(col("src"), col("dst"))
     val seeds = degU.select(col("src").as("seed"))
@@ -125,12 +126,12 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     // reach includes the seed itself (distance 0) for propagation;
     // counts exclude it. Each hop is shared: the h+1 frontier join and
     // ALL the per-hop aggregates read hop h once, not its lineage.
-    var reach = share(seeds.select(col("seed"), col("seed").as("node")))
+    var reach = Share.materialize(seeds.select(col("seed"), col("seed").as("node")))
     val counts = (1 to maxHops).map { h =>
       val prev = reach
       val next = prev.join(edges, prev("node") === edges("src"))
         .select(prev("seed"), edges("dst").as("node"))
-      reach = share(next.unionByName(prev).distinct())
+      reach = Share.materialize(next.unionByName(prev).distinct())
       reach.filter(col("seed") =!= col("node"))
         .agg(count(lit(1)).cast("long").as("n_pairs"))
         .select(lit(h.toLong).as("h"), col("n_pairs"))
@@ -187,12 +188,11 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * Scale shape: per round, one hash equi-join values⋈edges on dst +
     * one per-node h-index window over ≤ degree rows (an LPA round's
     * shape); the histogram is one bounded groupBy. No driver state;
-    * `share` truncates the per-round lineage.
+    * each round is materialized.
     *
     * @return (coreness, n_users) — k-core occupancy histogram
     */
-  def kCoreHistogram(rounds: Int = 3,
-                     share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def kCoreHistogram(rounds: Int = 3): DataFrame = {
     // default rounds MUST stay in sync with the colocation_kcore oracle's
     // unrolled CTE count — a default/oracle drift is a silent parity trap
     // on any graph whose h-index chain is longer than the oracle's rounds
@@ -201,7 +201,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     var h = degU.select(col("src").as("n"), col("d").as("val"))
     val bySrc = Window.partitionBy(col("src")).orderBy(col("v").desc, col("dst"))
     for (_ <- 1 to rounds) {
-      h = share(edges
+      h = Share.materialize(edges
         .join(nodeFrame(h), edges("dst") === h("n"))
         .select(col("src"), col("dst"), col("val").as("v"))
         .withColumn("_rn", row_number().over(bySrc))
@@ -282,8 +282,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     *         pre-normalization max as digit string (exact), lambda_max
     *         = m_q/10⁶ − 1 as double
     */
-  def spectralRadius(rounds: Int = 4,
-                     share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def spectralRadius(rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
     val scale = 1000000L
     // degW is one row per node with ≥1 edge, already materialized
@@ -292,8 +291,8 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     var lastM: DataFrame = null
     for (r <- 1 to rounds) {
       // t feeds the 1-row max AND the renormalized next iterate, so it
-      // is shared — node-sized, one materialization per round
-      val t = share(edgesW
+      // is materialized — node-sized, once per round
+      val t = Share.materialize(edgesW
         .join(nodeFrame(x.select(col("n"), col("x").as("_xv"))), edgesW("dst") === col("n"))
         .groupBy(col("src")).agg(sum(dq(col("w")) * dq(col("_xv"))).as("_s"))
         .join(x.select(col("n"), col("x").as("_own")), col("src") === col("n"))
@@ -303,7 +302,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
       // the final round's renormalized iterate feeds nothing — only the
       // pre-normalization max does — so skip building it
       if (r < rounds)
-        x = share(t.crossJoin(broadcast(m))
+        x = Share.materialize(t.crossJoin(broadcast(m))
           .select(col("n"),
             expr(s"cast((_t * $scale) div _m as long)").as("x")))
     }
@@ -327,18 +326,17 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * in both engines) — ranking, not normalization, is the contract.
     *
     * Scale shape: one symmetric edge table (2|pairs| rows) joined with
-    * a degree table once, `share`d so the `iters` rank joins reuse the
-    * materialized edges; each iteration is one hash equi-join rank⋈edges
+    * a degree table once and materialized, so the `iters` rank joins
+    * reuse it; each iteration is one hash equi-join rank⋈edges
     * on src + one map-side-combinable dst sum + one left join back to
     * the node table. Driver state: none.
     */
   def colocationPagerank(iters: Int = 3, dampingPct: Long = 85L,
-                         scale: Long = 1000000L,
-                         share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+                         scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100 && scale >= 1,
       "need iters >= 1, dampingPct in [0,100], scale >= 1")
     val deg = degW.select(col("src"), col("wdeg").as("deg"))
-    val edgesDeg = share(edgesW.join(deg, Seq("src")))
+    val edgesDeg = Share.materialize(edgesW.join(deg, Seq("src")))
     val nodes = deg.select(col("src").as("user_id"))
     val teleport = (100L - dampingPct) * scale / 100L
     // node-sized frames broadcast when the node set is small
@@ -379,13 +377,12 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * Scale shape: per round, one hash join labels⋈edges on dst + one
     * (node, label) map-side-combinable sum + one per-node argmax window
     * over ≤ degree rows; modularity is two bounded groupBys. No driver
-    * state; `share` truncates the per-round lineage.
+    * state; each round is materialized.
     *
     * @return (community, n_nodes, w_in, degree_sum, modularity) — one
     *         row per final community, `modularity` the global Q repeated
     */
-  def colocationCommunities(rounds: Int = 3,
-                            share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def colocationCommunities(rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
     val edges = edgesUV
     var labels = degW.select(col("src").as("n"), col("src").as("lbl"))
@@ -395,7 +392,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
       // this replaces costs a second shuffle + per-partition sort per
       // round for the identical deterministic pick. The node-sized label
       // frame broadcasts under the shared prolog's small-node proof.
-      labels = share(edges
+      labels = Share.materialize(edges
         .join(nodeFrame(labels), edges("v") === labels("n"))
         .groupBy(col("u"), col("lbl")).agg(sum(col("w")).as("_s"))
         .groupBy(col("u"))
@@ -404,6 +401,16 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     }
     communityStats(labels)
   }
+
+  /** The exact-rational statistics of a level-1 Louvain partition
+    * `l1` (n, c) from [[louvainLabels]]: per community the node count,
+    * intra-community weight and weighted-degree sum, and the
+    * [[colocationCommunities]] exact-rational modularity Q.
+    *
+    * @return (community, n_nodes, w_in, degree_sum, modularity)
+    */
+  def colocationLouvain(l1: DataFrame): DataFrame =
+    communityStats(l1.select(col("n"), col("c").as("lbl")))
 
   /** One-level Louvain refinement over the contact graph (Blondel et
     * al. 2008 phase 1, made deterministic and parallel-safe): every
@@ -432,25 +439,18 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * Scale shape: per round, one community-total groupBy, one hash join
     * edges⋈labels on dst + (node, community) map-side-combinable sum,
     * two broadcast-sized joins (degrees, community totals) and one
-    * per-node argmax window over ≤ degree+1 rows. `share` truncates the
-    * per-round lineage; no driver state.
+    * per-node argmax window over ≤ degree+1 rows, each round
+    * materialized; no driver state.
     *
-    * @return (community, n_nodes, w_in, degree_sum, modularity)
+    * @return the level-1 label table (n, c). The pass runs ONCE per
+    *         corpus snapshot ([[graft.Pipeline.louvainLabels]], the
+    *         colocationMeetings pattern) and the four Louvain
+    *         diagnostics read it: [[colocationLouvain]],
+    *         [[colocationLouvainL2]], [[louvainConnectivity]] and
+    *         [[colocationLouvainRefined]]. They act on it more than
+    *         once, so it is a local table or a checkpoint, never a lineage.
     */
-  def colocationLouvain(rounds: Int = 4,
-                        share: DataFrame => DataFrame = Share.materialize,
-                        labels: Option[DataFrame] = None): DataFrame =
-    communityStats(level1Labels(labels, rounds, share).select(col("n"), col("c").as("lbl")))
-
-  /** The level-1 Louvain label table (n, c) — exposed so the gate
-    * family (stats, level 2, connectivity audit) can compute the
-    * expensive pass ONCE and share it, the colocationMeetings pattern:
-    * in production the partition is computed per corpus snapshot and
-    * every diagnostic reads it.
-    */
-  def louvainLabels(rounds: Int = 4,
-                    share: DataFrame => DataFrame = Share.materialize,
-                    localThreshold: Long = 2000000L): DataFrame = {
+  def louvainLabels(rounds: Int = 4, localThreshold: Long = 2000000L): DataFrame = {
     // SMALL-GRAPH FALLBACK (the same duplicateClusters pattern the
     // phase-2 pass uses): the 4-round distributed pass costs ~8-10 s of
     // per-round join/checkpoint latency on the sf0.1 contact graph
@@ -474,13 +474,13 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
         .toDF("n", "c")
     } else {
       val deg = degW.select(col("src").as("u"), col("wdeg").cast("long").as("k"))
-      louvainPass(edgesUV, deg, totalW, rounds, share)
+      louvainPass(edgesUV, deg, totalW, rounds)
     }
   }
 
   /** Two-level Louvain (Blondel et al. 2008 phase 2): collapse the
-    * level-1 communities to supernodes — one groupBy over the
-    * twice-relabeled pair table — rerun the one-level pass on the
+    * level-1 communities of `l1` (n, c) to supernodes — one groupBy
+    * over the twice-relabeled pair table — rerun the one-level pass on the
     * supergraph, and report the COMPOSED partition's exact-rational
     * statistics on the ORIGINAL graph, so `modularity` is directly
     * comparable with [[colocationLouvain]]'s (same Q formula, same
@@ -493,21 +493,17 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     * [[louvainPass]]); total weight W is invariant across levels. The
     * level-2 candidate argmax is exact in DECIMAL(38,0) like level 1.
     *
-    * Scale shape: level 1's per-round joins, plus two hash join
-    * relabels of the pair table, one groupBy collapse (the supergraph
-    * is ≤ #communities wide — orders smaller than the input), the same
+    * Scale shape: two hash join relabels of the pair table, one
+    * groupBy collapse (the supergraph is ≤ #communities wide — orders
+    * smaller than the input), the same
     * pass machinery over the collapsed table, and one final label
     * composition join.
     *
     * @return (community, n_nodes, w_in, degree_sum, modularity) of the
     *         composed level-2 partition over the original pair graph
     */
-  def colocationLouvainL2(rounds: Int = 4, rounds2: Int = 4,
-                          share: DataFrame => DataFrame = Share.materialize,
-                          labels: Option[DataFrame] = None,
+  def colocationLouvainL2(l1: DataFrame, rounds2: Int = 4,
                           localThreshold: Long = 100000L): DataFrame = {
-    val l1 = level1Labels(labels, rounds, share)
-
     // dense-rank relabel BEFORE the level-2 pass: supernode ids inherit
     // level-1 WINNER labels (a sparse, structurally biased id space);
     // 0-based ranks keep the supergraph in a compact id space for the
@@ -531,7 +527,7 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     val rank = rankRowsOpt match {
       case Some(rows) =>
         broadcast(pairs.sparkSession.createDataFrame(rows.toSeq).toDF("u0", "r"))
-      case None => share(graft.util.Ids.withSequentialId(
+      case None => Share.materialize(graft.util.Ids.withSequentialId(
         l1.select(col("c").as("u0")).distinct(), "r", col("u0")))
     }
 
@@ -629,27 +625,27 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
           .select(col("community"), col("n_nodes"), col("w_in"), col("degree_sum"),
             col("modularity"))
       case None =>
-        val superPairs = share(collapsed.filter(col("a") =!= col("b"))
+        val superPairs = Share.materialize(collapsed.filter(col("a") =!= col("b"))
           .select(col("a").as("user_a"), col("b").as("user_b"), col("w").as("n_meetings")))
         val selfW = collapsed.filter(col("a") === col("b"))
           .select(col("a").as("u"), col("w").as("_wself"))
-        val edges2 = share(superPairs
+        val edges2 = Share.materialize(superPairs
           .select(col("user_a").as("u"), col("user_b").as("v"), col("n_meetings").as("w"))
           .unionByName(superPairs.select(col("user_b").as("u"), col("user_a").as("v"),
             col("n_meetings").as("w"))))
         // every level-1 community is a supernode, including those with no
         // inter-community edge (they would vanish from an edge-derived
         // degree table and lose their nodes in the composition join)
-        val deg2 = share(rank.select(col("r").as("u"))
+        val deg2 = Share.materialize(rank.select(col("r").as("u"))
           .join(edges2.groupBy(col("u")).agg(sum(col("w")).cast("long").as("_ke")), Seq("u"), "left")
           .join(selfW, Seq("u"), "left")
           .select(col("u"),
             (coalesce(col("_ke"), lit(0L)) + lit(2L) * coalesce(col("_wself"), lit(0L)))
               .cast("long").as("k")))
-        val l2 = louvainPass(edges2, deg2, totalW, rounds2, share)
+        val l2 = louvainPass(edges2, deg2, totalW, rounds2)
         // compose n → c1 → rank → level-2 label (a rank) → back to the
         // original community-id space of that winning rank
-        val composed = share(l1
+        val composed = Share.materialize(l1
           .join(rank.select(col("u0"), col("r")), l1("c") === col("u0"))
           .join(l2.select(col("n").as("_rn"), col("c").as("_c2r")), col("r") === col("_rn"))
           .join(rank.select(col("u0").as("lbl"), col("r").as("_rb")), col("_c2r") === col("_rb"))
@@ -675,38 +671,34 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     }
   }
 
-  /** The Leiden-style connectivity audit of the Louvain partition
-    * (Traag, Waltman & van Eck 2019, "From Louvain to Leiden":
+  /** The Leiden-style connectivity audit of the Louvain partition `l1`
+    * (n, c) (Traag, Waltman & van Eck 2019, "From Louvain to Leiden":
     * Louvain's node moves can leave a community internally DISCONNECTED
     * — its defect, and the property Leiden's refinement phase exists to
     * guarantee). Per community: node count and the number of connected
     * components of its INDUCED subgraph; `is_connected` false is
     * exactly the badly-connected-community flag of the paper.
     *
-    * Scale shape: the level-1 pass, two label joins to keep
-    * intra-community edges only, then the guarded hook+compress
-    * component loop (O(log d) rounds) on that reduced edge set, one
+    * Scale shape: two label joins to keep intra-community edges only,
+    * then the guarded hook+compress component loop (O(log d) rounds) on that reduced edge set, one
     * bounded groupBy. Nodes with no intra-community edge are their own
     * component.
     *
     * @return (community, n_nodes, n_components, is_connected)
     */
-  def louvainConnectivity(rounds: Int = 4,
-                          share: DataFrame => DataFrame = Share.materialize,
-                          labels: Option[DataFrame] = None): DataFrame = {
-    val l1 = level1Labels(labels, rounds, share)
+  def louvainConnectivity(l1: DataFrame): DataFrame =
     l1.join(intraComponents(l1), Seq("n"), "left")
       .select(col("n"), col("c"), coalesce(col("cluster_id"), col("n")).as("_cid"))
       .groupBy(col("c").as("community"))
       .agg(count(lit(1)).cast("long").as("n_nodes"),
         countDistinct(col("_cid")).cast("long").as("n_components"))
       .withColumn("is_connected", col("n_components") === 1L)
-  }
 
-  /** Leiden-style refinement of the Louvain partition (the minimal
-    * guarantee of Traag et al. 2019 §A: every community is internally
-    * connected): split each community into the connected components of
-    * its induced subgraph and report the refined partition's stats.
+  /** Leiden-style refinement of the Louvain partition `l1` (n, c) (the
+    * minimal guarantee of Traag et al. 2019 §A: every community is
+    * internally connected): split each community into the connected
+    * components of its induced subgraph and report the refined
+    * partition's stats.
     * Splitting disconnected parts NEVER decreases modularity — for
     * c = A ⊎ B with no A–B edge the numerator changes by exactly
     * +2·d_A·d_B > 0 — so Q(refined) ≥ Q(louvain) unconditionally, with
@@ -720,26 +712,9 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
     *
     * @return (community, n_nodes, w_in, degree_sum, modularity)
     */
-  def colocationLouvainRefined(rounds: Int = 4,
-                               share: DataFrame => DataFrame = Share.materialize,
-                               labels: Option[DataFrame] = None): DataFrame = {
-    val l1 = level1Labels(labels, rounds, share)
+  def colocationLouvainRefined(l1: DataFrame): DataFrame =
     communityStats(l1.join(intraComponents(l1), Seq("n"), "left")
       .select(col("n"), coalesce(col("cluster_id"), col("n")).as("lbl")))
-  }
-
-  /** The level-1 labels (n, c) a Louvain diagnostic reads: `labels` when
-    * given, else this graph's own [[louvainLabels]] pass. A PERSISTED
-    * frame (the pipeline memo) is used as-is — re-checkpointing it is a
-    * wasted job per call — and anything else is share()'d: the callers
-    * read the labels in several actions, so an uncached (worse,
-    * nondeterministic) lineage would recompute per action and could
-    * diverge between them.
-    */
-  private def level1Labels(labels: Option[DataFrame], rounds: Int,
-                           share: DataFrame => DataFrame): DataFrame =
-    labels.map(df => if (df.storageLevel == StorageLevel.NONE) share(df) else df)
-      .getOrElse(share(louvainLabels(rounds, share)))
 
   /** Per node: the connected component (`cluster_id`) of the subgraph
     * its level-1 community induces — the intra-community pairs through
@@ -800,19 +775,15 @@ final case class ContactGraph(pairs: DataFrame, edgesW: DataFrame,
 object ContactGraph {
 
   /** Build a [[ContactGraph]] from a co-location pair table
-    * (user_a, user_b, n_meetings). All four frames pass through `share`
-    * so downstream iterative readers see materialized tables, not the
-    * banded co-location self-join's lineage.
+    * (user_a, user_b, n_meetings). The projected pairs, the edges and
+    * the degrees pass through `share` so downstream iterative readers
+    * see materialized tables, not the banded co-location self-join's
+    * lineage. The operators materialize their own rounds with
+    * [[Share.materialize]] whatever `share` is.
     */
   def from(pairs: DataFrame,
            share: DataFrame => DataFrame = Share.materialize): ContactGraph = {
-    // an already-persisted pair table (the Pipeline memo) is used as-is
-    // — re-checkpointing a projection of it is a wasted job (the same
-    // storageLevel guard the Louvain diagnostics apply to their labels)
-    val projected = pairs.select(col("user_a"), col("user_b"), col("n_meetings"))
-    val p =
-      if (pairs.storageLevel == StorageLevel.NONE) share(projected)
-      else projected
+    val p = share(pairs.select(col("user_a"), col("user_b"), col("n_meetings")))
     val edgesW = share(p
       .select(col("user_a").as("src"), col("user_b").as("dst"), col("n_meetings").as("w"))
       .unionByName(p.select(col("user_b").as("src"), col("user_a").as("dst"),
@@ -831,7 +802,7 @@ object ContactGraph {
   }
 
   /** The semi-synchronous modularity-gain label loop shared by
-    * [[colocationLouvain]] (level 1: every node its own community) and
+    * [[louvainLabels]] (level 1: every node its own community) and
     * [[colocationLouvainL2]] (level 2: every supernode its own
     * community, degrees carrying the collapsed self-loop weight).
     *
@@ -846,7 +817,7 @@ object ContactGraph {
     *               edge is inter- or intra-community
     */
   private def louvainPass(edges: DataFrame, deg: DataFrame, totalW: DataFrame,
-                          rounds: Int, share: DataFrame => DataFrame): DataFrame = {
+                          rounds: Int): DataFrame = {
     require(rounds >= 1, "need rounds >= 1")
     // The two-coloring class is the parity of the node's DENSE RANK in id
     // order, not of the raw id: an id population with biased parity (all
@@ -859,7 +830,7 @@ object ContactGraph {
     val cls = graft.util.Ids.withSequentialId(deg.select(col("u")), "_r", col("u"))
       .select(col("u").as("n"), pmod(col("_r"), lit(2L)).as("_p"))
     // the class rides INSIDE the label frame (one extra long per node in
-    // the per-round share) instead of re-joining a class table every
+    // the per-round checkpoint) instead of re-joining a class table every
     // round — the final select drops it
     var comm = deg.select(col("u").as("n"), col("u").as("c")).join(cls, Seq("n"))
     val byNode = Window.partitionBy(col("u")).orderBy(col("_gain").desc, col("cand"))
@@ -890,7 +861,7 @@ object ContactGraph {
         .select(col("u").as("n"), col("cand"))
       // two-coloring schedule: this round only the matching rank-parity
       // class moves — the other class keeps its community
-      comm = share(comm.join(best, Seq("n"))
+      comm = Share.materialize(comm.join(best, Seq("n"))
         .select(col("n"),
           when(col("_p") === lit((r % 2).toLong), col("cand"))
             .otherwise(col("c")).as("c"),
@@ -905,8 +876,9 @@ object ContactGraph {
     * round r), same candidate set (neighbor communities plus own at
     * k_in 0), same exact-integer gain 2·W·k_in − k·Σtot(c∖u) (BigInt
     * here, DECIMAL(38,0) there — both exact), same (gain desc, cand
-    * asc) tie-break. Bit-identical labels by construction, pinned by
-    * ColocationGraphSpec against the distributed pass.
+    * asc) tie-break. Bit-identical labels by construction, pinned
+    * against the distributed pass by ColocationSpec's two "driver-side
+    * small-graph pass is bit-identical" tests.
     *
     * @param undirected super-edges (u, v, w) WITHOUT self-loops
     * @param universe   every supernode id (isolated ones included)

@@ -198,7 +198,8 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val got = ContactGraph.from(pairs).colocationLouvain(rounds = 4)
+    val g = ContactGraph.from(pairs)
+    val got = g.colocationLouvain(g.louvainLabels(rounds = 4))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.keySet == Set(1L, 5L), got.keySet)
@@ -222,7 +223,8 @@ class ColocationSpec extends SparkSpec {
       (2L, 4L, 10L), (2L, 6L, 10L), (4L, 6L, 10L),
       (8L, 10L, 10L), (8L, 12L, 10L), (10L, 12L, 10L),
       (6L, 8L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val got = ContactGraph.from(even).colocationLouvain(rounds = 4)
+    val g = ContactGraph.from(even)
+    val got = g.colocationLouvain(g.louvainLabels(rounds = 4))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.keySet == Set(2L, 10L), got.keySet)
@@ -238,7 +240,8 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val l2a = ContactGraph.from(barbell).colocationLouvainL2(rounds = 4, rounds2 = 4)
+    val gb = ContactGraph.from(barbell)
+    val l2a = gb.colocationLouvainL2(gb.louvainLabels(rounds = 4), rounds2 = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(l2a.keySet.size == 2, l2a.keySet)
@@ -252,8 +255,9 @@ class ColocationSpec extends SparkSpec {
       val rows = df.select("modularity", "community").collect()
       (rows.head.getDouble(0), rows.length.toLong)
     }
-    val (q1, n1) = q(ContactGraph.from(path).colocationLouvain(rounds = 4))
-    val (q2, n2) = q(ContactGraph.from(path).colocationLouvainL2(rounds = 4, rounds2 = 4))
+    val gp = ContactGraph.from(path)
+    val (q1, n1) = q(gp.colocationLouvain(gp.louvainLabels(rounds = 4)))
+    val (q2, n2) = q(gp.colocationLouvainL2(gp.louvainLabels(rounds = 4), rounds2 = 4))
     assert(q2 >= q1, s"Q(l2)=$q2 < Q(l1)=$q1")
     assert(n2 <= n1, s"communities grew: $n1 -> $n2")
     assert(q2 > q1, s"expected strict improvement on P12: $q1 -> $q2 ($n1 -> $n2 communities)")
@@ -270,9 +274,10 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 9L), (7L, 8L, 1000L)).toDF("user_a", "user_b", "n_meetings")
-    val (q1c, n1c) = q(ContactGraph.from(cliques).colocationLouvain(rounds = 4))
+    val gc = ContactGraph.from(cliques)
+    val (q1c, n1c) = q(gc.colocationLouvain(gc.louvainLabels(rounds = 4)))
     assert(n1c == 3, s"level 1 should find the 3 groups, got $n1c")
-    val l2c = ContactGraph.from(cliques).colocationLouvainL2(rounds = 4, rounds2 = 4)
+    val l2c = gc.colocationLouvainL2(gc.louvainLabels(rounds = 4), rounds2 = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     val qExp = 552000.0 / 4571044.0 // (4W·69 − 138² + 4W·1000 − 2000²) / 4W², W = 1069
@@ -319,8 +324,9 @@ class ColocationSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getDouble(4))).sortBy(t => (t._1, t._2))
-      val local = rows(ContactGraph.from(pairs).colocationLouvainL2(rounds = 3, rounds2 = 3))
-      val dist = rows(ContactGraph.from(pairs).colocationLouvainL2(rounds = 3, rounds2 = 3,
+      val g = ContactGraph.from(pairs)
+      val local = rows(g.colocationLouvainL2(g.louvainLabels(rounds = 3), rounds2 = 3))
+      val dist = rows(g.colocationLouvainL2(g.louvainLabels(rounds = 3), rounds2 = 3,
         localThreshold = 0L))
       assert(local.toSeq == dist.toSeq, s"fixture $i: local != distributed")
     }
@@ -340,12 +346,13 @@ class ColocationSpec extends SparkSpec {
     val pairs = Seq(
       (0L, 1L, 1L), (0L, 2L, 1L), (0L, 9L, 10L), (8L, 9L, 10L))
       .toDF("user_a", "user_b", "n_meetings")
-    val audit = ContactGraph.from(pairs).louvainConnectivity(rounds = 2)
+    val g = ContactGraph.from(pairs)
+    val audit = g.louvainConnectivity(g.louvainLabels(rounds = 2))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(audit(0L) == ((2L, 2L, false)), s"community 0 must audit disconnected: $audit")
     assert(audit(9L) == ((3L, 1L, true)), audit)
 
-    val refined = ContactGraph.from(pairs).colocationLouvainRefined(rounds = 2)
+    val refined = g.colocationLouvainRefined(g.louvainLabels(rounds = 2))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     val qRef = -6.0 / 1936.0
@@ -353,7 +360,7 @@ class ColocationSpec extends SparkSpec {
     assert(refined(1L) == ((1L, 0L, 1L, qRef)), refined)
     assert(refined(2L) == ((1L, 0L, 1L, qRef)), refined)
     assert(refined(0L) == ((3L, 20L, 42L, qRef)), refined)
-    val qL1 = ContactGraph.from(pairs).colocationLouvain(rounds = 2)
+    val qL1 = g.colocationLouvain(g.louvainLabels(rounds = 2))
       .select("modularity").as[Double].head()
     assert(qRef > qL1, s"refinement must strictly improve: $qL1 -> $qRef")
 
@@ -363,7 +370,8 @@ class ColocationSpec extends SparkSpec {
       (1L, 2L, 10L), (1L, 3L, 10L), (2L, 3L, 10L),
       (4L, 5L, 10L), (4L, 6L, 10L), (5L, 6L, 10L),
       (3L, 4L, 1L)).toDF("user_a", "user_b", "n_meetings")
-    val rb = ContactGraph.from(barbell).colocationLouvainRefined(rounds = 4)
+    val gb = ContactGraph.from(barbell)
+    val rb = gb.colocationLouvainRefined(gb.louvainLabels(rounds = 4))
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
     assert(rb == Set((3L, 30L, 61L, 7198.0 / 14884.0)), rb)
   }

@@ -41,10 +41,10 @@ class ContactGraphParitySpec extends SparkSpec {
       "pagerank" -> (_.colocationPagerank(iters = 3)),
       "communities" -> (_.colocationCommunities(rounds = 3)),
       "ball" -> (_.neighborhoodFunction(seedsMod = 2L, maxHops = 2)),
-      "louvain" -> (_.colocationLouvain(rounds = 3)),
-      "louvain_l2" -> (_.colocationLouvainL2(rounds = 3, rounds2 = 3)),
-      "connectivity" -> (_.louvainConnectivity(rounds = 3)),
-      "refined" -> (_.colocationLouvainRefined(rounds = 3)))
+      "louvain" -> (g => g.colocationLouvain(g.louvainLabels(rounds = 3))),
+      "louvain_l2" -> (g => g.colocationLouvainL2(g.louvainLabels(rounds = 3), rounds2 = 3)),
+      "connectivity" -> (g => g.louvainConnectivity(g.louvainLabels(rounds = 3))),
+      "refined" -> (g => g.colocationLouvainRefined(g.louvainLabels(rounds = 3))))
     val shared = ContactGraph.from(p, Share.materialize)
     val unshared = ContactGraph.from(p, Share.none)
     cases.foreach { case (name, run) =>
