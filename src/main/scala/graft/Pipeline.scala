@@ -202,11 +202,12 @@ object Pipeline {
       ContactGraph.from(colocationPairs(spark, sfDir))
     }
 
-  /** The level-1 Louvain label table of [[contactGraph]] — the
-    * expensive 4-round gain pass, shared by the stats gate, the
-    * phase-2 collapse and the Leiden-style connectivity audit (same
-    * rationale as the meeting table: one partition per snapshot, many
-    * diagnostics reading it).
+  /** The level-1 Louvain label table (n, c) of [[contactGraph]] — the
+    * expensive 4-round gain pass, read by the four Louvain gates: the
+    * stats gate, the phase-2 collapse, the Leiden-style connectivity
+    * audit and the Leiden-style refinement (same rationale as the
+    * meeting table: one partition per snapshot, many diagnostics
+    * reading it).
     */
   def louvainLabels(spark: SparkSession, sfDir: String): DataFrame =
     once(spark, sfDir, "louvain_l1") {
