@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * inputs on every action.
   *
   * Every generator call passes [[Share.materialize]] as its `share` hook:
-  * each generator marks the intermediates that appear in more than one output
-  * lineage (or get re-read by the dense-id range sort's sampling pass), so
-  * the expensive scan/window chains materialize exactly once no matter
-  * which output is acted on first. Without the hook, materializing a
-  * generator's two outputs runs its scan chain two to four times — Spark's
-  * cache manager can only dedupe plan fragments that are persisted.
+  * each generator marks the intermediates that appear in more than one
+  * output lineage (or get re-read by the dense-id range sort's sampling
+  * pass), so the expensive scan/window chains materialize exactly once
+  * no matter which output is acted on first. Without the hook,
+  * materializing a generator's two outputs runs its scan chain two to
+  * four times — Spark's cache manager can only dedupe plan fragments
+  * that are persisted.
   *
   * The share implementation is a lazy `localCheckpoint`: plain row-block
   * storage (memory, spilling to local disk) with no columnar re-encode,
