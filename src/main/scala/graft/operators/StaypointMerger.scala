@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, EqualNullSafe, EqualTo, Expression,
+  GenericInternalRow, Nondeterministic}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Merge temporally-close staypoints at the same location, unless a
   * tripleg lies between them.
@@ -10,10 +15,18 @@ import org.apache.spark.sql.functions._
   * Reference: trackintel/preprocessing/staypoints.py:250-370. The
   * reference runs a while-changed label-propagation loop; merging is
   * transitive only over *consecutive* rows, which is exactly
-  * run-grouping — so the loop collapses into a single window pass: a row
-  * continues its predecessor's run iff the predecessor was mergeable with
-  * it, and the run id is a cumulative sum of "starts a new run" flags
-  * (see SURVEY.md §4, an algorithmic improvement over the reference).
+  * run-grouping (see SURVEY.md §4, an algorithmic improvement over the
+  * reference) — so the loop collapses into one sorted pass per user:
+  * hash-partition the staypoint ∪ tripleg stream by `user_id`, sort each
+  * partition by (user_id, started_at, staypoint before tripleg, id), and
+  * number the runs in one scan ([[MergeRunKey]]). The run aggregate
+  * reuses that partitioning: one shuffle, no window, no join.
+  *
+  * Semantics: per user, in (started_at, id) order (nulls first), a
+  * staypoint continues its predecessor's run iff `started_at − previous
+  * finished_at <= gap`, the locations are equal (SQL `=`: a null never
+  * matches), and no tripleg sorts between the two. Staypoint ids are
+  * unique and non-null; a null id throws.
   */
 object StaypointMerger {
 
@@ -29,36 +42,22 @@ object StaypointMerger {
     require(sp.columns.contains("location_id"), "staypoints must contain column location_id")
     val gapUs = (maxTimeGapMinutes * 60e6).toLong
 
-    // interleave with triplegs to know whether a tripleg sits between
-    // consecutive staypoints
-    val spPart = sp.select(col("id").as("_id"), col("user_id"), col("started_at"),
-      lit("staypoint").as("_type"))
-    val tplPart = tpls.select(col("id").as("_id"), col("user_id"), col("started_at"),
-      lit("tripleg").as("_type"))
-    val ord = when(col("_type") === "staypoint", 0).otherwise(1)
-    val wAll = Window.partitionBy("user_id").orderBy(col("started_at"), ord, col("_id"))
-    val nextType = spPart.unionByName(tplPart)
-      .withColumn("_next_type", lead(col("_type"), 1).over(wAll))
-      .filter(col("_type") === "staypoint")
-      .select(col("_id"), col("_next_type"))
-
-    val withNext = sp.join(nextType, sp("id") === nextType("_id"), "left").drop("_id")
-
-    val w = Window.partitionBy("user_id").orderBy("started_at", "id")
-    val prevFin = lag(unix_micros(col("finished_at")), 1).over(w)
-    val prevLoc = lag(col("location_id"), 1).over(w)
-    val prevNextType = lag(col("_next_type"), 1).over(w)
-
-    // mergeable with previous row: same user (window), time gap within
-    // threshold, same location, no tripleg after the previous staypoint
-    val continues =
-      (unix_micros(col("started_at")) - prevFin <= gapUs) &&
-        (col("location_id") === prevLoc) &&
-        (!(prevNextType <=> lit("tripleg")))
-    val newRun = when(coalesce(continues, lit(false)), 0L).otherwise(1L)
-
-    val runs = withNext
-      .withColumn("_run", sum(newRun).over(w))
+    // The staypoints carry every column (the aggregate reads them); a
+    // tripleg row only marks its place in the user's stream.
+    val spCols = sp.schema.fields.toSeq
+    val keep = Set("id", "user_id", "started_at")
+    val stream = sp.withColumn("_tpl", lit(false)).unionByName(
+      tpls.select(spCols.map(f =>
+        (if (keep(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)) :+
+        lit(true).as("_tpl"): _*))
+    def e(c: Column): Expression = ColumnShim.expression(c)
+    val runKey = ColumnShim.column(MergeRunKey(e(col("user_id")), e(unix_micros(col("started_at"))),
+      e(unix_micros(col("finished_at"))), e(col("location_id")), e(col("_tpl")), e(col("id")), gapUs))
+    val runs = stream
+      .repartition(col("user_id"))
+      .sortWithinPartitions(col("user_id"), col("started_at"), col("_tpl"), col("id"))
+      .withColumn("_run", runKey)
+      .filter(!col("_tpl"))
 
     // "first"/"last" are row-position semantics in the reference's
     // time-ordered frame — made deterministic here with min_by/max_by on
@@ -101,4 +100,78 @@ object StaypointMerger {
       .drop("_uid", "_run")
       .select(outCols.map(col): _*)
   }
+}
+
+/** The merge scan: evaluated row by row over a partition sorted by
+  * (user, started_at, staypoint before tripleg, id), it returns the key
+  * of the run each staypoint belongs to (tripleg rows get the current
+  * key; the merge drops them). A staypoint opens a new run unless the
+  * previous staypoint of the same user finished at most `gapUs` before
+  * it started, both locations are non-null and equal (Spark's `=`), and
+  * no tripleg row came between them. Keys are unique within the
+  * partition, so (user, key) names a run.
+  *
+  * It is an expression in the sorted stage rather than a `mapPartitions`
+  * because a typed map re-serializes its rows under new attributes:
+  * Spark then no longer knows the rows are hash-partitioned by user and
+  * shuffles again for the run aggregate. As a projection it keeps the
+  * partitioning, and `Nondeterministic` keeps the optimizer from moving
+  * it or the tripleg filter across the sort.
+  */
+private[operators] case class MergeRunKey(user: Expression, startUs: Expression, finishUs: Expression,
+                                          location: Expression, isTripleg: Expression, id: Expression,
+                                          gapUs: Long)
+    extends Expression with Nondeterministic with CodegenFallback {
+
+  override def children: Seq[Expression] = Seq(user, startUs, finishUs, location, isTripleg, id)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "merge_run_key"
+
+  private def equality(dt: DataType, nullSafe: Boolean): Expression = {
+    val (a, b) = (BoundReference(0, dt, nullable = true), BoundReference(1, dt, nullable = true))
+    if (nullSafe) EqualNullSafe(a, b) else EqualTo(a, b)
+  }
+  @transient private lazy val sameUser = equality(user.dataType, nullSafe = true)
+  @transient private lazy val sameLocation = equality(location.dataType, nullSafe = false)
+  private def holds(eq: Expression, a: Any, b: Any): Boolean =
+    eq.eval(new GenericInternalRow(Array[Any](a, b))) == true
+
+  @transient private var key = 0L
+  @transient private var seen = false
+  @transient private var prevUser: Any = null
+  // the previous staypoint of the current user, if any
+  @transient private var prevSp = false
+  @transient private var prevFinish: Any = null
+  @transient private var prevLocation: Any = null
+  @transient private var tplSince = false
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = {
+    key = 0L; seen = false; prevUser = null; prevSp = false
+  }
+
+  override protected def evalInternal(input: InternalRow): Any = {
+    val u = user.eval(input)
+    if (!seen || !holds(sameUser, prevUser, u)) {
+      seen = true; prevUser = InternalRow.copyValue(u); prevSp = false
+    }
+    if (isTripleg.eval(input) == true) {
+      tplSince = true
+    } else {
+      if (id.eval(input) == null) throw new IllegalArgumentException("staypoints.id must not be null")
+      val s = startUs.eval(input)
+      val loc = location.eval(input)
+      val continues = prevSp && !tplSince && s != null && prevFinish != null &&
+        s.asInstanceOf[Long] - prevFinish.asInstanceOf[Long] <= gapUs &&
+        loc != null && prevLocation != null && holds(sameLocation, prevLocation, loc)
+      if (!continues) key += 1
+      prevSp = true; tplSince = false
+      prevFinish = finishUs.eval(input)
+      prevLocation = InternalRow.copyValue(loc)
+    }
+    key
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(user = c(0), startUs = c(1), finishUs = c(2), location = c(3), isTripleg = c(4), id = c(5))
 }

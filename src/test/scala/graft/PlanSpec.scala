@@ -584,4 +584,13 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("Window"), s"no window in a generator output:\n$p")
     }
   }
+
+  test("merge_staypoints: one user_id exchange feeds the run scan and its aggregate; no window, no join") {
+    val p = plan("merge_staypoints")
+    assert(p.contains("merge_run_key"), s"the run key must be the sorted-stage scan:\n$p")
+    assert("Exchange".r.findAllIn(p).length == 1 &&
+      "Exchange hashpartitioning\\(user_id".r.findAllIn(p).length == 1,
+      s"exactly one shuffle, hashed on user_id — the run aggregate reuses it:\n$p")
+    assert(!p.contains("Window") && !p.contains("Join"), s"no window and no join:\n$p")
+  }
 }
