@@ -3,8 +3,10 @@ package graft.operators
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions.{dq, quantizedCell}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Spatial filtering and pairwise distance matrices.
   * Reference: trackintel/geogr/filter.py, trackintel/geogr/distances.py:89-185.
@@ -782,22 +784,62 @@ object SpatialOps {
     * distribution's heavy tail drives epidemic spreading speed, cf.
     * Cattuto et al. 2010). Meetings order by (start, end) — exact
     * duplicates are order-invariant for the gap multiset; overlapping
-    * or back-to-back meetings (gap < 1 s) drop.
+    * or back-to-back meetings (gap < 1 s) drop. A meeting with a null
+    * start, or after one with a null end, has no gap.
     *
-    * Scale shape: one (pair)-keyed lag window over meeting rows, then a
-    * ≤ 64-bucket map-side-combinable count.
+    * Scale shape: one pair-keyed shuffle, a sort by (m_s_us, m_f_us)
+    * inside each partition, and one streaming scan ([[GapScan]]) that
+    * carries only the previous meeting's end — then a ≤ 64-bucket
+    * map-side-combinable count.
     */
   def interContactTimes(meetings: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_a", "user_b").orderBy(col("m_s_us"), col("m_f_us"))
+    // nullable, as the window form's gap column was: the bucket keeps
+    // its nullable schema
+    val gapSchema = StructType(Seq(StructField("_gap", LongType)))
     meetings
-      .withColumn("_pf", lag(col("m_f_us"), 1).over(w))
-      .filter(col("_pf").isNotNull)
-      .withColumn("_gap", ((col("m_s_us") - col("_pf")) / lit(1000000L)).cast("long"))
-      .filter(col("_gap") >= 1L)
+      .select(col("user_a"), col("user_b"), col("m_s_us").cast("long"), col("m_f_us").cast("long"))
+      .repartition(col("user_a"), col("user_b"))
+      .sortWithinPartitions(col("user_a"), col("user_b"), col("m_s_us"), col("m_f_us"))
+      .mapPartitions(rows => new GapScan(rows))(RowEncoder.encoderFor(gapSchema))
+      .toDF()
       .withColumn("bucket", (length(bin(col("_gap"))) - 1).cast("long"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n_gaps"),
         sum(col("_gap")).cast("long").as("sum_sec"))
+  }
+
+  /** Streaming scan over a (user_a, user_b, m_s_us, m_f_us)-sorted
+    * partition: emits each meeting's gap to the pair's previous meeting,
+    * `((m_s − previous m_f) / 1000000L)` as a double truncated to long
+    * (Spark's `/` and cast), when both ends are present and the gap is
+    * at least one second.
+    */
+  private final class GapScan(rows: Iterator[Row]) extends Iterator[Row] {
+    private var ready: Row = null
+    private var seen = false
+    private var prevA: Any = null
+    private var prevB: Any = null
+    private var prevF: Any = null
+
+    private def process(r: Row): Unit = {
+      val samePair = seen && r.get(0) == prevA && r.get(1) == prevB
+      if (samePair && prevF != null && !r.isNullAt(2)) {
+        val gap = ((r.getLong(2) - prevF.asInstanceOf[Long]).toDouble / 1000000L.toDouble).toLong
+        if (gap >= 1L) ready = Row(gap)
+      }
+      seen = true; prevA = r.get(0); prevB = r.get(1); prevF = r.get(3)
+    }
+
+    override def hasNext: Boolean = {
+      while (ready == null && rows.hasNext) process(rows.next())
+      ready != null
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = ready; ready = null
+      r
+    }
   }
 
   /** Convoy / travel-together pairs (the pairwise core of Jeung et al.
@@ -813,34 +855,81 @@ object SpatialOps {
     * Scale shape: each meeting collapses to its covered band RANGE
     * [b_s, b_f] — never unrolled to one row per band, so a week-long
     * meeting at a 1-minute band costs one row, not 10k — and runs come
-    * from the classic interval-merge (touching or overlapping ranges
-    * fuse) via one pair-keyed window: a running max of previous range
-    * ends marks run breaks, a running sum of breaks keys the run.
-    * ONE shuffle total (the pair window; the run groupBy reuses its
-    * partitioning), cost proportional to the meeting table. Nothing
-    * ever joins raw trajectories.
+    * from the classic interval-merge: ONE pair-keyed shuffle, a sort by
+    * (b_s, b_f) inside each partition, and one streaming scan
+    * ([[ConvoyScan]]) whose state is the open run and the running max of
+    * range ends; a run is emitted when it closes. No window and no run
+    * aggregate; cost proportional to the meeting table. Nothing ever
+    * joins raw trajectories.
     */
   def convoyPairs(meetings: DataFrame, bandMinutes: Double = 120.0,
                   minConsecutive: Int = 2): DataFrame = {
     require(bandMinutes > 0 && minConsecutive >= 1,
       "need positive band width and run threshold")
     val bandUs = (bandMinutes * 60e6).toLong
-    val w = Window.partitionBy("user_a", "user_b").orderBy(col("_bs"), col("_bf"))
+    val f = meetings.schema
+    // nullable band columns, as the window form's run aggregates were
+    val schema = StructType(Seq(f("user_a"), f("user_b"),
+      StructField("run_start_band", LongType), StructField("n_bands", LongType)))
     meetings
       .select(col("user_a"), col("user_b"),
         floor(col("m_s_us") / lit(bandUs.toDouble)).cast("long").as("_bs"),
         floor(greatest(col("m_f_us") - 1, col("m_s_us")) / lit(bandUs.toDouble)).cast("long").as("_bf"))
-      .withColumn("_pmax",
-        max(col("_bf")).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("_brk",
-        when(col("_pmax").isNull || col("_bs") > col("_pmax") + 1L, 1L).otherwise(0L))
-      .withColumn("_run",
-        sum(col("_brk")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_a"), col("user_b"), col("_run"))
-      .agg(min(col("_bs")).as("run_start_band"),
-        (max(col("_bf")) - min(col("_bs")) + 1L).cast("long").as("n_bands"))
-      .filter(col("n_bands") >= minConsecutive.toLong)
-      .select(col("user_a"), col("user_b"), col("run_start_band"), col("n_bands"))
+      .repartition(col("user_a"), col("user_b"))
+      .sortWithinPartitions(col("user_a"), col("user_b"), col("_bs"), col("_bf"))
+      .mapPartitions(rows => new ConvoyScan(rows, minConsecutive))(RowEncoder.encoderFor(schema))
+      .toDF()
+  }
+
+  /** Streaming interval merge over a (user_a, user_b, b_s, b_f)-sorted
+    * partition, nulls first. A range opens a new run when the pair
+    * changes or no earlier range of the pair has a non-null end, or when
+    * its start lies past the running max end + 1 (a null start never
+    * does); a run spans min(b_s) to max(b_f) over its non-null values and
+    * is emitted at close when both exist and it covers >= minConsecutive
+    * bands. At most one run closes per input row.
+    */
+  private final class ConvoyScan(rows: Iterator[Row], minConsecutive: Int) extends Iterator[Row] {
+    private var ready: Row = null
+    private var seen = false
+    private var a: Any = null
+    private var b: Any = null
+    // running max of the pair's range ends, and the open run's bounds
+    private var maxEnd: java.lang.Long = null
+    private var runStart: java.lang.Long = null
+    private var runEnd: java.lang.Long = null
+
+    private def close(): Unit = {
+      if (runStart != null && runEnd != null) {
+        val n = runEnd - runStart + 1L
+        if (n >= minConsecutive) ready = Row(a, b, runStart.longValue, n)
+      }
+      runStart = null; runEnd = null
+    }
+
+    private def process(r: Row): Unit = {
+      val newPair = !seen || r.get(0) != a || r.get(1) != b
+      if (newPair || maxEnd == null || (!r.isNullAt(2) && r.getLong(2) > maxEnd + 1L)) close()
+      if (newPair) { seen = true; a = r.get(0); b = r.get(1); maxEnd = null }
+      if (!r.isNullAt(2)) runStart = if (runStart == null) r.getLong(2) else math.min(runStart, r.getLong(2))
+      if (!r.isNullAt(3)) {
+        val e = r.getLong(3)
+        runEnd = if (runEnd == null) e else math.max(runEnd, e)
+        maxEnd = if (maxEnd == null) e else math.max(maxEnd, e)
+      }
+    }
+
+    override def hasNext: Boolean = {
+      while (ready == null && rows.hasNext) process(rows.next())
+      if (ready == null && seen) { close(); seen = false }
+      ready != null
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = ready; ready = null
+      r
+    }
   }
 
   /** Focal (3×3-neighborhood) hotspot statistics on the micro-degree

@@ -391,19 +391,28 @@ class PlanSpec extends AnyFunSuite {
       s"part type filter must reach the part scan:\n$p")
   }
 
-  test("convoy_pairs: one pair shuffle total — run groupBy reuses the window partitioning") {
+  test("convoy_pairs: one pair shuffle feeds the run scan; no window, no run aggregate") {
     val p = plan("convoy_pairs")
-    // upstream meetings lineage has its own exchanges; the convoy logic
-    // itself must add exactly ONE (the pair window), which the
-    // (pair, run) aggregate then reuses — no explode, no distinct
+    // the meetings memo is a checkpoint scan; the convoy logic adds
+    // exactly ONE exchange (the pair key) and emits runs from the scan
     assert(!p.contains("Generate"), s"no band unroll (explode) anywhere:\n$p")
-    // plan prints top-down: everything ABOVE the Window node (the run
-    // aggregate) must add no exchange of its own
-    val aboveWindow = p.substring(0, p.indexOf("Window"))
-    assert(!aboveWindow.contains("Exchange"),
-      s"the run aggregate must reuse the pair window's partitioning:\n$p")
-    assert("Exchange hashpartitioning\\(user_a".r.findAllIn(p).length == 1,
-      s"exactly one pair shuffle (the window's):\n$p")
+    assert(p.contains("MapPartitions"), s"runs must come from a partition scan:\n$p")
+    assert("Exchange".r.findAllIn(p).length == 1 &&
+      "Exchange hashpartitioning\\(user_a#\\d+L, user_b".r.findAllIn(p).length == 1,
+      s"exactly one shuffle, hashed on the pair:\n$p")
+    assert(!p.contains("Window") && !p.contains("Aggregate"), s"no window and no run aggregate:\n$p")
+  }
+
+  test("intercontact_times: one pair shuffle feeds the gap scan; only the bucket count shuffles again") {
+    val p = plan("intercontact_times")
+    assert(p.contains("MapPartitions"), s"gaps must come from a partition scan:\n$p")
+    assert("Exchange hashpartitioning\\(user_a#\\d+L, user_b".r.findAllIn(p).length == 1,
+      s"exactly one pair shuffle:\n$p")
+    assert("Exchange".r.findAllIn(p).length == 2 &&
+      "Exchange hashpartitioning\\(bucket".r.findAllIn(p).length == 1,
+      s"the only other shuffle is the bucket aggregate's:\n$p")
+    assert(p.contains("partial_count"), s"the bucket count must map-side combine:\n$p")
+    assert(!p.contains("Window"), s"no window:\n$p")
   }
 
   test("source_js: vocab top-K is TakeOrdered; pair work joins on the word key, no product") {
