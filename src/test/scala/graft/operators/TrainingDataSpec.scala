@@ -59,6 +59,26 @@ class TrainingDataSpec extends SparkSpec {
     }
   }
 
+  test("duplicate clusters: exactly localThreshold pairs stay local, one more goes distributed") {
+    // chain 1-2-3-4, pair 10-11, a self pair; the 5-row table adds 11-12
+    val four = Seq((1L, 2L), (3L, 2L), (4L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val five = four.union(Seq((11L, 12L)).toDF("id_a", "id_b"))
+    def run(pairs: org.apache.spark.sql.DataFrame, threshold: Long): (Boolean, Set[(Long, Long, Boolean)]) = {
+      val out = Dedup.duplicateClusters(pairs, localThreshold = threshold)
+      // the driver union-find returns a local relation, the loop a checkpoint
+      val local = out.queryExecution.executedPlan.toString.contains("LocalTableScan")
+      (local, out.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
+    }
+    for ((pairs, n) <- Seq(four -> 4L, five -> 5L)) {
+      val (atLocal, at) = run(pairs, n)
+      val (overLocal, over) = run(pairs, n - 1)
+      assert(atLocal && !overLocal, s"$n pairs: local at threshold $n, distributed at ${n - 1}")
+      assert(at == over)
+      assert(at.filter(_._1 <= 4L) == Set((1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (4L, 1L, false)))
+    }
+    assert(run(five, 4L)._1 == false && run(four, 4L)._1)
+  }
+
   test("score-aware pruning keeps the best cluster member; id pruning keeps the first") {
     val sdocs = Seq(
       (0L, 10L), (3L, 50L), // cluster {0,3}: 3 scores higher -> scored keeps 3, plain keeps 0
