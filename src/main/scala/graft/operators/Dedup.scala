@@ -340,33 +340,6 @@ object Dedup {
       .select(col("probe_id"), col("match_id"), col("jaccard"))
   }
 
-  /** Duplicate clusters: connected components over an undirected
-    * near-dup pair table (e.g. [[minHashLsh]] output), as distributed
-    * min-label propagation with pointer doubling (Shiloach-Vishkin
-    * hook + compress): O(log diameter) rounds, each one edges ⋈ labels
-    * join plus one label-table self-join. The canonical "keep one
-    * document per duplicate cluster" reducer at corpus scale.
-    *
-    * @return (doc_id, cluster_id = smallest id in the component,
-    *         keep = doc_id is that smallest id)
-    */
-  /** @param maxIterations bound on hook+compress rounds on the
-    *        distributed path. Throws IllegalStateException if components
-    *        have not converged within the budget — a silent stop would
-    *        return split clusters as if they were real. Pointer doubling
-    *        compounds propagation reach geometrically (a clique needs
-    *        ~2 rounds), so the default 25 covers component diameters
-    *        far past 2^20 — any realistic chain.
-    * @param localThreshold pair-count cutoff below which the component
-    *        computation collects to the driver and runs union-find (each
-    *        distributed iteration costs two shuffles of fixed latency —
-    *        pointless when the pair graph fits in driver memory; dedup
-    *        pair tables are orders of magnitude smaller than the corpus).
-    *        2M pairs ≈ 32 MB of primitive longs (the collect goes through
-    *        the (long, long) tuple encoder, no boxed rows) plus a
-    *        union-find map over the NODE set — size to driver memory if
-    *        raised. Same budget convention as louvainLabels' threshold.
-    */
   /** Duplicate-cluster size histogram — the dedup monitoring row next to
     * the cluster table itself: (size, n_clusters) says whether the corpus
     * carries mostly pairs or a few mega-families (a boilerplate page
@@ -384,18 +357,57 @@ object Dedup {
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_clusters"))
 
+  /** Duplicate clusters: connected components over an undirected
+    * near-dup pair table (e.g. [[minHashLsh]] output), as distributed
+    * min-label propagation with pointer doubling (Shiloach-Vishkin
+    * hook + compress): O(log diameter) rounds, each one edges ⋈ labels
+    * join plus one label-table self-join. The canonical "keep one
+    * document per duplicate cluster" reducer at corpus scale.
+    *
+    * The branch is picked by one bounded collect of at most
+    * `localThreshold + 1` pairs: if it returns no more than
+    * `localThreshold`, those pairs are the whole table and the driver
+    * runs union-find on them; otherwise the distributed loop runs. One
+    * job, and no count. The bound is clamped to `Int.MaxValue - 1`
+    * pairs (`Dataset.limit` takes an `Int`, and no driver array holds
+    * more), so a larger threshold — `Long.MaxValue` means "always
+    * local" — acts as that; a negative one skips the collect.
+    *
+    * @param maxIterations bound on hook+compress rounds on the
+    *        distributed path. Throws IllegalStateException if components
+    *        have not converged within the budget — a silent stop would
+    *        return split clusters as if they were real. Pointer doubling
+    *        compounds propagation reach geometrically (a clique needs
+    *        ~2 rounds), so the default 25 covers component diameters
+    *        far past 2^20 — any realistic chain.
+    * @param localThreshold pair-count cutoff up to which the component
+    *        computation collects to the driver and runs union-find (each
+    *        distributed iteration costs two shuffles of fixed latency —
+    *        pointless when the pair graph fits in driver memory; dedup
+    *        pair tables are orders of magnitude smaller than the corpus).
+    *        2M pairs ≈ 32 MB of primitive longs (the collect goes through
+    *        the (long, long) tuple encoder, no boxed rows) plus a
+    *        union-find map over the NODE set — size to driver memory if
+    *        raised. Above it, the probe has pulled `localThreshold + 1`
+    *        pairs for nothing, and the loop reads the pair lineage again.
+    *        Same budget convention as louvainLabels' threshold.
+    * @return (doc_id, cluster_id = smallest id in the component,
+    *         keep = doc_id is that smallest id)
+    */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                         maxIterations: Int = 25, localThreshold: Long = 2000000L): DataFrame = {
     val spark = pairs.sparkSession
-    val p = pairs.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst")).persist()
-    val nPairs = p.count() // materialize the (possibly expensive) pair lineage ONCE
+    import spark.implicits._
+    val p = pairs.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
+    // Collect through the primitive tuple encoder (long, long) — no boxed
+    // Row objects on the driver heap.
+    val cap = math.min(localThreshold, Int.MaxValue - 1L)
+    val probe =
+      if (cap < 0) None else Some(p.limit((cap + 1).toInt).as[(Long, Long)].collect())
 
-    val result =
-      if (nPairs <= localThreshold) {
-        // driver-side union-find; the pair lineage stayed distributed.
-        // Collect through the primitive tuple encoder (long, long) — no
-        // boxed Row objects on the driver heap.
-        import spark.implicits._
+    val result = probe.filter(_.length <= cap) match {
+      case Some(edges) =>
+        // driver-side union-find; the pair lineage stayed distributed
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -404,13 +416,15 @@ object Dedup {
           while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
           r
         }
-        p.as[(Long, Long)].collect().foreach { case (a, b) =>
+        edges.foreach { case (a, b) =>
           parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
           val (ra, rb) = (find(a), find(b))
           if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
         }
         parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "label")
-      } else {
+      case None =>
+        // the loop reads the pair lineage twice (edges, nodes): persist it
+        p.persist()
         // Min-label propagation WITH pointer doubling (the Shiloach-
         // Vishkin alternation): each round (1) hooks every node to the
         // min label in its closed neighborhood — one edges ⋈ labels
@@ -467,10 +481,10 @@ object Dedup {
             s"duplicateClusters: labels still changing after $maxIterations rounds " +
               s"($changed nodes) — component diameter exceeds the doubling budget " +
               "(~2^rounds); raise maxIterations")
+        p.unpersist()
         labels
-      }
+    }
 
-    p.unpersist()
     result.select(col("node").as("doc_id"), col("label").as("cluster_id"),
       (col("node") === col("label")).as("keep"))
   }
