@@ -50,7 +50,7 @@ object Pipeline {
     * keys (the memo graph is a DAG), so a build holding its cell's
     * monitor never waits on a cell that waits on it.
     */
-  private def once[T](spark: SparkSession, sfDir: String, key: String)(build: => T): T =
+  private[graft] def once[T](spark: SparkSession, sfDir: String, key: String)(build: => T): T =
     memos.computeIfAbsent((spark, sfDir, key), _ => new Cell(build))
       .asInstanceOf[Cell[T]].value
 
@@ -72,10 +72,12 @@ object Pipeline {
     }
   }
 
-  /** Drop all memoized stage frames and models (bench repetitions: each
-    * suite run re-materializes the shared chains from scratch so per-run
-    * timings keep the same cold-stage attribution as a single run; the
-    * dropped localCheckpoint blocks are unpinned for the ContextCleaner).
+  /** Drop all memoized stage frames and models, the derived
+    * positionfixes ([[EventsAdapter.positionfixes]]) included (bench
+    * repetitions: each suite run re-materializes the shared chains from
+    * scratch so per-run timings keep the same cold-stage attribution as a
+    * single run; the dropped localCheckpoint blocks are unpinned for the
+    * ContextCleaner).
     */
   def reset(): Unit = memos.clear()
 

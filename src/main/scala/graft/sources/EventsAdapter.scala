@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.GraftSession
+import graft.{GraftSession, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,16 +52,17 @@ object EventsAdapter {
     s"cast(47.6 + ((k $idiv 12) % 4) * 0.005 * (1 - $fExpr) + (((k $idiv 12) + 1) % 4) * 0.005 * $fExpr" +
       s" + ((event_id * 104729) % 200) * 0.000001 as double)"
 
-  // Per-(session, sfDir) memo of the derived positionfix frame: ~20 gate
-  // queries start from this identical window-over-events chain, so its
-  // first action localCheckpoints the result (plain row blocks — see
-  // Pipeline's scaladoc for the tradeoff) and every later query starts
-  // from the blocks instead of re-running the shuffle + projection.
-  private val memo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** positionfixes: id, user_id, tracked_at, t_us, lon, lat, value. */
-  def positionfixes(spark: SparkSession, sfDir: String): DataFrame = memo.synchronized {
-    memo.getOrElseUpdate((spark, sfDir), {
+  /** positionfixes: id, user_id, tracked_at, t_us, lon, lat, value.
+    *
+    * A [[graft.Pipeline]] memo per (session, sfDir): ~20 gate queries
+    * start from this identical window-over-events chain, so its first
+    * action localCheckpoints the result (plain row blocks — see
+    * Pipeline's scaladoc for the tradeoff) and every later query starts
+    * from the blocks instead of re-running the shuffle + projection.
+    * `Pipeline.reset()` drops it with the other memos.
+    */
+  def positionfixes(spark: SparkSession, sfDir: String): DataFrame =
+    Pipeline.once(spark, sfDir, "positionfixes") {
       val w = Window.partitionBy("user_id").orderBy("t_us", "event_id")
       events(spark, sfDir)
         .withColumn("k", row_number().over(w).cast("long") - 1L)
@@ -75,8 +76,7 @@ object EventsAdapter {
           expr(latExpr("div")).as("lat"),
           col("value"))
         .localCheckpoint(eager = false)
-    })
-  }
+    }
 
   /** Synthetic staypoint-shaped intervals: each event opens an interval of
     * `value` minutes. Used by interval-based operators (activity flag,

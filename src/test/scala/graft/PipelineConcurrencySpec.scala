@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.EventsAdapter
+
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 /** Pipeline's memos under concurrency: many threads racing every memo in
@@ -12,6 +14,7 @@ class PipelineConcurrencySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def memos: Seq[(String, () => AnyRef)] = Seq(
+    "positionfixes" -> (() => EventsAdapter.positionfixes(spark, dir)),
     "pfsWithStaypoints" -> (() => Pipeline.pfsWithStaypoints(spark, dir)),
     "staypoints" -> (() => Pipeline.staypoints(spark, dir)),
     "triplegs" -> (() => Pipeline.triplegs(spark, dir)),
@@ -68,5 +71,14 @@ class PipelineConcurrencySpec extends SparkSpec {
         assert(seen.forall(_(name) eq first), s"$name was built more than once")
       }
     } finally pool.shutdownNow()
+  }
+
+  test("positionfixes is one Pipeline memo: the same frame until reset(), a new one after") {
+    val first = EventsAdapter.positionfixes(spark, dir)
+    assert(EventsAdapter.positionfixes(spark, dir) eq first)
+    Pipeline.reset()
+    val rebuilt = EventsAdapter.positionfixes(spark, dir)
+    assert(!(rebuilt eq first), "reset() must drop the positionfix memo")
+    assert(EventsAdapter.positionfixes(spark, dir) eq rebuilt)
   }
 }
