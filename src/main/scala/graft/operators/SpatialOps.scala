@@ -788,9 +788,8 @@ object SpatialOps {
     * start, or after one with a null end, has no gap.
     *
     * Scale shape: one pair-keyed shuffle, a sort by (m_s_us, m_f_us)
-    * inside each partition, and one streaming scan ([[GapScan]]) that
-    * carries only the previous meeting's end — then a ≤ 64-bucket
-    * map-side-combinable count.
+    * inside each partition, and one streaming scan that carries only the
+    * previous meeting — then a ≤ 64-bucket map-side-combinable count.
     */
   def interContactTimes(meetings: DataFrame): DataFrame = {
     // nullable, as the window form's gap column was: the bucket keeps
@@ -800,46 +799,25 @@ object SpatialOps {
       .select(col("user_a"), col("user_b"), col("m_s_us").cast("long"), col("m_f_us").cast("long"))
       .repartition(col("user_a"), col("user_b"))
       .sortWithinPartitions(col("user_a"), col("user_b"), col("m_s_us"), col("m_f_us"))
-      .mapPartitions(rows => new GapScan(rows))(RowEncoder.encoderFor(gapSchema))
+      .mapPartitions { rows =>
+        // each meeting's gap to its pair's previous meeting: Spark's
+        // `(m_s − previous m_f) / 1000000L` (a double) cast to long
+        var prev: Row = null
+        rows.flatMap { r =>
+          val p = prev
+          prev = r
+          if (p == null || p.get(0) != r.get(0) || p.get(1) != r.get(1) || p.isNullAt(3) || r.isNullAt(2)) None
+          else {
+            val gap = ((r.getLong(2) - p.getLong(3)).toDouble / 1000000L.toDouble).toLong
+            if (gap >= 1L) Some(Row(gap)) else None
+          }
+        }
+      }(RowEncoder.encoderFor(gapSchema))
       .toDF()
       .withColumn("bucket", (length(bin(col("_gap"))) - 1).cast("long"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n_gaps"),
         sum(col("_gap")).cast("long").as("sum_sec"))
-  }
-
-  /** Streaming scan over a (user_a, user_b, m_s_us, m_f_us)-sorted
-    * partition: emits each meeting's gap to the pair's previous meeting,
-    * `((m_s − previous m_f) / 1000000L)` as a double truncated to long
-    * (Spark's `/` and cast), when both ends are present and the gap is
-    * at least one second.
-    */
-  private final class GapScan(rows: Iterator[Row]) extends Iterator[Row] {
-    private var ready: Row = null
-    private var seen = false
-    private var prevA: Any = null
-    private var prevB: Any = null
-    private var prevF: Any = null
-
-    private def process(r: Row): Unit = {
-      val samePair = seen && r.get(0) == prevA && r.get(1) == prevB
-      if (samePair && prevF != null && !r.isNullAt(2)) {
-        val gap = ((r.getLong(2) - prevF.asInstanceOf[Long]).toDouble / 1000000L.toDouble).toLong
-        if (gap >= 1L) ready = Row(gap)
-      }
-      seen = true; prevA = r.get(0); prevB = r.get(1); prevF = r.get(3)
-    }
-
-    override def hasNext: Boolean = {
-      while (ready == null && rows.hasNext) process(rows.next())
-      ready != null
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = ready; ready = null
-      r
-    }
   }
 
   /** Convoy / travel-together pairs (the pairwise core of Jeung et al.
