@@ -367,11 +367,12 @@ object Dedup {
     * The branch is picked by one bounded collect of at most
     * `localThreshold + 1` pairs: if it returns no more than
     * `localThreshold`, those pairs are the whole table and the driver
-    * runs union-find on them; otherwise the distributed loop runs. One
-    * job, and no count. The bound is clamped to `Int.MaxValue - 1`
-    * pairs (`Dataset.limit` takes an `Int`, and no driver array holds
-    * more), so a larger threshold — `Long.MaxValue` means "always
-    * local" — acts as that; a negative one skips the collect.
+    * runs union-find on them; otherwise the distributed loop runs. No
+    * count, and no cache on the local branch. The bound is clamped to
+    * `Int.MaxValue - 1` pairs (`Dataset.limit` takes an `Int`, and no
+    * driver array holds more), so a larger threshold — `Long.MaxValue`
+    * means "always local" — acts as that; a negative one skips the
+    * collect.
     *
     * @param maxIterations bound on hook+compress rounds on the
     *        distributed path. Throws IllegalStateException if components
