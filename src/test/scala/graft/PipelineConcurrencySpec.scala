@@ -1,8 +1,11 @@
 package graft
 
+import graft.operators.Share
 import graft.sources.EventsAdapter
+import org.apache.spark.sql.functions.{col, sum, udf}
 
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 /** Pipeline's memos under concurrency: many threads racing every memo in
   * different orders must neither deadlock nor build a memo twice. Only
@@ -81,4 +84,34 @@ class PipelineConcurrencySpec extends SparkSpec {
     assert(!(rebuilt eq first), "reset() must drop the positionfix memo")
     assert(EventsAdapter.positionfixes(spark, dir) eq rebuilt)
   }
+
+  test("two threads reading one lazily checkpointed memo at once evaluate each source row once") {
+    // Both jobs ask the block manager for the same checkpoint blocks; the
+    // second writer of a block waits for the first and reads its block
+    // (the "Block rdd_N_M already exists" warning), it never recomputes.
+    val n = 20000L
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      for (round <- 1 to 4) {
+        PipelineConcurrencySpec.evaluations.set(0L)
+        val counted = udf { (x: Long) => PipelineConcurrencySpec.evaluations.incrementAndGet(); x * 2 }
+        val memo = Share.materialize(spark.range(0L, n, 1L, 4).select(counted(col("id")).as("v")))
+        val go = new CountDownLatch(1)
+        val reads = (0 until 2).map { _ =>
+          pool.submit(new Callable[Long] {
+            def call(): Long = { go.await(); memo.agg(sum(col("v"))).head().getLong(0) }
+          })
+        }
+        go.countDown()
+        reads.foreach(r => assert(r.get(120, TimeUnit.SECONDS) == n * (n - 1)))
+        assert(PipelineConcurrencySpec.evaluations.get == n,
+          s"round $round: ${PipelineConcurrencySpec.evaluations.get} evaluations of $n source rows")
+      }
+    } finally pool.shutdownNow()
+  }
+}
+
+object PipelineConcurrencySpec {
+  /** Evaluations of the counting UDF (tasks share the driver JVM in local mode). */
+  val evaluations = new AtomicLong(0L)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan property tests: the scale behaviors the engine relies on
@@ -601,5 +602,40 @@ class PlanSpec extends AnyFunSuite {
       "Exchange hashpartitioning\\(user_id".r.findAllIn(p).length == 1,
       s"exactly one shuffle, hashed on user_id — the run aggregate reuses it:\n$p")
     assert(!p.contains("Window") && !p.contains("Join"), s"no window and no join:\n$p")
+  }
+
+  /** The plan of the one frame a generator hands its `share` hook that
+    * runs a partition scan: the scan kernel's own plan, taken before it
+    * runs. The hook checkpoints what it is given, as `Share.materialize`
+    * does, so each kernel reads checkpointed inputs and its plan shows
+    * only its own exchanges.
+    */
+  private def kernelPlan(run: (DataFrame => DataFrame) => Unit): String = {
+    val shared = scala.collection.mutable.ArrayBuffer.empty[String]
+    run { df => shared += df.queryExecution.executedPlan.toString; df.localCheckpoint(false) }
+    val scans = shared.filter(_.contains("MapPartitions"))
+    assert(scans.length == 1, s"expected one shared scan frame, got ${scans.length}:\n${scans.mkString("\n")}")
+    scans.head
+  }
+
+  test("staypoints, tours, locations and pack_sequences: one hash exchange on the scan key feeds each scan; no window") {
+    val pfs = sources.EventsAdapter.positionfixes(spark, dir).drop("value", "t_us", "k")
+    val kernels = Seq(
+      ("staypoints_sliding", "user_id", kernelPlan(share =>
+        operators.StaypointGenerator.generate(pfs, Pipeline.staypointParams, share))),
+      ("tours_generate", "user_id", kernelPlan(share =>
+        operators.TourGenerator.generate(Pipeline.trips(spark, dir), None,
+          operators.TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0), share))),
+      ("locations_dbscan", "user_id", kernelPlan(share =>
+        operators.LocationGenerator.generate(Pipeline.staypoints(spark, dir),
+          operators.LocationGenerator.Params(), share))),
+      ("pack_sequences", "lang", plan("pack_sequences")))
+    for ((name, key, p) <- kernels) {
+      assert(p.contains("MapPartitions"), s"$name must run as a partition scan:\n$p")
+      assert("Exchange".r.findAllIn(p).length == 1 &&
+        s"Exchange hashpartitioning\\($key#\\d+L?, \\d+\\)".r.findAllIn(p).length == 1,
+        s"$name: exactly one shuffle, hashed on $key alone:\n$p")
+      assert(!p.contains("Window"), s"$name: no window:\n$p")
+    }
   }
 }
