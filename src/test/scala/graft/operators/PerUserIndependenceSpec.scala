@@ -12,8 +12,9 @@ import scala.util.Random
   * boundary inside a partition.
   *
   * Seeded users (36, on 3 shuffle partitions, so every partition scans
-  * many users back to back) revisit three places of their own with
-  * dwells, moves and recording gaps, and some carry null elevations, so
+  * many users back to back) revisit three places, drawn from a pool all
+  * users share, with dwells, moves and recording gaps, and some carry
+  * null elevations, so
   * staypoints (with and without `includeLast`), triplegs, trips, tours
   * and per-user locations are all non-empty. Dense ids are global, so
   * they differ between the two runs by construction: every id, and every
@@ -27,17 +28,26 @@ class PerUserIndependenceSpec extends SparkSpec {
   private val minute = 60000000L
   private val t0 = 1672560000000000L // 2023-01-01 08:00 UTC
 
+  // places on a line ~60 m apart, shared by all users: a DBSCAN that
+  // saw two users at once would chain one user's places through another's
+  private val sharedPlaces = (0 until 24).map(k => (8.5 + k * 0.0008, 47.3 + (k % 3) * 0.0001))
+
   private def randomPfs(seed: Long): DataFrame = {
     val rnd = new Random(seed)
     val rows = Seq.newBuilder[(Long, Long, Double, Double, Option[Double])]
     for (u <- 1 to users) {
-      val places = Seq.fill(3)((8.5 + rnd.nextInt(100) / 1000.0, 47.3 + rnd.nextInt(100) / 1000.0))
+      val places = Seq.fill(3)(sharedPlaces(rnd.nextInt(sharedPlaces.length)))
       val nullElev = rnd.nextInt(4) == 0
-      var t = t0 + rnd.nextInt(2000) * minute
-      for (_ <- 0 until 6 + rnd.nextInt(8)) {
-        if (rnd.nextInt(5) < 3) {
-          // a dwell: fixes within ~30 m of one of the user's places
-          val (lon, lat) = places(rnd.nextInt(3))
+      var t = t0 + rnd.nextInt(60) * minute
+      val segments = 6 + rnd.nextInt(8)
+      for (seg <- 0 until segments) {
+        // every user's day starts and ends dwelling at the first shared
+        // place, in overlapping hours: the next user's first fixes fall
+        // inside the previous user's open window unless the scan ends it
+        val home = seg == 0 || seg == segments - 1
+        if (home || rnd.nextInt(5) < 3) {
+          // a dwell: fixes within ~30 m of a place
+          val (lon, lat) = if (home) sharedPlaces(0) else places(rnd.nextInt(3))
           for (_ <- 0 until 2 + rnd.nextInt(7)) {
             t += (2 + rnd.nextInt(5)) * minute
             rows += ((u.toLong, t, lon + rnd.nextInt(30) / 1e5, lat + rnd.nextInt(30) / 1e5,
