@@ -89,13 +89,19 @@ class PipelineConcurrencySpec extends SparkSpec {
     // Both jobs ask the block manager for the same checkpoint blocks; the
     // second writer of a block waits for the first and reads its block
     // (the "Block rdd_N_M already exists" warning), it never recomputes.
-    val n = 20000L
+    // Two partitions per job on four cores, and a slow UDF, so the two
+    // jobs' tasks for one partition run at the same time.
+    val n = 2000L
     val pool = Executors.newFixedThreadPool(2)
     try {
       for (round <- 1 to 4) {
         PipelineConcurrencySpec.evaluations.set(0L)
-        val counted = udf { (x: Long) => PipelineConcurrencySpec.evaluations.incrementAndGet(); x * 2 }
-        val memo = Share.materialize(spark.range(0L, n, 1L, 4).select(counted(col("id")).as("v")))
+        val counted = udf { (x: Long) =>
+          PipelineConcurrencySpec.evaluations.incrementAndGet()
+          if (x % 100 == 0) Thread.sleep(30)
+          x * 2
+        }
+        val memo = Share.materialize(spark.range(0L, n, 1L, 2).select(counted(col("id")).as("v")))
         val go = new CountDownLatch(1)
         val reads = (0 until 2).map { _ =>
           pool.submit(new Callable[Long] {
