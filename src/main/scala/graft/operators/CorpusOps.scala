@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.PortableHash
 import graft.functions.GeoFunctions.{dq, lnq}
+import graft.util.SortedScan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -444,10 +445,10 @@ object CorpusOps {
     * document gets a bin of its own. The sequence-packing step that turns
     * a filtered corpus into fixed-budget training examples.
     *
-    * Scale shape: one shuffle on the group key, then a streaming
-    * per-partition scan carrying two longs of state (same pattern as the
-    * staypoint scan — groups are the parallelism axis, group size is
-    * unbounded). Token counts default to whitespace tokens (matching
+    * Scale shape: each group's documents in id order are one
+    * [[SortedScan]] run carrying two longs of state (same
+    * pattern as the staypoint scan — groups are the parallelism axis,
+    * group size is unbounded). Token counts default to whitespace tokens (matching
     * [[TextAnalysis.tokenCount]]'s `ws_tokens`); pass `tokenCountCol` to
     * pack by a precomputed count instead — e.g. real tokenizer counts
     * from [[TextAnalysis.bpeEncode]], so training examples are budgeted
@@ -461,7 +462,6 @@ object CorpusOps {
                     tokenCountCol: Option[String] = None): DataFrame = {
     require(budgetTokens > 0, "budgetTokens must be positive")
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
     import org.apache.spark.sql.types._
 
     val outSchema = StructType(Seq(
@@ -472,29 +472,19 @@ object CorpusOps {
 
     val tokens = tokenCountCol.map(c => col(c).cast("long"))
       .getOrElse(size(split(col(textCol), " ")).cast("long"))
-    docs
-      .select(col(groupCol).cast("string"), col(idCol).cast("long").as("doc_id"),
-        tokens.as("tokens"))
-      .repartition(col(groupCol))
-      .sortWithinPartitions(col(groupCol), col("doc_id"))
-      .mapPartitions { rows =>
-        var curGroup: String = null
-        var hasGroup = false
-        var bin = 0L
-        var running = 0L
-        rows.map { r =>
-          val g = r.getString(0); val id = r.getLong(1); val tok = r.getLong(2)
-          if (!hasGroup || g != curGroup) {
-            curGroup = g; hasGroup = true; bin = 0L; running = tok
-          } else if (running + tok > budgetTokens) {
-            bin += 1L; running = tok
-          } else {
-            running += tok
-          }
-          Row(g, id, tok, bin)
-        }
-      }(RowEncoder.encoderFor(outSchema))
-      .toDF()
+    val stream = docs.select(col(groupCol).cast("string"), col(idCol).cast("long").as("doc_id"),
+      tokens.as("tokens"))
+    SortedScan(stream, Seq(groupCol), Seq("doc_id"), outSchema) { rows =>
+      // one group's documents in id order; bin -1 = before the first
+      var bin = -1L
+      var running = 0L
+      rows.map { r =>
+        val tok = r.getLong(2)
+        if (bin < 0 || running + tok > budgetTokens) { bin += 1L; running = tok }
+        else running += tok
+        Row(r.getString(0), r.getLong(1), tok, bin)
+      }
+    }
   }
 
   /** Packing-efficiency report over [[packSequences]] output: per group,

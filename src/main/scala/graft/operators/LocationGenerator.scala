@@ -2,9 +2,8 @@ package graft.operators
 
 import graft.functions.GeoFunctions
 import graft.model.Tables
-import graft.util.Ids
+import graft.util.{Ids, SortedScan}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,10 +14,10 @@ import scala.collection.mutable
   *
   * Reference: trackintel/preprocessing/staypoints.py:13-239. Spark-native
   * plan for `agg_level="user"` (the default): users are independent, so
-  * clustering runs inside a per-user streaming pass (hash-partition on
-  * user_id + in-partition sort — the same shuffle axis as the rest of the
-  * pipeline). Per-user staypoint counts are small, so an exact in-memory
-  * DBSCAN per user is the right trade: zero cross-node communication.
+  * each user's staypoints are one [[SortedScan]] run on `user_id` (the
+  * same shuffle axis as the rest of the pipeline). Per-user staypoint
+  * counts are small, so an exact in-memory DBSCAN per user is the right
+  * trade: zero cross-node communication.
   * The dissolve/centroid/hull step is a plain groupBy aggregation.
   *
   * `agg_level="dataset"` can't partition by user; the scalable
@@ -61,12 +60,15 @@ object LocationGenerator {
     // clustering scan runs once.
     val clustered: DataFrame = share(
       if (params.aggLevel == "user")
-        input
-          .repartition(col("user_id"))
-          .sortWithinPartitions(col("user_id"), col("sp_id"))
-          .mapPartitions(rows => new PerUserDbscanIterator(rows, params.epsilonMeters, params.numSamples))(
-            RowEncoder.encoderFor(labelledSchema))
-          .toDF()
+        SortedScan(input, Seq("user_id"), Seq("sp_id"), labelledSchema) { rows =>
+          // one user's staypoints in id order, clustered together
+          val run = rows.toArray
+          val labels = dbscan(run.map(_.getDouble(2)), run.map(_.getDouble(3)),
+            params.epsilonMeters, params.numSamples)
+          run.iterator.zip(labels.iterator).map { case (r, label) =>
+            Row(r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), label.toLong)
+          }
+        }
       else
         datasetDbscan(input, params.epsilonMeters, params.numSamples))
 
@@ -132,48 +134,6 @@ object LocationGenerator {
       .drop("_sp_id")
 
     (spOut, locs)
-  }
-
-  /** Streams a (user-sorted) partition, running exact DBSCAN per user. */
-  private final class PerUserDbscanIterator(rows: Iterator[Row], epsM: Double, minPts: Int)
-      extends Iterator[Row] {
-
-    private val out = mutable.ArrayBuffer.empty[Row]
-    private var outPos = 0
-    private var curUser = 0L
-    private var hasUser = false
-    private val ids = mutable.ArrayBuffer.empty[Long]
-    private val lons = mutable.ArrayBuffer.empty[Double]
-    private val lats = mutable.ArrayBuffer.empty[Double]
-
-    private def flushUser(): Unit = {
-      if (!hasUser || ids.isEmpty) return
-      val labels = dbscan(lons.toArray, lats.toArray, epsM, minPts)
-      var i = 0
-      while (i < ids.length) {
-        out += Row(ids(i), curUser, lons(i), lats(i), labels(i).toLong)
-        i += 1
-      }
-      ids.clear(); lons.clear(); lats.clear()
-    }
-
-    override def hasNext: Boolean = {
-      while (outPos >= out.length && rows.hasNext) {
-        val r = rows.next()
-        val user = r.getLong(1)
-        if (!hasUser || user != curUser) { flushUser(); curUser = user; hasUser = true }
-        ids += r.getLong(0); lons += r.getDouble(2); lats += r.getDouble(3)
-      }
-      if (outPos >= out.length && !rows.hasNext && hasUser) { flushUser(); hasUser = false }
-      outPos < out.length
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = out(outPos); outPos += 1
-      if (outPos == out.length) { out.clear(); outPos = 0 }
-      r
-    }
   }
 
   /** Classic DBSCAN; region queries accelerated by a latitude-sorted sweep
@@ -263,46 +223,16 @@ object LocationGenerator {
       StructField("sp_id", LongType, nullable = false),
       StructField("local_cluster", StringType, nullable = true)))
 
-    val local = halo
-      .repartition(col("_gx"), col("_gy"))
-      .sortWithinPartitions(col("_gx"), col("_gy"), col("sp_id"))
-      .mapPartitions { rows =>
-        val buf = mutable.ArrayBuffer.empty[(Long, Double, Double)]
-        val res = mutable.ArrayBuffer.empty[Row]
-        var key: (Long, Long) = null
-
-        def flush(): Unit = {
-          if (buf.isEmpty) return
-          val labels = dbscan(buf.map(_._2).toArray, buf.map(_._3).toArray, epsM, minPts)
-          var i = 0
-          while (i < buf.length) {
-            res += Row(buf(i)._1, if (labels(i) >= 0) s"${key._1}:${key._2}:${labels(i)}" else null)
-            i += 1
-          }
-          buf.clear()
-        }
-
-        new Iterator[Row] {
-          private var pos = 0
-          override def hasNext: Boolean = {
-            while (pos >= res.length && rows.hasNext) {
-              val r = rows.next()
-              val k = (r.getLong(4), r.getLong(5))
-              if (key == null) key = k
-              else if (k != key) { flush(); key = k }
-              buf += ((r.getLong(0), r.getDouble(2), r.getDouble(3)))
-            }
-            if (pos >= res.length && !rows.hasNext && buf.nonEmpty) flush()
-            pos < res.length
-          }
-          override def next(): Row = {
-            if (!hasNext) throw new NoSuchElementException
-            val r = res(pos); pos += 1
-            if (pos == res.length && !rows.hasNext) { /* done */ }
-            r
-          }
-        }
-      }(RowEncoder.encoderFor(localSchema))
+    // each cell's points (its own and its halo copies) in id order,
+    // clustered together; labels are namespaced by the cell
+    val local = SortedScan(halo, Seq("_gx", "_gy"), Seq("sp_id"), localSchema) { rows =>
+      val run = rows.toArray
+      val cell = s"${run(0).getLong(4)}:${run(0).getLong(5)}"
+      val labels = dbscan(run.map(_.getDouble(2)), run.map(_.getDouble(3)), epsM, minPts)
+      run.iterator.zip(labels.iterator).map { case (r, label) =>
+        Row(r.getLong(0), if (label >= 0) s"$cell:$label" else null)
+      }
+    }
 
     // border merge as connected components over the CLUSTER graph (two
     // local clusters are one DBSCAN cluster iff they share a point,

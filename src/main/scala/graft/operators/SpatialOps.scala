@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions.{dq, quantizedCell}
+import graft.util.SortedScan
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -787,34 +787,31 @@ object SpatialOps {
     * or back-to-back meetings (gap < 1 s) drop. A meeting with a null
     * start, or after one with a null end, has no gap.
     *
-    * Scale shape: one pair-keyed shuffle, a sort by (m_s_us, m_f_us)
-    * inside each partition, and one streaming scan that carries only the
-    * previous meeting — then a ≤ 64-bucket map-side-combinable count.
+    * Scale shape: each pair's meetings in (m_s_us, m_f_us) order are one
+    * [[SortedScan]] run that carries only the previous meeting — then a
+    * ≤ 64-bucket map-side-combinable count.
     */
   def interContactTimes(meetings: DataFrame): DataFrame = {
     // nullable, as the window form's gap column was: the bucket keeps
     // its nullable schema
     val gapSchema = StructType(Seq(StructField("_gap", LongType)))
-    meetings
+    val stream = meetings
       .select(col("user_a"), col("user_b"), col("m_s_us").cast("long"), col("m_f_us").cast("long"))
-      .repartition(col("user_a"), col("user_b"))
-      .sortWithinPartitions(col("user_a"), col("user_b"), col("m_s_us"), col("m_f_us"))
-      .mapPartitions { rows =>
-        // each meeting's gap to its pair's previous meeting: Spark's
-        // `(m_s − previous m_f) / 1000000L` (a double) cast to long
-        var prev: Row = null
-        rows.flatMap { r =>
-          val p = prev
-          prev = r
-          if (p == null || p.get(0) != r.get(0) || p.get(1) != r.get(1) || p.isNullAt(3) || r.isNullAt(2)) None
-          else {
-            val gap = ((r.getLong(2) - p.getLong(3)).toDouble / 1000000L.toDouble).toLong
-            if (gap >= 1L) Some(Row(gap)) else None
-          }
+    val gaps = SortedScan(stream, Seq("user_a", "user_b"), Seq("m_s_us", "m_f_us"), gapSchema) { rows =>
+      // each meeting's gap to the pair's previous meeting: Spark's
+      // `(m_s − previous m_f) / 1000000L` (a double) cast to long
+      var prev: Row = null
+      rows.flatMap { r =>
+        val p = prev
+        prev = r
+        if (p == null || p.isNullAt(3) || r.isNullAt(2)) None
+        else {
+          val gap = ((r.getLong(2) - p.getLong(3)).toDouble / 1000000L.toDouble).toLong
+          if (gap >= 1L) Some(Row(gap)) else None
         }
-      }(RowEncoder.encoderFor(gapSchema))
-      .toDF()
-      .withColumn("bucket", (length(bin(col("_gap"))) - 1).cast("long"))
+      }
+    }
+    gaps.withColumn("bucket", (length(bin(col("_gap"))) - 1).cast("long"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n_gaps"),
         sum(col("_gap")).cast("long").as("sum_sec"))
@@ -833,12 +830,11 @@ object SpatialOps {
     * Scale shape: each meeting collapses to its covered band RANGE
     * [b_s, b_f] — never unrolled to one row per band, so a week-long
     * meeting at a 1-minute band costs one row, not 10k — and runs come
-    * from the classic interval-merge: ONE pair-keyed shuffle, a sort by
-    * (b_s, b_f) inside each partition, and one streaming scan
-    * ([[ConvoyScan]]) whose state is the open run and the running max of
-    * range ends; a run is emitted when it closes. No window and no run
-    * aggregate; cost proportional to the meeting table. Nothing ever
-    * joins raw trajectories.
+    * from the classic interval-merge: each pair's ranges in (b_s, b_f)
+    * order are one [[SortedScan]] run ([[convoyScan]]) whose state is the
+    * open run and the running max of range ends; a run is emitted when it
+    * closes. No window and no run aggregate; cost proportional to the
+    * meeting table. Nothing ever joins raw trajectories.
     */
   def convoyPairs(meetings: DataFrame, bandMinutes: Double = 120.0,
                   minConsecutive: Int = 2): DataFrame = {
@@ -849,65 +845,48 @@ object SpatialOps {
     // nullable band columns, as the window form's run aggregates were
     val schema = StructType(Seq(f("user_a"), f("user_b"),
       StructField("run_start_band", LongType), StructField("n_bands", LongType)))
-    meetings
+    val ranges = meetings
       .select(col("user_a"), col("user_b"),
         floor(col("m_s_us") / lit(bandUs.toDouble)).cast("long").as("_bs"),
         floor(greatest(col("m_f_us") - 1, col("m_s_us")) / lit(bandUs.toDouble)).cast("long").as("_bf"))
-      .repartition(col("user_a"), col("user_b"))
-      .sortWithinPartitions(col("user_a"), col("user_b"), col("_bs"), col("_bf"))
-      .mapPartitions(rows => new ConvoyScan(rows, minConsecutive))(RowEncoder.encoderFor(schema))
-      .toDF()
+    SortedScan(ranges, Seq("user_a", "user_b"), Seq("_bs", "_bf"), schema)(convoyScan(minConsecutive))
   }
 
-  /** Streaming interval merge over a (user_a, user_b, b_s, b_f)-sorted
-    * partition, nulls first. A range opens a new run when the pair
-    * changes or no earlier range of the pair has a non-null end, or when
-    * its start lies past the running max end + 1 (a null start never
-    * does); a run spans min(b_s) to max(b_f) over its non-null values and
-    * is emitted at close when both exist and it covers >= minConsecutive
-    * bands. At most one run closes per input row.
+  /** Interval merge over one pair's (user_a, user_b, b_s, b_f) ranges in
+    * (b_s, b_f) order, nulls first. A range opens a new run when no
+    * earlier range of the pair has a non-null end, or when its start lies
+    * past the running max end + 1 (a null start never does); a run spans
+    * min(b_s) to max(b_f) over its non-null values and is emitted at
+    * close when both exist and it covers >= minConsecutive bands.
     */
-  private final class ConvoyScan(rows: Iterator[Row], minConsecutive: Int) extends Iterator[Row] {
-    private var ready: Row = null
-    private var seen = false
-    private var a: Any = null
-    private var b: Any = null
+  private def convoyScan(minConsecutive: Int)(rows: Iterator[Row]): Iterator[Row] = {
+    var pair: Row = null
     // running max of the pair's range ends, and the open run's bounds
-    private var maxEnd: java.lang.Long = null
-    private var runStart: java.lang.Long = null
-    private var runEnd: java.lang.Long = null
+    var maxEnd: java.lang.Long = null
+    var runStart: java.lang.Long = null
+    var runEnd: java.lang.Long = null
 
-    private def close(): Unit = {
-      if (runStart != null && runEnd != null) {
-        val n = runEnd - runStart + 1L
-        if (n >= minConsecutive) ready = Row(a, b, runStart.longValue, n)
-      }
+    def close(): Option[Row] = {
+      val run =
+        if (runStart == null || runEnd == null || runEnd - runStart + 1L < minConsecutive) None
+        else Some(Row(pair.get(0), pair.get(1), runStart.longValue, runEnd - runStart + 1L))
       runStart = null; runEnd = null
+      run
     }
 
-    private def process(r: Row): Unit = {
-      val newPair = !seen || r.get(0) != a || r.get(1) != b
-      if (newPair || maxEnd == null || (!r.isNullAt(2) && r.getLong(2) > maxEnd + 1L)) close()
-      if (newPair) { seen = true; a = r.get(0); b = r.get(1); maxEnd = null }
+    def step(r: Row): Option[Row] = {
+      val closed = if (maxEnd == null || (!r.isNullAt(2) && r.getLong(2) > maxEnd + 1L)) close() else None
+      pair = r
       if (!r.isNullAt(2)) runStart = if (runStart == null) r.getLong(2) else math.min(runStart, r.getLong(2))
       if (!r.isNullAt(3)) {
         val e = r.getLong(3)
         runEnd = if (runEnd == null) e else math.max(runEnd, e)
         maxEnd = if (maxEnd == null) e else math.max(maxEnd, e)
       }
+      closed
     }
 
-    override def hasNext: Boolean = {
-      while (ready == null && rows.hasNext) process(rows.next())
-      if (ready == null && seen) { close(); seen = false }
-      ready != null
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = ready; ready = null
-      r
-    }
+    rows.flatMap(step) ++ close()
   }
 
   /** Focal (3×3-neighborhood) hotspot statistics on the micro-degree

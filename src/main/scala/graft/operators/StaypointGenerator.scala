@@ -2,9 +2,8 @@ package graft.operators
 
 import graft.functions.GeoFunctions
 import graft.model.Tables
-import graft.util.Ids
+import graft.util.{Ids, SortedScan}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,11 +15,10 @@ import scala.collection.mutable.ArrayBuffer
   * 478-535).
   *
   * Spark-first design: instead of the reference's per-user joblib fan-out
-  * over collected pandas groups, we hash-partition by `user_id`, secondary
-  * -sort each partition by (user_id, tracked_at, id), and run the
-  * sequential scan as a *streaming* `mapPartitions` pass. No per-user
+  * over collected pandas groups, each user's fixes stream in
+  * (tracked_at, id) order through one [[SortedScan]] run. No per-user
   * materialization: the only buffered state is the candidate window since
-  * the current anchor (bounded by staypoint size), so a partition of any
+  * the current anchor (bounded by staypoint size), so a user of any
   * length streams through. Users are the parallelism axis, exactly like
   * the reference's joblib, but executed as one shuffle.
   */
@@ -76,19 +74,13 @@ object StaypointGenerator {
     val distM = params.distThresholdMeters
     val includeLast = params.includeLast
 
-    // Shuffle once by user, sort inside partitions, stream the scan.
-    val sorted = input
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("t_us"), col("id"))
-
     // check_gdf_planar twin: a projected CRS switches the CENTROID to a
     // plain mean — the reference's breach distance stays haversine even
     // for planar frames (positionfixes.py:508-522 passes `planar` only
     // into __create_new_staypoints), reproduced faithfully here.
     val planar = GeoFunctions.isPlanar(pfs)
-    val rawSp = share(sorted.mapPartitions { rows =>
-      new StaypointScanIterator(rows, gapUs, timeUs, distM, includeLast, planar)
-    }(RowEncoder.encoderFor(spSchema)).toDF())
+    val rawSp = share(SortedScan(input, Seq("user_id"), Seq("t_us", "id"), spSchema)(
+      slidingScan(gapUs, timeUs, distM, includeLast, planar)))
 
     // Dense int64 ids in (user, time) order — reference positional index
     // semantics (positionfixes.py:163-164) without a global single
@@ -113,10 +105,10 @@ object StaypointGenerator {
     (pfsOut, sp.drop("pfs_ids"))
   }
 
-  /** Streaming scan over a (user_id, t_us, id)-sorted partition iterator.
-    * Emits one Row per staypoint; state is the candidate buffer since the
-    * current anchor. Exact per-user semantics of
-    * _generate_staypoints_sliding_user (positionfixes.py:478-535):
+  /** One user's fixes in (t_us, id) order → its staypoints. Exact
+    * semantics of _generate_staypoints_sliding_user
+    * (positionfixes.py:478-535); the only state is the candidate window
+    * since the anchor (bounded by staypoint size):
     *
     *  - gap > gapThreshold resets the anchor without emitting;
     *  - a distance breach (>= dist) emits iff the dwell >= timeThreshold;
@@ -124,137 +116,72 @@ object StaypointGenerator {
     *    cover only [anchor, breach);
     *  - includeLast aggregates the tail *including* the final fix.
     */
-  private final class StaypointScanIterator(
-      rows: Iterator[Row], gapUs: Long, timeUs: Long, distM: Double, includeLast: Boolean,
-      planar: Boolean = false)
-      extends Iterator[Row] {
+  private def slidingScan(gapUs: Long, timeUs: Long, distM: Double, includeLast: Boolean,
+                          planar: Boolean)(rows: Iterator[Row]): Iterator[Row] = {
+    // the window since the anchor (inclusive), as parallel arrays
+    val ids = ArrayBuffer.empty[Long]
+    val lons = ArrayBuffer.empty[Double]
+    val lats = ArrayBuffer.empty[Double]
+    val elevs = ArrayBuffer.empty[Any]
+    var user = 0L
+    var anchorTs = 0L
+    var prevTs = 0L
 
-    private val out = ArrayBuffer.empty[Row]
-    private var outPos = 0
-
-    private var curUser = 0L
-    private var hasUser = false
-    private var prevTs = 0L
-    // Buffer since anchor (inclusive); parallel arrays for cache-friendliness.
-    private val bIds = ArrayBuffer.empty[Long]
-    private val bLon = ArrayBuffer.empty[Double]
-    private val bLat = ArrayBuffer.empty[Double]
-    private val bElev = ArrayBuffer.empty[Any]
-    private var anchorTs = 0L
-    private var lastTs = 0L
-
-    private def resetBuffer(id: Long, ts: Long, lon: Double, lat: Double, elev: Any): Unit = {
-      bIds.clear(); bLon.clear(); bLat.clear(); bElev.clear()
-      bIds += id; bLon += lon; bLat += lat; bElev += elev
-      anchorTs = ts
+    def staypoint(finishedTs: Long): Row = {
+      val (cLon, cLat) = centroid(lons, lats, planar)
+      Row(user, anchorTs, finishedTs, cLon, cLat, medianElev(elevs), ids.toArray)
     }
 
-    private def append(id: Long, lon: Double, lat: Double, elev: Any): Unit = {
-      bIds += id; bLon += lon; bLat += lat; bElev += elev
-    }
-
-    /** Wrap-aware centroid over *unique* coordinates, sorted like
-      * np.unique for bit-parity with the reference
-      * (_centroid_from_coordinates, positionfixes.py:549-557).
-      */
-    private def centroid(extraLon: Double, extraLat: Double, includeExtra: Boolean): (Double, Double) = {
-      val n = bLon.length
-      val coords = new Array[(Double, Double)](if (includeExtra) n + 1 else n)
-      var i = 0
-      while (i < n) { coords(i) = (bLon(i), bLat(i)); i += 1 }
-      if (includeExtra) coords(n) = (extraLon, extraLat)
-      val uniq = coords.distinct.sorted
-      val m = uniq.length.toDouble
-      if (planar) {
-        // projected CRS: plain mean (positionfixes.py:551-552)
-        var sLon = 0.0; var sLat = 0.0
-        for ((lo, la) <- uniq) { sLon += lo; sLat += la }
-        (sLon / m, sLat / m)
-      } else {
-        var sSin = 0.0; var sCos = 0.0; var sLat = 0.0
-        for ((lo, la) <- uniq) {
-          val lr = math.toRadians(lo)
-          sSin += math.sin(lr); sCos += math.cos(lr); sLat += la
-        }
-        (math.toDegrees(math.atan2(sSin / m, sCos / m)), sLat / m)
+    def step(r: Row): Option[Row] = {
+      val ts = r.getLong(2); val lon = r.getDouble(3); val lat = r.getDouble(4)
+      val breach = ids.nonEmpty && ts - prevTs <= gapUs &&
+        GeoFunctions.haversineMeters(lons(0), lats(0), lon, lat) >= distM
+      val closed = if (breach && ts - anchorTs >= timeUs) Some(staypoint(ts)) else None
+      if (ids.isEmpty || ts - prevTs > gapUs || breach) {
+        ids.clear(); lons.clear(); lats.clear(); elevs.clear()
+        anchorTs = ts
       }
+      ids += r.getLong(0); lons += lon; lats += lat
+      elevs += (if (r.isNullAt(5)) null else r.getDouble(5))
+      user = r.getLong(1); prevTs = ts
+      closed
     }
 
-    private def medianElev(extra: Any, includeExtra: Boolean): Any = {
-      val vals = ArrayBuffer.empty[Double]
-      var anyNull = false
-      bElev.foreach {
-        case null => anyNull = true
-        case d: Double => vals += d
-        case other => vals += other.asInstanceOf[Number].doubleValue()
-      }
-      if (includeExtra) extra match {
-        case null => anyNull = true
-        case d: Double => vals += d
-        case other => vals += other.asInstanceOf[Number].doubleValue()
-      }
-      if (anyNull || vals.isEmpty) null // numpy median propagates NaN
-      else {
-        val s = vals.sorted
-        val n = s.length
-        if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-      }
-    }
+    rows.flatMap(step) ++
+      (if (includeLast && ids.nonEmpty && prevTs - anchorTs >= timeUs) Iterator.single(staypoint(prevTs))
+       else Iterator.empty)
+  }
 
-    private def emit(finishedTs: Long, includeCurrent: Boolean,
-                     curId: Long, curLon: Double, curLat: Double, curElev: Any): Unit = {
-      val (cLon, cLat) = centroid(curLon, curLat, includeCurrent)
-      val ids = if (includeCurrent) (bIds :+ curId).toArray else bIds.toArray
-      out += Row(curUser, anchorTs, finishedTs, cLon, cLat, medianElev(curElev, includeCurrent), ids)
-    }
-
-    private def finishUser(): Unit = {
-      if (hasUser && includeLast && bIds.nonEmpty) {
-        // Tail aggregation: curr == last fix, buffer already includes it.
-        if (lastTs - anchorTs >= timeUs) {
-          val (cLon, cLat) = centroid(0, 0, includeExtra = false)
-          out += Row(curUser, anchorTs, lastTs, cLon, cLat, medianElev(null, includeExtra = false), bIds.toArray)
-        }
+  /** Wrap-aware centroid over *unique* coordinates, sorted like
+    * np.unique for bit-parity with the reference
+    * (_centroid_from_coordinates, positionfixes.py:549-557).
+    */
+  private def centroid(lons: ArrayBuffer[Double], lats: ArrayBuffer[Double], planar: Boolean): (Double, Double) = {
+    val uniq = lons.indices.map(i => (lons(i), lats(i))).distinct.sorted
+    val m = uniq.length.toDouble
+    if (planar) {
+      // projected CRS: plain mean (positionfixes.py:551-552)
+      var sLon = 0.0; var sLat = 0.0
+      for ((lo, la) <- uniq) { sLon += lo; sLat += la }
+      (sLon / m, sLat / m)
+    } else {
+      var sSin = 0.0; var sCos = 0.0; var sLat = 0.0
+      for ((lo, la) <- uniq) {
+        val lr = math.toRadians(lo)
+        sSin += math.sin(lr); sCos += math.cos(lr); sLat += la
       }
-    }
-
-    private def process(r: Row): Unit = {
-      val id = r.getLong(0); val user = r.getLong(1); val ts = r.getLong(2)
-      val lon = r.getDouble(3); val lat = r.getDouble(4)
-      val elev: Any = if (r.isNullAt(5)) null else r.getDouble(5)
-
-      if (!hasUser || user != curUser) {
-        finishUser()
-        curUser = user; hasUser = true
-        resetBuffer(id, ts, lon, lat, elev)
-      } else if (ts - prevTs > gapUs) {
-        resetBuffer(id, ts, lon, lat, elev) // gap: discard candidate, no emit
-      } else {
-        val d = GeoFunctions.haversineMeters(bLon(0), bLat(0), lon, lat)
-        if (d >= distM) {
-          if (ts - anchorTs >= timeUs) emit(ts, includeCurrent = false, id, lon, lat, elev)
-          resetBuffer(id, ts, lon, lat, elev)
-        } else {
-          append(id, lon, lat, elev)
-        }
-      }
-      prevTs = ts
-      lastTs = ts
-    }
-
-    override def hasNext: Boolean = {
-      while (outPos >= out.length && rows.hasNext) process(rows.next())
-      if (outPos >= out.length && !rows.hasNext && hasUser) {
-        finishUser(); hasUser = false
-      }
-      outPos < out.length
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = out(outPos); outPos += 1
-      if (outPos == out.length) { out.clear(); outPos = 0 }
-      r
+      (math.toDegrees(math.atan2(sSin / m, sCos / m)), sLat / m)
     }
   }
+
+  /** Median elevation; null when any member's is (numpy's median
+    * propagates NaN).
+    */
+  private def medianElev(elevs: ArrayBuffer[Any]): Any =
+    if (elevs.contains(null)) null
+    else {
+      val s = elevs.map(_.asInstanceOf[Double]).sorted
+      val n = s.length
+      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+    }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.functions.GeoFunctions
-import graft.util.Ids
+import graft.util.{Ids, SortedScan}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,10 +12,10 @@ import scala.collection.mutable
   * place within a time budget; nested/overlapping tours allowed (N:N).
   *
   * Reference: trackintel/preprocessing/trips.py:54-452. The per-user stack
-  * scan is inherently sequential, so — like staypoint detection — it runs
-  * as a streaming mapPartitions over user-hash-partitioned, time-sorted
-  * trips. The candidate stack is bounded by `maxTime` (older candidates
-  * are cropped), so memory stays O(trips within the time window).
+  * scan is inherently sequential, so — like staypoint detection — each
+  * user's time-sorted trips are one [[SortedScan]] run. The candidate
+  * stack is bounded by `maxTime` (older candidates are cropped), so
+  * memory stays O(trips within the time window).
   *
   * Two linking modes, as in the reference:
   *  - location mode (staypoints with `location_id` given): trips chain when
@@ -82,14 +81,8 @@ object TourGenerator {
 
     // shared: the id sort's range sampling and the trip-mapping explode
     // both re-read the scan output
-    val rawTours = share(prepared
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("_s_us"), col("id"))
-      .mapPartitions(rows =>
-        new TourScanIterator(rows, useLocations, params.maxDistMeters, maxTimeUs,
-          params.maxNrGaps, planar))(
-        RowEncoder.encoderFor(tourSchema))
-      .toDF())
+    val rawTours = share(SortedScan(prepared, Seq("user_id"), Seq("_s_us", "id"), tourSchema)(
+      tourScan(useLocations, params.maxDistMeters, maxTimeUs, params.maxNrGaps, planar)))
 
     // Dense tour ids: the reference numbers tours in per-user concat order
     // = (user, emission order); the scan emits a per-user sequence number
@@ -122,7 +115,14 @@ object TourGenerator {
     mapping.join(t, col("trip_id") === t("id"), "left").drop("id")
   }
 
-  /** Per-user streaming stack scan — exact port of the reference's
+  private final case class Trip(
+      id: Long, sUs: Long, fUs: Long,
+      oSp: Option[Long], dSp: Option[Long],
+      oLoc: Option[Long], dLoc: Option[Long],
+      oLon: Double, oLat: Double, dLon: Double, dLat: Double)
+
+  /** One user's trips in (started_at, id) order → its tours, numbered by
+    * `seq` in emission order. Exact port of the reference's
     * _generate_tours_user semantics (trips.py:191-359):
     *   - walk trips in time order, keeping a candidate list of potential
     *     tour-start trips (NaN entries mark spatial gaps);
@@ -131,29 +131,16 @@ object TourGenerator {
     *   - candidates older than maxTime (or beyond the gap budget) are
     *     cropped as they're encountered.
     */
-  private final class TourScanIterator(rows: Iterator[Row], useLocations: Boolean,
-                                       maxDistM: Double, maxTimeUs: Long, maxNrGaps: Int,
-                                       planar: Boolean)
-      extends Iterator[Row] {
-
-    private final case class Trip(
-        id: Long, sUs: Long, fUs: Long,
-        oSp: Option[Long], dSp: Option[Long],
-        oLoc: Option[Long], dLoc: Option[Long],
-        oLon: Double, oLat: Double, dLon: Double, dLat: Double)
-
-    private val out = mutable.ArrayBuffer.empty[Row]
-    private var outPos = 0
-    private var curUser = 0L
-    private var hasUser = false
-    private var seqNo = 0L
+  private def tourScan(useLocations: Boolean, maxDistM: Double, maxTimeUs: Long, maxNrGaps: Int,
+                       planar: Boolean)(rows: Iterator[Row]): Iterator[Row] = {
+    var seqNo = 0L
     // candidate stack: Some(trip) or None (= spatial-gap marker)
-    private var candidates = mutable.ArrayBuffer.empty[Option[Trip]]
+    var candidates = mutable.ArrayBuffer.empty[Option[Trip]]
 
-    private def sameLoc(a: Option[Long], b: Option[Long]): Boolean =
+    def sameLoc(a: Option[Long], b: Option[Long]): Boolean =
       a.isDefined && b.isDefined && a.get == b.get
 
-    private def near(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Boolean =
+    def near(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Boolean =
       !lon1.isNaN && !lon2.isNaN && {
         val d =
           if (planar) GeoFunctions.euclideanMeters(lon1, lat1, lon2, lat2)
@@ -161,33 +148,29 @@ object TourGenerator {
         d <= maxDistM
       }
 
-    /** previous trip's end connects to this trip's start? */
-    private def connects(prev: Trip, cur: Trip): Boolean =
+    // previous trip's end connects to this trip's start?
+    def connects(prev: Trip, cur: Trip): Boolean =
       if (useLocations) sameLoc(prev.dLoc, cur.oLoc)
       else near(prev.dLon, prev.dLat, cur.oLon, cur.oLat)
 
-    /** candidate's origin == current trip's destination? */
-    private def closes(cand: Trip, cur: Trip): Boolean =
+    // candidate's origin == current trip's destination?
+    def closes(cand: Trip, cur: Trip): Boolean =
       if (useLocations) sameLoc(cand.oLoc, cur.dLoc)
       else near(cand.oLon, cand.oLat, cur.dLon, cur.dLat)
 
-    private def emitTour(members: Seq[Trip]): Unit = {
+    def tour(user: Long, members: Seq[Trip]): Row = {
       val first = members.head
       val last = members.last
-      out += Row(curUser, first.sUs, last.fUs,
+      val row = Row(user, first.sUs, last.fUs,
         first.oSp.map(Long.box).orNull, last.dSp.map(Long.box).orNull,
         members.map(_.id).toArray,
         (if (useLocations) first.oLoc.map(Long.box).orNull else null),
         seqNo)
       seqNo += 1L
+      row
     }
 
-    private def process(r: Row): Unit = {
-      val user = r.getLong(1)
-      if (!hasUser || user != curUser) {
-        curUser = user; hasUser = true; seqNo = 0L
-        candidates = mutable.ArrayBuffer.empty
-      }
+    def step(r: Row): Option[Row] = {
       def optLong(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
       def dbl(i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
       val cur = Trip(r.getLong(0), r.getLong(2), r.getLong(3),
@@ -203,7 +186,7 @@ object TourGenerator {
         if (!connected) {
           if (maxNrGaps == 0) {
             candidates = mutable.ArrayBuffer(Some(cur))
-            return
+            return None
           } else {
             candidates += None
           }
@@ -211,8 +194,9 @@ object TourGenerator {
       }
       candidates += Some(cur)
 
-      if (cur.dSp.isEmpty) return // unknown destination activity (both modes)
+      if (cur.dSp.isEmpty) return None // unknown destination activity (both modes)
 
+      var closed: Option[Row] = None
       var newListStart = 0
       var gapCounter = 0
       var j = 0
@@ -237,25 +221,16 @@ object TourGenerator {
               // unknown origin — skip (both modes, trips.py:320)
             } else if (closes(c, cur)) {
               val members = candidates.view.drop(candidates.length - 1 - j).collect { case Some(t) => t }.toSeq
-              emitTour(members)
+              closed = Some(tour(r.getLong(1), members))
               break = true
             }
         }
         j += 1
       }
       if (newListStart > 0) candidates = candidates.drop(newListStart)
+      closed
     }
 
-    override def hasNext: Boolean = {
-      while (outPos >= out.length && rows.hasNext) process(rows.next())
-      outPos < out.length
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = out(outPos); outPos += 1
-      if (outPos == out.length) { out.clear(); outPos = 0 }
-      r
-    }
+    rows.flatMap(step)
   }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.model.Tables
-import graft.util.Ids
+import graft.util.{Ids, SortedScan}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -18,11 +17,10 @@ import scala.collection.mutable
   * The reference interleaves both tables, flags trip starts with shift(),
   * assigns ids with arange+ffill, then re-sorts a union with synthetic
   * "gap"/"user_change" filler rows to pick origin/destination via shift.
-  * Here all of that is one per-user scan over the interleaved stream,
-  * the same shape as [[StaypointGenerator]]: hash-partition by `user_id`,
-  * sort each partition by (user_id, started_at, staypoint before tripleg,
-  * id), and stream a `mapPartitions` pass. Only each tripleg's first and
-  * last point travel through the shuffle.
+  * Here all of that is one per-user [[SortedScan]] run over the
+  * interleaved stream in (started_at, staypoint before tripleg, id)
+  * order, the same shape as [[StaypointGenerator]]. Only each tripleg's
+  * first and last point travel through the shuffle.
   *
   * Semantics:
   *  - a new trip starts at a user change, after the last staypoint of an
@@ -121,11 +119,7 @@ object TripGenerator {
       StructField("sp_ids", ids, nullable = false),
       StructField("tpl_ids", ids, nullable = false)))
 
-    stream
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("s_us"), col("kind"), col("rid"))
-      .mapPartitions(rows => new TripScan(rows, gapUs))(RowEncoder.encoderFor(schema))
-      .toDF()
+    SortedScan(stream, Seq("user_id"), Seq("s_us", "kind", "rid"), schema)(tripScan(gapUs))
   }
 
   /** A trip being built: members in stream order, the latest finish, and
@@ -155,8 +149,8 @@ object TripGenerator {
     else java.lang.Long.compare(a.id, b.id)
   }
 
-  /** Streaming scan over a (user_id, s_us, kind, rid)-sorted partition of
-    * (user_id, s_us, f_us, kind, rid, act, pt, first_pt, last_pt).
+  /** One user's (user_id, s_us, f_us, kind, rid, act, pt, first_pt,
+    * last_pt) records in (s_us, kind, rid) order → its trips.
     *
     * Trip membership follows the record order directly. Origin and
     * destination are the neighbours of a trip in the mark order, which
@@ -168,21 +162,20 @@ object TripGenerator {
     * start — and until the open trip, which may still be dropped, has
     * closed. A mark that would sort before one already passed (a record
     * finishing before it starts, or a negative gap threshold) is an
-    * error, not a silent reorder.
+    * error, not a silent reorder. At the user's end every mark passes.
     */
-  private final class TripScan(rows: Iterator[Row], gapUs: Long) extends Iterator[Row] {
-    private val out = mutable.Queue.empty[Row]
-    private var hasUser = false
-    private var user: Any = null
-    private var prevFinish = 0L
-    private var prevAct = 0 // is_activity of the previous record: 1 true, 0 false, -1 null
-    private var key = 0L
-    private var open: OpenTrip = null
-    private val pending = mutable.ArrayDeque.empty[Mark]
-    private var passed: Mark = null   // the last mark released for this user
-    private var waiting: OpenTrip = null // a released trip waiting for the mark after it
+  private def tripScan(gapUs: Long)(rows: Iterator[Row]): Iterator[Row] = {
+    var first = true
+    var user: Any = null
+    var prevFinish = 0L
+    var prevAct = 0 // is_activity of the previous record: 1 true, 0 false, -1 null
+    var key = 0L
+    var open: OpenTrip = null
+    val pending = mutable.ArrayDeque.empty[Mark]
+    var passed: Mark = null   // the last mark released
+    var waiting: OpenTrip = null // a released trip waiting for the mark after it
 
-    private def insert(m: Mark): Unit = {
+    def insert(m: Mark): Unit = {
       if (passed != null && compare(m, passed) < 0)
         throw new IllegalStateException(
           s"trip stream out of order for user $user: a record finishes before it starts, " +
@@ -192,53 +185,47 @@ object TripGenerator {
       pending.insert(i, m)
     }
 
-    private def closeTrip(): Unit = if (open != null) {
+    def closeTrip(): Unit = if (open != null) {
       open.closed = true
       if (open.tplIds.isEmpty) pending.remove(pending.indexWhere(_.trip eq open))
       open = null
     }
 
-    private def newTrip(): Unit = { closeTrip(); key += 1 }
+    def newTrip(): Unit = { closeTrip(); key += 1 }
 
-    /** Pass marks before `bound` (all when `bound` is None), stopping at
-      * the open trip's mark.
-      */
-    private def release(bound: Option[Long]): Unit =
-      while (pending.nonEmpty && bound.forall(pending.head.at < _) &&
-             (pending.head.trip == null || pending.head.trip.closed)) {
-        val m = pending.removeHead()
-        if (waiting != null) { emit(waiting, m); waiting = null }
-        if (m.trip != null) { m.trip.before = passed; waiting = m.trip }
-        passed = m
-      }
-
-    private def emit(t: OpenTrip, after: Mark): Unit = {
+    def emit(t: OpenTrip, after: Mark): Row = {
       val origin: Any = if (t.before != null && t.before.ord == 1) t.before.id else null
       val dest: Any = if (after != null && after.ord == 1) after.id else null
       val originPt = if (origin == null) t.firstPt else t.before.pt
       val destPt = if (dest == null) t.lastPt else after.pt
-      out += Row(user, t.key, t.startUs, t.finishUs, origin, dest, Row(originPt, destPt),
+      Row(user, t.key, t.startUs, t.finishUs, origin, dest, Row(originPt, destPt),
         t.spIds.toArray, t.tplIds.toArray)
     }
 
-    private def finishUser(): Unit = {
-      closeTrip()
-      release(None)
-      if (waiting != null) { emit(waiting, null); waiting = null }
-      passed = null; key = 0L
+    /** Pass marks before `bound` (all when `bound` is None), stopping at
+      * the open trip's mark; each passed mark completes the trip before it.
+      */
+    def release(bound: Option[Long]): mutable.ArrayBuffer[Row] = {
+      val done = mutable.ArrayBuffer.empty[Row]
+      while (pending.nonEmpty && bound.forall(pending.head.at < _) &&
+             (pending.head.trip == null || pending.head.trip.closed)) {
+        val m = pending.removeHead()
+        if (waiting != null) { done += emit(waiting, m); waiting = null }
+        if (m.trip != null) { m.trip.before = passed; waiting = m.trip }
+        passed = m
+      }
+      done
     }
 
-    private def process(r: Row): Unit = {
+    def step(r: Row): mutable.ArrayBuffer[Row] = {
       if (r.isNullAt(1) || r.isNullAt(2) || r.isNullAt(4))
         throw new IllegalArgumentException("staypoints and triplegs need non-null id, started_at and finished_at")
-      val u = r.get(0)
       val s = r.getLong(1)
       val f = r.getLong(2)
       val id = r.getLong(4)
       val act = if (r.isNullAt(5)) -1 else if (r.getBoolean(5)) 1 else 0
-      if (!hasUser || u != user) {
-        if (hasUser) finishUser()
-        hasUser = true; user = u
+      if (first) {
+        first = false; user = r.get(0)
         newTrip()
         insert(new Mark(s - gapUs / 2, 3, 0L, null, null))
       } else {
@@ -248,7 +235,7 @@ object TripGenerator {
           newTrip()
         }
       }
-      release(Some(s))
+      val done = release(Some(s))
       if (act == 1) insert(new Mark(s, 1, id, r.getStruct(6), null))
       else if (act == 0) {
         if (open == null) {
@@ -264,17 +251,16 @@ object TripGenerator {
         }
       }
       prevFinish = f; prevAct = act
+      done
     }
 
-    override def hasNext: Boolean = {
-      while (out.isEmpty && rows.hasNext) process(rows.next())
-      if (out.isEmpty && hasUser) { finishUser(); hasUser = false }
-      out.nonEmpty
+    def finish(): mutable.ArrayBuffer[Row] = {
+      closeTrip()
+      val done = release(None)
+      if (waiting != null) done += emit(waiting, null)
+      done
     }
 
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      out.dequeue()
-    }
+    rows.flatMap(step) ++ finish()
   }
 }

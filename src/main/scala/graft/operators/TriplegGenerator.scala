@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.model.Tables
-import graft.util.Ids
+import graft.util.{Ids, SortedScan}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,9 +15,8 @@ import scala.collection.mutable.ArrayBuffer
   * Reference: trackintel/preprocessing/positionfixes.py:200-458. The
   * reference builds boolean "new tripleg" flags with shift() and then does
   * an imperative arange/ffill id pass. Here that chain is one per-user
-  * scan, the same shape as [[StaypointGenerator]]: hash-partition by
-  * `user_id`, sort each partition by (user_id, tracked_at, id), and
-  * stream a `mapPartitions` pass whose only state is the open segment.
+  * [[SortedScan]] run over the fixes in (tracked_at, id) order, the same
+  * shape as [[StaypointGenerator]], whose only state is the open segment.
   * One shuffle by user, one linear pass, no window and no aggregate.
   *
   * Semantics reproduced exactly:
@@ -80,67 +78,50 @@ object TriplegGenerator {
         StructField("lat", f("lat").dataType, f("lat").nullable))), containsNull = false), nullable = false),
       StructField("pfs_ids", ArrayType(f("id").dataType, containsNull = false), nullable = false)))
 
-    pfs.select(col("user_id"), unix_micros(col("tracked_at")).as("t_us"), col("id"),
-        col("staypoint_id"), col("lon"), col("lat"))
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("t_us"), col("id"))
-      .mapPartitions(rows => new SegmentScan(rows, gapUs))(RowEncoder.encoderFor(schema))
-      .toDF()
+    val input = pfs.select(col("user_id"), unix_micros(col("tracked_at")).as("t_us"), col("id"),
+      col("staypoint_id"), col("lon"), col("lat"))
+    SortedScan(input, Seq("user_id"), Seq("t_us", "id"), schema)(segmentScan(gapUs))
   }
 
-  /** Streaming scan over a (user_id, t_us, id)-sorted partition of
-    * (user_id, t_us, id, staypoint_id, lon, lat). A segment opens at a
-    * non-staypoint fix that starts a user, follows a gap, or follows a
-    * staypoint-key change; it closes at the next staypoint fix, start or
-    * user, and is emitted when it holds >= 2 fixes. At most one segment
-    * closes per input fix.
+  /** One user's (user_id, t_us, id, staypoint_id, lon, lat) in (t_us, id)
+    * order → its triplegs. A segment opens at a non-staypoint fix that
+    * starts the user, follows a gap, or follows a staypoint-key change; it
+    * closes at the next staypoint fix or start, and at the user's end, and
+    * is emitted when it holds >= 2 fixes.
     */
-  private final class SegmentScan(rows: Iterator[Row], gapUs: Long) extends Iterator[Row] {
-    private var ready: Row = null
-    private var seen = false
-    private var prevUser: Any = null
-    private var prevT = 0L
-    private var prevKey = 0L
+  private def segmentScan(gapUs: Long)(rows: Iterator[Row]): Iterator[Row] = {
+    var first = true
+    var prevT = 0L
+    var prevKey = 0L
+    var user: Any = null
+    var segStart = 0L
+    var segEnd = 0L
+    val points = ArrayBuffer.empty[Row]
+    val ids = ArrayBuffer.empty[Any]
 
-    private var segUser: Any = null
-    private var segStart = 0L
-    private var segEnd = 0L
-    private val points = ArrayBuffer.empty[Row]
-    private val ids = ArrayBuffer.empty[Any]
-
-    private def close(): Unit = {
-      if (points.length >= 2) ready = Row(segUser, segStart, segEnd, points.toArray, ids.toArray)
+    def close(): Option[Row] = {
+      val seg = if (points.length >= 2) Some(Row(user, segStart, segEnd, points.toArray, ids.toArray)) else None
       points.clear(); ids.clear()
+      seg
     }
 
-    private def process(r: Row): Unit = {
+    def step(r: Row): Option[Row] = {
       if (r.isNullAt(1)) throw new IllegalArgumentException("positionfixes.tracked_at must not be null")
-      val user = r.get(0)
       val t = r.getLong(1)
       val transit = r.isNullAt(3)
       val key = if (transit) 0L else r.getAs[Number](3).longValue + 1
-      val newUser = !seen || user != prevUser
-      val starts = transit && (newUser || t - prevT > gapUs || key != prevKey)
-      if (newUser || starts || !transit) close()
-      if (starts) { segUser = user; segStart = t }
+      val starts = transit && (first || t - prevT > gapUs || key != prevKey)
+      val closed = if (starts || !transit) close() else None
+      if (starts) { user = r.get(0); segStart = t }
       if (transit) {
         if (r.isNullAt(2)) throw new IllegalArgumentException("positionfixes.id must not be null")
         points += Row(r.get(4), r.get(5)); ids += r.get(2); segEnd = t
       }
-      seen = true; prevUser = user; prevT = t; prevKey = key
+      first = false; prevT = t; prevKey = key
+      closed
     }
 
-    override def hasNext: Boolean = {
-      while (ready == null && rows.hasNext) process(rows.next())
-      if (ready == null && seen) { close(); seen = false }
-      ready != null
-    }
-
-    override def next(): Row = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = ready; ready = null
-      r
-    }
+    rows.flatMap(step) ++ close()
   }
 
   /** Tripleg generation with staypoint overlap ("overlap_staypoints",

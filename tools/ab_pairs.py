@@ -7,7 +7,9 @@
 Pair i runs `python3 perfbench/run.py --workload W --seed S --seconds 60
 --trace 0` (S = seed0 + i) in each checkout, with the same seed on both
 sides; even pairs run the parent first, odd pairs the change first. Each
-checkout builds itself into its own `.bench_build/` on its first run.
+checkout builds itself into its own `.bench_build/` on its first run, so
+before pair 1 each checkout runs one pass whose result is discarded: no
+timed run directly follows a build (two scalac passes, about 40 s of CPU).
 
 Prints, per end-to-end metric: each side's median and quartiles, how many
 pairs the change won, tied and lost (in the metric's better direction,
@@ -90,6 +92,10 @@ def main():
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
         lower = {m["name"]: m["better"] == "lower" for m in json.load(f)["end_to_end"]}
+
+    # warm-up: build each checkout and discard one pass before any timed run
+    for checkout in (args.parent, args.change):
+        run_once(checkout, args.workload, args.seed0, args.seconds)
 
     runs, failed = [], 0
     for i in range(args.pairs):
