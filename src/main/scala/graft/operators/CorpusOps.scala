@@ -446,9 +446,9 @@ object CorpusOps {
     * a filtered corpus into fixed-budget training examples.
     *
     * Scale shape: each group's documents in id order are one
-    * [[SortedScan]] run carrying two longs of state (same
-    * pattern as the staypoint scan — groups are the parallelism axis,
-    * group size is unbounded). Token counts default to whitespace tokens (matching
+    * [[SortedScan]] run carrying two longs of state (same pattern as the
+    * staypoint scan — groups are the parallelism axis, group size is
+    * unbounded). Token counts default to whitespace tokens (matching
     * [[TextAnalysis.tokenCount]]'s `ws_tokens`); pass `tokenCountCol` to
     * pack by a precomputed count instead — e.g. real tokenizer counts
     * from [[TextAnalysis.bpeEncode]], so training examples are budgeted

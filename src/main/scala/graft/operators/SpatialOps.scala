@@ -867,9 +867,8 @@ object SpatialOps {
     var runEnd: java.lang.Long = null
 
     def close(): Option[Row] = {
-      val run =
-        if (runStart == null || runEnd == null || runEnd - runStart + 1L < minConsecutive) None
-        else Some(Row(pair.get(0), pair.get(1), runStart.longValue, runEnd - runStart + 1L))
+      val n = if (runStart == null || runEnd == null) 0L else runEnd - runStart + 1L
+      val run = if (n >= minConsecutive) Some(Row(pair.get(0), pair.get(1), runStart.longValue, n)) else None
       runStart = null; runEnd = null
       run
     }

@@ -29,46 +29,61 @@ object SortedScan {
     val keyIdx = key.map(df.schema.fieldIndex).toArray
     df.repartition(key.map(col): _*)
       .sortWithinPartitions((key ++ order).map(col): _*)
-      .mapPartitions(rows => runs(rows.buffered, keyIdx).flatMap(scan))(RowEncoder.encoderFor(schema))
+      .mapPartitions(rows => new Runs(rows, keyIdx).flatMap(scan))(RowEncoder.encoderFor(schema))
       .toDF()
   }
 
-  /** A sorted partition as its runs of equal key, each a view of the
-    * shared rows: moving to the next run first skips what is left of the
+  /** A sorted partition as its runs of equal key. The partition holds one
+    * row of lookahead, which each run reads through until the key
+    * changes; moving to the next run first skips what is left of the
     * previous one.
     */
-  private def runs(rows: BufferedIterator[Row], keyIdx: Array[Int]): Iterator[Iterator[Row]] =
-    new Iterator[Iterator[Row]] {
-      private var run: Run = null
-      def hasNext: Boolean = {
-        if (run != null) run.skipRest()
-        rows.hasNext
-      }
-      def next(): Iterator[Row] = {
-        if (!hasNext) throw new NoSuchElementException
-        run = new Run(rows, keyIdx, keyIdx.map(rows.head.get))
-        run
-      }
+  private final class Runs(rows: Iterator[Row], keyIdx: Array[Int]) extends Iterator[Iterator[Row]] {
+    private var head: Row = null // the next row, not yet handed to a run
+    private var run: Run = null
+
+    private def peek(): Row = {
+      if (head == null && rows.hasNext) head = rows.next()
+      head
     }
 
-  private final class Run(rows: BufferedIterator[Row], keyIdx: Array[Int], key: Array[Any])
-      extends Iterator[Row] {
-    private var headInRun = false
-
-    private def inRun(r: Row): Boolean = {
-      var i = 0
-      while (i < keyIdx.length && r.get(keyIdx(i)) == key(i)) i += 1
-      i == keyIdx.length
+    def hasNext: Boolean = {
+      if (run != null) run.skipRest()
+      peek() != null
     }
 
-    def hasNext: Boolean = headInRun || { headInRun = rows.hasNext && inRun(rows.head); headInRun }
-
-    def next(): Row = {
+    def next(): Iterator[Row] = {
       if (!hasNext) throw new NoSuchElementException
-      headInRun = false
-      rows.next()
+      run = new Run(keyIdx.map(head.get))
+      run
     }
 
-    def skipRest(): Unit = while (hasNext) next()
+    private final class Run(key: Array[Any]) extends Iterator[Row] {
+      private var ready = false // the lookahead is checked and in this run
+      private var ended = false
+
+      private def inRun(r: Row): Boolean = {
+        var i = 0
+        while (i < keyIdx.length && r.get(keyIdx(i)) == key(i)) i += 1
+        i == keyIdx.length
+      }
+
+      def hasNext: Boolean = ready || !ended && {
+        val r = peek()
+        ready = r != null && inRun(r)
+        ended = !ready
+        ready
+      }
+
+      def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException
+        ready = false
+        val r = head
+        head = null
+        r
+      }
+
+      def skipRest(): Unit = while (hasNext) next()
+    }
   }
 }
