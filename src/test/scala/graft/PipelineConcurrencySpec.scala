@@ -118,6 +118,6 @@ class PipelineConcurrencySpec extends SparkSpec {
 }
 
 object PipelineConcurrencySpec {
-  /** Evaluations of the counting UDF (tasks share the driver JVM in local mode). */
+  /** Evaluations of the counting UDF (local-mode tasks run in the test JVM). */
   val evaluations = new AtomicLong(0L)
 }
