@@ -33,21 +33,24 @@ class ReplaySpec extends SparkSpec {
     assert(batch(2L) == 1L && batch(5L) == 1L && batch(8L) == 1L)
   }
 
+  // user 1: 4-fix dwell at the origin (35 min > threshold), a transit
+  // fix 200 m east (breach), then a 3-fix tail dwell that only the
+  // includeLast sentinel flush can emit; user 2: all-transit, no output
+  private def lon(m: Double) = -122.4 + m / 74000.0 // ≈ metres at lat 47.6
+  private lazy val stayPfs = Seq(
+    (0L, 1L, 0L, lon(0), 47.6), (1L, 1L, 10 * MIN, lon(10), 47.6),
+    (2L, 1L, 20 * MIN, lon(20), 47.6), (3L, 1L, 35 * MIN, lon(5), 47.6),
+    (4L, 1L, 40 * MIN, lon(200), 47.6),
+    (5L, 1L, 45 * MIN, lon(400), 47.6), (6L, 1L, 60 * MIN, lon(410), 47.6),
+    (7L, 1L, 80 * MIN, lon(390), 47.6),
+    (10L, 2L, 0L, lon(0), 47.0), (11L, 2L, 20 * MIN, lon(500), 47.0))
+    .toDF("id", "user_id", "t_us", "lon", "lat")
+  private val stayParams = StreamingStaypoints.Params(distThresholdMeters = 100.0,
+    timeThresholdMinutes = 30.0, gapThresholdMinutes = 1e7)
+
   test("replayed staypoints match the batch scan, tail flushed like includeLast") {
-    // user 1: 4-fix dwell at the origin (35 min > threshold), a transit
-    // fix 200 m east (breach), then a 3-fix tail dwell that only the
-    // includeLast sentinel flush can emit; user 2: all-transit, no output
-    def lon(m: Double) = -122.4 + m / 74000.0 // ≈ metres at lat 47.6
-    val pfs = Seq(
-      (0L, 1L, 0L, lon(0), 47.6), (1L, 1L, 10 * MIN, lon(10), 47.6),
-      (2L, 1L, 20 * MIN, lon(20), 47.6), (3L, 1L, 35 * MIN, lon(5), 47.6),
-      (4L, 1L, 40 * MIN, lon(200), 47.6),
-      (5L, 1L, 45 * MIN, lon(400), 47.6), (6L, 1L, 60 * MIN, lon(410), 47.6),
-      (7L, 1L, 80 * MIN, lon(390), 47.6),
-      (10L, 2L, 0L, lon(0), 47.0), (11L, 2L, 20 * MIN, lon(500), 47.0))
-      .toDF("id", "user_id", "t_us", "lon", "lat")
-    val params = StreamingStaypoints.Params(distThresholdMeters = 100.0,
-      timeThresholdMinutes = 30.0, gapThresholdMinutes = 1e7)
+    val pfs = stayPfs
+    val params = stayParams
     val expected = Set(
       (1L, 0L, 40 * MIN, 4L),        // dwell closed by the transit breach
       (1L, 45 * MIN, 80 * MIN, 3L))  // tail dwell, sentinel-flushed
@@ -55,6 +58,43 @@ class ReplaySpec extends SparkSpec {
       val got = Replay.staypoints(pfs, params, chunks = chunks)
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(got == expected, s"chunks=$chunks: $got")
+    }
+  }
+
+  test("replayed staypoint centroids equal the batch generator's bit for bit") {
+    // Replay.staypoints projects the centroid away, so this drives the
+    // detector over Replay's own feed: the fixes in (t, id) order in
+    // chunks, then one far sentinel per user at its last fix's time
+    implicit val sqlCtx = spark.sqlContext
+    val batch = graft.operators.StaypointGenerator.generate(
+        stayPfs.select(col("id"), col("user_id"), timestamp_micros(col("t_us")).as("tracked_at"),
+          col("lon"), col("lat")),
+        graft.operators.StaypointGenerator.Params(distThresholdMeters = 100.0,
+          timeThresholdMinutes = 30.0, gapThresholdMinutes = 1e7, includeLast = true))._2
+      .select(col("user_id"), unix_micros(col("started_at")), col("lon"), col("lat"))
+      .as[(Long, Long, Double, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+    assert(batch.length == 2)
+    val rows = stayPfs.as[(Long, Long, Long, Double, Double)].collect().toSeq.sortBy(r => (r._3, r._1))
+    val sentinels = rows.groupBy(_._2).values.toSeq.map { rs =>
+      val last = rs.maxBy(r => (r._3, r._1))
+      (Long.MaxValue, last._2, last._3, last._4 + 1.0, last._5)
+    }.sortBy(_._2)
+    for (chunk <- Seq(1, 4)) {
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Double, Double)]
+      val query = StreamingStaypoints.detect(input.toDF().toDF("id", "user_id", "t_us", "lon", "lat")
+          .select(col("id"), col("user_id"), timestamp_micros(col("t_us")).as("tracked_at"),
+            col("lon"), col("lat")), stayParams)
+        .writeStream.format("memory").queryName(s"replay_sp_centroids_$chunk")
+        .outputMode("append").start()
+      try {
+        (rows.grouped(chunk).toSeq :+ sentinels).foreach { b => input.addData(b); query.processAllAvailable() }
+      } finally query.stop()
+      val streamed = spark.table(s"replay_sp_centroids_$chunk")
+        .select(col("user_id"), col("started_us"), col("lon"), col("lat"))
+        .as[(Long, Long, Double, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+      def bits(s: Seq[(Long, Long, Double, Double)]) = s.map { case (u, t, lo, la) =>
+        (u, t, java.lang.Double.doubleToRawLongBits(lo), java.lang.Double.doubleToRawLongBits(la)) }
+      assert(bits(streamed) == bits(batch), s"chunk=$chunk: $streamed vs $batch")
     }
   }
 
