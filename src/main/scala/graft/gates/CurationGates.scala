@@ -748,7 +748,7 @@ private[graft] object CurationGates {
     } {
       // text is ASCII in the testdata, so per-char ord == per-byte value and
       // char length == byte length; the rolling checksum matches
-      // Multimodal.decodeBatch's stub kernel exactly
+      // Multimodal.byteFeatures' stub kernel exactly
       s"""SELECT doc_id AS media_id, CAST(length(text) AS BIGINT) AS n_bytes,
          |  list_reduce(
          |    list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text,''), c -> CAST(ord(c) AS BIGINT))),

@@ -1,23 +1,34 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem,
+  UnsupportedAudioFileException}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: images/audio/video as opaque `binary`
-  * columns with typed metadata, plus batch-shaped decode/feature-extract
+  * columns with typed metadata, plus per-blob decode/feature-extract
   * passes.
+  *
+  * Every decoder and fixture builder is one scan ([[perBlob]] over
+  * [[scan]]): the key and payload are selected, each row goes through a
+  * per-blob function in partition order, and the output is encoded with
+  * the decoder's schema — no shuffle, nothing buffered across blobs.
   *
   * Image decode is REAL: [[decodeImages]] runs the JDK's own codecs
   * (`javax.imageio` — PNG/JPEG/BMP/GIF ship with the JVM, no external
-  * dependency) inside the batched mapPartitions shape, reading
-  * dimensions and raster samples from actually-decoded images.
-  * [[pngFixtures]] builds deterministic PNG blobs whose every decoded
-  * quantity is predictable in closed form, so an external SQL engine
-  * can oracle-check the full encode→decode→resize path. Audio/video
-  * remain stubbed (no ffmpeg in the JDK): [[extractFeatures]] keeps the
-  * byte-level deterministic kernel as the generic-blob fallback.
+  * dependency), reading dimensions and raster samples from
+  * actually-decoded images. [[pngFixtures]] builds deterministic PNG
+  * blobs whose every decoded quantity is predictable in closed form, so
+  * an external SQL engine can oracle-check the full encode→decode→resize
+  * path. Audio decodes PCM WAV through `javax.sound.sampled`; there is no
+  * video codec in the JDK, so animated GIF stands in for video, and
+  * [[extractFeatures]] keeps the byte-level deterministic kernel as the
+  * generic-blob fallback.
   */
 object Multimodal {
 
@@ -45,52 +56,138 @@ object Multimodal {
         (pmod(xxhash64(col(idCol), lit(1L)), lit(1080L)).cast("int") + 32).as("height"),
         length(col(payloadCol)).cast(LongType).as("n_bytes")).as("meta"))
 
+  // ---------------- the one pass ----------------
+
+  /** The one scan of this object: each row of `input` goes through `f`
+    * in partition order, and the rows `f` returns are encoded with
+    * `schema`. ImageIO's disk cache is switched off first — the blobs
+    * are in memory already.
+    */
+  private def scan(input: DataFrame, schema: StructType)(f: Row => IterableOnce[Row]): DataFrame =
+    input.mapPartitions { rows =>
+      ImageIO.setUseCache(false)
+      rows.flatMap(f)
+    }(RowEncoder.encoderFor(schema))
+
+  /** Every decoder's pass: `f(media_id, blob)` per media row, `blob`
+    * null for a null blob.
+    */
+  private def perBlob(media: DataFrame, schema: StructType)
+                     (f: (Long, Array[Byte]) => IterableOnce[Row]): DataFrame =
+    scan(media.select(col("media_id"), col("blob")), schema) { r =>
+      f(r.getLong(0), if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1))
+    }
+
+  /** A decoder's audit row for a blob it cannot read: the id, `ok =
+    * false`, and null in every other column of `schema`.
+    */
+  private def notOk(id: Long, schema: StructType): Row =
+    Row.fromSeq(Seq(id, false) ++ Seq.fill(schema.length - 2)(null))
+
+  private val fixtureSchema = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("blob", BinaryType, nullable = false),
+    StructField("mime", StringType, nullable = false)))
+
+  /** Every fixture builder's pass: one `(media_id, blob, mime)` row per
+    * row of `input`, which holds the media id first and the content id
+    * the blob is built from last (the same column when there is one).
+    */
+  private def fixtures(input: DataFrame, mime: String)(build: Long => Array[Byte]): DataFrame =
+    scan(input, fixtureSchema)(r => Iterator.single(Row(r.getLong(0), build(r.getLong(r.length - 1)), mime)))
+
+  /** A `w×h` single-band gray image with `pixel(x, y)` samples. */
+  private def grayImage(w: Int, h: Int)(pixel: (Int, Int) => Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { raster.setSample(x, y, 0, pixel(x, y)); x += 1 }
+      y += 1
+    }
+    img
+  }
+
+  /** One blob decoded by javax.imageio: None for a null or empty blob,
+    * a blob no installed reader takes, or one its reader fails on.
+    */
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
+    if (bytes == null || bytes.isEmpty) None
+    else
+      try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+      catch { case _: IOException => None }
+
+  /** One decoded PCM16 clip: the container's frame count and format, and
+    * the interleaved samples.
+    */
+  private final case class Pcm16(frames: Long, format: AudioFormat, samples: Array[Short])
+
+  /** One blob parsed by javax.sound's container readers and kept only
+    * if it is signed little-endian 16-bit PCM: None for a null or empty
+    * blob, a container javax.sound cannot parse, or any other encoding.
+    */
+  private def readPcm16(bytes: Array[Byte]): Option[Pcm16] =
+    if (bytes == null || bytes.isEmpty) None
+    else
+      try {
+        val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+        val fmt = ais.getFormat
+        if (fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED || fmt.getSampleSizeInBits != 16 ||
+            fmt.isBigEndian) None
+        else {
+          val frames = ais.getFrameLength
+          val data = ais.readAllBytes()
+          val samples = new Array[Short](data.length / 2)
+          var i = 0
+          while (i < samples.length) {
+            samples(i) = ((data(2 * i) & 0xFF) | (data(2 * i + 1) << 8)).toShort
+            i += 1
+          }
+          Some(Pcm16(frames, fmt, samples))
+        }
+      } catch {
+        case _: UnsupportedAudioFileException => None
+        case _: IOException => None
+      }
+
+  // ---------------- generic blobs ----------------
+
   private val featureSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("n_bytes", LongType, nullable = false),
     StructField("byte_checksum", LongType, nullable = false),
     StructField("feature", ArrayType(FloatType, containsNull = false), nullable = false)))
 
-  /** Batched "decode + feature-extract" pass over blobs.
+  /** "Decode + feature-extract" pass over blobs, one blob at a time.
     *
-    * Runs as mapPartitions with an explicit micro-batch (the shape a
-    * vectorized decoder / GPU feature extractor needs); each batch would
-    * be handed to the native kernel at once.
-    *
-    * STUB KERNEL: the per-blob "decode" below is a deterministic fake
-    * (byte checksum + 8 pseudo-features from rolling byte sums). Replace
-    * `decodeBatch` with a real codec binding to productionize — nothing
-    * else changes.
+    * STUB KERNEL: the per-blob "decode" is [[byteFeatures]], a
+    * deterministic fake (byte checksum + 8 pseudo-features from rolling
+    * byte sums); a null blob reads as zero bytes. Replace `byteFeatures`
+    * with a real codec binding to productionize — nothing else changes.
     */
-  def extractFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val input = media.select(col("media_id"), col("blob"))
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        decodeBatch(batch.map(r => (r.getLong(0), if (r.isNullAt(1)) Array.empty[Byte] else r.getAs[Array[Byte]](1))))
-      }
-    }(RowEncoder.encoderFor(featureSchema))
-  }
+  def extractFeatures(media: DataFrame): DataFrame =
+    perBlob(media, featureSchema) { (id, bytes) =>
+      Iterator.single(byteFeatures(id, if (bytes == null) Array.empty[Byte] else bytes))
+    }
 
   /** Checksum modulus: keeps the rolling polynomial checksum inside
     * non-overflowing BIGINT range so external engines reproduce it.
     */
   val checksumMod = 1000000007L
 
-  /** STUB: deterministic fake decoder. Real implementation would call
-    * into a JNI/codec library once per batch.
-    */
-  private def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[Row] =
-    batch.map { case (id, bytes) =>
-      var checksum = 0L
-      val feat = new Array[Float](8)
-      var i = 0
-      while (i < bytes.length) {
-        checksum = (checksum * 31 + (bytes(i) & 0xFF)) % checksumMod
-        feat(i % 8) += (bytes(i) & 0xFF) / 255.0f
-        i += 1
-      }
-      Row(id, bytes.length.toLong, checksum, feat.toSeq)
+  /** STUB: deterministic fake decoder of one blob. */
+  private def byteFeatures(id: Long, bytes: Array[Byte]): Row = {
+    var checksum = 0L
+    val feat = new Array[Float](8)
+    var i = 0
+    while (i < bytes.length) {
+      checksum = (checksum * 31 + (bytes(i) & 0xFF)) % checksumMod
+      feat(i % 8) += (bytes(i) & 0xFF) / 255.0f
+      i += 1
     }
+    Row(id, bytes.length.toLong, checksum, feat.toSeq)
+  }
 
   // ---------------- real image path (javax.imageio) ----------------
 
@@ -104,11 +201,6 @@ object Multimodal {
   def fixturePixel(id: Long, x: Int, y: Int): Int =
     Math.floorMod(id * 31L + x * 7L + y * 13L, 256L).toInt
 
-  private val pngSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("blob", BinaryType, nullable = false),
-    StructField("mime", StringType, nullable = false)))
-
   /** Deterministic REAL-PNG column: one grayscale image per row, built
     * from [[fixturePixel]] and encoded by `javax.imageio`'s PNG writer
     * (lossless, so decode returns the exact samples). This is the
@@ -121,27 +213,12 @@ object Multimodal {
     // a gate can synthesize distinct media rows with duplicate content
     // (the perceptual-dedup fixture: media_id unique, content repeating)
     val cid = if (contentCol.isEmpty) col(idCol) else col(contentCol)
-    val input = docs.select(col(idCol).cast(LongType).as("media_id"),
-      cid.cast(LongType).as("_cid"))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val mediaId = r.getLong(0)
-        val id = r.getLong(1)
-        val w = fixtureWidth(id); val h = fixtureHeight(id)
-        val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { raster.setSample(x, y, 0, fixturePixel(id, x, y)); x += 1 }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(mediaId, bos.toByteArray, "image/png")
-      }
-    }(RowEncoder.encoderFor(pngSchema))
+    fixtures(docs.select(col(idCol).cast(LongType).as("media_id"), cid.cast(LongType).as("_cid")),
+      "image/png") { id =>
+      val bos = new ByteArrayOutputStream()
+      ImageIO.write(grayImage(fixtureWidth(id), fixtureHeight(id))(fixturePixel(id, _, _)), "png", bos)
+      bos.toByteArray
+    }
   }
 
   private def decodeSchema(resizeTo: Int) = StructType(Seq(
@@ -157,23 +234,30 @@ object Multimodal {
       StructField("rs_pixel_sum", LongType, nullable = true))
     else Nil))
 
+  /** Integer luma via getRGB + ITU-R 601 weighting — exact for gray
+    * content (r=g=b=v ⇒ (299+587+114)·v/1000 = v) regardless of whether
+    * the decoder hands back an indexed or component raster, which is
+    * what GIF's palette model requires.
+    */
+  private def lumaRgbAt(img: BufferedImage, x: Int, y: Int): Int = {
+    val rgb = img.getRGB(x, y)
+    (((rgb >> 16) & 0xFF) * 299 + (((rgb >> 8) & 0xFF)) * 587 + ((rgb & 0xFF)) * 114) / 1000
+  }
+
   /** Integer luma of one decoded pixel: raw raster sample for
     * single-band (gray) images — `getRGB` would push gray samples
-    * through a color-space conversion and break exactness — and the
-    * ITU-R 601 integer weighting for color images.
+    * through a color-space conversion and break exactness — and
+    * [[lumaRgbAt]] for color images.
     */
-  private def lumaAt(img: java.awt.image.BufferedImage, x: Int, y: Int): Int =
+  private def lumaAt(img: BufferedImage, x: Int, y: Int): Int =
     if (img.getRaster.getNumBands == 1) img.getRaster.getSample(x, y, 0)
-    else {
-      val rgb = img.getRGB(x, y)
-      ((((rgb >> 16) & 0xFF) * 299 + (((rgb >> 8) & 0xFF)) * 587 + ((rgb & 0xFF)) * 114) / 1000)
-    }
+    else lumaRgbAt(img, x, y)
 
-  /** REAL image decode (+ optional resize) in the batched mapPartitions
-    * shape: `javax.imageio.ImageIO.read` per blob, then dimensions, the
-    * integer luma sum and an 8-bin luma histogram from the decoded
-    * raster. Undecodable/empty blobs emit `ok = false` instead of
-    * failing the task (a 100 TB crawl always contains corrupt images).
+  /** REAL image decode (+ optional resize), one blob at a time:
+    * [[readImage]] per blob, then dimensions, the integer luma sum and
+    * an 8-bin luma histogram from the decoded raster. Undecodable/empty
+    * blobs emit `ok = false` instead of failing the task (a 100 TB crawl
+    * always contains corrupt images).
     *
     * When `resizeTo > 0`, the decoded raster also downsamples to that
     * long edge with EXPLICIT nearest-neighbor mapping
@@ -182,56 +266,42 @@ object Multimodal {
     * Java2D's interpolated drawImage. The same decoded image serves both
     * surfaces: one decode per blob.
     */
-  def decodeImages(media: DataFrame, batchSize: Int = 64, resizeTo: Int = 0): DataFrame = {
-    val input = media.select(col("media_id"), col("blob"))
+  def decodeImages(media: DataFrame, resizeTo: Int = 0): DataFrame = {
     val schema = decodeSchema(resizeTo)
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val img =
-            if (bytes == null || bytes.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-              catch { case _: java.io.IOException => null }
-          val id = r.getLong(0)
-          if (img == null) {
-            if (resizeTo > 0) Row(id, false, null, null, null, null, null, null, null)
-            else Row(id, false, null, null, null, null)
-          } else {
-            val w = img.getWidth; val h = img.getHeight
-            var sum = 0L
-            val hist = new Array[Long](8)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val l = lumaAt(img, x, y)
-                sum += l
-                hist(l >> 5) += 1
-                x += 1
-              }
-              y += 1
+    perBlob(media, schema) { (id, bytes) =>
+      Iterator.single(readImage(bytes) match {
+        case None => notOk(id, schema)
+        case Some(img) =>
+          val w = img.getWidth; val h = img.getHeight
+          var sum = 0L
+          val hist = new Array[Long](8)
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              val l = lumaAt(img, x, y)
+              sum += l
+              hist(l >> 5) += 1
+              x += 1
             }
-            if (resizeTo > 0) {
-              val maxDim = math.max(w, h)
-              val (rw, rh) =
-                if (maxDim <= resizeTo) (w, h)
-                else (math.max(1, w * resizeTo / maxDim), math.max(1, h * resizeTo / maxDim))
-              var rsSum = 0L
-              var ry = 0
-              while (ry < rh) {
-                var rx = 0
-                while (rx < rw) { rsSum += lumaAt(img, rx * w / rw, ry * h / rh); rx += 1 }
-                ry += 1
-              }
-              Row(id, true, w.toLong, h.toLong, sum, hist.toSeq, rw.toLong, rh.toLong, rsSum)
-            } else Row(id, true, w.toLong, h.toLong, sum, hist.toSeq)
+            y += 1
           }
-        }
-      }
-    }(RowEncoder.encoderFor(schema))
+          if (resizeTo > 0) {
+            val maxDim = math.max(w, h)
+            val (rw, rh) =
+              if (maxDim <= resizeTo) (w, h)
+              else (math.max(1, w * resizeTo / maxDim), math.max(1, h * resizeTo / maxDim))
+            var rsSum = 0L
+            var ry = 0
+            while (ry < rh) {
+              var rx = 0
+              while (rx < rw) { rsSum += lumaAt(img, rx * w / rw, ry * h / rh); rx += 1 }
+              ry += 1
+            }
+            Row(id, true, w.toLong, h.toLong, sum, hist.toSeq, rw.toLong, rh.toLong, rsSum)
+          } else Row(id, true, w.toLong, h.toLong, sum, hist.toSeq)
+      })
+    }
   }
 
   private val phashSchema = StructType(Seq(
@@ -250,51 +320,38 @@ object Multimodal {
     * small-positive in any engine — a single 64-bit hash with bit 63 set
     * would overflow differently under SQL HUGEINT promotion.
     *
-    * Scale shape: one decode + 64 samples per blob inside the batched
-    * mapPartitions scan — no shuffle; only (id, ok, two longs) move on.
+    * Scale shape: one decode + 64 samples per blob inside the per-blob
+    * scan — no shuffle; only (id, ok, two longs) move on.
     * Near-identical images (rescaled, re-encoded, lightly edited) land
     * within a few bits of hamming distance; [[imageNearDupPairs]] turns
     * that into a banded pair join.
     */
-  def perceptualHash(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val input = media.select(col("media_id"), col("blob"))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val img =
-            if (bytes == null || bytes.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-              catch { case _: java.io.IOException => null }
-          val id = r.getLong(0)
-          if (img == null) Row(id, false, null, null)
-          else {
-            val w = img.getWidth; val h = img.getHeight
-            val g = new Array[Int](64)
-            var k = 0
-            var sum = 0L
-            while (k < 64) {
-              val rx = k % 8; val ry = k / 8
-              g(k) = lumaAt(img, rx * w / 8, ry * h / 8)
-              sum += g(k)
-              k += 1
-            }
-            var lo = 0L; var hi = 0L
-            k = 0
-            while (k < 64) {
-              if (g(k).toLong * 64L > sum) {
-                if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
-              }
-              k += 1
-            }
-            Row(id, true, hi, lo)
+  def perceptualHash(media: DataFrame): DataFrame =
+    perBlob(media, phashSchema) { (id, bytes) =>
+      Iterator.single(readImage(bytes) match {
+        case None => notOk(id, phashSchema)
+        case Some(img) =>
+          val w = img.getWidth; val h = img.getHeight
+          val g = new Array[Int](64)
+          var k = 0
+          var sum = 0L
+          while (k < 64) {
+            val rx = k % 8; val ry = k / 8
+            g(k) = lumaAt(img, rx * w / 8, ry * h / 8)
+            sum += g(k)
+            k += 1
           }
-        }
-      }
-    }(RowEncoder.encoderFor(phashSchema))
-  }
+          var lo = 0L; var hi = 0L
+          k = 0
+          while (k < 64) {
+            if (g(k).toLong * 64L > sum) {
+              if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
+            }
+            k += 1
+          }
+          Row(id, true, hi, lo)
+      })
+    }
 
   /** Near-duplicate image pairs by hamming distance over [[perceptualHash]]
     * output: the 64 hash bits split into four 16-bit band keys, candidate
@@ -356,35 +413,23 @@ object Multimodal {
   def audioSample(id: Long, i: Int): Int =
     (Math.floorMod(id * 31L + i * 7L, 65536L) - 32768L).toInt
 
-  private val wavSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("blob", BinaryType, nullable = false),
-    StructField("mime", StringType, nullable = false)))
-
   /** Deterministic REAL-WAV column: one PCM16 clip per row, built from
     * [[audioSample]] and containerized by `javax.sound.sampled`'s WAVE
     * writer (PCM is lossless, so decode returns the exact samples).
     */
-  def wavFixtures(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val input = docs.select(col(idCol).cast(LongType).as("media_id"))
-    input.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val frames = audioFrames(id); val ch = audioChannels(id); val rate = audioRate(id)
-        val raw = java.nio.ByteBuffer.allocate(frames * ch * 2)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        var i = 0
-        while (i < frames * ch) { raw.putShort(audioSample(id, i).toShort); i += 1 }
-        val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, ch, true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(raw.array()), fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        Row(id, bos.toByteArray, "audio/wav")
-      }
-    }(RowEncoder.encoderFor(wavSchema))
-  }
+  def wavFixtures(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    fixtures(docs.select(col(idCol).cast(LongType).as("media_id")), "audio/wav") { id =>
+      val frames = audioFrames(id); val ch = audioChannels(id); val rate = audioRate(id)
+      val raw = java.nio.ByteBuffer.allocate(frames * ch * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      var i = 0
+      while (i < frames * ch) { raw.putShort(audioSample(id, i).toShort); i += 1 }
+      val fmt = new AudioFormat(rate.toFloat, 16, ch, true, false)
+      val ais = new AudioInputStream(new ByteArrayInputStream(raw.array()), fmt, frames.toLong)
+      val bos = new ByteArrayOutputStream()
+      AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
+    }
 
   private val audioSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -394,52 +439,22 @@ object Multimodal {
     StructField("sample_rate", LongType, nullable = true),
     StructField("sample_sum", LongType, nullable = true)))
 
-  /** REAL audio decode in the batched mapPartitions shape:
-    * `AudioSystem.getAudioInputStream` parses the container, and the
-    * integer sample sum comes from the decoded little-endian PCM16
-    * stream. Non-audio/unsupported blobs emit `ok = false` rather than
-    * failing the task. Scan-stage; only the scalar results move.
+  /** REAL audio decode, one blob at a time: [[readPcm16]] parses the
+    * container, and the integer sample sum comes from the decoded
+    * little-endian PCM16 stream. Non-audio/unsupported blobs emit
+    * `ok = false` rather than failing the task. Scan-stage; only the
+    * scalar results move.
     */
-  def decodeAudio(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val input = media.select(col("media_id"), col("blob"))
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val decoded =
-            if (bytes == null || bytes.isEmpty) None
-            else
-              try {
-                val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                  new java.io.ByteArrayInputStream(bytes))
-                val fmt = ais.getFormat
-                val pcm16le = fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-                  fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian
-                if (!pcm16le) None
-                else {
-                  val frames = ais.getFrameLength
-                  val data = ais.readAllBytes()
-                  var sum = 0L
-                  var i = 0
-                  while (i + 1 < data.length) {
-                    sum += ((data(i) & 0xFF) | (data(i + 1) << 8)).toShort
-                    i += 2
-                  }
-                  Some((frames, fmt.getChannels.toLong, fmt.getSampleRate.toLong, sum))
-                }
-              } catch {
-                case _: javax.sound.sampled.UnsupportedAudioFileException => None
-                case _: java.io.IOException => None
-              }
-          decoded match {
-            case Some((frames, ch, rate, sum)) => Row(id, true, frames, ch, rate, sum)
-            case None => Row(id, false, null, null, null, null)
-          }
-        }
-      }
-    }(RowEncoder.encoderFor(audioSchema))
-  }
+  def decodeAudio(media: DataFrame): DataFrame =
+    perBlob(media, audioSchema) { (id, bytes) =>
+      Iterator.single(readPcm16(bytes) match {
+        case None => notOk(id, audioSchema)
+        case Some(p) =>
+          var sum = 0L
+          p.samples.foreach(s => sum += s)
+          Row(id, true, p.frames, p.format.getChannels.toLong, p.format.getSampleRate.toLong, sum)
+      })
+    }
 
   /** LAION-style image admission policy over the REAL decoded
     * dimensions: keep iff both edges ≥ `minEdge` and the aspect ratio
@@ -447,12 +462,11 @@ object Multimodal {
     * integer cross-compare `long ≤ maxAspect · short`, so no float ratio
     * exists. Corrupt/undecodable blobs (ok = false) are kept in the
     * output with keep = false (never a silent drop — the audit row).
-    * Same batched-decode scan as [[decodeImages]]; zero shuffle.
+    * Same decode scan as [[decodeImages]]; zero shuffle.
     */
-  def imageSizeFilter(media: DataFrame, minEdge: Long = 6L, maxAspect: Long = 2L,
-                      batchSize: Int = 64): DataFrame = {
+  def imageSizeFilter(media: DataFrame, minEdge: Long = 6L, maxAspect: Long = 2L): DataFrame = {
     require(minEdge > 0 && maxAspect > 0, "minEdge and maxAspect must be positive")
-    decodeImages(media, batchSize)
+    decodeImages(media)
       .select(col("media_id"), col("ok"), col("width"), col("height"))
       .withColumn("keep", col("ok") &&
         least(col("width"), col("height")) >= minEdge &&
@@ -471,55 +485,25 @@ object Multimodal {
     * samples at or beyond `threshold` absolute amplitude plus the peak —
     * the distortion-QA row of audio curation (a clip recorded too hot is
     * useless to a speech model no matter what the VAD says). Same
-    * batched decode scan as [[decodeAudio]]; only four scalars per clip
+    * decode scan as [[decodeAudio]]; only four scalars per clip
     * move on. Undecodable blobs keep an ok = false audit row.
     */
-  def audioClipping(media: DataFrame, threshold: Long = 32000L,
-                    batchSize: Int = 64): DataFrame = {
+  def audioClipping(media: DataFrame, threshold: Long = 32000L): DataFrame = {
     require(threshold > 0 && threshold <= 32768L, "threshold must be in (0, 32768]")
-    val input = media.select(col("media_id"), col("blob"))
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val decoded =
-            if (bytes == null || bytes.isEmpty) None
-            else
-              try {
-                val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                  new java.io.ByteArrayInputStream(bytes))
-                val fmt = ais.getFormat
-                val pcm16le = fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-                  fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian
-                if (!pcm16le) None
-                else {
-                  val data = ais.readAllBytes()
-                  var n = 0L; var nClip = 0L; var peak = 0L
-                  var i = 0
-                  while (i + 1 < data.length) {
-                    val s = ((data(i) & 0xFF) | (data(i + 1) << 8)).toShort.toLong
-                    val a = math.abs(s)
-                    if (a >= threshold) nClip += 1
-                    if (a > peak) peak = a
-                    n += 1
-                    i += 2
-                  }
-                  Some((n, nClip, peak))
-                }
-              } catch {
-                case _: javax.sound.sampled.UnsupportedAudioFileException => None
-                case _: java.io.IOException => None
-              }
-          decoded match {
-            case Some((n, c, p)) => Row(id, true, n, c, p)
-            case None => Row(id, false, null, null, null)
+    perBlob(media, clipSchema) { (id, bytes) =>
+      Iterator.single(readPcm16(bytes) match {
+        case None => notOk(id, clipSchema)
+        case Some(p) =>
+          var nClip = 0L; var peak = 0L
+          p.samples.foreach { s =>
+            val a = math.abs(s.toLong)
+            if (a >= threshold) nClip += 1
+            if (a > peak) peak = a
           }
-        }
-      }
-    }(RowEncoder.encoderFor(clipSchema))
-      .withColumn("clipped_share",
-        col("n_clipped").cast("double") / col("n_samples").cast("double"))
+          Row(id, true, p.samples.length.toLong, nClip, peak)
+      })
+    }.withColumn("clipped_share",
+      col("n_clipped").cast("double") / col("n_samples").cast("double"))
   }
 
   private val energySchema = StructType(Seq(
@@ -536,58 +520,29 @@ object Multimodal {
     * `energy · 1 < thresholdMeanSquare · n` — the float mean-square
     * never exists. This is the VAD-ish front of audio curation: clips
     * that are mostly silence are cut before feature extraction.
-    * Scan-stage mapPartitions like [[decodeAudio]]; only window scalars
-    * move. Undecodable blobs are dropped (audit via decodeAudio's
-    * ok=false surface).
+    * Scan-stage like [[decodeAudio]]; only window scalars move.
+    * Undecodable blobs are dropped (audit via decodeAudio's ok=false
+    * surface).
     */
   def audioEnergyWindows(media: DataFrame, windowSamples: Int = 128,
-                         thresholdMeanSquare: Long = 100000000L,
-                         batchSize: Int = 64): DataFrame = {
+                         thresholdMeanSquare: Long = 100000000L): DataFrame = {
     require(windowSamples > 0, "windowSamples must be positive")
-    val input = media.select(col("media_id"), col("blob"))
-    val windows = input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          if (bytes == null || bytes.isEmpty) Nil
-          else
-            try {
-              val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bytes))
-              val fmt = ais.getFormat
-              val pcm16le = fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-                fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian
-              if (!pcm16le) Nil
-              else {
-                val data = ais.readAllBytes()
-                val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-                var widx = 0L
-                var n = 0L
-                var energy = 0L
-                var i = 0
-                while (i + 1 < data.length) {
-                  val s = ((data(i) & 0xFF) | (data(i + 1) << 8)).toShort.toLong
-                  energy += s * s
-                  n += 1
-                  if (n == windowSamples) {
-                    out += Row(id, widx, n, energy)
-                    widx += 1; n = 0L; energy = 0L
-                  }
-                  i += 2
-                }
-                if (n > 0) out += Row(id, widx, n, energy)
-                out.toSeq
-              }
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => Nil
-              case _: java.io.IOException => Nil
-            }
+    perBlob(media, energySchema) { (id, bytes) =>
+      readPcm16(bytes).iterator.flatMap { p =>
+        val n = p.samples.length
+        Iterator.range(0, n, windowSamples).map { start =>
+          val end = math.min(start + windowSamples, n)
+          var energy = 0L
+          var i = start
+          while (i < end) {
+            val s = p.samples(i).toLong
+            energy += s * s
+            i += 1
+          }
+          Row(id, (start / windowSamples).toLong, (end - start).toLong, energy)
         }
       }
-    }(RowEncoder.encoderFor(energySchema))
-    windows.withColumn("silent",
-      col("energy_q") < col("n_samples") * thresholdMeanSquare)
+    }.withColumn("silent", col("energy_q") < col("n_samples") * thresholdMeanSquare)
   }
 
   // ---------------- real frame sampling (animated GIF, javax.imageio) ----------------
@@ -609,42 +564,25 @@ object Multimodal {
     * sampler decodes — real container bytes through a real codec, with
     * SQL-predictable frame content.
     */
-  def gifFixtures(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val input = docs.select(col(idCol).cast(LongType).as("media_id"))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val w = fixtureWidth(id); val h = fixtureHeight(id); val n = gifFrames(id)
-        val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        // interlacing OFF: the JDK GIF writer scrambles row order on
-        // small heights when left in its default progressive mode
-        val param = writer.getDefaultWriteParam
-        param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DISABLED)
-        var f = 0
-        while (f < n) {
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { raster.setSample(x, y, 0, gifPixel(id, f, x, y)); x += 1 }
-            y += 1
-          }
-          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), param)
-          f += 1
-        }
-        writer.endWriteSequence()
-        ios.close()
-        writer.dispose()
-        Row(id, bos.toByteArray, "image/gif")
-      }
-    }(RowEncoder.encoderFor(pngSchema))
-  }
+  def gifFixtures(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    fixtures(docs.select(col(idCol).cast(LongType).as("media_id")), "image/gif") { id =>
+      val w = fixtureWidth(id); val h = fixtureHeight(id)
+      val writer = ImageIO.getImageWritersByFormatName("gif").next()
+      val bos = new ByteArrayOutputStream()
+      val ios = ImageIO.createImageOutputStream(bos)
+      writer.setOutput(ios)
+      writer.prepareWriteSequence(null)
+      // interlacing OFF: the JDK GIF writer scrambles row order on
+      // small heights when left in its default progressive mode
+      val param = writer.getDefaultWriteParam
+      param.setProgressiveMode(ImageWriteParam.MODE_DISABLED)
+      for (f <- 0 until gifFrames(id))
+        writer.writeToSequence(new IIOImage(grayImage(w, h)(gifPixel(id, f, _, _)), null, null), param)
+      writer.endWriteSequence()
+      ios.close()
+      writer.dispose()
+      bos.toByteArray
+    }
 
   private val frameSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -655,66 +593,47 @@ object Multimodal {
     StructField("height", LongType, nullable = true),
     StructField("pixel_sum", LongType, nullable = true)))
 
-  /** Integer luma via getRGB + ITU-R 601 weighting — exact for gray
-    * content (r=g=b=v ⇒ (299+587+114)·v/1000 = v) regardless of whether
-    * the decoder hands back an indexed or component raster, which is
-    * what GIF's palette model requires.
-    */
-  private def lumaRgbAt(img: java.awt.image.BufferedImage, x: Int, y: Int): Int = {
-    val rgb = img.getRGB(x, y)
-    (((rgb >> 16) & 0xFF) * 299 + (((rgb >> 8) & 0xFF)) * 587 + ((rgb & 0xFF)) * 114) / 1000
-  }
-
   /** REAL frame sampling over multi-frame containers: an `ImageReader`
     * parses the stream once, `getNumImages` counts frames, and every
     * k-th frame decodes to dimensions + integer luma sum — one output
     * row per SAMPLED frame (the explode happens here, so only sampled
     * frames ever materialize). Undecodable blobs emit a single
-    * `ok = false` row instead of failing the task. Batched mapPartitions
-    * like the other decoders; works for any multi-frame format the JDK
-    * has a reader for (GIF ships; TIFF too on JDK 9+).
+    * `ok = false` row instead of failing the task. The same per-blob
+    * scan as the other decoders; works for any multi-frame format the
+    * JDK has a reader for (GIF ships; TIFF too on JDK 9+).
     */
-  def decodeFrames(media: DataFrame, everyK: Int = 2, batchSize: Int = 64): DataFrame = {
+  def decodeFrames(media: DataFrame, everyK: Int = 2): DataFrame = {
     require(everyK > 0, "decodeFrames: everyK must be positive")
-    val input = media.select(col("media_id"), col("blob"))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val out: Seq[Row] =
-            if (bytes == null || bytes.isEmpty) Nil
-            else
+    perBlob(media, frameSchema) { (id, bytes) =>
+      val out: Seq[Row] =
+        if (bytes == null || bytes.isEmpty) Nil
+        else
+          try {
+            val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+            val readers = ImageIO.getImageReaders(iis)
+            if (!readers.hasNext) Nil
+            else {
+              val reader = readers.next()
               try {
-                val iis = javax.imageio.ImageIO.createImageInputStream(
-                  new java.io.ByteArrayInputStream(bytes))
-                val readers = javax.imageio.ImageIO.getImageReaders(iis)
-                if (!readers.hasNext) Nil
-                else {
-                  val reader = readers.next()
-                  try {
-                    reader.setInput(iis)
-                    val n = reader.getNumImages(true)
-                    (0 until n by everyK).map { f =>
-                      val img = reader.read(f)
-                      val w = img.getWidth; val h = img.getHeight
-                      var sum = 0L
-                      var y = 0
-                      while (y < h) {
-                        var x = 0
-                        while (x < w) { sum += lumaRgbAt(img, x, y); x += 1 }
-                        y += 1
-                      }
-                      Row(id, true, n.toLong, f.toLong, w.toLong, h.toLong, sum)
-                    }
-                  } finally reader.dispose()
+                reader.setInput(iis)
+                val n = reader.getNumImages(true)
+                (0 until n by everyK).map { f =>
+                  val img = reader.read(f)
+                  val w = img.getWidth; val h = img.getHeight
+                  var sum = 0L
+                  var y = 0
+                  while (y < h) {
+                    var x = 0
+                    while (x < w) { sum += lumaRgbAt(img, x, y); x += 1 }
+                    y += 1
+                  }
+                  Row(id, true, n.toLong, f.toLong, w.toLong, h.toLong, sum)
                 }
-              } catch { case _: java.io.IOException => Nil }
-          if (out.isEmpty) Seq(Row(id, false, null, null, null, null, null)) else out
-        }
-      }
-    }(RowEncoder.encoderFor(frameSchema))
+              } finally reader.dispose()
+            }
+          } catch { case _: IOException => Nil }
+      if (out.isEmpty) Seq(notOk(id, frameSchema)) else out
+    }
   }
 
   /** Keyframe selection over the decoded animation: keep frame 0 and

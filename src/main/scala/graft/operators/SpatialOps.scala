@@ -1070,9 +1070,7 @@ object SpatialOps {
     *         degree ≥ 2 nodes, local_cc = 2T/(d(d−1))
     */
   def colocationClustering(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("user_a").as("u"), col("user_b").as("v"))
-    val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).cast("long").as("d"))
+    val (e, deg) = edgesAndDegrees(pairs)
     val tri = orientedTriangles(e, deg)
     val perNode = tri
       .select(explode(array(col("x"), col("y"), col("z"))).as("n"))
@@ -1090,9 +1088,7 @@ object SpatialOps {
     * (wedges = Σ C(d, 2), exact).
     */
   def colocationTransitivity(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("user_a").as("u"), col("user_b").as("v"))
-    val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).cast("long").as("d"))
+    val (e, deg) = edgesAndDegrees(pairs)
     val tri = orientedTriangles(e, deg).agg(count(lit(1)).cast("long").as("n_triangles"))
     val stats = deg.agg(count(lit(1)).cast("long").as("n_nodes"),
       expr("sum(d) div 2").cast("long").as("n_edges"),
@@ -1102,6 +1098,14 @@ object SpatialOps {
         when(col("n_wedges") > 0,
           lit(3.0) * col("n_triangles").cast("double") / col("n_wedges").cast("double"))
           .otherwise(lit(0.0)).as("global_cc"))
+  }
+
+  /** The contact graph's edges `(u, v)` and each node's degree `(n, d)`. */
+  private def edgesAndDegrees(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val e = pairs.select(col("user_a").as("u"), col("user_b").as("v"))
+    val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).cast("long").as("d"))
+    (e, deg)
   }
 
   /** Each triangle exactly once as (x, y, z) ascending in the

@@ -154,10 +154,12 @@ object StaypointGenerator {
 
   /** Wrap-aware centroid over *unique* coordinates, sorted like
     * np.unique for bit-parity with the reference
-    * (_centroid_from_coordinates, positionfixes.py:549-557).
+    * (_centroid_from_coordinates, positionfixes.py:549-557). The
+    * streaming detector shares it with `planar = false`.
     */
-  private def centroid(lons: ArrayBuffer[Double], lats: ArrayBuffer[Double], planar: Boolean): (Double, Double) = {
-    val uniq = lons.indices.map(i => (lons(i), lats(i))).distinct.sorted
+  private[graft] def centroid(lons: collection.Seq[Double], lats: collection.Seq[Double],
+                              planar: Boolean): (Double, Double) = {
+    val uniq = lons.zip(lats).distinct.sorted
     val m = uniq.length.toDouble
     if (planar) {
       // projected CRS: plain mean (positionfixes.py:551-552)

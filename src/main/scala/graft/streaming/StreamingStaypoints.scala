@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.GeoFunctions
+import graft.operators.StaypointGenerator
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -67,19 +68,8 @@ object StreamingStaypoints {
         (userId: Long, batch: Iterator[Fix], state: GroupState[Candidate]) => {
           val out = scala.collection.mutable.ArrayBuffer.empty[Staypoint]
 
-          def centroid(c: Candidate): (Double, Double) = {
-            val uniq = c.lons.zip(c.lats).distinct.sorted
-            var sSin = 0.0; var sCos = 0.0; var sLat = 0.0
-            uniq.foreach { case (lo, la) =>
-              val lr = math.toRadians(lo)
-              sSin += math.sin(lr); sCos += math.cos(lr); sLat += la
-            }
-            val m = uniq.length.toDouble
-            (math.toDegrees(math.atan2(sSin / m, sCos / m)), sLat / m)
-          }
-
           def emit(c: Candidate, finishedTs: Long): Unit = {
-            val (cl, cla) = centroid(c)
+            val (cl, cla) = StaypointGenerator.centroid(c.lons, c.lats, planar = false)
             out += Staypoint(userId, c.anchorTs, finishedTs, cl, cla, c.ids.length)
           }
 

@@ -271,24 +271,22 @@ object syntax {
     */
   implicit final class RichMedia(private val df: DataFrame) extends AnyVal {
 
-    /** Batched byte-level feature extraction (modality-agnostic). */
-    def extractBlobFeatures(batchSize: Int = 64): DataFrame =
-      Multimodal.extractFeatures(df, batchSize)
+    /** Byte-level feature extraction (modality-agnostic), one blob at a
+      * time.
+      */
+    def extractBlobFeatures(): DataFrame = Multimodal.extractFeatures(df)
 
     /** Real image decode (+ optional nearest-neighbor resize) via the
       * JDK's javax.imageio.
       */
-    def decodeImages(resizeTo: Int = 0, batchSize: Int = 64): DataFrame =
-      Multimodal.decodeImages(df, batchSize, resizeTo)
+    def decodeImages(resizeTo: Int = 0): DataFrame = Multimodal.decodeImages(df, resizeTo)
 
     /** Real PCM/WAV audio decode via the JDK's javax.sound.sampled. */
-    def decodeAudio(batchSize: Int = 64): DataFrame =
-      Multimodal.decodeAudio(df, batchSize)
+    def decodeAudio(): DataFrame = Multimodal.decodeAudio(df)
 
     /** Real every-kth frame sampling over multi-frame containers (GIF)
       * via the JDK's javax.imageio sequence reader.
       */
-    def sampleDecodedFrames(everyK: Int = 2, batchSize: Int = 64): DataFrame =
-      Multimodal.decodeFrames(df, everyK, batchSize)
+    def sampleDecodedFrames(everyK: Int = 2): DataFrame = Multimodal.decodeFrames(df, everyK)
   }
 }

@@ -279,7 +279,7 @@ class TrainingDataSpec extends SparkSpec {
   test("multimodal: media table schema + batched stub feature extraction") {
     val media = Multimodal.asMediaTable(docs)
     assert(media.schema("blob").dataType == org.apache.spark.sql.types.BinaryType)
-    val feats = Multimodal.extractFeatures(media, batchSize = 2).collect()
+    val feats = Multimodal.extractFeatures(media).collect()
     assert(feats.length == 5)
     val f0 = feats.find(_.getLong(0) == 0L).get
     val f3 = feats.find(_.getLong(0) == 3L).get
@@ -296,7 +296,7 @@ class TrainingDataSpec extends SparkSpec {
     // the blobs are real PNGs (magic bytes)
     val blob0 = media.filter(col("media_id") === 0L).select("blob").collect().head.getAs[Array[Byte]](0)
     assert(blob0.take(8).toSeq == Seq(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte))
-    val dec = Multimodal.decodeImages(media, batchSize = 2).collect()
+    val dec = Multimodal.decodeImages(media).collect()
       .map(r => r.getLong(0) -> r).toMap
     for (id <- 0L to 4L) {
       val r = dec(id)
@@ -329,7 +329,7 @@ class TrainingDataSpec extends SparkSpec {
     // the blobs are real RIFF/WAVE containers
     val blob0 = media.filter(col("media_id") === 0L).select("blob").collect().head.getAs[Array[Byte]](0)
     assert(new String(blob0.take(4)) == "RIFF" && new String(blob0.slice(8, 12)) == "WAVE")
-    val dec = Multimodal.decodeAudio(media, batchSize = 2).collect().map(r => r.getLong(0) -> r).toMap
+    val dec = Multimodal.decodeAudio(media).collect().map(r => r.getLong(0) -> r).toMap
     for (id <- 0L to 4L) {
       val r = dec(id)
       assert(r.getAs[Boolean]("ok"))
@@ -351,7 +351,7 @@ class TrainingDataSpec extends SparkSpec {
     // the blobs are real GIF containers
     val blob0 = media.filter(col("media_id") === 0L).select("blob").collect().head.getAs[Array[Byte]](0)
     assert(new String(blob0.take(6)) == "GIF89a" || new String(blob0.take(6)) == "GIF87a")
-    val dec = Multimodal.decodeFrames(media, everyK = 2, batchSize = 2).collect()
+    val dec = Multimodal.decodeFrames(media, everyK = 2).collect()
       .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.sortBy(_.getAs[Long]("frame_idx")) }
     for (id <- 0L to 4L) {
       val n = Multimodal.gifFrames(id)
