@@ -60,14 +60,10 @@ object Multimodal {
 
   /** The one scan of this object: each row of `input` goes through `f`
     * in partition order, and the rows `f` returns are encoded with
-    * `schema`. ImageIO's disk cache is switched off first — the blobs
-    * are in memory already.
+    * `schema`.
     */
   private def scan(input: DataFrame, schema: StructType)(f: Row => IterableOnce[Row]): DataFrame =
-    input.mapPartitions { rows =>
-      ImageIO.setUseCache(false)
-      rows.flatMap(f)
-    }(RowEncoder.encoderFor(schema))
+    input.mapPartitions(_.flatMap(f))(RowEncoder.encoderFor(schema))
 
   /** Every decoder's pass: `f(media_id, blob)` per media row, `blob`
     * null for a null blob.
@@ -111,12 +107,18 @@ object Multimodal {
 
   /** One blob decoded by javax.imageio: None for a null or empty blob,
     * a blob no installed reader takes, or one its reader fails on.
+    *
+    * Every javax.imageio use here first switches ImageIO's disk cache
+    * off (the streams are in memory already); it is not done in [[scan]],
+    * so the audio and byte passes never load javax.imageio.
     */
   private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
     if (bytes == null || bytes.isEmpty) None
     else
-      try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
-      catch { case _: IOException => None }
+      try {
+        ImageIO.setUseCache(false)
+        Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+      } catch { case _: IOException => None }
 
   /** One decoded PCM16 clip: the container's frame count and format, and
     * the interleaved samples.
@@ -216,6 +218,7 @@ object Multimodal {
     fixtures(docs.select(col(idCol).cast(LongType).as("media_id"), cid.cast(LongType).as("_cid")),
       "image/png") { id =>
       val bos = new ByteArrayOutputStream()
+      ImageIO.setUseCache(false)
       ImageIO.write(grayImage(fixtureWidth(id), fixtureHeight(id))(fixturePixel(id, _, _)), "png", bos)
       bos.toByteArray
     }
@@ -567,6 +570,7 @@ object Multimodal {
   def gifFixtures(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
     fixtures(docs.select(col(idCol).cast(LongType).as("media_id")), "image/gif") { id =>
       val w = fixtureWidth(id); val h = fixtureHeight(id)
+      ImageIO.setUseCache(false)
       val writer = ImageIO.getImageWritersByFormatName("gif").next()
       val bos = new ByteArrayOutputStream()
       val ios = ImageIO.createImageOutputStream(bos)
@@ -609,6 +613,7 @@ object Multimodal {
         if (bytes == null || bytes.isEmpty) Nil
         else
           try {
+            ImageIO.setUseCache(false)
             val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
             val readers = ImageIO.getImageReaders(iis)
             if (!readers.hasNext) Nil
