@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
 
 /** Every decoder's observable contract over ONE mixed media table.
   *
-  * Seven blob kinds — a real PNG, a real animated GIF, a real PCM16 WAV,
-  * a null blob, an empty blob, junk bytes and an 8-bit PCM WAV (a
-  * container the audio path reads but must refuse) — cycle through
+  * Nine blob kinds — a real PNG, a real animated GIF, a real PCM16 WAV,
+  * a null blob, an empty blob, junk bytes, and three PCM clips the
+  * audio path parses but must refuse (an unsigned 8-bit WAV, a signed
+  * 24-bit WAV, a big-endian 16-bit AIFF) — cycle through
   * 150 rows in two partitions of 75, so each decoder sees every other
   * modality's blobs, several rows per partition and more than 64 rows
   * in one partition. Each case pins the decoder's schema (names, types,
@@ -18,21 +19,24 @@ import org.apache.spark.sql.types._
 class DecoderContractSpec extends SparkSpec {
   import spark.implicits._
 
-  private val kinds = Seq("png", "gif", "wav", "null", "empty", "junk", "pcm8")
+  private val kinds = Seq("png", "gif", "wav", "null", "empty", "junk", "pcm8", "pcm24", "aiff16")
   private val ids = 0L until 150L
   private def kind(id: Long): String = kinds((id % kinds.length).toInt)
 
   private lazy val blobs: Map[String, Array[Byte]] = {
     def first(df: DataFrame) = df.select("blob").head().getAs[Array[Byte]](0)
-    val pcm8 = {
+    /** 64 bytes of PCM in `bits`-bit samples, in a WAVE or AIFF container. */
+    def pcm(bits: Int, signed: Boolean, bigEndian: Boolean,
+            container: javax.sound.sampled.AudioFileFormat.Type): Array[Byte] = {
       val raw = Array.tabulate[Byte](64)(i => (i * 5).toByte)
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1, false, false)
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, bits, 1, signed, bigEndian)
       val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(raw), fmt, raw.length.toLong)
+        new java.io.ByteArrayInputStream(raw), fmt, (raw.length / (bits / 8)).toLong)
       val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      javax.sound.sampled.AudioSystem.write(ais, container, bos)
       bos.toByteArray
     }
+    val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
     Map(
       "png" -> first(Multimodal.pngFixtures(Seq(1L).toDF("doc_id"))),
       "gif" -> first(Multimodal.gifFixtures(Seq(2L).toDF("doc_id"))),
@@ -40,7 +44,9 @@ class DecoderContractSpec extends SparkSpec {
       "null" -> null,
       "empty" -> Array.empty[Byte],
       "junk" -> "not a media container, just bytes".getBytes("UTF-8"),
-      "pcm8" -> pcm8)
+      "pcm8" -> pcm(8, signed = false, bigEndian = false, wave),
+      "pcm24" -> pcm(24, signed = true, bigEndian = false, wave),
+      "aiff16" -> pcm(16, signed = true, bigEndian = true, javax.sound.sampled.AudioFileFormat.Type.AIFF))
   }
 
   private lazy val media: DataFrame = spark.createDataFrame(
@@ -78,7 +84,8 @@ class DecoderContractSpec extends SparkSpec {
     val got = (if (sortBy == null) rows else rows.sortBy(sortBy)).map(r => s"${r.getLong(0)}|${tail(r)}")
     val want = ids.flatMap(id => perKind(kind(id)).map(t => s"$id|$t"))
     val firstDiff = got.zip(want).indexWhere { case (g, w) => g != w }
-    assert(got.length == want.length && firstDiff < 0,
+    val same = got.length == want.length && firstDiff < 0
+    assert(same,
       s"${got.length} rows vs ${want.length} pinned; first difference at $firstDiff: " +
         (if (firstDiff >= 0) s"${got(firstDiff)} vs ${want(firstDiff)}" else ""))
   }
@@ -93,7 +100,9 @@ class DecoderContractSpec extends SparkSpec {
         "null" -> Seq("0,0,[0.0 0.0 0.0 0.0 0.0 0.0 0.0 0.0]"),
         "empty" -> Seq("0,0,[0.0 0.0 0.0 0.0 0.0 0.0 0.0 0.0]"),
         "junk" -> Seq("33,486425941,[2.1137254 1.7098039 1.7215686 0.77254903 1.6 1.2078432 1.4392157 1.6627451]"),
-        "pcm8" -> Seq("108,609387553,[4.243138 3.8313723 3.968628 4.027451 4.8274508 4.47451 4.6156864 4.364706]")))
+        "pcm8" -> Seq("108,609387553,[4.243138 3.8313723 3.968628 4.027451 4.8274508 4.47451 4.6156864 4.364706]"),
+        "pcm24" -> Seq("107,551297872,[4.2470593 3.8313723 4.031373 3.7960784 5.32549 4.7176476 4.6156864 4.364706]"),
+        "aiff16" -> Seq("118,939349901,[4.537255 4.8470592 3.6078432 3.8784313 3.839216 4.1215687 4.9960785 4.6039224]")))
   }
 
   private val bad5 = Seq("false,null,null,null,null")
@@ -106,7 +115,7 @@ class DecoderContractSpec extends SparkSpec {
         "png" -> Seq("true,5,5,1775,[1 8 12 4 0 0 0 0]"),
         "gif" -> Seq("true,6,6,4032,[0 1 9 15 10 1 0 0]"),
         "wav" -> bad5, "null" -> bad5, "empty" -> bad5, "junk" -> bad5,
-        "pcm8" -> bad5))
+        "pcm8" -> bad5, "pcm24" -> bad5, "aiff16" -> bad5))
     val bad8 = Seq("false,null,null,null,null,null,null,null")
     assertPinned(Multimodal.decodeImages(media, resizeTo = 8),
       Seq("media_id:bigint", "ok:boolean", "width:bigint?", "height:bigint?", "pixel_sum:bigint?",
@@ -114,7 +123,7 @@ class DecoderContractSpec extends SparkSpec {
       Map(
         "png" -> Seq("true,5,5,1775,[1 8 12 4 0 0 0 0],5,5,1775"),
         "gif" -> Seq("true,6,6,4032,[0 1 9 15 10 1 0 0],6,6,4032"),
-        "wav" -> bad8, "null" -> bad8, "empty" -> bad8, "junk" -> bad8, "pcm8" -> bad8))
+        "wav" -> bad8, "null" -> bad8, "empty" -> bad8, "junk" -> bad8, "pcm8" -> bad8, "pcm24" -> bad8, "aiff16" -> bad8))
   }
 
   test("perceptualHash and imageSizeFilter keep an ok = false row for every undecodable blob") {
@@ -124,7 +133,7 @@ class DecoderContractSpec extends SparkSpec {
       Map(
         "png" -> Seq("true,4294967280,2155872256"),
         "gif" -> Seq("true,4294966524,4034920448"),
-        "wav" -> bad, "null" -> bad, "empty" -> bad, "junk" -> bad, "pcm8" -> bad))
+        "wav" -> bad, "null" -> bad, "empty" -> bad, "junk" -> bad, "pcm8" -> bad, "pcm24" -> bad, "aiff16" -> bad))
     val dropped = Seq("false,null,null,false")
     assertPinned(Multimodal.imageSizeFilter(media, minEdge = 6L, maxAspect = 2L),
       Seq("media_id:bigint", "ok:boolean", "width:bigint?", "height:bigint?", "keep:boolean?"),
@@ -132,24 +141,24 @@ class DecoderContractSpec extends SparkSpec {
         "png" -> Seq("true,5,5,false"),
         "gif" -> Seq("true,6,6,true"),
         "wav" -> dropped, "null" -> dropped, "empty" -> dropped, "junk" -> dropped,
-        "pcm8" -> dropped))
+        "pcm8" -> dropped, "pcm24" -> dropped, "aiff16" -> dropped))
   }
 
-  test("decodeAudio and audioClipping: only the PCM16 WAV decodes; 8-bit PCM and the rest are ok = false rows") {
+  test("decodeAudio and audioClipping: only the PCM16 LE WAV decodes; 8-bit, 24-bit and big-endian PCM and the rest are ok = false rows") {
     assertPinned(Multimodal.decodeAudio(media),
       Seq("media_id:bigint", "ok:boolean", "n_frames:bigint?", "channels:bigint?", "sample_rate:bigint?",
         "sample_sum:bigint?"),
       Map(
         "wav" -> Seq("true,203,2,20000,-12690545"),
         "png" -> bad5, "gif" -> bad5, "null" -> bad5, "empty" -> bad5,
-        "junk" -> bad5, "pcm8" -> bad5))
+        "junk" -> bad5, "pcm8" -> bad5, "pcm24" -> bad5, "aiff16" -> bad5))
     assertPinned(Multimodal.audioClipping(media, threshold = 32000L),
       Seq("media_id:bigint", "ok:boolean", "n_samples:bigint?", "n_clipped:bigint?", "peak:bigint?",
         "clipped_share:double?"),
       Map(
         "wav" -> Seq("true,406,97,32675,0.23891625615763548"),
         "png" -> bad5, "gif" -> bad5, "null" -> bad5, "empty" -> bad5,
-        "junk" -> bad5, "pcm8" -> bad5))
+        "junk" -> bad5, "pcm8" -> bad5, "pcm24" -> bad5, "aiff16" -> bad5))
   }
 
   test("audioEnergyWindows drops every blob that is not PCM16") {
@@ -158,7 +167,7 @@ class DecoderContractSpec extends SparkSpec {
       Map(
         "wav" -> Seq("0,128,132975619520,false", "1,128,125685476800,false", "2,128,118600854976,false",
           "3,22,19686027999,false"),
-        "png" -> Nil, "gif" -> Nil, "null" -> Nil, "empty" -> Nil, "junk" -> Nil, "pcm8" -> Nil))
+        "png" -> Nil, "gif" -> Nil, "null" -> Nil, "empty" -> Nil, "junk" -> Nil, "pcm8" -> Nil, "pcm24" -> Nil, "aiff16" -> Nil))
   }
 
   test("decodeFrames: one row per sampled frame, one ok = false row per undecodable blob; keyframes over it") {
@@ -169,13 +178,13 @@ class DecoderContractSpec extends SparkSpec {
       Map(
         "png" -> Seq("true,1,0,5,5,3553"),
         "gif" -> Seq("true,4,0,6,6,4032", "true,4,2,6,6,5256"),
-        "wav" -> bad, "null" -> bad, "empty" -> bad, "junk" -> bad, "pcm8" -> bad))
+        "wav" -> bad, "null" -> bad, "empty" -> bad, "junk" -> bad, "pcm8" -> bad, "pcm24" -> bad, "aiff16" -> bad))
     assertPinned(Multimodal.keyframes(media, minLumaDelta = 200L),
       Seq("media_id:bigint", "n_frames:bigint?", "frame_idx:bigint?", "pixel_sum:bigint?", "luma_delta:bigint?"),
       Map(
         "png" -> Seq("1,0,3553,0"),
         "gif" -> Seq("4,0,4032,0", "4,1,4644,612", "4,2,5256,612", "4,3,5868,612"),
-        "wav" -> Nil, "null" -> Nil, "empty" -> Nil, "junk" -> Nil, "pcm8" -> Nil),
+        "wav" -> Nil, "null" -> Nil, "empty" -> Nil, "junk" -> Nil, "pcm8" -> Nil, "pcm24" -> Nil, "aiff16" -> Nil),
       sortBy = r => (r.getLong(0), r.getLong(2)))
   }
 
