@@ -548,5 +548,18 @@ class TrainingDataSpec extends SparkSpec {
     assert(out.getAs[Long]("n_points") == 8L)
     assert(math.abs(out.getAs[Double]("slope") - (-1.0)) < 0.02) // 1024/r rounds down
     assert(math.abs(out.getAs[Double]("intercept") - math.log(1024.0)) < 0.05)
+    // exact replay: rank by (count desc, word), n and the four sums from
+    // the quantized logs, slope and intercept as the same double trees
+    def lnq(x: Long) = math.floor(StrictMath.log(x.toDouble) * 1e6).toLong
+    val ranked = words.groupBy(identity).toSeq.map { case (w, ws) => (w, ws.size.toLong) }
+      .sortBy { case (w, n) => (-n, w) }
+    val pts = ranked.zipWithIndex.map { case ((_, n), i) => (lnq(i + 1L), lnq(n)) }
+    val (np, sx, sy) = (pts.length.toLong, pts.map(_._1).sum, pts.map(_._2).sum)
+    val sxy = pts.map(p => BigInt(p._1) * p._2).sum
+    val sxx = pts.map(p => BigInt(p._1) * p._1).sum
+    val slope = (BigInt(np) * sxy - BigInt(sx) * sy).toDouble / (BigInt(np) * sxx - BigInt(sx) * sx).toDouble
+    assert(out.getAs[Long]("n_points") == np)
+    assert(out.getAs[Double]("slope") == slope)
+    assert(out.getAs[Double]("intercept") == ((sy.toDouble - slope * sx.toDouble) / np.toDouble) / 1e6)
   }
 }
