@@ -104,7 +104,7 @@ private[graft] object CurationGates {
     Gate("curate_corpus") { (s, dir) =>
       CorpusOps.curate(s.read.parquet(s"$dir/documents.parquet"),
         targetWeights = Seq("en" -> 4L, "de" -> 1L, "fr" -> 1L, "es" -> 1L),
-        share = _.localCheckpoint(false))
+        share = Share.materialize)
     } {
       curateOracle(numHashes = 64, bands = 16, threshold = 0.5,
         tgtValues = "('en', CAST(4 AS BIGINT)), ('de', 1), ('fr', 1), ('es', 1)")

@@ -421,7 +421,7 @@ private[graft] object DedupGates {
     // ExactSubstr, document granularity; raw-string gram join, df-capped)
     Gate("dedup_substring") { (s, dir) =>
       Dedup.substringPairs(s.read.parquet(s"$dir/documents.parquet"),
-        minLen = 40, maxDf = 100, share = _.localCheckpoint(false))
+        minLen = 40, maxDf = 100, share = Share.materialize)
     } {
       // exact-substring pair detection: unnest every 40-char gram, dedup
       // per doc, df-cap [2, 100], raw-string gram self-join

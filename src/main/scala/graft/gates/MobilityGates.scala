@@ -628,7 +628,7 @@ private[graft] object MobilityGates {
     Gate("tours_gaps") { (s, dir) => // gap budget 1: tours may bridge one discontinuity
       val (_, tours) = TourGenerator.generate(Pipeline.trips(s, dir), None,
         TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0, maxNrGaps = 1),
-        share = _.localCheckpoint(false))
+        share = Share.materialize)
       tours.select(col("id"), col("user_id"),
         unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
         size(col("trips")).cast("long").as("n_trips"))
@@ -655,7 +655,7 @@ private[graft] object MobilityGates {
       val (_, tours) = TourGenerator.generate(
         Pipeline.trips(s, dir), Some(Pipeline.staypointsWithLocation(s, dir)),
         TourGenerator.Params(maxTimeDays = 30.0),
-        share = _.localCheckpoint(false))
+        share = Share.materialize)
       tours.select(col("id"), col("user_id"), col("location_id"),
         size(col("trips")).cast("long").as("n_trips"))
     } {

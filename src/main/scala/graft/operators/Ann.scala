@@ -412,10 +412,9 @@ object Ann {
     */
   def pqRecall(probes: DataFrame, corpus: DataFrame, dim: Int, m: Int,
                ksub: Int, iters: Int, k: Int = 5,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               share: DataFrame => DataFrame = Share.materialize): DataFrame =
+               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     pqRecall(probes, corpus,
-      pqTrain(corpus, dim, m, ksub, iters, idCol, vecCol, share = share), k, idCol, vecCol)
+      pqTrain(corpus, dim, m, ksub, iters, idCol, vecCol), k, idCol, vecCol)
 
   /** [[pqRecall]] against an already-trained index — the production
     * shape: the PQ codebooks are trained once per corpus snapshot and
@@ -590,24 +589,22 @@ object Ann {
     * subspace-keyed CTE chain).
     */
   def pqTrain(corpus: DataFrame, dim: Int, m: Int, ksub: Int, iters: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              share: DataFrame => DataFrame = Share.materialize): PqModel = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): PqModel = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m equal subspaces")
     val w = dim / m
     val q = corpus.select(col(idCol).as("_id"),
       array((0 until m).map(s =>
         KMeans.quantize(slice(col(vecCol), s * w + 1, w), 1e6)): _*).as("_qs"))
-    pqTrainCore(q, m, ksub, iters, w, share)
+    pqTrainCore(q, m, ksub, iters, w)
   }
 
   /** Core trainer over a prepared (_id, _qs: array<array<long>>) frame —
     * the residual-PQ path of [[ivfPqTrain]] feeds already-integer
     * residual slices here.
     */
-  private def pqTrainCore(q0: DataFrame, m: Int, ksub: Int, iters: Int, w: Int,
-                          share: DataFrame => DataFrame): PqModel = {
+  private def pqTrainCore(q0: DataFrame, m: Int, ksub: Int, iters: Int, w: Int): PqModel = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val q = share(q0)
+    val q = Share.materialize(q0)
 
     val seeds = q.orderBy(col("_id")).limit(ksub).collect()
     require(seeds.length == ksub, s"corpus has ${seeds.length} vectors, need >= ksub=$ksub")
@@ -713,15 +710,14 @@ object Ann {
     */
   def ivfPqTrain(corpus: DataFrame, dim: Int, nlist: Int, coarseIters: Int,
                  m: Int, ksub: Int, pqIters: Int,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 share: DataFrame => DataFrame = Share.materialize): IvfPqModel = {
+                 idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqModel = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m equal subspaces")
     val w = dim / m
-    val coarse = KMeans.fit(corpus, nlist, coarseIters, idCol, vecCol, share = share)
+    val coarse = KMeans.fit(corpus, nlist, coarseIters, idCol, vecCol)
     val r = residualCol(coarse, vecCol)
     val q = corpus.select(col(idCol).as("_id"),
       array((0 until m).map(s => slice(r, s * w + 1, w)): _*).as("_qs"))
-    IvfPqModel(coarse, pqTrainCore(q, m, ksub, pqIters, w, share))
+    IvfPqModel(coarse, pqTrainCore(q, m, ksub, pqIters, w))
   }
 
   /** ADC search over the composite index: probes visit their `nprobe`
@@ -732,21 +728,20 @@ object Ann {
     * makes 100 TB of vectors scannable.
     */
   /** The index build: (id, cell, m residual codes) per corpus vector.
-    * Two staged projections with the `share` hook between them: the
+    * Two staged projections with [[Share.materialize]] between them: the
     * coarse argmin runs once and materializes, then the m residual
     * argmins read the stored cell — without the barrier, CollapseProject
     * re-inlines the coarse assignment (and the residual subtraction)
     * into every per-subspace argmin, multiplying the interpreted
     * higher-order work ~m-fold. In production the coded corpus IS the
-    * index — built once, persisted, reused by every query — so the hook
-    * is the natural shape, not a workaround.
+    * index — built once, persisted, reused by every query — so the
+    * barrier is the natural shape, not a workaround.
     */
   def ivfPqEncode(corpus: DataFrame, model: IvfPqModel,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val m = model.pq.m; val w = model.pq.subWidth
     val centLit = typedLit(model.coarse.centroids.map(_.toSeq).toSeq)
-    val withCell = share(corpus.select(
+    val withCell = Share.materialize(corpus.select(
       col(idCol).as("neighbor_id"),
       KMeans.quantize(col(vecCol), 1e6).as("_q"))
       .withColumn("_cell", KMeans.nearest(model.coarse.centroids, col("_q"))))
@@ -758,12 +753,11 @@ object Ann {
 
   def ivfPqTopK(probes: DataFrame, corpus: DataFrame, model: IvfPqModel,
                 k: Int = 5, nprobe: Int = 4,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val m = model.pq.m; val w = model.pq.subWidth
     val centLit = typedLit(model.coarse.centroids.map(_.toSeq).toSeq)
 
-    val corpusCoded = ivfPqEncode(corpus, model, idCol, vecCol, share)
+    val corpusCoded = ivfPqEncode(corpus, model, idCol, vecCol)
 
     // probes: nprobe nearest cells by integer coarse distance (ties ->
     // lowest cell id), then the per-cell residual distance table

@@ -31,7 +31,7 @@ import graft.functions.PortableHash
   * as [[KMeans.fit]].
   *
   * Scale shape (mirrors [[KMeans.fit]]): the feature table materializes
-  * once via the `share` hook, partitioned by document; each iteration is
+  * once via [[Share.materialize]], partitioned by document; each iteration is
   * one broadcast join against the (dim+1)-row weight table + one
   * groupBy(doc) margin shuffle + one doc-keyed join back + one
   * map-side-combinable groupBy(bucket) whose ≤ dim+1 result rows collect
@@ -88,19 +88,16 @@ object Classifier {
     *                `floorDiv(G, stepDiv)` on the raw 1/(4S)-unit
     *                gradient G = Σ e·x; pick ≈ 4 × corpus size × a few,
     *                larger = smaller steps
-    * @param share   persistence hook for the feature table every
-    *                iteration re-reads
     * @return weights in 1/S units, index = bucket, last = bias
     */
   def fit(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
-          idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label",
-          share: DataFrame => DataFrame = Share.materialize): Array[Long] = {
+          idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label"): Array[Long] = {
     require(dim >= 1 && dim.toLong + 1 <= 100000000L,
       s"dim=$dim: driver holds dim+1 longs; keep dim <= 1e8")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(stepDiv >= 1, s"stepDiv must be >= 1, got $stepDiv")
 
-    val x = share(features(docs, dim, col(labelCol).cast(LongType), idCol, textCol))
+    val x = Share.materialize(features(docs, dim, col(labelCol).cast(LongType), idCol, textCol))
     val w = Array.fill(dim + 1)(0L)
 
     // weights as a PLAN LITERAL looked up per row (dim+1 longs —
@@ -174,10 +171,9 @@ object Classifier {
     */
   def calibration(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
                   buckets: Int = 8, idCol: String = "doc_id", textCol: String = "text",
-                  labelCol: String = "label",
-                  share: DataFrame => DataFrame = Share.materialize): DataFrame =
+                  labelCol: String = "label"): DataFrame =
     calibrationFromScored(
-      trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol, share),
+      trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol),
       docs, buckets, idCol, labelCol)
 
   /** [[calibration]] over an already-scored corpus — the production
@@ -218,9 +214,8 @@ object Classifier {
     * integers at the end.
     */
   def aucEval(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
-              idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label",
-              share: DataFrame => DataFrame = Share.materialize): DataFrame =
-    aucFromScored(trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol, share),
+              idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label"): DataFrame =
+    aucFromScored(trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol),
       docs, idCol, labelCol)
 
   /** [[aucEval]] over an already-scored corpus (see
@@ -262,23 +257,22 @@ object Classifier {
     */
   def scoreDrift(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
                  buckets: Int = 8, idCol: String = "doc_id", textCol: String = "text",
-                 labelCol: String = "label",
-                 share: DataFrame => DataFrame = Share.materialize): DataFrame =
+                 labelCol: String = "label"): DataFrame =
     scoreDriftFromScored(
-      trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol, share),
-      buckets, idCol, share)
+      trainAndScore(docs, dim, iters, stepDiv, idCol, textCol, labelCol),
+      buckets, idCol)
 
   /** [[scoreDrift]] over an already-scored corpus (see
     * [[calibrationFromScored]] for the train-once rationale).
     */
-  def scoreDriftFromScored(scored: DataFrame, buckets: Int = 8, idCol: String = "doc_id",
-                           share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def scoreDriftFromScored(scored: DataFrame, buckets: Int = 8,
+                           idCol: String = "doc_id"): DataFrame = {
     require(buckets >= 2 && buckets <= 10000, s"buckets must be in [2, 10000], got $buckets")
     val dec = "decimal(38,0)"
     // bucket table is ≤ `buckets` rows but sits on the whole scored
     // lineage — materialize once so the totals cross join doesn't re-run
     // the scoring chain
-    val byBucket = share(scored
+    val byBucket = Share.materialize(scored
       .withColumn("_bucket", expr(s"(p_q * $buckets) div ${PS + 1}"))
       .withColumn("_side", pmod(col(idCol), lit(2L)))
       .groupBy(col("_bucket"))
@@ -306,8 +300,7 @@ object Classifier {
     * `docs`' labels, then score every document with the final weights.
     */
   def trainAndScore(docs: DataFrame, dim: Int = 64, iters: Int = 4, stepDiv: Long = 131072L,
-                    idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label",
-                    share: DataFrame => DataFrame = Share.materialize): DataFrame =
-    score(docs, fit(docs, dim, iters, stepDiv, idCol, textCol, labelCol, share),
+                    idCol: String = "doc_id", textCol: String = "text", labelCol: String = "label"): DataFrame =
+    score(docs, fit(docs, dim, iters, stepDiv, idCol, textCol, labelCol),
       dim, idCol, textCol)
 }

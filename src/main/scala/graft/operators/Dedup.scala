@@ -85,6 +85,20 @@ object Dedup {
   def minHashLsh(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                  shingleN: Int = 3, numHashes: Int = 128, bands: Int = 32,
                  verifyThreshold: Double = 0.0): DataFrame = {
+    bandCandidates(docs, idCol, textCol, shingleN, numHashes, bands)
+      .withColumn("jaccard",
+        size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double") /
+          size(array_union(col("_sh_a"), col("_sh_b"))).cast("double"))
+      .filter(col("jaccard") >= verifyThreshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** MinHash band candidates of [[minHashLsh]] and [[containmentPairs]]:
+    * every pair (id_a < id_b) that shares a band hash in some band, once,
+    * with both shingle sets (`_sh_a`, `_sh_b`) joined back.
+    */
+  private def bandCandidates(docs: DataFrame, idCol: String, textCol: String,
+                             shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     import org.apache.spark.sql.graftshim.ColumnShim
 
@@ -107,11 +121,6 @@ object Dedup {
     pairs
       .join(withShingles.select(col("_id").as("id_a"), col("_sh").as("_sh_a")), "id_a")
       .join(withShingles.select(col("_id").as("id_b"), col("_sh").as("_sh_b")), "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double") /
-          size(array_union(col("_sh_a"), col("_sh_b"))).cast("double"))
-      .filter(col("jaccard") >= verifyThreshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Verified-Jaccard calibration histogram of an LSH candidate set —
@@ -572,20 +581,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                        shingleN: Int = 3, numHashes: Int = 128, bands: Int = 32,
                        threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    import org.apache.spark.sql.graftshim.ColumnShim
-    val withShingles = docs.select(col(idCol).as("_id"), shingles(col(textCol), shingleN).as("_sh"))
-    val bandHashes = ColumnShim.column(
-      graft.plans.MinHashBands(ColumnShim.expression(col("_sh")), numHashes, bands))
-    val banded = withShingles.select(col("_id"), posexplode(bandHashes))
-      .select(col("_id"), col("pos").as("_b"), col("col").as("_h"))
-    val left = banded.select(col("_b"), col("_h"), col("_id").as("id_a"))
-    val right = banded.select(col("_b"), col("_h"), col("_id").as("id_b"))
-    val pairs = left.join(right, Seq("_b", "_h")).filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(withShingles.select(col("_id").as("id_a"), col("_sh").as("_sh_a")), "id_a")
-      .join(withShingles.select(col("_id").as("id_b"), col("_sh").as("_sh_b")), "id_b")
+    bandCandidates(docs, idCol, textCol, shingleN, numHashes, bands)
       .withColumn("_inter", size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double"))
       .withColumn("containment_a", round(col("_inter") / size(col("_sh_a")).cast("double"), 6))
       .withColumn("containment_b", round(col("_inter") / size(col("_sh_b")).cast("double"), 6))
@@ -876,9 +872,8 @@ object Dedup {
     * @return (idCol, cluster_id) for surviving vectors
     */
   def semanticDedup(emb: DataFrame, k: Int, iters: Int, threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    share: DataFrame => DataFrame = Share.materialize): DataFrame = {
-    val model = KMeans.fit(emb, k, iters, idCol, vecCol, share = share)
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val model = KMeans.fit(emb, k, iters, idCol, vecCol)
     val assigned = KMeans.assign(emb, model, vecCol = vecCol)
       .select(col(idCol), col(vecCol), col("cluster_id"))
     val a = assigned.select(col("cluster_id"), col(idCol).as("_id"), col(vecCol).as("_v"))

@@ -123,10 +123,9 @@ object KMeans {
     */
   def centroidsDf(emb: DataFrame, k: Int, iters: Int,
                   idCol: String = "vec_id", vecCol: String = "embedding",
-                  quantScale: Double = 1e6,
-                  share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+                  quantScale: Double = 1e6): DataFrame = {
     val spark = emb.sparkSession
-    val m = fit(emb, k, iters, idCol, vecCol, quantScale, share)
+    val m = fit(emb, k, iters, idCol, vecCol, quantScale)
     val rows = for {
       c <- m.centroids.indices
       d <- 0 until m.dim
@@ -162,9 +161,8 @@ object KMeans {
   def clusterPurity(emb: DataFrame, k: Int, iters: Int,
                     labelCol: String = "label",
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    quantScale: Double = 1e6,
-                    share: DataFrame => DataFrame = Share.materialize): DataFrame =
-    clusterPurity(emb, fit(emb, k, iters, idCol, vecCol, quantScale, share),
+                    quantScale: Double = 1e6): DataFrame =
+    clusterPurity(emb, fit(emb, k, iters, idCol, vecCol, quantScale),
       labelCol, vecCol, quantScale)
 
   /** [[clusterPurity]] against an already-trained model — the
@@ -205,9 +203,8 @@ object KMeans {
     */
   def outliers(emb: DataFrame, k: Int, iters: Int, topN: Int = 20,
                idCol: String = "vec_id", vecCol: String = "embedding",
-               quantScale: Double = 1e6,
-               share: DataFrame => DataFrame = Share.materialize): DataFrame =
-    outliers(emb, fit(emb, k, iters, idCol, vecCol, quantScale, share),
+               quantScale: Double = 1e6): DataFrame =
+    outliers(emb, fit(emb, k, iters, idCol, vecCol, quantScale),
       topN, idCol, vecCol, quantScale)
 
   /** [[outliers]] against an already-trained model (see
@@ -258,9 +255,8 @@ object KMeans {
     */
   def clusterDrift(train: DataFrame, a: DataFrame, b: DataFrame, k: Int, iters: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding",
-                   alpha: Long = 1L, quantScale: Double = 1e6,
-                   share: DataFrame => DataFrame = Share.materialize): DataFrame =
-    clusterDrift(a, b, fit(train, k, iters, idCol, vecCol, quantScale, share),
+                   alpha: Long = 1L, quantScale: Double = 1e6): DataFrame =
+    clusterDrift(a, b, fit(train, k, iters, idCol, vecCol, quantScale),
       vecCol, alpha, quantScale)
 
   /** [[clusterDrift]] against an already-trained shared model (see

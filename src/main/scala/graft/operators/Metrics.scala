@@ -538,8 +538,7 @@ object Metrics {
     * of an AGGREGATED cell table); adds two windows over from_loc and
     * one tiny aggregate per model. @return (model, n_pairs, cpc_ppm)
     */
-  def flowModelCpc(spLoc: DataFrame, locCol: String = "location_id",
-                   share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+  def flowModelCpc(spLoc: DataFrame, locCol: String = "location_id"): DataFrame = {
     val pairs = radiationModel(spLoc, locCol)
     def fdiv(n: Column, d: Column): Column =
       ((n - pmod(n, d)) / d).cast("decimal(38,0)")
@@ -547,7 +546,7 @@ object Metrics {
     // share the weighted pair table: BOTH model arms of the union read
     // it, and its lineage carries radiationModel's zones² s_ij join —
     // without the checkpoint that join evaluates once per arm
-    val w = share(pairs.select(col("from_loc"), col("observed"),
+    val w = Share.materialize(pairs.select(col("from_loc"), col("observed"),
       fdiv(dq(lit(1000000L)) * dq(col("m_from")) * dq(col("m_to")),
         (dq(col("m_from")) + dq(col("s_between"))) *
           (dq(col("m_from")) + dq(col("m_to")) + dq(col("s_between")))).as("w_radiation"),
@@ -879,23 +878,37 @@ object Metrics {
     * is ≤ 64 rows, so the final aggregation is trivially bounded.
     */
   private def bitBucketPowerFit(values: DataFrame): DataFrame = {
-    values
+    lnqOlsFit(values
       .withColumn("_bucket", (length(bin(col("_m"))) - 1).cast("long"))
       .groupBy(col("_bucket")).agg(count(lit(1)).cast("long").as("_c"))
       .withColumn("_lo", expr("shiftleft(cast(1 as bigint), cast(_bucket as int))"))
-      .select(lnq(col("_lo")).as("_x"), lnq(col("_c")).as("_y"))
-      .agg(
-        count(lit(1)).as("n_buckets"),
+      .select(lnq(col("_lo")).as("_x"), lnq(col("_c")).as("_y")),
+      "n_buckets", "slope", "intercept")
+  }
+
+  /** The lnq-OLS fit every power-law and growth fit ends with, over a
+    * point frame of quantized logs `_x`, `_y` (exact longs): the point
+    * count and the four sums Σx, Σy, Σxy, Σx² (exact longs), then the
+    * slope with both cross terms in DECIMAL(38,0) (HUGEINT in the
+    * oracle) — n·Σxy overflows a long once a spine has a few hundred
+    * points, x ~ ln(1e6)·1e6 — one final cast to double each, and the
+    * intercept divided back to nats. Where a long would not overflow,
+    * the double is the same: both round one exact integer to nearest.
+    * @return one row (nCol, slopeCol, interceptCol)
+    */
+  private[operators] def lnqOlsFit(points: DataFrame, nCol: String, slopeCol: String,
+                                   interceptCol: String): DataFrame =
+    points.agg(
+        count(lit(1)).as(nCol),
         sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
         sum(col("_x") * col("_y")).as("_sxy"), sum(col("_x") * col("_x")).as("_sxx"))
-      .withColumn("slope",
-        (col("n_buckets") * col("_sxy") - col("_sx") * col("_sy")).cast("double")
-          / (col("n_buckets") * col("_sxx") - col("_sx") * col("_sx")).cast("double"))
-      .withColumn("intercept",
-        ((col("_sy").cast("double") - col("slope") * col("_sx").cast("double"))
-          / col("n_buckets").cast("double")) / lit(1e6))
-      .select("n_buckets", "slope", "intercept")
-  }
+      .withColumn(slopeCol,
+        (dq(col(nCol)) * dq(col("_sxy")) - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
+          (dq(col(nCol)) * dq(col("_sxx")) - dq(col("_sx")) * dq(col("_sx"))).cast("double"))
+      .withColumn(interceptCol,
+        ((col("_sy").cast("double") - col(slopeCol) * col("_sx").cast("double"))
+          / col(nCol).cast("double")) / lit(1e6))
+      .select(nCol, slopeCol, interceptCol)
 
   /** Truncated-power-law exponent of the stay-duration (waiting-time)
     * distribution (Song, Koren, Wang & Barabási 2010, "Modelling the
@@ -976,23 +989,12 @@ object Metrics {
       .select(expr(s"$seqCol div $sampleEvery").as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("_nt"))
     val w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    val points = visits
+    lnqOlsFit(visits
       .join(discoveries, Seq("bucket"), "left")
       .withColumn("_s", sum(coalesce(col("_ns"), lit(0L))).over(w))
       .withColumn("_n", sum(col("_nt")).over(w))
-      .select(lnq(col("_n")).as("_x"), lnq(col("_s")).as("_y"))
-    points.agg(
-        count(lit(1)).as("n_points"),
-        sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
-        sum(col("_x") * col("_y")).as("_sxy"), sum(col("_x") * col("_x")).as("_sxx"))
-      .withColumn("beta", {
-        (dq(col("n_points")) * dq(col("_sxy")) - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
-          (dq(col("n_points")) * dq(col("_sxx")) - dq(col("_sx")) * dq(col("_sx"))).cast("double")
-      })
-      .withColumn("log_k",
-        ((col("_sy").cast("double") - col("beta") * col("_sx").cast("double"))
-          / col("n_points").cast("double")) / lit(1e6))
-      .select("n_points", "beta", "log_k")
+      .select(lnq(col("_n")).as("_x"), lnq(col("_s")).as("_y")),
+      "n_points", "beta", "log_k")
   }
 
   /** Daily mobility motifs (Schneider et al. 2013, "Unravelling daily

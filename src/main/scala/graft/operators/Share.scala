@@ -14,10 +14,11 @@ import org.apache.spark.sql.DataFrame
 object Share {
 
   /** Lazy localCheckpoint: row-block storage, spills to local disk,
-    * truncates lineage. The default `share` for every iterative trainer
-    * ([[TextAnalysis.bpeTrain]], [[KMeans.fit]], [[Ann.pqTrain]],
-    * [[Ann.ivfPqTrain]]). Multi-node deployments that must survive
-    * executor loss pass [[graft.Pipeline.parquetShare]] instead — same
+    * truncates lineage. The default `share` of [[TextAnalysis.bpeTrain]],
+    * [[KMeans.fit]] and [[ContactGraph.from]]; the trainers without a
+    * hook ([[Ann.pqTrain]], [[Ann.ivfPqTrain]], [[Classifier.fit]]) call
+    * it directly. Multi-node deployments that must survive executor
+    * loss pass [[graft.Pipeline.parquetShare]] to a hook instead — same
     * signature, durable storage.
     */
   val materialize: DataFrame => DataFrame = _.localCheckpoint(false)

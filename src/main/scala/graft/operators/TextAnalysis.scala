@@ -1473,19 +1473,9 @@ object TextAnalysis {
     * rows — driver-sized regardless of corpus scale.
     */
   def zipfFit(docs: DataFrame, topK: Int = 50, textCol: String = "text"): DataFrame = {
-    buildVocab(docs, topK, textCol)
-      .select(lnq(col("rank")).as("_x"), lnq(col("n")).as("_y"))
-      .agg(
-        count(lit(1)).as("n_points"),
-        sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
-        sum(col("_x") * col("_y")).as("_sxy"), sum(col("_x") * col("_x")).as("_sxx"))
-      .withColumn("slope",
-        (col("n_points") * col("_sxy") - col("_sx") * col("_sy")).cast("double")
-          / (col("n_points") * col("_sxx") - col("_sx") * col("_sx")).cast("double"))
-      .withColumn("intercept",
-        ((col("_sy").cast("double") - col("slope") * col("_sx").cast("double"))
-          / col("n_points").cast("double")) / lit(1e6))
-      .select("n_points", "slope", "intercept")
+    Metrics.lnqOlsFit(
+      buildVocab(docs, topK, textCol).select(lnq(col("rank")).as("_x"), lnq(col("n")).as("_y")),
+      "n_points", "slope", "intercept")
   }
 
   /** Heaps'-law fit (Heaps 1978; Herdan): the vocabulary-growth exponent
@@ -1515,27 +1505,12 @@ object TextAnalysis {
         size(split(col(textCol), " ")).cast("long").as("_nt"))
       .groupBy(col("bucket")).agg(sum("_nt").as("_nt"))
     val w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    val points = tokens
+    Metrics.lnqOlsFit(tokens
       .join(newVocab, Seq("bucket"), "left")
       .withColumn("_v", sum(coalesce(col("_nv"), lit(0L))).over(w))
       .withColumn("_n", sum(col("_nt")).over(w))
-      .select(lnq(col("_n")).as("_x"), lnq(col("_v")).as("_y"))
-    points.agg(
-        count(lit(1)).as("n_points"),
-        sum(col("_x")).as("_sx"), sum(col("_y")).as("_sy"),
-        sum(col("_x") * col("_y")).as("_sxy"), sum(col("_x") * col("_x")).as("_sxx"))
-      .withColumn("beta", {
-        // slope numerator/denominator overflow a long once the spine has
-        // a few hundred points (n·Σxy with x ~ ln(1e6)·1e6) — do the
-        // cross terms in DECIMAL(38,0) (HUGEINT in the oracle), one
-        // final cast to double each
-        (dq(col("n_points")) * dq(col("_sxy")) - dq(col("_sx")) * dq(col("_sy"))).cast("double") /
-          (dq(col("n_points")) * dq(col("_sxx")) - dq(col("_sx")) * dq(col("_sx"))).cast("double")
-      })
-      .withColumn("log_k",
-        ((col("_sy").cast("double") - col("beta") * col("_sx").cast("double"))
-          / col("n_points").cast("double")) / lit(1e6))
-      .select("n_points", "beta", "log_k")
+      .select(lnq(col("_n")).as("_x"), lnq(col("_v")).as("_y")),
+      "n_points", "beta", "log_k")
   }
 
   /** Document fingerprint: the k smallest word-hash hex prefixes (a
@@ -1914,7 +1889,7 @@ object TextAnalysis {
     * Scale shape: bigrams come from a zero-shuffle `zip_with` over each
     * document's word array (no positional self-join); unigram and bigram
     * counts are map-side-combinable groupBys. The vocabulary-bounded
-    * unigram table goes through the `share` hook once and feeds BOTH
+    * unigram table is materialized once ([[Share.materialize]]) and feeds BOTH
     * count lookups and the 1-row total — without it the plan re-runs the
     * token scan for each consumer (observed as 4 scan stages in the
     * first cut). The bigram side is cut to `minCount` survivors before
@@ -1925,12 +1900,11 @@ object TextAnalysis {
     * (w1, w2), so the ranked list is engine-stable.
     */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5L, discount: Long = 1L,
-                      topK: Int = 50, textCol: String = "text",
-                      share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+                      topK: Int = 50, textCol: String = "text"): DataFrame = {
     require(topK > 0, "pmiCollocations: topK must be positive")
     val toks = docs.select(
       filter(split(col(textCol), " "), w => length(w) > 0).as("_ws"))
-    val uni = share(toks
+    val uni = Share.materialize(toks
       .select(explode(col("_ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).cast("long").as("c")))
     val n1 = greatest(size(col("_ws")) - 1, lit(0))
@@ -1982,8 +1956,7 @@ object TextAnalysis {
     * @return per group: (group, n_bigrams, nll_q, n_zero, nll_nats)
     */
   def knScore(docs: DataFrame, holdoutMod: Long = 4L, groupCol: String = "source",
-              idCol: String = "doc_id", textCol: String = "text",
-              share: DataFrame => DataFrame = Share.materialize): DataFrame = {
+              idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(holdoutMod >= 2, "knScore: holdoutMod must leave both slices nonempty")
     val toks = docs.select(col(idCol), col(groupCol),
       filter(split(col(textCol), " "), w => length(w) > 0).as("_ws"))
@@ -1994,7 +1967,7 @@ object TextAnalysis {
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("_p"))
       .select(col(groupCol), col("_p.w1").as("w1"), col("_p.w2").as("w2"))
     val isHold = pmod(col(idCol), lit(holdoutMod)) === 0L
-    val trainBi = share(bigrams(toks.filter(!isHold))
+    val trainBi = Share.materialize(bigrams(toks.filter(!isHold))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast("long").as("c12")))
     val contexts = trainBi.groupBy(col("w1"))
       .agg(sum(col("c12")).cast("long").as("c1"),
