@@ -4,7 +4,7 @@ import graft.Pipeline
 import graft.functions.PortableHash.h60Sql
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.decimalsToDigits
+import Shared.{decimalsToDigits, probeCosineSql}
 
 /** Similarity search and embeddings: brute-force, LSH, IVF, PQ and IVF-PQ
   * search, k-means, and embedding statistics.
@@ -35,6 +35,36 @@ private[graft] object AnnGates {
        |    / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
        |       * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)""".stripMargin
 
+  /** Brute-force scoring of the ten probes `probes` (vec_id < 10)
+    * against every other vector: `bscored(probe_id, neighbor_id, cosine)`.
+    */
+  private def bruteScoredCtes: String =
+    s"""probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
+       |bscored AS (
+       |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+       |         ${cosineSql("p.embedding", "c.embedding")} AS cosine
+       |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id)""".stripMargin
+
+  /** IVF search candidates, the first `nlist` vectors as cell centroids:
+    * every vector's cells ranked by cosine, `ranked` (`AS MATERIALIZED`
+    * or not), the corpus's best cell `corpcell`, the ten probes'
+    * `nprobe` best cells `probecell`, and the same-cell pairs
+    * `cand(probe_id, pe, neighbor_id, ce)`.
+    */
+  private def ivfCandCtes(nlist: Int, nprobe: Int, materialized: Boolean): String =
+    s"""cent AS (
+       |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
+       |ranked AS ${if (materialized) "MATERIALIZED " else ""}(
+       |  SELECT e.vec_id, e.embedding, c_id,
+       |         row_number() OVER (PARTITION BY e.vec_id
+       |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
+       |  FROM embeddings e, cent),
+       |corpcell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn = 1),
+       |probecell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn <= $nprobe AND vec_id < 10),
+       |cand AS (
+       |  SELECT p.vec_id AS probe_id, p.embedding AS pe, c.vec_id AS neighbor_id, c.embedding AS ce
+       |  FROM probecell p JOIN corpcell c ON p.cell = c.cell WHERE p.vec_id != c.vec_id)""".stripMargin
+
   private def embeddingNearDupOracle(threshold: Double, planes: Int): String =
     s"""WITH ${sigCte(planes)},
        |pairs AS (
@@ -46,18 +76,7 @@ private[graft] object AnnGates {
        |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= $threshold""".stripMargin
 
   private def annIvfOracle(k: Int, nlist: Int, nprobe: Int): String =
-    s"""WITH cent AS (
-       |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
-       |ranked AS (
-       |  SELECT e.vec_id, e.embedding, c_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
-       |  FROM embeddings e, cent),
-       |corpcell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn = 1),
-       |probecell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn <= $nprobe AND vec_id < 10),
-       |cand AS (
-       |  SELECT p.vec_id AS probe_id, p.embedding AS pe, c.vec_id AS neighbor_id, c.embedding AS ce
-       |  FROM probecell p JOIN corpcell c ON p.cell = c.cell WHERE p.vec_id != c.vec_id),
+    s"""WITH ${ivfCandCtes(nlist, nprobe, materialized = false)},
        |scored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand)
        |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine FROM (
@@ -70,27 +89,12 @@ private[graft] object AnnGates {
     * hits/k. Probes the index missed keep a 0-hit row via the LEFT JOIN.
     */
   private def annRecallOracle(k: Int, nlist: Int, nprobe: Int): String =
-    s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-       |bscored AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-       |         ${cosineSql("p.embedding", "c.embedding")} AS cosine
-       |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id),
+    s"""WITH $bruteScoredCtes,
        |bt AS MATERIALIZED (
        |  SELECT probe_id, neighbor_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
        |    FROM bscored) WHERE rank <= $k),
-       |cent AS (
-       |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
-       |ranked AS MATERIALIZED (
-       |  SELECT e.vec_id, e.embedding, c_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
-       |  FROM embeddings e, cent),
-       |corpcell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn = 1),
-       |probecell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn <= $nprobe AND vec_id < 10),
-       |cand AS (
-       |  SELECT p.vec_id AS probe_id, p.embedding AS pe, c.vec_id AS neighbor_id, c.embedding AS ce
-       |  FROM probecell p JOIN corpcell c ON p.cell = c.cell WHERE p.vec_id != c.vec_id),
+       |${ivfCandCtes(nlist, nprobe, materialized = true)},
        |iscored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand),
        |it AS (
@@ -114,27 +118,12 @@ private[graft] object AnnGates {
   private def annNdcgOracle(k: Int, nlist: Int, nprobe: Int): String = {
     def wq(r: String) =
       s"(1000000000000 // CAST(floor(log2($r + 1) * 1000000) AS BIGINT))"
-    s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-       |bscored AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-       |         ${cosineSql("p.embedding", "c.embedding")} AS cosine
-       |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id),
+    s"""WITH $bruteScoredCtes,
        |bt AS MATERIALIZED (
        |  SELECT probe_id, neighbor_id, CAST(rank AS BIGINT) AS tr FROM (
        |    SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
        |    FROM bscored) WHERE rank <= $k),
-       |cent AS (
-       |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
-       |ranked AS MATERIALIZED (
-       |  SELECT e.vec_id, e.embedding, c_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
-       |  FROM embeddings e, cent),
-       |corpcell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn = 1),
-       |probecell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn <= $nprobe AND vec_id < 10),
-       |cand AS (
-       |  SELECT p.vec_id AS probe_id, p.embedding AS pe, c.vec_id AS neighbor_id, c.embedding AS ce
-       |  FROM probecell p JOIN corpcell c ON p.cell = c.cell WHERE p.vec_id != c.vec_id),
+       |${ivfCandCtes(nlist, nprobe, materialized = true)},
        |iscored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand),
        |it AS (
@@ -365,14 +354,10 @@ private[graft] object AnnGates {
     Gate("ann_bruteforce") { (s, dir) =>
       Pipeline.annBruteTop5(s, dir)
     } {
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
+      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |scored AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(p.embedding, c.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+        |    $probeCosineSql AS cosine
         |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id)
         |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine FROM (
         |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
@@ -399,14 +384,10 @@ private[graft] object AnnGates {
       // bits); max-sim-to-selected via list ops over per-candidate
       // neighbor/sim lists — every decision the same integers as the
       // driver-side greedy
-      """WITH RECURSIVE probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id = 7),
+      s"""WITH RECURSIVE probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id = 7),
         |scored AS (
         |  SELECT c.vec_id, c.embedding,
-        |    round(
-        |      list_sum(list_transform(list_zip(p.embedding, c.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+        |    $probeCosineSql AS cosine
         |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id),
         |cand AS (
         |  SELECT vec_id, CAST(round(cosine * 1000000.0, 0) AS BIGINT) AS rel_q, embedding
@@ -562,11 +543,7 @@ private[graft] object AnnGates {
     } {
       // Matryoshka ablation: full-dim brute-force truth vs first-32-dim
       // brute-force, per-probe surviving-hit share
-      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-         |bscored AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |         ${cosineSql("p.embedding", "c.embedding")} AS cosine
-         |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id),
+      s"""WITH $bruteScoredCtes,
          |bt AS MATERIALIZED (
          |  SELECT probe_id, neighbor_id FROM (
          |    SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
@@ -821,15 +798,11 @@ private[graft] object AnnGates {
       val embs = s.read.parquet(s"$dir/embeddings.parquet")
       Ann.filteredTopK(embs.filter(col("vec_id") < 10), embs, labelValue = 1L, k = 5)
     } {
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
+      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |cand AS (SELECT vec_id, embedding FROM embeddings WHERE label = 1),
         |scored AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(p.embedding, c.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+        |    $probeCosineSql AS cosine
         |  FROM cand c, probes p WHERE p.vec_id != c.vec_id)
         |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine FROM (
         |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank

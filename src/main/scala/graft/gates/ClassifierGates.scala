@@ -4,7 +4,7 @@ import graft.Pipeline
 import graft.functions.PortableHash.h60Sql
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.decimalsToDigits
+import Shared.{decimalsToDigits, packCte}
 
 /** Quality classifier, DSIR importance weights and BPE tokenizer training,
   * each an iterated model unrolled as SQL on the oracle side.
@@ -64,6 +64,61 @@ private[graft] object ClassifierGates {
     * mirroring the operator's early stop. bw{i} keeps the source word `w`
     * so the encode oracle can join token counts back onto documents.
     */
+  /** [[classifierCtes]] (dim 64) plus each doc's margin
+    * `csz(doc_id, z)` under the final weights `cw<iters>`.
+    */
+  private def marginCtes(iters: Int, stepDiv: Long): String =
+    s"""${classifierCtes(dim = 64, iters = iters, stepDiv = stepDiv)},
+       |csz AS (
+       |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
+       |  FROM cx x JOIN cw$iters w ON x.b = w.b GROUP BY x.doc_id)""".stripMargin
+
+  /** `scal(doc_id, p_q, label)`: each doc's quantized probability from
+    * `csz` beside its label.
+    */
+  private val labeledScoresCte: String =
+    s"""scal AS (
+       |  SELECT s.doc_id,
+       |         greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q,
+       |         y.y AS label
+       |  FROM csz s JOIN cy y ON s.doc_id = y.doc_id)""".stripMargin
+
+  /** DSIR bucket counts: the dense 256-bucket `spine`, each bigram's
+    * bucket `hb(doc_id, lang, bucket)`, the target (English) and raw
+    * counts per bucket `ct`, `cr`, and their totals `tot(nt, nr)`.
+    */
+  private def dsirCountCtes: String =
+    s"""WITH RECURSIVE spine(b) AS (
+       |  SELECT CAST(0 AS BIGINT) UNION ALL SELECT b + 1 FROM spine WHERE b + 1 < 256),
+       |w AS (SELECT doc_id, lang, string_split(text,' ') AS ws FROM documents),
+       |bgs AS (SELECT doc_id, lang, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
+       |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
+       |hb AS (SELECT doc_id, lang, ${h60Sql("bg")} % 256 AS bucket FROM bgs),
+       |ct AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb WHERE lang = 'en' GROUP BY bucket),
+       |cr AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb GROUP BY bucket),
+       |tot AS (SELECT (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM ct) AS nt,
+       |               (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM cr) AS nr)""".stripMargin
+
+  /** DSIR: bigrams hash into 256 buckets; per-bucket log-ratio weights
+    * over a dense bucket spine (unseen buckets keep the smoothing-only
+    * weight); document importance = long sum of its bigram weights.
+    */
+  private def dsirImportanceOracle: String =
+    s"""$dsirCountCtes,
+       |wt AS (SELECT s.b AS bucket,
+       |         (CAST(floor(ln(CAST(coalesce(ct.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
+       |        - CAST(floor(ln(CAST(tot.nt + 256 AS DOUBLE)) * 1e6) AS BIGINT))
+       |       - (CAST(floor(ln(CAST(coalesce(cr.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
+       |        - CAST(floor(ln(CAST(tot.nr + 256 AS DOUBLE)) * 1e6) AS BIGINT)) AS w_q
+       |       FROM spine s LEFT JOIN ct ON s.b = ct.bucket
+       |                    LEFT JOIN cr ON s.b = cr.bucket CROSS JOIN tot),
+       |sc AS (SELECT hb.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+       |          CAST(sum(wt.w_q) AS BIGINT) AS importance_q
+       |       FROM hb JOIN wt ON hb.bucket = wt.bucket GROUP BY hb.doc_id)
+       |SELECT d.doc_id, coalesce(sc.n_bigrams, 0) AS n_bigrams,
+       |  coalesce(sc.importance_q, 0) AS importance_q
+       |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id""".stripMargin
+
   private def bpeCtes(merges: Int): String = {
     val blocks = (1 to merges).map { i =>
       s"""bq$i AS MATERIALIZED (
@@ -139,10 +194,7 @@ private[graft] object ClassifierGates {
       Classifier.score(Pipeline.labeledDocs(s, dir),
         Pipeline.classifierWeights4(s, dir), dim = 64)
     } {
-      s"""WITH ${classifierCtes(dim = 64, iters = 4, stepDiv = 131072L)},
-         |csz AS (
-         |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
-         |  FROM cx x JOIN cw4 w ON x.b = w.b GROUP BY x.doc_id)
+      s"""WITH ${marginCtes(iters = 4, stepDiv = 131072L)}
          |SELECT doc_id, z,
          |  greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q,
          |  CAST(CASE WHEN greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0)
@@ -159,15 +211,8 @@ private[graft] object ClassifierGates {
     } {
       // the reliability table over the same trained weights: probability
       // buckets on exact longs, observed vs mean-predicted per bucket
-      s"""WITH ${classifierCtes(dim = 64, iters = 8, stepDiv = 16384L)},
-         |csz AS (
-         |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
-         |  FROM cx x JOIN cw8 w ON x.b = w.b GROUP BY x.doc_id),
-         |scal AS (
-         |  SELECT s.doc_id,
-         |         greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q,
-         |         y.y AS label
-         |  FROM csz s JOIN cy y ON s.doc_id = y.doc_id)
+      s"""WITH ${marginCtes(iters = 8, stepDiv = 16384L)},
+         |$labeledScoresCte
          |SELECT (p_q * 8) // ${Classifier.PS + 1} AS bucket,
          |  CAST(count(*) AS BIGINT) AS n, CAST(sum(label) AS BIGINT) AS n_pos,
          |  CAST(sum(p_q) AS BIGINT) AS sum_p_q,
@@ -193,10 +238,7 @@ private[graft] object ClassifierGates {
       // the shared trained-filter memo's integer score census (the
       // classifier family's eval-grade 8-iter weights — same CTE chain as
       // calibration/auc, aggregated instead of bucketed)
-      s"""WITH ${classifierCtes(dim = 64, iters = 8, stepDiv = 16384L)},
-         |csz AS (
-         |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
-         |  FROM cx x JOIN cw8 w ON x.b = w.b GROUP BY x.doc_id),
+      s"""WITH ${marginCtes(iters = 8, stepDiv = 16384L)},
          |sc AS (
          |  SELECT z, greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q
          |  FROM csz)
@@ -213,15 +255,8 @@ private[graft] object ClassifierGates {
       // Mann–Whitney U from per-score class counts: the calibration chain's
       // scal CTE regrouped by p_q, cumulative negatives below, U·2 exact in
       // int128 — auc is the one final double division
-      s"""WITH ${classifierCtes(dim = 64, iters = 8, stepDiv = 16384L)},
-         |csz AS (
-         |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
-         |  FROM cx x JOIN cw8 w ON x.b = w.b GROUP BY x.doc_id),
-         |scal AS (
-         |  SELECT s.doc_id,
-         |         greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q,
-         |         y.y AS label
-         |  FROM csz s JOIN cy y ON s.doc_id = y.doc_id),
+      s"""WITH ${marginCtes(iters = 8, stepDiv = 16384L)},
+         |$labeledScoresCte,
          |bys AS (
          |  SELECT p_q, CAST(sum(label) AS BIGINT) AS c_pos,
          |         CAST(count(*) - sum(label) AS BIGINT) AS c_neg
@@ -245,10 +280,7 @@ private[graft] object ClassifierGates {
     } {
       // PSI over the calibration chain's score buckets, even vs odd ids:
       // signed mass diff × quantized log-ratio, int128-exact, one division
-      s"""WITH ${classifierCtes(dim = 64, iters = 8, stepDiv = 16384L)},
-         |csz AS (
-         |  SELECT x.doc_id, CAST(sum(x.x * w.w) AS BIGINT) AS z
-         |  FROM cx x JOIN cw8 w ON x.b = w.b GROUP BY x.doc_id),
+      s"""WITH ${marginCtes(iters = 8, stepDiv = 16384L)},
          |scal AS (
          |  SELECT s.doc_id,
          |         greatest(least(z + ${2L * Classifier.S}, ${Classifier.PS}), 0) AS p_q
@@ -291,16 +323,7 @@ private[graft] object ClassifierGates {
     } {
       // the shared DSIR weight prolog returns the 256-row weight table —
       // the dsir_importance oracle's wt CTE widened with the raw counts
-      s"""WITH RECURSIVE spine(b) AS (
-         |  SELECT CAST(0 AS BIGINT) UNION ALL SELECT b + 1 FROM spine WHERE b + 1 < 256),
-         |w AS (SELECT doc_id, lang, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, lang, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |hb AS (SELECT doc_id, lang, ${h60Sql("bg")} % 256 AS bucket FROM bgs),
-         |ct AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb WHERE lang = 'en' GROUP BY bucket),
-         |cr AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb GROUP BY bucket),
-         |tot AS (SELECT (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM ct) AS nt,
-         |               (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM cr) AS nr)
+      s"""$dsirCountCtes
          |SELECT s.b AS bucket,
          |  CAST(coalesce(ct.c, 0) AS BIGINT) AS n_target,
          |  CAST(coalesce(cr.c, 0) AS BIGINT) AS n_raw,
@@ -315,31 +338,7 @@ private[graft] object ClassifierGates {
       TextAnalysis.importanceScore(
         s.read.parquet(s"$dir/documents.parquet"), Pipeline.dsirWeights(s, dir), dim = 256)
         .select(col("doc_id"), col("n_bigrams"), col("importance_q"))
-    } {
-      s"""WITH RECURSIVE spine(b) AS (
-         |  SELECT CAST(0 AS BIGINT) UNION ALL SELECT b + 1 FROM spine WHERE b + 1 < 256),
-         |w AS (SELECT doc_id, lang, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, lang, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |hb AS (SELECT doc_id, lang, ${h60Sql("bg")} % 256 AS bucket FROM bgs),
-         |ct AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb WHERE lang = 'en' GROUP BY bucket),
-         |cr AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb GROUP BY bucket),
-         |tot AS (SELECT (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM ct) AS nt,
-         |               (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM cr) AS nr),
-         |wt AS (SELECT s.b AS bucket,
-         |         (CAST(floor(ln(CAST(coalesce(ct.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |        - CAST(floor(ln(CAST(tot.nt + 256 AS DOUBLE)) * 1e6) AS BIGINT))
-         |       - (CAST(floor(ln(CAST(coalesce(cr.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |        - CAST(floor(ln(CAST(tot.nr + 256 AS DOUBLE)) * 1e6) AS BIGINT)) AS w_q
-         |       FROM spine s LEFT JOIN ct ON s.b = ct.bucket
-         |                    LEFT JOIN cr ON s.b = cr.bucket CROSS JOIN tot),
-         |sc AS (SELECT hb.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(wt.w_q) AS BIGINT) AS importance_q
-         |       FROM hb JOIN wt ON hb.bucket = wt.bucket GROUP BY hb.doc_id)
-         |SELECT d.doc_id, coalesce(sc.n_bigrams, 0) AS n_bigrams,
-         |  coalesce(sc.importance_q, 0) AS importance_q
-         |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id""".stripMargin
-    },
+    } { dsirImportanceOracle },
     // the scan-only twin: weight array as a plan literal, per-row
     // transform+aggregate — same oracle proves join ≡ scan under the gate
     Gate("dsir_importance_scan") { (s, dir) =>
@@ -347,34 +346,9 @@ private[graft] object ClassifierGates {
         s.read.parquet(s"$dir/documents.parquet"), Pipeline.dsirWeights(s, dir), dim = 256)
         .select(col("doc_id"), col("n_bigrams"), col("importance_q"))
     } {
-      // DSIR: bigrams hash into 256 buckets; per-bucket log-ratio weights
-      // over a dense bucket spine (unseen buckets keep the smoothing-only
-      // weight); document importance = long sum of its bigram weights.
-      // The scan-only twin shares the oracle verbatim: join ≡ scan is part
-      // of what the gate proves.
-      s"""WITH RECURSIVE spine(b) AS (
-         |  SELECT CAST(0 AS BIGINT) UNION ALL SELECT b + 1 FROM spine WHERE b + 1 < 256),
-         |w AS (SELECT doc_id, lang, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, lang, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |hb AS (SELECT doc_id, lang, ${h60Sql("bg")} % 256 AS bucket FROM bgs),
-         |ct AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb WHERE lang = 'en' GROUP BY bucket),
-         |cr AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM hb GROUP BY bucket),
-         |tot AS (SELECT (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM ct) AS nt,
-         |               (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM cr) AS nr),
-         |wt AS (SELECT s.b AS bucket,
-         |         (CAST(floor(ln(CAST(coalesce(ct.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |        - CAST(floor(ln(CAST(tot.nt + 256 AS DOUBLE)) * 1e6) AS BIGINT))
-         |       - (CAST(floor(ln(CAST(coalesce(cr.c, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |        - CAST(floor(ln(CAST(tot.nr + 256 AS DOUBLE)) * 1e6) AS BIGINT)) AS w_q
-         |       FROM spine s LEFT JOIN ct ON s.b = ct.bucket
-         |                    LEFT JOIN cr ON s.b = cr.bucket CROSS JOIN tot),
-         |sc AS (SELECT hb.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(wt.w_q) AS BIGINT) AS importance_q
-         |       FROM hb JOIN wt ON hb.bucket = wt.bucket GROUP BY hb.doc_id)
-         |SELECT d.doc_id, coalesce(sc.n_bigrams, 0) AS n_bigrams,
-         |  coalesce(sc.importance_q, 0) AS importance_q
-         |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id""".stripMargin
+      // the scan-only twin shares the oracle verbatim: join ≡ scan is part
+      // of what the gate proves
+      dsirImportanceOracle
     },
     // the learned BPE merge table is the full training trajectory: any
     // divergence in pair counting, tie-breaking, or fusion order at any
@@ -473,13 +447,7 @@ private[graft] object ClassifierGates {
          |  SELECT doc.lang, doc.doc_id, cnt.tokens,
          |         row_number() OVER (PARTITION BY doc.lang ORDER BY doc.doc_id) AS rn
          |  FROM documents doc JOIN cnt ON doc.doc_id = cnt.doc_id),
-         |pack(lang, rn, doc_id, tokens, bin, running) AS (
-         |  SELECT lang, rn, doc_id, tokens, CAST(0 AS BIGINT), tokens FROM ord WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.lang, o.rn, o.doc_id, o.tokens,
-         |         CASE WHEN p.running + o.tokens > 256 THEN p.bin + 1 ELSE p.bin END,
-         |         CASE WHEN p.running + o.tokens > 256 THEN o.tokens ELSE p.running + o.tokens END
-         |  FROM pack p JOIN ord o ON o.lang = p.lang AND o.rn = p.rn + 1)
+         |${packCte(256)}
          |SELECT lang, doc_id, tokens, bin FROM pack""".stripMargin
     }
   )

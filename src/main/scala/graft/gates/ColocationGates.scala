@@ -4,6 +4,7 @@ import graft.Pipeline
 import graft.operators._
 import graft.sources.EventsAdapter
 import org.apache.spark.sql.functions._
+import Shared.{componentCtes, labelCte, reachCte}
 
 /** Colocation and the contact graph: meeting pairs, graph metrics,
   * communities (Louvain) and contact timing.
@@ -193,15 +194,12 @@ private[graft] object ColocationGates {
     * Nodes with no intra-community pair are absent.
     */
   private def intraComponentsCtes: String =
-    """intra AS MATERIALIZED (
+    s"""intra AS MATERIALIZED (
       |  SELECT p.ua AS a, p.ub AS b
       |  FROM prs p JOIN m4 la ON la.n = p.ua JOIN m4 lb ON lb.n = p.ub
       |  WHERE la.c = lb.c),
       |und AS (SELECT a, b FROM intra UNION SELECT b, a FROM intra),
-      |reach(a, b) AS (
-      |  SELECT a, b FROM und
-      |  UNION
-      |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+      |$reachCte,
       |comp AS (
       |  SELECT n.node, least(n.node, min(r.b)) AS cid
       |  FROM (SELECT DISTINCT a AS node FROM und) n
@@ -294,15 +292,8 @@ private[graft] object ColocationGates {
       // chain, two bounded groupBys
       s"""${cellsCte(recursive = true)},
          |${prsCte(w = false)},
-         |und AS (SELECT ua AS a, ub AS b FROM prs UNION SELECT ub, ua FROM prs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |nodes AS (SELECT DISTINCT a AS node FROM und),
-         |comp AS (
-         |  SELECT n.node, least(n.node, min(r.b)) AS cluster_id
-         |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node),
+         |${componentCtes("prs", "ua", "ub")},
+         |${labelCte("comp")},
          |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS s FROM comp GROUP BY cluster_id)
          |SELECT s AS component_size, CAST(count(*) AS BIGINT) AS n_components
          |FROM sz GROUP BY s""".stripMargin

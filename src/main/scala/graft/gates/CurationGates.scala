@@ -4,7 +4,7 @@ import graft.Pipeline
 import graft.functions.PortableHash.{M, affine, h60Sql}
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.{minhashPairsCte, decimalsToDigits}
+import Shared.{componentCtes, decimalsToDigits, droppedCte, minhashPairsCte, packCte}
 
 /** Corpus curation: the composed curation pipeline, contamination, splits,
   * sampling, mixtures, packing, corpus statistics and multimodal plumbing.
@@ -69,15 +69,8 @@ private[graft] object CurationGates {
        |  SELECT * FROM documents
        |  WHERE doc_id IN (SELECT doc_id FROM cq) AND doc_id IN (SELECT doc_id FROM rok)),
        |${minhashPairsCte(numHashes, bands, threshold, src = "base")},
-       |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM und
-       |  UNION
-       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-       |nodes AS (SELECT DISTINCT a AS node FROM und),
-       |dropped AS (
-       |  SELECT n.node FROM nodes n JOIN reach r ON r.a = n.node
-       |  GROUP BY n.node HAVING least(n.node, min(r.b)) <> n.node),
+       |${componentCtes("dup", "id_a", "id_b")},
+       |$droppedCte,
        |kept2 AS MATERIALIZED (
        |  SELECT * FROM base WHERE doc_id NOT IN (SELECT node FROM dropped)),
        |tgt(g, w) AS (VALUES $tgtValues),
@@ -96,6 +89,52 @@ private[graft] object CurationGates {
        |       WHEN ${h60Sql("'graft:' || CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
        |       ELSE 'test' END AS split
        |FROM kept3""".stripMargin
+
+  /** The image fixtures' aHash in closed form: the 8x8 grid samples the
+    * fixture pixel formula at (rx*w//8, ry*h//8) (the decodeImages
+    * nearest-neighbor rule), bit k set iff g*64 > sum, all integer:
+    * `bits(doc_id, k, b)`.
+    */
+  private val ahashBitsCtes: String =
+    """WITH m AS (
+      |  SELECT doc_id, doc_id % 250 AS cid,
+      |    CAST(4 + (doc_id % 250) % 13 AS BIGINT) AS w,
+      |    CAST(4 + (doc_id % 250) % 11 AS BIGINT) AS h
+      |  FROM documents),
+      |samp AS (
+      |  SELECT m.doc_id, k.range AS k,
+      |    (m.cid * 31 + (((k.range % 8) * m.w) // 8) * 7
+      |       + (((k.range // 8) * m.h) // 8) * 13) % 256 AS lum
+      |  FROM m, range(0, 64) k),
+      |tot AS (SELECT doc_id, SUM(lum) AS s FROM samp GROUP BY doc_id),
+      |bits AS (
+      |  SELECT samp.doc_id, samp.k, CASE WHEN samp.lum * 64 > tot.s THEN 1 ELSE 0 END AS b
+      |  FROM samp JOIN tot USING (doc_id))""".stripMargin
+
+  /** Efraimidis–Spirakis priorities with n_chars as the weight, every
+    * one a long: `k(doc_id, lang, weight, priority_q)`.
+    */
+  private def samplePriorityCtes: String =
+    s"""WITH h AS (
+       |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS weight,
+       |         ${h60Sql("'graft:' || CAST(doc_id AS VARCHAR)")} % 2147483647 AS r
+       |  FROM documents WHERE n_chars > 0),
+       |k AS (
+       |  SELECT doc_id, lang, weight,
+       |         ((CAST(floor(ln(CAST(2147483647 AS DOUBLE)) * 1000000) AS BIGINT)
+       |           - CAST(floor(ln(CAST(r + 1 AS DOUBLE)) * 1000000) AS BIGINT))
+       |          * 1048576) // weight AS priority_q
+       |  FROM h)""".stripMargin
+
+  /** [[packCte]] with a 512-token budget over each language's docs in id
+    * order, a doc's tokens its space-split word count.
+    */
+  private def wordPackCtes: String =
+    s"""WITH RECURSIVE ord AS (
+       |  SELECT lang, doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS tokens,
+       |         row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
+       |  FROM documents),
+       |${packCte(512)}""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     // the full curation pipeline: quality -> repetition -> near-dup
@@ -230,17 +269,7 @@ private[graft] object CurationGates {
     Gate("pack_sequences") { (s, dir) =>
       CorpusOps.packSequences(s.read.parquet(s"$dir/documents.parquet"), budgetTokens = 512)
     } {
-      s"""WITH RECURSIVE ord AS (
-         |  SELECT lang, doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS tokens,
-         |         row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-         |  FROM documents),
-         |pack(lang, rn, doc_id, tokens, bin, running) AS (
-         |  SELECT lang, rn, doc_id, tokens, CAST(0 AS BIGINT), tokens FROM ord WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.lang, o.rn, o.doc_id, o.tokens,
-         |         CASE WHEN p.running + o.tokens > 512 THEN p.bin + 1 ELSE p.bin END,
-         |         CASE WHEN p.running + o.tokens > 512 THEN o.tokens ELSE p.running + o.tokens END
-         |  FROM pack p JOIN ord o ON o.lang = p.lang AND o.rn = p.rn + 1)
+      s"""$wordPackCtes
          |SELECT lang, doc_id, tokens, bin FROM pack""".stripMargin
     },
     Gate("corpus_shuffle") { (s, dir) =>
@@ -589,16 +618,7 @@ private[graft] object CurationGates {
       CorpusOps.weightedSample(s.read.parquet(s"$dir/documents.parquet"),
         k = 40, weightCol = "n_chars")
     } {
-      s"""WITH h AS (
-         |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS weight,
-         |         ${h60Sql("'graft:' || CAST(doc_id AS VARCHAR)")} % 2147483647 AS r
-         |  FROM documents WHERE n_chars > 0),
-         |k AS (
-         |  SELECT doc_id, lang, weight,
-         |         ((CAST(floor(ln(CAST(2147483647 AS DOUBLE)) * 1000000) AS BIGINT)
-         |           - CAST(floor(ln(CAST(r + 1 AS DOUBLE)) * 1000000) AS BIGINT))
-         |          * 1048576) // weight AS priority_q
-         |  FROM h)
+      s"""$samplePriorityCtes
          |SELECT doc_id, lang, weight, priority_q
          |FROM k ORDER BY priority_q, doc_id LIMIT 40""".stripMargin
     },
@@ -607,16 +627,7 @@ private[graft] object CurationGates {
         s.read.parquet(s"$dir/documents.parquet"), kPerGroup = 5, weightCol = "n_chars",
         groupCol = "lang")
     } {
-      s"""WITH h AS (
-         |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS weight,
-         |         ${h60Sql("'graft:' || CAST(doc_id AS VARCHAR)")} % 2147483647 AS r
-         |  FROM documents WHERE n_chars > 0),
-         |k AS (
-         |  SELECT doc_id, lang, weight,
-         |         ((CAST(floor(ln(CAST(2147483647 AS DOUBLE)) * 1000000) AS BIGINT)
-         |           - CAST(floor(ln(CAST(r + 1 AS DOUBLE)) * 1000000) AS BIGINT))
-         |          * 1048576) // weight AS priority_q
-         |  FROM h),
+      s"""$samplePriorityCtes,
          |rk AS (
          |  SELECT *, row_number() OVER (PARTITION BY lang ORDER BY priority_q, doc_id) AS rank
          |  FROM k)
@@ -723,17 +734,7 @@ private[graft] object CurationGates {
     } {
       // the pack_sequences recursion reduced to its per-group efficiency
       // card: bins, exact basis-point fill, oversize-document count
-      s"""WITH RECURSIVE ord AS (
-         |  SELECT lang, doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS tokens,
-         |         row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-         |  FROM documents),
-         |pack(lang, rn, doc_id, tokens, bin, running) AS (
-         |  SELECT lang, rn, doc_id, tokens, CAST(0 AS BIGINT), tokens FROM ord WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.lang, o.rn, o.doc_id, o.tokens,
-         |         CASE WHEN p.running + o.tokens > 512 THEN p.bin + 1 ELSE p.bin END,
-         |         CASE WHEN p.running + o.tokens > 512 THEN o.tokens ELSE p.running + o.tokens END
-         |  FROM pack p JOIN ord o ON o.lang = p.lang AND o.rn = p.rn + 1)
+      s"""$wordPackCtes
          |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(max(bin) + 1 AS BIGINT) AS n_bins,
          |  CAST(sum(tokens) AS BIGINT) AS sum_tokens,
@@ -805,24 +806,9 @@ private[graft] object CurationGates {
     Gate("image_phash") { (s, dir) =>
       Pipeline.imagePhash(s, dir)
     } {
-      // aHash re-derived in closed form: the 8x8 grid samples the fixture
-      // pixel formula at (rx*w//8, ry*h//8) (the decodeImages nearest-
-      // neighbor rule), bit k set iff g*64 > sum — all integer; the two
-      // 32-bit halves keep every value small-positive in both engines
-      """WITH m AS (
-        |  SELECT doc_id, doc_id % 250 AS cid,
-        |    CAST(4 + (doc_id % 250) % 13 AS BIGINT) AS w,
-        |    CAST(4 + (doc_id % 250) % 11 AS BIGINT) AS h
-        |  FROM documents),
-        |samp AS (
-        |  SELECT m.doc_id, k.range AS k,
-        |    (m.cid * 31 + (((k.range % 8) * m.w) // 8) * 7
-        |       + (((k.range // 8) * m.h) // 8) * 13) % 256 AS lum
-        |  FROM m, range(0, 64) k),
-        |tot AS (SELECT doc_id, SUM(lum) AS s FROM samp GROUP BY doc_id),
-        |bits AS (
-        |  SELECT samp.doc_id, samp.k, CASE WHEN samp.lum * 64 > tot.s THEN 1 ELSE 0 END AS b
-        |  FROM samp JOIN tot USING (doc_id))
+      // aHash re-derived in closed form; the two 32-bit halves keep every
+      // value small-positive in both engines
+      s"""$ahashBitsCtes
         |SELECT doc_id AS media_id, TRUE AS ok,
         |  CAST(SUM(CASE WHEN k >= 32 THEN b * (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS ahash_hi,
         |  CAST(SUM(CASE WHEN k < 32 THEN b * (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END) AS BIGINT) AS ahash_lo
@@ -834,20 +820,7 @@ private[graft] object CurationGates {
       // banded hamming pairs over the same closed-form hashes: 16-bit band
       // equi-join (shiftright == floor-div on the nonneg halves), exact
       // bit_count(xor) filter at <= 3 — complete by pigeonhole over 4 bands
-      """WITH m AS (
-        |  SELECT doc_id, doc_id % 250 AS cid,
-        |    CAST(4 + (doc_id % 250) % 13 AS BIGINT) AS w,
-        |    CAST(4 + (doc_id % 250) % 11 AS BIGINT) AS h
-        |  FROM documents),
-        |samp AS (
-        |  SELECT m.doc_id, k.range AS k,
-        |    (m.cid * 31 + (((k.range % 8) * m.w) // 8) * 7
-        |       + (((k.range // 8) * m.h) // 8) * 13) % 256 AS lum
-        |  FROM m, range(0, 64) k),
-        |tot AS (SELECT doc_id, SUM(lum) AS s FROM samp GROUP BY doc_id),
-        |bits AS (
-        |  SELECT samp.doc_id, samp.k, CASE WHEN samp.lum * 64 > tot.s THEN 1 ELSE 0 END AS b
-        |  FROM samp JOIN tot USING (doc_id)),
+      s"""$ahashBitsCtes,
         |hsh AS (
         |  SELECT doc_id AS media_id,
         |    CAST(SUM(CASE WHEN k >= 32 THEN b * (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS ahash_hi,

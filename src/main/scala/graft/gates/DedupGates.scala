@@ -4,7 +4,7 @@ import graft.Pipeline
 import graft.functions.PortableHash.{M, affine, foldHashesSql, h60Sql}
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.{shinglesCteFrom, minhashPairsCte, minhashOracle}
+import Shared.{componentCtes, droppedCte, labelCte, minhashOracle, minhashPairsCte, shinglesCteFrom}
 
 /** Training-data dedup: exact, MinHash, SimHash, edit-distance, n-gram,
   * cluster, span and substring dedup, and winnowing overlap.
@@ -53,29 +53,34 @@ private[graft] object DedupGates {
     */
   private def dedupClusterSizesOracle(numHashes: Int, bands: Int, threshold: Double): String =
     s"""WITH RECURSIVE ${minhashPairsCte(numHashes, bands, threshold)},
-       |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM und
-       |  UNION
-       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-       |nodes AS (SELECT DISTINCT a AS node FROM und),
-       |cl AS (
-       |  SELECT n.node AS doc_id, least(n.node, min(r.b)) AS cluster_id
-       |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node),
+       |${componentCtes("dup", "id_a", "id_b")},
+       |${labelCte("cl", node = "n.node AS doc_id")},
        |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size FROM cl GROUP BY cluster_id)
        |SELECT size, CAST(count(*) AS BIGINT) AS n_clusters FROM cs GROUP BY size""".stripMargin
+
+  /** Robust winnowing (k = 5, w = 4): packed = (h60(gram) % M) * 2^21 +
+    * (2^20 - pos), so the window MINIMUM is the smallest hash with
+    * rightmost-position ties, and decoding is integer arithmetic. Ends in
+    * each doc's selected packed values `s(doc_id, sel)`.
+    */
+  private def winnowCtes: String = {
+    val (k, w) = (5, 4)
+    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |g AS (SELECT doc_id, list_transform(range(0, greatest(len(ws) - ${k - 1}, 0)),
+       |        i -> array_to_string(ws[i+1:i+$k], ' ')) AS gs FROM t),
+       |p AS (SELECT doc_id, list_transform(range(0, len(gs)),
+       |        i -> (${h60Sql("gs[i+1]")} % $M) * 2097152 + (1048576 - i)) AS ps FROM g),
+       |s AS (SELECT doc_id, list_distinct(list_transform(range(least($w, len(ps)) - 1, len(ps)),
+       |        e -> list_min(ps[greatest(e - $w + 2, 1) : e + 1]))) AS sel
+       |      FROM p WHERE len(ps) > 0)""".stripMargin
+  }
 
   /** Connected components over the minhash pairs via transitive closure
     * (components are tiny, so the closure stays small).
     */
   private def dedupClustersOracle(numHashes: Int, bands: Int, threshold: Double): String =
     s"""WITH RECURSIVE ${minhashPairsCte(numHashes, bands, threshold)},
-       |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM und
-       |  UNION
-       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-       |nodes AS (SELECT DISTINCT a AS node FROM und)
+       |${componentCtes("dup", "id_a", "id_b")}
        |SELECT n.node AS doc_id,
        |       least(n.node, min(r.b)) AS cluster_id,
        |       (least(n.node, min(r.b)) = n.node) AS keep
@@ -284,20 +289,11 @@ private[graft] object DedupGates {
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("source")),
         Pipeline.minhashPairs(s, dir))
     } {
-      {
-        s"""WITH RECURSIVE ${minhashPairsCte(64, 16, 0.5)},
-           |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-           |reach(a, b) AS (
-           |  SELECT a, b FROM und
-           |  UNION
-           |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |nodes AS (SELECT DISTINCT a AS node FROM und),
-           |dropped AS (
-           |  SELECT n.node FROM nodes n JOIN reach r ON r.a = n.node
-           |  GROUP BY n.node HAVING least(n.node, min(r.b)) <> n.node)
-           |SELECT doc_id, lang, source FROM documents
-           |WHERE doc_id NOT IN (SELECT node FROM dropped)""".stripMargin
-      }
+      s"""WITH RECURSIVE ${minhashPairsCte(64, 16, 0.5)},
+         |${componentCtes("dup", "id_a", "id_b")},
+         |$droppedCte
+         |SELECT doc_id, lang, source FROM documents
+         |WHERE doc_id NOT IN (SELECT node FROM dropped)""".stripMargin
     },
     Gate("dedup_prune_quality") { (s, dir) =>
       Dedup.pruneDuplicatesByScore(
@@ -308,15 +304,8 @@ private[graft] object DedupGates {
       // quality-aware pruning: same recursive closure, winner per cluster
       // by (n_chars, smallest id) via the {'s', 'ni'} struct-max
       s"""WITH RECURSIVE ${minhashPairsCte(64, 16, 0.5)},
-         |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |nodes AS (SELECT DISTINCT a AS node FROM und),
-         |lab AS (
-         |  SELECT n.node, least(n.node, min(r.b)) AS cluster_id
-         |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node),
+         |${componentCtes("dup", "id_a", "id_b")},
+         |${labelCte("lab")},
          |qsc AS (
          |  SELECT lab.node, lab.cluster_id, d.n_chars
          |  FROM lab JOIN documents d ON d.doc_id = lab.node),
@@ -334,15 +323,8 @@ private[graft] object DedupGates {
         s.read.parquet(s"$dir/documents.parquet"), Pipeline.minhashPairs(s, dir))
     } {
       s"""WITH RECURSIVE ${minhashPairsCte(64, 16, 0.5)},
-         |und AS (SELECT id_a AS a, id_b AS b FROM dup UNION SELECT id_b, id_a FROM dup),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |nodes AS (SELECT DISTINCT a AS node FROM und),
-         |dropped AS (
-         |  SELECT n.node FROM nodes n JOIN reach r ON r.a = n.node
-         |  GROUP BY n.node HAVING least(n.node, min(r.b)) <> n.node)
+         |${componentCtes("dup", "id_a", "id_b")},
+         |$droppedCte
          |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(CASE WHEN doc_id IN (SELECT node FROM dropped) THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
          |  CAST(sum(CASE WHEN doc_id IN (SELECT node FROM dropped) THEN 1 ELSE 0 END) AS DOUBLE)
@@ -440,24 +422,11 @@ private[graft] object DedupGates {
     Gate("winnow_fingerprints") { (s, dir) =>
       TextAnalysis.winnowFingerprints(s.read.parquet(s"$dir/documents.parquet"), k = 5, w = 4)
     } {
-      // Winnowing: packed = (h60(gram) % M) * 2^21 + (2^20 - pos), so the
-      // window MINIMUM is the smallest hash with rightmost-position ties —
-      // the robust-winnowing rule — and decoding is integer arithmetic.
-      {
-        val (k, w) = (5, 4)
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |g AS (SELECT doc_id, list_transform(range(0, greatest(len(ws) - ${k - 1}, 0)),
-           |        i -> array_to_string(ws[i+1:i+$k], ' ')) AS gs FROM t),
-           |p AS (SELECT doc_id, list_transform(range(0, len(gs)),
-           |        i -> (${h60Sql("gs[i+1]")} % $M) * 2097152 + (1048576 - i)) AS ps FROM g),
-           |s AS (SELECT doc_id, list_distinct(list_transform(range(least($w, len(ps)) - 1, len(ps)),
-           |        e -> list_min(ps[greatest(e - $w + 2, 1) : e + 1]))) AS sel
-           |      FROM p WHERE len(ps) > 0)
-           |SELECT doc_id,
-           |  1048576 - (pk % 2097152) AS pos,
-           |  pk // 2097152 AS gram_hash
-           |FROM (SELECT doc_id, unnest(sel) AS pk FROM s)""".stripMargin
-      }
+      s"""$winnowCtes
+         |SELECT doc_id,
+         |  1048576 - (pk % 2097152) AS pos,
+         |  pk // 2097152 AS gram_hash
+         |FROM (SELECT doc_id, unnest(sel) AS pk FROM s)""".stripMargin
     },
     Gate("winnow_overlap") { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -466,31 +435,21 @@ private[graft] object DedupGates {
     } {
       // Overlap vote: same winnow selection, then (pair, offset) counts
       // with the packed integer argmax (highest count, smallest offset).
-      {
-        val (k, w) = (5, 4)
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |g AS (SELECT doc_id, list_transform(range(0, greatest(len(ws) - ${k - 1}, 0)),
-           |        i -> array_to_string(ws[i+1:i+$k], ' ')) AS gs FROM t),
-           |p AS (SELECT doc_id, list_transform(range(0, len(gs)),
-           |        i -> (${h60Sql("gs[i+1]")} % $M) * 2097152 + (1048576 - i)) AS ps FROM g),
-           |s AS (SELECT doc_id, list_distinct(list_transform(range(least($w, len(ps)) - 1, len(ps)),
-           |        e -> list_min(ps[greatest(e - $w + 2, 1) : e + 1]))) AS sel
-           |      FROM p WHERE len(ps) > 0),
-           |f AS (SELECT doc_id, 1048576 - (pk % 2097152) AS pos, pk // 2097152 AS h
-           |      FROM (SELECT doc_id, unnest(sel) AS pk FROM s)),
-           |j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.pos - b.pos AS off
-           |      FROM f a JOIN f b ON a.h = b.h
-           |      WHERE a.doc_id < 50 AND b.doc_id >= 50),
-           |oc AS (SELECT id_a, id_b, off, CAST(count(*) AS BIGINT) AS cnt
-           |       FROM j GROUP BY id_a, id_b, off),
-           |agg AS (SELECT id_a, id_b, CAST(sum(cnt) AS BIGINT) AS n_matches,
-           |          max(cnt * 4194304 + (2097152 - (off + 1048576))) AS pk
-           |        FROM oc GROUP BY id_a, id_b)
-           |SELECT id_a, id_b, n_matches,
-           |  2097152 - (pk % 4194304) - 1048576 AS modal_offset,
-           |  pk // 4194304 AS n_at_modal
-           |FROM agg WHERE n_matches >= 2""".stripMargin
-      }
+      s"""$winnowCtes,
+         |f AS (SELECT doc_id, 1048576 - (pk % 2097152) AS pos, pk // 2097152 AS h
+         |      FROM (SELECT doc_id, unnest(sel) AS pk FROM s)),
+         |j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.pos - b.pos AS off
+         |      FROM f a JOIN f b ON a.h = b.h
+         |      WHERE a.doc_id < 50 AND b.doc_id >= 50),
+         |oc AS (SELECT id_a, id_b, off, CAST(count(*) AS BIGINT) AS cnt
+         |       FROM j GROUP BY id_a, id_b, off),
+         |agg AS (SELECT id_a, id_b, CAST(sum(cnt) AS BIGINT) AS n_matches,
+         |          max(cnt * 4194304 + (2097152 - (off + 1048576))) AS pk
+         |        FROM oc GROUP BY id_a, id_b)
+         |SELECT id_a, id_b, n_matches,
+         |  2097152 - (pk % 4194304) - 1048576 AS modal_offset,
+         |  pk // 4194304 AS n_at_modal
+         |FROM agg WHERE n_matches >= 2""".stripMargin
     },
     Gate("overlap_runs") { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")

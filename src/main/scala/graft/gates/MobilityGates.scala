@@ -3,8 +3,9 @@ package graft.gates
 import graft.Pipeline
 import graft.operators._
 import graft.sources.EventsAdapter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import Shared.{hav, staypointSegmentsCte, withMaterializedCtes}
+import Shared.{blockLocations, hav, staypointSegmentsCte, withMaterializedCtes}
 
 /** The trackintel chain: positionfixes, staypoints, triplegs, trips,
   * locations and tours, and the gates that read the chain's memos.
@@ -232,6 +233,46 @@ private[graft] object MobilityGates {
        |locs AS (
        |  SELECT user_id, rep, count(*) AS n_sp FROM rep GROUP BY user_id, rep)""".stripMargin
 
+  /** The location chain over the default staypoints: segments,
+    * centroids and the 100 m location components, ending in
+    * `rep(sid, user_id, rep)`.
+    */
+  private def locationVisitCtes: String =
+    s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
+          (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
+       |$cent2Cte,
+       |${locationCompCte(100.0)}""".stripMargin
+
+  /** [[locationVisitCtes]] plus the visits in staypoint order:
+    * `spk(sid, u, a_t, f_t)` and `rt`, each visit's `rtCols` over
+    * `rep r` joined to `spk k`.
+    */
+  private def visitCtes(rtCols: String): String =
+    s"""$locationVisitCtes,
+       |spk AS (
+       |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
+       |rt AS (
+       |  SELECT $rtCols
+       |  FROM rep r JOIN spk k ON k.sid = r.sid)""".stripMargin
+
+  /** Each user's visits as a symbol string `seqs(user_id, seq)`: a
+    * location's symbol is its first-visit rank `rk(user_id, rep, rnk)`
+    * as a letter.
+    */
+  private def symbolSeqCtes: String =
+    s"""${visitCtes("r.user_id, r.rep, k.a_t, k.sid")},
+       |fv AS (
+       |  SELECT user_id, rep, min(a_t) AS fv_t, min(sid) AS fv_sid
+       |  FROM rt GROUP BY user_id, rep),
+       |rk AS (
+       |  SELECT user_id, rep,
+       |         row_number() OVER (PARTITION BY user_id ORDER BY fv_t, fv_sid) - 1 AS rnk
+       |  FROM fv),
+       |seqs AS (
+       |  SELECT t.user_id, string_agg(chr(CAST(97 + rk.rnk AS INT)), '' ORDER BY t.a_t, t.sid) AS seq
+       |  FROM rt t JOIN rk ON rk.user_id = t.user_id AND rk.rep = t.rep
+       |  GROUP BY t.user_id)""".stripMargin
+
   private def locationsOracle(distM: Double, timeUs: Long, epsM: Double): String =
     s"""${staypointSegmentsCte(distM, timeUs)},
        |$cent2Cte,
@@ -272,6 +313,23 @@ private[graft] object MobilityGates {
        |       w.user_id, $select
        |FROM win w""".stripMargin
   }
+
+  /** [[toursOracle]] over the pipeline's staypoint and trip parameters,
+    * with 30-day tours.
+    */
+  private def pipelineToursOracle(maxTourDistM: Double, locationMode: Boolean): String =
+    withMaterializedCtes(toursOracle(
+      distM = Pipeline.staypointParams.distThresholdMeters,
+      timeUs = (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong,
+      activityThresholdSec = 120.0 * 60.0, gapUs = (1e7 * 60e6).toLong,
+      maxTourDistM = maxTourDistM, maxTourTimeUs = (30.0 * 86400e6).toLong,
+      locationMode = locationMode))
+
+  /** The checked tour columns: ids, start and end in µs, trip count. */
+  private def tourRows(tours: DataFrame): DataFrame =
+    tours.select(col("id"), col("user_id"),
+      unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
+      size(col("trips")).cast("long").as("n_trips"))
 
   /** Trips-of-each-tour oracle (get_trips_grouped, trips.py:12-51): under
     * maxNrGaps = 0 a tour's member trips are exactly the contiguous
@@ -598,40 +656,22 @@ private[graft] object MobilityGates {
     // attribution). Output = the tours table (same oracle as
     // tours_generate), integer-exact and oracle-checked like any gate.
     Gate("tours__prolog") { (s, dir) =>
-      Pipeline.tours(s, dir)
-        .select(col("id"), col("user_id"),
-          unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
-          size(col("trips")).cast("long").as("n_trips"))
+      tourRows(Pipeline.tours(s, dir))
     } {
       // the shared mobility-chain prolog returns the tours table itself —
       // same oracle as tours_generate by construction
-      withMaterializedCtes(toursOracle(
-        distM = Pipeline.staypointParams.distThresholdMeters,
-        timeUs = (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong,
-        activityThresholdSec = 120.0 * 60.0, gapUs = (1e7 * 60e6).toLong,
-        maxTourDistM = 200.0, maxTourTimeUs = (30.0 * 86400e6).toLong,
-        locationMode = false))
+      pipelineToursOracle(maxTourDistM = 200.0, locationMode = false)
     },
     Gate("tours_generate") { (s, dir) =>
-      Pipeline.tours(s, dir)
-        .select(col("id"), col("user_id"),
-          unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
-          size(col("trips")).cast("long").as("n_trips"))
+      tourRows(Pipeline.tours(s, dir))
     } {
-      withMaterializedCtes(toursOracle(
-        distM = Pipeline.staypointParams.distThresholdMeters,
-        timeUs = (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong,
-        activityThresholdSec = 120.0 * 60.0, gapUs = (1e7 * 60e6).toLong,
-        maxTourDistM = 200.0, maxTourTimeUs = (30.0 * 86400e6).toLong,
-        locationMode = false))
+      pipelineToursOracle(maxTourDistM = 200.0, locationMode = false)
     },
     Gate("tours_gaps") { (s, dir) => // gap budget 1: tours may bridge one discontinuity
       val (_, tours) = TourGenerator.generate(Pipeline.trips(s, dir), None,
         TourGenerator.Params(maxDistMeters = 200.0, maxTimeDays = 30.0, maxNrGaps = 1),
         share = Share.materialize)
-      tours.select(col("id"), col("user_id"),
-        unix_micros(col("started_at")).as("s_us"), unix_micros(col("finished_at")).as("f_us"),
-        size(col("trips")).cast("long").as("n_trips"))
+      tourRows(tours)
     } {
       withMaterializedCtes(toursGapsOracle(
         distM = Pipeline.staypointParams.distThresholdMeters,
@@ -659,12 +699,7 @@ private[graft] object MobilityGates {
       tours.select(col("id"), col("user_id"), col("location_id"),
         size(col("trips")).cast("long").as("n_trips"))
     } {
-      withMaterializedCtes(toursOracle(
-        distM = Pipeline.staypointParams.distThresholdMeters,
-        timeUs = (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong,
-        activityThresholdSec = 120.0 * 60.0, gapUs = (1e7 * 60e6).toLong,
-        maxTourDistM = 100.0, maxTourTimeUs = (30.0 * 86400e6).toLong,
-        locationMode = true))
+      pipelineToursOracle(maxTourDistM = 100.0, locationMode = true)
     },
     Gate("od_flows") { (s, dir) =>
       Metrics.odFlows(Pipeline.staypointsWithLocation(s, dir))
@@ -675,10 +710,7 @@ private[graft] object MobilityGates {
       // key is the component's smallest member staypoint id (rep) — the
       // engine-neutral key odFlows also derives
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
+        s"""$locationVisitCtes,
            |odt AS (
            |  SELECT user_id, rep AS f, lead(rep) OVER (PARTITION BY user_id ORDER BY sid) AS t
            |  FROM rep)
@@ -689,10 +721,7 @@ private[graft] object MobilityGates {
       Metrics.locationDiversity(Pipeline.staypointsWithLocation(s, dir))
     } {
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
+        s"""$locationVisitCtes,
            |lvc AS (SELECT user_id, rep, CAST(count(*) AS BIGINT) AS c FROM rep GROUP BY user_id, rep)
            |SELECT user_id, CAST(sum(c) AS BIGINT) AS n_visits,
            |       CAST(count(*) AS BIGINT) AS n_locations,
@@ -704,15 +733,7 @@ private[graft] object MobilityGates {
       Metrics.returnTimes(Pipeline.staypointsWithLocation(s, dir))
     } {
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
-           |spk AS (
-           |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
-           |rt AS (
-           |  SELECT r.user_id, r.rep, k.a_t, k.f_t, r.sid
-           |  FROM rep r JOIN spk k ON k.sid = r.sid),
+        s"""${visitCtes("r.user_id, r.rep, k.a_t, k.f_t, r.sid")},
            |g AS (
            |  SELECT user_id, rep,
            |         row_number() OVER (PARTITION BY user_id, rep ORDER BY a_t, sid) - 1 AS revisit,
@@ -729,15 +750,7 @@ private[graft] object MobilityGates {
       // share over the same rep/spk visit chain; the pooled ratio is one
       // IEEE division over exact integer sums
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
-           |spk AS (
-           |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
-           |rt AS (
-           |  SELECT r.user_id, r.rep, k.a_t
-           |  FROM rep r JOIN spk k ON k.sid = r.sid),
+        s"""${visitCtes("r.user_id, r.rep, k.a_t")},
            |vis AS (
            |  SELECT user_id, rep,
            |         CAST((((a_t % 604800000000 + 604800000000) % 604800000000)
@@ -762,15 +775,7 @@ private[graft] object MobilityGates {
       // markov train/test split + argmax transition + hit counting over
       // the same rep/spk visit chain as return_times
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
-           |spk AS (
-           |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
-           |rt AS (
-           |  SELECT r.user_id, r.rep, k.a_t, k.sid
-           |  FROM rep r JOIN spk k ON k.sid = r.sid),
+        s"""${visitCtes("r.user_id, r.rep, k.a_t, k.sid")},
            |vis AS (
            |  SELECT user_id, rep AS loc,
            |         row_number() OVER (PARTITION BY user_id ORDER BY a_t, sid) - 1 AS pos,
@@ -804,26 +809,7 @@ private[graft] object MobilityGates {
       // longest prior match is a list_max over candidate lengths with a
       // character strpos against the prefix before the cursor
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
-           |spk AS (
-           |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
-           |rt AS (
-           |  SELECT r.user_id, r.rep, k.a_t, k.sid
-           |  FROM rep r JOIN spk k ON k.sid = r.sid),
-           |fv AS (
-           |  SELECT user_id, rep, min(a_t) AS fv_t, min(sid) AS fv_sid
-           |  FROM rt GROUP BY user_id, rep),
-           |rk AS (
-           |  SELECT user_id, rep,
-           |         row_number() OVER (PARTITION BY user_id ORDER BY fv_t, fv_sid) - 1 AS rnk
-           |  FROM fv),
-           |seqs AS (
-           |  SELECT t.user_id, string_agg(chr(CAST(97 + rk.rnk AS INT)), '' ORDER BY t.a_t, t.sid) AS seq
-           |  FROM rt t JOIN rk ON rk.user_id = t.user_id AND rk.rep = t.rep
-           |  GROUP BY t.user_id),
+        s"""${symbolSeqCtes},
            |lz(user_id, seq, n, p, c) AS (
            |  SELECT user_id, seq, length(seq), 1, 0 FROM seqs
            |  UNION ALL
@@ -848,26 +834,7 @@ private[graft] object MobilityGates {
       // per symbol + the same strpos prefix probe as lz_complexity; the
       // checked surface is the pure-integer (n, N, sum lambda) triple
       withMaterializedCtes(
-        s"""${staypointSegmentsCte(Pipeline.staypointParams.distThresholdMeters,
-               (Pipeline.staypointParams.timeThresholdMinutes * 60e6).toLong)},
-           |$cent2Cte,
-           |${locationCompCte(100.0)},
-           |spk AS (
-           |  SELECT row_number() OVER (ORDER BY u, a_t, f_t) - 1 AS sid, u, a_t, f_t FROM kept),
-           |rt AS (
-           |  SELECT r.user_id, r.rep, k.a_t, k.sid
-           |  FROM rep r JOIN spk k ON k.sid = r.sid),
-           |fv AS (
-           |  SELECT user_id, rep, min(a_t) AS fv_t, min(sid) AS fv_sid
-           |  FROM rt GROUP BY user_id, rep),
-           |rk AS (
-           |  SELECT user_id, rep,
-           |         row_number() OVER (PARTITION BY user_id ORDER BY fv_t, fv_sid) - 1 AS rnk
-           |  FROM fv),
-           |seqs AS (
-           |  SELECT t.user_id, string_agg(chr(CAST(97 + rk.rnk AS INT)), '' ORDER BY t.a_t, t.sid) AS seq
-           |  FROM rt t JOIN rk ON rk.user_id = t.user_id AND rk.rep = t.rep
-           |  GROUP BY t.user_id),
+        s"""${symbolSeqCtes},
            |nl AS (
            |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_locations FROM rk GROUP BY user_id),
            |pos AS (
@@ -964,8 +931,7 @@ private[graft] object MobilityGates {
          |HAVING avg(speed) IS NOT NULL""".stripMargin
     },
     Gate("merge_staypoints") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir)
-        .withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
         .select(col("id"), col("user_id"), col("started_at"), col("finished_at"), col("location_id"))
       val emptyTpls = sp.filter(lit(false)).select(col("id"), col("user_id"), col("started_at"))
       StaypointMerger.mergeStaypoints(sp, emptyTpls, maxTimeGapMinutes = 2880)

@@ -2,13 +2,95 @@ package graft.gates
 
 import graft.operators._
 import graft.sources.EventsAdapter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import Shared.hav
+import Shared.{blockLocations, hav, olsFitSql, wideOlsFitSql}
 
 /** Per-user mobility metrics and location labelling over the interval
   * table: tracking quality, gyration, flow models, entropies, motifs, modal split.
   */
 private[graft] object MobilityMetricsGates {
+
+  /** `cuts(user_id, cs, cf)`: each interval cut at UTC day boundaries. */
+  private val dayCutsCte: String =
+    """cuts AS (
+      |  SELECT user_id, greatest(s_us, d * 86400000000) AS cs,
+      |         least(f_us, (d + 1) * 86400000000) AS cf
+      |  FROM intervals, LATERAL (SELECT unnest(range(s_us // 86400000000, f_us // 86400000000 + 1)) AS d)
+      |  WHERE f_us - s_us > 0 AND least(f_us, (d + 1) * 86400000000) > greatest(s_us, d * 86400000000)
+      |)""".stripMargin
+
+  /** The interval table's block-first visits, one per (user, 12-visit
+    * block), each at its block's location.
+    */
+  private def blockVisits(s: SparkSession, dir: String): DataFrame =
+    EventsAdapter.intervals(s, dir)
+      .filter(expr("k % 12 = 0"))
+      .withColumn("location_id", expr("(k div 12) % 4"))
+
+  /** The oracle side of [[blockVisits]] and the flows between them:
+    * `vis`, the transitions `tr(user_id, f, t)`, the flow counts
+    * `fl(f, t, <flow>)` and the exact micro-degree centroid sums
+    * `ce(loc, sx, sy, <mass>)`.
+    */
+  private def flowCtes(flow: String, mass: String): String =
+    s"""${EventsAdapter.pfsSql}, vis AS (
+       |  SELECT user_id, id, s_us, (k // 12) % 4 AS loc, lon, lat
+       |  FROM intervals WHERE k % 12 = 0),
+       |tr AS (
+       |  SELECT user_id, loc AS f, lead(loc) OVER (PARTITION BY user_id ORDER BY s_us, id) AS t
+       |  FROM vis),
+       |fl AS (
+       |  SELECT f, t, CAST(count(*) AS BIGINT) AS $flow
+       |  FROM tr WHERE t IS NOT NULL AND t != f GROUP BY f, t),
+       |ce AS (
+       |  SELECT loc,
+       |         sum(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT)) AS sx,
+       |         sum(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT)) AS sy,
+       |         CAST(count(*) AS BIGINT) AS $mass
+       |  FROM vis GROUP BY loc)""".stripMargin
+
+  /** The radiation model's pair table over [[flowCtes]]: centroids
+    * `cc`, OD pairs with masses and floor-metre distance `prd`, and the
+    * intervening mass `sb(f, t, s_between)`.
+    */
+  private def radiationCtes: String =
+    s"""${flowCtes(flow = "observed", mass = "m")},
+       |cc AS (
+       |  SELECT loc, m,
+       |         (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clon,
+       |         (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clat
+       |  FROM ce),
+       |pr AS (
+       |  SELECT fl.f, fl.t, fl.observed, a.m AS m_from, b.m AS m_to,
+       |         a.clon AS flon, a.clat AS flat,
+       |         CAST(floor(${hav("a.clon", "a.clat", "b.clon", "b.clat")}) AS BIGINT) AS dist_m
+       |  FROM fl JOIN cc a ON fl.f = a.loc JOIN cc b ON fl.t = b.loc),
+       |prd AS (SELECT * FROM pr),
+       |sb AS (
+       |  SELECT prd.f, prd.t, CAST(sum(k.m) AS BIGINT) AS s_between
+       |  FROM prd JOIN cc k ON k.loc != prd.f AND k.loc != prd.t
+       |  WHERE CAST(floor(${hav("prd.flon", "prd.flat", "k.clon", "k.clat")}) AS BIGINT) < prd.dist_m
+       |  GROUP BY prd.f, prd.t)""".stripMargin
+
+  /** OSNA time frames over `sp(.., mt)`: each visit's frame by its
+    * midpoint `lab(.., label)`, then the weekday visits' weighted
+    * durations and home/work group `frames(.., dur, grp)`.
+    */
+  private val osnaFramesCtes: String =
+    """lab AS (
+      |  SELECT *, CASE WHEN (dayofweek(mt) + 6) % 7 >= 5 THEN 'weekend'
+      |                 WHEN hour(mt) >= 2 AND hour(mt) < 8 THEN 'rest'
+      |                 WHEN hour(mt) >= 8 AND hour(mt) < 19 THEN 'work'
+      |                 ELSE 'leisure' END AS label
+      |  FROM sp
+      |), frames AS (
+      |  SELECT *, CASE label WHEN 'rest' THEN (f_us - s_us) * 0.739
+      |                       WHEN 'leisure' THEN (f_us - s_us) * 0.358
+      |                       ELSE CAST(f_us - s_us AS DOUBLE) END AS dur,
+      |         CASE WHEN label IN ('rest','leisure') THEN 'home'
+      |              WHEN label = 'work' THEN 'work' END AS grp
+      |  FROM lab WHERE label != 'weekend'""".stripMargin
 
   /** Shared CTE chain for the Song entropy gates: the per-user visit
     * window (first 120 visits in adapter order), location counts, the
@@ -95,12 +177,7 @@ private[graft] object MobilityMetricsGates {
       Metrics.temporalTrackingQuality(EventsAdapter.intervals(s, dir), "week")
         .select(col("user_id"), unix_micros(col("week_sunday").cast("timestamp")).as("week_us"), col("quality"))
     } {
-      s"""${EventsAdapter.pfsSql}, cuts AS (
-         |  SELECT user_id, greatest(s_us, d * 86400000000) AS cs,
-         |         least(f_us, (d + 1) * 86400000000) AS cf
-         |  FROM intervals, LATERAL (SELECT unnest(range(s_us // 86400000000, f_us // 86400000000 + 1)) AS d)
-         |  WHERE f_us - s_us > 0 AND least(f_us, (d + 1) * 86400000000) > greatest(s_us, d * 86400000000)
-         |)
+      s"""${EventsAdapter.pfsSql}, $dayCutsCte
          |SELECT user_id,
          |  epoch_us(date_trunc('week', make_timestamp(cs)) + INTERVAL 6 DAY) AS week_us,
          |  CAST(sum(cf - cs) AS DOUBLE) / 604800000000.0 AS quality
@@ -110,12 +187,7 @@ private[graft] object MobilityMetricsGates {
       Metrics.temporalTrackingQuality(EventsAdapter.intervals(s, dir), "weekday")
         .select(col("user_id"), col("weekday").cast("long").as("weekday"), col("quality"))
     } {
-      s"""${EventsAdapter.pfsSql}, cuts AS (
-         |  SELECT user_id, greatest(s_us, d * 86400000000) AS cs,
-         |         least(f_us, (d + 1) * 86400000000) AS cf
-         |  FROM intervals, LATERAL (SELECT unnest(range(s_us // 86400000000, f_us // 86400000000 + 1)) AS d)
-         |  WHERE f_us - s_us > 0 AND least(f_us, (d + 1) * 86400000000) > greatest(s_us, d * 86400000000)
-         |), d0 AS (SELECT min(cs) // 86400000000 AS d0 FROM cuts)
+      s"""${EventsAdapter.pfsSql}, $dayCutsCte, d0 AS (SELECT min(cs) // 86400000000 AS d0 FROM cuts)
          |SELECT user_id,
          |  CAST((dayofweek(make_timestamp(cs)) + 6) % 7 AS BIGINT) AS weekday,
          |  CAST(sum(cf - cs) AS DOUBLE) /
@@ -126,12 +198,7 @@ private[graft] object MobilityMetricsGates {
       Metrics.temporalTrackingQuality(EventsAdapter.intervals(s, dir), "hour")
         .select(col("user_id"), col("hour").cast("long").as("hour"), col("quality"))
     } {
-      s"""${EventsAdapter.pfsSql}, cuts AS (
-         |  SELECT user_id, greatest(s_us, d * 86400000000) AS cs,
-         |         least(f_us, (d + 1) * 86400000000) AS cf
-         |  FROM intervals, LATERAL (SELECT unnest(range(s_us // 86400000000, f_us // 86400000000 + 1)) AS d)
-         |  WHERE f_us - s_us > 0 AND least(f_us, (d + 1) * 86400000000) > greatest(s_us, d * 86400000000)
-         |), cuts_h AS (
+      s"""${EventsAdapter.pfsSql}, $dayCutsCte, cuts_h AS (
          |  SELECT user_id, greatest(cs, h * 3600000000) AS cs,
          |         least(cf, (h + 1) * 3600000000) AS cf
          |  FROM cuts, LATERAL (SELECT unnest(range(cs // 3600000000, cf // 3600000000 + 1)) AS h)
@@ -170,7 +237,7 @@ private[graft] object MobilityMetricsGates {
          |GROUP BY i.user_id""".stripMargin
     },
     Gate("commute_distance") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       Metrics.commuteDistance(sp)
     } {
       s"""${EventsAdapter.pfsSql},
@@ -213,20 +280,7 @@ private[graft] object MobilityMetricsGates {
          |  SELECT CAST(floor(ln(CAST(CAST(1 AS BIGINT) << CAST(bucket AS INT) AS DOUBLE)) * 1e6) AS BIGINT) AS x,
          |         CAST(floor(ln(CAST(c AS DOUBLE)) * 1e6) AS BIGINT) AS y
          |  FROM jb),
-         |ag AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-         |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-         |  FROM xy),
-         |sl AS (
-         |  SELECT n_buckets, sx, sy,
-         |         CAST(n_buckets * sxy - sx * sy AS DOUBLE)
-         |           / CAST(n_buckets * sxx - sx * sx AS DOUBLE) AS slope
-         |  FROM ag)
-         |SELECT n_buckets, slope,
-         |       ((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))
-         |          / CAST(n_buckets AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS intercept
-         |FROM sl""".stripMargin
+         |${olsFitSql("n_buckets", "slope", "intercept")}""".stripMargin
     },
     Gate("dwell_time_fit") { (s, dir) =>
       Metrics.dwellTimeFit(EventsAdapter.intervals(s, dir))
@@ -243,45 +297,15 @@ private[graft] object MobilityMetricsGates {
          |  SELECT CAST(floor(ln(CAST(CAST(1 AS BIGINT) << CAST(bucket AS INT) AS DOUBLE)) * 1e6) AS BIGINT) AS x,
          |         CAST(floor(ln(CAST(c AS DOUBLE)) * 1e6) AS BIGINT) AS y
          |  FROM jb),
-         |ag AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-         |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-         |  FROM xy),
-         |sl AS (
-         |  SELECT n_buckets, sx, sy,
-         |         CAST(n_buckets * sxy - sx * sy AS DOUBLE)
-         |           / CAST(n_buckets * sxx - sx * sx AS DOUBLE) AS slope
-         |  FROM ag)
-         |SELECT n_buckets, slope,
-         |       ((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))
-         |          / CAST(n_buckets AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS intercept
-         |FROM sl""".stripMargin
+         |${olsFitSql("n_buckets", "slope", "intercept")}""".stripMargin
     },
     // one visit row per (user, tour block): the block's first fix
     Gate("od_gravity_fit") { (s, dir) =>
-      Metrics.odGravityFit(
-        EventsAdapter.intervals(s, dir)
-          .filter(expr("k % 12 = 0"))
-          .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.odGravityFit(blockVisits(s, dir))
     } {
       // Zipf gravity law: flows between block-first visits, centroids as
       // exact micro-degree sums divided once, ln-ln OLS over OD pairs
-      s"""${EventsAdapter.pfsSql}, vis AS (
-         |  SELECT user_id, id, s_us, (k // 12) % 4 AS loc, lon, lat
-         |  FROM intervals WHERE k % 12 = 0),
-         |tr AS (
-         |  SELECT user_id, loc AS f, lead(loc) OVER (PARTITION BY user_id ORDER BY s_us, id) AS t
-         |  FROM vis),
-         |fl AS (
-         |  SELECT f, t, CAST(count(*) AS BIGINT) AS flow
-         |  FROM tr WHERE t IS NOT NULL AND t != f GROUP BY f, t),
-         |ce AS (
-         |  SELECT loc,
-         |         sum(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT)) AS sx,
-         |         sum(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT)) AS sy,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM vis GROUP BY loc),
+      s"""${flowCtes(flow = "flow", mass = "n")},
          |cc AS (
          |  SELECT loc, (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0 AS clon,
          |         (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0 AS clat
@@ -313,45 +337,12 @@ private[graft] object MobilityMetricsGates {
          |FROM sl""".stripMargin
     },
     Gate("od_radiation") { (s, dir) =>
-      Metrics.radiationModel(
-        EventsAdapter.intervals(s, dir)
-          .filter(expr("k % 12 = 0"))
-          .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.radiationModel(blockVisits(s, dir))
     } {
       // Simini radiation model: same vis/flow/centroid chain as gravity,
       // s_ij = intervening mass via floor-metre distance comparison,
       // DECIMAL-exact prediction terms with one double division
-      s"""${EventsAdapter.pfsSql}, vis AS (
-         |  SELECT user_id, id, s_us, (k // 12) % 4 AS loc, lon, lat
-         |  FROM intervals WHERE k % 12 = 0),
-         |tr AS (
-         |  SELECT user_id, loc AS f, lead(loc) OVER (PARTITION BY user_id ORDER BY s_us, id) AS t
-         |  FROM vis),
-         |fl AS (
-         |  SELECT f, t, CAST(count(*) AS BIGINT) AS observed
-         |  FROM tr WHERE t IS NOT NULL AND t != f GROUP BY f, t),
-         |ce AS (
-         |  SELECT loc,
-         |         sum(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT)) AS sx,
-         |         sum(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT)) AS sy,
-         |         CAST(count(*) AS BIGINT) AS m
-         |  FROM vis GROUP BY loc),
-         |cc AS (
-         |  SELECT loc, m,
-         |         (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clon,
-         |         (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clat
-         |  FROM ce),
-         |pr AS (
-         |  SELECT fl.f, fl.t, fl.observed, a.m AS m_from, b.m AS m_to,
-         |         a.clon AS flon, a.clat AS flat,
-         |         CAST(floor(${hav("a.clon", "a.clat", "b.clon", "b.clat")}) AS BIGINT) AS dist_m
-         |  FROM fl JOIN cc a ON fl.f = a.loc JOIN cc b ON fl.t = b.loc),
-         |prd AS (SELECT * FROM pr),
-         |sb AS (
-         |  SELECT prd.f, prd.t, CAST(sum(k.m) AS BIGINT) AS s_between
-         |  FROM prd JOIN cc k ON k.loc != prd.f AND k.loc != prd.t
-         |  WHERE CAST(floor(${hav("prd.flon", "prd.flat", "k.clon", "k.clat")}) AS BIGINT) < prd.dist_m
-         |  GROUP BY prd.f, prd.t)
+      s"""$radiationCtes
          |SELECT prd.f AS from_loc, prd.t AS to_loc, prd.dist_m,
          |       prd.m_from, prd.m_to,
          |       CAST(coalesce(sb.s_between, 0) AS BIGINT) AS s_between,
@@ -365,45 +356,12 @@ private[graft] object MobilityMetricsGates {
     // Lenormand 2016 CPC scorecard: radiation vs fixed-exponent gravity
     // against the observed OD matrix, exact ppm integers
     Gate("flow_model_cpc") { (s, dir) =>
-      Metrics.flowModelCpc(
-        EventsAdapter.intervals(s, dir)
-          .filter(expr("k % 12 = 0"))
-          .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.flowModelCpc(blockVisits(s, dir))
     } {
       // Lenormand CPC: radiation + inverse-square gravity weights and the
       // production-constrained predictions quantized by HUGEINT floor
       // division — mirrors Metrics.flowModelCpc's DECIMAL(38,0) math
-      s"""${EventsAdapter.pfsSql}, vis AS (
-         |  SELECT user_id, id, s_us, (k // 12) % 4 AS loc, lon, lat
-         |  FROM intervals WHERE k % 12 = 0),
-         |tr AS (
-         |  SELECT user_id, loc AS f, lead(loc) OVER (PARTITION BY user_id ORDER BY s_us, id) AS t
-         |  FROM vis),
-         |fl AS (
-         |  SELECT f, t, CAST(count(*) AS BIGINT) AS observed
-         |  FROM tr WHERE t IS NOT NULL AND t != f GROUP BY f, t),
-         |ce AS (
-         |  SELECT loc,
-         |         sum(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT)) AS sx,
-         |         sum(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT)) AS sy,
-         |         CAST(count(*) AS BIGINT) AS m
-         |  FROM vis GROUP BY loc),
-         |cc AS (
-         |  SELECT loc, m,
-         |         (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clon,
-         |         (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)) / 1000000.0 AS clat
-         |  FROM ce),
-         |pr AS (
-         |  SELECT fl.f, fl.t, fl.observed, a.m AS m_from, b.m AS m_to,
-         |         a.clon AS flon, a.clat AS flat,
-         |         CAST(floor(${hav("a.clon", "a.clat", "b.clon", "b.clat")}) AS BIGINT) AS dist_m
-         |  FROM fl JOIN cc a ON fl.f = a.loc JOIN cc b ON fl.t = b.loc),
-         |prd AS (SELECT * FROM pr),
-         |sb AS (
-         |  SELECT prd.f, prd.t, CAST(sum(k.m) AS BIGINT) AS s_between
-         |  FROM prd JOIN cc k ON k.loc != prd.f AND k.loc != prd.t
-         |  WHERE CAST(floor(${hav("prd.flon", "prd.flat", "k.clon", "k.clat")}) AS BIGINT) < prd.dist_m
-         |  GROUP BY prd.f, prd.t),
+      s"""$radiationCtes,
          |fin AS (
          |  SELECT prd.f, prd.observed, prd.m_from, prd.m_to, prd.dist_m,
          |         CAST(coalesce(sb.s_between, 0) AS HUGEINT) AS s
@@ -441,8 +399,7 @@ private[graft] object MobilityMetricsGates {
     // Song et al. 2010 entropy ladder per user (random / uncorrelated /
     // LZ76-temporal) over the location-visit sequence
     Gate("location_entropy") { (s, dir) =>
-      Metrics.locationEntropyQ(EventsAdapter.intervals(s, dir)
-        .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.locationEntropyQ(blockLocations(s, dir))
     } {
       // Song entropy ladder: quantized-ln Shannon numerator plus the LZ76
       // parse of the per-user location-symbol string — the same recursive
@@ -466,8 +423,7 @@ private[graft] object MobilityMetricsGates {
     // Fano-bound max predictability for both entropy rungs — exact
     // integer grid argmax, no transcendental bisection
     Gate("predictability_bound") { (s, dir) =>
-      Metrics.predictabilityBound(EventsAdapter.intervals(s, dir)
-        .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.predictabilityBound(blockLocations(s, dir))
     } {
       // Fano grid argmax: F(j) exact-integer per (user, j), admission by
       // cross-multiplication, max admitted j per user; single-location
@@ -508,8 +464,7 @@ private[graft] object MobilityMetricsGates {
     // the ladder's order-1 Markov rung: plug-in conditional entropy
     // H(X_t | X_{t-1}) over the same capped visit window
     Gate("location_markov_entropy") { (s, dir) =>
-      Metrics.markovEntropyQ(EventsAdapter.intervals(s, dir)
-        .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.markovEntropyQ(blockLocations(s, dir))
     } {
       // order-1 Markov rung of the ladder: plug-in conditional entropy
       // from transition counts — integer quantized-ln numerator, one
@@ -540,8 +495,7 @@ private[graft] object MobilityMetricsGates {
     // the finer visit-sequence signature; this one is the paper's
     // unlabeled-graph class
     Gate("mobility_motifs_canonical") { (s, dir) =>
-      Metrics.mobilityMotifsCanonical(EventsAdapter.intervals(s, dir)
-          .withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.mobilityMotifsCanonical(blockLocations(s, dir))
         .groupBy(col("n_nodes"), col("n_edges"), col("motif_id"))
         .agg(count(lit(1)).cast("long").as("n_user_days"))
     } {
@@ -595,7 +549,7 @@ private[graft] object MobilityMetricsGates {
          |GROUP BY 1, 2, 3""".stripMargin
     },
     Gate("mobility_motifs") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       Metrics.mobilityMotifs(sp)
     } {
       // Schneider daily motifs: ordered day sequence, consecutive-repeat
@@ -625,9 +579,7 @@ private[graft] object MobilityMetricsGates {
          |FROM m GROUP BY 1, 2, 3""".stripMargin
     },
     Gate("returners_explorers") { (s, dir) =>
-      Metrics.kRadiusGyration(
-        EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4")),
-        kTop = 2)
+      Metrics.kRadiusGyration(blockLocations(s, dir), kTop = 2)
     } {
       // Pappalardo returners/explorers: rg twice (all visits; top-2
       // locations only), floored-metre comparison for the flag
@@ -663,8 +615,7 @@ private[graft] object MobilityMetricsGates {
          |FROM rga a JOIN rgk k ON a.user_id = k.user_id""".stripMargin
     },
     Gate("location_growth_fit") { (s, dir) =>
-      Metrics.locationGrowthFit(
-        EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.locationGrowthFit(blockLocations(s, dir))
     } {
       // Song exploration curve S(t) ~ t^mu: heaps_fit's cumulative-spine
       // lnq-OLS over (visit index, new-location discoveries)
@@ -683,27 +634,10 @@ private[graft] object MobilityMetricsGates {
          |  SELECT CAST(floor(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS x,
          |         CAST(floor(ln(CAST(v AS DOUBLE)) * 1e6) AS BIGINT) AS y
          |  FROM cum),
-         |ag AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_points,
-         |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-         |  FROM xy),
-         |sl AS (
-         |  SELECT n_points, sx, sy,
-         |         CAST(CAST(n_points AS HUGEINT) * CAST(sxy AS HUGEINT)
-         |              - CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
-         |           / CAST(CAST(n_points AS HUGEINT) * CAST(sxx AS HUGEINT)
-         |                  - CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS DOUBLE) AS beta
-         |  FROM ag)
-         |SELECT n_points, beta,
-         |       ((CAST(sy AS DOUBLE) - beta * CAST(sx AS DOUBLE))
-         |          / CAST(n_points AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS log_k
-         |FROM sl""".stripMargin
+         |${wideOlsFitSql("n_points", "beta", "log_k")}""".stripMargin
     },
     Gate("uniqueness_risk") { (s, dir) =>
-      Metrics.uniquenessRisk(
-        EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4")),
-        kTop = 2)
+      Metrics.uniquenessRisk(blockLocations(s, dir), kTop = 2)
     } {
       // de Montjoye top-2-location anonymity-set histogram
       s"""${EventsAdapter.pfsSql}, sp AS (
@@ -725,7 +659,7 @@ private[graft] object MobilityMetricsGates {
          |FROM ss GROUP BY sz""".stripMargin
     },
     Gate("location_freq") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       LocationLabelling.freqMethod(sp).select(col("id"), col("purpose"))
     } {
       s"""${EventsAdapter.pfsSql}, sp AS (
@@ -738,8 +672,7 @@ private[graft] object MobilityMetricsGates {
          |FROM sp s LEFT JOIN ranked r ON s.user_id = r.user_id AND s.loc = r.loc""".stripMargin
     },
     Gate("location_rank_curve") { (s, dir) =>
-      Metrics.locationRankCurve(
-        EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.locationRankCurve(blockLocations(s, dir))
     } {
       // Gonzalez visit-frequency rank curve: per-user ranks off the
       // bounded (user, loc) count table, pooled corpus-wide
@@ -758,8 +691,7 @@ private[graft] object MobilityMetricsGates {
          |FROM rk, tot GROUP BY rank, tot.tot""".stripMargin
     },
     Gate("home_stay_share") { (s, dir) =>
-      Metrics.homeStayShare(
-        EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4")))
+      Metrics.homeStayShare(blockLocations(s, dir))
     } {
       // FREQ-home dwell share: rank-1 total-dwell location over the same
       // bounded per-(user, loc) table
@@ -781,26 +713,14 @@ private[graft] object MobilityMetricsGates {
          |FROM rk GROUP BY user_id""".stripMargin
     },
     Gate("location_osna") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       LocationLabelling.osnaMethod(sp).select(col("id"), col("purpose"))
     } {
       s"""${EventsAdapter.pfsSql}, sp AS (
          |  SELECT id, user_id, s_us, f_us, (k // 12) % 4 AS loc,
          |         make_timestamp(s_us + (f_us - s_us) // 2) AS mt
          |  FROM intervals
-         |), lab AS (
-         |  SELECT *, CASE WHEN (dayofweek(mt) + 6) % 7 >= 5 THEN 'weekend'
-         |                 WHEN hour(mt) >= 2 AND hour(mt) < 8 THEN 'rest'
-         |                 WHEN hour(mt) >= 8 AND hour(mt) < 19 THEN 'work'
-         |                 ELSE 'leisure' END AS label
-         |  FROM sp
-         |), frames AS (
-         |  SELECT *, CASE label WHEN 'rest' THEN (f_us - s_us) * 0.739
-         |                       WHEN 'leisure' THEN (f_us - s_us) * 0.358
-         |                       ELSE CAST(f_us - s_us AS DOUBLE) END AS dur,
-         |         CASE WHEN label IN ('rest','leisure') THEN 'home'
-         |              WHEN label = 'work' THEN 'work' END AS grp
-         |  FROM lab WHERE label != 'weekend'
+         |), $osnaFramesCtes
          |), agg AS (
          |  SELECT user_id, loc,
          |         sum(CASE WHEN grp = 'home' THEN dur ELSE 0.0 END) AS h,
@@ -834,7 +754,7 @@ private[graft] object MobilityMetricsGates {
     // FREQ-vs-OSNA home agreement rate — the sanity card before either
     // label feeds commute/home-attachment analytics
     Gate("home_agreement") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       LocationLabelling.homeAgreement(sp)
     } {
       // FREQ home (max total dwell) vs OSNA home (the chain above) per
@@ -849,19 +769,7 @@ private[graft] object MobilityMetricsGates {
          |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY tot DESC, loc) AS rk FROM fper
          |), fhome AS (
          |  SELECT user_id, loc AS floc FROM frk WHERE rk = 1
-         |), lab AS (
-         |  SELECT *, CASE WHEN (dayofweek(mt) + 6) % 7 >= 5 THEN 'weekend'
-         |                 WHEN hour(mt) >= 2 AND hour(mt) < 8 THEN 'rest'
-         |                 WHEN hour(mt) >= 8 AND hour(mt) < 19 THEN 'work'
-         |                 ELSE 'leisure' END AS label
-         |  FROM sp
-         |), frames AS (
-         |  SELECT *, CASE label WHEN 'rest' THEN (f_us - s_us) * 0.739
-         |                       WHEN 'leisure' THEN (f_us - s_us) * 0.358
-         |                       ELSE CAST(f_us - s_us AS DOUBLE) END AS dur,
-         |         CASE WHEN label IN ('rest','leisure') THEN 'home'
-         |              WHEN label = 'work' THEN 'work' END AS grp
-         |  FROM lab WHERE label != 'weekend'
+         |), $osnaFramesCtes
          |), agg AS (
          |  SELECT user_id, loc,
          |         sum(CASE WHEN grp = 'home' THEN dur ELSE 0.0 END) AS h,
@@ -882,7 +790,7 @@ private[graft] object MobilityMetricsGates {
          |FROM j""".stripMargin
     },
     Gate("pre_filter_locations") { (s, dir) =>
-      val sp = EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
+      val sp = blockLocations(s, dir)
       LocationLabelling.preFilterLocations(sp).select(col("id"), col("keep"))
     } {
       s"""${EventsAdapter.pfsSql}, sp AS (

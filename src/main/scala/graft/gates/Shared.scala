@@ -2,13 +2,19 @@ package graft.gates
 
 import graft.functions.PortableHash.{M, affine, foldHashesSql, h60Sql}
 import graft.sources.EventsAdapter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Builder and oracle helpers used by two or more gate families. */
 private[gates] object Shared {
 
   val hav = EventsAdapter.havSql _
+
+  /** The interval table with `location_id`, each 12-visit block's
+    * place among 4 locations: the builder fixture of the location gates.
+    */
+  def blockLocations(s: SparkSession, dir: String): DataFrame =
+    EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
 
   /** DuckDB word-shingle set per doc (same shape as Dedup.shingles). */
   def shinglesCteFrom(src: String) =
@@ -54,6 +60,100 @@ private[gates] object Shared {
   def minhashOracle(numHashes: Int, bands: Int, threshold: Double): String =
     s"""WITH ${minhashPairsCte(numHashes, bands, threshold)}
        |SELECT id_a, id_b, round(j, 6) AS jaccard FROM dup""".stripMargin
+
+  /** Min-label connected components, the oracle twin of
+    * [[graft.operators.Dedup.duplicateClusters]]: `und`, the pairs
+    * (`a`, `b`) of `src` in both directions; `reach`, their transitive
+    * closure ([[reachCte]]); `nodes`, every node on an edge. A node's
+    * component label is `least(node, min(reach.b))`.
+    */
+  def componentCtes(src: String, a: String, b: String): String =
+    s"""und AS (SELECT $a AS a, $b AS b FROM $src UNION SELECT $b, $a FROM $src),
+       |$reachCte,
+       |nodes AS (SELECT DISTINCT a AS node FROM und)""".stripMargin
+
+  /** `reach(a, b)`: the transitive closure of the undirected pairs `und`. */
+  val reachCte: String =
+    """reach(a, b) AS (
+      |  SELECT a, b FROM und
+      |  UNION
+      |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)""".stripMargin
+
+  /** `name`(node as `node`, cluster_id): each node of [[componentCtes]]
+    * with its component label.
+    */
+  def labelCte(name: String, node: String = "n.node"): String =
+    s"""$name AS (
+       |  SELECT $node, least(n.node, min(r.b)) AS cluster_id
+       |  FROM nodes n JOIN reach r ON r.a = n.node GROUP BY n.node)""".stripMargin
+
+  /** `dropped(node)`: each node of [[componentCtes]] that is not its
+    * component's label.
+    */
+  val droppedCte: String =
+    """dropped AS (
+      |  SELECT n.node FROM nodes n JOIN reach r ON r.a = n.node
+      |  GROUP BY n.node HAVING least(n.node, min(r.b)) <> n.node)""".stripMargin
+
+  /** The lnq-OLS tail of the long-form `*_fit` oracles over `xy(x, y)`
+    * (quantized logs): `ag`, the count `n` and the four sums; `sl`, the
+    * slope `slope` from BIGINT cross terms; then the intercept
+    * `intercept` in nats. The Spark twin is `Metrics.lnqOlsFit`.
+    */
+  def olsFitSql(n: String, slope: String, intercept: String): String =
+    olsSql(n, slope, intercept,
+      s"""CAST($n * sxy - sx * sy AS DOUBLE)
+         |           / CAST($n * sxx - sx * sx AS DOUBLE)""".stripMargin)
+
+  /** [[olsFitSql]] with the cross terms in HUGEINT, for spines long
+    * enough that n·Σxy overflows a BIGINT.
+    */
+  def wideOlsFitSql(n: String, slope: String, intercept: String): String =
+    olsSql(n, slope, intercept,
+      s"""CAST(CAST($n AS HUGEINT) * CAST(sxy AS HUGEINT)
+         |              - CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
+         |           / CAST(CAST($n AS HUGEINT) * CAST(sxx AS HUGEINT)
+         |                  - CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS DOUBLE)""".stripMargin)
+
+  private def olsSql(n: String, slope: String, intercept: String, slopeSql: String): String =
+    s"""ag AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS $n,
+       |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+       |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
+       |  FROM xy),
+       |sl AS (
+       |  SELECT $n, sx, sy,
+       |         $slopeSql AS $slope
+       |  FROM ag)
+       |SELECT $n, $slope,
+       |       ((CAST(sy AS DOUBLE) - $slope * CAST(sx AS DOUBLE))
+       |          / CAST($n AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS $intercept
+       |FROM sl""".stripMargin
+
+  /** Cosine of probe `p`'s and corpus row `c`'s embeddings, rounded to 6
+    * places (matches Ann.cosine): the wrapped form, whose line breaks
+    * differ from AnnGates' `cosineSql`.
+    */
+  val probeCosineSql: String =
+    """round(
+      |      list_sum(list_transform(list_zip(p.embedding, c.embedding),
+      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)""".stripMargin
+
+  /** Greedy sequence packing (CorpusOps.packSequences) as a recursion
+    * over `ord(lang, rn, doc_id, tokens)`: a doc opens a new bin when it
+    * would push the running total past `budget`.
+    * `pack(lang, rn, doc_id, tokens, bin, running)`.
+    */
+  def packCte(budget: Int): String =
+    s"""pack(lang, rn, doc_id, tokens, bin, running) AS (
+       |  SELECT lang, rn, doc_id, tokens, CAST(0 AS BIGINT), tokens FROM ord WHERE rn = 1
+       |  UNION ALL
+       |  SELECT o.lang, o.rn, o.doc_id, o.tokens,
+       |         CASE WHEN p.running + o.tokens > $budget THEN p.bin + 1 ELSE p.bin END,
+       |         CASE WHEN p.running + o.tokens > $budget THEN o.tokens ELSE p.running + o.tokens END
+       |  FROM pack p JOIN ord o ON o.lang = p.lang AND o.rn = p.rn + 1)""".stripMargin
 
   /** Shared CTE chain: staypoint segments (recursive anchor jump) as
     * `kept(u, a, a_t, f_t, mend)` — see [[staypointsOracle]].

@@ -2,7 +2,7 @@ package graft.gates
 
 import graft.operators._
 import graft.sources.EventsAdapter
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Shared.{hav, withMaterializedCtes}
 
@@ -88,6 +88,52 @@ private[graft] object SpatialGates {
        |UNION ALL
        |SELECT user_id, block, 'crosses' FROM flags WHERE anyx""".stripMargin
   }
+
+  /** Radiation-model OD flows on the 10⁴ µdeg cell grid: integer cell
+    * populations, HUGEINT squared planar distance with the injected
+    * cosLatQ literal (no libm ordering), strictly-before prefix sum over
+    * the pairs `pr` (restricted by `pairFilter`), one double division.
+    */
+  private def radiationFlowsOracle(pairFilter: String): String = {
+    val cosLatQ = math.floor(math.cos(math.toRadians(47.6)) * 1e6 + 0.5).toLong
+    s"""${EventsAdapter.pfsSql},
+       |cl AS (
+       |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
+       |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
+       |         CAST(count(*) AS BIGINT) AS m
+       |  FROM pfs GROUP BY 1, 2),
+       |pr AS (
+       |  SELECT o.cx AS o_x, o.cy AS o_y, d.cx AS d_x, d.cy AS d_y,
+       |         o.m AS m_o, d.m AS m_d,
+       |         CAST((d.cx - o.cx) * $cosLatQ AS HUGEINT) * ((d.cx - o.cx) * $cosLatQ)
+       |           + CAST((d.cy - o.cy) * 1000000 AS HUGEINT) * ((d.cy - o.cy) * 1000000) AS d2
+       |  FROM cl o JOIN cl d ON NOT (o.cx = d.cx AND o.cy = d.cy)),
+       |w AS (
+       |  SELECT *, CAST(coalesce(sum(m_d) OVER (
+       |      PARTITION BY o_x, o_y ORDER BY d2, d_x, d_y
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s_ij
+       |  FROM pr$pairFilter)
+       |SELECT o_x, o_y, d_x, d_y, m_o, m_d, s_ij,
+       |       CAST(CAST(m_o AS HUGEINT) * m_o * m_d AS DOUBLE)
+       |         / CAST((CAST(m_o AS HUGEINT) + s_ij)
+       |                * (CAST(m_o AS HUGEINT) + m_d + s_ij) AS DOUBLE) AS flow
+       |FROM w""".stripMargin
+  }
+
+  /** One side of a radius-join gate: the points `pts` as
+    * (id_i, lon_i, lat_i).
+    */
+  private def side(pts: DataFrame, i: Int): DataFrame =
+    pts.select(col("id").as(s"id_$i"), col("lon").as(s"lon$i"), col("lat").as(s"lat$i"))
+
+  /** The radius-join oracles' tail: every pair of CTEs `a`, `b` within
+    * 100 m, with its floor-metre distance.
+    */
+  private def pairsWithin100Sql: String =
+    s"""SELECT a.id AS id_1, b.id AS id_2,
+       |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
+       |FROM a, b
+       |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("kanon_cells") { (s, dir) =>
@@ -201,36 +247,7 @@ private[graft] object SpatialGates {
     Gate("radiation_flows") { (s, dir) =>
       SpatialOps.radiationFlows(EventsAdapter.positionfixes(s, dir),
         cellMicroDeg = 10000L, refLatDeg = 47.6)
-    } {
-      // radiation model: integer cell populations, HUGEINT squared planar
-      // distance with the injected cosLatQ literal (no libm ordering),
-      // strictly-before prefix sum, one double division
-      {
-        val cosLatQ = math.floor(math.cos(math.toRadians(47.6)) * 1e6 + 0.5).toLong
-        s"""${EventsAdapter.pfsSql},
-           |cl AS (
-           |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |         CAST(count(*) AS BIGINT) AS m
-           |  FROM pfs GROUP BY 1, 2),
-           |pr AS (
-           |  SELECT o.cx AS o_x, o.cy AS o_y, d.cx AS d_x, d.cy AS d_y,
-           |         o.m AS m_o, d.m AS m_d,
-           |         CAST((d.cx - o.cx) * $cosLatQ AS HUGEINT) * ((d.cx - o.cx) * $cosLatQ)
-           |           + CAST((d.cy - o.cy) * 1000000 AS HUGEINT) * ((d.cy - o.cy) * 1000000) AS d2
-           |  FROM cl o JOIN cl d ON NOT (o.cx = d.cx AND o.cy = d.cy)),
-           |w AS (
-           |  SELECT *, CAST(coalesce(sum(m_d) OVER (
-           |      PARTITION BY o_x, o_y ORDER BY d2, d_x, d_y
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s_ij
-           |  FROM pr)
-           |SELECT o_x, o_y, d_x, d_y, m_o, m_d, s_ij,
-           |       CAST(CAST(m_o AS HUGEINT) * m_o * m_d AS DOUBLE)
-           |         / CAST((CAST(m_o AS HUGEINT) + s_ij)
-           |                * (CAST(m_o AS HUGEINT) + m_d + s_ij) AS DOUBLE) AS flow
-           |FROM w""".stripMargin
-      }
-    },
+    } { radiationFlowsOracle(pairFilter = "") },
     // the bounded twin: block-equi-join candidates under an exact
     // integer distance cap, ring-decomposed prefix sums — s_ij
     // bit-identical to the full window on every emitted pair
@@ -244,31 +261,7 @@ private[graft] object SpatialGates {
       // both engines agree bit-for-bit on the capped pair set. cap =
       // ((maxRings+1)·ringWidthCells·10⁶)² with ringWidthCells=1,
       // maxRings=1 → 4e12
-      {
-        val cosLatQ = math.floor(math.cos(math.toRadians(47.6)) * 1e6 + 0.5).toLong
-        s"""${EventsAdapter.pfsSql},
-           |cl AS (
-           |  SELECT CAST(floor(CAST(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cx,
-           |         CAST(floor(CAST(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0) AS BIGINT) AS cy,
-           |         CAST(count(*) AS BIGINT) AS m
-           |  FROM pfs GROUP BY 1, 2),
-           |pr AS (
-           |  SELECT o.cx AS o_x, o.cy AS o_y, d.cx AS d_x, d.cy AS d_y,
-           |         o.m AS m_o, d.m AS m_d,
-           |         CAST((d.cx - o.cx) * $cosLatQ AS HUGEINT) * ((d.cx - o.cx) * $cosLatQ)
-           |           + CAST((d.cy - o.cy) * 1000000 AS HUGEINT) * ((d.cy - o.cy) * 1000000) AS d2
-           |  FROM cl o JOIN cl d ON NOT (o.cx = d.cx AND o.cy = d.cy)),
-           |w AS (
-           |  SELECT *, CAST(coalesce(sum(m_d) OVER (
-           |      PARTITION BY o_x, o_y ORDER BY d2, d_x, d_y
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s_ij
-           |  FROM pr WHERE d2 < CAST(4000000000000 AS HUGEINT))
-           |SELECT o_x, o_y, d_x, d_y, m_o, m_d, s_ij,
-           |       CAST(CAST(m_o AS HUGEINT) * m_o * m_d AS DOUBLE)
-           |         / CAST((CAST(m_o AS HUGEINT) + s_ij)
-           |                * (CAST(m_o AS HUGEINT) + m_d + s_ij) AS DOUBLE) AS flow
-           |FROM w""".stripMargin
-      }
+      radiationFlowsOracle(pairFilter = " WHERE d2 < CAST(4000000000000 AS HUGEINT)")
     },
     Gate("geohash_cells") { (s, dir) =>
       EventsAdapter.positionfixes(s, dir)
@@ -365,10 +358,8 @@ private[graft] object SpatialGates {
       // lossless banded HASH join at optimization time (PlanLintSpec
       // lints this very plan: no cartesian / BNLJ survives)
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 1)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
-      val b = pfs.filter(col("user_id") % 16 === 2)
-        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val a = side(pfs.filter(col("user_id") % 16 === 1), 1)
+      val b = side(pfs.filter(col("user_id") % 16 === 2), 2)
       val d = call_function("haversine_m", col("lon1"), col("lat1"), col("lon2"), col("lat2"))
       a.join(b, d <= lit(100.0))
         .select(col("id_1"), col("id_2"), floor(d).cast("long").as("dist_m"))
@@ -376,10 +367,7 @@ private[graft] object SpatialGates {
       s"""${EventsAdapter.pfsSql},
          | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 1),
          | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 2)
-         |SELECT a.id AS id_1, b.id AS id_2,
-         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
-         |FROM a, b
-         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+         |$pairsWithin100Sql""".stripMargin
     },
     Gate("spatial_join_scala_api") { (s, dir) =>
       // the SAME naive radius join written through the library's own
@@ -389,10 +377,8 @@ private[graft] object SpatialGates {
       // BandedDistanceJoin structurally matches the composed kernel, so
       // this plans as the identical banded hash join (PlanLint-pinned)
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 7)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
-      val b = pfs.filter(col("user_id") % 16 === 8)
-        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val a = side(pfs.filter(col("user_id") % 16 === 7), 1)
+      val b = side(pfs.filter(col("user_id") % 16 === 8), 2)
       val d = graft.functions.GeoFunctions.haversineMeters(
         col("lon1"), col("lat1"), col("lon2"), col("lat2"))
       a.join(b, d <= lit(100.0))
@@ -401,10 +387,7 @@ private[graft] object SpatialGates {
       s"""${EventsAdapter.pfsSql},
          | a AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 7),
          | b AS (SELECT id, lon, lat FROM pfs WHERE user_id % 16 = 8)
-         |SELECT a.id AS id_1, b.id AS id_2,
-         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
-         |FROM a, b
-         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+         |$pairsWithin100Sql""".stripMargin
     },
     Gate("io_wkt_parse") { (s, dir) =>
       // the CSV WKT READ path under continuous oracle coverage (r14
@@ -478,8 +461,7 @@ private[graft] object SpatialGates {
       // (r14 advice: degenerate fixture could not distinguish correct
       // banding from a keep-everything bug)
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 9)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val a = side(pfs.filter(col("user_id") % 16 === 9), 1)
       val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
         .select(col("lon").as("lon2"), col("lat").as("lat2"))
       a.join(b, graft.functions.GeoFunctions.haversineMeters(
@@ -501,10 +483,8 @@ private[graft] object SpatialGates {
       // sparse-blocklist fixture as the semi/anti gates so matched and
       // unmatched left rows both occur
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 9)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
-      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
-        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val a = side(pfs.filter(col("user_id") % 16 === 9), 1)
+      val b = side(pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0), 2)
       val d = graft.functions.GeoFunctions.haversineMeters(
         col("lon1"), col("lat1"), col("lon2"), col("lat2"))
       a.join(b, d <= lit(25.0), "left_outer")
@@ -530,10 +510,8 @@ private[graft] object SpatialGates {
       // preserved side never explodes), so both outer orientations are
       // oracle-covered, not just the one the spec exercises
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
-      val b = pfs.filter(col("user_id") % 16 === 9)
-        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val a = side(pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0), 1)
+      val b = side(pfs.filter(col("user_id") % 16 === 9), 2)
       val d = graft.functions.GeoFunctions.haversineMeters(
         col("lon1"), col("lat1"), col("lon2"), col("lat2"))
       a.join(b, d <= lit(25.0), "right_outer")
@@ -557,10 +535,8 @@ private[graft] object SpatialGates {
       // whose pair volume is far under the budget, so every join shape
       // the rule touches is oracle-gated, the guarded path included
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 9 && col("id") % 193 === 0)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
-      val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
-        .select(col("id").as("id_2"), col("lon").as("lon2"), col("lat").as("lat2"))
+      val a = side(pfs.filter(col("user_id") % 16 === 9 && col("id") % 193 === 0), 1)
+      val b = side(pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0), 2)
       val d = graft.functions.GeoFunctions.haversineMeters(
         col("lon1"), col("lat1"), col("lon2"), col("lat2"))
       a.join(b, d <= lit(50.0), "full_outer")
@@ -582,8 +558,7 @@ private[graft] object SpatialGates {
       // fixture as spatial_join_semi so both sides of the partition are
       // non-empty)
       val pfs = EventsAdapter.positionfixes(s, dir)
-      val a = pfs.filter(col("user_id") % 16 === 9)
-        .select(col("id").as("id_1"), col("lon").as("lon1"), col("lat").as("lat1"))
+      val a = side(pfs.filter(col("user_id") % 16 === 9), 1)
       val b = pfs.filter(col("user_id") % 16 === 10 && col("id") % 97 === 0)
         .select(col("lon").as("lon2"), col("lat").as("lat2"))
       a.join(b, graft.functions.GeoFunctions.haversineMeters(
@@ -624,10 +599,7 @@ private[graft] object SpatialGates {
          | b AS (SELECT id, CASE WHEN lon + 171.5 > 180.0 THEN lon + 171.5 - 360.0
          |                       ELSE lon + 171.5 END AS lon, lat
          |       FROM pfs WHERE user_id % 16 = 6)
-         |SELECT a.id AS id_1, b.id AS id_2,
-         |       CAST(floor(${hav("a.lon", "a.lat", "b.lon", "b.lat")}) AS BIGINT) AS dist_m
-         |FROM a, b
-         |WHERE ${hav("a.lon", "a.lat", "b.lon", "b.lat")} <= 100.0""".stripMargin
+         |$pairsWithin100Sql""".stripMargin
     },
     Gate("spatial_join_planar") { (s, dir) =>
       // the projected-CRS twin of spatial_join_auto: a naive euclidean

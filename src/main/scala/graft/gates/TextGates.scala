@@ -5,6 +5,7 @@ import graft.operators._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Shared.{olsFitSql, probeCosineSql, wideOlsFitSql}
 
 /** Text analysis: language id, quality and readability scores, language-model
   * scores, URL features, heuristic filters, retrieval and vocabulary statistics.
@@ -58,6 +59,63 @@ private[graft] object TextGates {
        |      x -> x <> '')) AS BIGINT) AS path_depth,
        |    contains(url, '?') AS has_query
        |  FROM aug""".stripMargin
+
+  /** BM25 (k1 = 1.2, b = 0.75) for the terms spark, join and window:
+    * each matched term's quantized contribution `q(doc_id, contrib_q)`.
+    * Constants are interpolated from the same Scala doubles the operator
+    * uses (shortest round-trip repr parses back to the identical bits);
+    * the idf ln() is floored to 1e-6 before use and per-term
+    * contributions are integer-quantized before any per-document sum,
+    * so the result is independent of float-add order on both engines.
+    */
+  private def bm25Ctes: String =
+    s"""WITH dl AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS dl FROM documents),
+       |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+       |                 CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl FROM dl),
+       |tf AS (
+       |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
+       |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
+       |  WHERE w IN ('spark','join','window') GROUP BY doc_id, w),
+       |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
+       |sc AS (
+       |  SELECT tf.doc_id,
+       |    floor(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) * 1000000.0) / 1000000.0 AS idf,
+       |    tf.tf, dl.dl, stats.avgdl
+       |  FROM tf JOIN dl USING(doc_id) JOIN df USING(w) CROSS JOIN stats),
+       |q AS (
+       |  SELECT doc_id, CAST(floor(idf * (CAST(tf AS DOUBLE) * ${1.2 + 1.0}) /
+       |    (CAST(tf AS DOUBLE) + ${1.2} * (${1.0 - 0.75} + ${0.75} * CAST(dl AS DOUBLE) / avgdl))
+       |    * 1000000000.0) AS BIGINT) AS contrib_q
+       |  FROM sc)""".stripMargin
+
+  /** `name(doc_id, bg)`: each adjacent word pair of the docs in
+    * `src(doc_id, ws)`, space-joined.
+    */
+  private def bigramsCte(name: String, src: String): String =
+    s"""$name AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
+       |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM $src)""".stripMargin
+
+  /** The lmScore chain over `documents`, trained on itself: bigram and
+    * unigram counts `c12`, `c1`, vocabulary size `v`, the add-one
+    * contribution of each bigram `sc(doc_id, contrib_q)` and the
+    * per-doc sums `agg(doc_id, n_bigrams, logprob_q)`.
+    */
+  private def lmScoreCtes: String =
+    s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+       |${bigramsCte("bgs", "w")},
+       |c12 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgs GROUP BY bg),
+       |uni AS (SELECT unnest(ws) AS w1 FROM w),
+       |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w1),
+       |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
+       |sc AS (SELECT b.doc_id,
+       |         CAST(floor(ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
+       |       - CAST(floor(ln(CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS contrib_q
+       |       FROM bgs b
+       |       LEFT JOIN c12 ON b.bg = c12.bg
+       |       LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
+       |       CROSS JOIN v),
+       |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+       |          CAST(sum(contrib_q) AS BIGINT) AS logprob_q FROM sc GROUP BY doc_id)""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("text_langid") { (s, dir) =>
@@ -189,22 +247,7 @@ private[graft] object TextGates {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       TextAnalysis.lmScore(docs, docs)
     } {
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |c12 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgs GROUP BY bg),
-         |uni AS (SELECT unnest(ws) AS w1 FROM w),
-         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w1),
-         |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
-         |sc AS (SELECT b.doc_id,
-         |         CAST(floor(ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |       - CAST(floor(ln(CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS contrib_q
-         |       FROM bgs b
-         |       LEFT JOIN c12 ON b.bg = c12.bg
-         |       LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
-         |       CROSS JOIN v),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(contrib_q) AS BIGINT) AS logprob_q FROM sc GROUP BY doc_id)
+      s"""$lmScoreCtes
          |SELECT d.doc_id, coalesce(agg.n_bigrams, 0) AS n_bigrams,
          |  coalesce(agg.logprob_q, 0) AS logprob_q
          |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id""".stripMargin
@@ -223,8 +266,7 @@ private[graft] object TextGates {
          |uni AS (SELECT unnest(ws) AS w1 FROM tr),
          |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w1),
          |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
-         |bgp AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM pr),
+         |${bigramsCte("bgp", "pr")},
          |sc AS (SELECT b.doc_id, b.bg,
          |         CAST(floor(ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
          |       - CAST(floor(ln(CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS contrib_q
@@ -252,22 +294,7 @@ private[graft] object TextGates {
       // ntile over (avg double-division of two longs DESC, doc_id): IEEE
       // division is correctly rounded, so the rank — and the bucket — is
       // engine-exact; zero-bigram docs take the -1e18 sentinel (tail).
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |c12 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgs GROUP BY bg),
-         |uni AS (SELECT unnest(ws) AS w1 FROM w),
-         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w1),
-         |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
-         |sc AS (SELECT b.doc_id,
-         |         CAST(floor(ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |       - CAST(floor(ln(CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS contrib_q
-         |       FROM bgs b
-         |       LEFT JOIN c12 ON b.bg = c12.bg
-         |       LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
-         |       CROSS JOIN v),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(contrib_q) AS BIGINT) AS logprob_q FROM sc GROUP BY doc_id),
+      s"""$lmScoreCtes,
          |sc2 AS (SELECT d.doc_id, d.lang, coalesce(agg.n_bigrams, 0) AS n_bigrams,
          |          coalesce(agg.logprob_q, 0) AS logprob_q
          |        FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id),
@@ -289,14 +316,12 @@ private[graft] object TextGates {
       // chains (in-domain = en slice, general = whole corpus), rank by
       // the IEEE division delta_q/n_bigrams desc then doc_id, top 100
       s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
+         |${bigramsCte("bgs", "w")},
          |c12g AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgs GROUP BY bg),
          |c1g AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM (SELECT unnest(ws) AS w1 FROM w) GROUP BY w1),
          |vg AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1g),
          |wi AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents WHERE lang = 'en'),
-         |bgsi AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM wi),
+         |${bigramsCte("bgsi", "wi")},
          |c12i AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgsi GROUP BY bg),
          |c1i AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM (SELECT unnest(ws) AS w1 FROM wi) GROUP BY w1),
          |vi AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1i),
@@ -331,22 +356,7 @@ private[graft] object TextGates {
       // per-source perplexity-filter ablation: keep iff mean per-bigram
       // logprob >= t_mq, tested as the integer cross-multiply
       // logprob_q >= t_mq * n_bigrams (no division, no floor divergence)
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-         |bgs AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws)-1, 0)),
-         |          i -> array_to_string(ws[i+1:i+2], ' '))) AS bg FROM w),
-         |c12 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c12 FROM bgs GROUP BY bg),
-         |uni AS (SELECT unnest(ws) AS w1 FROM w),
-         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w1),
-         |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
-         |sc AS (SELECT b.doc_id,
-         |         CAST(floor(ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE)) * 1e6) AS BIGINT)
-         |       - CAST(floor(ln(CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS contrib_q
-         |       FROM bgs b
-         |       LEFT JOIN c12 ON b.bg = c12.bg
-         |       LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
-         |       CROSS JOIN v),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(contrib_q) AS BIGINT) AS logprob_q FROM sc GROUP BY doc_id),
+      s"""$lmScoreCtes,
          |scored AS (
          |  SELECT d.doc_id, d.source,
          |         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS tok,
@@ -656,29 +666,7 @@ private[graft] object TextGates {
       TextAnalysis.bm25(s.read.parquet(s"$dir/documents.parquet"),
         terms = Seq("spark", "join", "window"), topK = 25)
     } {
-      // constants interpolated from the same Scala doubles the operator
-      // uses (shortest round-trip repr parses back to the identical bits);
-      // the idf ln() is floored to 1e-6 before use and per-term
-      // contributions are integer-quantized before the per-document sum,
-      // so the result is independent of float-add order on both engines
-      s"""WITH dl AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS dl FROM documents),
-         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-         |                 CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl FROM dl),
-         |tf AS (
-         |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-         |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-         |  WHERE w IN ('spark','join','window') GROUP BY doc_id, w),
-         |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |sc AS (
-         |  SELECT tf.doc_id,
-         |    floor(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) * 1000000.0) / 1000000.0 AS idf,
-         |    tf.tf, dl.dl, stats.avgdl
-         |  FROM tf JOIN dl USING(doc_id) JOIN df USING(w) CROSS JOIN stats),
-         |q AS (
-         |  SELECT doc_id, CAST(floor(idf * (CAST(tf AS DOUBLE) * ${1.2 + 1.0}) /
-         |    (CAST(tf AS DOUBLE) + ${1.2} * (${1.0 - 0.75} + ${0.75} * CAST(dl AS DOUBLE) / avgdl))
-         |    * 1000000000.0) AS BIGINT) AS contrib_q
-         |  FROM sc)
+      s"""$bm25Ctes
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_hit, CAST(sum(contrib_q) AS BIGINT) AS score_q
          |FROM q GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 25""".stripMargin
     },
@@ -699,24 +687,7 @@ private[graft] object TextGates {
       // bm25 chain (top 50) + brute-force cosine chain (probe 7, top 50)
       // fused by integer reciprocal rank — // truncates positives exactly
       // like Spark's div, so the fused score never touches a float
-      s"""WITH dl AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS dl FROM documents),
-         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-         |                 CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl FROM dl),
-         |tf AS (
-         |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-         |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-         |  WHERE w IN ('spark','join','window') GROUP BY doc_id, w),
-         |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |sc AS (
-         |  SELECT tf.doc_id,
-         |    floor(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) * 1000000.0) / 1000000.0 AS idf,
-         |    tf.tf, dl.dl, stats.avgdl
-         |  FROM tf JOIN dl USING(doc_id) JOIN df USING(w) CROSS JOIN stats),
-         |q AS (
-         |  SELECT doc_id, CAST(floor(idf * (CAST(tf AS DOUBLE) * ${1.2 + 1.0}) /
-         |    (CAST(tf AS DOUBLE) + ${1.2} * (${1.0 - 0.75} + ${0.75} * CAST(dl AS DOUBLE) / avgdl))
-         |    * 1000000000.0) AS BIGINT) AS contrib_q
-         |  FROM sc),
+      s"""$bm25Ctes,
          |lexs AS (
          |  SELECT doc_id, sum(contrib_q) AS score_q
          |  FROM q GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 50),
@@ -725,11 +696,7 @@ private[graft] object TextGates {
          |probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id = 7),
          |scored AS (
          |  SELECT c.vec_id AS doc_id,
-         |    round(
-         |      list_sum(list_transform(list_zip(p.embedding, c.embedding),
-         |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         |      / (sqrt(list_sum(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+         |    $probeCosineSql AS cosine
          |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id),
          |sem AS (
          |  SELECT doc_id, rank FROM (
@@ -854,27 +821,14 @@ private[graft] object TextGates {
     } {
       // OLS of lnq(count) on lnq(rank) over the top-50 vocabulary — all five
       // sums exact longs; slope/intercept fixed double-expression trees
-      """WITH w AS (SELECT unnest(string_split(text,' ')) AS word FROM documents),
+      s"""WITH w AS (SELECT unnest(string_split(text,' ')) AS word FROM documents),
         |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM w GROUP BY word),
         |r AS (SELECT word, n, row_number() OVER (ORDER BY n DESC, word) AS rank FROM c),
         |xy AS (
         |  SELECT CAST(floor(ln(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS x,
         |         CAST(floor(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS y
         |  FROM r WHERE rank <= 50),
-        |ag AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_points,
-        |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM xy),
-        |sl AS (
-        |  SELECT n_points, sx, sy,
-        |         CAST(n_points * sxy - sx * sy AS DOUBLE)
-        |           / CAST(n_points * sxx - sx * sx AS DOUBLE) AS slope
-        |  FROM ag)
-        |SELECT n_points, slope,
-        |       ((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))
-        |          / CAST(n_points AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS intercept
-        |FROM sl""".stripMargin
+        |${olsFitSql("n_points", "slope", "intercept")}""".stripMargin
     },
     Gate("tfidf_topterms") { (s, dir) =>
       TextAnalysis.tfidfTopTerms(s.read.parquet(s"$dir/documents.parquet"), topK = 3)
@@ -990,7 +944,7 @@ private[graft] object TextGates {
     Gate("heaps_fit") { (s, dir) =>
       TextAnalysis.heapsFit(s.read.parquet(s"$dir/documents.parquet"), sampleEvery = 8L)
     } {
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |fo AS (
         |  SELECT min(doc_id) AS fd FROM (SELECT doc_id, unnest(ws) AS word FROM w) GROUP BY word),
         |nv AS (SELECT fd // 8 AS bucket, CAST(count(*) AS BIGINT) AS nv FROM fo GROUP BY fd // 8),
@@ -1004,22 +958,7 @@ private[graft] object TextGates {
         |  SELECT CAST(floor(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS x,
         |         CAST(floor(ln(CAST(v AS DOUBLE)) * 1e6) AS BIGINT) AS y
         |  FROM cum),
-        |ag AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_points,
-        |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM xy),
-        |sl AS (
-        |  SELECT n_points, sx, sy,
-        |         CAST(CAST(n_points AS HUGEINT) * CAST(sxy AS HUGEINT)
-        |              - CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
-        |           / CAST(CAST(n_points AS HUGEINT) * CAST(sxx AS HUGEINT)
-        |                  - CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS DOUBLE) AS beta
-        |  FROM ag)
-        |SELECT n_points, beta,
-        |       ((CAST(sy AS DOUBLE) - beta * CAST(sx AS DOUBLE))
-        |          / CAST(n_points AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS log_k
-        |FROM sl""".stripMargin
+        |${wideOlsFitSql("n_points", "beta", "log_k")}""".stripMargin
     },
     Gate("length_histogram") { (s, dir) =>
       TextAnalysis.lengthHistogram(s.read.parquet(s"$dir/documents.parquet"))

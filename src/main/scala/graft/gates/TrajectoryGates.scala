@@ -11,6 +11,21 @@ import Shared.{hav, withMaterializedCtes, decimalsToDigits}
   */
 private[graft] object TrajectoryGates {
 
+  /** The first ten 12-fix lines of users 0–2 as coordinate lists
+    * `lines(lid, lons, lats)`, and every line pair
+    * `pairsx(id_1, id_2, alon, alat, blon, blat)` with id_1 < id_2.
+    */
+  private val linePairsCtes: String =
+    """lines AS (
+      |  SELECT user_id * 10000 + (k // 12) AS lid,
+      |         list(lon ORDER BY k) AS lons, list(lat ORDER BY k) AS lats
+      |  FROM pfs WHERE user_id < 3 AND k // 12 < 10
+      |  GROUP BY user_id, k // 12),
+      |pairsx AS (
+      |  SELECT a.lid AS id_1, b.lid AS id_2,
+      |         a.lons AS alon, a.lats AS alat, b.lons AS blon, b.lats AS blat
+      |  FROM lines a JOIN lines b ON a.lid < b.lid)""".stripMargin
+
   /** DTW trajectory distance as SQL: the row-major DP of SpatialOps.dtw
     * as a recursive CTE — each recursion step advances one DP row per
     * pair, carried as a list; the in-row left-to-right dependency
@@ -20,15 +35,7 @@ private[graft] object TrajectoryGates {
   private def dtwOracle: String = {
     val j = "CAST(x[1] AS INT)"
     s"""${EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |lines AS (
-       |  SELECT user_id * 10000 + (k // 12) AS lid,
-       |         list(lon ORDER BY k) AS lons, list(lat ORDER BY k) AS lats
-       |  FROM pfs WHERE user_id < 3 AND k // 12 < 10
-       |  GROUP BY user_id, k // 12),
-       |pairsx AS (
-       |  SELECT a.lid AS id_1, b.lid AS id_2,
-       |         a.lons AS alon, a.lats AS alat, b.lons AS blon, b.lats AS blat
-       |  FROM lines a JOIN lines b ON a.lid < b.lid),
+       |$linePairsCtes,
        |dp(id_1, id_2, i, dprow) AS (
        |  SELECT id_1, id_2, 0,
        |         list_concat([0.0], list_transform(range(1, len(blon) + 1), j -> 'infinity'::DOUBLE))
@@ -58,15 +65,7 @@ private[graft] object TrajectoryGates {
   private def frechetOracle: String = {
     val j = "CAST(x[1] AS INT)"
     s"""${EventsAdapter.pfsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |lines AS (
-       |  SELECT user_id * 10000 + (k // 12) AS lid,
-       |         list(lon ORDER BY k) AS lons, list(lat ORDER BY k) AS lats
-       |  FROM pfs WHERE user_id < 3 AND k // 12 < 10
-       |  GROUP BY user_id, k // 12),
-       |pairsx AS (
-       |  SELECT a.lid AS id_1, b.lid AS id_2,
-       |         a.lons AS alon, a.lats AS alat, b.lons AS blon, b.lats AS blat
-       |  FROM lines a JOIN lines b ON a.lid < b.lid),
+       |$linePairsCtes,
        |dp(id_1, id_2, i, dprow) AS (
        |  SELECT id_1, id_2, 0,
        |         list_concat(['-infinity'::DOUBLE], list_transform(range(1, len(blon) + 1), j -> 'infinity'::DOUBLE))
@@ -97,15 +96,7 @@ private[graft] object TrajectoryGates {
     def d(i: String, j: String) = hav(s"alon[CAST($i AS INT)]", s"alat[CAST($i AS INT)]",
       s"blon[CAST($j AS INT)]", s"blat[CAST($j AS INT)]")
     s"""${EventsAdapter.pfsSql},
-       |lines AS (
-       |  SELECT user_id * 10000 + (k // 12) AS lid,
-       |         list(lon ORDER BY k) AS lons, list(lat ORDER BY k) AS lats
-       |  FROM pfs WHERE user_id < 3 AND k // 12 < 10
-       |  GROUP BY user_id, k // 12),
-       |pairsx AS (
-       |  SELECT a.lid AS id_1, b.lid AS id_2,
-       |         a.lons AS alon, a.lats AS alat, b.lons AS blon, b.lats AS blat
-       |  FROM lines a JOIN lines b ON a.lid < b.lid)
+       |$linePairsCtes
        |SELECT id_1, id_2, CAST(floor(greatest(
        |  list_max(list_transform(range(1, len(alon) + 1), i ->
        |    list_min(list_transform(range(1, len(blon) + 1), j -> ${d("i", "j")})))),
