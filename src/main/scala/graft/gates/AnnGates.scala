@@ -227,6 +227,37 @@ private[graft] object AnnGates {
        |$iterCtes""".stripMargin
   }
 
+  /** Squared distance of every vector's subspace slice to every
+    * codeword of `cent<iters>`: `encd(vec_id, m, c, d)`.
+    */
+  private def pqDistCte(iters: Int): String =
+    s"""encd AS MATERIALIZED (
+       |  SELECT q.vec_id, q.m, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
+       |  FROM kq q JOIN cent$iters c ON q.m = c.m AND q.pos = c.pos
+       |  GROUP BY q.vec_id, q.m, c.c)""".stripMargin
+
+  /** Each vector's PQ codes from [[pqDistCte]], ties to the lowest
+    * codeword: `pqcodes(vec_id, m, code)`.
+    */
+  private val pqCodesCte: String =
+    """pqcodes AS MATERIALIZED (
+      |  SELECT vec_id, m, c AS code FROM (
+      |    SELECT vec_id, m, c, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, c) AS rn
+      |    FROM encd) WHERE rn = 1)""".stripMargin
+
+  /** Each vector's cluster under the final 2-iteration centroids
+    * `cent2`, ties to the lowest cluster: `fa(vec_id, cluster_id)`.
+    */
+  private val finalAssignCtes: String =
+    """fd AS MATERIALIZED (
+      |  SELECT q.vec_id, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
+      |  FROM kq q JOIN cent2 c ON q.m = c.m AND q.pos = c.pos
+      |  GROUP BY q.vec_id, c.c),
+      |fa AS MATERIALIZED (
+      |  SELECT vec_id, c AS cluster_id FROM (
+      |    SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
+      |    FROM fd) WHERE rn = 1)""".stripMargin
+
   /** Lloyd's k-means as unrolled SQL — see [[kmeansCtes]]; every
     * arithmetic step is the integer/exact twin of
     * [[graft.operators.KMeans.fit]]: quantization `floor(x·1e6+0.5)`,
@@ -251,14 +282,8 @@ private[graft] object AnnGates {
     */
   private def pqOracle(ksub: Int, iters: Int, subWidth: Int, probeMax: Int, k: Int): String =
     s"""WITH ${kmeansCtes(ksub, iters, subWidth)},
-       |encd AS MATERIALIZED (
-       |  SELECT q.vec_id, q.m, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
-       |  FROM kq q JOIN cent$iters c ON q.m = c.m AND q.pos = c.pos
-       |  GROUP BY q.vec_id, q.m, c.c),
-       |pqcodes AS MATERIALIZED (
-       |  SELECT vec_id, m, c AS code FROM (
-       |    SELECT vec_id, m, c, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, c) AS rn
-       |    FROM encd) WHERE rn = 1),
+       |${pqDistCte(iters)},
+       |$pqCodesCte,
        |pscored AS (
        |  SELECT p.vec_id AS probe_id, co.vec_id AS neighbor_id, sum(p.d) AS adc
        |  FROM pqcodes co JOIN encd p ON p.m = co.m AND p.c = co.code AND p.vec_id != co.vec_id
@@ -462,14 +487,7 @@ private[graft] object AnnGates {
          |  FROM (SELECT vec_id, unnest(embedding) AS x, generate_subscripts(embedding, 1) AS pos
          |        FROM aug)),
          |${kmeansCtes(8, 2, 1000000, fromLongForm = Some("sub"))},
-         |fd AS MATERIALIZED (
-         |  SELECT q.vec_id, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
-         |  FROM kq q JOIN cent2 c ON q.m = c.m AND q.pos = c.pos
-         |  GROUP BY q.vec_id, c.c),
-         |fa AS MATERIALIZED (
-         |  SELECT vec_id, c AS cluster_id FROM (
-         |    SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
-         |    FROM fd) WHERE rn = 1),
+         |$finalAssignCtes,
          |drp AS (
          |  SELECT DISTINCT b.vec_id
          |  FROM fa a JOIN fa b ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
@@ -498,14 +516,7 @@ private[graft] object AnnGates {
       // vector (fd/fa = the semantic_dedup assignment pattern), even/odd
       // occupancy counts, quantized-ln drift over a dense cluster spine
       s"""WITH RECURSIVE ${kmeansCtes(8, 2, 1000000)},
-         |fd AS MATERIALIZED (
-         |  SELECT q.vec_id, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
-         |  FROM kq q JOIN cent2 c ON q.m = c.m AND q.pos = c.pos
-         |  GROUP BY q.vec_id, c.c),
-         |fa AS MATERIALIZED (
-         |  SELECT vec_id, c AS cluster_id FROM (
-         |    SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
-         |    FROM fd) WHERE rn = 1),
+         |$finalAssignCtes,
          |ca AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n FROM fa
          |       WHERE vec_id % 2 = 0 GROUP BY cluster_id),
          |cb AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n FROM fa
@@ -712,14 +723,8 @@ private[graft] object AnnGates {
       // PQ ADC recall vs exact integer-L2 truth (the PQ family's own
       // metric)
       s"""WITH ${kmeansCtes(8, 2, 16)},
-         |encd AS MATERIALIZED (
-         |  SELECT q.vec_id, q.m, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
-         |  FROM kq q JOIN cent2 c ON q.m = c.m AND q.pos = c.pos
-         |  GROUP BY q.vec_id, q.m, c.c),
-         |pqcodes AS MATERIALIZED (
-         |  SELECT vec_id, m, c AS code FROM (
-         |    SELECT vec_id, m, c, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, c) AS rn
-         |    FROM encd) WHERE rn = 1),
+         |${pqDistCte(2)},
+         |$pqCodesCte,
          |pscored AS (
          |  SELECT p.vec_id AS probe_id, co.vec_id AS neighbor_id, sum(p.d) AS adc
          |  FROM pqcodes co JOIN encd p ON p.m = co.m AND p.c = co.code AND p.vec_id != co.vec_id
@@ -755,10 +760,7 @@ private[graft] object AnnGates {
       // PQ codebook distortion: the pq chain's per-(vec, subspace) best
       // distance reaggregated per subspace
       s"""WITH ${kmeansCtes(8, 2, 16)},
-         |encd AS MATERIALIZED (
-         |  SELECT q.vec_id, q.m, c.c, sum((q.val - c.val) * (q.val - c.val)) AS d
-         |  FROM kq q JOIN cent2 c ON q.m = c.m AND q.pos = c.pos
-         |  GROUP BY q.vec_id, q.m, c.c),
+         |${pqDistCte(2)},
          |best AS (
          |  SELECT vec_id, m, d FROM (
          |    SELECT vec_id, m, c, d,

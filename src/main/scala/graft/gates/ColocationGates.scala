@@ -3,6 +3,7 @@ package graft.gates
 import graft.Pipeline
 import graft.operators._
 import graft.sources.EventsAdapter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Shared.{componentCtes, labelCte, reachCte}
 
@@ -204,6 +205,28 @@ private[graft] object ColocationGates {
       |  SELECT n.node, least(n.node, min(r.b)) AS cid
       |  FROM (SELECT DISTINCT a AS node FROM und) n
       |  JOIN reach r ON r.a = n.node GROUP BY n.node)""".stripMargin
+
+  /** The meeting pairs of the 300-user subgraph the triangle gates
+    * certify on.
+    */
+  private def under300Pairs(s: SparkSession, dir: String): DataFrame =
+    Pipeline.colocationPairs(s, dir).filter(col("user_a") < 300 && col("user_b") < 300)
+
+  /** The 300-user subgraph's degrees `deg(n, d)` and its edges oriented
+    * from the (degree, id)-smaller end `o(s, t, dt)`, `dt` the target's
+    * degree: each triangle is enumerated once from its smallest vertex.
+    */
+  private def orientedSubgraphCtes: String =
+    s"""${cellsCte()},
+       |${prsCte(w = false, under300 = true)},
+       |deg AS MATERIALIZED (
+       |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
+       |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
+       |o AS MATERIALIZED (
+       |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
+       |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
+       |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
+       |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n)""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("colocation_pairs") { (s, dir) =>
@@ -558,21 +581,11 @@ private[graft] object ColocationGates {
     // rows by construction — the gates certify on a 300-user subgraph
     // (oracle filtered identically); real contact graphs are sparse
     Gate("colocation_clustering") { (s, dir) =>
-      SpatialOps.colocationClustering(Pipeline.colocationPairs(s, dir)
-        .filter(col("user_a") < 300 && col("user_b") < 300))
+      SpatialOps.colocationClustering(under300Pairs(s, dir))
     } {
       // degree-ordered-orientation triangles: each triangle enumerated
       // once from its (degree, id)-smallest vertex; local_cc = 2T/(d(d-1))
-      s"""${cellsCte()},
-         |${prsCte(w = false, under300 = true)},
-         |deg AS MATERIALIZED (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-         |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
-         |o AS MATERIALIZED (
-         |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
-         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
-         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
-         |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
+      s"""$orientedSubgraphCtes,
          |tr AS (
          |  SELECT w1.s AS x, w1.t AS y, w2.t AS z
          |  FROM o w1 JOIN o w2 ON w1.s = w2.s
@@ -589,19 +602,9 @@ private[graft] object ColocationGates {
          |FROM deg LEFT JOIN pn ON deg.n = pn.n WHERE deg.d >= 2""".stripMargin
     },
     Gate("colocation_transitivity") { (s, dir) =>
-      SpatialOps.colocationTransitivity(Pipeline.colocationPairs(s, dir)
-        .filter(col("user_a") < 300 && col("user_b") < 300))
+      SpatialOps.colocationTransitivity(under300Pairs(s, dir))
     } {
-      s"""${cellsCte()},
-         |${prsCte(w = false, under300 = true)},
-         |deg AS MATERIALIZED (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-         |    SELECT ua AS n FROM prs UNION ALL SELECT ub FROM prs) GROUP BY n),
-         |o AS MATERIALIZED (
-         |  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ua ELSE p.ub END AS s,
-         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN p.ub ELSE p.ua END AS t,
-         |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.ua < p.ub) THEN dv.d ELSE du.d END AS dt
-         |  FROM prs p JOIN deg du ON p.ua = du.n JOIN deg dv ON p.ub = dv.n),
+      s"""$orientedSubgraphCtes,
          |tc AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n_triangles
          |  FROM o w1 JOIN o w2 ON w1.s = w2.s

@@ -4,7 +4,7 @@ import graft.Pipeline
 import graft.functions.PortableHash.{M, affine, h60Sql}
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.{componentCtes, decimalsToDigits, droppedCte, minhashPairsCte, packCte}
+import Shared.{componentCtes, decimalsToDigits, droppedCte, minhashPairsCte, packCte, shinglesCte}
 
 /** Corpus curation: the composed curation pipeline, contamination, splits,
   * sampling, mixtures, packing, corpus statistics and multimodal plumbing.
@@ -168,12 +168,7 @@ private[graft] object CurationGates {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       CorpusOps.contamination(docs.filter(col("doc_id") < 50), docs.filter(col("doc_id") >= 50), n = 5)
     } {
-      s"""WITH sh AS (
-         |  SELECT doc_id, list_distinct(CASE WHEN len(string_split(text,' ')) >= 5
-         |    THEN list_transform(range(0, len(string_split(text,' ')) - 4),
-         |         i -> array_to_string(string_split(text,' ')[i+1:i+5], ' '))
-         |    ELSE [array_to_string(string_split(text,' '), ' ')] END) AS s
-         |  FROM documents),
+      s"""WITH ${shinglesCte(5, "documents")},
          |th AS (
          |  SELECT doc_id, CAST(len(s) AS BIGINT) AS n_grams, ${h60Sql("g")} AS h
          |  FROM (SELECT doc_id, s, unnest(s) AS g FROM sh WHERE doc_id < 50)),
@@ -196,12 +191,7 @@ private[graft] object CurationGates {
       {
         val m = 1 << 17
         def posSql(b: String, i: Int) = { val (a, c) = affine(i); s"((($b) * $a + $c) % $M) % $m" }
-        s"""WITH sh AS (
-           |  SELECT doc_id, list_distinct(CASE WHEN len(string_split(text,' ')) >= 5
-           |    THEN list_transform(range(0, len(string_split(text,' ')) - 4),
-           |         i -> array_to_string(string_split(text,' ')[i+1:i+5], ' '))
-           |    ELSE [array_to_string(string_split(text,' '), ' ')] END) AS s
-           |  FROM documents),
+        s"""WITH ${shinglesCte(5, "documents")},
            |tb AS (
            |  SELECT DISTINCT ${h60Sql("g")} % $M AS b
            |  FROM (SELECT unnest(s) AS g FROM sh WHERE doc_id >= 50)),

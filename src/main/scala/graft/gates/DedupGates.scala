@@ -1,10 +1,10 @@
 package graft.gates
 
 import graft.Pipeline
-import graft.functions.PortableHash.{M, affine, foldHashesSql, h60Sql}
+import graft.functions.PortableHash.{M, h60Sql}
 import graft.operators._
 import org.apache.spark.sql.functions._
-import Shared.{componentCtes, droppedCte, labelCte, minhashOracle, minhashPairsCte, shinglesCteFrom}
+import Shared.{componentCtes, droppedCte, labelCte, minhashBandedCtes, minhashOracle, minhashPairsCte}
 
 /** Training-data dedup: exact, MinHash, SimHash, edit-distance, n-gram,
   * cluster, span and substring dedup, and winnowing overlap.
@@ -16,25 +16,8 @@ private[graft] object DedupGates {
     * the cross join direction only.
     */
   private def minhashCrossOracle(numHashes: Int, bands: Int, threshold: Double,
-                                 probeMax: Long): String = {
-    val rows = numHashes / bands
-    val sigCols = (0 until numHashes).map { i =>
-      val (a, b) = affine(i)
-      s"min((b * $a + $b) % $M) AS m$i"
-    }.mkString(",\n    ")
-    val bandSelects = (0 until bands).map { b =>
-      val fold = foldHashesSql((b * rows until (b + 1) * rows).map(j => s"m$j"))
-      s"SELECT doc_id, $b AS bb, $fold AS h FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${shinglesCteFrom("documents")},
-       |ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-       |hb AS (SELECT doc_id, ${h60Sql("sg")} % $M AS b FROM ex),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $sigCols
-       |  FROM hb GROUP BY doc_id),
-       |banded AS (
-       |  $bandSelects),
+                                 probeMax: Long): String =
+    s"""WITH ${minhashBandedCtes(numHashes, bands, "documents")},
        |pairs AS (
        |  SELECT DISTINCT a.doc_id AS probe_id, b.doc_id AS corpus_id
        |  FROM banded a JOIN banded b ON a.bb = b.bb AND a.h = b.h
@@ -46,7 +29,6 @@ private[graft] object DedupGates {
        |  FROM pairs JOIN sh sa ON sa.doc_id = probe_id JOIN sh sb ON sb.doc_id = corpus_id)
        |SELECT probe_id, corpus_id, round(j, 6) AS jaccard FROM scored
        |WHERE j >= $threshold""".stripMargin
-  }
 
   /** [[graft.operators.Dedup.clusterSizeHistogram]]: the dedup_clusters
     * component chain reduced to its (size, n_clusters) histogram.

@@ -3,7 +3,7 @@ package graft.gates
 import graft.Pipeline
 import graft.operators._
 import graft.sources.EventsAdapter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Shared.{blockLocations, hav, staypointSegmentsCte, withMaterializedCtes}
 
@@ -324,6 +324,28 @@ private[graft] object MobilityGates {
       activityThresholdSec = 120.0 * 60.0, gapUs = (1e7 * 60e6).toLong,
       maxTourDistM = maxTourDistM, maxTourTimeUs = (30.0 * 86400e6).toLong,
       locationMode = locationMode))
+
+  /** Each 12-fix block of the positionfixes as a tripleg: start, end
+    * and its points in fix order.
+    */
+  private def blockTriplegs(s: SparkSession, dir: String): DataFrame =
+    EventsAdapter.positionfixes(s, dir)
+      .groupBy(col("user_id"), expr("k div 12").as("block"))
+      .agg(
+        min(col("tracked_at")).as("started_at"), max(col("tracked_at")).as("finished_at"),
+        transform(array_sort(collect_list(struct(col("k"), col("lon"), col("lat")))),
+          p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
+
+  /** The oracle side of [[blockTriplegs]]: each fix's haversine step from
+    * the previous fix of its block, `segs(user_id, block, t_us, seg)`,
+    * left open for the caller to close.
+    */
+  private def blockSegsCte: String =
+    s"""${EventsAdapter.pfsSql}, segs AS (
+       |  SELECT user_id, k // 12 AS block, t_us,
+       |         CASE WHEN lag(lon) OVER w IS NULL THEN NULL
+       |              ELSE ${hav("lag(lon) OVER w", "lag(lat) OVER w", "lon", "lat")} END AS seg
+       |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)""".stripMargin
 
   /** The checked tour columns: ids, start and end in µs, trip count. */
   private def tourRows(tours: DataFrame): DataFrame =
@@ -854,21 +876,12 @@ private[graft] object MobilityGates {
            |JOIN nl USING(user_id)""".stripMargin)
     },
     Gate("speed_triplegs") { (s, dir) =>
-      val tpls = EventsAdapter.positionfixes(s, dir)
-        .groupBy(col("user_id"), expr("k div 12").as("block"))
-        .agg(
-          min(col("tracked_at")).as("started_at"), max(col("tracked_at")).as("finished_at"),
-          transform(array_sort(collect_list(struct(col("k"), col("lon"), col("lat")))),
-            p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
+      val tpls = blockTriplegs(s, dir)
       Labelling.getSpeedTriplegs(tpls)
         .filter(col("finished_at") =!= col("started_at")) // degenerate single-fix blocks
         .select(col("user_id"), col("block"), floor(col("speed") * 1000.0).cast("long").as("speed_mms"))
     } {
-      s"""${EventsAdapter.pfsSql}, segs AS (
-         |  SELECT user_id, k // 12 AS block, t_us,
-         |         CASE WHEN lag(lon) OVER w IS NULL THEN NULL
-         |              ELSE ${hav("lag(lon) OVER w", "lag(lat) OVER w", "lon", "lat")} END AS seg
-         |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)
+      s"""$blockSegsCte
          |)
          |SELECT user_id, block,
          |  CAST(floor(coalesce(sum(seg), 0.0) / ((max(t_us) - min(t_us)) / 1000000.0) * 1000.0) AS BIGINT) AS speed_mms
@@ -876,20 +889,11 @@ private[graft] object MobilityGates {
          |HAVING max(t_us) > min(t_us)""".stripMargin
     },
     Gate("transport_mode") { (s, dir) =>
-      val tpls = EventsAdapter.positionfixes(s, dir)
-        .groupBy(col("user_id"), expr("k div 12").as("block"))
-        .agg(
-          min(col("tracked_at")).as("started_at"), max(col("tracked_at")).as("finished_at"),
-          transform(array_sort(collect_list(struct(col("k"), col("lon"), col("lat")))),
-            p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
+      val tpls = blockTriplegs(s, dir)
       Labelling.predictTransportMode(tpls.filter(col("finished_at") =!= col("started_at")))
         .select(col("user_id"), col("block"), col("mode"))
     } {
-      s"""${EventsAdapter.pfsSql}, segs AS (
-         |  SELECT user_id, k // 12 AS block, t_us,
-         |         CASE WHEN lag(lon) OVER w IS NULL THEN NULL
-         |              ELSE ${hav("lag(lon) OVER w", "lag(lat) OVER w", "lon", "lat")} END AS seg
-         |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)
+      s"""$blockSegsCte
          |), spd AS (
          |  SELECT user_id, block,
          |         coalesce(sum(seg), 0.0) / ((max(t_us) - min(t_us)) / 1000000.0) AS speed

@@ -16,18 +16,22 @@ private[gates] object Shared {
   def blockLocations(s: SparkSession, dir: String): DataFrame =
     EventsAdapter.intervals(s, dir).withColumn("location_id", expr("(k div 12) % 4"))
 
-  /** DuckDB word-shingle set per doc (same shape as Dedup.shingles). */
-  def shinglesCteFrom(src: String) =
+  /** DuckDB `n`-word-shingle set per doc `sh(doc_id, s)` (same shape as
+    * Dedup.shingles); a doc shorter than `n` words is one shingle.
+    */
+  def shinglesCte(n: Int, src: String): String =
     s"""sh AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-       |    THEN list_transform(range(0, len(string_split(text,' ')) - 2),
-       |         i -> array_to_string(string_split(text,' ')[i+1:i+3], ' '))
+       |  SELECT doc_id, list_distinct(CASE WHEN len(string_split(text,' ')) >= $n
+       |    THEN list_transform(range(0, len(string_split(text,' ')) - ${n - 1}),
+       |         i -> array_to_string(string_split(text,' ')[i+1:i+$n], ' '))
        |    ELSE [array_to_string(string_split(text,' '), ' ')] END) AS s
        |  FROM $src)""".stripMargin
 
-  /** CTE chain producing the verified minhash pair set as `dup(id_a, id_b)`. */
-  def minhashPairsCte(numHashes: Int, bands: Int, threshold: Double,
-                      src: String = "documents"): String = {
+  /** MinHash band hashes of `src`'s docs: shingle sets `sh(doc_id, s)`,
+    * signatures `sig` and one row per (doc, band) `banded(doc_id, bb, h)`
+    * (the oracle side of Dedup's band candidates).
+    */
+  def minhashBandedCtes(numHashes: Int, bands: Int, src: String): String = {
     val rows = numHashes / bands
     val sigCols = (0 until numHashes).map { i =>
       val (a, b) = affine(i)
@@ -37,7 +41,7 @@ private[gates] object Shared {
       val fold = foldHashesSql((b * rows until (b + 1) * rows).map(j => s"m$j"))
       s"SELECT doc_id, $b AS bb, $fold AS h FROM sig"
     }.mkString("\n  UNION ALL ")
-    s"""${shinglesCteFrom(src)},
+    s"""${shinglesCte(3, src)},
        |ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
        |hb AS (SELECT doc_id, ${h60Sql("sg")} % $M AS b FROM ex),
        |sig AS (
@@ -45,7 +49,13 @@ private[gates] object Shared {
        |    $sigCols
        |  FROM hb GROUP BY doc_id),
        |banded AS (
-       |  $bandSelects),
+       |  $bandSelects)""".stripMargin
+  }
+
+  /** CTE chain producing the verified minhash pair set as `dup(id_a, id_b)`. */
+  def minhashPairsCte(numHashes: Int, bands: Int, threshold: Double,
+                      src: String = "documents"): String =
+    s"""${minhashBandedCtes(numHashes, bands, src)},
        |pairs AS (
        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM banded a JOIN banded b ON a.bb = b.bb AND a.h = b.h AND a.doc_id < b.doc_id),
@@ -55,7 +65,6 @@ private[gates] object Shared {
        |    CAST(len(list_distinct(list_concat(sa.s, sb.s))) AS DOUBLE) AS j
        |  FROM pairs JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b),
        |dup AS (SELECT id_a, id_b, j FROM scored WHERE j >= $threshold)""".stripMargin
-  }
 
   def minhashOracle(numHashes: Int, bands: Int, threshold: Double): String =
     s"""WITH ${minhashPairsCte(numHashes, bands, threshold)}

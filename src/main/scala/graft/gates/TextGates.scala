@@ -60,6 +60,26 @@ private[graft] object TextGates {
        |    contains(url, '?') AS has_query
        |  FROM aug""".stripMargin
 
+  /** Stopword-count language id per document, carrying the columns
+    * `keys`: the four scores `sc` and the argmax (ties to the earlier
+    * language) `p(keys, predicted_lang)`.
+    */
+  private def langIdCtes(keys: String): String =
+    s"""WITH sc AS (
+       |  SELECT $keys,
+       |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('der','die','das','und','nicht'))) AS BIGINT) AS score_de,
+       |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and','to'))) AS BIGINT) AS score_en,
+       |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('el','la','de','y','que'))) AS BIGINT) AS score_es,
+       |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr
+       |  FROM documents),
+       |p AS (
+       |  SELECT $keys,
+       |    CASE WHEN score_de = greatest(score_de, score_en, score_es, score_fr) THEN 'de'
+       |         WHEN score_en = greatest(score_de, score_en, score_es, score_fr) THEN 'en'
+       |         WHEN score_es = greatest(score_de, score_en, score_es, score_fr) THEN 'es'
+       |         ELSE 'fr' END AS predicted_lang
+       |  FROM sc)""".stripMargin
+
   /** BM25 (k1 = 1.2, b = 0.75) for the terms spark, join and window:
     * each matched term's quantized contribution `q(doc_id, contrib_q)`.
     * Constants are interpolated from the same Scala doubles the operator
@@ -499,20 +519,7 @@ private[graft] object TextGates {
     Gate("langid_mismatch") { (s, dir) =>
       TextAnalysis.langidMismatch(s.read.parquet(s"$dir/documents.parquet"))
     } {
-      """WITH sc AS (
-        |  SELECT source, lang,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('der','die','das','und','nicht'))) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and','to'))) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('el','la','de','y','que'))) AS BIGINT) AS score_es,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr
-        |  FROM documents),
-        |p AS (
-        |  SELECT source, lang,
-        |    CASE WHEN score_de = greatest(score_de, score_en, score_es, score_fr) THEN 'de'
-        |         WHEN score_en = greatest(score_de, score_en, score_es, score_fr) THEN 'en'
-        |         WHEN score_es = greatest(score_de, score_en, score_es, score_fr) THEN 'es'
-        |         ELSE 'fr' END AS predicted_lang
-        |  FROM sc)
+      s"""${langIdCtes("source, lang")}
         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN predicted_lang <> lang THEN 1 ELSE 0 END) AS BIGINT) AS n_mismatch,
         |  CAST(sum(CASE WHEN predicted_lang <> lang THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1151,20 +1158,7 @@ private[graft] object TextGates {
     } {
       // declared-vs-detected confusion cells (same langid CTEs as the
       // rate monitor)
-      """WITH sc AS (
-        |  SELECT lang,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('der','die','das','und','nicht'))) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and','to'))) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('el','la','de','y','que'))) AS BIGINT) AS score_es,
-        |    CAST(len(list_filter(string_split(text,' '), w -> w IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr
-        |  FROM documents),
-        |p AS (
-        |  SELECT lang,
-        |    CASE WHEN score_de = greatest(score_de, score_en, score_es, score_fr) THEN 'de'
-        |         WHEN score_en = greatest(score_de, score_en, score_es, score_fr) THEN 'en'
-        |         WHEN score_es = greatest(score_de, score_en, score_es, score_fr) THEN 'es'
-        |         ELSE 'fr' END AS predicted_lang
-        |  FROM sc)
+      s"""${langIdCtes("lang")}
         |SELECT lang AS declared, predicted_lang AS detected,
         |       CAST(count(*) AS BIGINT) AS n_docs
         |FROM p GROUP BY lang, predicted_lang""".stripMargin
