@@ -46,15 +46,14 @@ private[graft] object AnnGates {
        |  FROM embeddings c, probes p WHERE p.vec_id != c.vec_id)""".stripMargin
 
   /** IVF search candidates, the first `nlist` vectors as cell centroids:
-    * every vector's cells ranked by cosine, `ranked` (`AS MATERIALIZED`
-    * or not), the corpus's best cell `corpcell`, the ten probes'
-    * `nprobe` best cells `probecell`, and the same-cell pairs
-    * `cand(probe_id, pe, neighbor_id, ce)`.
+    * every vector's cells ranked by cosine `ranked`, the corpus's best
+    * cell `corpcell`, the ten probes' `nprobe` best cells `probecell`,
+    * and the same-cell pairs `cand(probe_id, pe, neighbor_id, ce)`.
     */
-  private def ivfCandCtes(nlist: Int, nprobe: Int, materialized: Boolean): String =
+  private def ivfCandCtes(nlist: Int, nprobe: Int): String =
     s"""cent AS (
        |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
-       |ranked AS ${if (materialized) "MATERIALIZED " else ""}(
+       |ranked AS MATERIALIZED (
        |  SELECT e.vec_id, e.embedding, c_id,
        |         row_number() OVER (PARTITION BY e.vec_id
        |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
@@ -76,7 +75,18 @@ private[graft] object AnnGates {
        |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= $threshold""".stripMargin
 
   private def annIvfOracle(k: Int, nlist: Int, nprobe: Int): String =
-    s"""WITH ${ivfCandCtes(nlist, nprobe, materialized = false)},
+    s"""WITH cent AS (
+       |  SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id < $nlist),
+       |ranked AS (
+       |  SELECT e.vec_id, e.embedding, c_id,
+       |         row_number() OVER (PARTITION BY e.vec_id
+       |           ORDER BY ${cosineSql("e.embedding", "cv")} DESC, c_id) AS rn
+       |  FROM embeddings e, cent),
+       |corpcell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn = 1),
+       |probecell AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rn <= $nprobe AND vec_id < 10),
+       |cand AS (
+       |  SELECT p.vec_id AS probe_id, p.embedding AS pe, c.vec_id AS neighbor_id, c.embedding AS ce
+       |  FROM probecell p JOIN corpcell c ON p.cell = c.cell WHERE p.vec_id != c.vec_id),
        |scored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand)
        |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine FROM (
@@ -94,7 +104,7 @@ private[graft] object AnnGates {
        |  SELECT probe_id, neighbor_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
        |    FROM bscored) WHERE rank <= $k),
-       |${ivfCandCtes(nlist, nprobe, materialized = true)},
+       |${ivfCandCtes(nlist, nprobe)},
        |iscored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand),
        |it AS (
@@ -123,7 +133,7 @@ private[graft] object AnnGates {
        |  SELECT probe_id, neighbor_id, CAST(rank AS BIGINT) AS tr FROM (
        |    SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
        |    FROM bscored) WHERE rank <= $k),
-       |${ivfCandCtes(nlist, nprobe, materialized = true)},
+       |${ivfCandCtes(nlist, nprobe)},
        |iscored AS (
        |  SELECT probe_id, neighbor_id, ${cosineSql("pe", "ce")} AS cosine FROM cand),
        |it AS (

@@ -337,15 +337,15 @@ private[graft] object MobilityGates {
           p => struct(p.getField("lon").as("lon"), p.getField("lat").as("lat"))).as("points"))
 
   /** The oracle side of [[blockTriplegs]]: each fix's haversine step from
-    * the previous fix of its block, `segs(user_id, block, t_us, seg)`,
-    * left open for the caller to close.
+    * the previous fix of its block, `segs(user_id, block, t_us, seg)`.
     */
   private def blockSegsCte: String =
     s"""${EventsAdapter.pfsSql}, segs AS (
        |  SELECT user_id, k // 12 AS block, t_us,
        |         CASE WHEN lag(lon) OVER w IS NULL THEN NULL
        |              ELSE ${hav("lag(lon) OVER w", "lag(lat) OVER w", "lon", "lat")} END AS seg
-       |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)""".stripMargin
+       |  FROM pfs WINDOW w AS (PARTITION BY user_id, k // 12 ORDER BY k)
+       |)""".stripMargin
 
   /** The checked tour columns: ids, start and end in µs, trip count. */
   private def tourRows(tours: DataFrame): DataFrame =
@@ -882,7 +882,6 @@ private[graft] object MobilityGates {
         .select(col("user_id"), col("block"), floor(col("speed") * 1000.0).cast("long").as("speed_mms"))
     } {
       s"""$blockSegsCte
-         |)
          |SELECT user_id, block,
          |  CAST(floor(coalesce(sum(seg), 0.0) / ((max(t_us) - min(t_us)) / 1000000.0) * 1000.0) AS BIGINT) AS speed_mms
          |FROM segs GROUP BY user_id, block
@@ -893,8 +892,7 @@ private[graft] object MobilityGates {
       Labelling.predictTransportMode(tpls.filter(col("finished_at") =!= col("started_at")))
         .select(col("user_id"), col("block"), col("mode"))
     } {
-      s"""$blockSegsCte
-         |), spd AS (
+      s"""$blockSegsCte, spd AS (
          |  SELECT user_id, block,
          |         coalesce(sum(seg), 0.0) / ((max(t_us) - min(t_us)) / 1000000.0) AS speed
          |  FROM segs GROUP BY user_id, block
