@@ -15,11 +15,10 @@ object Share {
 
   /** Lazy localCheckpoint: row-block storage, spills to local disk,
     * truncates lineage. The default `share` of [[TextAnalysis.bpeTrain]],
-    * [[KMeans.fit]] and [[ContactGraph.from]]; the trainers without a
-    * hook ([[Ann.pqTrain]], [[Ann.ivfPqTrain]], [[Classifier.fit]]) call
-    * it directly. Multi-node deployments that must survive executor
-    * loss pass [[graft.Pipeline.parquetShare]] to a hook instead — same
-    * signature, durable storage.
+    * [[KMeans.fit]] and [[ContactGraph.from]]; [[Ann.pqTrain]],
+    * [[Ann.ivfPqTrain]] and [[Classifier.fit]] call it directly.
+    * Multi-node deployments that must survive executor loss pass
+    * [[graft.Pipeline.parquetShare]] to a hook instead (durable storage).
     */
   val materialize: DataFrame => DataFrame = _.localCheckpoint(false)
 
