@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * JDBC those arrive as hex text that the WKT codecs cannot parse. These
   * expressions parse/format that representation directly, so no DB-side
   * `ST_AsText` view is required. The WKT path stays as the fallback
-  * ([[graft.sources.Csv]] codecs; [[graft.sources.Postgis]] coalesces
-  * the two on read).
+  * (`graft.sources.GeometryText.wkt`, the codec the CSV files use;
+  * [[graft.sources.Postgis]] coalesces the two on read through
+  * `GeometryText.ewkb`, which wraps these expressions).
   *
   * Codec scope = exactly the geometry the engine stores: 2D Point,
   * LineString, Polygon (outer ring), MultiPoint. The parser accepts both

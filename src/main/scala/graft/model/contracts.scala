@@ -81,3 +81,88 @@ object Tables {
   val tours = TableContract("tours", Map(
     "user_id" -> LongType, "started_at" -> TimestampType, "finished_at" -> TimestampType))
 }
+
+/** The four geometry kinds the domain tables hold, each over its own
+  * frame `columns` (in schema order).
+  */
+sealed abstract class Geometry(val columns: String*)
+
+object Geometry {
+
+  /** A point over two double columns. */
+  final case class Point(lon: String, lat: String) extends Geometry(lon, lat)
+
+  /** A line over one `array<struct<lon,lat>>` column. */
+  final case class Line(column: String) extends Geometry(column)
+
+  /** A polygon's outer ring over one `array<struct<lon,lat>>` column. */
+  final case class Ring(column: String) extends Geometry(column)
+
+  /** An origin–destination pair over one `struct<origin, destination>`
+    * column of two points (trips: `geom.origin`, `geom.destination`).
+    */
+  final case class OriginDestination(column: String) extends Geometry(column)
+}
+
+/** A table's geometry and the column its text form is stored in: the
+  * WKT or hex-EWKB column of a CSV or JDBC table, or the GeoJSON
+  * property that carries a second geometry. An optional geometry may be
+  * missing from a frame or a file.
+  */
+final case class StoredGeometry(column: String, geometry: Geometry, optional: Boolean = false) {
+
+  /** Whether `df` holds the geometry in its frame columns: always for a
+    * required one (a missing column then fails analysis), and for an
+    * optional one when every column is there and not already text.
+    */
+  def heldBy(df: DataFrame): Boolean = !optional || geometry.columns.forall(c =>
+    df.columns.contains(c) && df.schema(c).dataType != StringType)
+
+  /** Whether a read frame `df` carries the stored column to decode. */
+  def storedIn(df: DataFrame): Boolean = !optional || df.columns.contains(column)
+}
+
+/** How a domain table is laid out in the text formats (CSV, GeoJSON,
+  * JDBC/PostGIS — `graft.sources`), stated once for all three.
+  *
+  * @param contract the table's schema contract, checked on every read
+  * @param columns  the non-geometry columns in file order with their
+  *                 frame types: long ids, UTC timestamps and, for tours,
+  *                 the `array<long>` trips list
+  * @param geometry the table's geometry (a GeoJSON Feature's geometry);
+  *                 tours have none
+  * @param second   locations' extent ring, stored beside the center
+  */
+final case class Layout(contract: TableContract, columns: Seq[(String, DataType)],
+                        geometry: Option[StoredGeometry] = None,
+                        second: Option[StoredGeometry] = None) {
+  def geometries: Seq[StoredGeometry] = geometry.toSeq ++ second
+
+  /** The list columns (tours' trips), each with its `array<long>` type. */
+  def lists: Seq[(String, DataType)] = columns.filter(_._2.isInstanceOf[ArrayType])
+}
+
+object Layouts {
+  import Geometry._
+
+  private val ids = Seq("id" -> LongType, "user_id" -> LongType)
+  private val span = Seq("started_at" -> TimestampType, "finished_at" -> TimestampType)
+  private val point = Some(StoredGeometry("geom", Point("lon", "lat")))
+
+  val positionfixes = Layout(Tables.positionfixes, ids :+ ("tracked_at" -> TimestampType), point)
+
+  val staypoints = Layout(Tables.staypoints, ids ++ span, point)
+
+  val triplegs = Layout(Tables.triplegs, ids ++ span, Some(StoredGeometry("geom", Line("points"))))
+
+  val locations = Layout(Tables.locations, ids,
+    Some(StoredGeometry("center", Point("center_lon", "center_lat"))),
+    Some(StoredGeometry("extent", Ring("extent_hull"), optional = true)))
+
+  /** o/d staypoint ids are nullable: gap-adjacent trips have no staypoint */
+  val trips = Layout(Tables.trips,
+    ids ++ span ++ Seq("origin_staypoint_id" -> LongType, "destination_staypoint_id" -> LongType),
+    Some(StoredGeometry("geom", OriginDestination("geom"), optional = true)))
+
+  val tours = Layout(Tables.tours, ids ++ span :+ ("trips" -> ArrayType(LongType)))
+}

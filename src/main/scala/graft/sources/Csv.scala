@@ -1,14 +1,17 @@
 package graft.sources
 
-import graft.model.Tables
+import graft.model.{Layout, Layouts, StoredGeometry}
+import graft.sources.GeometryText.wkt
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** CSV readers/writers for the six domain tables, matching the reference
   * conventions (trackintel/io/file.py): lon/lat columns for positionfixes,
-  * WKT geometry columns for the other tables, ISO timestamps (UTC), and a
-  * `columns` rename map.
+  * WKT geometry columns for the other tables (`GeometryText.wkt`), ISO timestamps
+  * (UTC), tours' trips list as "[1, 2]", and a `columns` rename map
+  * applied before anything else (so it also renames a geometry column).
+  * Each table's columns and geometry come from its [[graft.model.Layout]].
   *
   * Timestamp localization contract: a NAIVE timestamp string (no offset,
   * e.g. "2023-01-01 08:00:00") is localized to UTC — the session timezone
@@ -18,207 +21,92 @@ import org.apache.spark.sql.types._
   * warns, the engine makes it the documented convention). Offset-carrying
   * strings ("...+02:00") convert to their UTC instant. Pinned by
   * IoSpec's "naive timestamps localize to UTC" test.
-  *
-  * WKT codecs are pure Catalyst string expressions (concat/transform for
-  * formatting, regexp/split/transform for parsing) — they run inside the
-  * scan/projection stage with no UDF boundary.
   */
 object Csv {
 
-  // ---------------- WKT codecs (column expressions) ----------------
+  /** "POINT (lon lat)" → (lon, lat) doubles, null on other text. */
+  def parsePointWkt(text: Column): (Column, Column) = wkt.parsePoint(text)
 
-  /** "POINT (lon lat)" — shapely-style formatting. */
-  def formatPointWkt(lon: Column, lat: Column): Column =
-    concat(lit("POINT ("), lon.cast("string"), lit(" "), lat.cast("string"), lit(")"))
+  /** "LINESTRING (x1 y1, …)" → `array<struct<lon,lat>>`, null on other text. */
+  def parseLinestringWkt(text: Column): Column = wkt.parseLine(text)
 
-  def parsePointWkt(wkt: Column): (Column, Column) = {
-    val nums = split(nullif(regexp_extract(wkt, "POINT\\s*\\(([^)]*)\\)", 1), lit("")), "\\s+")
-    (element_at(nums, 1).cast("double"), element_at(nums, 2).cast("double"))
+  // positionfixes keep their point as plain longitude/latitude columns
+  // (io/file.py:19-85); every other geometry is WKT in its stored column
+  private object LonLat extends TextForm {
+    private val names = Seq("longitude", "latitude")
+    def stored(g: StoredGeometry): Seq[String] = names
+    def write(g: StoredGeometry): Seq[(String, Column)] = names.zip(g.geometry.columns.map(col))
+    def read(g: StoredGeometry): Seq[(String, Column)] =
+      g.geometry.columns.zip(names.map(c => col(c).cast(DoubleType)))
   }
 
-  /** "LINESTRING (x1 y1, x2 y2, …)" from array<struct<lon,lat>>. */
-  def formatLinestringWkt(points: Column): Column =
-    concat(lit("LINESTRING ("),
-      concat_ws(", ", transform(points,
-        p => concat(p.getField("lon").cast("string"), lit(" "), p.getField("lat").cast("string")))),
-      lit(")"))
-
-  def parseLinestringWkt(wkt: Column): Column = {
-    // nullif guards empty/missing WKT: regexp_extract returns "" on a
-    // non-match, and ANSI mode rejects casting "" to double
-    val body = nullif(regexp_extract(wkt, "LINESTRING\\s*\\(([^)]*)\\)", 1), lit(""))
-    transform(split(body, ",\\s*"), s => {
-      val nums = split(trim(s), "\\s+")
-      struct(element_at(nums, 1).cast("double").as("lon"), element_at(nums, 2).cast("double").as("lat"))
-    })
+  private def read(layout: Layout, spark: SparkSession, path: String, sep: String,
+                   columns: Map[String, String], form: TextForm = wkt): DataFrame = {
+    val raw = spark.read.option("header", "true").option("sep", sep)
+      .option("inferSchema", "false").csv(path)
+    val df = columns.foldLeft(raw) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
+    val typed = layout.columns.foldLeft(df) {
+      case (d, (c, LongType))      => d.withColumn(c, col(c).cast(LongType))
+      case (d, (c, TimestampType)) => d.withColumn(c, to_timestamp(col(c)))
+      case (d, (c, list))          => d.withColumn(c, from_json(col(c), list))
+    }
+    layout.contract.validate(TextForm.decode(typed, layout, form))
   }
 
-  /** "POLYGON ((x1 y1, …))" ring from/to array<struct<lon,lat>>. */
-  def formatPolygonWkt(ring: Column): Column =
-    concat(lit("POLYGON (("),
-      concat_ws(", ", transform(ring,
-        p => concat(p.getField("lon").cast("string"), lit(" "), p.getField("lat").cast("string")))),
-      lit("))"))
-
-  def parsePolygonWkt(wkt: Column): Column = {
-    val body = nullif(regexp_extract(wkt, "POLYGON\\s*\\(\\(([^)]*)\\)\\)", 1), lit(""))
-    transform(split(body, ",\\s*"), s => {
-      val nums = split(trim(s), "\\s+")
-      struct(element_at(nums, 1).cast("double").as("lon"), element_at(nums, 2).cast("double").as("lat"))
-    })
-  }
-
-  /** "MULTIPOINT (x1 y1, x2 y2)" ↔ o/d struct (trip geometry). */
-  def formatMultipointWkt(geom: Column): Column =
-    concat(lit("MULTIPOINT ("),
-      geom.getField("origin").getField("lon").cast("string"), lit(" "),
-      geom.getField("origin").getField("lat").cast("string"), lit(", "),
-      geom.getField("destination").getField("lon").cast("string"), lit(" "),
-      geom.getField("destination").getField("lat").cast("string"),
-      lit(")"))
-
-  def parseMultipointWkt(wkt: Column): Column = {
-    val body = nullif(regexp_extract(wkt, "MULTIPOINT\\s*\\((.*)\\)", 1), lit(""))
-    val pts = transform(split(regexp_replace(body, "[()]", ""), ",\\s*"), s => {
-      val nums = split(trim(s), "\\s+")
-      struct(element_at(nums, 1).cast("double").as("lon"), element_at(nums, 2).cast("double").as("lat"))
-    })
-    struct(element_at(pts, 1).as("origin"), element_at(pts, 2).as("destination"))
-  }
-
-  // ---------------- readers ----------------
-
-  private def baseRead(spark: SparkSession, path: String, sep: String): DataFrame =
-    spark.read
-      .option("header", "true").option("sep", sep)
-      .option("inferSchema", "false")
-      .csv(path)
-
-  private def renamed(df: DataFrame, columns: Map[String, String]): DataFrame =
-    columns.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
+  private def write(layout: Layout, df: DataFrame, path: String, sep: String,
+                    form: TextForm = wkt): Unit =
+    layout.lists.foldLeft(TextForm.encode(df, layout, form)) { case (d, (c, _)) =>
+        d.withColumn(c, concat(lit("["), concat_ws(", ", col(c)), lit("]")))
+      }
+      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
 
   /** CSV with longitude/latitude columns → positionfixes (io/file.py:19-85). */
   def readPositionfixes(spark: SparkSession, path: String, sep: String = ",",
-                        columns: Map[String, String] = Map.empty): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    Tables.positionfixes.validate(df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("tracked_at", to_timestamp(col("tracked_at")))
-      .withColumn("lon", col("longitude").cast(DoubleType))
-      .withColumn("lat", col("latitude").cast(DoubleType))
-      .drop("longitude", "latitude"))
-  }
+                        columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.positionfixes, spark, path, sep, columns, LonLat)
 
   def writePositionfixes(pfs: DataFrame, path: String, sep: String = ","): Unit =
-    pfs
-      .withColumn("longitude", col("lon"))
-      .withColumn("latitude", col("lat"))
-      .drop("lon", "lat")
-      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
+    write(Layouts.positionfixes, pfs, path, sep, LonLat)
 
   /** CSV with a WKT POINT `geom` column → staypoints (io/file.py:195-249). */
   def readStaypoints(spark: SparkSession, path: String, sep: String = ",",
-                     columns: Map[String, String] = Map.empty, geomCol: String = "geom"): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    val (lon, lat) = parsePointWkt(col(geomCol))
-    Tables.staypoints.validate(df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("started_at", to_timestamp(col("started_at")))
-      .withColumn("finished_at", to_timestamp(col("finished_at")))
-      .withColumn("lon", lon).withColumn("lat", lat)
-      .drop(geomCol))
-  }
+                     columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.staypoints, spark, path, sep, columns)
 
   def writeStaypoints(sp: DataFrame, path: String, sep: String = ","): Unit =
-    sp.withColumn("geom", formatPointWkt(col("lon"), col("lat")))
-      .drop("lon", "lat")
-      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
+    write(Layouts.staypoints, sp, path, sep)
 
-  /** CSV with a WKT LINESTRING column → triplegs (io/file.py:127-181). */
+  /** CSV with a WKT LINESTRING `geom` column → triplegs (io/file.py:127-181). */
   def readTriplegs(spark: SparkSession, path: String, sep: String = ",",
-                   columns: Map[String, String] = Map.empty, geomCol: String = "geom"): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    Tables.triplegs.validate(df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("started_at", to_timestamp(col("started_at")))
-      .withColumn("finished_at", to_timestamp(col("finished_at")))
-      .withColumn("points", parseLinestringWkt(col(geomCol)))
-      .drop(geomCol))
-  }
+                   columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.triplegs, spark, path, sep, columns)
 
   def writeTriplegs(tpls: DataFrame, path: String, sep: String = ","): Unit =
-    tpls.withColumn("geom", formatLinestringWkt(col("points")))
-      .drop("points")
-      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
+    write(Layouts.triplegs, tpls, path, sep)
 
   /** CSV with WKT center (+ optional extent POLYGON) → locations (io/file.py:263-312). */
   def readLocations(spark: SparkSession, path: String, sep: String = ",",
-                    columns: Map[String, String] = Map.empty): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    val (clon, clat) = parsePointWkt(col("center"))
-    val base = df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("center_lon", clon).withColumn("center_lat", clat)
-      .drop("center")
-    val withExtent = if (df.columns.contains("extent"))
-      base.withColumn("extent_hull", parsePolygonWkt(col("extent"))).drop("extent")
-    else base
-    Tables.locations.validate(withExtent)
-  }
+                    columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.locations, spark, path, sep, columns)
 
-  def writeLocations(locs: DataFrame, path: String, sep: String = ","): Unit = {
-    val base = locs.withColumn("center", formatPointWkt(col("center_lon"), col("center_lat")))
-      .drop("center_lon", "center_lat")
-    val out = if (locs.columns.contains("extent_hull"))
-      base.withColumn("extent", formatPolygonWkt(col("extent_hull"))).drop("extent_hull")
-    else base
-    out.write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
-  }
+  def writeLocations(locs: DataFrame, path: String, sep: String = ","): Unit =
+    write(Layouts.locations, locs, path, sep)
 
   /** trips CSV with optional MULTIPOINT geometry (io/file.py:326-395). */
   def readTrips(spark: SparkSession, path: String, sep: String = ",",
-                columns: Map[String, String] = Map.empty): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    val base = df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("started_at", to_timestamp(col("started_at")))
-      .withColumn("finished_at", to_timestamp(col("finished_at")))
-      .withColumn("origin_staypoint_id", col("origin_staypoint_id").cast(LongType))
-      .withColumn("destination_staypoint_id", col("destination_staypoint_id").cast(LongType))
-    val withGeom = if (df.columns.contains("geom"))
-      base.withColumn("geom", parseMultipointWkt(col("geom")))
-    else base
-    Tables.trips.validate(withGeom)
-  }
+                columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.trips, spark, path, sep, columns)
 
-  def writeTrips(trips: DataFrame, path: String, sep: String = ","): Unit = {
-    val out = if (trips.columns.contains("geom") &&
-      trips.schema("geom").dataType.isInstanceOf[StructType])
-      trips.withColumn("geom", formatMultipointWkt(col("geom")))
-    else trips
-    out.write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
-  }
+  def writeTrips(trips: DataFrame, path: String, sep: String = ","): Unit =
+    write(Layouts.trips, trips, path, sep)
 
   /** tours CSV; `trips` list column serialized as "[1, 2, 3]"
     * (io/file.py:407-451, ast.literal_eval parsing).
     */
   def readTours(spark: SparkSession, path: String, sep: String = ";",
-                columns: Map[String, String] = Map.empty): DataFrame = {
-    val df = renamed(baseRead(spark, path, sep), columns)
-    Tables.tours.validate(df
-      .withColumn("id", col("id").cast(LongType))
-      .withColumn("user_id", col("user_id").cast(LongType))
-      .withColumn("started_at", to_timestamp(col("started_at")))
-      .withColumn("finished_at", to_timestamp(col("finished_at")))
-      .withColumn("trips", from_json(col("trips"), ArrayType(LongType))))
-  }
+                columns: Map[String, String] = Map.empty): DataFrame =
+    read(Layouts.tours, spark, path, sep, columns)
 
   def writeTours(tours: DataFrame, path: String, sep: String = ";"): Unit =
-    tours.withColumn("trips", concat(lit("["), concat_ws(", ", col("trips")), lit("]")))
-      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
+    write(Layouts.tours, tours, path, sep)
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.model.Tables
+import graft.model.{Geometry, Layout, Layouts}
+import graft.model.Geometry._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,31 +44,39 @@ object GeoJson {
     StructField("type", StringType),
     StructField("features", ArrayType(featureSchema(coordinates, properties)))))
 
-  private val pfsProps = StructType(Seq(
-    StructField("id", LongType), StructField("user_id", LongType),
-    StructField("tracked_at", StringType)))
+  // ---------------- coordinates codec ----------------
 
-  private val spProps = StructType(Seq(
-    StructField("id", LongType), StructField("user_id", LongType),
-    StructField("started_at", StringType), StructField("finished_at", StringType)))
+  // RFC 7946 type and coordinates schema of a Feature's geometry; a ring
+  // only travels as the extent property, a bare position list
+  private def kind(g: Geometry): (String, DataType) = g match {
+    case _: Point             => ("Point", pointCoords)
+    case _: OriginDestination => ("MultiPoint", lineCoords)
+    case _                    => ("LineString", lineCoords)
+  }
 
-  // locations: center is THE geometry (a Feature has one); the extent ring
-  // travels in properties, mirroring the reference's one-geometry file IO
-  // with extent as an auxiliary column
-  private val locProps = StructType(Seq(
-    StructField("id", LongType), StructField("user_id", LongType),
-    StructField("extent", ArrayType(ArrayType(DoubleType)))))
+  private def position(p: Column): Column = array(p.getField("lon"), p.getField("lat"))
 
-  private val tripProps = StructType(Seq(
-    StructField("id", LongType), StructField("user_id", LongType),
-    StructField("started_at", StringType), StructField("finished_at", StringType),
-    StructField("origin_staypoint_id", LongType),
-    StructField("destination_staypoint_id", LongType)))
+  private def lonLat(c: Column): Column = struct(element_at(c, 1).as("lon"), element_at(c, 2).as("lat"))
 
-  private val tourProps = StructType(Seq(
-    StructField("id", LongType), StructField("user_id", LongType),
-    StructField("started_at", StringType), StructField("finished_at", StringType),
-    StructField("trips", ArrayType(LongType))))
+  /** A geometry's coordinates from its frame columns; a ring is its bare
+    * position list (the extent property).
+    */
+  private def format(g: Geometry): Column = g match {
+    case Point(lon, lat)      => array(col(lon), col(lat))
+    case Line(c)              => transform(col(c), position(_))
+    case Ring(c)              => transform(col(c), position(_))
+    case OriginDestination(c) =>
+      array(position(col(c).getField("origin")), position(col(c).getField("destination")))
+  }
+
+  private def parse(g: Geometry, coords: Column): Seq[Column] = g match {
+    case Point(lon, lat) => Seq(element_at(coords, 1).as(lon), element_at(coords, 2).as(lat))
+    case Line(c)         => Seq(transform(coords, lonLat(_)).as(c))
+    case Ring(c)         => Seq(transform(coords, lonLat(_)).as(c))
+    case OriginDestination(c) =>
+      Seq(struct(lonLat(element_at(coords, 1)).as("origin"),
+        lonLat(element_at(coords, 2)).as("destination")).as(c))
+  }
 
   // ---------------- generic feature readers ----------------
 
@@ -87,153 +96,83 @@ object GeoJson {
 
   private def prop(name: String): Column = col("properties").getField(name)
 
+  // ---------------- one reader and one writer over a layout ----------------
+
+  // properties: the plain columns (timestamps as ISO text), then the
+  // second geometry; the frame: the plain columns, the geometry, the second
+  private def read(layout: Layout, spark: SparkSession, path: String,
+                   multiLine: Boolean): DataFrame = {
+    val geom = layout.geometry.map(_.geometry)
+    val properties = StructType(
+      layout.columns.map { case (c, dt) => StructField(c, if (dt == TimestampType) StringType else dt) } ++
+        layout.second.map(g => StructField(g.column, kind(g.geometry)._2)))
+    val f = readFeatures(spark, path, geom.fold(pointCoords: DataType)(kind(_)._2), properties, multiLine)
+    layout.contract.validate(f.select(
+      layout.columns.map {
+        case (c, TimestampType) => to_timestamp(prop(c)).as(c)
+        case (c, _)             => prop(c).as(c)
+      } ++ geom.toSeq.flatMap(parse(_, col("geometry.coordinates"))) ++
+        layout.second.toSeq.flatMap(g => parse(g.geometry, prop(g.column))): _*))
+  }
+
+  private def write(layout: Layout, df: DataFrame, path: String): Unit = {
+    val geom = layout.geometry.filter(_.heldBy(df))
+      .fold(lit(null).cast(geometrySchema(pointCoords))) { g =>
+        struct(lit(kind(g.geometry)._1).as("type"), format(g.geometry).as("coordinates"))
+      }
+    val second = layout.second.map(g =>
+      (if (g.heldBy(df)) format(g.geometry) else lit(null).cast(kind(g.geometry)._2)).as(g.column))
+    val properties = layout.columns.map {
+      case (c, TimestampType) => date_format(col(c), TextForm.timestamp).as(c)
+      case (c, _)             => col(c)
+    } ++ second
+    df.select(to_json(struct(
+        lit("Feature").as("type"), geom.as("geometry"), struct(properties: _*).as("properties")))
+        .as("value"))
+      .write.mode("overwrite").text(path)
+  }
+
   // ---------------- per-table readers ----------------
 
-  def readPositionfixes(spark: SparkSession, path: String,
-                        multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, pointCoords, pfsProps, multiLine)
-    Tables.positionfixes.validate(f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      to_timestamp(prop("tracked_at")).as("tracked_at"),
-      element_at(col("geometry.coordinates"), 1).as("lon"),
-      element_at(col("geometry.coordinates"), 2).as("lat")))
-  }
+  def readPositionfixes(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.positionfixes, spark, path, multiLine)
 
-  def readStaypoints(spark: SparkSession, path: String,
-                     multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, pointCoords, spProps, multiLine)
-    Tables.staypoints.validate(f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      to_timestamp(prop("started_at")).as("started_at"),
-      to_timestamp(prop("finished_at")).as("finished_at"),
-      element_at(col("geometry.coordinates"), 1).as("lon"),
-      element_at(col("geometry.coordinates"), 2).as("lat")))
-  }
+  def readStaypoints(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.staypoints, spark, path, multiLine)
 
-  def readTriplegs(spark: SparkSession, path: String,
-                   multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, lineCoords, spProps, multiLine)
-    Tables.triplegs.validate(f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      to_timestamp(prop("started_at")).as("started_at"),
-      to_timestamp(prop("finished_at")).as("finished_at"),
-      transform(col("geometry.coordinates"),
-        c => struct(element_at(c, 1).as("lon"), element_at(c, 2).as("lat"))).as("points")))
-  }
+  def readTriplegs(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.triplegs, spark, path, multiLine)
 
-  def readLocations(spark: SparkSession, path: String,
-                    multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, pointCoords, locProps, multiLine)
-    val base = f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      element_at(col("geometry.coordinates"), 1).as("center_lon"),
-      element_at(col("geometry.coordinates"), 2).as("center_lat"),
-      transform(prop("extent"),
-        c => struct(element_at(c, 1).as("lon"), element_at(c, 2).as("lat"))).as("extent_hull"))
-    Tables.locations.validate(base)
-  }
+  /** Locations: the center is the Feature's geometry (a Feature has one);
+    * the extent ring travels in properties, mirroring the reference's
+    * one-geometry file IO with extent as an auxiliary column.
+    */
+  def readLocations(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.locations, spark, path, multiLine)
 
   /** Trips: MULTIPOINT (origin, destination) geometry; o/d staypoint ids
     * in properties (nullable — gap-adjacent trips have no staypoint).
     */
-  def readTrips(spark: SparkSession, path: String,
-                multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, lineCoords, tripProps, multiLine)
-    Tables.trips.validate(f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      to_timestamp(prop("started_at")).as("started_at"),
-      to_timestamp(prop("finished_at")).as("finished_at"),
-      prop("origin_staypoint_id").as("origin_staypoint_id"),
-      prop("destination_staypoint_id").as("destination_staypoint_id"),
-      struct(
-        struct(element_at(element_at(col("geometry.coordinates"), 1), 1).as("lon"),
-          element_at(element_at(col("geometry.coordinates"), 1), 2).as("lat")).as("origin"),
-        struct(element_at(element_at(col("geometry.coordinates"), 2), 1).as("lon"),
-          element_at(element_at(col("geometry.coordinates"), 2), 2).as("lat")).as("destination"))
-        .as("geom")))
-  }
+  def readTrips(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.trips, spark, path, multiLine)
 
   /** Tours carry no geometry (RFC 7946 allows a null-geometry Feature);
     * the trips list rides in properties.
     */
-  def readTours(spark: SparkSession, path: String,
-                multiLine: Boolean = false): DataFrame = {
-    val f = readFeatures(spark, path, pointCoords, tourProps, multiLine)
-    Tables.tours.validate(f.select(
-      prop("id").as("id"), prop("user_id").as("user_id"),
-      to_timestamp(prop("started_at")).as("started_at"),
-      to_timestamp(prop("finished_at")).as("finished_at"),
-      prop("trips").as("trips")))
-  }
+  def readTours(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
+    read(Layouts.tours, spark, path, multiLine)
 
   // ---------------- per-table writers (ndgeojson) ----------------
 
-  private def pointGeometry(lon: Column, lat: Column): Column =
-    struct(lit("Point").as("type"), array(lon, lat).as("coordinates"))
+  def writePositionfixes(pfs: DataFrame, path: String): Unit = write(Layouts.positionfixes, pfs, path)
 
-  def writePositionfixes(pfs: DataFrame, path: String): Unit =
-    pfs.select(to_json(struct(
-        lit("Feature").as("type"),
-        pointGeometry(col("lon"), col("lat")).as("geometry"),
-        struct(col("id"), col("user_id"),
-          date_format(col("tracked_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("tracked_at"))
-          .as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
+  def writeStaypoints(sp: DataFrame, path: String): Unit = write(Layouts.staypoints, sp, path)
 
-  def writeStaypoints(sp: DataFrame, path: String): Unit =
-    sp.select(to_json(struct(
-        lit("Feature").as("type"),
-        pointGeometry(col("lon"), col("lat")).as("geometry"),
-        struct(col("id"), col("user_id"),
-          date_format(col("started_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("started_at"),
-          date_format(col("finished_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("finished_at"))
-          .as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
+  def writeTriplegs(tpls: DataFrame, path: String): Unit = write(Layouts.triplegs, tpls, path)
 
-  def writeTriplegs(tpls: DataFrame, path: String): Unit =
-    tpls.select(to_json(struct(
-        lit("Feature").as("type"),
-        struct(lit("LineString").as("type"),
-          transform(col("points"), p => array(p.getField("lon"), p.getField("lat")))
-            .as("coordinates")).as("geometry"),
-        struct(col("id"), col("user_id"),
-          date_format(col("started_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("started_at"),
-          date_format(col("finished_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("finished_at"))
-          .as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
+  def writeLocations(locs: DataFrame, path: String): Unit = write(Layouts.locations, locs, path)
 
-  def writeLocations(locs: DataFrame, path: String): Unit = {
-    val extent = if (locs.columns.contains("extent_hull"))
-      transform(col("extent_hull"), p => array(p.getField("lon"), p.getField("lat")))
-    else lit(null).cast(ArrayType(ArrayType(DoubleType)))
-    locs.select(to_json(struct(
-        lit("Feature").as("type"),
-        pointGeometry(col("center_lon"), col("center_lat")).as("geometry"),
-        struct(col("id"), col("user_id"), extent.as("extent")).as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
-  }
+  def writeTrips(trips: DataFrame, path: String): Unit = write(Layouts.trips, trips, path)
 
-  def writeTrips(trips: DataFrame, path: String): Unit =
-    trips.select(to_json(struct(
-        lit("Feature").as("type"),
-        struct(lit("MultiPoint").as("type"),
-          array(array(col("geom.origin.lon"), col("geom.origin.lat")),
-            array(col("geom.destination.lon"), col("geom.destination.lat")))
-            .as("coordinates")).as("geometry"),
-        struct(col("id"), col("user_id"),
-          date_format(col("started_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("started_at"),
-          date_format(col("finished_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("finished_at"),
-          col("origin_staypoint_id"), col("destination_staypoint_id"))
-          .as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
-
-  def writeTours(tours: DataFrame, path: String): Unit =
-    tours.select(to_json(struct(
-        lit("Feature").as("type"),
-        lit(null).cast(geometrySchema(pointCoords)).as("geometry"),
-        struct(col("id"), col("user_id"),
-          date_format(col("started_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("started_at"),
-          date_format(col("finished_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("finished_at"),
-          col("trips")).as("properties"))).as("value"))
-      .write.mode("overwrite").text(path)
+  def writeTours(tours: DataFrame, path: String): Unit = write(Layouts.tours, tours, path)
 }

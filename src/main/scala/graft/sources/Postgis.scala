@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.model.Tables
+import graft.model.{Layout, Layouts}
+import graft.sources.GeometryText.{ewkb, wkt}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,12 +16,14 @@ import org.apache.spark.sql.functions._
   *    EWKB; reference io/postgis.py:459-469 writes hex WKB itself).
   *    Parsed/formatted by the [[graft.functions.Wkb]] codegen
   *    expressions; no DB-side `ST_AsText` view needed.
-  *  - **WKT** — the fallback for text-typed schemas ([[Csv]] codecs).
+  *  - **WKT** — the fallback for text-typed schemas (the same WKT
+  *    codec [[Csv]] writes).
   * Readers coalesce WKB-parse-then-WKT-parse (each returns null on the
   * other's format); writers default to WKT and emit EWKB (srid 4326)
   * with `geomFormat = "ewkb"` for geometry-typed target tables. The
   * tours list column round-trips as JSON like the reference
-  * (io/postgis.py:722-723).
+  * (io/postgis.py:722-723). Each table's columns and geometry come from
+  * its [[graft.model.Layout]].
   *
   * No PostGIS server exists in this environment; the JDBC plumbing and
   * every WKB/WKT/JSON codec round-trips against an embedded Derby
@@ -30,150 +33,71 @@ import org.apache.spark.sql.functions._
   */
 object Postgis {
 
-  import graft.functions.Wkb
-
   final case class Conn(url: String, user: String, password: String,
                         driver: String = "org.postgresql.Driver")
 
-  /** Geometry column on-read: WKB hex first, WKT fallback, per row. */
-  private def pointCols(g: org.apache.spark.sql.Column) = {
-    val (blon, blat) = Wkb.parsePoint(g)
-    val (tlon, tlat) = Csv.parsePointWkt(g)
-    (coalesce(blon, tlon), coalesce(blat, tlat))
-  }
-  private def lineCol(g: org.apache.spark.sql.Column) =
-    coalesce(Wkb.parseLine(g), Csv.parseLinestringWkt(g))
-  private def polygonCol(g: org.apache.spark.sql.Column) =
-    coalesce(Wkb.parsePolygon(g), Csv.parsePolygonWkt(g))
-  private def multipointPts(g: org.apache.spark.sql.Column) = {
-    val pts = coalesce(Wkb.parseMultipoint(g), {
-      val body = nullif(regexp_extract(g, "MULTIPOINT\\s*\\((.*)\\)", 1), lit(""))
-      transform(split(regexp_replace(body, "[()]", ""), ",\\s*"), s => {
-        val nums = split(trim(s), "\\s+")
-        struct(element_at(nums, 1).cast("double").as("lon"),
-          element_at(nums, 2).cast("double").as("lat"))
-      })
-    })
-    struct(element_at(pts, 1).as("origin"), element_at(pts, 2).as("destination"))
+  private def options(conn: Conn, table: String) = Map("url" -> conn.url, "dbtable" -> table,
+    "user" -> conn.user, "password" -> conn.password, "driver" -> conn.driver)
+
+  private def read(layout: Layout, spark: SparkSession, conn: Conn, table: String): DataFrame = {
+    val df = spark.read.format("jdbc").options(options(conn, table)).load()
+    val listed = layout.lists.foldLeft(df) { case (d, (c, list)) => d.withColumn(c, from_json(col(c), list)) }
+    layout.contract.validate(TextForm.decode(listed, layout, ewkb.orElse(wkt)))
   }
 
-  private def requireFormat(geomFormat: String): Unit =
+  private def write(layout: Layout, df: DataFrame, conn: Conn, table: String, mode: SaveMode,
+                    geomFormat: String): Unit = {
     require(geomFormat == "wkt" || geomFormat == "ewkb",
       s"geomFormat must be 'wkt' or 'ewkb', got '$geomFormat'")
-
-  private def reader(spark: SparkSession, conn: Conn, table: String) =
-    spark.read.format("jdbc")
-      .option("url", conn.url).option("dbtable", table)
-      .option("user", conn.user).option("password", conn.password)
-      .option("driver", conn.driver)
-
-  private def write(df: DataFrame, conn: Conn, table: String, mode: SaveMode): Unit =
-    df.write.format("jdbc")
-      .option("url", conn.url).option("dbtable", table)
-      .option("user", conn.user).option("password", conn.password)
-      .option("driver", conn.driver)
-      .mode(mode).save()
-
-  def readPositionfixes(spark: SparkSession, conn: Conn, table: String = "positionfixes"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    val (lon, lat) = pointCols(col("geom"))
-    Tables.positionfixes.validate(
-      df.withColumn("lon", lon).withColumn("lat", lat).drop("geom"))
+    val encoded = TextForm.encode(df, layout, if (geomFormat == "ewkb") ewkb else wkt)
+    layout.lists.foldLeft(encoded) { case (d, (c, _)) => d.withColumn(c, to_json(col(c))) }
+      .write.format("jdbc").options(options(conn, table)).mode(mode).save()
   }
+
+  def readPositionfixes(spark: SparkSession, conn: Conn, table: String = "positionfixes"): DataFrame =
+    read(Layouts.positionfixes, spark, conn, table)
 
   def writePositionfixes(pfs: DataFrame, conn: Conn, table: String = "positionfixes",
-                         mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit = {
-    requireFormat(geomFormat)
-    val geom = if (geomFormat == "ewkb") Wkb.formatPoint(col("lon"), col("lat"))
-      else Csv.formatPointWkt(col("lon"), col("lat"))
-    write(pfs.withColumn("geom", geom).drop("lon", "lat"), conn, table, mode)
-  }
+                         mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit =
+    write(Layouts.positionfixes, pfs, conn, table, mode, geomFormat)
 
-  def readStaypoints(spark: SparkSession, conn: Conn, table: String = "staypoints"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    val (lon, lat) = pointCols(col("geom"))
-    Tables.staypoints.validate(
-      df.withColumn("lon", lon).withColumn("lat", lat).drop("geom"))
-  }
+  def readStaypoints(spark: SparkSession, conn: Conn, table: String = "staypoints"): DataFrame =
+    read(Layouts.staypoints, spark, conn, table)
 
   def writeStaypoints(sp: DataFrame, conn: Conn, table: String = "staypoints",
-                      mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit = {
-    requireFormat(geomFormat)
-    val geom = if (geomFormat == "ewkb") Wkb.formatPoint(col("lon"), col("lat"))
-      else Csv.formatPointWkt(col("lon"), col("lat"))
-    write(sp.withColumn("geom", geom).drop("lon", "lat"), conn, table, mode)
-  }
+                      mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit =
+    write(Layouts.staypoints, sp, conn, table, mode, geomFormat)
 
-  def readTriplegs(spark: SparkSession, conn: Conn, table: String = "triplegs"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    Tables.triplegs.validate(
-      df.withColumn("points", lineCol(col("geom"))).drop("geom"))
-  }
+  def readTriplegs(spark: SparkSession, conn: Conn, table: String = "triplegs"): DataFrame =
+    read(Layouts.triplegs, spark, conn, table)
 
   def writeTriplegs(tpls: DataFrame, conn: Conn, table: String = "triplegs",
-                    mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit = {
-    requireFormat(geomFormat)
-    val geom = if (geomFormat == "ewkb") Wkb.formatLine(col("points"))
-      else Csv.formatLinestringWkt(col("points"))
-    write(tpls.withColumn("geom", geom).drop("points"), conn, table, mode)
-  }
+                    mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit =
+    write(Layouts.triplegs, tpls, conn, table, mode, geomFormat)
 
   /** locations: two geometry columns (center point + extent polygon),
     * like the reference's manual second-geometry handling — which writes
     * exactly this hex WKB for the extent (io/postgis.py:459-469).
     */
   def writeLocations(locs: DataFrame, conn: Conn, table: String = "locations",
-                     mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit = {
-    requireFormat(geomFormat)
-    val center = if (geomFormat == "ewkb") Wkb.formatPoint(col("center_lon"), col("center_lat"))
-      else Csv.formatPointWkt(col("center_lon"), col("center_lat"))
-    val base = locs.withColumn("center", center).drop("center_lon", "center_lat")
-    val out = if (locs.columns.contains("extent_hull")) {
-      val extent = if (geomFormat == "ewkb") Wkb.formatPolygon(col("extent_hull"))
-        else Csv.formatPolygonWkt(col("extent_hull"))
-      base.withColumn("extent", extent).drop("extent_hull")
-    } else base
-    write(out, conn, table, mode)
-  }
+                     mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit =
+    write(Layouts.locations, locs, conn, table, mode, geomFormat)
+
+  def readLocations(spark: SparkSession, conn: Conn, table: String = "locations"): DataFrame =
+    read(Layouts.locations, spark, conn, table)
 
   def writeTrips(trips: DataFrame, conn: Conn, table: String = "trips",
-                 mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit = {
-    requireFormat(geomFormat)
-    val out = if (trips.columns.contains("geom")) {
-      val geom = if (geomFormat == "ewkb")
-        Wkb.formatMultipoint(array(col("geom.origin"), col("geom.destination")))
-      else Csv.formatMultipointWkt(col("geom"))
-      trips.withColumn("geom", geom)
-    } else trips
-    write(out, conn, table, mode)
-  }
+                 mode: SaveMode = SaveMode.Append, geomFormat: String = "wkt"): Unit =
+    write(Layouts.trips, trips, conn, table, mode, geomFormat)
 
-  def readLocations(spark: SparkSession, conn: Conn, table: String = "locations"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    val (clon, clat) = pointCols(col("center"))
-    val base = df.withColumn("center_lon", clon).withColumn("center_lat", clat).drop("center")
-    val out = if (df.columns.contains("extent"))
-      base.withColumn("extent_hull", polygonCol(col("extent"))).drop("extent")
-    else base
-    Tables.locations.validate(out)
-  }
-
-  def readTrips(spark: SparkSession, conn: Conn, table: String = "trips"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    val out = if (df.columns.contains("geom"))
-      df.withColumn("geom", multipointPts(col("geom")))
-    else df
-    Tables.trips.validate(out)
-  }
+  def readTrips(spark: SparkSession, conn: Conn, table: String = "trips"): DataFrame =
+    read(Layouts.trips, spark, conn, table)
 
   /** tours: `trips` list serialized as JSON (io/postgis.py:722-723). */
   def writeTours(tours: DataFrame, conn: Conn, table: String = "tours",
                  mode: SaveMode = SaveMode.Append): Unit =
-    write(tours.withColumn("trips", to_json(col("trips"))), conn, table, mode)
+    write(Layouts.tours, tours, conn, table, mode, "wkt")
 
-  def readTours(spark: SparkSession, conn: Conn, table: String = "tours"): DataFrame = {
-    val df = reader(spark, conn, table).load()
-    Tables.tours.validate(df.withColumn("trips",
-      from_json(col("trips"), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
-  }
+  def readTours(spark: SparkSession, conn: Conn, table: String = "tours"): DataFrame =
+    read(Layouts.tours, spark, conn, table)
 }
