@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** CSV readers/writers for the six domain tables, matching the reference
   * conventions (trackintel/io/file.py): lon/lat columns for positionfixes,
   * WKT geometry columns for the other tables (`GeometryText.wkt`), ISO timestamps
-  * (UTC), tours' trips list as "[1, 2]", and a `columns` rename map
+  * (UTC, to the microsecond like GeoJSON), tours' trips list as "[1, 2]", and a `columns` rename map
   * applied before anything else (so it also renames a geometry column).
   * Each table's columns and geometry come from its [[graft.model.Layout]].
   *
@@ -58,7 +58,8 @@ object Csv {
     layout.lists.foldLeft(TextForm.encode(df, layout, form)) { case (d, (c, _)) =>
         d.withColumn(c, concat(lit("["), concat_ws(", ", col(c)), lit("]")))
       }
-      .write.option("header", "true").option("sep", sep).mode("overwrite").csv(path)
+      .write.option("header", "true").option("sep", sep)
+      .option("timestampFormat", TextForm.timestamp).mode("overwrite").csv(path)
 
   /** CSV with longitude/latitude columns → positionfixes (io/file.py:19-85). */
   def readPositionfixes(spark: SparkSession, path: String, sep: String = ",",

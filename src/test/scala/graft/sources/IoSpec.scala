@@ -161,4 +161,19 @@ class IoSpec extends SparkSpec {
     assert(byId(0L) == java.time.Instant.parse("2023-01-01T08:00:00Z"))
     assert(byId(1L) == java.time.Instant.parse("2023-01-01T06:00:00Z"))
   }
+
+  test("CSV writers keep a timestamp's microseconds") {
+    val dir = tmpDir()
+    val pfs = Seq((0L, 1L, ts("2023-01-01 08:00:00.123456"), 8.5, 47.3))
+      .toDF("id", "user_id", "tracked_at", "lon", "lat")
+    Csv.writePositionfixes(pfs, s"$dir/pfs")
+    val tours = Seq((0L, 1L, ts("2023-01-01 08:00:00.000001"), ts("2023-01-01 18:00:00.654321"), Seq(1L)))
+      .toDF("id", "user_id", "started_at", "finished_at", "trips")
+    Csv.writeTours(tours, s"$dir/tours")
+    assert(Csv.readPositionfixes(spark, s"$dir/pfs").first().getAs[java.sql.Timestamp]("tracked_at") ==
+      ts("2023-01-01 08:00:00.123456"))
+    val back = Csv.readTours(spark, s"$dir/tours").first()
+    assert(back.getAs[java.sql.Timestamp]("started_at") == ts("2023-01-01 08:00:00.000001"))
+    assert(back.getAs[java.sql.Timestamp]("finished_at") == ts("2023-01-01 18:00:00.654321"))
+  }
 }
