@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Storage {
 
   /** Write a domain table bucketed by user_id (saveAsTable — bucketing
-    * metadata needs the catalog).
+    * metadata needs the catalog; read it back with `spark.table`, and a
+    * `groupBy(user_id)` over it plans with no Exchange).
     */
   def writeUserBucketed(df: DataFrame, tableName: String, buckets: Int = 256,
                         sortCols: Seq[String] = Seq("user_id")): Unit =
@@ -22,8 +23,6 @@ object Storage {
       .sortBy(sortCols.head, sortCols.tail: _*)
       .mode("overwrite")
       .saveAsTable(tableName)
-
-  def readTable(spark: SparkSession, tableName: String): DataFrame = spark.table(tableName)
 
   /** Write an event-grain table hive-partitioned by UTC day (derived
     * from the micro-second epoch column). Day partitioning is the other

@@ -1,6 +1,7 @@
 package graft
 
 import graft.syntax._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline through the accessor API — the reference README
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
 class SyntaxSpec extends SparkSpec {
   import spark.implicits._
 
-  test("full pipeline composes through the accessor API") {
-    // one user commuting A -> B -> A with dwell runs and transit fixes
+  // one user commuting A -> B -> A with dwell runs and transit fixes
+  private lazy val commute = {
     val rows = Seq(
       // dwell at A, 8:00-8:30
       (0L, "2023-01-01 08:00:00", 8.5000, 47.3000), (1L, "2023-01-01 08:10:00", 8.5001, 47.3001),
@@ -26,12 +27,15 @@ class SyntaxSpec extends SparkSpec {
       // dwell at A again, 10:10-10:40 plus a breach fix
       (12L, "2023-01-01 10:10:00", 8.5000, 47.3001), (13L, "2023-01-01 10:25:00", 8.5001, 47.3002),
       (14L, "2023-01-01 10:40:00", 8.5000, 47.3000), (15L, "2023-01-01 10:50:00", 8.6000, 47.3500))
-    val pfs = rows.toDF("id", "t", "lon", "lat")
+    rows.toDF("id", "t", "lon", "lat")
       .select(col("id"), lit(7L).as("user_id"), to_timestamp(col("t")).as("tracked_at"), col("lon"), col("lat"))
+  }
 
-    val (pfsSp, sp) = pfs.generateStaypoints(
-      operators.StaypointGenerator.Params(distThresholdMeters = 100, timeThresholdMinutes = 20,
-        gapThresholdMinutes = 120, includeLast = false))
+  private val spParams = operators.StaypointGenerator.Params(distThresholdMeters = 100,
+    timeThresholdMinutes = 20, gapThresholdMinutes = 120, includeLast = false)
+
+  test("full pipeline composes through the accessor API") {
+    val (pfsSp, sp) = commute.generateStaypoints(spParams)
     assert(sp.count() == 3) // A, B, A
 
     val (pfsTpl, tpls) = pfsSp.generateTriplegs(gapThresholdMinutes = 120)
@@ -55,6 +59,40 @@ class SyntaxSpec extends SparkSpec {
     assert(spLoc.returnTimes.count() >= 1) // A is revisited
     assert(spLoc.lzComplexity.first().getLong(2) >= 1L)
     val _ = (pfsTpl, spT, tplsT, tripsWithTours)
+  }
+
+  /** The accessor returns the pipeline's own table as is and rejects it
+    * without `user_id`, with its contract's message.
+    */
+  private def checkAccessor(name: String, table: DataFrame, as: DataFrame => DataFrame): Unit = {
+    assert(as(table) eq table)
+    val e = intercept[IllegalArgumentException](as(table.drop("user_id")))
+    assert(e.getMessage.startsWith(s"$name is missing required column(s): user_id; has ["), e.getMessage)
+  }
+
+  // the commute's tables, as the accessor pipeline produces them
+  private lazy val commuteTables = {
+    val (pfsSp, sp) = commute.generateStaypoints(spParams)
+    val (_, tpls) = pfsSp.generateTriplegs(gapThresholdMinutes = 120)
+    val (_, _, trips) = sp.createActivityFlag(timeThresholdMinutes = 20)
+      .generateTrips(tpls, gapThresholdMinutes = 120)
+    (pfsSp, sp, tpls, trips)
+  }
+
+  test("asPositionfixes accepts generated positionfixes and rejects a missing column") {
+    checkAccessor("positionfixes", commuteTables._1, _.asPositionfixes)
+  }
+
+  test("asStaypoints accepts generated staypoints and rejects a missing column") {
+    checkAccessor("staypoints", commuteTables._2, _.asStaypoints)
+  }
+
+  test("asTriplegs accepts generated triplegs and rejects a missing column") {
+    checkAccessor("triplegs", commuteTables._3, _.asTriplegs)
+  }
+
+  test("asTrips accepts generated trips and rejects a missing column") {
+    checkAccessor("trips", commuteTables._4, _.asTrips)
   }
 
   test("corpus pipeline composes through the accessor API") {

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.operators.CorpusOps
+import graft.sources.Storage
 import org.apache.spark.sql.functions._
 
 /** Storage-layout composition at 100 TB: id-keyed joins (corpusDiff,
@@ -52,6 +53,22 @@ class BucketedJoinSpec extends SparkSpec {
       assert(joined.count() == 100L)
     } finally {
       spark.sql("DROP TABLE IF EXISTS docs_b")
+    }
+  }
+
+  test("staypoints written by Storage.writeUserBucketed group by user_id with zero exchanges") {
+    val sp = (0L until 60L).map(i =>
+        (i, i % 6, ts("2023-01-01 08:00:00"), ts("2023-01-01 09:00:00"), 8.5 + i * 1e-3, 47.3))
+      .toDF("id", "user_id", "started_at", "finished_at", "lon", "lat")
+    Storage.writeUserBucketed(sp, "sp_bucketed", buckets = 4)
+    try {
+      val perUser = spark.table("sp_bucketed").groupBy(col("user_id")).count()
+      val plan = perUser.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"user-bucketed staypoints must group without a shuffle:\n$plan")
+      assert(perUser.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (0L until 6L).map(_ -> 10L).toMap)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS sp_bucketed")
     }
   }
 }

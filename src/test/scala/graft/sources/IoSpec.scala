@@ -176,4 +176,16 @@ class IoSpec extends SparkSpec {
     assert(back.getAs[java.sql.Timestamp]("started_at") == ts("2023-01-01 08:00:00.000001"))
     assert(back.getAs[java.sql.Timestamp]("finished_at") == ts("2023-01-01 18:00:00.654321"))
   }
+
+  test("columns renames a staypoints geometry column stored under another name") {
+    val dir = tmpDir()
+    Files.writeString(Paths.get(dir, "sp.csv"),
+      """id,user_id,started_at,finished_at,point_wkt
+        |0,1,2023-01-01 08:00:00,2023-01-01 09:00:00,POINT (8.5 47.3)
+        |""".stripMargin)
+    val sp = Csv.readStaypoints(spark, s"$dir/sp.csv", columns = Map("point_wkt" -> "geom"))
+    assert(sp.columns.toSeq == Seq("id", "user_id", "started_at", "finished_at", "lon", "lat"))
+    val r = sp.first()
+    assert(r.getAs[Double]("lon") == 8.5 && r.getAs[Double]("lat") == 47.3)
+  }
 }
