@@ -51,14 +51,14 @@ private[sources] final case class GeometryText(
     parseLine: Column => Column, parseRing: Column => Column, parseMultipoint: Column => Column)
     extends TextForm {
 
-  def format(g: Geometry): Column = g match {
+  private def format(g: Geometry): Column = g match {
     case Point(lon, lat)      => point(col(lon), col(lat))
     case Line(c)              => line(col(c))
     case Ring(c)              => ring(col(c))
     case OriginDestination(c) => multipoint(col(c).getField("origin"), col(c).getField("destination"))
   }
 
-  def parse(g: Geometry, text: Column): Seq[(String, Column)] = g match {
+  private def parse(g: Geometry, text: Column): Seq[(String, Column)] = g match {
     case Point(lon, lat) =>
       val (x, y) = parsePoint(text)
       Seq(lon -> x, lat -> y)
